@@ -353,8 +353,11 @@ object Dedup {
     *    ceil(t/(1+t) * (sza+szb)) (the J >= t overlap requirement) are
     *    pruned BEFORE the exact-verify stage ever sees their postings;
     *    a true pair's bound >= its true inter, so the prune is lossless
-    *    (the 1e-9 slack keeps float ceil from ever exceeding the exact
-    *    rational threshold — over-keeping, never over-pruning).
+    *    (the RELATIVE 1e-12 slack keeps float ceil from ever exceeding
+    *    the exact rational threshold at any size — the product's
+    *    rounding error grows with (sza+szb), which an absolute slack
+    *    stops covering near 10M shingles — over-keeping, never
+    *    over-pruning).
     *
     * A PPJoin length filter rides the prefix join (J >= t forces
     * min(sz) >= t*max(sz)); the candidate DOC SET surviving the
@@ -439,7 +442,7 @@ object Dedup {
         max(col("a.rk")).as("__pa"), max(col("b.rk")).as("__pb"))
       .filter(col("__pm") +
         least(col("sza") - col("__pa"), col("szb") - col("__pb")) >=
-        ceil((col("sza") + col("szb")) * lit(tt) - lit(1e-9)))
+        ceil((col("sza") + col("szb")) * lit(tt * (1 - 1e-12))))
     // pair-cardinality frame with three consumers (the candidate-doc
     // set, the broadcast gate's count, and the verify join) — eagerly
     // checkpointed so the prefix self-join + pair aggregate run once

@@ -1,6 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted index — the engine-native replacement for the
@@ -8,11 +11,15 @@ import org.apache.spark.sql.functions._
   *
   * The reference makes term lookups single-partition reads by keying
   * Cassandra on (term, corpus_name) (SURVEY.md §4 row 1). Here the postings
-  * and vocabulary tables are partitioned by a term-hash bucket: a query for
-  * k terms touches at most k of `buckets` directories — Catalyst partition
-  * pruning does what Cassandra token routing did, and at 100 TB the
-  * difference between scanning 4/64 buckets and the full table IS the
-  * query latency.
+  * and vocabulary tables are partitioned by a term-hash bucket, and the
+  * serving reader opens ONLY the k `term_bucket=<b>` directories a k-term
+  * query hashes to — the point read Cassandra token routing did. Reading
+  * the table root and relying on Catalyst partition pruning is not
+  * enough: a partitioned read first lists EVERY partition directory, and
+  * above spark.sql.sources.parallelPartitionDiscovery.threshold (32) that
+  * listing is itself a distributed job, paid per table per request. At
+  * 100 TB the difference between opening 4/64 buckets and the full table
+  * IS the query latency.
   */
 object IndexStore {
 
@@ -185,30 +192,55 @@ object IndexStore {
     spark.read.schema(corpusInfoSchema).parquet(s"$dir/corpus_info")
 
   /** The bucket count a store was written with (index_meta). Eagerly read:
-    * it becomes pruning literals in the serving plan. */
-  def storedBuckets(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/index_meta").head().getInt(0)
+    * it becomes the bucket-directory list of the serving reads. Read on the
+    * driver straight from the 1-row part file — a `spark.read` here would
+    * be a Spark job per call on the request path. */
+  def storedBuckets(spark: SparkSession, dir: String): Int = {
+    val meta = new Path(s"$dir/index_meta")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parts = meta.getFileSystem(conf).listStatus(meta).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    require(parts.length == 1,
+      s"IndexStore: $meta holds ${parts.length} part files, expected exactly 1")
+    val reader = ParquetReader.builder(new GroupReadSupport(), parts.head)
+      .withConf(conf).build()
+    try {
+      val row = reader.read()
+      require(row != null, s"IndexStore: ${parts.head} holds no bucket count")
+      row.getInteger("buckets", 0)
+    } finally reader.close()
+  }
 
-  /** Postings for a set of terms, with the bucket predicate attached so the
-    * scan partition-prunes (the per-term point-read of app/query.py:64-73,
-    * minus the driver loop). The modulus comes from the store's own
-    * metadata — a caller-supplied count could silently mis-prune. */
+  /** Postings for a set of terms, read from only their hash buckets (the
+    * per-term point-read of app/query.py:64-73, minus the driver loop).
+    * The modulus comes from the store's own metadata — a caller-supplied
+    * count could silently mis-prune. */
   def postingsForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame =
-    prunedByTerm(postings(spark, dir), terms, storedBuckets(spark, dir))
+    postingsForTerms(spark, dir, terms, storedBuckets(spark, dir))
 
-  def vocabularyForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame =
-    prunedByTerm(vocabulary(spark, dir), terms, storedBuckets(spark, dir))
+  /** As above with the store's bucket count already read, so a request
+    * touching several tables reads index_meta once. */
+  def postingsForTerms(spark: SparkSession, dir: String, terms: Seq[String],
+                       buckets: Int): DataFrame =
+    bucketRead(spark, s"$dir/term_frequency_in_doc", postingsSchema, terms, buckets)
+
+  def vocabularyForTerms(spark: SparkSession, dir: String, terms: Seq[String],
+                         buckets: Int): DataFrame =
+    bucketRead(spark, s"$dir/doc_frequency_of_term", vocabularySchema, terms, buckets)
 
   /** Phrase search served from the stored positional table: each term of
-    * the adjacency chain reads ONLY its hash bucket (partition pruning, as
-    * in searchStored), so a k-term phrase touches <= k of `buckets`
-    * directories of the positional table — never the corpus, never the
-    * full table. Results ≡ InvertedIndex.phraseMatch on the indexed docs. */
-  def phraseMatchStored(spark: SparkSession, dir: String, phrase: String): DataFrame = {
-    val buckets = storedBuckets(spark, dir)
+    * the adjacency chain reads ONLY its hash bucket, so a k-term phrase
+    * touches <= k of `buckets` directories of the positional table — never
+    * the corpus, never the full table. Results ≡ InvertedIndex.phraseMatch
+    * on the indexed docs. */
+  def phraseMatchStored(spark: SparkSession, dir: String, phrase: String): DataFrame =
+    phraseMatchStored(spark, dir, phrase, storedBuckets(spark, dir))
+
+  def phraseMatchStored(spark: SparkSession, dir: String, phrase: String,
+                        buckets: Int): DataFrame =
     InvertedIndex.phraseFromPostings(InvertedIndex.phraseTerms(phrase),
-      t => prunedByTerm(positional(spark, dir), Seq(t), buckets))
-  }
+      t => bucketRead(spark, s"$dir/positional_postings", positionalSchema,
+        Seq(t), buckets))
 
   /** Proximity search served from the stored positional table — both
     * sides of the banded join read only their term's hash bucket. */
@@ -216,17 +248,38 @@ object IndexStore {
                            termB: String, window: Int = 8): DataFrame = {
     val buckets = storedBuckets(spark, dir)
     InvertedIndex.proximityFromPostings(termA, termB, window,
-      t => prunedByTerm(positional(spark, dir), Seq(t), buckets))
+      t => bucketRead(spark, s"$dir/positional_postings", positionalSchema,
+        Seq(t), buckets))
   }
 
-  private def prunedByTerm(df: DataFrame, terms: Seq[String], buckets: Int): DataFrame = {
+  /** The one serving-path table reader: opens only the `term_bucket=<b>`
+    * directories the terms hash to and that exist (a zero-token store, or
+    * an OOV term's empty bucket, has none), so the read lists k
+    * directories on the driver instead of every bucket in a listing job.
+    * The bucket and term predicates stay on the frame, so the scan still
+    * carries term_bucket PartitionFilters and only the terms' rows
+    * survive. No bucket directory: an empty frame with the table's schema
+    * intact (the S9 standing). A missing TABLE fails loudly — a store
+    * written before the positional table existed must be re-`write`n,
+    * never served as empty. */
+  private def bucketRead(spark: SparkSession, table: String, schema: StructType,
+                         terms: Seq[String], buckets: Int): DataFrame = {
     val bucketIds = terms.map(t => bucketOf(t, buckets)).distinct
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(root), s"IndexStore: no table at $table")
+    val dirs = bucketIds.map(b => new Path(root, s"term_bucket=$b"))
+      .filter(fs.exists).map(_.toString)
+    val df =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).option("basePath", table).parquet(dirs: _*)
     df.filter(col("term_bucket").isin(bucketIds: _*) &&
       col("term").isin(terms: _*))
   }
 
   /** Spark-side xxhash64 of a literal term, evaluated eagerly so the bucket
-    * list lands in the plan as partition-pruning literals. */
+    * list names the directories to open and lands in the plan as
+    * partition-pruning literals. */
   def bucketOf(term: String, buckets: Int = DefaultBuckets): Long = {
     // XxHash64 over a UTF8String with Spark's default seed 42L — the same
     // expression termBucket uses, evaluated locally.

@@ -231,16 +231,17 @@ object BM25 {
   }
 
   /** BM25 search served from a persisted IndexStore — no recompute; the
-    * term predicate partition-prunes the postings scan to the query terms'
-    * hash buckets (the Cassandra-token-routing equivalent). The bucket
-    * modulus comes from the store's own metadata. */
+    * postings and vocabulary reads open only the query terms' hash-bucket
+    * directories (the Cassandra-token-routing equivalent). The bucket
+    * modulus comes from the store's own metadata, read once per request. */
   def searchStored(spark: SparkSession, indexDir: String, query: String,
                    k1: Double = 1.0, b: Double = 0.75,
                    topK: Int = 10): DataFrame = {
     val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms)
+    val buckets = IndexStore.storedBuckets(spark, indexDir)
+    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
-    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms)
+    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
     rank(qtf, qdf, IndexStore.docInfo(spark, indexDir),
       IndexStore.corpusInfo(spark, indexDir), k1, b, topK)
@@ -396,13 +397,14 @@ object BM25 {
                                 b: Double = 0.75, topK: Int = 10,
                                 boost: Double = 0.5): DataFrame = {
     val terms = InvertedIndex.phraseTerms(phrase).distinct
-    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms)
+    val buckets = IndexStore.storedBuckets(spark, indexDir)
+    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
-    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms)
+    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
     val scores = scoreAll(qtf, qdf, IndexStore.docInfo(spark, indexDir),
       IndexStore.corpusInfo(spark, indexDir), k1, b)
-    val phr = IndexStore.phraseMatchStored(spark, indexDir, phrase)
+    val phr = IndexStore.phraseMatchStored(spark, indexDir, phrase, buckets)
     scores.join(phr, Seq("doc_id"), "left")
       .withColumn("n_phrase", coalesce(col("n_occurrences"), lit(0L)))
       .select(col("doc_id"),
@@ -440,9 +442,9 @@ object BM25 {
   }
 
   /** Batch search served from a persisted IndexStore — the query-workload
-    * serving path: the whole workload's term set partition-prunes the
-    * postings and vocabulary scans to its hash buckets (one pruned scan
-    * amortized over ALL queries), and scoring is the same one-plan
+    * serving path: the whole workload's term set picks the postings and
+    * vocabulary bucket directories to open (one pruned scan amortized
+    * over ALL queries), and scoring is the same one-plan
     * windowed top-k as searchMany. Queries are driver-known pairs
     * (query_id, query) — they must be, for the bucket list to land in the
     * plan as pruning literals. */
@@ -454,9 +456,10 @@ object BM25 {
       q.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.map((qid, _))
     }
     val terms = qTerms.map(_._2).distinct
-    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms)
+    val buckets = IndexStore.storedBuckets(spark, indexDir)
+    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
-    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms)
+    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
     val scored = qtf
       .join(broadcast(qTerms.toDF("query_id", "term")), Seq("term"))

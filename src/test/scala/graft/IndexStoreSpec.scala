@@ -1,10 +1,27 @@
 package graft
 
 import java.nio.file.Files
-import graft.index.IndexStore
+import graft.index.{IndexStore, InvertedIndex}
 import graft.rank.BM25
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-class IndexStoreSpec extends SparkSpec {
+class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  /** (table, bucket directories opened) of every stored-table scan in the
+    * plan, AQE stages and subqueries included. */
+  private def storeScans(q: DataFrame): Seq[(String, Set[String])] =
+    collectWithSubqueries(q.queryExecution.executedPlan) {
+      case s: FileSourceScanExec =>
+        val roots = s.relation.location.rootPaths
+        (roots.map(_.getParent.getName).distinct.mkString(","),
+          roots.map(_.getName).toSet)
+    }.filter { case (t, _) => Set("term_frequency_in_doc",
+      "doc_frequency_of_term", "positional_postings").contains(t) }
 
   private lazy val dir = {
     val d = Files.createTempDirectory("graft-index").toString
@@ -46,11 +63,126 @@ class IndexStoreSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("term_bucket"),
       s"no partition pruning in:\n$plan")
-    // the scan must read strictly fewer than all 16 bucket directories
-    val scanned = df.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString
     assert(df.select("term").distinct().collect().map(_.getString(0)).toSet
       == Set("spark"))
+    // every stored-table scan of the serving surface opens exactly its
+    // terms' bucket directories — never the table root, which would list
+    // all 16 buckets
+    def dirs(terms: String*) =
+      terms.map(t => s"term_bucket=${IndexStore.bucketOf(t, 16)}").toSet
+    val bag = dirs("spark", "join", "window")
+    val phrase = Set(dirs("the"), dirs("value"))
+    def pin(q: DataFrame, allowed: Map[String, Set[Set[String]]]): Unit = {
+      val scans = storeScans(q)
+      assert(scans.map(_._1).toSet == allowed.keySet,
+        s"scanned tables ${scans.map(_._1)}")
+      scans.foreach { case (table, opened) =>
+        assert(allowed(table).contains(opened),
+          s"$table scan opened $opened, expected one of ${allowed(table)}")
+      }
+    }
+    pin(df, Map("term_frequency_in_doc" -> Set(dirs("spark"))))
+    pin(BM25.searchStored(spark, dir, "spark join window"),
+      Map("term_frequency_in_doc" -> Set(bag),
+        "doc_frequency_of_term" -> Set(bag)))
+    pin(BM25.searchManyStored(spark, dir,
+        Seq((1L, "spark join"), (2L, "window"))),
+      Map("term_frequency_in_doc" -> Set(bag),
+        "doc_frequency_of_term" -> Set(bag)))
+    pin(BM25.searchStoredPhraseBoosted(spark, dir, "the value"),
+      Map("term_frequency_in_doc" -> Set(dirs("the", "value")),
+        "doc_frequency_of_term" -> Set(dirs("the", "value")),
+        "positional_postings" -> phrase))
+    pin(IndexStore.phraseMatchStored(spark, dir, "the value"),
+      Map("positional_postings" -> phrase))
+    pin(IndexStore.proximityMatchStored(spark, dir, "the", "value", 8),
+      Map("positional_postings" -> phrase))
+  }
+
+  test("building stored queries launches no job; serving runs no wide job") {
+    import spark.implicits._
+    // the default 64 buckets, all of them filled (the sf0.001 corpus has
+    // too few distinct terms): above the parallel partition-discovery
+    // threshold (32), opening a table root becomes a listing job
+    val d = Files.createTempDirectory("graft-index-64").toString
+    val docs = (0 until 200).map(i => (i.toLong,
+      (0 until 10).map(j => s"w${(i * 7 + j * 13) % 500}").mkString(" ")))
+      .toDF("doc_id", "text")
+    IndexStore.write(docs, d)
+    assert(new java.io.File(s"$d/term_frequency_in_doc").list()
+      .count(_.startsWith("term_bucket=")) > 32)
+    val sc = spark.sparkContext
+    val group = "graft-serving-jobs"
+    // job id -> tasks launched, for the jobs of this test's job group
+    val jobTasks = scala.collection.mutable.Map.empty[Int, Int]
+    val stageJob = scala.collection.mutable.Map.empty[Int, Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group)) jobTasks.synchronized {
+          jobTasks(e.jobId) = 0
+          e.stageIds.foreach(stageJob(_) = e.jobId)
+        }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        jobTasks.synchronized {
+          stageJob.get(e.stageId).foreach(j => jobTasks(j) += 1)
+        }
+    }
+    def jobs(): Map[Int, Int] = {
+      TestListenerBus.drain(sc)
+      jobTasks.synchronized(jobTasks.toMap)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "serving-path job pin")
+    try {
+      val frames = Seq(
+        BM25.searchStored(spark, d, "w1 w2 w3"),
+        BM25.searchManyStored(spark, d, Seq((1L, "w1 w2"), (2L, "w3"))),
+        BM25.searchStoredPhraseBoosted(spark, d, "w0 w13"),
+        IndexStore.phraseMatchStored(spark, d, "w0 w13"),
+        IndexStore.proximityMatchStored(spark, d, "w0", "w26", 8))
+      assert(jobs().isEmpty, s"building stored queries ran jobs ${jobs()}")
+      frames.head.collect()
+      val run = jobs()
+      val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(run.nonEmpty && run.values.forall(_ <= cap),
+        s"searchStored ran jobs (id -> tasks) $run, cap $cap tasks")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("stores with missing bucket directories serve the recompute answer") {
+    import spark.implicits._
+    val three = Seq((1L, "the quick brown fox jumps"),
+      (2L, "the lazy dog sleeps by the quick brown fox"),
+      (3L, "quick brown dogs run")).toDF("doc_id", "text")
+    for ((docs, name) <- Seq((three.limit(0), "zero-row"), (three, "3-doc"))) {
+      val d = Files.createTempDirectory("graft-index-sparse").toString
+      IndexStore.write(docs, d)
+      // the 3-doc store fills at most 11 of 64 buckets; the OOV term's
+      // bucket directory must really be absent for this case to bite
+      val oov = Iterator.from(0).map(i => s"zzzoov$i").find(t =>
+        !new java.io.File(s"$d/term_frequency_in_doc/term_bucket=" +
+          IndexStore.bucketOf(t)).exists()).get
+      def same(stored: DataFrame, fresh: DataFrame): Unit = {
+        assert(stored.schema.map(f => (f.name, f.dataType)) ==
+          fresh.schema.map(f => (f.name, f.dataType)), name)
+        assert(stored.collect().toSeq == fresh.collect().toSeq, name)
+      }
+      same(BM25.searchStored(spark, d, s"quick fox $oov"),
+        BM25.search(spark, docs, s"quick fox $oov"))
+      same(BM25.searchStored(spark, d, oov), BM25.search(spark, docs, oov))
+      same(IndexStore.phraseMatchStored(spark, d, "quick brown fox"),
+        InvertedIndex.phraseMatch(docs, "quick brown fox"))
+      same(IndexStore.phraseMatchStored(spark, d, s"brown $oov"),
+        InvertedIndex.phraseMatch(docs, s"brown $oov"))
+      same(IndexStore.proximityMatchStored(spark, d, "the", "fox", 8),
+        InvertedIndex.proximityMatch(docs, "the", "fox", 8))
+      same(IndexStore.proximityMatchStored(spark, d, "the", oov, 8),
+        InvertedIndex.proximityMatch(docs, "the", oov, 8))
+    }
   }
 
   test("searchStored's whole plan partition-prunes the postings scan") {

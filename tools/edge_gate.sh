@@ -19,6 +19,7 @@ WORK=${2:-/tmp/graft_edge}
 cd /root/repo
 
 python3 tools/make_edge.py "$SRC" "$WORK"
+ORACLE_VMEM_KB=$(awk '/^MemTotal:/ {print int($2 / 2)}' /proc/meminfo)
 
 : > EDGE_GATE.txt
 overall=0
@@ -27,11 +28,20 @@ for fx in empty one_doc identical unicode long boilerplate; do
   out=/tmp/verify_edge_$fx
   SPARK_GRAFT_CPUS=8 sbt -batch \
     "runMain graft.Verify $WORK/$fx $out" 2>/dev/null | tail -1
-  python3 tools/check_oracle.py "$WORK/$fx" "$out" > /tmp/edge_$fx.log 2>&1
+  # the oracle runs under a virtual-memory cap of half the machine's RAM:
+  # an oracle query that outgrows it fails as a FAIL line instead of
+  # taking the machine down with it
+  (ulimit -v "$ORACLE_VMEM_KB"
+   python3 tools/check_oracle.py "$WORK/$fx" "$out") > /tmp/edge_$fx.log 2>&1
+  status=$?
   # strip the documented contract exceptions before judging
   grep "^FAIL" /tmp/edge_$fx.log | grep -v \
     -e "^FAIL text_ks_drift.*" \
     > /tmp/edge_${fx}_fails.log || true
+  # a check that died before its verdict compared only part of the surface
+  if [ "$status" -gt 1 ] || ! grep -q -e "^ALL OK" -e "FAILURES$" /tmp/edge_$fx.log; then
+    echo "FAIL check_oracle did not finish (exit $status)" >> /tmp/edge_${fx}_fails.log
+  fi
   nfail=$(grep -c . /tmp/edge_${fx}_fails.log || true)
   nok=$(grep -c "^OK" /tmp/edge_$fx.log || true)
   if [ "$fx" != "one_doc" ]; then
