@@ -1,27 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
-object Bench {
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+object Bench extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // optional comma-separated name filter for local iteration; the
     // driver's env-less run benches everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scaled fixtures are flattened to ONE parquet file per table, so at
-      // default 128m a 10x/100x documents/embeddings scan gets 1-2 input
-      // partitions and every scan-shaped stage runs near-serial — unlike a
-      // real corpus at that size, which arrives as proportionally many
-      // files. The scale gates export a smaller value to restore the scan
-      // parallelism the fixture's layout (not the plans) took away.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "134217728"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session()
     // JVM/codegen warmup so the first measured query isn't charged for it
     spark.range(100000).selectExpr("sum(id)").collect()
     // Box calibration, recorded in the JSON: round 7 burned judge and
@@ -70,7 +57,7 @@ object Bench {
     // Captures the executed plan of each successful action so per-query
     // shuffle/spill totals can be reported without a second execution or
     // any change to what is timed. The listener bus is async — readers
-    // poll briefly after the timed runs.
+    // drain it after the timed runs.
     val qeRef = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.execution.QueryExecution](null)
     spark.listenerManager.register(
@@ -84,28 +71,10 @@ object Bench {
       })
     // Sums a named SQL metric over the whole executed tree, descending
     // through AQE wrappers and materialized query stages.
-    def metricSum(root: org.apache.spark.sql.execution.SparkPlan,
-                  key: String): Long = {
-      var acc = 0L
-      def walk(n: org.apache.spark.sql.execution.SparkPlan): Unit = {
-        n.metrics.get(key).foreach(m => acc += m.value)
-        n match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            walk(q.plan)
-          case _ => ()
-        }
-        n.children.foreach(walk)
-      }
-      walk(root)
-      acc
-    }
+    def metricSum(root: SparkPlan, key: String): Long =
+      flatMap(root)(_.metrics.get(key)).map(_.value).sum
     def planMetrics(): Seq[Long] = {
-      var waited = 0
-      while (qeRef.get() == null && waited < 2000) {
-        Thread.sleep(20); waited += 20
-      }
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       Option(qeRef.get()) match {
         case None => Seq(-1L, -1L, -1L)
         case Some(qe) =>

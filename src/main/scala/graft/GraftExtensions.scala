@@ -3,56 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{AudioMetaExpr, BigramsExpr, DotProductExpr, ImageDimsExpr, ImageFunctions, LshFunctions, MediaFunctions, PqFunctions, PqMinDistExpr, PqScoreExpr, ShinglesExpr, SignLshBucketsExpr, TextFunctions, UnitVectorExpr, VectorFunctions, VideoMetaExpr}
+import graft.functions.FunctionTable
 
-/** Library packaging for the native functions: sessions built with
+/** Library packaging for graft's SQL surface: sessions built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) get `graft_dot` / `graft_unit`
-  * without any per-session registration call — the idiomatic way to ship
-  * Catalyst expressions with a Spark library.
+  * `.withExtensions(new GraftExtensions)`) get every `graft_*` kernel of
+  * `FunctionTable` by name in SQL, the banded range-join rewrite and the
+  * as-of join planner strategy — the idiomatic way to ship Catalyst
+  * extensions with a Spark library. DataFrame code needs none of it for
+  * the kernels: their Column helpers build the expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.DotName),
-      new ExpressionInfo(classOf[DotProductExpr].getName, VectorFunctions.DotName),
-      VectorFunctions.dotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.UnitName),
-      new ExpressionInfo(classOf[UnitVectorExpr].getName, VectorFunctions.UnitName),
-      VectorFunctions.unitBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(LshFunctions.BucketsName),
-      new ExpressionInfo(classOf[SignLshBucketsExpr].getName, LshFunctions.BucketsName),
-      LshFunctions.bucketsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(PqFunctions.MinDistName),
-      new ExpressionInfo(classOf[PqMinDistExpr].getName, PqFunctions.MinDistName),
-      PqFunctions.minDistBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(PqFunctions.ScoreName),
-      new ExpressionInfo(classOf[PqScoreExpr].getName, PqFunctions.ScoreName),
-      PqFunctions.scoreBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(TextFunctions.BigramsName),
-      new ExpressionInfo(classOf[BigramsExpr].getName, TextFunctions.BigramsName),
-      TextFunctions.bigramsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(TextFunctions.ShinglesName),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, TextFunctions.ShinglesName),
-      TextFunctions.shinglesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(ImageFunctions.DimsName),
-      new ExpressionInfo(classOf[ImageDimsExpr].getName, ImageFunctions.DimsName),
-      ImageFunctions.dimsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(MediaFunctions.AudioName),
-      new ExpressionInfo(classOf[AudioMetaExpr].getName, MediaFunctions.AudioName),
-      MediaFunctions.audioBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(MediaFunctions.VideoName),
-      new ExpressionInfo(classOf[VideoMetaExpr].getName, MediaFunctions.VideoName),
-      MediaFunctions.videoBuilder))
+    FunctionTable.entries.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(getClass.getName, name), builder))
+    }
     // optimizer rewrite: |a-b| <= tol inequality joins -> banded equi-joins
     ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)
     // planner strategy: AsOfJoinNode -> AsOfJoinExec (sort-merge as-of)

@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Cli.session()
     // FormattedMode: the round-9+ plan evidence files (plans/rNN/) must
     // carry PushedFilters/ReadSchema/join build sides, which SimpleMode
     // omits. Override the fixture dir with SPARK_GRAFT_SF_DIR if needed.

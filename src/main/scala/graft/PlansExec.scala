@@ -1,31 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Executed-plan dump: runs each query and prints the RUNTIME (post-AQE)
   * plan plus the shuffle-exchange count and records — exactly what
   * BenchInvariantsSpec pins, for recalibrating a pin after a deliberate
   * plan change. */
-object PlansExec {
+object PlansExec extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Cli.session()
     val dir = "/root/testdata/sf0.01"
     for (name <- args) {
       val df = SparkEntry.queries(name)(spark, dir)
       df.collect()
-      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan) :+ q
-        case other => other.children.flatMap(walk) :+ other
-      }
-      val sh = walk(df.queryExecution.executedPlan)
-        .collect { case s: ShuffleExchangeLike => s }
+      val sh = collect(df.queryExecution.executedPlan) {
+        case s: ShuffleExchangeLike => s }
       val rec = sh.flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value)).sum
       println(s"===== $name exchanges=${sh.size} records=$rec")
       println(df.queryExecution.executedPlan.toString.take(4000))

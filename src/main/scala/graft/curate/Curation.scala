@@ -52,7 +52,6 @@ object Curation {
     // pays repetitionStats' explode + countDistinct exchange for a
     // per-row quantity. Same integers, same double division, same
     // round(4) as repetitionStats — the oracle is unchanged.)
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val tri3 = graft.functions.TextFunctions.shingles(
       graft.text.Tokenize.tokens(col("text")), 3)
     val dtf = when(size(tri3) === 0, lit(0.0))
@@ -574,7 +573,6 @@ object Curation {
 
   def dsirWeights(docs: DataFrame, targetSource: String,
                   buckets: Int = 1024): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val tf = graft.functions.TextFunctions
     val bD = lit(buckets.toDouble)
     val occ = docs.select(col("doc_id"), col("source"),
@@ -669,7 +667,6 @@ object Curation {
     * bounded at any corpus size. */
   def splitContamination(docs: DataFrame, pairs: DataFrame,
                          n: Int = 8): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val cl = Dedup.duplicateClusters(pairs)
       .select(col("doc_id"), col("cluster_id"))
     val labeled = graft.sources.Sampling.hashSplit(

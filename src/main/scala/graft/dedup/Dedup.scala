@@ -136,7 +136,6 @@ object Dedup {
     * also yields [] for short docs natively (no sequence(1, x<1)
     * counts-down guard needed). FunctionsSpec pins parity with the HOF. */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col("doc_id"), Tokenize.tokens(col("text")).as("t"))
       .select(col("doc_id"), explode(array_distinct(
         graft.functions.TextFunctions.shingles(col("t"), n))).as("shingle"))
@@ -1065,7 +1064,6 @@ object Dedup {
     * windows cost df join rows each, exactly like sharedNgramStats. */
   def duplicatedSpans(docs: DataFrame, k: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     // Round-10 skew fix (guide §2.5; round-9 verdict item 2): round 9
     // computed the cross-doc test as min/max over Window.partitionBy(h)
     // — one exchange of hashed longs, but a window has NO partial
@@ -1150,7 +1148,6 @@ object Dedup {
 
   private def winnowSelect(docs: DataFrame, k: Int, w: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val hashed = docs
       .select(col("doc_id"),
         graft.functions.TextFunctions.rollingHashes(
@@ -1227,7 +1224,6 @@ object Dedup {
     * chunk_md5 = equal content regardless of where it sits in a doc. */
   def cdcChunks(docs: DataFrame, k: Int = DefaultCdcK,
                 mask: Int = DefaultCdcMask): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val withBounds = docs
       .select(col("doc_id"), Tokenize.tokens(col("text")).as("t"))
       .withColumn("hs", graft.functions.TextFunctions.rollingHashes(col("t"), k))
@@ -1497,7 +1493,6 @@ object Dedup {
     // threshold-banded early-exit kernel: exact for dist <= maxDist,
     // maxDist+1 beyond — output-identical to full levenshtein under the
     // <= maxDist filter (the oracle keeps DuckDB's plain levenshtein)
-    graft.functions.StringDistanceFunctions.ensureRegistered(docs.sparkSession)
     a.join(b, Seq("block"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),

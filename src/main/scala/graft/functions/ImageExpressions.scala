@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -213,13 +212,7 @@ object ImageFunctions {
     ImageFeaturesExpr(args.head)
   }
 
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DimsName, dimsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FeaturesName, featuresBuilder, "built-in")
-  }
-
-  def imageDims(payload: Column): Column = call_function(DimsName, payload)
-  def imageFeatures(payload: Column): Column = call_function(FeaturesName, payload)
+  def imageDims(payload: Column): Column = FunctionTable.call(dimsBuilder, payload)
+  def imageFeatures(payload: Column): Column =
+    FunctionTable.call(featuresBuilder, payload)
 }

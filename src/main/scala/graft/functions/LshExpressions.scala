@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Single source of truth for the deterministic sign-LSH hyperplanes.
@@ -132,6 +131,8 @@ object SignLshBucketsExpr {
 }
 
 object LshFunctions {
+  import FunctionTable.param
+
   val BucketsName = "graft_lsh_buckets"
 
   /** Geometry args must be plan-time integer literals — the coefficient
@@ -149,14 +150,10 @@ object LshFunctions {
       intLit(args(3), "bands"), intLit(args(4), "offset"))
   }
 
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BucketsName, bucketsBuilder, "built-in")
-
   /** Column of ARRAY<BIGINT>: element b = band b's bucket id (planes
     * offset+b*planes .. offset+(b+1)*planes-1). */
   def buckets(vec: Column, dims: Int, planes: Int, bands: Int,
               offset: Int = 0): Column =
-    call_function(BucketsName, vec, lit(dims), lit(planes), lit(bands),
-      lit(offset))
+    FunctionTable.call(bucketsBuilder, vec, param(dims), param(planes),
+      param(bands), param(offset))
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -245,13 +244,6 @@ object MediaFunctions {
     VideoMetaExpr(args.head)
   }
 
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AudioName, audioBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      VideoName, videoBuilder, "built-in")
-  }
-
-  def audioMeta(payload: Column): Column = call_function(AudioName, payload)
-  def videoMeta(payload: Column): Column = call_function(VideoName, payload)
+  def audioMeta(payload: Column): Column = FunctionTable.call(audioBuilder, payload)
+  def videoMeta(payload: Column): Column = FunctionTable.call(videoBuilder, payload)
 }

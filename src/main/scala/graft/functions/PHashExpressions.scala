@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Perceptual difference-hash (dHash) over an opaque BINARY payload.
@@ -100,9 +99,5 @@ object PHashFunctions {
     PHashExpr(args.head)
   }
 
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PHashName, phashBuilder, "built-in")
-
-  def phash(payload: Column): Column = call_function(PHashName, payload)
+  def phash(payload: Column): Column = FunctionTable.call(phashBuilder, payload)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native product-quantization kernels.
@@ -179,18 +178,11 @@ object PqFunctions {
     PqScoreExpr(arr(args(0)), arr(args(1)), arrArr(args(2)), n)
   }
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinDistName, minDistBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ScoreName, scoreBuilder, "built-in")
-  }
-
   /** Σ_s min_c ||x_sub - c_sub||² (caller divides by dims for MSE). */
   def minDist(x: Column, codes: Column, nSub: Int): Column =
-    call_function(MinDistName, x, codes, lit(nSub))
+    FunctionTable.call(minDistBuilder, x, codes, FunctionTable.param(nSub))
 
   /** Σ_s q_sub · nearest-codeword(x_sub) — asymmetric PQ score. */
   def score(q: Column, x: Column, codes: Column, nSub: Int): Column =
-    call_function(ScoreName, q, x, codes, lit(nSub))
+    FunctionTable.call(scoreBuilder, q, x, codes, FunctionTable.param(nSub))
 }

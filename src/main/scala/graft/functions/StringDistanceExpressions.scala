@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -217,17 +216,9 @@ object StringDistanceFunctions {
     BandedLevenshteinExpr(args.head, args(1), k)
   }
 
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      JaroWinklerName, jwBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BandedLevenshteinName, blBuilder, "built-in")
-  }
-
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function(JaroWinklerName, a, b)
+    FunctionTable.call(jwBuilder, a, b)
 
   def bandedLevenshtein(a: Column, b: Column, k: Int): Column =
-    call_function(BandedLevenshteinName, a, b,
-      org.apache.spark.sql.functions.lit(k))
+    FunctionTable.call(blBuilder, a, b, FunctionTable.param(k))
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen'd pass. A null array yields null; arrays shorter than 2 yield
   * []; a null TOKEN yields null bigrams at its two positions
   * (UTF8String.concat's null-in-null-out), so the element type declares
-  * containsNull — the function is registered session-wide and SQL users
-  * can pass arrays the regexp tokenizer never produces.
+  * containsNull — the function is callable from SQL (FunctionTable), and
+  * SQL users can pass arrays the regexp tokenizer never produces.
   */
 case class BigramsExpr(child: Expression) extends UnaryExpression {
 
@@ -258,20 +257,16 @@ object TextFunctions {
     RollingHashExpr(Cast(args(0), ArrayType(StringType)), k)
   }
 
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BigramsName, bigramsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ShinglesName, shinglesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      RollingHashName, rollingHashBuilder, "built-in")
-  }
+  /** Registers every `graft_*` kernel for SQL: the same as
+    * `FunctionTable.register`, kept for callers outside this library. */
+  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
+    FunctionTable.register(spark)
 
-  def bigrams(tokens: Column): Column = call_function(BigramsName, tokens)
+  def bigrams(tokens: Column): Column = FunctionTable.call(bigramsBuilder, tokens)
 
   def shingles(tokens: Column, n: Int): Column =
-    call_function(ShinglesName, tokens, org.apache.spark.sql.functions.lit(n))
+    FunctionTable.call(shinglesBuilder, tokens, FunctionTable.param(n))
 
   def rollingHashes(tokens: Column, k: Int): Column =
-    call_function(RollingHashName, tokens, org.apache.spark.sql.functions.lit(k))
+    FunctionTable.call(rollingHashBuilder, tokens, FunctionTable.param(k))
 }

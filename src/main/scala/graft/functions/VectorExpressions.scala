@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for the vector hot path.
@@ -24,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 case class DotProductExpr(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  // Inputs are coerced to ARRAY<DOUBLE> by the registration builder
+  // Inputs are coerced to ARRAY<DOUBLE> by VectorFunctions.dotBuilder
   // (ExpectsInputTypes' AbstractDataType is private[sql], so explicit
   // Casts replace the implicit type-coercion hook).
   override def nullIntolerant: Boolean = true
@@ -138,10 +137,8 @@ object VectorFunctions {
   val DotName = "graft_dot"
   val UnitName = "graft_unit"
 
-  /** Idempotent per-session registration; every DataFrame-level entry point
-    * in graft.similarity / graft.dedup calls this before building plans. */
-  /** Shared builders — the single definition of argument coercion, used by
-    * both per-session registration and GraftExtensions injection. */
+  /** The builders: the single definition of argument coercion, used by
+    * the Column helpers below and by FunctionTable for SQL. */
   val dotBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 2, s"$DotName expects 2 arguments")
     DotProductExpr(
@@ -153,20 +150,9 @@ object VectorFunctions {
     UnitVectorExpr(Cast(args(0), ArrayType(DoubleType)))
   }
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      UnitName, unitBuilder, "built-in")
-    // the LSH bucket and PQ kernels ride along: every vector entry point
-    // that registers dot/unit may also build sign-LSH or PQ plans
-    LshFunctions.ensureRegistered(spark)
-    PqFunctions.ensureRegistered(spark)
-  }
+  /** Column-level dot product over the native expression. */
+  def dot(a: Column, b: Column): Column = FunctionTable.call(dotBuilder, a, b)
 
-  /** Column-level dot product over the registered native expression. */
-  def dot(a: Column, b: Column): Column = call_function(DotName, a, b)
-
-  /** Column-level L2 normalization over the registered native expression. */
-  def unit(a: Column): Column = call_function(UnitName, a)
+  /** Column-level L2 normalization over the native expression. */
+  def unit(a: Column): Column = FunctionTable.call(unitBuilder, a)
 }

@@ -139,7 +139,6 @@ object Multimodal {
                                       broadcastMax: Long = PHashBroadcastMaxMedia): DataFrame = {
     require(maxHamming <= 7,
       s"maxHamming=$maxHamming > 7 breaks the band/probe pigeonhole")
-    graft.functions.PHashFunctions.ensureRegistered(media.sparkSession)
     // Parallelism floor (round-9 PlanProbe finding): a small/flattened
     // corpus arrives as 1-2 scan partitions, the localCheckpoint below
     // PRESERVES that layout, and the ~529-mask probe explode + band join
@@ -265,7 +264,6 @@ object Multimodal {
     * nibble histogram fingerprints the container, and the parsed
     * dimensions gate downstream decode work. */
   def imageFeatures(media: DataFrame): DataFrame = {
-    graft.functions.ImageFunctions.ensureRegistered(media.sparkSession)
     val cols = Seq(
       col("media_id"),
       col("dims.format").as("format"),
@@ -319,7 +317,6 @@ object Multimodal {
     * replacement for the feature-stub — corrupt rows surface as nulls,
     * never task failures). */
   def imageMeta(media: DataFrame): DataFrame = {
-    graft.functions.ImageFunctions.ensureRegistered(media.sparkSession)
     media.select(col("media_id"),
         graft.functions.ImageFunctions.imageDims(col("payload")).as("dims"))
       .select(col("media_id"), col("dims.format").as("format"),
@@ -367,7 +364,6 @@ object Multimodal {
     * the codegen `graft_audio_meta` expression (LE reads, pad-aware skip
     * of unknown chunks) and recover PCM params + duration. */
   def audioMeta(media: DataFrame): DataFrame = {
-    graft.functions.MediaFunctions.ensureRegistered(media.sparkSession)
     media.select(col("media_id"),
         graft.functions.MediaFunctions.audioMeta(col("payload")).as("m"))
       .select(col("media_id"), col("m.format").as("format"),
@@ -417,7 +413,6 @@ object Multimodal {
     * with the codegen `graft_video_meta` expression (largesize-aware
     * top-level walk, moov child walk for mvhd v0/v1 + trak count). */
   def videoMeta(media: DataFrame): DataFrame = {
-    graft.functions.MediaFunctions.ensureRegistered(media.sparkSession)
     media.select(col("media_id"),
         graft.functions.MediaFunctions.videoMeta(col("payload")).as("m"))
       .select(col("media_id"), col("m.format").as("format"),

@@ -544,7 +544,6 @@ object BM25 {
   def spellSuggest(spark: SparkSession, docs: DataFrame, query: String,
                    maxDist: Int = 2, k: Int = 3): DataFrame = {
     import spark.implicits._
-    graft.functions.StringDistanceFunctions.ensureRegistered(spark)
     val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
     val qt = terms.toSeq.toDF("query_term")
     val vocab = InvertedIndex.docFrequency(docs)

@@ -62,8 +62,6 @@ object EntityResolution {
     * oracle. */
   def fuzzyLink(part: DataFrame, modulus: Int = 29,
                 minJw: Double = 0.85, maxBlockSize: Int = 500): DataFrame = {
-    val spark = part.sparkSession
-    graft.functions.StringDistanceFunctions.ensureRegistered(spark)
     val jw = graft.functions.StringDistanceFunctions.jaroWinkler _
     val keyed = part.select(col("p_partkey"), title.as("clean_title"),
       split(title, " ").getItem(0).as("block_tok"), col("p_brand"),
@@ -115,8 +113,6 @@ object EntityResolution {
   def sortedNeighborhoodPairs(part: DataFrame,
                               window: Int = DefaultSnmWindow,
                               minJw: Double = DefaultSnmMinJw): DataFrame = {
-    val spark = part.sparkSession
-    graft.functions.StringDistanceFunctions.ensureRegistered(spark)
     val jw = graft.functions.StringDistanceFunctions.jaroWinkler _
     val ranked = part
       .select(col("p_partkey"), col("p_brand"), title.as("t"))

@@ -2,7 +2,7 @@ package graft.relational
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.functions._
 
@@ -27,18 +27,15 @@ object RuntimeFilters {
 
   val MightContainName = "graft_bloom_might_contain"
 
-  private val builder: Seq[Expression] => Expression = { args =>
+  val mightContainBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 2, s"$MightContainName expects 2 arguments")
     BloomFilterMightContain(args(0), args(1))
   }
 
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MightContainName, builder, "built-in")
-
   /** might-contain predicate over a serialized bloom filter literal. */
   def mightContain(bloomBytes: Array[Byte], key: Column): Column =
-    call_function(MightContainName, lit(bloomBytes), key.cast("long"))
+    graft.functions.FunctionTable.call(mightContainBuilder,
+      lit(bloomBytes), key.cast("long"))
 
   /** Pre-filter `big` to rows whose `bigKey` might appear in `small`'s
     * `smallKey` set, then exact inner join. Key columns must be integral
@@ -50,7 +47,6 @@ object RuntimeFilters {
                            small: DataFrame, smallKey: String,
                            expectedItems: Long = -1L,
                            fpp: Double = 0.01): DataFrame = {
-    ensureRegistered(big.sparkSession)
     val items = if (expectedItems > 0) expectedItems
                 else math.max(small.count(), 1L)
     val bf = small.stat.bloomFilter(smallKey, items, fpp)

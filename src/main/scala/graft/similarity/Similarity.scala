@@ -24,10 +24,9 @@ object Similarity {
     * identical either way (float→double widening is exact). */
   def toDoubleVec(c: Column): Column = c.cast("array<double>")
 
-  /** Dot product via the native codegen expression (graft.functions).
-    * Callers that build plans through the DataFrame entry points below get
-    * registration for free; identical left-to-right fold order to dotHof
-    * and DuckDB's list_dot_product. */
+  /** Dot product via the native codegen expression (graft.functions);
+    * identical left-to-right fold order to dotHof and DuckDB's
+    * list_dot_product. */
   def dot(a: Column, b: Column): Column = VectorFunctions.dot(a, b)
 
   /** Built-in-only fallback form (interpreted HOF) — kept as the semantic
@@ -43,14 +42,11 @@ object Similarity {
     * pass + one divide pass per vector, codegen'd, immune to the
     * CollapseProject trap that re-inlines a projected norm under a
     * transform() lambda (re-evaluating it per element). */
-  def withUnitVec(df: DataFrame, vec: String, out: String = "u"): DataFrame = {
-    VectorFunctions.ensureRegistered(df.sparkSession)
+  def withUnitVec(df: DataFrame, vec: String, out: String = "u"): DataFrame =
     df.withColumn(out, VectorFunctions.unit(col(vec)))
-  }
 
   /** Brute-force cosine top-k against one stored vector (the ANN baseline). */
   def cosineTopK(embeddings: DataFrame, queryVecId: Long, k: Int): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
       toDoubleVec(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") === queryVecId).select(col("v").as("qv"))
@@ -129,7 +125,6 @@ object Similarity {
     * the path that avoids scanning all n vectors per query. */
   def annCosineLsh(embeddings: DataFrame, queryVecId: Long, k: Int,
                    dims: Int = 64, nPlanes: Int = 8): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
       toDoubleVec(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v"), dims, nPlanes))
@@ -158,7 +153,6 @@ object Similarity {
   def annCosineLshMultiProbe(embeddings: DataFrame, queryVecId: Long, k: Int,
                              dims: Int = 64, nPlanes: Int = 8,
                              nProbes: Int = 4): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     require(nProbes >= 1 && nProbes <= nPlanes + 1,
       "single-bit probing covers at most nPlanes+1 buckets")
     val e = embeddings.select(col("vec_id"), col("label"),
@@ -249,7 +243,6 @@ object Similarity {
   def annCosineIvf(embeddings: DataFrame, queryVecId: Long, k: Int,
                    nCells: Int = 16, nProbe: Int = 4,
                    seed: Long = 7L): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     require(nProbe >= 1 && nProbe <= nCells)
     val e = unitVecs(embeddings)
     ivfServe(e, ivfCells(e, nCells, seed), queryVecId, k, nProbe)
@@ -288,7 +281,6 @@ object Similarity {
     * cross-engine tie order is pinned, same as tfIdfTopTerms. */
   def annCosineLshMany(embeddings: DataFrame, queryVecIds: Seq[Long], k: Int,
                        dims: Int = 64, nPlanes: Int = 8): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
       toDoubleVec(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v"), dims, nPlanes))
@@ -322,7 +314,6 @@ object Similarity {
     * surviving candidate rows. */
   def hardNegatives(embeddings: DataFrame, k: Int = 3, anchorMod: Long = 37,
                     dims: Int = 64, nPlanes: Int = 8): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
       toDoubleVec(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v"), dims, nPlanes))
@@ -352,7 +343,6 @@ object Similarity {
   def annCosineIvfMany(embeddings: DataFrame, queryVecIds: Seq[Long], k: Int,
                        nCells: Int = 16, nProbe: Int = 4,
                        seed: Long = 7L): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     require(nProbe >= 1 && nProbe <= nCells)
     val e = unitVecs(embeddings)
     val cells = ivfCells(e, nCells, seed)
@@ -392,7 +382,6 @@ object Similarity {
     * engine-portable. */
   def annRecallAtK(embeddings: DataFrame, queryVecIds: Seq[Long], k: Int,
                    dims: Int = 64, nPlanes: Int = 8): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("label"),
       toDoubleVec(col("embedding")).as("v"))
     val q = e.filter(col("vec_id").isin(queryVecIds: _*))
@@ -431,7 +420,6 @@ object Similarity {
     * a posexplode-then-aggregate spelling would shuffle. */
   def kmeansStep(embeddings: DataFrame, nCells: Int = 16, seed: Long = 7L,
                  reportDims: Int = 4): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = unitVecs(embeddings)
     val cells = ivfCells(e, nCells, seed)
     val assigned = ivfAssign(e, cells)
@@ -489,7 +477,6 @@ object Similarity {
                                        iters: Int = 3, seed: Long = 7L,
                                        dims: Int = 64,
                                        eps: Double = 0.0): DataFrame = {
-    VectorFunctions.ensureRegistered(e.sparkSession)
     require(iters >= 1 && nCells >= 1)
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 18)
     var cells = ivfCells(e, nCells, seed).localCheckpoint(true)
@@ -610,7 +597,6 @@ object Similarity {
   def cellPrune(embeddings: DataFrame, keepK: Int = 20, nCells: Int = 16,
                 iters: Int = 3, seed: Long = 7L, dims: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     // one checkpointed unit-vec frame shared by the fit loop AND the
     // final assignment scan (round-9: the lazy `e` re-read parquet +
     // re-evaluated the interpreted unitize lambda a second time)
@@ -655,7 +641,6 @@ object Similarity {
   def lshCalibration(embeddings: DataFrame, dims: Int = 64,
                      nPlanes: Int = 8, bands: Int = 4,
                      sampleN: Int = 2048, seed: Long = 42L): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val sampled = embeddings
       .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("__sk", graft.sources.Sampling.sampleKey(col("vec_id"), seed))
@@ -711,7 +696,6 @@ object Similarity {
     * under the transform lambda by CollapseProject and recomputed per
     * ELEMENT (the withUnitVec trap). */
   def quantizeErrorByLabel(embeddings: DataFrame): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = toDoubleVec(col("embedding"))
     val maxAbs = array_max(transform(e, x => abs(x)))
     val mseArr = transform(array(struct(maxAbs.as("ma"), e.as("e"))), s => {
@@ -752,7 +736,6 @@ object Similarity {
   def pqErrorByLabel(embeddings: DataFrame, nSub: Int = 8,
                      nCodes: Int = 16, seed: Long = 7L,
                      dims: Int = 64): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     require(dims % nSub == 0)
     val e = embeddings.select(col("vec_id"), col("label"),
       toDoubleVec(col("embedding")).as("v"))
@@ -792,7 +775,6 @@ object Similarity {
   def annCosinePq(embeddings: DataFrame, queryVecId: Long, k: Int,
                   nSub: Int = 8, nCodes: Int = 16, seed: Long = 7L,
                   dims: Int = 64): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     require(dims % nSub == 0)
     val e = unitVecs(embeddings)
     val book = e
@@ -845,7 +827,6 @@ object Similarity {
                      nCells: Int = 16, nProbe: Int = 4, iters: Int = 3,
                      seed: Long = 7L, nSub: Int = 8, nCodes: Int = 16,
                      dims: Int = 64): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     require(dims % nSub == 0 && nProbe >= 1 && nProbe <= nCells)
     // one checkpointed unit-vec frame shared by the fit loop, the
     // codebook sample, the query row, and the serve scan (round-9: the
@@ -903,7 +884,6 @@ object Similarity {
     * labels-sized centroid frame (broadcast, k^2/2 rows) — corpus size
     * only ever appears in the first scan. */
   def labelCentroidSimilarity(embeddings: DataFrame, dims: Int = 64): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 18)
     val sums = (1 to dims).map(d =>
       sum(element_at(col("embedding"), d).cast(dec)).as(s"s$d"))
@@ -945,8 +925,6 @@ object Similarity {
     * the DCG sums run on ≤ k rows. */
   def ndcgEval(embeddings: DataFrame, queryVecId: Long = 0L,
                k: Int = 10): DataFrame = {
-    val spark = embeddings.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.expressions.Window
     val exact = cosineTopK(embeddings, queryVecId, k)
       .withColumn("rank_exact", row_number()
@@ -991,7 +969,6 @@ object Similarity {
   def psiDrift(embeddings: DataFrame, baselineMaxLabel: Int = 4,
                nBuckets: Int = 10): DataFrame = {
     val spark = embeddings.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     // one corpus scan computes every norm; the (label, norm) frame is two
     // narrow columns, so it checkpoints once and the four consumers below
     // (bounds, two bucket counts, totals) never re-read the embeddings
@@ -1060,7 +1037,6 @@ object Similarity {
   def mmrRerank(embeddings: DataFrame, queryVecId: Long = 0L,
                 candK: Int = 20, k: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val eu = embeddings.select(col("vec_id"),
       VectorFunctions.unit(toDoubleVec(col("embedding"))).as("u"))
@@ -1152,7 +1128,6 @@ object Similarity {
     * move. */
   private def centeredFrame(embeddings: DataFrame,
                             dims: Int): (DataFrame, Column, Double) = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val x = embeddings.select(col("vec_id"),
       toDoubleVec(col("embedding")).as("v"))
     val muRow = x.agg(count(lit(1)).as("n"),
@@ -1321,7 +1296,6 @@ object Similarity {
     * joins; the coefficient planes are plan-time literals. */
   def jlNormReport(embeddings: DataFrame, dims: Int = 64,
                    k: Int = 16): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"),
       toDoubleVec(col("embedding")).as("v"))
     // sum_j dj^2 with each plane's dot evaluated once, j ascending — the
@@ -1352,7 +1326,6 @@ object Similarity {
     * sim_recall_eval / the sampled lsh calibration. */
   def jlDistortion(embeddings: DataFrame, dims: Int = 64, k: Int = 16,
                    sampleN: Int = 64, seed: Long = 7L): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val smp = graft.sources.Sampling.deterministicSample(
         embeddings.select(col("vec_id"),
           toDoubleVec(col("embedding")).as("v")), "vec_id", sampleN, seed)
@@ -1379,7 +1352,6 @@ object Similarity {
 
   /** Per-label embedding stats (norm is exact-order sequential). */
   def normStatsByLabel(embeddings: DataFrame): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     embeddings
       .select(col("label"), l2Norm(toDoubleVec(col("embedding"))).as("norm"))
       .groupBy("label")

@@ -126,7 +126,6 @@ object Sketches {
 
   /** The sketched universe: per-source token BIGRAMS (one codegen pass). */
   private def kmvTerms(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col("source"),
       explode(graft.functions.TextFunctions.bigrams(
         graft.text.Tokenize.tokens(col("text")))).as("term"))
@@ -142,7 +141,6 @@ object Sketches {
     * sketches (kmvSourceOverlap) is meaningful. */
   private def kmvSketchRows(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     kmvTerms(docs)
       .select(col("source"),
         graft.sources.Sampling.hex8Int(md5(col("term"))).as("h"))

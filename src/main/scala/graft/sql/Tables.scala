@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** SQL surface: register the testdata tables as temp views so the whole
   * engine is reachable through `spark.sql(...)` — including the native
-  * functions when the session carries GraftExtensions (or after
-  * VectorFunctions.ensureRegistered).
+  * `graft_*` functions when the session carries GraftExtensions (or after
+  * `graft.functions.FunctionTable.register`).
   */
 object Tables {
   val Names: Seq[String] = Seq("region", "nation", "customer", "supplier",

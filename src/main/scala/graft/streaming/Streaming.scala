@@ -391,7 +391,6 @@ object Streaming {
     graft.relational.TemporalJoins.requireFree("streamAnnEnrich", queries,
       "bucket", "__qv", "__qu", "__cands", "__top", "rank", "nn_vec_id",
       "cosine")
-    graft.functions.VectorFunctions.ensureRegistered(index.sparkSession)
     val packed = Similarity.withUnitVec(
         index.select(col("vec_id"),
           Similarity.toDoubleVec(col("embedding")).as("v")), "v")

@@ -249,7 +249,6 @@ object TextAnalysis {
     * expression, joined back per doc — map-side combine keeps the shuffles
     * at (doc, partial) size. */
   def repetitionStats(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val toksOf = docs.select(col("doc_id"), Tokenize.tokens(col("text")).as("t"))
     // Round-9 (guide §1.2 step 1): the trigram fraction is a PER-ROW
     // quantity — 1 - |distinct trigrams|/|trigrams| — i.e. two array
@@ -539,7 +538,6 @@ object TextAnalysis {
     * vocabulary). ln noise is 1 ulp per term, averaged over the doc —
     * invisible at round(4). */
   def bigramLmScores(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val occ = docs.select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"),
         explode(graft.functions.TextFunctions.bigrams(col("t"))).as("bigram"))
@@ -574,7 +572,6 @@ object TextAnalysis {
     * the average — the same two-exchange shape as the self-LM. */
   def crossLmScores(docs: DataFrame, refSource: String,
                     smoothK: Double = 1.0): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val occ = docs.select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"),
         explode(graft.functions.TextFunctions.bigrams(col("t"))).as("bigram"))
@@ -612,7 +609,6 @@ object TextAnalysis {
     * interpreted HOF spelling (transform+element_at, kept as the semantic
     * reference in FunctionsSpec) was this query's dominant cost. */
   def topBigrams(docs: DataFrame, k: Int = 20): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     docs.select(toks.as("t"))
       .select(explode(graft.functions.TextFunctions.bigrams(col("t"))).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("n"))
@@ -839,7 +835,6 @@ object TextAnalysis {
   def sparseCosineNeighbors(docs: DataFrame, m: Int = 3, k: Int = 5,
                             maxFeatureDf: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val occ = docs.select(col("doc_id"), explode(
       graft.functions.TextFunctions.bigrams(toks)).as("term"))
     val tf = occ.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1324,7 +1319,6 @@ object TextAnalysis {
     * the average. Nothing is ever keyed by the full corpus vocabulary. */
   def stupidBackoffScores(docs: DataFrame, refSource: String,
                           alpha: Double = 0.4): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val tf = graft.functions.TextFunctions
     val occ = docs.select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"), explode(tf.shingles(col("t"), 3)).as("tri"))
@@ -1652,7 +1646,6 @@ object TextAnalysis {
     * (same argument as sharedNgramStats). */
   def ngramNovelty(docs: DataFrame, refSource: String = "src0",
                    n: Int = 3): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val grams = docs.select(col("doc_id"), col("source"),
       explode(array_distinct(
         graft.functions.TextFunctions.shingles(toks, n))).as("g"))
@@ -1743,7 +1736,6 @@ object TextAnalysis {
     // adjacency straight from the codegen bigram pass (tokens cannot
     // contain spaces, so the split is lossless) — scan-shaped, no
     // (doc, pos) self-join
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     val e0 = docs
       .select(explode(graft.functions.TextFunctions.bigrams(toks)).as("bg"))
       .select(split(col("bg"), " ").getItem(0).as("t"),

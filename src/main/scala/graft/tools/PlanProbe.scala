@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -10,21 +9,14 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * plan tree with each node's nonzero spill/shuffle/rows/memory metrics.
   * This is how per-node spill is localized (graft.Bench only reports
   * whole-plan totals): `runMain graft.tools.PlanProbe <query> <sfDir>`.
-  * Env knobs match Bench: SPARK_GRAFT_CPUS, SPARK_GRAFT_MAX_PART_BYTES.
+  * The session is `graft.Cli.session()`, configured like every other
+  * entry point.
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "134217728"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Cli.session()
     val qeRef = new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.execution.QueryExecution](null)
     spark.listenerManager.register(
@@ -59,22 +51,13 @@ object PlanProbe {
     graft.SparkEntry.queries(name)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     val sec = (System.nanoTime() - t0) / 1e9
-    var waited = 0
-    while (qeRef.get() == null && waited < 4000) { Thread.sleep(20); waited += 20 }
-    // drain the async listener bus before reading the job queue (round-9
-    // advice: the last jobs of a query could be missing from the
-    // timeline): poll until the queue stops growing (the bus API is
-    // private[spark]). Lines are then sorted by jobId —
-    // ConcurrentLinkedQueue order is completion order, which interleaves
-    // for concurrent jobs. Timings remain listener-bus-delayed
+    // drain the async listener bus, so the query listener has fired and
+    // the timeline holds every job of the query. Lines are then sorted by
+    // jobId — ConcurrentLinkedQueue order is completion order, which
+    // interleaves for concurrent jobs. Timings remain listener-bus-delayed
     // (started/ended stamps are taken on the listener thread), good to
     // ~tens of ms.
-    var lastN = -1
-    var drainWaited = 0
-    while (jobLines.size != lastN && drainWaited < 4000) {
-      lastN = jobLines.size
-      Thread.sleep(200); drainWaited += 200
-    }
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
     println(f"== $name%s on $sfDir%s: $sec%.1f s (first run, cold)")
     println("-- job timeline (wall seconds per Spark job):")
     jobLines.toArray(Array.empty[String]).sortBy(l =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -25,17 +24,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *               "state_rows":…,"state_bytes":…}}} */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "1000000").toInt
     val nKeys = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "1000").toInt
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Cli.session()
     // transformWithState requires the RocksDB state store (the
     // StreamingSpec harness config)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",

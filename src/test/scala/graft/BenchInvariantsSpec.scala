@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Runtime plan-metric pins for the most expensive bench queries (round-3
@@ -23,7 +22,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * keep cheap. dedup_clusters pins ZERO shuffles: its final frame is the
   * eagerly-checkpointed cluster table, so serving it must not re-run the
   * iteration. */
-class BenchInvariantsSpec extends SparkSpec {
+class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // The record ceilings below were measured against the harness's sf0.01
   // layout under its fixed shuffle.partitions; on another machine point
@@ -35,13 +34,8 @@ class BenchInvariantsSpec extends SparkSpec {
   private def profile(name: String): (Int, Long) = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.collect() // metrics live on THIS QueryExecution's executed plan
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan) :+ q
-      case other => other.children.flatMap(walk) :+ other
-    }
-    val shuffles = walk(df.queryExecution.executedPlan)
-      .collect { case s: ShuffleExchangeLike => s }
+    val shuffles = collect(df.queryExecution.executedPlan) {
+      case s: ShuffleExchangeLike => s }
     (shuffles.size,
       shuffles.flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value)).sum)
   }

@@ -13,8 +13,8 @@ class ContractSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("every declared query emits only scalar (checker-sortable) columns") {
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      fn(spark, dir).schema.fields.collect {
+    val offenders = SparkEntry.queries.keys.toSeq.flatMap { name =>
+      QuerySurface.schema(dir, name).fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
           f.dataType.isInstanceOf[MapType] ||
           f.dataType.isInstanceOf[StructType] ||

@@ -9,7 +9,6 @@ class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("native graft_dot is bit-identical to the HOF fold on real vectors") {
-    VectorFunctions.ensureRegistered(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
     val both = e.select(
@@ -19,7 +18,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_dot propagates nulls and rejects dimension mismatch") {
-    VectorFunctions.ensureRegistered(spark)
     val ok = Seq(
       (Some(Array(1.0, 2.0, 3.0)), Some(Array(4.0, 5.0, 6.0))),
       (None, Some(Array(1.0))),
@@ -40,7 +38,6 @@ class FunctionsSpec extends SparkSpec {
   test("graft_unit equals the built-in normalize spelling elementwise") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(Similarity.toDoubleVec(col("embedding")).as("v"))
-    VectorFunctions.ensureRegistered(spark)
     val both = e.select(
       VectorFunctions.unit(col("v")).as("native"),
       transform(col("v"), x => x / sqrt(Similarity.dotHof(col("v"), col("v"))))
@@ -49,7 +46,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native graft_bigrams equals the HOF spelling on the real corpus") {
-    graft.functions.TextFunctions.ensureRegistered(spark)
     val t = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(graft.text.Tokenize.tokens(col("text")).as("t"))
     val hof = transform(
@@ -67,7 +63,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native graft_shingles equals the HOF spelling for n=2..4") {
-    graft.functions.TextFunctions.ensureRegistered(spark)
     val t = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(graft.text.Tokenize.tokens(col("text")).as("t"))
     (2 to 4).foreach { n =>
@@ -114,7 +109,6 @@ class FunctionsSpec extends SparkSpec {
     // the composed form is exactly what the DuckDB oracles replay
     // (per-plane literal-coefficient dot, ascending-dim fold, >= 0 bit);
     // the native kernel must be bit-identical to it
-    VectorFunctions.ensureRegistered(spark)
     val dims = 64; val planes = 6; val bands = 8
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
@@ -132,7 +126,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_lsh_buckets: single-band extraction, offsets, nulls, mismatch") {
-    VectorFunctions.ensureRegistered(spark)
     val dims = 64; val planes = 8
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(Similarity.toDoubleVec(col("embedding")).as("v"))
@@ -159,7 +152,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_lsh_buckets runs inside a whole-stage-codegen region") {
-    VectorFunctions.ensureRegistered(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
     val df = e.select(posexplode(
@@ -176,7 +168,6 @@ class FunctionsSpec extends SparkSpec {
     // the HOF form is the original implementation (per subspace:
     // transform over codewords -> zip_with difference -> dot, argmin by
     // keep-first aggregate); the native kernels must be bit-identical
-    VectorFunctions.ensureRegistered(spark)
     import graft.functions.PqFunctions
     val nSub = 8; val subLen = 8
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

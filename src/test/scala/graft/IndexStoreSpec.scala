@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import graft.index.{IndexStore, InvertedIndex}
 import graft.rank.BM25
-import org.apache.spark.TestListenerBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
@@ -129,7 +129,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         }
     }
     def jobs(): Map[Int, Int] = {
-      TestListenerBus.drain(sc)
+      GraftListenerBus.drain(sc)
       jobTasks.synchronized(jobTasks.toMap)
     }
     sc.addSparkListener(listener)

@@ -9,8 +9,7 @@ class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+  private def plan(name: String): String = QuerySurface.plan(dir, name)
 
   test("filter+projection push into the parquet scan") {
     val p = plan("rel_filter_project")

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 import graft.dedup.Dedup
@@ -39,7 +38,7 @@ import graft.tools.MakeScaled
   * artifact (BASELINE.md scaling table), which the round process
   * regenerates. The structural pins below are the quantities that
   * PREDICT that table. */
-class ScalingInvariantsSpec extends SparkSpec {
+class ScalingInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir =
     sys.env.getOrElse("GRAFT_TESTDATA", "/root/testdata") + "/sf0.01"
@@ -56,13 +55,8 @@ class ScalingInvariantsSpec extends SparkSpec {
   /** (row count, total shuffle records written) of one run. */
   private def profile(df: DataFrame): (Long, Long) = {
     val n = df.count()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan) :+ q
-      case other => other.children.flatMap(walk) :+ other
-    }
-    val recs = walk(df.queryExecution.executedPlan)
-      .collect { case s: ShuffleExchangeLike => s }
+    val recs = collect(df.queryExecution.executedPlan) {
+        case s: ShuffleExchangeLike => s }
       .flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value)).sum
     (n, recs)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.VectorFunctions
+import graft.functions.FunctionTable
 import graft.sql.Tables
 
 /** The spark.sql(...) surface over registered views + native functions. */
@@ -17,7 +17,7 @@ class SqlSpec extends SparkSpec {
 
   test("native functions are callable from SQL") {
     Tables.register(spark, "/root/testdata/sf0.001")
-    VectorFunctions.ensureRegistered(spark)
+    FunctionTable.register(spark)
     val row = spark.sql(
       """SELECT vec_id, graft_dot(graft_unit(embedding), graft_unit(embedding)) AS c
         |FROM embeddings ORDER BY vec_id LIMIT 1""".stripMargin).collect().head
@@ -25,7 +25,7 @@ class SqlSpec extends SparkSpec {
   }
 
   test("graft_bigrams is callable from SQL, null tokens included") {
-    graft.functions.TextFunctions.ensureRegistered(spark)
+    FunctionTable.register(spark)
     val out = spark.sql(
       "SELECT graft_bigrams(array('a', 'b', 'c')) AS bg").collect().head
     assert(out.getSeq[String](0) == Seq("a b", "b c"))

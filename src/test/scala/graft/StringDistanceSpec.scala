@@ -44,7 +44,6 @@ class StringDistanceSpec extends SparkSpec {
   test("the registered expression scores columns inside codegen") {
     val df = Seq(("martha", "marhta"), ("ab", "ba"), ("", ""))
       .toDF("a", "b")
-    StringDistanceFunctions.ensureRegistered(spark)
     val got = df.select(
         StringDistanceFunctions.jaroWinkler(col("a"), col("b")).as("jw"))
       .as[Double].collect().toSeq
@@ -116,7 +115,6 @@ class StringDistanceSpec extends SparkSpec {
 
   test("banded levenshtein column: parity with built-in levenshtein " +
     "under the threshold filter, inside codegen") {
-    StringDistanceFunctions.ensureRegistered(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(substring(regexp_replace(lower(col("text")),
         "[^\\x00-\\x7F]", ""), 1, 64).as("p"), col("doc_id"))
