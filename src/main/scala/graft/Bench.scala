@@ -98,7 +98,7 @@ object Bench extends AdaptiveSparkPlanHelper {
       }
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // One shared index build, timed as its own row: the four stored
+    // One shared index build, timed as its own row: the five stored
     // queries then report SERVE-ONLY latency instead of each paying a
     // full 5-table rebuild (round-3 verdict finding #2). Skipped when a
     // name filter selects no stored query. Reported as "build_sec"

@@ -33,1345 +33,57 @@ object SparkEntry {
 
   val FlagshipQuery = "spark join window"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  type Plan = (SparkSession, String) => DataFrame
+
+  /** One declared query: its plan over a fixture dir, its DuckDB oracle SQL
+    * (None only for the hash-typed rows-only queries, which the driver
+    * checks for rows alone), and, for a stored query, its serve-only twin. */
+  final case class Q(name: String, plan: Plan, oracle: Option[String],
+      served: Option[Plan])
+
+  private def query(name: String, plan: Plan, oracle: String): Q =
+    Q(name, plan, Some(oracle), None)
+
+  private def rowsOnly(name: String, plan: Plan): Q = Q(name, plan, None, None)
+
+  /** A query served from the stored index. Its plan writes the store, then
+    * serves: stored ≡ recompute against the oracle is the correctness claim
+    * Verify relies on. Its twin serves an already-built store (Bench). */
+  private def stored(name: String, serve: (SparkSession, String) => DataFrame,
+      oracle: String): Q =
+    Q(name, (s, dir) => { buildIndexStore(s, dir); serve(s, indexPath(s, dir)) },
+      Some(oracle), Some((s, dir) => serve(s, indexPath(s, dir))))
+
+  /** Every declared query, once, by family. The driver contract's three maps
+    * below derive from it, so a plan, its oracle and its serve-only twin
+    * cannot drift apart. Lazy, like the maps: several oracles read helper
+    * vals declared further down, which a strict val here would read as null. */
+  lazy val registry: Seq[Q] = distinctNames(Seq(
     // ---- reference parity: inverted index (SURVEY §2.4 A1-A5) ----
-    "idx_term_frequency" -> ((s, dir) =>
+    query("idx_term_frequency", (s, dir) =>
       InvertedIndex.termFrequency(table(s, dir, "documents"))
-        .orderBy("doc_id", "term")),
-    "idx_doc_frequency" -> ((s, dir) =>
+        .orderBy("doc_id", "term"),
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents)
+        |SELECT doc_id, term, count(*) AS term_frequency
+        |FROM tok GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin),
+    query("idx_doc_frequency", (s, dir) =>
       InvertedIndex.docFrequency(table(s, dir, "documents"))
-        .orderBy("term")),
+        .orderBy("term"),
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+        |d AS (SELECT DISTINCT doc_id, term FROM tok)
+        |SELECT term, count(*) AS doc_frequency FROM d GROUP BY term ORDER BY term""".stripMargin),
     // what the index STORES at 100 TB: block-local delta + varint
     // postings size per term (absolute block heads keep blocks skippable,
     // and bound the lag() window partitions on stopword lists)
-    "idx_postings_compressed" -> ((s, dir) =>
-      InvertedIndex.postingsCompression(table(s, dir, "documents"))),
+    query("idx_postings_compressed", (s, dir) =>
+      InvertedIndex.postingsCompression(table(s, dir, "documents")),
+      postingsCompressionOracleSql),
     // phrase search over positional postings: consecutive-position
     // adjacency joins, one (doc_id, start-pos) partitioning for the chain
-    "idx_phrase_match" -> ((s, dir) =>
-      InvertedIndex.phraseMatch(table(s, dir, "documents"), "row column sort")),
-    // result snippets: context window around the first phrase occurrence;
-    // only matching docs are re-tokenized for rendering
-    "idx_phrase_snippets" -> ((s, dir) =>
-      InvertedIndex.phraseSnippets(table(s, dir, "documents"),
-        "row column sort", 3)),
-    // proximity search: banded-position candidate join (dup-free 3-band),
-    // never a per-doc position cross product
-    "idx_proximity_match" -> ((s, dir) =>
-      InvertedIndex.proximityMatch(table(s, dir, "documents"),
-        "spark", "join", 8)),
-    // phrase search SERVED from the stored positional table — each term
-    // reads only its hash bucket; stored ≡ recompute is the claim
-    "idx_phrase_stored" -> ((s, dir) => {
-      val idx = indexPath(s, dir)
-      IndexStore.write(table(s, dir, "documents"), idx)
-      IndexStore.phraseMatchStored(s, idx, "row column sort")
-    }),
-    // proximity, same stored serving path (reuses the already-written
-    // store when it runs after idx_phrase_stored in the same session)
-    "idx_proximity_stored" -> ((s, dir) => {
-      val idx = indexPath(s, dir)
-      IndexStore.write(table(s, dir, "documents"), idx)
-      IndexStore.proximityMatchStored(s, idx, "spark", "join", 8)
-    }),
-    "idx_doc_info" -> ((s, dir) =>
-      InvertedIndex.docInfo(table(s, dir, "documents"))
-        .orderBy("doc_id")),
-    "idx_corpus_info" -> ((s, dir) =>
-      InvertedIndex.corpusInfo(table(s, dir, "documents"))
-        .select(col("doc_n"), col("total_doc_length"),
-          round(col("avg_doc_length"), 4).as("avg_doc_length"))),
-    // ---- reference parity: BM25 ranking (SURVEY §2.5, §2.7, A6-A7, O1) ----
-    "bm25_search" -> ((s, dir) =>
-      BM25.search(s, table(s, dir, "documents"), FlagshipQuery)),
-    // bounded wildcard: each token expands against the VOCABULARY
-    // (df-capped, highest-df first), then the plain exact scoring chain
-    "bm25_prefix_search" -> ((s, dir) =>
-      BM25.searchPrefix(s, table(s, dir, "documents"), "s qu")),
-    // serving-side highlights for the flagship page: per top-10 doc, the
-    // 15-token window with the most distinct query terms (hit-anchored —
-    // lossless; extraction touches only the k ranked docs)
-    "bm25_snippets" -> ((s, dir) =>
-      BM25.searchSnippets(s, table(s, dir, "documents"), FlagshipQuery)),
-    // did-you-mean: per misspelled query term, top-3 vocabulary terms
-    // within edit distance 2 ranked by (dist, df DESC) — vocabulary-sized
-    // compare behind a lossless length-band prefilter
-    "bm25_spell_suggest" -> ((s, dir) =>
-      BM25.spellSuggest(s, table(s, dir, "documents"), "spak joinn windoe")),
-    // S9: all-OOV query must yield empty result with intact schema, not fail.
-    "bm25_oov" -> ((s, dir) =>
-      BM25.search(s, table(s, dir, "documents"), "zzzznotaword qqqqnotaword")),
-    // impact-ordered champion lists: per-term top-5 postings by tf — the
-    // static pruning that bounds per-term serve cost regardless of df
-    "idx_champion_lists" -> ((s, dir) =>
-      InvertedIndex.championLists(table(s, dir, "documents"), 5)
-        .orderBy("term", "impact_rank")),
-    // BM25 served from champion lists (m=10): candidates bounded at
-    // |terms|*m, scores exact for every surviving doc
-    "bm25_champion" -> ((s, dir) =>
-      BM25.searchChampions(s, table(s, dir, "documents"), FlagshipQuery, 10)),
-    // WAND/MaxScore-style bound-then-verify: EXACT top-10 (oracle = the
-    // plain exact chain) with the scoring tail run on pruned candidates
-    "bm25_wand" -> ((s, dir) =>
-      BM25.searchWand(s, table(s, dir, "documents"), "hash merge stream")),
-    // Block-max WAND: per-(term, block) max-tf caps skip WHOLE postings
-    // blocks below θ; EXACT top-10 (oracle = the plain exact chain)
-    "bm25_block_max" -> ((s, dir) =>
-      BM25.searchBlockMax(s, table(s, dir, "documents"), "hash merge stream")),
-    // Batch multi-query form: many queries, one tf build, windowed top-k.
-    "bm25_multi" -> ((s, dir) => {
-      import s.implicits._
-      val qs = Seq((1L, "spark join window"), (2L, "batch stream"))
-        .toDF("query_id", "query")
-      BM25.searchMany(s, table(s, dir, "documents"), qs)
-    }),
-    // A8 incremental indexing: merge(tf(old), newDocs) must equal the full
-    // recompute — the oracle is simply the full-corpus tf.
-    "idx_incremental_merge" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      InvertedIndex.mergeTermFrequency(
-        InvertedIndex.termFrequency(docs.filter(col("doc_id") < 250)),
-        docs.filter(col("doc_id") >= 250))
-        .orderBy("doc_id", "term")
-    }),
-
-    // ---- relational surface (SURVEY §7.3 step 2) ----
-    "rel_pricing_summary" -> ((s, dir) =>
-      Relational.pricingSummary(table(s, dir, "lineitem"), "1998-09-01")),
-    "rel_filter_project" -> ((s, dir) =>
-      Relational.filterProject(table(s, dir, "lineitem"))),
-    "rel_revenue_by_segment" -> ((s, dir) =>
-      Relational.revenueBySegment(table(s, dir, "orders"), table(s, dir, "customer"))),
-    "rel_local_supplier_revenue" -> ((s, dir) =>
-      Relational.localSupplierRevenue(table(s, dir, "customer"),
-        table(s, dir, "orders"), table(s, dir, "lineitem"),
-        table(s, dir, "supplier"), table(s, dir, "nation"),
-        table(s, dir, "region"), "ASIA", "1996-01-01", "1998-01-01")),
-    "rel_volume_by_brand" -> ((s, dir) =>
-      Relational.volumeByBrand(table(s, dir, "lineitem"), table(s, dir, "part"))),
-    "rel_semi_join" -> ((s, dir) =>
-      Relational.bigSpenders(table(s, dir, "customer"), table(s, dir, "orders"), 450000.0)),
-    "rel_anti_join" -> ((s, dir) =>
-      Relational.dormantCustomers(table(s, dir, "customer"), table(s, dir, "orders"), "2001-01-01")),
-    "rel_outer_join_agg" -> ((s, dir) =>
-      Relational.orderCountsIncludingIdle(table(s, dir, "customer"),
-        table(s, dir, "orders"), "2001-01-01")),
-    "rel_distinct" -> ((s, dir) =>
-      Relational.distinctFlagStatus(table(s, dir, "lineitem"))),
-    "rel_union_all" -> ((s, dir) =>
-      Relational.urgentOrHighUnion(table(s, dir, "orders"))),
-    "rel_intersect" -> ((s, dir) =>
-      Relational.buildingBigSpenders(table(s, dir, "customer"), table(s, dir, "orders"), 300000.0)),
-    "rel_except" -> ((s, dir) =>
-      Relational.neverUrgent(table(s, dir, "customer"), table(s, dir, "orders"))),
-    "rel_full_outer_join" -> ((s, dir) =>
-      Relational.urgentVsHighSpendFullOuter(table(s, dir, "orders"))),
-    "rel_intersect_all" -> ((s, dir) =>
-      Relational.urgentVsHighIntersectAll(table(s, dir, "orders"))),
-    "rel_except_all" -> ((s, dir) =>
-      Relational.urgentVsHighExceptAll(table(s, dir, "orders"))),
-    // TPC-H Q17 shape: correlated per-part average decorrelated to
-    // aggregate + join-back; threshold compared in exact decimal space
-    "rel_small_qty_revenue" -> ((s, dir) =>
-      Relational.smallQuantityRevenue(table(s, dir, "lineitem"),
-        table(s, dir, "part"), "Brand#1")),
-    // TPC-H Q18 shape: HAVING-IN subquery decorrelated into one
-    // restrict-and-carry per-order aggregate before any dim join
-    "rel_big_orders" -> ((s, dir) =>
-      Relational.largeOrders(table(s, dir, "lineitem"),
-        table(s, dir, "orders"), table(s, dir, "customer"))),
-    "rel_topk" -> ((s, dir) =>
-      Relational.topOrders(table(s, dir, "orders"), 10)),
-    "rel_window_rank" -> ((s, dir) =>
-      Relational.topOrdersPerCustomer(table(s, dir, "orders"), 3)),
-    "rel_window_running_sum" -> ((s, dir) =>
-      Relational.runningSpend(table(s, dir, "orders"))),
-    "rel_window_lag" -> ((s, dir) =>
-      Relational.daysBetweenOrders(table(s, dir, "orders"))),
-    "rel_rollup" -> ((s, dir) =>
-      Relational.rollupFlagStatus(table(s, dir, "lineitem"))),
-    "rel_count_distinct" -> ((s, dir) =>
-      Relational.customersPerPriority(table(s, dir, "orders"))),
-    "rel_case_agg" -> ((s, dir) =>
-      Relational.discountedRevenueByFlag(table(s, dir, "lineitem"))),
-    "rel_scalar_subquery" -> ((s, dir) =>
-      Relational.aboveAveragePerPriority(table(s, dir, "orders"))),
-    // correlated EXISTS (TPC-H Q4 shape): decorrelates to one semi-join
-    "rel_exists_subquery" -> ((s, dir) =>
-      Relational.latePriorityCounts(table(s, dir, "orders"),
-        table(s, dir, "lineitem"))),
-    // grouped HAVING / IN-subquery (Q18 shape): aggregate-then-join-back
-    "rel_having" -> ((s, dir) =>
-      Relational.bigQuantityOrders(table(s, dir, "orders"),
-        table(s, dir, "lineitem"))),
-    // global total-order sort: RangePartitioning exchange (PlanSpec pins
-    // that the sort is distributed, not a single-partition collapse)
-    "rel_global_sort" -> ((s, dir) =>
-      Relational.ordersByPriceDesc(table(s, dir, "orders"))),
-    // correlated scalar subquery (Q2 min-per-group), collapsed to a
-    // single-pass struct-min aggregation — no join-back
-    "rel_argmin_order" -> ((s, dir) =>
-      Relational.cheapestOrderPerCustomer(table(s, dir, "orders"))),
-    // typed Aggregator UDAF (Welford/Chan moments): monthly price profile —
-    // see Relational.monthlyPriceProfile for the cross-engine comparison
-    // rationale (exact decimal mean/stddev, UDAF n/min/max)
-    "rel_welford_stats" -> ((s, dir) =>
-      Relational.monthlyPriceProfile(table(s, dir, "orders"))),
-    // TPC-H Q10 shape: star join, fact aggregated before the dim join,
-    // top-k on exact decimal revenue
-    "rel_returned_items" -> ((s, dir) =>
-      Relational.returnedItemReport(table(s, dir, "customer"),
-        table(s, dir, "orders"), table(s, dir, "lineitem"),
-        table(s, dir, "nation"), "1995-03-01", "1995-06-01")),
-    // TPC-H Q15 shape: max over an aggregated view, exact-decimal compare
-    "rel_top_supplier" -> ((s, dir) =>
-      Relational.topSupplierRevenue(table(s, dir, "supplier"),
-        table(s, dir, "lineitem"), "1996-01-01", "1996-04-01")),
-    // TPC-H Q6 shape: pure scan-filter into one global aggregate
-    "rel_revenue_delta" -> ((s, dir) =>
-      Relational.discountRevenueDelta(table(s, dir, "lineitem"),
-        "1996-01-01", "1997-01-01")),
-    // deterministic MODE (argmax-of-count with pinned tie-break)
-    "rel_mode_priority" -> ((s, dir) =>
-      Relational.modalPriorityPerSegment(table(s, dir, "customer"),
-        table(s, dir, "orders"))),
-    // 2-D skyline (Pareto frontier) as distributed prefix-min over the
-    // price order — never the definitional O(n^2) dominance self-join
-    "rel_skyline" -> ((s, dir) =>
-      Relational.skyline2d(table(s, dir, "part"))),
-    // TPC-H Q2 shape: correlated min-cost scalar subquery decorrelated
-    // into a min-agg + equi-join; lineitem pre-aggregated to offer grain
-    // before any join, dimensions broadcast
-    "rel_min_cost_supplier" -> ((s, dir) =>
-      Relational.minCostSupplier(table(s, dir, "lineitem"),
-        table(s, dir, "supplier"), table(s, dir, "nation"),
-        table(s, dir, "region"), table(s, dir, "part"))),
-    // incremental view maintenance: signed-delta algebra folds a
-    // deterministic delete/update/insert batch into the stored GROUP BY
-    // view (delta aggregated to group grain, broadcast merge); the
-    // oracle recomputes the post-delta view from scratch
-    "rel_ivm_groupby" -> ((s, dir) =>
-      graft.relational.Ivm.ivmGroupBy(table(s, dir, "orders"))),
-    // TPC-H Q21 shape: double-correlated EXISTS/NOT EXISTS decorrelated
-    // to one keyed aggregate + same-key window sums
-    "rel_sole_late_supplier" -> ((s, dir) =>
-      Relational.soleLateSupplier(table(s, dir, "supplier"),
-        table(s, dir, "orders"), table(s, dir, "lineitem"))),
-    // TPC-H Q7 shape: bilateral nation trade volume by ship year
-    "rel_nation_trade" -> ((s, dir) =>
-      Relational.nationTradeVolume(table(s, dir, "lineitem"),
-        table(s, dir, "orders"), table(s, dir, "customer"),
-        table(s, dir, "supplier"), table(s, dir, "nation"),
-        "NATION_1", "NATION_2")),
-    // TPC-H Q8 shape: one nation's share of a region's part-type revenue
-    "rel_market_share" -> ((s, dir) =>
-      Relational.marketShare(table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), table(s, dir, "supplier"),
-        table(s, dir, "part"), table(s, dir, "nation"),
-        table(s, dir, "region"), "STANDARD", "ASIA", "NATION_1")),
-    // TPC-H Q13 shape: aggregate-of-aggregate order-count histogram
-    "rel_order_count_dist" -> ((s, dir) =>
-      Relational.orderCountDistribution(table(s, dir, "customer"),
-        table(s, dir, "orders"), "1-URGENT")),
-    // TPC-H Q14 shape: conditional-aggregate promo revenue ratio
-    "rel_promo_revenue" -> ((s, dir) =>
-      Relational.promoRevenue(table(s, dir, "lineitem"), table(s, dir, "part"),
-        "1997-03-01", "1997-04-01")),
-    // TPC-H Q16 shape: distinct-supplier counts with NOT-IN denylist
-    "rel_supplier_variety" -> ((s, dir) =>
-      Relational.supplierVariety(table(s, dir, "lineitem"),
-        table(s, dir, "part"), table(s, dir, "supplier"), "Brand#9",
-        Seq(1, 5, 10, 15, 20, 25, 30, 35))),
-    // TPC-H Q19 shape: OR-of-ANDs join predicate with per-side pushdown
-    "rel_disjunctive_join" -> ((s, dir) =>
-      Relational.disjunctiveRevenue(table(s, dir, "lineitem"),
-        table(s, dir, "part"))),
-    // TPC-H Q20 shape: share-of-part-total threshold via reused window
-    "rel_excess_share" -> ((s, dir) =>
-      Relational.excessShareSuppliers(table(s, dir, "lineitem"),
-        table(s, dir, "part"), table(s, dir, "supplier"),
-        table(s, dir, "nation"), "NATION_11", "small", 10)),
-    // TPC-H Q22 shape: scalar mean threshold + anti-join, by segment
-    "rel_idle_capital" -> ((s, dir) =>
-      Relational.idleCapital(table(s, dir, "customer"),
-        table(s, dir, "orders"), "2001-01-01")),
-    // TPC-H Q9 shape (partsupp-free adaptation): profit by nation x year,
-    // one decimal pass for revenue - cost, dims pruned-then-broadcast
-    "rel_product_profit" -> ((s, dir) =>
-      Relational.productProfit(table(s, dir, "lineitem"),
-        table(s, dir, "orders"), table(s, dir, "supplier"),
-        table(s, dir, "part"), table(s, dir, "nation"), "widget")),
-    "rel_cube" -> ((s, dir) =>
-      Relational.cubeFlagStatus(table(s, dir, "lineitem"))),
-    "rel_date_parts" -> ((s, dir) =>
-      Relational.ordersByYearMonth(table(s, dir, "orders"))),
-    "rel_string_funcs" -> ((s, dir) =>
-      Relational.customerNameFacts(table(s, dir, "customer"))),
-    "rel_median" -> ((s, dir) =>
-      Relational.medianPricePerPriority(table(s, dir, "orders"))),
-    "rel_grouping_sets" -> ((s, dir) =>
-      Relational.groupingSetsFlagStatus(table(s, dir, "lineitem"))),
-    "rel_window_ntile" -> ((s, dir) =>
-      Relational.priceQuartilesPerPriority(table(s, dir, "orders"))),
-    "rel_shipping_priority" -> ((s, dir) =>
-      Relational.shippingPriority(table(s, dir, "customer"),
-        table(s, dir, "orders"), table(s, dir, "lineitem"),
-        "BUILDING", "2000-03-15")),
-    "rel_window_first_last" -> ((s, dir) =>
-      Relational.firstLastPerCustomer(table(s, dir, "orders"))),
-    "rel_price_histogram" -> ((s, dir) =>
-      Relational.priceHistogram(table(s, dir, "orders"))),
-    // the pre-flight report BEHIND the salting decision: key-multiplicity
-    // deciles from the count-of-counts histogram — never an ntile over
-    // the key domain (single-partition-window hazard at scale)
-    "rel_skew_deciles" -> ((s, dir) =>
-      graft.relational.LayoutAnalysis.keySkewDeciles(table(s, dir, "orders"),
-        "o_custkey")),
-    // Z-order vs natural layout: files a min/max-pruned scan touches per
-    // range box under each layout — the Delta/Iceberg Z-clustering
-    // arithmetic, exact (file assignment by address RANGE, no global sort)
-    "rel_zorder_skipping" -> ((s, dir) =>
-      graft.relational.LayoutAnalysis.zorderSkipping(table(s, dir, "lineitem"))),
-    // small-file compaction plan: running-sum contiguous binning of the
-    // day-grain file inventory — order-preserving, metadata-sized
-    "rel_compaction_plan" -> ((s, dir) =>
-      graft.relational.LayoutAnalysis.compactionPlan(table(s, dir, "events"))),
-    // skew-safe two-phase aggregation: content-derived salts bound the
-    // per-reducer key cardinality; decimal values make the two-phase sum
-    // exact, so the oracle is the plain GROUP BY.
-    "rel_salted_agg" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-        .withColumn("q", col("l_quantity").cast("decimal(18,2)"))
-      graft.relational.Skew.saltedCountSum(li, "l_returnflag", "q", 8)
-        .select(col("l_returnflag"), col("n"),
-          col("total").cast("double").as("total"))
-        .orderBy("l_returnflag")
-    }),
-    // pre-planned salted join (the AQE-independent skew weapon): hot keys
-    // spread over `salts` reducers, small side replicated salts times. No
-    // false/lost matches by construction, so the oracle is the plain join.
-    "rel_salted_join" -> ((s, dir) => {
-      val small = table(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-      graft.relational.Skew.saltedJoin(table(s, dir, "orders"), small,
-          "o_custkey", 8)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-        .orderBy("c_mktsegment")
-    }),
-    // bucketed co-location: one-time bucket write, then a shuffle-free
-    // join (BucketingSpec pins zero Exchange); results equal the plain
-    // join, which is the oracle.
-    "rel_bucketed_join" -> ((s, dir) => {
-      // applicationId in the path: two concurrent harness processes on the
-      // same sfDir must not overwrite each other's bucket files mid-read
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        "graft_buckets_" + s.sparkContext.applicationId +
-          "_" + Integer.toHexString(dir.hashCode))
-      graft.relational.Bucketing.writeBucketed(table(s, dir, "orders"),
-        "graft_b_orders", "o_custkey", 16, Some(s"$base/orders"))
-      graft.relational.Bucketing.writeBucketed(
-        table(s, dir, "customer").select("c_custkey", "c_mktsegment"),
-        "graft_b_customer", "c_custkey", 16, Some(s"$base/customer"))
-      graft.relational.Bucketing.coLocatedJoin(s,
-          "graft_b_orders", "graft_b_customer", "o_custkey", "c_custkey")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-        .orderBy("c_mktsegment")
-    }),
-    // bloom runtime filter: big side pre-filtered by a literal-embedded
-    // bloom of the dim keys BEFORE its shuffle; no false negatives, so the
-    // result — and the oracle — is exactly the plain join.
-    "rel_bloom_join" -> ((s, dir) => {
-      val cust = table(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      graft.relational.RuntimeFilters
-        .bloomPrefilteredJoin(table(s, dir, "orders"), "o_custkey", cust, "c_custkey")
-        .groupBy("c_custkey")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("spent"))
-        .orderBy("c_custkey")
-    }),
-    // blocked fuzzy record linkage: md5-perturbed listing feed matched
-    // back to the catalog by the Jaro-Winkler codegen kernel — block,
-    // score, argmax; candidates bounded by (first token, brand), the
-    // feed side broadcast so the catalog never shuffles to be scored
-    "rel_fuzzy_link" -> ((s, dir) =>
-      graft.relational.EntityResolution.fuzzyLink(table(s, dir, "part"))),
-    // sorted-neighborhood catalog self-dedup: rank by title within
-    // brand, compare only rank-adjacent records (O(n*window) candidates
-    // at ANY skew — the structural guarantee blocking lacks), score
-    // with the same JW kernel
-    "rel_sorted_neighborhood" -> ((s, dir) =>
-      graft.relational.EntityResolution.sortedNeighborhoodPairs(
-        table(s, dir, "part"))),
-    // association mining: within-order part pairs (basket-size-bounded),
-    // support filter BEFORE the stats joins, lift from exact counts
-    "rel_basket_lift" -> ((s, dir) =>
-      Relational.basketLift(table(s, dir, "lineitem"))),
-
-    // ---- event-time surface (SURVEY §7.3 step 3, batch form) ----
-    // aggregate-then-window: trailing-24h z-score over one row per hour
-    "ev_hourly_anomaly" -> ((s, dir) =>
-      Events.hourlyAnomaly(table(s, dir, "events"))),
-    "ev_tumbling_hourly" -> ((s, dir) =>
-      Events.tumblingHourly(table(s, dir, "events"))),
-    "ev_sliding_hourly" -> ((s, dir) =>
-      Events.slidingHourly(table(s, dir, "events"))),
-    "ev_sessionize" -> ((s, dir) =>
-      Events.sessionize(table(s, dir, "events"))),
-    // peak concurrent sessions per day, sweep-line form: +1/-1 session
-    // boundaries, per-DAY running sum + one broadcast midnight carry row
-    // per day — no interval self-join, no global single-task sort
-    "ev_concurrency" -> ((s, dir) =>
-      Events.concurrencyDaily(table(s, dir, "events"))),
-    // telemetry burst dedup (keep-first within 300 s per user+type):
-    // gaps-and-islands, windows keyed (user_id, event_type); reports the
-    // collapsed bursts (the drop-list)
-    "ev_dedup_bursts" -> ((s, dir) =>
-      Events.burstDedup(table(s, dir, "events"))),
-    "ev_user_stats" -> ((s, dir) =>
-      Events.userStats(table(s, dir, "events"))),
-    "ev_daily_top_type" -> ((s, dir) =>
-      Events.dailyTopType(table(s, dir, "events"))),
-    // EWMA trend per type at alpha=0.5: every step an exact dyadic
-    // average, so both engines fold to bit-identical doubles
-    "ev_ewma_daily" -> ((s, dir) =>
-      Events.ewmaDaily(table(s, dir, "events"))),
-    "ev_props_json" -> ((s, dir) =>
-      Events.propsKSumByType(table(s, dir, "events"))),
-    "ev_funnel" -> ((s, dir) =>
-      Events.funnelCounts(table(s, dir, "events"))),
-    // sequence census: each user's first-3-event-type path, counted —
-    // one user-keyed exchange serves the rank window AND the rollup
-    "ev_funnel_paths" -> ((s, dir) =>
-      Events.topEventPaths(table(s, dir, "events"))),
-    // RFM quartile census: percentile_disc boundaries spelled as integer
-    // ceil over value HISTOGRAMS (support-bounded), users join three
-    // broadcast 1-row bound frames, <= 64 segment rows out
-    "ev_rfm_segments" -> ((s, dir) =>
-      Events.rfmSegments(table(s, dir, "events"))),
-    "ev_pivot_type_day" -> ((s, dir) =>
-      Events.typeByDayPivot(table(s, dir, "events"))),
-    "ev_transitions" -> ((s, dir) =>
-      Events.typeTransitions(table(s, dir, "events"))),
-    // stationary distribution of the type-transition chain: 3 unrolled
-    // power-iteration rounds over a TYPE-cardinality state (self-loops
-    // close terminal types so mass is conserved)
-    "ev_markov_stationary" -> ((s, dir) =>
-      Events.markovStationary(table(s, dir, "events"))),
-    // SCD Type-2 dimension build from the CDC feed: no-op collapse ->
-    // version numbers -> [valid_from, valid_to) intervals, one exchange
-    // by user_id shared by all three window passes
-    "ev_scd2" -> ((s, dir) =>
-      Events.scdType2(table(s, dir, "events"))),
-    "ev_cohort_retention" -> ((s, dir) =>
-      Events.cohortRetention(table(s, dir, "events"))),
-    // pooled retention curve + exponential-decay OLS (lambda, half-life):
-    // offset-cardinality fit frame, decimal-exact sums
-    "ev_retention_fit" -> ((s, dir) =>
-      Events.retentionDecayFit(table(s, dir, "events"))),
-    // A/B readout: md5-contract arm assignment, purchase conversion,
-    // two-proportion z on exact counts; one user-keyed agg
-    "ev_ab_test" -> ((s, dir) =>
-      Events.abTestReport(table(s, dir, "events"))),
-    // CDC changelog apply: latest-wins per user with 'error' tombstones —
-    // the compacted-topic materialization; one user-keyed window pass
-    "ev_cdc_apply" -> ((s, dir) =>
-      Events.cdcApply(table(s, dir, "events"))),
-    // calendar densification + LOCF: per-user daily purchase series over
-    // the full day spine, carry-group fill (no IGNORE NULLS dependence)
-    "ev_gap_fill" -> ((s, dir) =>
-      Events.gapFillDaily(table(s, dir, "events"))),
-    // growth accounting: DAU / new / returning / cumulative per day —
-    // the final cumulative window runs over calendar-bounded rows
-    "ev_growth_accounting" -> ((s, dir) =>
-      Events.growthAccounting(table(s, dir, "events"))),
-    // grid-bucketed spatial radius self-join over the md5-derived integer
-    // point cloud: ONE exchange by cell, 9x neighborhood on one side only,
-    // each unordered pair produced exactly once — never all-pairs
-    "ev_geo_pairs" -> ((s, dir) =>
-      graft.spatial.Spatial.radiusPairs(
-        graft.spatial.Spatial.hashPoints(table(s, dir, "events"), "user_id"),
-        "user_id", radius = 48, cell = 64)),
-    // radius-bounded kNN from the same grid join: 3 nearest per point
-    "ev_geo_knn" -> ((s, dir) =>
-      graft.spatial.Spatial.gridKnn(
-        graft.spatial.Spatial.hashPoints(table(s, dir, "events"), "user_id"),
-        "user_id", k = 3, radius = 48, cell = 64)),
-    // exact grid DBSCAN over the same points: core/border/noise roles +
-    // min-id cluster labels, border ties pinned to the smallest cluster
-    "ev_geo_dbscan" -> ((s, dir) =>
-      graft.spatial.Spatial.gridDbscan(
-        graft.spatial.Spatial.hashPoints(table(s, dir, "events"), "user_id"),
-        "user_id", eps = 48, minPts = 3, cell = 64)),
-    // watermark dry-run: replay arrival order (event_id) per shard and
-    // count what a 10-min watermark would drop — the audit behind every
-    // streaming watermark choice; parallelism = shard count, state = one
-    // running max per shard (exactly the streaming engine's own state)
-    "ev_watermark_late" -> ((s, dir) =>
-      Events.watermarkLateAudit(table(s, dir, "events"))),
-    // multi-touch attribution: last-touch + linear credit per channel in
-    // one report — ONE user-keyed window pass for last-touch, one
-    // lookback-bounded user join for linear; per-(conversion, channel)
-    // credit rounds a single double expression then sums as DECIMAL so
-    // partition order can never move the totals
-    "ev_attribution" -> ((s, dir) =>
-      Events.attribution(table(s, dir, "events"))),
-    // time-RANGE window frame: trailing-hour per-user activity
-    "ev_rolling_value" -> ((s, dir) =>
-      Events.rollingUserValue(table(s, dir, "events"))),
-    // UNPIVOT: the pivot matrix melted back to long form, zeros included
-    "ev_unpivot" -> ((s, dir) =>
-      Events.unpivotTypeByDay(table(s, dir, "events"))),
-    // FORWARD as-of: each signup gets the user's first purchase value
-    // at-or-after it (the "next event" lookup, mirror of ev_asof_signup),
-    // served by the custom plan node in its forward direction — the
-    // composition form is pinned equal in TemporalJoinsSpec
-    "ev_asof_next" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("purchase_ts"), col("value"))
-      Relational.fmtTsCols(
-        TemporalJoins.asOfJoinExecForward(signups, purchases, "user_id", "ts",
-          "purchase_ts", "value", "next_purchase_value"),
-        Seq("ts"))
-        .orderBy("event_id")
-    }),
-    // as-of join: each purchase gets the user's latest signup at-or-before it
-    "ev_asof_signup" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("signup_ts"))
-      Relational.fmtTsCols(
-        TemporalJoins.asOfJoin(purchases, signups, "user_id", "ts",
-          "signup_ts", "signup_ts", "last_signup"),
-        Seq("ts", "last_signup"))
-        .orderBy("event_id")
-    }),
-    // the SAME as-of semantics through the custom plan node
-    // (AsOfJoinNode -> AsOfJoinExec sort-merge): the DuckDB ASOF JOIN
-    // oracle proves the physical operator end-to-end, and equality with
-    // ev_asof_signup's composition form follows from the shared oracle
-    "ev_asof_exec" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("signup_ts"))
-      Relational.fmtTsCols(
-        TemporalJoins.asOfJoinExec(purchases, signups, "user_id", "ts",
-          "signup_ts", "signup_ts", "last_signup"),
-        Seq("ts", "last_signup"))
-        .orderBy("event_id")
-    }),
-    // banded range join: same-user event pairs within 5 minutes
-    "ev_range_pairs" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val a = ev.select(col("user_id"), col("event_id").as("id_a"), col("ts").as("ts_a"))
-      val b = ev.select(col("user_id"), col("event_id").as("id_b"), col("ts").as("ts_b"))
-      TemporalJoins.bandedRangeJoin(a, b, "user_id", "ts_a", "ts_b", 300)
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- dedup surface (north star: training-data pipeline) ----
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exactDuplicates(table(s, dir, "documents"))),
-    // incremental ingestion: even-id docs play the stored corpus (hash
-    // store only — no text), odd-id docs the new batch
-    "dedup_incremental_exact" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      Dedup.incrementalExactDedup(
-        docs.filter(col("doc_id") % 2 === 1),
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(md5(col("text")).as("content_hash")))
-    }),
-    // Bloom membership triage: the store compresses to a fixed-size bit
-    // set (distinct md5-derived positions — broadcastable at ANY store
-    // cardinality, the point of the structure), each batch doc probes its
-    // k positions, and the exact hash join runs alongside to label false
-    // positives. Same even/odd split as dedup_incremental_exact.
-    // The corpus has no verbatim twins (near-dups only), so the batch =
-    // odd-id docs PLUS every 50th doc replanted verbatim under a fresh id
-    // (%50==0 implies even, i.e. stored) — those replants are the true
-    // positives the triage must flag. Oracle replays the same replant.
-    "dedup_bloom_incremental" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val replants = docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 800000000L).as("doc_id"), col("text"))
-      Dedup.bloomIncrementalDedup(
-        docs.filter(col("doc_id") % 2 === 1)
-          .select("doc_id", "text").unionByName(replants),
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(md5(col("text")).as("content_hash")))
-    }),
-    "dedup_jaccard_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.05, maxShingleDf = 100)),
-    // duplication-centrality: PageRank over the same near-dup graph —
-    // ranks template hubs that a flat cluster id can't
-    "dedup_pagerank" -> ((s, dir) =>
-      Dedup.similarityPageRank(table(s, dir, "documents"), 0.05,
-        maxShingleDf = 100)),
-    // dense interior of the near-dup graph: iterative k-core peel (drop
-    // nodes with < 2 surviving neighbors until stable) — separates
-    // clique-like template farms from weak-tie stars that pairwise
-    // thresholds and PageRank both smear; per-round localCheckpoint,
-    // early-stop at the idempotent fixed point
-    "dedup_kcore" -> ((s, dir) =>
-      Dedup.kCore(table(s, dir, "documents"), 2, 0.5, maxShingleDf = 100)),
-    // graph-shape diagnostic over the same near-dup graph: per-doc
-    // triangle count + local clustering coefficient via degree-ordered
-    // wedges (each triangle materialized once at its lowest-rank vertex;
-    // out-degrees bounded O(sqrt(2m)), so hubs never explode deg^2)
-    "dedup_triangles" -> ((s, dir) =>
-      Dedup.triangleStats(table(s, dir, "documents"), 0.05,
-        maxShingleDf = 100)),
-    // Flagship 100 TB dedup: LSH band buckets generate candidates, exact
-    // Jaccard verifies. The bands are xxhash64 (not oracle-able) but the
-    // verified OUTPUT is plain Jaccard >= 0.5, which the oracle computes
-    // exactly. Band geometry (32 hashes / 16 bands): detection p = 0.99 at
-    // s = 0.5, ~1 from s >= 0.65 — the oracle equality holds on THIS
-    // corpus because its pair distribution is bimodal (planted dups at
-    // s >= 0.9, noise below 0.07; no pair sits in the p < 1 band), which
-    // DedupSpec pins. A corpus with borderline-s pairs would need wider
-    // banding or a rows-only declaration.
-    "dedup_minhash_lsh_pairs" -> ((s, dir) =>
-      Dedup.minhashLshPairs(table(s, dir, "documents"), 32, 16, 3, 0.5,
-        maxShingleDf = 100)),
-    // density-aware communities over the same near-dup graph: 3 rounds
-    // of synchronous label propagation with a deterministic modal-label
-    // tie-break — weak bridges lose the vote that CC would follow
-    "dedup_communities" -> ((s, dir) =>
-      Dedup.communities(table(s, dir, "documents"), 0.5, maxShingleDf = 100)),
-    // pairwise near-dups -> connected components -> keep/drop decision:
-    // the step that makes dedup actionable for a training corpus.
-    "dedup_clusters" -> ((s, dir) =>
-      Dedup.duplicateClusters(
-        Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.5, maxShingleDf = 100))),
-    // the keep decision per near-dup group: highest-centrality member
-    "dedup_cluster_reps" -> ((s, dir) =>
-      Dedup.clusterRepresentatives(table(s, dir, "documents"), 0.5,
-        maxShingleDf = 100)),
-    "dedup_keep_list" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      Dedup.keepList(docs, Dedup.duplicateClusters(
-        Dedup.jaccardPairs(docs, 3, 0.5, maxShingleDf = 100)))
-    }),
-    // xxhash64-based => deterministic in-engine but not SQL-oracle-able;
-    // driver records rows-only, correctness is property-tested (DedupSpec).
-    // Signature serialized to one sortable STRING cell — the driver's
-    // pandas hash-compare cannot sort ARRAY cells (round-1 checker crash).
-    "dedup_minhash_sigs" -> ((s, dir) =>
-      Dedup.minhashSignatures(table(s, dir, "documents"))
-        .select(col("doc_id"),
-          array_join(transform(col("signature"), _.cast("string")), "_")
-            .as("signature"))
-        .orderBy("doc_id")),
-    "dedup_simhash_sigs" -> ((s, dir) =>
-      Dedup.simhashSignatures(table(s, dir, "documents")).orderBy("doc_id")),
-    // banded-Hamming SimHash pair search (rows-only like the sigs:
-    // xxhash64 bit votes aren't DuckDB-expressible; DedupSpec pins the
-    // planted-dup semantics).
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(table(s, dir, "documents"), 3)),
-    // Primary embedding near-dup: banded sign-bit LSH (4 bands x 8 planes)
-    // + exact-cosine verify. The brute all-pairs generator is spec-only
-    // (round-2 review: a BroadcastNestedLoopJoin over n^2/2 pairs was the
-    // one declared query that dies at 100x scale). The oracle mirrors the
-    // banding exactly, so recall < 1 cannot cause a mismatch.
-    "dedup_embedding_pairs" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairsBanded(table(s, dir, "embeddings"), 0.4)),
-    "dedup_embedding_lsh" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairsLsh(table(s, dir, "embeddings"), 0.4)),
-    // blocked Levenshtein near-dup: record-linkage blocking bounds the
-    // self-join; distance on a fixed 64-char prefix bounds per-pair cost
-    "dedup_edit_pairs" -> ((s, dir) =>
-      Dedup.editDistancePairs(table(s, dir, "documents"))),
-    // the curation capstone: langid -> quality/repetition -> exact dedup ->
-    // near-dup keep, reported as docs dropped per stage
-    "curate_funnel" -> ((s, dir) =>
-      graft.curate.Curation.curationFunnel(table(s, dir, "documents"))),
-    // docs/tokens surviving each candidate TTR quality bar — pick the bar
-    // by its token cost; integer-exact decile bucketing, 10-row curve
-    "curate_quality_curve" -> ((s, dir) =>
-      graft.curate.Curation.qualityRetentionCurve(table(s, dir, "documents"))),
-    // per-source dedup accounting: docs/tokens kept vs removed by the
-    // near-dup keep-list (the provenance impact report published with
-    // every dedup run); one tokenize scan + one ids-only join
-    "curate_dedup_impact" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.curate.Curation.dedupImpact(docs,
-        Dedup.keepList(docs, Dedup.duplicateClusters(
-          Dedup.jaccardPairs(docs, 3, 0.5, maxShingleDf = 100))))
-    }),
-    // snapshot diff: old = ids not divisible by 3, new = ids not divisible
-    // by 7 with %5==0 texts amended — all four statuses appear (added:
-    // %3==0 ∧ %7≠0; removed: %7==0 ∧ %3≠0; changed: %5==0 in both)
-    "curate_corpus_diff" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.curate.Curation.corpusDiff(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 7 =!= 0)
-          .withColumn("text",
-            when(col("doc_id") % 5 === 0, concat(col("text"), lit(" amended")))
-              .otherwise(col("text"))))
-    }),
-    // benchmark decontamination: src0 plays the eval set, the rest of the
-    // corpus is scanned for shared trigrams
-    "dedup_contamination" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      Dedup.contaminationReport(
-        docs.filter(col("source") =!= "src0"),
-        docs.filter(col("source") === "src0"))
-    }),
-    // the semantic complement: corpus vectors cosine-close to the held-out
-    // eval slice (vec_id % 17 == 0) via the banded-LSH candidate path
-    "dedup_embedding_contamination" -> ((s, dir) =>
-      Dedup.embeddingContamination(table(s, dir, "embeddings"))),
-    // substring-level dedup report: per doc, the fraction of its 8-token
-    // windows that occur in any other doc ("how much of this doc is copy")
-    "dedup_shared_ngrams" -> ((s, dir) =>
-      Dedup.sharedNgramStats(table(s, dir, "documents"), 8)),
-    // provenance-grain contamination: distinct-trigram Jaccard +
-    // containment between every SOURCE pair (per-shingle buckets bounded
-    // by the source count, output S^2-bounded at any corpus size)
-    "dedup_source_overlap" -> ((s, dir) =>
-      Dedup.sourceOverlapMatrix(table(s, dir, "documents"))),
-    // the actual cut-list: maximal token spans covered by 8-token windows
-    // repeated verbatim in >= 2 distinct docs (round-5 verdict item #3)
-    "dedup_span_pairs" -> ((s, dir) =>
-      Dedup.duplicatedSpans(table(s, dir, "documents"), 8)),
-    // shard-boundary stitch: a's last-8 tokens == b's first-8 (ORDERED
-    // reconstruction signal near-dup/span ops don't carry); seam-keyed
-    // md5 join, df-capped on both sides
-    "dedup_boundary_stitch" -> ((s, dir) =>
-      Dedup.boundaryStitchPairs(table(s, dir, "documents"))),
-    // paragraph-grain near-dup (round-5): blank-line paragraphs (the
-    // synthetic corpus gets breaks re-materialized every 25 tokens first,
-    // like the image corpus gets real headers), then the SAME df-capped
-    // Jaccard path at paragraph keys, reported as per-doc dup fraction
-    "dedup_paragraph_frac" -> ((s, dir) =>
-      Dedup.paragraphDupFraction(
-        Dedup.withSyntheticParagraphs(table(s, dir, "documents"), 25),
-        3, 0.5, 100)),
-    // asymmetric containment dedup: |A∩B|/min(|A|,|B|) — the metric that
-    // catches a doc EMBEDDED in another (quotes, excerpts, boilerplate
-    // wrappers) where the size mismatch dilutes Jaccard to ~0.5. The
-    // corpus gets deterministic first-half excerpt docs planted first
-    // (same fixture-assembly pattern as the paragraph/image queries)
-    // because verbatim twins alone cannot distinguish the two metrics;
-    // the emitted jaccard column shows the asymmetry per pair.
-    "dedup_containment_pairs" -> ((s, dir) =>
-      Dedup.containmentPairs(
-        Dedup.withSyntheticExcerpts(table(s, dir, "documents")),
-        3, 0.9, 100)),
-    // exact line-level boilerplate removal (C4/CCNet line dedup): lines
-    // repeated verbatim in >= 3 docs drop; per-doc counts + cleaned-text
-    // hash. Header/footer chrome planted first (same fixture pattern as
-    // the excerpt/paragraph queries — the corpus has no repeated lines)
-    "dedup_line_boilerplate" -> ((s, dir) =>
-      Dedup.lineDedup(
-        Dedup.withSyntheticBoilerplate(table(s, dir, "documents")))),
-    // winnowed fingerprints (rolling-hash sketch, SIGMOD'03): the
-    // selected (pos, hash) per doc — the positional sketch a dedup
-    // pipeline stores instead of full shingle sets
-    "text_winnow_fingerprints" -> ((s, dir) =>
-      Dedup.winnowFingerprints(table(s, dir, "documents"))),
-    // near-dup pairs over the winnowed sketches — same df-capped bucket
-    // path as dedup_jaccard_pairs but on ~1/3 the rows with long keys
-    "dedup_winnow_pairs" -> ((s, dir) =>
-      Dedup.winnowPairs(table(s, dir, "documents"))),
-    // EXACT threshold-Jaccard pairs via prefix filtering (SSJoin/PPJoin):
-    // identical shingle sets collapse to a representative, then only the
-    // rarest-first sz-ceil(t*sz)+1 prefix of each set is ever bucketed —
-    // the lossless alternative to the df-cap, over the same excerpt
-    // fixture as containment (host-excerpt pairs straddle J = 0.5)
-    "dedup_prefix_jaccard" -> ((s, dir) =>
-      Dedup.prefixJaccardPairs(
-        Dedup.withSyntheticExcerpts(table(s, dir, "documents")))),
-    // content-defined chunking (LBFS/rsync family): rolling-hash
-    // boundary mask => shift-robust chunk table, scan-shaped
-    "text_cdc_chunks" -> ((s, dir) =>
-      Dedup.cdcChunks(table(s, dir, "documents"))),
-    // shared CDC chunks across docs over the excerpt fixture: the
-    // embedded copy re-derives the SAME boundaries for shared content at
-    // a different offset, so chunks align and match by md5 — the
-    // storage-dedup primitive fixed-size blocks cannot deliver
-    "dedup_cdc_shared" -> ((s, dir) =>
-      Dedup.cdcSharedChunks(
-        Dedup.withSyntheticExcerpts(table(s, dir, "documents")))),
-    // perceptual dHash near-dup over payload BYTES (8-band blocking +
-    // XOR verify): the planted one-byte-perturbed copies land at tiny
-    // Hamming distance while md5 content hashes flip completely; the
-    // oracle rebuilds every hash from hex bytes WITHOUT the banding, so
-    // the pruning is proven invisible
-    "mm_phash_pairs" -> ((s, dir) =>
-      Multimodal.phashPairs(Multimodal.fromDocuments(
-        Multimodal.withPerturbedCopies(table(s, dir, "documents"))))),
-    // perceptual-dup CLUSTERS: the phash pair graph through the shared
-    // pointer-jumped connected components — the keep/drop unit for
-    // image-style payload dedup (each perturbed copy joins its original)
-    "mm_phash_clusters" -> ((s, dir) =>
-      Dedup.duplicateClusters(
-        Multimodal.phashPairs(Multimodal.fromDocuments(
-          Multimodal.withPerturbedCopies(table(s, dir, "documents"))))
-          .select(col("media_a").as("doc_a"), col("media_b").as("doc_b")))
-        .select(col("doc_id").as("media_id"), col("cluster_id"))
-        .orderBy("media_id")),
-    // the one-row dataset card: volume + provenance breadth + integrity
-    "curate_dataset_card" -> ((s, dir) =>
-      graft.curate.Curation.datasetCard(table(s, dir, "documents"))),
-    // Deequ-style contract check over the relational feed: completeness,
-    // ranges, accepted domains, key uniqueness, referential integrity —
-    // two conditional-aggregate scans + one anti join, unpivoted
-    "curate_expectations" -> ((s, dir) =>
-      graft.curate.Curation.expectationsReport(
-        table(s, dir, "lineitem"), table(s, dir, "orders"))),
-    // temperature-scaled domain mixing: per-source token share ->
-    // alpha-flattened sampling weight + resample factor
-    "curate_source_mix" -> ((s, dir) =>
-      graft.curate.Curation.sourceMixWeights(table(s, dir, "documents"), 0.5)),
-    // epoch-annealed mix schedule: natural share -> high-quality share
-    // across 4 epochs, integer-exact interpolation (weights sum to 1
-    // before the final double cast)
-    "curate_annealing_schedule" -> ((s, dir) =>
-      graft.curate.Curation.annealingSchedule(table(s, dir, "documents"))),
-    // the mixing EXECUTOR: fill each source's alpha-weighted share of a
-    // 20k-token budget in seeded-hash order
-    "curate_budget_sample" -> ((s, dir) =>
-      graft.curate.Curation.budgetSample(table(s, dir, "documents"), 20000L)),
-    // Hamilton largest-remainder apportionment: exact-integer quotas,
-    // shares sum to EXACTLY the budget by construction
-    "curate_apportion_budget" -> ((s, dir) =>
-      graft.curate.Curation.apportionBudget(table(s, dir, "documents"))),
-    // DSIR importance weights (Xie'23): hashed-bigram log-likelihood
-    // ratio of target-slice vs raw-corpus feature distributions
-    "curate_dsir_weights" -> ((s, dir) =>
-      graft.curate.Curation.dsirWeights(table(s, dir, "documents"), "src0")),
-    // the upsampling executor: per-doc repeat counts materializing the
-    // alpha-mix recipe at a 200k-token budget (> corpus => whole epochs
-    // + a seeded-hash partial epoch)
-    "curate_epoch_plan" -> ((s, dir) =>
-      graft.curate.Curation.epochPlan(table(s, dir, "documents"), 200000L)),
-    // DoReMi-style Group-DRO reweighting: 3 mirror-ascent rounds on
-    // per-source excess loss, starting from the token-share reference
-    "curate_doremi_weights" -> ((s, dir) =>
-      graft.curate.Curation.doremiWeights(table(s, dir, "documents"))),
-    // leakage-safe split: assignment at near-dup-CLUSTER granularity over
-    // the same 0.5-Jaccard graph as dedup_clusters, so no near-dup pair
-    // can straddle train/test (the failure mode of the plain per-doc
-    // samp_hash_split on an undeduplicated corpus)
-    "curate_split_safe" -> ((s, dir) =>
-      graft.curate.Curation.leakageSafeSplit(table(s, dir, "documents"),
-        Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.5,
-          maxShingleDf = 100))),
-    // post-split audit: verbatim 8-token windows that cross the
-    // train/eval boundary BELOW the cluster threshold (what the
-    // cluster-grain split cannot prevent, reported per eval doc)
-    "curate_split_contamination" -> ((s, dir) =>
-      graft.curate.Curation.splitContamination(table(s, dir, "documents"),
-        Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.5,
-          maxShingleDf = 100))),
-
-    // ---- similarity search (north star) ----
-    "sim_cosine_topk" -> ((s, dir) =>
-      Similarity.cosineTopK(table(s, dir, "embeddings"), 0L, 10)),
-    "sim_ann_lsh" -> ((s, dir) =>
-      Similarity.annCosineLsh(table(s, dir, "embeddings"), 0L, 10)),
-    // multi-probe serving upgrade: base bucket + 3 lowest-|margin|
-    // single-bit flips, deterministic probe order on both engines
-    "sim_ann_multiprobe" -> ((s, dir) =>
-      Similarity.annCosineLshMultiProbe(table(s, dir, "embeddings"), 0L, 10)),
-    "sim_ann_ivf" -> ((s, dir) =>
-      Similarity.annCosineIvf(table(s, dir, "embeddings"), 0L, 10)),
-    "sim_norms_by_label" -> ((s, dir) =>
-      Similarity.normStatsByLabel(table(s, dir, "embeddings"))),
-    // sparse JL projection (Achlioptas density-1/3 {-1,0,+1} planes,
-    // md5-derived): corpus-wide norm-preservation gate (scan-shaped,
-    // zero shuffle) + pairwise distance distortion on a 64-vector
-    // deterministic sample (constant cost at any corpus size)
-    "sim_jl_norms" -> ((s, dir) =>
-      Similarity.jlNormReport(table(s, dir, "embeddings"))),
-    "sim_jl_distortion" -> ((s, dir) =>
-      Similarity.jlDistortion(table(s, dir, "embeddings"))),
-    // feature-redundancy diagnostic: Pearson corr over the first 8 dims —
-    // pair generation is in-row (no self-join), moment sums are
-    // DECIMAL(28,18)-exact, one fixed double tree after aggregation
-    "sim_corr_matrix" -> ((s, dir) =>
-      Similarity.dimCorrelationMatrix(table(s, dir, "embeddings"))),
-    // int8 quantization fidelity: the 4x-storage-shrink safety report
-    // PQ sibling of the int8 report: 4-bit-per-subspace codebook encoding
-    "sim_pq_error" -> ((s, dir) =>
-      Similarity.pqErrorByLabel(table(s, dir, "embeddings"))),
-    // PQ serving: top-k by query x reconstruction (asymmetric distance)
-    "sim_ann_pq" -> ((s, dir) =>
-      Similarity.annCosinePq(table(s, dir, "embeddings"), 0L, 10)),
-    "sim_quantize_error" -> ((s, dir) =>
-      Similarity.quantizeErrorByLabel(table(s, dir, "embeddings"))),
-    // batch serving path: the whole query workload amortizes ONE
-    // bucket-equi-join (the vector analog of bm25_multi_stored)
-    "sim_ann_multi" -> ((s, dir) =>
-      Similarity.annCosineLshMany(table(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L, 3L), 5)),
-    // batch IVF serving: corpus assigned once, one cell-equi-join for the
-    // whole workload (the IVF sibling of sim_ann_multi)
-    "sim_ann_ivf_multi" -> ((s, dir) =>
-      Similarity.annCosineIvfMany(table(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L, 3L), 5)),
-    // index-quality evaluation: measured recall@10 of the LSH index vs
-    // exact brute force, per query — recall is measured, never assumed
-    "sim_recall_eval" -> ((s, dir) =>
-      Similarity.annRecallAtK(table(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L, 3L), 10)),
-    // per-label centroid + pairwise centroid cosine: the embedding-level
-    // corpus-mix probe (decimal-exact sums, kmeansFit discipline)
-    "sim_label_centroids" -> ((s, dir) =>
-      Similarity.labelCentroidSimilarity(table(s, dir, "embeddings"))),
-    // sparse-vector similarity through the postings index: top-k
-    // neighbors per doc by cosine over top-m TF-IDF keyword signatures
-    // (the embedding-free routing/triage form; bucket-bounded like dedup)
-    "sim_sparse_topk" -> ((s, dir) =>
-      graft.textstats.TextAnalysis.sparseCosineNeighbors(
-        table(s, dir, "documents"))),
-    // one Lloyd's iteration over the IVF assignment: per-cell population +
-    // refined centroid head coordinates (the trained-quantizer primitive)
-    "sim_kmeans_step" -> ((s, dir) =>
-      Similarity.kmeansStep(table(s, dir, "embeddings"))),
-    // full Lloyd loop, 3 fixed rounds (the eps early-stop is spec
-    // territory — a fixed round count is what the SQL oracle can replay).
-    // Per-dim sums are DECIMAL(28,18)-exact on both sides, so the trained
-    // centroids are partition-layout-independent and bit-reproducible.
-    "sim_kmeans_fit" -> ((s, dir) =>
-      Similarity.kmeansFitReport(table(s, dir, "embeddings"))),
-    // dedup-family member of the trained partition: within-cell cosine
-    // pairs — learned buckets instead of random hyperplanes
-    // SemDeDup-family prototype pruning: per trained cell, the keepK
-    // most-central vectors stay; assignment is the broadcast-fold argmax
-    "sim_cell_prune" -> ((s, dir) =>
-      Similarity.cellPrune(table(s, dir, "embeddings"))),
-    // banding-curve calibration: observed banded-LSH catch rate per
-    // cosine bucket vs the 1-(1-p^r)^b theory (evaluation op: the brute
-    // arm is ground truth, the annRecallAtK standing)
-    "sim_lsh_calibration" -> ((s, dir) =>
-      Similarity.lshCalibration(table(s, dir, "embeddings"))),
-    "dedup_semantic_pairs" -> ((s, dir) =>
-      Similarity.semanticDedupPairs(table(s, dir, "embeddings"))),
-    // IVF-PQ composition (round-5): trained coarse cells + residual PQ,
-    // served by cell prune + asymmetric distance
-    "sim_ann_ivfpq" -> ((s, dir) =>
-      Similarity.annCosineIvfPq(table(s, dir, "embeddings"), 0L, 10)),
-    // top principal component by power iteration: mean-centered matvec
-    // rounds with decimal-exact sums; never materializes the covariance
-    "sim_power_iteration" -> ((s, dir) =>
-      Similarity.powerIterationPc(table(s, dir, "embeddings"))),
-    // top-2 PCA: the same chain plus a Hotelling-deflated second chain —
-    // covariance never materialized, 2*iters+3 scans total
-    "sim_pca_top2" -> ((s, dir) =>
-      Similarity.pcaTop2(table(s, dir, "embeddings"))),
-    // contrastive-training negatives: per anchor, the 3 most-similar
-    // DIFFERENTLY-labeled vectors from its LSH bucket — one bucket join
-    // for the whole anchor workload
-    "sim_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(table(s, dir, "embeddings"))),
-    // rank-aware index-quality eval: nDCG@10 of the IVF ranking vs the
-    // exact ranking, graded relevance from the exact arm itself
-    "sim_ndcg_eval" -> ((s, dir) =>
-      Similarity.ndcgEval(table(s, dir, "embeddings"))),
-    // MMR diversification: greedy λ·rel − μ·max-sim rerank of the top-20
-    // candidates (the RAG anti-near-duplicate serving pass)
-    "sim_mmr_rerank" -> ((s, dir) =>
-      Similarity.mmrRerank(table(s, dir, "embeddings"))),
-    // PSI drift monitor: norm-bucket population stability index between
-    // the baseline and current label slices (add-one smoothed)
-    "sim_psi_drift" -> ((s, dir) =>
-      Similarity.psiDrift(table(s, dir, "embeddings"))),
-    // hybrid retrieval: reciprocal-rank fusion of the BM25 arm and the
-    // dense cosine arm (the RAG serving composition; fusion cost is
-    // bounded by 2*armK rows however large the corpus)
-    "bm25_rrf_hybrid" -> ((s, dir) =>
-      graft.rank.Hybrid.rrfSearch(s, table(s, dir, "documents"),
-        table(s, dir, "embeddings"), FlagshipQuery, 0L)),
-    // RM3-style pseudo-relevance feedback: expansion vocabulary mined
-    // from the feedback top-10, re-ranked with weighted union query
-    "bm25_expansion_terms" -> ((s, dir) =>
-      BM25.expansionTerms(s, table(s, dir, "documents"), FlagshipQuery)),
-    "bm25_rm3_expanded" -> ((s, dir) =>
-      BM25.searchExpanded(s, table(s, dir, "documents"), FlagshipQuery)),
-
-    // ---- text analysis (north star) ----
-    "text_token_counts" -> ((s, dir) =>
-      TextAnalysis.tokenCounts(table(s, dir, "documents"))),
-    "text_quality" -> ((s, dir) =>
-      TextAnalysis.qualityScores(table(s, dir, "documents"))),
-    // C4/Gopher sentence rules: [.!?]+ segments, blank-dropped — count,
-    // tokens per sentence, terminal-punctuation ending
-    "text_sentence_stats" -> ((s, dir) =>
-      TextAnalysis.sentenceStats(table(s, dir, "documents"))),
-    // Fightin' Words keyness: per-source log-odds vs rest-of-corpus with
-    // an informative Dirichlet prior, z-scored, top-5 per source
-    "text_keyness" -> ((s, dir) =>
-      TextAnalysis.sourceKeyness(table(s, dir, "documents"))),
-    // TextRank keywords: weighted PageRank over the adjacent-token
-    // co-occurrence graph — graph-centrality keywordness, decimal-exact
-    // power rounds over the vocabulary-sized edge list
-    "text_textrank" -> ((s, dir) =>
-      TextAnalysis.textRankKeywords(table(s, dir, "documents"))),
-    // code-switching detector: per-doc marker mass per language, dominant
-    // share, mixture entropy — one scan, fixed 4-language tree
-    "text_lang_mixture" -> ((s, dir) =>
-      TextAnalysis.langMixture(table(s, dir, "documents"))),
-    // closed-form least-squares probe: stopword count ~ a + b*tokens over
-    // the corpus, per-source deviation from the line (outlier-source
-    // detector). All floating math post-aggregation over exact long sums.
-    "text_quality_regression" -> ((s, dir) =>
-      TextAnalysis.qualityRegression(table(s, dir, "documents"))),
-    // CCNet-style perplexity filter: LM trained on the reference source
-    // only, every doc scored with add-1 smoothing
-    "text_cross_lm" -> ((s, dir) =>
-      TextAnalysis.crossLmScores(table(s, dir, "documents"), "src0")),
-    // trigram stupid-backoff scoring (Brants'07): the distributed-corpus
-    // LM — plain count ratios, alpha-damped backoff, add-one unigram floor
-    "text_stupid_backoff" -> ((s, dir) =>
-      TextAnalysis.stupidBackoffScores(table(s, dir, "documents"), "src0")),
-    // CCNet head/middle/tail (Wenzek'20): per-source perplexity-proxy
-    // terciles over the same LM scores; histogram-derived value cuts, no
-    // corpus-grain ranking window
-    "text_perplexity_buckets" -> ((s, dir) =>
-      TextAnalysis.perplexityBuckets(table(s, dir, "documents"), "src0")),
-    // trained quality classifier: 4 full-batch GD rounds of logistic
-    // regression (decimal-exact gradient sums, one driver row per round)
-    "text_quality_classifier" -> ((s, dir) =>
-      TextAnalysis.logisticQualityScores(table(s, dir, "documents"))),
-    // multinomial NB domain classifier: micro-nat integer weights make
-    // every score a BIGINT sum — argmax exact in both engines
-    "text_nb_classifier" -> ((s, dir) =>
-      TextAnalysis.nbSourceClassifier(table(s, dir, "documents"))),
-    // ROC AUC by exact integer rank sums over the score histogram
-    "text_classifier_auc" -> ((s, dir) =>
-      TextAnalysis.classifierAuc(table(s, dir, "documents"))),
-    // per-class error report over the same eval split
-    "text_nb_confusion" -> ((s, dir) =>
-      TextAnalysis.nbConfusionMatrix(table(s, dir, "documents"))),
-    // concat-and-chunk pretraining sample layout: docs split across
-    // fixed-length chunks, exact integer spans
-    "text_chunk_seqs" -> ((s, dir) =>
-      TextAnalysis.chunkSequences(table(s, dir, "documents"))),
-    // per-source KS drift vs the rest of the corpus (pre-mixing check)
-    "text_ks_drift" -> ((s, dir) =>
-      TextAnalysis.ksLengthDrift(table(s, dir, "documents"))),
-    "text_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionStats(table(s, dir, "documents"))),
-    "text_langid" -> ((s, dir) =>
-      TextAnalysis.languageGuess(table(s, dir, "documents"))),
-    "text_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprints(table(s, dir, "documents"))),
-    "text_top_terms" -> ((s, dir) =>
-      TextAnalysis.topTerms(table(s, dir, "documents"), 20)),
-    "text_bigrams" -> ((s, dir) =>
-      TextAnalysis.topBigrams(table(s, dir, "documents"), 20)),
-    "text_langid_confusion" -> ((s, dir) =>
-      TextAnalysis.langGuessConfusion(table(s, dir, "documents"))),
-    // corpus mix report: the per-(source, lang) table that sets domain
-    // mixing weights before training
-    // robust length outliers: median/MAD per source (means would be
-    // dragged by the outliers themselves); MAD=0 degrades to any-dev
-    "text_mad_outliers" -> ((s, dir) =>
-      TextAnalysis.madOutlierStats(table(s, dir, "documents"))),
-    // per-doc source-vs-global percentile gap, ranks from the aggregated
-    // length histogram (support-bounded windows, never a per-doc sort)
-    "text_percentile_calib" -> ((s, dir) =>
-      TextAnalysis.percentileCalibration(table(s, dir, "documents"))),
-    // ingest-stage normalization: control chars -> space, whitespace
-    // collapse, trim; emitted as the cleaned hash + length delta
-    "text_normalize" -> ((s, dir) =>
-      TextAnalysis.normalizeText(table(s, dir, "documents"))),
-    // embedding-training data prep: skip-gram pairs + hashSplit-style
-    // deterministic negatives (slot table in seeded-md5 vocab order)
-    "text_skipgram_pairs" -> ((s, dir) =>
-      TextAnalysis.skipgramPairs(table(s, dir, "documents"))),
-    // tokenizer budgeting: bytes-per-char + non-ASCII share per language
-    "text_utf8_stats" -> ((s, dir) =>
-      TextAnalysis.utf8Stats(table(s, dir, "documents"))),
-    "text_source_stats" -> ((s, dir) =>
-      TextAnalysis.sourceStats(table(s, dir, "documents"))),
-    // vocabulary richness: hapax share / type-token ratio per source
-    "text_vocab_stats" -> ((s, dir) =>
-      TextAnalysis.vocabularyStats(table(s, dir, "documents"))),
-    // Flesch/FK readability per source: regexp-count scan, exact-long
-    // sums, two formula evaluations per source row
-    "text_readability" -> ((s, dir) =>
-      TextAnalysis.readability(table(s, dir, "documents"))),
-    // Gopher structural rules (Rae'21): per-source fail counts per rule
-    // + survivors — one codegen scan, (source, 7 longs) exchange
-    "text_gopher_rules" -> ((s, dir) =>
-      TextAnalysis.gopherRules(table(s, dir, "documents"))),
-    // Zipf rank-frequency OLS fit per source over the top-200 terms —
-    // decimal-exact sums over a sources x 200 frame (WindowGroupLimit
-    // bounds the rank sort)
-    "text_zipf_fit" -> ((s, dir) =>
-      TextAnalysis.zipfFit(table(s, dir, "documents"))),
-    // Heaps'-law vocabulary-growth curve + beta fit at 10 arithmetic
-    // doc-id checkpoints — no global sort/window; bounds broadcast
-    "text_heaps_law" -> ((s, dir) =>
-      TextAnalysis.heapsLaw(table(s, dir, "documents"))),
-    "text_bpe_tokens" -> ((s, dir) =>
-      TextAnalysis.bpeTokenCounts(table(s, dir, "documents"))),
-    // BPE merge TRAINING (round-5 verdict item #2): 8 rounds of
-    // highest-frequency-pair merging over the vocabulary, kmeansFit-style
-    // (one aggregate + one argmax row to the driver per round); the
-    // oracle unrolls the same 8 rounds CTE-by-CTE on the identical
-    // wrapped-symbol representation, so the whole training trajectory —
-    // counts, tie-breaks, greedy merge application — is replayed in SQL.
-    "text_bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpeTrainMerges(table(s, dir, "documents"), 8)),
-    // the APPLY side of the trained tokenizer: encode the vocab with the
-    // 8 ranked merges (one chained-replace projection), roll up per-doc
-    // word/BPE-token counts + compression — the token-budget accounting
-    // tokenizer sizing: tokens-per-word under every merge-prefix k
-    "text_bpe_curve" -> ((s, dir) =>
-      TextAnalysis.bpeCompressionCurve(table(s, dir, "documents"))),
-    "text_bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncode(table(s, dir, "documents"), 8)),
-    "text_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdfTopTerms(table(s, dir, "documents"), 3)),
-    // corpus-trained bigram-LM fluency proxy: mean ln p(w2|w1) per doc
-    "text_bigram_lm" -> ((s, dir) =>
-      TextAnalysis.bigramLmScores(table(s, dir, "documents"))),
-    "text_len_quantiles" -> ((s, dir) =>
-      TextAnalysis.lengthQuantilesByLang(table(s, dir, "documents"))),
-    "text_redact_pii" -> ((s, dir) =>
-      TextAnalysis.redactPii(table(s, dir, "documents"))),
-    // C4-style bad-words gate: per-doc blocked-term hits + drop verdict,
-    // blocklist as an array literal (codegen membership, zero joins)
-    "text_blocklist_filter" -> ((s, dir) =>
-      TextAnalysis.blocklistFilter(table(s, dir, "documents"))),
-    // length-bucketed batch layout with per-batch padding waste; windows
-    // bounded per (bucket, shard), deterministic md5 shuffle
-    "text_batch_plan" -> ((s, dir) =>
-      TextAnalysis.batchPlan(table(s, dir, "documents"))),
-    // windowed PMI collocations (Church-Hanks'90): top-30 pairs within
-    // 3 positions above a count floor
-    "text_pmi_pairs" -> ((s, dir) =>
-      TextAnalysis.pmiPairs(table(s, dir, "documents"))),
-    // reliability diagram for the trained logistic classifier: per score
-    // bin, mean predicted probability vs observed positive rate
-    "text_classifier_calibration" -> ((s, dir) =>
-      TextAnalysis.classifierCalibration(table(s, dir, "documents"))),
-    // novelty vs the src0 reference slice: fraction of each doc's distinct
-    // trigrams unseen in the reference n-gram universe
-    "text_ngram_novelty" -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(table(s, dir, "documents"), "src0", 3)),
-    // deterministic T5-style denoising plan: maximal masked-token spans
-    // from an md5 coin per (doc, pos) at 15%
-    "text_span_corruption" -> ((s, dir) =>
-      TextAnalysis.spanCorruptionPlan(table(s, dir, "documents"), 15, 17L)),
-    // checksum-gated PII: 16-digit runs validated by Luhn (planted
-    // valid/invalid fixture — the corpus has no digit runs)
-    "text_luhn_pii" -> ((s, dir) =>
-      TextAnalysis.luhnCardScan(table(s, dir, "documents"))),
-    "text_chunks" -> ((s, dir) =>
-      TextAnalysis.chunkDocuments(table(s, dir, "documents"), 64, 16)),
-    "text_pack_bins" -> ((s, dir) =>
-      TextAnalysis.packIntoBins(table(s, dir, "documents"), 2048)),
-    // sketch values are Spark-deterministic but engine-specific => rows-only;
-    // SketchSpec bounds approx-vs-exact error.
-    "sketch_distinct_parts" -> ((s, dir) =>
-      Sketches.distinctPartsPerFlag(table(s, dir, "lineitem"))),
-    "sketch_price_quantiles" -> ((s, dir) =>
-      Sketches.priceQuantilesPerPriority(table(s, dir, "orders"))),
-    // count-min sketch with md5-derived hashes: the ONE sketch the oracle
-    // can verify bit-for-bit (pure integer arithmetic in both engines)
-    "sketch_cms_topk" -> ((s, dir) =>
-      Sketches.cmsTermCounts(table(s, dir, "documents"))),
-    // sketch mergeability: union of per-shard HLL sketches answers the
-    // global distinct within bound — asserted as oracled booleans
-    "sketch_hll_merge" -> ((s, dir) =>
-      Sketches.hllMergeReport(table(s, dir, "lineitem"))),
-    // KMV bottom-k sketch: like CMS, md5-derived and therefore fully
-    // oracle-checkable — the one cardinality sketch DuckDB replays
-    // bit-for-bit (k smallest distinct hashes + one double division)
-    "sketch_kmv_vocab" -> ((s, dir) =>
-      Sketches.kmvVocabulary(table(s, dir, "documents"))),
-    // sketch SET ALGEBRA: pairwise source-vocabulary overlap estimated
-    // from the k-row sketches alone (union re-take + rho), with the
-    // exact intersection as the judged evaluation arm
-    "sketch_kmv_overlap" -> ((s, dir) =>
-      Sketches.kmvSourceOverlap(table(s, dir, "documents"))),
-    // Misra-Gries bound-then-verify: the sub-linear heavy-hitters path
-    // whose exact-recount second pass makes the result EXACT, so the
-    // oracle is the plain HAVING definition with no MG logic (pruning
-    // invisible — the bm25_wand standing)
-    "sketch_heavy_hitters" -> ((s, dir) =>
-      Sketches.heavyHitterTerms(table(s, dir, "documents"))),
-
-    // ---- multimodal binary-column plumbing (north star) ----
-    "mm_meta" -> ((s, dir) =>
-      Multimodal.metaExtract(Multimodal.fromDocuments(table(s, dir, "documents")))),
-    "mm_resize" -> ((s, dir) =>
-      Multimodal.resizeStub(Multimodal.fromDocuments(table(s, dir, "documents")), 32)),
-    // frame emitted as hex STRING (like mm_meta's magic_prefix): the
-    // driver's pandas compare cannot sort raw BINARY cells.
-    "mm_frame_sample" -> ((s, dir) =>
-      Multimodal.sampleFrames(Multimodal.fromDocuments(table(s, dir, "documents")), 16, 4)
-        .select(col("media_id"), col("frame_idx"),
-          hex(col("frame")).as("frame"), col("frame_bytes"))
-        .orderBy("media_id", "frame_idx")),
-    // REAL features (the round-4 stub graduation): one codegen pass over
-    // the synthetic image corpus's actual bytes computes the 256-bucket
-    // byte histogram -> Shannon entropy + high-nibble counts h0..h15,
-    // while graft_image_dims parses width/height from the container
-    // header. The oracle re-assembles the identical hex, explodes it to
-    // bytes, and recomputes every count and the entropy sum in SQL — both
-    // engines derive the numbers from the same real payload bytes.
-    "mm_features" -> ((s, dir) =>
-      Multimodal.imageFeatures(
-        Multimodal.syntheticImageCorpus(table(s, dir, "documents")))),
-    // REAL decode (no stub): header-valid PNG/JPEG binaries are assembled
-    // from doc fields with column ops, then the codegen graft_image_dims
-    // expression parses dimensions back out of the BYTES (PNG IHDR read;
-    // JPEG marker-segment walk past a per-row variable-length COM). The
-    // oracle re-assembles the same hex and parses it independently in SQL
-    // (recursive-CTE segment walk) — both engines decode actual bytes.
-    "mm_image_meta" -> ((s, dir) =>
-      Multimodal.imageMeta(
-        Multimodal.syntheticImageCorpus(table(s, dir, "documents")))),
-    // REAL audio decode: header-valid WAV binaries (RIFF envelope, a
-    // variable-length LIST chunk with the odd-size pad rule, PCM fmt,
-    // data) assembled from doc fields, then the codegen graft_audio_meta
-    // expression walks the chunk list and recovers the PCM params +
-    // duration from the BYTES. The oracle re-assembles the same hex and
-    // walks it independently (recursive-CTE chunk walk, LE reads).
-    "mm_audio_meta" -> ((s, dir) =>
-      Multimodal.audioMeta(
-        Multimodal.syntheticAudioCorpus(table(s, dir, "documents")))),
-    // REAL video decode: structure-valid MP4 binaries (ftyp, a free box
-    // that uses a 64-bit largesize on every 5th row, moov with mvhd v0/v1
-    // + 1..3 trak stubs), parsed back by the codegen graft_video_meta box
-    // walk. The oracle walks the same bytes with recursive CTEs.
-    "mm_video_meta" -> ((s, dir) =>
-      Multimodal.videoMeta(
-        Multimodal.syntheticVideoCorpus(table(s, dir, "documents")))),
-
-    // ---- corpus sampling + stored-index serving (round-2 additions) ----
-    // S3 replacement: seeded deterministic sample — stable under partition
-    // layout (unlike df.sample) and engine-portable (md5 order).
-    "samp_seeded" -> ((s, dir) =>
-      Sampling.deterministicSample(table(s, dir, "documents"), "doc_id", 100, 42)
-        .select("doc_id", "sample_key")),
-    // corpus balancing: 10 docs per language in seeded-hash order
-    "samp_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(table(s, dir, "documents"), "lang", "doc_id", 10, 42)
-        .select(col("lang"), col("doc_id"), col("sample_rank"))
-        .orderBy("lang", "sample_rank")),
-    // class-parity rebalance: every language downsampled to the smallest
-    // language's count, seeded md5 order, floor = one broadcast row
-    "samp_balanced" -> ((s, dir) =>
-      Sampling.balancedSample(table(s, dir, "documents"), "lang", "doc_id", 17)
-        .select(col("lang"), col("doc_id"))
-        .orderBy("lang", "doc_id")),
-    // leakage-safe deterministic train/val/test split: membership is a
-    // pure function of (doc_id, seed) — appends never reshuffle old docs
-    "samp_hash_split" -> ((s, dir) =>
-      Sampling.hashSplit(table(s, dir, "documents"), "doc_id")
-        .select("doc_id", "split").orderBy("doc_id")),
-    // importance sampling (A-ES): selection odds proportional to doc
-    // length; output is the selected SET (ordered by id), so key VALUES
-    // never enter the compare — only rank-boundary order does, where
-    // adjacent-key gaps (~1/n) dwarf ln()'s 1-ulp cross-engine noise
-    // (see the weightedSample scaladoc for the full argument)
-    "samp_weighted" -> ((s, dir) =>
-      Sampling.weightedSample(table(s, dir, "documents"), "doc_id", "n_chars", 50, 42)
-        .select("doc_id", "n_chars").orderBy("doc_id")),
-    // per-group weighted reservoir (A-Res): 5 length-weighted docs per
-    // language — the set-compare discipline of samp_weighted, per group
-    "samp_reservoir" -> ((s, dir) =>
-      Sampling.groupedWeightedSample(table(s, dir, "documents"), "lang",
-          "doc_id", "n_chars", 5, 42)
-        .select("lang", "doc_id", "n_chars").orderBy("lang", "doc_id")),
-    // Poisson bootstrap (the scalable bootstrap): md5-deterministic
-    // Poisson(1) replicate weights -> exactly replayable resampled
-    // aggregates; one scan, 3x fan-out, decimal-exact weighted sums
-    "samp_poisson_bootstrap" -> ((s, dir) =>
-      Sampling.poissonBootstrap(table(s, dir, "lineitem"))),
-    // The serving path: build the bucketed parquet index, then search it
-    // with partition pruning to the query terms' buckets. The oracle
-    // recomputes the same statistics from raw text — stored-vs-recompute
-    // equality IS the correctness claim.
-    "bm25_stored" -> ((s, dir) => {
-      val idx = indexPath(s, dir)
-      IndexStore.write(table(s, dir, "documents"), idx)
-      BM25.searchStored(s, idx, FlagshipQuery)
-    }),
-    // The batch serving path: one pruned postings scan amortized over the
-    // whole query workload. Same oracle as bm25_multi — stored ≡ recompute
-    // is again the correctness claim.
-    "bm25_multi_stored" -> ((s, dir) => {
-      val idx = indexPath(s, dir)
-      IndexStore.write(table(s, dir, "documents"), idx)
-      BM25.searchManyStored(s, idx,
-        Seq((1L, "spark join window"), (2L, "batch stream")))
-    }),
-    // phrase-aware ranking: BM25 over the phrase's terms + exact-phrase
-    // boost from the positional table, both served from the same store
-    "bm25_phrase_boost" -> ((s, dir) => {
-      val idx = indexPath(s, dir)
-      IndexStore.write(table(s, dir, "documents"), idx)
-      BM25.searchStoredPhraseBoosted(s, idx, "row column sort")
-    }),
-  )
-
-  /** One shared index build for Bench: the four stored queries above each
-    * include a full `IndexStore.write` so the correctness gate proves
-    * stored ≡ recompute, but benchmarking that way rebuilds the same index
-    * four times and hides the serving latency the stored path exists to
-    * demonstrate. Bench times this once (reported as `idx_store_build`)
-    * and then times `servedQueries` serve-only. Verify keeps using
-    * `queries` — the inline build IS the correctness claim there. */
-  def buildIndexStore(s: SparkSession, dir: String): Unit =
-    IndexStore.write(table(s, dir, "documents"), indexPath(s, dir))
-
-  /** Serve-only twins of the stored queries: byte-identical serving plans
-    * (same functions, same store path), minus the inline build. */
-  def servedQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bm25_stored" -> ((s, dir) =>
-      BM25.searchStored(s, indexPath(s, dir), FlagshipQuery)),
-    "bm25_multi_stored" -> ((s, dir) =>
-      BM25.searchManyStored(s, indexPath(s, dir),
-        Seq((1L, "spark join window"), (2L, "batch stream")))),
-    "idx_phrase_stored" -> ((s, dir) =>
-      IndexStore.phraseMatchStored(s, indexPath(s, dir), "row column sort")),
-    "idx_proximity_stored" -> ((s, dir) =>
-      IndexStore.proximityMatchStored(s, indexPath(s, dir), "spark", "join", 8)),
-    "bm25_phrase_boost" -> ((s, dir) =>
-      BM25.searchStoredPhraseBoosted(s, indexPath(s, dir), "row column sort")),
-  )
-
-  /** Per-(app, sfDir) temp index path — applicationId keeps concurrent
-    * harness runs on the same sfDir from clobbering each other's files. */
-  private def indexPath(s: SparkSession, dir: String): String =
-    java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_index_" + s.sparkContext.applicationId +
-        "_" + Integer.toHexString(dir.hashCode)).toString
-
-  /** DuckDB-runnable oracle SQL, one per queries key, same column names. */
-  def oracleSql: Map[String, String] = Map(
-    "idx_term_frequency" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents)
-        |SELECT doc_id, term, count(*) AS term_frequency
-        |FROM tok GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin,
-    // zipped parallel unnests give (pos, term) pairs; 1-based pos vs the
-    // Spark side's 0-based is invisible — only position DIFFERENCES matter
-    "idx_phrase_match" ->
+    query("idx_phrase_match", (s, dir) =>
+      InvertedIndex.phraseMatch(table(s, dir, "documents"), "row column sort"),
+      // zipped parallel unnests give (pos, term) pairs; 1-based pos vs the
+      // Spark side's 0-based is invisible — only position DIFFERENCES matter
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t)
         |SELECT p0.doc_id AS doc_id, count(*) AS n_occurrences
@@ -1379,10 +91,14 @@ object SparkEntry {
         |JOIN p p1 ON p1.doc_id = p0.doc_id AND p1.pos = p0.pos + 1 AND p1.term = 'column'
         |JOIN p p2 ON p2.doc_id = p0.doc_id AND p2.pos = p0.pos + 2 AND p2.term = 'sort'
         |WHERE p0.term = 'row'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // DuckDB list slicing is 1-based inclusive [a:b]; Spark's slice takes
-    // (start, LENGTH) — the spellings below pick the same window
-    "idx_phrase_snippets" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // result snippets: context window around the first phrase occurrence;
+    // only matching docs are re-tokenized for rendering
+    query("idx_phrase_snippets", (s, dir) =>
+      InvertedIndex.phraseSnippets(table(s, dir, "documents"),
+        "row column sort", 3),
+      // DuckDB list slicing is 1-based inclusive [a:b]; Spark's slice takes
+      // (start, LENGTH) — the spellings below pick the same window
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t),
         |starts AS (
@@ -1395,9 +111,14 @@ object SparkEntry {
         |SELECT t.doc_id, f.first_pos,
         |  array_to_string(tk[greatest(first_pos + 1 - 3, 1) : greatest(first_pos + 1 - 3, 1) + 8], ' ') AS snippet
         |FROM t JOIN f ON t.doc_id = f.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-    // stored ≡ recompute, same oracle derivation as idx_proximity_match
-    "idx_proximity_stored" ->
+        |ORDER BY t.doc_id""".stripMargin),
+    // proximity search: banded-position candidate join (dup-free 3-band),
+    // never a per-doc position cross product
+    query("idx_proximity_match", (s, dir) =>
+      InvertedIndex.proximityMatch(table(s, dir, "documents"),
+        "spark", "join", 8),
+      // the oracle joins raw positions directly — no banding — so the
+      // band-bucketed candidate generation is what is being checked
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t),
         |a AS (SELECT doc_id, pos FROM p WHERE term = 'spark'),
@@ -1405,21 +126,13 @@ object SparkEntry {
         |SELECT a.doc_id AS doc_id, count(*) AS n_pairs,
         |  CAST(min(abs(a.pos - b.pos)) AS BIGINT) AS min_distance
         |FROM a JOIN b ON b.doc_id = a.doc_id AND abs(a.pos - b.pos) <= 8
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the oracle joins raw positions directly — no banding — so the
-    // band-bucketed candidate generation is what is being checked
-    "idx_proximity_match" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t),
-        |a AS (SELECT doc_id, pos FROM p WHERE term = 'spark'),
-        |b AS (SELECT doc_id, pos FROM p WHERE term = 'join')
-        |SELECT a.doc_id AS doc_id, count(*) AS n_pairs,
-        |  CAST(min(abs(a.pos - b.pos)) AS BIGINT) AS min_distance
-        |FROM a JOIN b ON b.doc_id = a.doc_id AND abs(a.pos - b.pos) <= 8
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // stored ≡ recompute: the oracle recomputes from raw text, the query
-    // serves from the bucketed positional table
-    "idx_phrase_stored" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // phrase search SERVED from the stored positional table — each term
+    // reads only its hash bucket; stored ≡ recompute is the claim
+    stored("idx_phrase_stored", (s, idx) =>
+      IndexStore.phraseMatchStored(s, idx, "row column sort"),
+      // stored ≡ recompute: the oracle recomputes from raw text, the query
+      // serves from the bucketed positional table
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t)
         |SELECT p0.doc_id AS doc_id, count(*) AS n_occurrences
@@ -1427,41 +140,59 @@ object SparkEntry {
         |JOIN p p1 ON p1.doc_id = p0.doc_id AND p1.pos = p0.pos + 1 AND p1.term = 'column'
         |JOIN p p2 ON p2.doc_id = p0.doc_id AND p2.pos = p0.pos + 2 AND p2.term = 'sort'
         |WHERE p0.term = 'row'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "idx_doc_frequency" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-        |d AS (SELECT DISTINCT doc_id, term FROM tok)
-        |SELECT term, count(*) AS doc_frequency FROM d GROUP BY term ORDER BY term""".stripMargin,
-    "idx_postings_compressed" -> postingsCompressionOracleSql,
-    "idx_doc_info" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // proximity, same stored serving path (reuses the already-written
+    // store when it runs after idx_phrase_stored in the same session)
+    stored("idx_proximity_stored", (s, idx) =>
+      IndexStore.proximityMatchStored(s, idx, "spark", "join", 8),
+      // stored ≡ recompute, same oracle derivation as idx_proximity_match
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t),
+        |a AS (SELECT doc_id, pos FROM p WHERE term = 'spark'),
+        |b AS (SELECT doc_id, pos FROM p WHERE term = 'join')
+        |SELECT a.doc_id AS doc_id, count(*) AS n_pairs,
+        |  CAST(min(abs(a.pos - b.pos)) AS BIGINT) AS min_distance
+        |FROM a JOIN b ON b.doc_id = a.doc_id AND abs(a.pos - b.pos) <= 8
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    query("idx_doc_info", (s, dir) =>
+      InvertedIndex.docInfo(table(s, dir, "documents"))
+        .orderBy("doc_id"),
       """SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS doc_length
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "idx_corpus_info" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    query("idx_corpus_info", (s, dir) =>
+      InvertedIndex.corpusInfo(table(s, dir, "documents"))
+        .select(col("doc_n"), col("total_doc_length"),
+          round(col("avg_doc_length"), 4).as("avg_doc_length")),
       """WITH dl AS (SELECT CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS doc_length FROM documents)
         |SELECT count(*) AS doc_n, CAST(sum(doc_length) AS BIGINT) AS total_doc_length,
-        |       round(avg(doc_length), 4) AS avg_doc_length FROM dl""".stripMargin,
-    "bm25_search" -> bm25OracleSql("('spark','join','window')"),
-    // DuckDB levenshtein counts bytes vs Spark codepoints — identical on
-    // the ASCII-only vocabulary/query (the dedup_edit_pairs argument);
-    // the banded kernel is exact under the <= 2 filter
-    "bm25_spell_suggest" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-        |v AS (SELECT term, CAST(count(*) AS BIGINT) AS doc_frequency
-        |      FROM (SELECT DISTINCT doc_id, term FROM tok) GROUP BY term),
-        |q AS (SELECT unnest(['spak','joinn','windoe']) AS query_term),
-        |cand AS (SELECT q.query_term, v.term,
-        |    CAST(levenshtein(v.term, q.query_term) AS BIGINT) AS edit_dist,
-        |    v.doc_frequency
-        |  FROM v JOIN q ON abs(length(v.term) - length(q.query_term)) <= 2
-        |  WHERE levenshtein(v.term, q.query_term) <= 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_term
-        |    ORDER BY edit_dist, doc_frequency DESC, term) AS rnk FROM cand)
-        |SELECT query_term, term AS suggestion, edit_dist, doc_frequency,
-        |  CAST(rnk AS INT) AS "rank"
-        |FROM r WHERE rnk <= 3 ORDER BY query_term, rnk""".stripMargin,
-    // the same top CTE + hit-anchored distinct-term window scoring; the
-    // 1-based list_slice end is inclusive, so start..start+14 = 15 tokens
-    "bm25_snippets" ->
+        |       round(avg(doc_length), 4) AS avg_doc_length FROM dl""".stripMargin),
+    // ---- reference parity: BM25 ranking (SURVEY §2.5, §2.7, A6-A7, O1) ----
+    query("bm25_search", (s, dir) =>
+      BM25.search(s, table(s, dir, "documents"), FlagshipQuery),
+      bm25OracleSql("('spark','join','window')")),
+    // bounded wildcard: each token expands against the VOCABULARY
+    // (df-capped, highest-df first), then the plain exact scoring chain
+    query("bm25_prefix_search", (s, dir) =>
+      BM25.searchPrefix(s, table(s, dir, "documents"), "s qu"),
+      // prefix expansion replayed as an IN-subquery term source: vocab df
+      // ranked per prefix (df desc, term), capped at 50, then the SAME
+      // unmodified scoring CTEs — expansion changes the term set only
+      bm25OracleSql(
+      """(SELECT term FROM (
+        |  SELECT v.term, row_number() OVER (PARTITION BY p.pfx
+        |    ORDER BY v.df DESC, v.term) AS rn
+        |  FROM (SELECT term, count(DISTINCT doc_id) AS df
+        |        FROM (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents)
+        |        GROUP BY term) v
+        |  JOIN (VALUES ('s'), ('qu')) p(pfx) ON v.term LIKE p.pfx || '%')
+        | WHERE rn <= 50)""".stripMargin)),
+    // serving-side highlights for the flagship page: per top-10 doc, the
+    // 15-token window with the most distinct query terms (hit-anchored —
+    // lossless; extraction touches only the k ranked docs)
+    query("bm25_snippets", (s, dir) =>
+      BM25.searchSnippets(s, table(s, dir, "documents"), FlagshipQuery),
+      // the same top CTE + hit-anchored distinct-term window scoring; the
+      // 1-based list_slice end is inclusive, so start..start+14 = 15 tokens
       s"""WITH ${bm25TopCtes("('spark','join','window')")},
          |t AS (SELECT d.doc_id, regexp_extract_all(translate(d.text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk
          |      FROM documents d JOIN top USING (doc_id)),
@@ -1480,216 +211,86 @@ object SparkEntry {
          |  array_to_string(list_slice(t.tk, best.wstart, best.wstart + 14), ' ') AS snippet
          |FROM best JOIN t USING (doc_id) JOIN top USING (doc_id)
          |WHERE best.rk = 1
-         |ORDER BY top.doc_rank DESC, t.doc_id""".stripMargin,
-    // the WAND form is exact by construction: its oracle is the SAME
-    // unpruned BM25 chain — the pruning must be invisible in the result
-    "bm25_wand" -> bm25OracleSql("('hash','merge','stream')"),
-    "bm25_block_max" -> bm25OracleSql("('hash','merge','stream')"),
-    "bm25_oov" -> bm25OracleSql("('zzzznotaword','qqqqnotaword')"),
-    // prefix expansion replayed as an IN-subquery term source: vocab df
-    // ranked per prefix (df desc, term), capped at 50, then the SAME
-    // unmodified scoring CTEs — expansion changes the term set only
-    "bm25_prefix_search" -> bm25OracleSql(
-      """(SELECT term FROM (
-        |  SELECT v.term, row_number() OVER (PARTITION BY p.pfx
-        |    ORDER BY v.df DESC, v.term) AS rn
-        |  FROM (SELECT term, count(DISTINCT doc_id) AS df
-        |        FROM (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents)
-        |        GROUP BY term) v
-        |  JOIN (VALUES ('s'), ('qu')) p(pfx) ON v.term LIKE p.pfx || '%')
-        | WHERE rn <= 50)""".stripMargin),
-    "idx_champion_lists" ->
+         |ORDER BY top.doc_rank DESC, t.doc_id""".stripMargin),
+    // did-you-mean: per misspelled query term, top-3 vocabulary terms
+    // within edit distance 2 ranked by (dist, df DESC) — vocabulary-sized
+    // compare behind a lossless length-band prefilter
+    query("bm25_spell_suggest", (s, dir) =>
+      BM25.spellSuggest(s, table(s, dir, "documents"), "spak joinn windoe"),
+      // DuckDB levenshtein counts bytes vs Spark codepoints — identical on
+      // the ASCII-only vocabulary/query (the dedup_edit_pairs argument);
+      // the banded kernel is exact under the <= 2 filter
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+        |v AS (SELECT term, CAST(count(*) AS BIGINT) AS doc_frequency
+        |      FROM (SELECT DISTINCT doc_id, term FROM tok) GROUP BY term),
+        |q AS (SELECT unnest(['spak','joinn','windoe']) AS query_term),
+        |cand AS (SELECT q.query_term, v.term,
+        |    CAST(levenshtein(v.term, q.query_term) AS BIGINT) AS edit_dist,
+        |    v.doc_frequency
+        |  FROM v JOIN q ON abs(length(v.term) - length(q.query_term)) <= 2
+        |  WHERE levenshtein(v.term, q.query_term) <= 2),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_term
+        |    ORDER BY edit_dist, doc_frequency DESC, term) AS rnk FROM cand)
+        |SELECT query_term, term AS suggestion, edit_dist, doc_frequency,
+        |  CAST(rnk AS INT) AS "rank"
+        |FROM r WHERE rnk <= 3 ORDER BY query_term, rnk""".stripMargin),
+    // S9: all-OOV query must yield empty result with intact schema, not fail.
+    query("bm25_oov", (s, dir) =>
+      BM25.search(s, table(s, dir, "documents"), "zzzznotaword qqqqnotaword"),
+      bm25OracleSql("('zzzznotaword','qqqqnotaword')")),
+    // impact-ordered champion lists: per-term top-5 postings by tf — the
+    // static pruning that bounds per-term serve cost regardless of df
+    query("idx_champion_lists", (s, dir) =>
+      InvertedIndex.championLists(table(s, dir, "documents"), 5)
+        .orderBy("term", "impact_rank"),
       """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
         |r AS (SELECT term, doc_id, tf,
         |        row_number() OVER (PARTITION BY term ORDER BY tf DESC, doc_id) AS impact_rank
         |      FROM tf)
         |SELECT doc_id, term, CAST(tf AS BIGINT) AS term_frequency, CAST(impact_rank AS INT) AS impact_rank
-        |FROM r WHERE impact_rank <= 5 ORDER BY term, impact_rank""".stripMargin,
-    "bm25_champion" -> bm25ChampionOracleSql("('spark','join','window')", 10),
-    // PRF oracles: the bm25 chain ranks the feedback set; expansion terms
-    // by rounded tf-idf mass with term tie-break; the expanded ranking is
-    // the same bm25 tree times the broadcast weight (qw * (...) — the
-    // commuted product is bit-equal to Spark's (...) * qw).
-    "bm25_expansion_terms" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-        |tf0 AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-        |dfall AS (SELECT term, count(*) AS df FROM tf0 GROUP BY term),
-        |dl AS (SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS dl FROM documents),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |         sum( ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf) ) AS score
-        |  FROM tf0 t JOIN dfall USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
-        |  WHERE t.term IN ('spark','join','window')
-        |  GROUP BY t.doc_id),
-        |fb AS (SELECT doc_id FROM (SELECT doc_id, round(score, 4) AS doc_rank FROM scored
-        |       ORDER BY doc_rank DESC, doc_id LIMIT 10)),
-        |expw AS (SELECT t.term,
-        |    round(sum(CAST(tf AS DOUBLE) * ln(CAST(n AS DOUBLE)/df)), 6) AS expansion_weight
-        |  FROM tf0 t JOIN fb USING (doc_id) JOIN dfall USING (term) CROSS JOIN stats
-        |  WHERE t.term NOT IN ('spark','join','window')
-        |  GROUP BY t.term ORDER BY expansion_weight DESC, term LIMIT 5)
-        |SELECT term, expansion_weight FROM expw
-        |ORDER BY expansion_weight DESC, term""".stripMargin,
-    "bm25_rm3_expanded" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-        |tf0 AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-        |dfall AS (SELECT term, count(*) AS df FROM tf0 GROUP BY term),
-        |dl AS (SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS dl FROM documents),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |         sum( ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf) ) AS score
-        |  FROM tf0 t JOIN dfall USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
-        |  WHERE t.term IN ('spark','join','window')
-        |  GROUP BY t.doc_id),
-        |fb AS (SELECT doc_id FROM (SELECT doc_id, round(score, 4) AS doc_rank FROM scored
-        |       ORDER BY doc_rank DESC, doc_id LIMIT 10)),
-        |expw AS (SELECT t.term,
-        |    round(sum(CAST(tf AS DOUBLE) * ln(CAST(n AS DOUBLE)/df)), 6) AS w
-        |  FROM tf0 t JOIN fb USING (doc_id) JOIN dfall USING (term) CROSS JOIN stats
-        |  WHERE t.term NOT IN ('spark','join','window')
-        |  GROUP BY t.term ORDER BY w DESC, term LIMIT 5),
-        |wq AS (SELECT term, CAST(1 AS DOUBLE) AS qw
-        |       FROM (VALUES ('spark'),('join'),('window')) v(term)
-        |       UNION ALL SELECT term, CAST(0.5 AS DOUBLE) AS qw FROM expw),
-        |fs AS (SELECT t.doc_id,
-        |         sum( qw * (ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf)) ) AS score
-        |  FROM tf0 t JOIN wq USING(term) JOIN dfall USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
-        |  GROUP BY t.doc_id)
-        |SELECT doc_id, round(score, 4) AS doc_rank FROM fs
-        |ORDER BY doc_rank DESC, doc_id LIMIT 10""".stripMargin,
-    // nDCG oracle: exact and IVF arms replayed, ranks over rounded
-    // cosines, the ln(x)/ln(2) discount spelled identically (native log2
-    // differs from the ln quotient by an ulp on powers of two).
-    "sim_ndcg_eval" ->
-      """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-        |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
-        |ex0 AS (SELECT e.vec_id,
-        |    round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
-        |  FROM e0 e, (SELECT v AS qv FROM e0 WHERE vec_id = 0) q WHERE e.vec_id != 0
-        |  ORDER BY cosine DESC, vec_id LIMIT 10),
-        |xr AS (SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id) AS rank_exact FROM ex0),
-        |c0 AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
-        |c AS (SELECT row_number() OVER (ORDER BY ck, vec_id) AS cell_id, u AS cu FROM c0),
-        |asg AS (SELECT vec_id, u, cell_id FROM (
-        |  SELECT e.vec_id, e.u, c.cell_id,
-        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
-        |  FROM e CROSS JOIN c) WHERE rn = 1),
-        |q AS (SELECT u AS qu FROM asg WHERE vec_id = 0),
-        |probe AS (SELECT cell_id FROM (
-        |  SELECT c.cell_id, row_number() OVER (ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
-        |  FROM q CROSS JOIN c) WHERE rn <= 4),
-        |ap AS (SELECT a.vec_id, round(list_dot_product(a.u, q.qu), 4) AS cosine
-        |  FROM asg a JOIN probe USING (cell_id) CROSS JOIN q
-        |  WHERE a.vec_id != 0
-        |  ORDER BY cosine DESC, vec_id LIMIT 10),
-        |ar AS (SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id) AS pos FROM ap),
-        |dc AS (SELECT sum(CAST(coalesce(11 - rank_exact, 0) AS DOUBLE) /
-        |    (ln(CAST(pos AS DOUBLE) + 1.0) / ln(CAST(2 AS DOUBLE)))) AS dcg
-        |  FROM ar LEFT JOIN xr USING (vec_id)),
-        |ic AS (SELECT sum(CAST(11 - rank_exact AS DOUBLE) /
-        |    (ln(CAST(rank_exact AS DOUBLE) + 1.0) / ln(CAST(2 AS DOUBLE)))) AS idcg FROM xr)
-        |SELECT 10 AS k, round(dcg, 4) AS dcg, round(idcg, 4) AS idcg,
-        |  round(dcg / idcg, 4) AS ndcg
-        |FROM dc CROSS JOIN ic""".stripMargin,
-    // PSI oracle: same rounded-norm bucketing (round-6 BEFORE floor so a
-    // 1-ulp sqrt cannot flip a bin), same add-one probability tree.
-    "sim_psi_drift" ->
-      """WITH e AS (SELECT label, round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS norm FROM embeddings),
-        |b AS (SELECT norm FROM e WHERE label <= 4),
-        |c AS (SELECT norm FROM e WHERE label > 4),
-        |bounds AS (SELECT min(norm) AS bmin, max(norm) AS bmax FROM b),
-        |nb AS (SELECT CASE WHEN bmax = bmin THEN 0
-        |    ELSE least(9, greatest(0, CAST(floor((norm - bmin) / (bmax - bmin) * CAST(10 AS DOUBLE)) AS INT))) END AS bucket,
-        |    count(*) AS n_base FROM b CROSS JOIN bounds GROUP BY 1),
-        |nc AS (SELECT CASE WHEN bmax = bmin THEN 0
-        |    ELSE least(9, greatest(0, CAST(floor((norm - bmin) / (bmax - bmin) * CAST(10 AS DOUBLE)) AS INT))) END AS bucket,
-        |    count(*) AS n_cur FROM c CROSS JOIN bounds GROUP BY 1),
-        |tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM b) AS tb,
-        |               (SELECT CAST(count(*) AS BIGINT) FROM c) AS tc),
-        |spine AS (SELECT unnest(generate_series(0, 9)) AS bucket),
-        |per AS (SELECT s.bucket,
-        |    CAST(coalesce(n_base, 0) AS BIGINT) AS n_base,
-        |    CAST(coalesce(n_cur, 0) AS BIGINT) AS n_cur,
-        |    (CAST(coalesce(n_base, 0) AS DOUBLE) + 1.0) / (CAST(tb AS DOUBLE) + CAST(10 AS DOUBLE)) AS pb,
-        |    (CAST(coalesce(n_cur, 0) AS DOUBLE) + 1.0) / (CAST(tc AS DOUBLE) + CAST(10 AS DOUBLE)) AS pc
-        |  FROM spine s LEFT JOIN nb USING (bucket) LEFT JOIN nc USING (bucket) CROSS JOIN tot),
-        |pt AS (SELECT bucket, n_base, n_cur, round((pb - pc) * ln(pb / pc), 6) AS psi_term FROM per),
-        |tt AS (SELECT round(sum(psi_term), 6) AS psi_total FROM pt)
-        |SELECT CAST(bucket AS INT) AS bucket, n_base, n_cur, psi_term, psi_total
-        |FROM pt CROSS JOIN tt ORDER BY bucket""".stripMargin,
-    // MMR oracle: candidate arm replayed, then each greedy round
-    // unrolled — NOT-IN of prior picks, correlated max over the selected
-    // set's rounded pairwise cosines, same round(…,6) + vec_id argmax.
-    "sim_mmr_rerank" -> {
-      val lam = "CAST(0.7 AS DOUBLE)"
-      val div = "CAST(0.3 AS DOUBLE)"
-      val rounds = (2 to 5).map { t =>
-        val selList = (1 until t).map(i => s"SELECT vec_id FROM s$i")
-          .mkString(" UNION ALL ")
-        val selU = (1 until t)
-          .map(i => s"SELECT u FROM cand JOIN s$i USING (vec_id)")
-          .mkString(" UNION ALL ")
-        s"""p$t AS (SELECT c.vec_id, round($lam * c.rel - $div *
-           |    (SELECT max(round(list_dot_product(c.u, s.u), 4)) FROM ($selU) s), 6) AS mmr
-           |  FROM cand c WHERE c.vec_id NOT IN ($selList)),
-           |s$t AS (SELECT vec_id, mmr, $t AS pos FROM p$t ORDER BY mmr DESC, vec_id LIMIT 1)""".stripMargin
-      }.mkString(",\n")
-      val all = (1 to 5).map(i => s"SELECT * FROM s$i").mkString(" UNION ALL ")
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-         |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
-         |ex AS (SELECT e0.vec_id,
-         |    round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS rel
-         |  FROM e0, (SELECT v AS qv FROM e0 WHERE vec_id = 0) q WHERE e0.vec_id != 0
-         |  ORDER BY rel DESC, vec_id LIMIT 20),
-         |cand AS (SELECT ex.vec_id, ex.rel, e.u FROM ex JOIN e USING (vec_id)),
-         |p1 AS (SELECT vec_id, round($lam * rel - $div * CAST(0 AS DOUBLE), 6) AS mmr FROM cand),
-         |s1 AS (SELECT vec_id, mmr, 1 AS pos FROM p1 ORDER BY mmr DESC, vec_id LIMIT 1),
-         |$rounds
-         |SELECT CAST(pos AS INT) AS pos, vec_id, mmr AS mmr_score
-         |FROM ($all) ORDER BY pos""".stripMargin
+        |FROM r WHERE impact_rank <= 5 ORDER BY term, impact_rank""".stripMargin),
+    // BM25 served from champion lists (m=10): candidates bounded at
+    // |terms|*m, scores exact for every surviving doc
+    query("bm25_champion", (s, dir) =>
+      BM25.searchChampions(s, table(s, dir, "documents"), FlagshipQuery, 10),
+      bm25ChampionOracleSql("('spark','join','window')", 10)),
+    // WAND/MaxScore-style bound-then-verify: EXACT top-10 (oracle = the
+    // plain exact chain) with the scoring tail run on pruned candidates
+    query("bm25_wand", (s, dir) =>
+      BM25.searchWand(s, table(s, dir, "documents"), "hash merge stream"),
+      // the WAND form is exact by construction: its oracle is the SAME
+      // unpruned BM25 chain — the pruning must be invisible in the result
+      bm25OracleSql("('hash','merge','stream')")),
+    // Block-max WAND: per-(term, block) max-tf caps skip WHOLE postings
+    // blocks below θ; EXACT top-10 (oracle = the plain exact chain)
+    query("bm25_block_max", (s, dir) =>
+      BM25.searchBlockMax(s, table(s, dir, "documents"), "hash merge stream"),
+      bm25OracleSql("('hash','merge','stream')")),
+    // Batch multi-query form: many queries, one tf build, windowed top-k.
+    query("bm25_multi", (s, dir) => {
+      import s.implicits._
+      val qs = Seq((1L, "spark join window"), (2L, "batch stream"))
+        .toDF("query_id", "query")
+      BM25.searchMany(s, table(s, dir, "documents"), qs)
     },
-    // RRF hybrid oracle: the bm25_search chain at armK=20 + the
-    // sim_cosine_topk chain at armK=20, each re-ranked over rounded
-    // scores, fused by 1/(60+rank) with NULL-absorbing coalesce.
-    "bm25_rrf_hybrid" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok WHERE term IN ('spark','join','window') GROUP BY doc_id, term),
-        |dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok WHERE term IN ('spark','join','window') GROUP BY term),
-        |dl AS (SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS dl FROM documents),
-        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-        |scored AS (
-        |  SELECT tf.doc_id,
-        |         sum( ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf) ) AS score
-        |  FROM tf JOIN dfq USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
-        |  GROUP BY tf.doc_id),
-        |bm AS (SELECT doc_id, round(score, 4) AS doc_rank FROM scored
-        |       ORDER BY doc_rank DESC, doc_id LIMIT 20),
-        |bmr AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_rank DESC, doc_id) AS INT) AS bm25_rank FROM bm),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        |co AS (SELECT e.vec_id,
-        |         round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
-        |       FROM e, q WHERE e.vec_id != 0
-        |       ORDER BY cosine DESC, vec_id LIMIT 20),
-        |cor AS (SELECT vec_id AS doc_id, CAST(row_number() OVER (ORDER BY cosine DESC, vec_id) AS INT) AS ann_rank FROM co),
-        |fu AS (SELECT coalesce(bmr.doc_id, cor.doc_id) AS doc_id, bm25_rank, ann_rank,
-        |         round(coalesce(1.0/(60.0 + CAST(bm25_rank AS DOUBLE)), 0.0) +
-        |               coalesce(1.0/(60.0 + CAST(ann_rank AS DOUBLE)), 0.0), 6) AS rrf_score
-        |       FROM bmr FULL OUTER JOIN cor ON bmr.doc_id = cor.doc_id)
-        |SELECT doc_id, bm25_rank, ann_rank, rrf_score FROM fu
-        |ORDER BY rrf_score DESC, doc_id LIMIT 10""".stripMargin,
-    "idx_incremental_merge" ->
+      bm25MultiOracleSql),
+    // A8 incremental indexing: merge(tf(old), newDocs) must equal the full
+    // recompute — the oracle is simply the full-corpus tf.
+    query("idx_incremental_merge", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      InvertedIndex.mergeTermFrequency(
+        InvertedIndex.termFrequency(docs.filter(col("doc_id") < 250)),
+        docs.filter(col("doc_id") >= 250))
+        .orderBy("doc_id", "term")
+    },
       """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents)
         |SELECT doc_id, term, count(*) AS term_frequency
-        |FROM tok GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin,
-    "bm25_multi" -> bm25MultiOracleSql,
+        |FROM tok GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin),
 
-    "rel_pricing_summary" ->
+    // ---- relational surface (SURVEY §7.3 step 2) ----
+    query("rel_pricing_summary", (s, dir) =>
+      Relational.pricingSummary(table(s, dir, "lineitem"), "1998-09-01"),
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -1702,17 +303,23 @@ object SparkEntry {
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "rel_filter_project" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    query("rel_filter_project", (s, dir) =>
+      Relational.filterProject(table(s, dir, "lineitem")),
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '2000-01-01' AND l_shipdate < TIMESTAMP '2000-04-01' AND l_quantity > 45
-        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""".stripMargin,
-    "rel_revenue_by_segment" ->
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""".stripMargin),
+    query("rel_revenue_by_segment", (s, dir) =>
+      Relational.revenueBySegment(table(s, dir, "orders"), table(s, dir, "customer")),
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "rel_local_supplier_revenue" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    query("rel_local_supplier_revenue", (s, dir) =>
+      Relational.localSupplierRevenue(table(s, dir, "customer"),
+        table(s, dir, "orders"), table(s, dir, "lineitem"),
+        table(s, dir, "supplier"), table(s, dir, "nation"),
+        table(s, dir, "region"), "ASIA", "1996-01-01", "1998-01-01"),
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM customer JOIN orders ON c_custkey = o_custkey
@@ -1721,44 +328,54 @@ object SparkEntry {
         |  JOIN nation ON s_nationkey = n_nationkey
         |  JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "rel_volume_by_brand" ->
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    query("rel_volume_by_brand", (s, dir) =>
+      Relational.volumeByBrand(table(s, dir, "lineitem"), table(s, dir, "part")),
       """SELECT p_brand, count(*) AS n_items,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "rel_semi_join" ->
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    query("rel_semi_join", (s, dir) =>
+      Relational.bigSpenders(table(s, dir, "customer"), table(s, dir, "orders"), 450000.0),
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "rel_anti_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    query("rel_anti_join", (s, dir) =>
+      Relational.dormantCustomers(table(s, dir, "customer"), table(s, dir, "orders"), "2001-01-01"),
       """SELECT c_custkey, c_name FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-        |ORDER BY c_custkey""".stripMargin,
-    "rel_outer_join_agg" ->
+        |ORDER BY c_custkey""".stripMargin),
+    query("rel_outer_join_agg", (s, dir) =>
+      Relational.orderCountsIncludingIdle(table(s, dir, "customer"),
+        table(s, dir, "orders"), "2001-01-01"),
       """SELECT c_custkey, count(o_orderkey) AS n_orders,
         |  coalesce(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS spent
         |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01') o
         |  ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "rel_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY l_returnflag, l_linestatus",
-    "rel_union_all" ->
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    query("rel_distinct", (s, dir) =>
+      Relational.distinctFlagStatus(table(s, dir, "lineitem")),
+      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem ORDER BY l_returnflag, l_linestatus"),
+    query("rel_union_all", (s, dir) =>
+      Relational.urgentOrHighUnion(table(s, dir, "orders")),
       """SELECT o_orderkey, o_custkey, 'urgent' AS bucket FROM orders WHERE o_orderpriority = '1-URGENT'
         |UNION ALL
         |SELECT o_orderkey, o_custkey, 'high' AS bucket FROM orders WHERE o_orderpriority = '2-HIGH'
-        |ORDER BY o_orderkey, bucket""".stripMargin,
-    "rel_intersect" ->
+        |ORDER BY o_orderkey, bucket""".stripMargin),
+    query("rel_intersect", (s, dir) =>
+      Relational.buildingBigSpenders(table(s, dir, "customer"), table(s, dir, "orders"), 300000.0),
       """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |INTERSECT
         |SELECT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 300000.0
-        |ORDER BY c_custkey""".stripMargin,
-    "rel_except" ->
+        |ORDER BY c_custkey""".stripMargin),
+    query("rel_except", (s, dir) =>
+      Relational.neverUrgent(table(s, dir, "customer"), table(s, dir, "orders")),
       """SELECT c_custkey FROM customer
         |EXCEPT
         |SELECT o_custkey AS c_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY c_custkey""".stripMargin,
-    "rel_full_outer_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    query("rel_full_outer_join", (s, dir) =>
+      Relational.urgentVsHighSpendFullOuter(table(s, dir, "orders")),
       """WITH u AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS urgent_spend
         |           FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY o_custkey),
         |h AS (SELECT o_custkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS high_spend
@@ -1766,108 +383,136 @@ object SparkEntry {
         |SELECT o_custkey, coalesce(urgent_spend, 0.0) AS urgent_spend,
         |       coalesce(high_spend, 0.0) AS high_spend
         |FROM u FULL JOIN h USING (o_custkey)
-        |ORDER BY o_custkey""".stripMargin,
-    "rel_intersect_all" ->
+        |ORDER BY o_custkey""".stripMargin),
+    query("rel_intersect_all", (s, dir) =>
+      Relational.urgentVsHighIntersectAll(table(s, dir, "orders")),
       """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
         |INTERSECT ALL
         |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
-        |ORDER BY o_custkey""".stripMargin,
-    "rel_except_all" ->
+        |ORDER BY o_custkey""".stripMargin),
+    query("rel_except_all", (s, dir) =>
+      Relational.urgentVsHighExceptAll(table(s, dir, "orders")),
       """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
         |EXCEPT ALL
         |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
-        |ORDER BY o_custkey""".stripMargin,
-    "rel_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    // quantities are integral (verified) so the double products/compares
-    // below are exact; the Spark side spells the same compare in DECIMAL
-    "rel_small_qty_revenue" ->
+        |ORDER BY o_custkey""".stripMargin),
+    // TPC-H Q17 shape: correlated per-part average decorrelated to
+    // aggregate + join-back; threshold compared in exact decimal space
+    query("rel_small_qty_revenue", (s, dir) =>
+      Relational.smallQuantityRevenue(table(s, dir, "lineitem"),
+        table(s, dir, "part"), "Brand#1"),
+      // quantities are integral (verified) so the double products/compares
+      // below are exact; the Spark side spells the same compare in DECIMAL
       """WITH li AS (SELECT l_partkey, l_quantity, l_extendedprice
         |  FROM lineitem JOIN part ON l_partkey = p_partkey WHERE p_brand = 'Brand#1'),
         |st AS (SELECT l_partkey AS pk, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sq,
         |       count(*) AS cnt FROM li GROUP BY 1)
         |SELECT count(*) AS n_small,
         |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)/7.0, 4) AS avg_yearly
-        |FROM li JOIN st ON l_partkey = pk WHERE l_quantity * 5 * cnt < sq""".stripMargin,
-    "rel_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    // Q18: the textbook HAVING-IN spelling — the engine's decorrelated
-    // aggregate must coincide with it exactly
-    "rel_big_orders" ->
+        |FROM li JOIN st ON l_partkey = pk WHERE l_quantity * 5 * cnt < sq""".stripMargin),
+    // TPC-H Q18 shape: HAVING-IN subquery decorrelated into one
+    // restrict-and-carry per-order aggregate before any dim join
+    query("rel_big_orders", (s, dir) =>
+      Relational.largeOrders(table(s, dir, "lineitem"),
+        table(s, dir, "orders"), table(s, dir, "customer")),
+      // Q18: the textbook HAVING-IN spelling — the engine's decorrelated
+      // aggregate must coincide with it exactly
       """WITH big AS (SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
         |  FROM lineitem GROUP BY l_orderkey HAVING sum(CAST(l_quantity AS BIGINT)) > 250)
         |SELECT c_custkey, c_name, o_orderkey,
         |  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_totalprice, total_qty
         |FROM big JOIN orders ON o_orderkey = l_orderkey
         |  JOIN customer ON c_custkey = o_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin,
-    "rel_window_rank" ->
+        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin),
+    query("rel_topk", (s, dir) =>
+      Relational.topOrders(table(s, dir, "orders"), 10),
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
+    query("rel_window_rank", (s, dir) =>
+      Relational.topOrdersPerCustomer(table(s, dir, "orders"), 3),
       """WITH r AS (SELECT o_custkey, o_orderkey, o_totalprice,
         |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders)
         |SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INT) AS rn FROM r WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "rel_window_running_sum" ->
+        |ORDER BY o_custkey, rn""".stripMargin),
+    query("rel_window_running_sum", (s, dir) =>
+      Relational.runningSpend(table(s, dir, "orders")),
       """SELECT o_custkey, o_orderkey,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "rel_window_lag" ->
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    query("rel_window_lag", (s, dir) =>
+      Relational.daysBetweenOrders(table(s, dir, "orders")),
       """SELECT o_custkey, o_orderkey,
         |  CAST(date_diff('day', CAST(lag(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS DATE),
         |       CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since_prev
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "rel_rollup" ->
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    query("rel_rollup", (s, dir) =>
+      Relational.rollupFlagStatus(table(s, dir, "lineitem")),
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "rel_count_distinct" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    query("rel_count_distinct", (s, dir) =>
+      Relational.customersPerPriority(table(s, dir, "orders")),
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_customers, count(*) AS n_orders
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "rel_case_agg" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    query("rel_case_agg", (s, dir) =>
+      Relational.discountedRevenueByFlag(table(s, dir, "lineitem")),
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN l_discount > 0.05
         |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
         |    ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) AS discounted_revenue,
         |  CAST(sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS n_discounted
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "rel_scalar_subquery" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    query("rel_scalar_subquery", (s, dir) =>
+      Relational.aboveAveragePerPriority(table(s, dir, "orders")),
       """WITH m AS (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS mean_price FROM orders)
         |SELECT o_orderpriority, count(*) AS n_above FROM orders, m
         |WHERE o_totalprice > mean_price
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "rel_exists_subquery" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // correlated EXISTS (TPC-H Q4 shape): decorrelates to one semi-join
+    query("rel_exists_subquery", (s, dir) =>
+      Relational.latePriorityCounts(table(s, dir, "orders"),
+        table(s, dir, "lineitem")),
       """SELECT o_orderpriority, count(*) AS n_late_orders
         |FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
         |              AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "rel_having" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // grouped HAVING / IN-subquery (Q18 shape): aggregate-then-join-back
+    query("rel_having", (s, dir) =>
+      Relational.bigQuantityOrders(table(s, dir, "orders"),
+        table(s, dir, "lineitem")),
       """WITH big AS (SELECT l_orderkey, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
         |             FROM lineitem GROUP BY l_orderkey
         |             HAVING CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 150.0)
         |SELECT o_orderkey, o_custkey, total_qty
         |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "rel_global_sort" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    // global total-order sort: RangePartitioning exchange (PlanSpec pins
+    // that the sort is distributed, not a single-partition collapse)
+    query("rel_global_sort", (s, dir) =>
+      Relational.ordersByPriceDesc(table(s, dir, "orders")),
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin,
-    // independent derivation: the textbook aggregate-then-join-back
-    // decorrelation, deliberately NOT the Spark side's struct-min
-    "rel_argmin_order" ->
+        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin),
+    // correlated scalar subquery (Q2 min-per-group), collapsed to a
+    // single-pass struct-min aggregation — no join-back
+    query("rel_argmin_order", (s, dir) =>
+      Relational.cheapestOrderPerCustomer(table(s, dir, "orders")),
+      // independent derivation: the textbook aggregate-then-join-back
+      // decorrelation, deliberately NOT the Spark side's struct-min
       """WITH m AS (SELECT o_custkey AS ck, min(o_totalprice) AS min_price
         |           FROM orders GROUP BY 1)
         |SELECT o_custkey, min(o_orderkey) AS o_orderkey, min_price
         |FROM orders JOIN m ON o_custkey = ck AND o_totalprice = min_price
-        |GROUP BY o_custkey, min_price ORDER BY o_custkey""".stripMargin,
-    // mean/stddev from EXACT decimal sums, spelled as the identical double
-    // expression tree as the Spark side (see the query declaration)
-    "rel_welford_stats" ->
+        |GROUP BY o_custkey, min_price ORDER BY o_custkey""".stripMargin),
+    // typed Aggregator UDAF (Welford/Chan moments): monthly price profile —
+    // see Relational.monthlyPriceProfile for the cross-engine comparison
+    // rationale (exact decimal mean/stddev, UDAF n/min/max)
+    query("rel_welford_stats", (s, dir) =>
+      Relational.monthlyPriceProfile(table(s, dir, "orders")),
+      // mean/stddev from EXACT decimal sums, spelled as the identical double
+      // expression tree as the Spark side (see the query declaration)
       """WITH g AS (
         |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS y,
         |    CAST(EXTRACT(month FROM o_orderdate) AS INT) AS m,
@@ -1881,9 +526,14 @@ object SparkEntry {
         |  CASE WHEN n_orders > 1
         |       THEN round(sqrt((sxx - sx * sx / n_orders) / (n_orders - 1)), 3) END AS stddev_price,
         |  min_price, max_price
-        |FROM g ORDER BY y, m""".stripMargin,
-    // top-k cut ordered on the EXACT decimal revenue (cast at output only)
-    "rel_returned_items" ->
+        |FROM g ORDER BY y, m""".stripMargin),
+    // TPC-H Q10 shape: star join, fact aggregated before the dim join,
+    // top-k on exact decimal revenue
+    query("rel_returned_items", (s, dir) =>
+      Relational.returnedItemReport(table(s, dir, "customer"),
+        table(s, dir, "orders"), table(s, dir, "lineitem"),
+        table(s, dir, "nation"), "1995-03-01", "1995-06-01"),
+      // top-k cut ordered on the EXACT decimal revenue (cast at output only)
       """WITH rev AS (
         |  SELECT o_custkey AS ck,
         |    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS r
@@ -1894,9 +544,12 @@ object SparkEntry {
         |SELECT c_custkey, c_name, n_name AS nation, CAST(r AS DOUBLE) AS revenue
         |FROM customer JOIN rev ON c_custkey = ck
         |  JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY r DESC, c_custkey LIMIT 20""".stripMargin,
-    // winner selected by EXACT decimal equality against the view max
-    "rel_top_supplier" ->
+        |ORDER BY r DESC, c_custkey LIMIT 20""".stripMargin),
+    // TPC-H Q15 shape: max over an aggregated view, exact-decimal compare
+    query("rel_top_supplier", (s, dir) =>
+      Relational.topSupplierRevenue(table(s, dir, "supplier"),
+        table(s, dir, "lineitem"), "1996-01-01", "1996-04-01"),
+      // winner selected by EXACT decimal equality against the view max
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS r
@@ -1907,18 +560,96 @@ object SparkEntry {
         |SELECT s_suppkey, s_name, CAST(r AS DOUBLE) AS total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE r = (SELECT max(r) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    // raw-double filter compares are identical in both engines (same
-    // parquet values, same literals); the product accumulates in decimal
-    "rel_revenue_delta" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    // TPC-H Q6 shape: pure scan-filter into one global aggregate
+    query("rel_revenue_delta", (s, dir) =>
+      Relational.discountRevenueDelta(table(s, dir, "lineitem"),
+        "1996-01-01", "1997-01-01"),
+      // raw-double filter compares are identical in both engines (same
+      // parquet values, same literals); the product accumulates in decimal
       """SELECT count(*) AS n_items,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue_delta
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24.0""".stripMargin,
-    // independent derivation: the textbook correlated EXISTS/NOT EXISTS
-    // spelling, deliberately NOT the Spark side's window decorrelation
-    "rel_sole_late_supplier" ->
+        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24.0""".stripMargin),
+    // deterministic MODE (argmax-of-count with pinned tie-break)
+    query("rel_mode_priority", (s, dir) =>
+      Relational.modalPriorityPerSegment(table(s, dir, "customer"),
+        table(s, dir, "orders")),
+      """WITH c AS (
+        |  SELECT c_mktsegment, o_orderpriority, count(*) AS n
+        |  FROM orders JOIN customer ON o_custkey = c_custkey
+        |  GROUP BY 1, 2),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY c_mktsegment ORDER BY n DESC, o_orderpriority) AS rn FROM c)
+        |SELECT c_mktsegment, o_orderpriority AS modal_priority, n
+        |FROM r WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin),
+    // 2-D skyline (Pareto frontier) as distributed prefix-min over the
+    // price order — never the definitional O(n^2) dominance self-join
+    query("rel_skyline", (s, dir) =>
+      Relational.skyline2d(table(s, dir, "part")),
+      // skyline ground truth: the definitional NOT EXISTS dominance test —
+      // the engine's prefix-min decomposition must reproduce it exactly,
+      // including equal-(price,size) twins staying
+      """WITH p AS (SELECT p_partkey, CAST(p_retailprice AS DECIMAL(18,2)) AS pr,
+        |    CAST(p_size AS BIGINT) AS sz FROM part)
+        |SELECT a.p_partkey, CAST(a.pr AS DOUBLE) AS p_retailprice, a.sz AS p_size
+        |FROM p a
+        |WHERE NOT EXISTS (SELECT 1 FROM p b
+        |  WHERE b.pr <= a.pr AND b.sz <= a.sz AND (b.pr < a.pr OR b.sz < a.sz))
+        |ORDER BY p_retailprice, p_size, p_partkey""".stripMargin),
+    // TPC-H Q2 shape: correlated min-cost scalar subquery decorrelated
+    // into a min-agg + equi-join; lineitem pre-aggregated to offer grain
+    // before any join, dimensions broadcast
+    query("rel_min_cost_supplier", (s, dir) =>
+      Relational.minCostSupplier(table(s, dir, "lineitem"),
+        table(s, dir, "supplier"), table(s, dir, "nation"),
+        table(s, dir, "region"), table(s, dir, "part")),
+      // Q2-shape ground truth: the same decorrelated min-join spelling —
+      // cost is a MIN of stored doubles, so the equality join is exact
+      """WITH offers AS (SELECT l_partkey, l_suppkey, min(l_extendedprice) AS cost
+        |  FROM lineitem GROUP BY 1, 2),
+        |rs AS (SELECT s_suppkey, s_name, s_acctbal, n_name
+        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'),
+        |ro AS (SELECT o.cost, rs.s_suppkey, rs.s_name, rs.s_acctbal, rs.n_name,
+        |    p.p_partkey, p.p_brand
+        |  FROM offers o JOIN rs ON o.l_suppkey = rs.s_suppkey
+        |  JOIN part p ON o.l_partkey = p.p_partkey
+        |  WHERE p.p_type = 'STANDARD'),
+        |m AS (SELECT p_partkey AS mk, min(cost) AS mc FROM ro GROUP BY 1)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
+        |  cost AS min_cost
+        |FROM ro JOIN m ON p_partkey = mk AND cost = mc
+        |ORDER BY s_acctbal DESC, s_name, p_partkey, ro.s_suppkey LIMIT 100""".stripMargin),
+    // incremental view maintenance: signed-delta algebra folds a
+    // deterministic delete/update/insert batch into the stored GROUP BY
+    // view (delta aggregated to group grain, broadcast merge); the
+    // oracle recomputes the post-delta view from scratch
+    query("rel_ivm_groupby", (s, dir) =>
+      graft.relational.Ivm.ivmGroupBy(table(s, dir, "orders")),
+      // IVM ground truth: recompute the post-delta view from scratch —
+      // survivors (non-deleted, +10.00 when updated) plus the %13 insert
+      // copies at +5.00 — so any drift in the incremental algebra fails
+      """WITH survivors AS (
+        |  SELECT o_orderpriority,
+        |    CASE WHEN o_orderkey % 7 = 0
+        |         THEN CAST(o_totalprice AS DECIMAL(18,2)) + CAST('10.00' AS DECIMAL(18,2))
+        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
+        |  FROM orders WHERE o_orderkey % 11 <> 0
+        |  UNION ALL
+        |  SELECT o_orderpriority,
+        |    CAST(o_totalprice AS DECIMAL(18,2)) + CAST('5.00' AS DECIMAL(18,2))
+        |  FROM orders WHERE o_orderkey % 13 = 0)
+        |SELECT o_orderpriority, count(*) AS n_orders,
+        |  CAST(sum(price) AS DOUBLE) AS sum_price
+        |FROM survivors GROUP BY 1 ORDER BY 1""".stripMargin),
+    // TPC-H Q21 shape: double-correlated EXISTS/NOT EXISTS decorrelated
+    // to one keyed aggregate + same-key window sums
+    query("rel_sole_late_supplier", (s, dir) =>
+      Relational.soleLateSupplier(table(s, dir, "supplier"),
+        table(s, dir, "orders"), table(s, dir, "lineitem")),
+      // independent derivation: the textbook correlated EXISTS/NOT EXISTS
+      // spelling, deliberately NOT the Spark side's window decorrelation
       """WITH ps AS (
         |  SELECT l_orderkey, l_suppkey,
         |    max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END) AS late
@@ -1933,8 +664,13 @@ object SparkEntry {
         |  AND NOT EXISTS (SELECT 1 FROM ps q WHERE q.l_orderkey = p.l_orderkey
         |                  AND q.l_suppkey <> p.l_suppkey AND q.late = 1)
         |GROUP BY 1, 2
-        |ORDER BY n_orders DESC, s_suppkey LIMIT 10""".stripMargin,
-    "rel_nation_trade" ->
+        |ORDER BY n_orders DESC, s_suppkey LIMIT 10""".stripMargin),
+    // TPC-H Q7 shape: bilateral nation trade volume by ship year
+    query("rel_nation_trade", (s, dir) =>
+      Relational.nationTradeVolume(table(s, dir, "lineitem"),
+        table(s, dir, "orders"), table(s, dir, "customer"),
+        table(s, dir, "supplier"), table(s, dir, "nation"),
+        "NATION_1", "NATION_2"),
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -1946,8 +682,13 @@ object SparkEntry {
         |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "rel_market_share" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    // TPC-H Q8 shape: one nation's share of a region's part-type revenue
+    query("rel_market_share", (s, dir) =>
+      Relational.marketShare(table(s, dir, "lineitem"), table(s, dir, "orders"),
+        table(s, dir, "customer"), table(s, dir, "supplier"),
+        table(s, dir, "part"), table(s, dir, "nation"),
+        table(s, dir, "region"), "STANDARD", "ASIA", "NATION_1"),
       """WITH base AS (
         |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
         |    n1.n_name AS supp_nation,
@@ -1965,16 +706,22 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN rev
         |    ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
         |  / CAST(sum(rev) AS DOUBLE) AS mkt_share
-        |FROM base GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rel_order_count_dist" ->
+        |FROM base GROUP BY 1 ORDER BY 1""".stripMargin),
+    // TPC-H Q13 shape: aggregate-of-aggregate order-count histogram
+    query("rel_order_count_dist", (s, dir) =>
+      Relational.orderCountDistribution(table(s, dir, "customer"),
+        table(s, dir, "orders"), "1-URGENT"),
       """WITH pc AS (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY 1)
         |SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM pc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "rel_promo_revenue" ->
+        |FROM pc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    // TPC-H Q14 shape: conditional-aggregate promo revenue ratio
+    query("rel_promo_revenue", (s, dir) =>
+      Relational.promoRevenue(table(s, dir, "lineitem"), table(s, dir, "part"),
+        "1997-03-01", "1997-04-01"),
       """SELECT
         |  CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
         |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -1985,38 +732,35 @@ object SparkEntry {
         |    ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
         |  / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS promo_pct
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-03-01' AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
-    "rel_supplier_variety" ->
+        |WHERE l_shipdate >= TIMESTAMP '1997-03-01' AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin),
+    // TPC-H Q16 shape: distinct-supplier counts with NOT-IN denylist
+    query("rel_supplier_variety", (s, dir) =>
+      Relational.supplierVariety(table(s, dir, "lineitem"),
+        table(s, dir, "part"), table(s, dir, "supplier"), "Brand#9",
+        Seq(1, 5, 10, 15, 20, 25, 30, 35)),
       """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE p_brand <> 'Brand#9' AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
         |  AND l_suppkey IS NOT NULL
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    // Q9-adapted profit: one decimal pass of rev - cost per line, the
-    // same EXTRACT(year) + DECIMAL(18,2) conventions as rel_nation_trade
-    "rel_product_profit" ->
-      """SELECT n_name AS nation,
-        |  CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |    - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS profit
-        |FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "rel_disjunctive_join" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    // TPC-H Q19 shape: OR-of-ANDs join predicate with per-side pushdown
+    query("rel_disjunctive_join", (s, dir) =>
+      Relational.disjunctiveRevenue(table(s, dir, "lineitem"),
+        table(s, dir, "part")),
       """SELECT
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  CAST(count(*) AS BIGINT) AS n_items
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "rel_excess_share" ->
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
+    // TPC-H Q20 shape: share-of-part-total threshold via reused window
+    query("rel_excess_share", (s, dir) =>
+      Relational.excessShareSuppliers(table(s, dir, "lineitem"),
+        table(s, dir, "part"), table(s, dir, "supplier"),
+        table(s, dir, "nation"), "NATION_11", "small", 10),
       """WITH sp AS (SELECT p_partkey FROM part WHERE p_name LIKE 'small%'),
         |  ps AS (
         |    SELECT l_partkey, l_suppkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
@@ -2028,8 +772,11 @@ object SparkEntry {
         |  JOIN supplier ON ps.l_suppkey = s_suppkey
         |  JOIN nation ON s_nationkey = n_nationkey
         |WHERE n_name = 'NATION_11' AND ps.sq * 100 > tot.tq * 10
-        |ORDER BY s_suppkey""".stripMargin,
-    "rel_idle_capital" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    // TPC-H Q22 shape: scalar mean threshold + anti-join, by segment
+    query("rel_idle_capital", (s, dir) =>
+      Relational.idleCapital(table(s, dir, "customer"),
+        table(s, dir, "orders"), "2001-01-01"),
       """WITH m AS (
         |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS mean_bal
         |  FROM customer WHERE c_acctbal > 0)
@@ -2039,82 +786,68 @@ object SparkEntry {
         |WHERE c_acctbal > mean_bal
         |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = customer.c_custkey
         |                  AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rel_mode_priority" ->
-      """WITH c AS (
-        |  SELECT c_mktsegment, o_orderpriority, count(*) AS n
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY c_mktsegment ORDER BY n DESC, o_orderpriority) AS rn FROM c)
-        |SELECT c_mktsegment, o_orderpriority AS modal_priority, n
-        |FROM r WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin,
-    // Q2-shape ground truth: the same decorrelated min-join spelling —
-    // cost is a MIN of stored doubles, so the equality join is exact
-    "rel_min_cost_supplier" ->
-      """WITH offers AS (SELECT l_partkey, l_suppkey, min(l_extendedprice) AS cost
-        |  FROM lineitem GROUP BY 1, 2),
-        |rs AS (SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'),
-        |ro AS (SELECT o.cost, rs.s_suppkey, rs.s_name, rs.s_acctbal, rs.n_name,
-        |    p.p_partkey, p.p_brand
-        |  FROM offers o JOIN rs ON o.l_suppkey = rs.s_suppkey
-        |  JOIN part p ON o.l_partkey = p.p_partkey
-        |  WHERE p.p_type = 'STANDARD'),
-        |m AS (SELECT p_partkey AS mk, min(cost) AS mc FROM ro GROUP BY 1)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
-        |  cost AS min_cost
-        |FROM ro JOIN m ON p_partkey = mk AND cost = mc
-        |ORDER BY s_acctbal DESC, s_name, p_partkey, ro.s_suppkey LIMIT 100""".stripMargin,
-    "rel_cube" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // TPC-H Q9 shape (partsupp-free adaptation): profit by nation x year,
+    // one decimal pass for revenue - cost, dims pruned-then-broadcast
+    query("rel_product_profit", (s, dir) =>
+      Relational.productProfit(table(s, dir, "lineitem"),
+        table(s, dir, "orders"), table(s, dir, "supplier"),
+        table(s, dir, "part"), table(s, dir, "nation"), "widget"),
+      // Q9-adapted profit: one decimal pass of rev - cost per line, the
+      // same EXTRACT(year) + DECIMAL(18,2) conventions as rel_nation_trade
+      """SELECT n_name AS nation,
+        |  CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
+        |    - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS profit
+        |FROM lineitem
+        |  JOIN part ON l_partkey = p_partkey
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%widget%'
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
+    query("rel_cube", (s, dir) =>
+      Relational.cubeFlagStatus(table(s, dir, "lineitem")),
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "rel_median" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    query("rel_date_parts", (s, dir) =>
+      Relational.ordersByYearMonth(table(s, dir, "orders")),
+      """SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS y,
+        |  CAST(EXTRACT(month FROM o_orderdate) AS INT) AS m,
+        |  count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders GROUP BY y, m ORDER BY y, m""".stripMargin),
+    query("rel_string_funcs", (s, dir) =>
+      Relational.customerNameFacts(table(s, dir, "customer")),
+      """SELECT c_custkey, upper(c_name) AS name_upper,
+        |  CAST(length(c_name) AS BIGINT) AS name_len,
+        |  substr(c_name, 1, 9) AS name_prefix,
+        |  c_name LIKE '%1%' AS has_one
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    query("rel_median", (s, dir) =>
+      Relational.medianPricePerPriority(table(s, dir, "orders")),
       """SELECT o_orderpriority, quantile_cont(o_totalprice, 0.5) AS median_price, count(*) AS n_orders
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // skyline ground truth: the definitional NOT EXISTS dominance test —
-    // the engine's prefix-min decomposition must reproduce it exactly,
-    // including equal-(price,size) twins staying
-    "rel_skyline" ->
-      """WITH p AS (SELECT p_partkey, CAST(p_retailprice AS DECIMAL(18,2)) AS pr,
-        |    CAST(p_size AS BIGINT) AS sz FROM part)
-        |SELECT a.p_partkey, CAST(a.pr AS DOUBLE) AS p_retailprice, a.sz AS p_size
-        |FROM p a
-        |WHERE NOT EXISTS (SELECT 1 FROM p b
-        |  WHERE b.pr <= a.pr AND b.sz <= a.sz AND (b.pr < a.pr OR b.sz < a.sz))
-        |ORDER BY p_retailprice, p_size, p_partkey""".stripMargin,
-    // IVM ground truth: recompute the post-delta view from scratch —
-    // survivors (non-deleted, +10.00 when updated) plus the %13 insert
-    // copies at +5.00 — so any drift in the incremental algebra fails
-    "rel_ivm_groupby" ->
-      """WITH survivors AS (
-        |  SELECT o_orderpriority,
-        |    CASE WHEN o_orderkey % 7 = 0
-        |         THEN CAST(o_totalprice AS DECIMAL(18,2)) + CAST('10.00' AS DECIMAL(18,2))
-        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
-        |  FROM orders WHERE o_orderkey % 11 <> 0
-        |  UNION ALL
-        |  SELECT o_orderpriority,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) + CAST('5.00' AS DECIMAL(18,2))
-        |  FROM orders WHERE o_orderkey % 13 = 0)
-        |SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM survivors GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rel_grouping_sets" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    query("rel_grouping_sets", (s, dir) =>
+      Relational.groupingSetsFlagStatus(table(s, dir, "lineitem")),
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "rel_window_ntile" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    query("rel_window_ntile", (s, dir) =>
+      Relational.priceQuartilesPerPriority(table(s, dir, "orders")),
       """SELECT o_orderpriority, o_orderkey, o_totalprice,
         |  CAST(ntile(4) OVER w AS INT) AS quartile,
         |  round(percent_rank() OVER w, 4) AS pct_rank
         |FROM orders
         |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderpriority, o_totalprice, o_orderkey""".stripMargin,
-    "rel_shipping_priority" ->
+        |ORDER BY o_orderpriority, o_totalprice, o_orderkey""".stripMargin),
+    query("rel_shipping_priority", (s, dir) =>
+      Relational.shippingPriority(table(s, dir, "customer"),
+        table(s, dir, "orders"), table(s, dir, "lineitem"),
+        "BUILDING", "2000-03-15"),
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM customer JOIN orders ON c_custkey = o_custkey
@@ -2122,21 +855,47 @@ object SparkEntry {
         |WHERE c_mktsegment = 'BUILDING'
         |  AND o_orderdate < TIMESTAMP '2000-03-15' AND l_shipdate > TIMESTAMP '2000-03-15'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "rel_window_first_last" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    query("rel_window_first_last", (s, dir) =>
+      Relational.firstLastPerCustomer(table(s, dir, "orders")),
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  first_value(o_orderkey) OVER w AS cheapest_order,
         |  last_value(o_orderkey) OVER w AS priciest_order
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "rel_price_histogram" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    query("rel_price_histogram", (s, dir) =>
+      Relational.priceHistogram(table(s, dir, "orders")),
       """SELECT CAST(floor(o_totalprice/50000.0) AS BIGINT) AS bucket,
         |  CAST(floor(o_totalprice/50000.0) AS BIGINT)*50000.0 AS lo,
         |  count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "rel_compaction_plan" ->
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
+    // the pre-flight report BEHIND the salting decision: key-multiplicity
+    // deciles from the count-of-counts histogram — never an ntile over
+    // the key domain (single-partition-window hazard at scale)
+    query("rel_skew_deciles", (s, dir) =>
+      graft.relational.LayoutAnalysis.keySkewDeciles(table(s, dir, "orders"),
+        "o_custkey"),
+      // the oracle uses the NAIVE ntile-over-all-keys spelling the engine
+      // deliberately avoids; key interchangeability within a multiplicity
+      // makes the decile aggregates identical
+      """WITH kc AS (SELECT o_custkey AS k, count(*) AS cnt FROM orders GROUP BY 1),
+        |rk AS (SELECT k, cnt, ntile(10) OVER (ORDER BY cnt DESC, k) AS decile FROM kc)
+        |SELECT decile, count(*) AS keys, CAST(sum(cnt) AS BIGINT) AS rows_in_decile,
+        |  round(CAST(sum(cnt) AS DOUBLE) / (SELECT sum(cnt) FROM kc), 4) AS row_share,
+        |  CAST(max(cnt) AS BIGINT) AS max_cnt
+        |FROM rk GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Z-order vs natural layout: files a min/max-pruned scan touches per
+    // range box under each layout — the Delta/Iceberg Z-clustering
+    // arithmetic, exact (file assignment by address RANGE, no global sort)
+    query("rel_zorder_skipping", (s, dir) =>
+      graft.relational.LayoutAnalysis.zorderSkipping(table(s, dir, "lineitem")),
+      zorderOracleSql),
+    // small-file compaction plan: running-sum contiguous binning of the
+    // day-grain file inventory — order-preserving, metadata-sized
+    query("rel_compaction_plan", (s, dir) =>
+      graft.relational.LayoutAnalysis.compactionPlan(table(s, dir, "events")),
       """WITH inv AS (SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS rows_ FROM events GROUP BY 1, 2),
         |b AS (SELECT event_type, day, rows_,
         |        COALESCE(sum(rows_) OVER (PARTITION BY event_type ORDER BY day
@@ -2147,38 +906,92 @@ object SparkEntry {
         |  CAST(sum(rows_) OVER (PARTITION BY event_type, bin) AS BIGINT) AS bin_rows,
         |  CAST(count(*) OVER (PARTITION BY event_type, bin) AS BIGINT) AS bin_files,
         |  CASE WHEN count(*) OVER (PARTITION BY event_type, bin) > 1 THEN 1 ELSE 0 END AS merged
-        |FROM b ORDER BY event_type, day""".stripMargin,
-    // the oracle uses the NAIVE ntile-over-all-keys spelling the engine
-    // deliberately avoids; key interchangeability within a multiplicity
-    // makes the decile aggregates identical
-    "rel_skew_deciles" ->
-      """WITH kc AS (SELECT o_custkey AS k, count(*) AS cnt FROM orders GROUP BY 1),
-        |rk AS (SELECT k, cnt, ntile(10) OVER (ORDER BY cnt DESC, k) AS decile FROM kc)
-        |SELECT decile, count(*) AS keys, CAST(sum(cnt) AS BIGINT) AS rows_in_decile,
-        |  round(CAST(sum(cnt) AS DOUBLE) / (SELECT sum(cnt) FROM kc), 4) AS row_share,
-        |  CAST(max(cnt) AS BIGINT) AS max_cnt
-        |FROM rk GROUP BY 1 ORDER BY 1""".stripMargin,
-    "rel_zorder_skipping" -> zorderOracleSql,
-    "rel_salted_agg" ->
+        |FROM b ORDER BY event_type, day""".stripMargin),
+    // skew-safe two-phase aggregation: content-derived salts bound the
+    // per-reducer key cardinality; decimal values make the two-phase sum
+    // exact, so the oracle is the plain GROUP BY.
+    query("rel_salted_agg", (s, dir) => {
+      val li = table(s, dir, "lineitem")
+        .withColumn("q", col("l_quantity").cast("decimal(18,2)"))
+      graft.relational.Skew.saltedCountSum(li, "l_returnflag", "q", 8)
+        .select(col("l_returnflag"), col("n"),
+          col("total").cast("double").as("total"))
+        .orderBy("l_returnflag")
+    },
       """SELECT l_returnflag, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "rel_bucketed_join" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // pre-planned salted join (the AQE-independent skew weapon): hot keys
+    // spread over `salts` reducers, small side replicated salts times. No
+    // false/lost matches by construction, so the oracle is the plain join.
+    query("rel_salted_join", (s, dir) => {
+      val small = table(s, dir, "customer")
+        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
+      graft.relational.Skew.saltedJoin(table(s, dir, "orders"), small,
+          "o_custkey", 8)
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
+        .orderBy("c_mktsegment")
+    },
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "rel_bloom_join" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    // bucketed co-location: one-time bucket write, then a shuffle-free
+    // join (BucketingSpec pins zero Exchange); results equal the plain
+    // join, which is the oracle.
+    query("rel_bucketed_join", (s, dir) => {
+      // applicationId in the path: two concurrent harness processes on the
+      // same sfDir must not overwrite each other's bucket files mid-read
+      val base = java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir"),
+        "graft_buckets_" + s.sparkContext.applicationId +
+          "_" + Integer.toHexString(dir.hashCode))
+      graft.relational.Bucketing.writeBucketed(table(s, dir, "orders"),
+        "graft_b_orders", "o_custkey", 16, Some(s"$base/orders"))
+      graft.relational.Bucketing.writeBucketed(
+        table(s, dir, "customer").select("c_custkey", "c_mktsegment"),
+        "graft_b_customer", "c_custkey", 16, Some(s"$base/customer"))
+      graft.relational.Bucketing.coLocatedJoin(s,
+          "graft_b_orders", "graft_b_customer", "o_custkey", "c_custkey")
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
+        .orderBy("c_mktsegment")
+    },
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    // bloom runtime filter: big side pre-filtered by a literal-embedded
+    // bloom of the dim keys BEFORE its shuffle; no false negatives, so the
+    // result — and the oracle — is exactly the plain join.
+    query("rel_bloom_join", (s, dir) => {
+      val cust = table(s, dir, "customer")
+        .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
+      graft.relational.RuntimeFilters
+        .bloomPrefilteredJoin(table(s, dir, "orders"), "o_custkey", cust, "c_custkey")
+        .groupBy("c_custkey")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("spent"))
+        .orderBy("c_custkey")
+    },
       """SELECT c_custkey, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spent
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    // full ER replay: same md5 char-drop perturbation, same (first token,
-    // brand, type) blocking with the same hot-block drop, DuckDB's own
-    // jaro_winkler_similarity (the expression is pinned to its
-    // semantics), same round(6)+argmax resolution
-    "rel_fuzzy_link" ->
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    // blocked fuzzy record linkage: md5-perturbed listing feed matched
+    // back to the catalog by the Jaro-Winkler codegen kernel — block,
+    // score, argmax; candidates bounded by (first token, brand), the
+    // feed side broadcast so the catalog never shuffles to be scored
+    query("rel_fuzzy_link", (s, dir) =>
+      graft.relational.EntityResolution.fuzzyLink(table(s, dir, "part")),
+      // full ER replay: same md5 char-drop perturbation, same (first token,
+      // brand, type) blocking with the same hot-block drop, DuckDB's own
+      // jaro_winkler_similarity (the expression is pinned to its
+      // semantics), same round(6)+argmax resolution
       """WITH c AS (SELECT p_partkey, p_brand, p_type,
         |    p_name || ' ' || p_brand || ' ' || p_type AS t FROM part),
         |cl0 AS (SELECT p_partkey, p_brand, p_type, t AS clean_title,
@@ -2202,11 +1015,18 @@ object SparkEntry {
         |  FROM cand)
         |SELECT dirty_id, p_partkey AS matched_partkey, jw,
         |  p_partkey = dirty_id AS exact_self
-        |FROM r WHERE rk = 1 ORDER BY dirty_id""".stripMargin,
-    // sorted-neighborhood oracle: the band join is an implementation
-    // detail — the oracle spells the DEFINITION (all pairs with rank gap
-    // in [1, window)), so the banding must lose nothing
-    "rel_sorted_neighborhood" -> {
+        |FROM r WHERE rk = 1 ORDER BY dirty_id""".stripMargin),
+    // sorted-neighborhood catalog self-dedup: rank by title within
+    // brand, compare only rank-adjacent records (O(n*window) candidates
+    // at ANY skew — the structural guarantee blocking lacks), score
+    // with the same JW kernel
+    query("rel_sorted_neighborhood", (s, dir) =>
+      graft.relational.EntityResolution.sortedNeighborhoodPairs(
+        table(s, dir, "part")),
+      // sorted-neighborhood oracle: the band join is an implementation
+      // detail — the oracle spells the DEFINITION (all pairs with rank gap
+      // in [1, window)), so the banding must lose nothing
+      {
       import graft.relational.EntityResolution.{DefaultSnmMinJw, DefaultSnmWindow}
       s"""WITH c AS (SELECT p_partkey, p_brand,
          |    p_name || ' ' || p_brand || ' ' || p_type AS t FROM part),
@@ -2220,54 +1040,33 @@ object SparkEntry {
          |  AND b.rk - a.rk BETWEEN 1 AND ${DefaultSnmWindow - 1}
          |WHERE round(jaro_winkler_similarity(a.t, b.t), 6) >= $DefaultSnmMinJw
          |ORDER BY a.p_brand, id_a, id_b""".stripMargin
-    },
-    // TextRank oracle: 3 unrolled weighted-PageRank rounds (the
-    // dedup_pagerank pattern) with DECIMAL(28,18) neighbor sums — the
-    // order-independence recipe that makes the rank doubles bit-equal
-    // across engines, so the top-k cut cannot straddle an ulp
-    "text_textrank" -> {
-      import graft.textstats.TextAnalysis.{DefaultTextRankDamping, DefaultTextRankTopK}
-      val d = DefaultTextRankDamping
-      val rounds = (1 to graft.textstats.TextAnalysis.DefaultTextRankIters).map { t =>
-        s"""p$t AS (SELECT e.dst AS node,
-           |    (CAST(1 AS DOUBLE) - CAST($d AS DOUBLE)) / nn.n
-           |      + CAST($d AS DOUBLE) *
-           |        CAST(sum(CAST((p.pr * e.w) / dg.wd AS DECIMAL(28,18))) AS DOUBLE) AS pr
-           |  FROM edges e JOIN p${t - 1} p ON p.node = e.src
-           |    JOIN wdeg dg ON dg.src = e.src, nn
-           |  GROUP BY e.dst, nn.n)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH tk0 AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-         |e0 AS (SELECT tk[i] AS t, tk[i+1] AS u
-         |  FROM (SELECT tk, unnest(generate_series(1, len(tk)-1)) AS i FROM tk0 WHERE len(tk) >= 2)
-         |  WHERE tk[i] <> tk[i+1]),
-         |eu AS (SELECT t AS src, u AS dst FROM e0 UNION ALL SELECT u, t FROM e0),
-         |edges AS (SELECT src, dst, count(*) AS w FROM eu GROUP BY 1, 2),
-         |wdeg AS (SELECT src, sum(w) AS wd FROM edges GROUP BY src),
-         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM wdeg),
-         |p0 AS (SELECT src AS node, CAST(1 AS DOUBLE) / nn.n AS pr FROM wdeg, nn),
-         |$rounds,
-         |rk AS (SELECT node, pr, row_number() OVER (ORDER BY pr DESC, node) AS rk
-         |  FROM p${graft.textstats.TextAnalysis.DefaultTextRankIters})
-         |SELECT node AS term, round(pr, 6) AS textrank, CAST(rk AS BIGINT) AS rk
-         |FROM rk WHERE rk <= $DefaultTextRankTopK ORDER BY rk""".stripMargin
-    },
-    "rel_date_parts" ->
-      """SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS y,
-        |  CAST(EXTRACT(month FROM o_orderdate) AS INT) AS m,
-        |  count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY y, m ORDER BY y, m""".stripMargin,
-    "rel_string_funcs" ->
-      """SELECT c_custkey, upper(c_name) AS name_upper,
-        |  CAST(length(c_name) AS BIGINT) AS name_len,
-        |  substr(c_name, 1, 9) AS name_prefix,
-        |  c_name LIKE '%1%' AS has_one
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+    }),
+    // association mining: within-order part pairs (basket-size-bounded),
+    // support filter BEFORE the stats joins, lift from exact counts
+    query("rel_basket_lift", (s, dir) =>
+      Relational.basketLift(table(s, dir, "lineitem")),
+      // basket pairs from the within-order self-join, support >= 2, lift
+      // from exact counts in one fixed double tree
+      """WITH b AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
+        |totals AS (SELECT part, count(*) AS cnt FROM b GROUP BY part),
+        |n AS (SELECT CAST(count(DISTINCT okey) AS BIGINT) AS n_orders FROM b),
+        |pairs AS (SELECT a.part AS part_a, bb.part AS part_b, count(*) AS support
+        |  FROM b a JOIN b bb ON a.okey = bb.okey AND a.part < bb.part
+        |  GROUP BY 1, 2 HAVING count(*) >= 2)
+        |SELECT part_a, part_b, CAST(support AS BIGINT) AS support,
+        |  CAST(ta.cnt AS BIGINT) AS cnt_a, CAST(tb.cnt AS BIGINT) AS cnt_b,
+        |  round(CAST(support AS DOUBLE) * CAST(n_orders AS DOUBLE) /
+        |    (CAST(ta.cnt AS DOUBLE) * CAST(tb.cnt AS DOUBLE)), 4) AS lift
+        |FROM pairs JOIN totals ta ON ta.part = part_a
+        |JOIN totals tb ON tb.part = part_b CROSS JOIN n
+        |ORDER BY part_a, part_b""".stripMargin),
 
-    // exact-integer window sums -> identical double expression tree (the
-    // monthlyPriceProfile recipe); current hour excluded from its baseline
-    "ev_hourly_anomaly" ->
+    // ---- event-time surface (SURVEY §7.3 step 3, batch form) ----
+    // aggregate-then-window: trailing-24h z-score over one row per hour
+    query("ev_hourly_anomaly", (s, dir) =>
+      Events.hourlyAnomaly(table(s, dir, "events")),
+      // exact-integer window sums -> identical double expression tree (the
+      // monthlyPriceProfile recipe); current hour excluded from its baseline
       """WITH h AS (SELECT date_trunc('hour', ts) AS hour, count(*) AS n FROM events GROUP BY 1),
         |s AS (SELECT hour, n,
         |        count(*) OVER w AS c,
@@ -2277,19 +1076,22 @@ object SparkEntry {
         |SELECT strftime(hour, '%Y-%m-%d %H:%M:%S') AS hour, n,
         |  CASE WHEN c > 1 AND (sxx - CAST(sx AS DOUBLE)*sx/c) > 0
         |       THEN round((n - CAST(sx AS DOUBLE)/c) / sqrt((sxx - CAST(sx AS DOUBLE)*sx/c)/(c-1)), 4) END AS z_score
-        |FROM s ORDER BY hour""".stripMargin,
-    "ev_tumbling_hourly" ->
+        |FROM s ORDER BY hour""".stripMargin),
+    query("ev_tumbling_hourly", (s, dir) =>
+      Events.tumblingHourly(table(s, dir, "events")),
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start, event_type,
         |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "ev_sliding_hourly" ->
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
+    query("ev_sliding_hourly", (s, dir) =>
+      Events.slidingHourly(table(s, dir, "events")),
       """WITH b AS (SELECT value, ts, time_bucket(INTERVAL '30 minutes', ts) AS b30 FROM events),
         |w AS (SELECT unnest([b30, b30 - INTERVAL '30 minutes']) AS window_start, value, ts FROM b)
         |SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
         |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM w WHERE ts >= window_start AND ts < window_start + INTERVAL '60 minutes'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ev_sessionize" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    query("ev_sessionize", (s, dir) =>
+      Events.sessionize(table(s, dir, "events")),
       """WITH e AS (SELECT user_id, event_id, ts,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us FROM events),
         |s AS (SELECT user_id, event_id, ts,
@@ -2300,13 +1102,17 @@ object SparkEntry {
         |SELECT user_id, session_id, count(*) AS n_events,
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_end
-        |FROM n GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    // same session CTE as ev_sessionize, then the sweep: +1/-1 session
-    // boundaries, per-day running sum in (t, start-before-end) order,
-    // plus a midnight carry count per day (sessions open across the
-    // boundary). Closed intervals: an end at the same instant as a start
-    // still overlaps it, hence d DESC in the sweep order.
-    "ev_concurrency" ->
+        |FROM n GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
+    // peak concurrent sessions per day, sweep-line form: +1/-1 session
+    // boundaries, per-DAY running sum + one broadcast midnight carry row
+    // per day — no interval self-join, no global single-task sort
+    query("ev_concurrency", (s, dir) =>
+      Events.concurrencyDaily(table(s, dir, "events")),
+      // same session CTE as ev_sessionize, then the sweep: +1/-1 session
+      // boundaries, per-day running sum in (t, start-before-end) order,
+      // plus a midnight carry count per day (sessions open across the
+      // boundary). Closed intervals: an end at the same instant as a start
+      // still overlaps it, hence d DESC in the sweep order.
       """WITH e AS (SELECT user_id, event_id, ts,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us FROM events),
         |s AS (SELECT user_id, event_id, ts,
@@ -2330,10 +1136,14 @@ object SparkEntry {
         |SELECT strftime(m.day, '%Y-%m-%d') AS day, m.max_concurrent,
         |  strftime(min(r.t), '%Y-%m-%d %H:%M:%S.%f') AS peak_at
         |FROM mx m JOIN run r ON r.day = m.day AND r.conc = m.max_concurrent
-        |GROUP BY m.day, m.max_concurrent ORDER BY 1""".stripMargin,
-    // same gaps-and-islands chain keyed (user_id, event_type); the kept
-    // event is the burst head row, unique per burst by construction
-    "ev_dedup_bursts" ->
+        |GROUP BY m.day, m.max_concurrent ORDER BY 1""".stripMargin),
+    // telemetry burst dedup (keep-first within 300 s per user+type):
+    // gaps-and-islands, windows keyed (user_id, event_type); reports the
+    // collapsed bursts (the drop-list)
+    query("ev_dedup_bursts", (s, dir) =>
+      Events.burstDedup(table(s, dir, "events")),
+      // same gaps-and-islands chain keyed (user_id, event_type); the kept
+      // event is the burst head row, unique per burst by construction
       """WITH e AS (SELECT user_id, event_type, event_id, ts,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS prev_us FROM events),
         |h AS (SELECT *, (prev_us IS NULL OR epoch_us(ts) - prev_us > 300000000) AS head FROM e),
@@ -2345,279 +1155,38 @@ object SparkEntry {
         |  min(CASE WHEN head THEN event_id END) AS kept_event
         |FROM g GROUP BY user_id, event_type, burst
         |HAVING count(*) > 1
-        |ORDER BY user_id, event_type, burst_start""".stripMargin,
-    "ev_user_stats" ->
+        |ORDER BY user_id, event_type, burst_start""".stripMargin),
+    query("ev_user_stats", (s, dir) =>
+      Events.userStats(table(s, dir, "events")),
       """SELECT user_id, count(*) AS n_events, count(DISTINCT event_type) AS n_types,
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS first_seen,
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_seen,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "ev_daily_top_type" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    query("ev_daily_top_type", (s, dir) =>
+      Events.dailyTopType(table(s, dir, "events")),
       """WITH d AS (SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n FROM events GROUP BY 1, 2),
         |r AS (SELECT day, event_type, n, row_number() OVER (PARTITION BY day ORDER BY n DESC, event_type) AS rn FROM d)
-        |SELECT day, event_type, n FROM r WHERE rn = 1 ORDER BY day""".stripMargin,
-    "ev_props_json" ->
-      """SELECT event_type, CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // same init-with-first fold: list_reduce's first element seeds the
-    // accumulator, exactly Spark's aggregate(slice(xs,2,..), xs[1], ..)
-    "ev_ewma_daily" ->
+        |SELECT day, event_type, n FROM r WHERE rn = 1 ORDER BY day""".stripMargin),
+    // EWMA trend per type at alpha=0.5: every step an exact dyadic
+    // average, so both engines fold to bit-identical doubles
+    query("ev_ewma_daily", (s, dir) =>
+      Events.ewmaDaily(table(s, dir, "events")),
+      // same init-with-first fold: list_reduce's first element seeds the
+      // accumulator, exactly Spark's aggregate(slice(xs,2,..), xs[1], ..)
       """WITH d AS (SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n FROM events GROUP BY 1, 2),
         |l AS (SELECT event_type, day, n,
         |        list(CAST(n AS DOUBLE)) OVER (PARTITION BY event_type ORDER BY day) AS xs
         |      FROM d)
         |SELECT event_type, day, CAST(n AS BIGINT) AS n,
         |  round(list_reduce(xs, (a, b) -> 0.5 * b + 0.5 * a), 6) AS ewma
-        |FROM l ORDER BY event_type, day""".stripMargin,
-    "ev_pivot_type_day" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day,
-        |  CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click,
-        |  CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error,
-        |  CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase,
-        |  CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS signup,
-        |  CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS view
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
-    "ev_cohort_retention" ->
-      """WITH c AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day FROM events
-        |           WHERE event_type = 'signup' GROUP BY user_id),
-        |a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
-        |SELECT strftime(c.cohort_day, '%Y-%m-%d') AS cohort_day,
-        |       CAST(date_diff('day', c.cohort_day, a.day) AS BIGINT) AS day_offset,
-        |       count(DISTINCT a.user_id) AS n_users
-        |FROM a JOIN c ON a.user_id = c.user_id
-        |WHERE date_diff('day', c.cohort_day, a.day) >= 0
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-    // A/B readout: same md5 arm rule, z from the identical double tree
-    // (every operand explicitly CAST AS DOUBLE — a bare 1.0 is DECIMAL
-    // in DuckDB and decimal division would round differently)
-    "ev_ab_test" ->
-      """WITH u AS (SELECT user_id,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |  FROM events GROUP BY user_id),
-        |a AS (SELECT conv, CASE WHEN substring(md5(CAST(user_id AS VARCHAR) || ':0'), 1, 1) < '8'
-        |    THEN 'A' ELSE 'B' END AS arm FROM u),
-        |c AS (SELECT arm, count(*) AS n_users, CAST(sum(conv) AS BIGINT) AS n_converted
-        |  FROM a GROUP BY arm),
-        |t AS (SELECT CAST(sum(n_users) AS BIGINT) AS nt, CAST(sum(n_converted) AS BIGINT) AS ct FROM c),
-        |g AS (SELECT arm, n_users, n_converted,
-        |    CAST(n_converted AS DOUBLE) / CAST(n_users AS DOUBLE) AS rate,
-        |    CAST(ct AS DOUBLE) / CAST(nt AS DOUBLE) AS p_pool,
-        |    CAST(nt - n_users AS DOUBLE) AS n_other,
-        |    CAST(ct - n_converted AS DOUBLE) AS co,
-        |    CAST(n_users AS DOUBLE) AS nu
-        |  FROM c, t),
-        |h AS (SELECT *,
-        |    p_pool * (CAST(1 AS DOUBLE) - p_pool) *
-        |      (CAST(1 AS DOUBLE) / nu + CAST(1 AS DOUBLE) / n_other) AS se2
-        |  FROM g)
-        |SELECT arm, n_users, n_converted, round(rate, 6) AS rate,
-        |  round(CASE WHEN n_other > 0 AND se2 > 0
-        |    THEN (rate - co / n_other) / sqrt(se2) ELSE 0.0 END, 6) AS z_score
-        |FROM h ORDER BY arm""".stripMargin,
-    // decay fit: same pooled curve, ln on exact-division rates, decimal
-    // OLS sums, half-life from the UNROUNDED slope
-    "ev_retention_fit" ->
-      """WITH c AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day FROM events
-        |           WHERE event_type = 'signup' GROUP BY user_id),
-        |n0 AS (SELECT count(*) AS n_total FROM c),
-        |a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |curve AS (SELECT CAST(date_diff('day', c.cohort_day, a.day) AS BIGINT) AS day_offset,
-        |    count(DISTINCT a.user_id) AS n_users
-        |  FROM a JOIN c ON a.user_id = c.user_id
-        |  WHERE date_diff('day', c.cohort_day, a.day) >= 0 GROUP BY 1),
-        |cr AS (SELECT day_offset, n_users,
-        |    CAST(n_users AS DOUBLE) / CAST(n_total AS DOUBLE) AS rate FROM curve, n0),
-        |xy AS (SELECT CAST(day_offset AS DOUBLE) AS x, ln(rate) AS y
-        |  FROM cr WHERE day_offset >= 1 AND rate > 0),
-        |s AS (SELECT count(*) AS n,
-        |    sum(CAST(x AS DECIMAL(28,18))) AS sx, sum(CAST(y AS DECIMAL(28,18))) AS sy,
-        |    sum(CAST(x*x AS DECIMAL(28,18))) AS sxx, sum(CAST(x*y AS DECIMAL(28,18))) AS sxy FROM xy),
-        |f AS (SELECT CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-        |    CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
-        |    CAST(sxy AS DOUBLE) AS sxyd FROM s),
-        |g AS (SELECT CASE WHEN nd*sxxd - sxd*sxd = 0 THEN 0.0
-        |    ELSE (nd*sxyd - sxd*syd) / (nd*sxxd - sxd*sxd) END AS sl FROM f)
-        |SELECT day_offset, n_users, round(rate, 6) AS rate,
-        |  round(-sl, 6) AS decay_lambda,
-        |  round(CASE WHEN sl < 0.0 THEN -ln(2.0) / sl ELSE 0.0 END, 6) AS half_life_days
-        |FROM cr, g ORDER BY day_offset""".stripMargin,
-    // independent derivation: DuckDB's native forward ASOF (<=); safe here
-    // because (user_id, ts) purchase rows are unique in this corpus, so
-    // the duplicate-tie rule never engages
-    "ev_asof_next" ->
-      """WITH s AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'signup'),
-        |p AS (SELECT user_id, ts AS pts, value FROM events WHERE event_type = 'purchase')
-        |SELECT s.user_id, s.event_id, strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-        |       p.value AS next_purchase_value
-        |FROM s ASOF LEFT JOIN p ON s.user_id = p.user_id AND s.ts <= p.pts
-        |ORDER BY s.event_id""".stripMargin,
-    "ev_asof_signup" ->
-      """WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
-        |s AS (SELECT user_id, ts AS sts FROM events WHERE event_type = 'signup')
-        |SELECT p.user_id, p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-        |       strftime(s.sts, '%Y-%m-%d %H:%M:%S.%f') AS last_signup
-        |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.ts >= s.sts
-        |ORDER BY p.event_id""".stripMargin,
-    // identical oracle to ev_asof_signup: same semantics, different engine path
-    "ev_asof_exec" ->
-      """WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
-        |s AS (SELECT user_id, ts AS sts FROM events WHERE event_type = 'signup')
-        |SELECT p.user_id, p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
-        |       strftime(s.sts, '%Y-%m-%d %H:%M:%S.%f') AS last_signup
-        |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.ts >= s.sts
-        |ORDER BY p.event_id""".stripMargin,
-    "ev_range_pairs" ->
-      """SELECT a.event_id AS id_a, b.event_id AS id_b
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        | AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000
-        |ORDER BY id_a, id_b""".stripMargin,
-    // SCD-2 replay: same change feed, same lag-collapse of no-op updates,
-    // same row_number/lead interval build; floor(value/50.0) is one
-    // double division both engines evaluate on identical parquet doubles
-    "ev_scd2" ->
-      """WITH c AS (SELECT user_id, ts, event_id,
-        |    CAST(floor(value / 50.0) AS BIGINT) AS tier
-        |  FROM events WHERE event_type = 'purchase'),
-        |d AS (SELECT *, lag(tier) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM c),
-        |k AS (SELECT user_id, ts, event_id, tier FROM d WHERE prev IS NULL OR tier <> prev),
-        |v AS (SELECT user_id, tier, ts,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS version,
-        |    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-        |  FROM k)
-        |SELECT user_id, version, tier,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-        |  strftime(nxt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
-        |  nxt IS NULL AS is_current
-        |FROM v ORDER BY user_id, version""".stripMargin,
-    // basket pairs from the within-order self-join, support >= 2, lift
-    // from exact counts in one fixed double tree
-    "rel_basket_lift" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
-        |totals AS (SELECT part, count(*) AS cnt FROM b GROUP BY part),
-        |n AS (SELECT CAST(count(DISTINCT okey) AS BIGINT) AS n_orders FROM b),
-        |pairs AS (SELECT a.part AS part_a, bb.part AS part_b, count(*) AS support
-        |  FROM b a JOIN b bb ON a.okey = bb.okey AND a.part < bb.part
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT part_a, part_b, CAST(support AS BIGINT) AS support,
-        |  CAST(ta.cnt AS BIGINT) AS cnt_a, CAST(tb.cnt AS BIGINT) AS cnt_b,
-        |  round(CAST(support AS DOUBLE) * CAST(n_orders AS DOUBLE) /
-        |    (CAST(ta.cnt AS DOUBLE) * CAST(tb.cnt AS DOUBLE)), 4) AS lift
-        |FROM pairs JOIN totals ta ON ta.part = part_a
-        |JOIN totals tb ON tb.part = part_b CROSS JOIN n
-        |ORDER BY part_a, part_b""".stripMargin,
-    // spine + carry-group LOCF replay: count-of-observed as group key,
-    // max within (user, group), decimal daily sums cast once at the edge
-    "ev_gap_fill" ->
-      """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS day,
-        |    sum(CAST(value AS DECIMAL(18,2))) AS obs
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |span AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
-        |spine AS (SELECT user_id, CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM span),
-        |j AS (SELECT s.user_id, s.day, d.obs FROM spine s LEFT JOIN daily d USING (user_id, day)),
-        |g AS (SELECT *, count(obs) OVER (PARTITION BY user_id ORDER BY day) AS grp FROM j)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  CAST(max(obs) OVER (PARTITION BY user_id, grp) AS DOUBLE) AS value,
-        |  obs IS NOT NULL AS observed
-        |FROM g ORDER BY user_id, day""".stripMargin,
-    // distinct (user, day) reduction, first-seen by min, calendar-bounded
-    // cumulative window
-    "ev_growth_accounting" ->
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS fd FROM d GROUP BY user_id),
-        |p AS (SELECT day, count(*) AS dau,
-        |    CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END) AS BIGINT) AS new_users
-        |  FROM d JOIN f USING (user_id) GROUP BY day)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, CAST(dau AS BIGINT) AS dau,
-        |  new_users, CAST(dau - new_users AS BIGINT) AS returning_users,
-        |  CAST(sum(new_users) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_users
-        |FROM p ORDER BY day""".stripMargin,
-    // latest-wins CDC apply with 'error' tombstones: one windowed replay
-    "ev_cdc_apply" ->
-      """WITH r AS (SELECT user_id, event_id, event_type, value, ts,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM events)
-        |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-        |  CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS last_value,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS updated_at,
-        |  CAST(n AS BIGINT) AS n_changes
-        |FROM r WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin,
-    // grid spatial join replay: same md5-integer points, same 3x3 cell
-    // candidates, exact integer distances (no FP anywhere)
-    "ev_geo_pairs" ->
-      s"""WITH $geoGridCtes
-        |SELECT a.user_id AS id_a, b.user_id AS id_b,
-        |  CAST((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) AS BIGINT) AS dist2
-        |FROM n a JOIN c b ON a.ncx = b.cx AND a.ncy = b.cy AND a.user_id < b.user_id
-        |WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 2304
-        |ORDER BY id_a, id_b""".stripMargin,
-    "ev_geo_knn" ->
-      s"""WITH $geoGridCtes,
-        |cand AS (SELECT a.user_id AS id, b.user_id AS neighbor_id,
-        |    (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) AS dist2
-        |  FROM n a JOIN c b ON a.ncx = b.cx AND a.ncy = b.cy AND a.user_id <> b.user_id
-        |  WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 2304),
-        |r AS (SELECT id, neighbor_id, dist2,
-        |    row_number() OVER (PARTITION BY id ORDER BY dist2, neighbor_id) AS rnk
-        |  FROM cand)
-        |SELECT id, neighbor_id, CAST(dist2 AS BIGINT) AS dist2, CAST(rnk AS INT) AS "rank"
-        |FROM r WHERE rnk <= 3 ORDER BY id, rnk""".stripMargin,
-    // same grid pairs (2304 = 48^2), neighbor counts, core test at
-    // minPts=3, recursive CC over core-core edges (min-id labels), then
-    // the pinned min-cluster border attachment
-    "ev_geo_dbscan" ->
-      s"""WITH RECURSIVE $geoGridCtes,
-        |pr AS (SELECT a.user_id AS id_a, b.user_id AS id_b
-        |  FROM n a JOIN c b ON a.ncx = b.cx AND a.ncy = b.cy AND a.user_id < b.user_id
-        |  WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 2304),
-        |und AS (SELECT id_a AS id, id_b AS nb FROM pr
-        |        UNION ALL SELECT id_b, id_a FROM pr),
-        |nc AS (SELECT id, count(*) AS nn FROM und GROUP BY id),
-        |core AS (SELECT u.user_id AS id FROM u LEFT JOIN nc ON nc.id = u.user_id
-        |         WHERE COALESCE(nn, 0) + 1 >= 3),
-        |ce AS (SELECT id_a, id_b FROM pr
-        |       WHERE id_a IN (SELECT id FROM core) AND id_b IN (SELECT id FROM core)),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM ce
-        |          UNION SELECT id_b, id_a FROM ce),
-        |reach(src, dst) AS (SELECT src, dst FROM edges
-        |  UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        |cl AS (SELECT src AS id, least(src, min(dst)) AS cluster_id
-        |       FROM reach GROUP BY src),
-        |corelab AS (SELECT core.id, CAST(COALESCE(cl.cluster_id, core.id) AS BIGINT) AS ccl
-        |            FROM core LEFT JOIN cl ON cl.id = core.id),
-        |ba AS (SELECT und.id, min(corelab.ccl) AS bcl
-        |       FROM und JOIN corelab ON corelab.id = und.nb GROUP BY und.id)
-        |SELECT u.user_id,
-        |  CASE WHEN corelab.id IS NOT NULL THEN 'core'
-        |       WHEN ba.bcl IS NOT NULL THEN 'border' ELSE 'noise' END AS role,
-        |  CASE WHEN corelab.id IS NOT NULL THEN corelab.ccl ELSE ba.bcl END AS cluster_id
-        |FROM u LEFT JOIN corelab ON corelab.id = u.user_id
-        |       LEFT JOIN ba ON ba.id = u.user_id
-        |ORDER BY u.user_id""".stripMargin,
-    "ev_transitions" ->
-      """WITH e AS (SELECT event_type AS from_type,
-        |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type FROM events)
-        |SELECT from_type, to_type, count(*) AS n FROM e WHERE to_type IS NOT NULL
-        |GROUP BY from_type, to_type ORDER BY from_type, to_type""".stripMargin,
-    // same chain: row-normalized P + terminal self-loops, uniform start,
-    // 3 unrolled rounds, round(6) anchor; drained types coalesce to 0
-    "ev_markov_stationary" ->
-      """WITH e AS (SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type FROM events),
-        |tr AS (SELECT from_type, to_type, count(*) AS n FROM e WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |oc AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS o FROM tr GROUP BY 1),
-        |ty AS (SELECT DISTINCT t FROM (SELECT from_type AS t FROM tr UNION SELECT to_type FROM tr)),
-        |p AS (SELECT from_type, to_type, CAST(n AS DOUBLE) / o AS p FROM tr JOIN oc USING (from_type)
-        |      UNION ALL SELECT t, t, 1.0 FROM ty WHERE t NOT IN (SELECT from_type FROM tr)),
-        |n0 AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM ty),
-        |pi0 AS (SELECT t, 1.0 / nn AS pi FROM ty CROSS JOIN n0),
-        |pi1 AS (SELECT to_type AS t, sum(pi * p) AS pi FROM p JOIN pi0 ON p.from_type = pi0.t GROUP BY 1),
-        |pi2 AS (SELECT to_type AS t, sum(pi * p) AS pi FROM p JOIN pi1 ON p.from_type = pi1.t GROUP BY 1),
-        |pi3 AS (SELECT to_type AS t, sum(pi * p) AS pi FROM p JOIN pi2 ON p.from_type = pi2.t GROUP BY 1)
-        |SELECT ty.t AS event_type, round(coalesce(pi3.pi, 0.0), 6) AS stationary
-        |FROM ty LEFT JOIN pi3 ON ty.t = pi3.t ORDER BY event_type""".stripMargin,
-    "ev_funnel" ->
+        |FROM l ORDER BY event_type, day""".stripMargin),
+    query("ev_props_json", (s, dir) =>
+      Events.propsKSumByType(table(s, dir, "events")),
+      """SELECT event_type, CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    query("ev_funnel", (s, dir) =>
+      Events.funnelCounts(table(s, dir, "events")),
       """WITH s0 AS (SELECT user_id, min(ts) AS t0 FROM events WHERE event_type = 'signup' GROUP BY user_id),
         |s1 AS (SELECT e.user_id, min(e.ts) AS t1 FROM events e JOIN s0 ON e.user_id = s0.user_id
         |       WHERE e.event_type = 'click' AND e.ts > s0.t0 GROUP BY e.user_id),
@@ -2625,10 +1194,27 @@ object SparkEntry {
         |       WHERE e.event_type = 'purchase' AND e.ts > s1.t1 GROUP BY e.user_id)
         |SELECT (SELECT count(*) FROM s0) AS n_stage0,
         |       (SELECT count(*) FROM s1) AS n_stage1,
-        |       (SELECT count(*) FROM s2) AS n_stage2""".stripMargin,
-    // RFM: the same spelled-out percentile_disc (smallest v with cum >=
-    // ceil(q*n), integer arithmetic), exact cents, one double division
-    "ev_rfm_segments" ->
+        |       (SELECT count(*) FROM s2) AS n_stage2""".stripMargin),
+    // sequence census: each user's first-3-event-type path, counted —
+    // one user-keyed exchange serves the rank window AND the rollup
+    query("ev_funnel_paths", (s, dir) =>
+      Events.topEventPaths(table(s, dir, "events")),
+      // path census: rank under the same total (ts, type, id) key, path
+      // assembled by rank order — never aggregation encounter order
+      """WITH r AS (SELECT user_id, event_type,
+        |    row_number() OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_type, event_id) AS rn FROM events),
+        |p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
+        |  FROM r WHERE rn <= 3 GROUP BY user_id)
+        |SELECT path, count(*) AS n_users FROM p GROUP BY path
+        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin),
+    // RFM quartile census: percentile_disc boundaries spelled as integer
+    // ceil over value HISTOGRAMS (support-bounded), users join three
+    // broadcast 1-row bound frames, <= 64 segment rows out
+    query("ev_rfm_segments", (s, dir) =>
+      Events.rfmSegments(table(s, dir, "events")),
+      // RFM: the same spelled-out percentile_disc (smallest v with cum >=
+      // ceil(q*n), integer arithmetic), exact cents, one double division
       """WITH u AS (SELECT user_id, max(ts) AS last_ts, count(*) AS freq,
         |    sum(CAST(value AS DECIMAL(18,2))) AS money FROM events GROUP BY user_id),
         |r0 AS (SELECT max(CAST(ts AS DATE)) AS ref_date FROM events),
@@ -2658,20 +1244,256 @@ object SparkEntry {
         |  FROM m, rb, fb, mb)
         |SELECT r_q, f_q, m_q, count(*) AS n_users,
         |  CAST(CAST(sum(cents) AS BIGINT) AS DOUBLE) / 100.0 AS total_value
-        |FROM q GROUP BY 1, 2, 3 ORDER BY r_q, f_q, m_q""".stripMargin,
-    // path census: rank under the same total (ts, type, id) key, path
-    // assembled by rank order — never aggregation encounter order
-    "ev_funnel_paths" ->
-      """WITH r AS (SELECT user_id, event_type,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_type, event_id) AS rn FROM events),
-        |p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM r WHERE rn <= 3 GROUP BY user_id)
-        |SELECT path, count(*) AS n_users FROM p GROUP BY path
-        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-
-    // identical per-shard running-max replay in arrival (event_id) order
-    "ev_watermark_late" ->
+        |FROM q GROUP BY 1, 2, 3 ORDER BY r_q, f_q, m_q""".stripMargin),
+    query("ev_pivot_type_day", (s, dir) =>
+      Events.typeByDayPivot(table(s, dir, "events")),
+      """SELECT strftime(ts, '%Y-%m-%d') AS day,
+        |  CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click,
+        |  CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error,
+        |  CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase,
+        |  CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS signup,
+        |  CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS view
+        |FROM events GROUP BY 1 ORDER BY day""".stripMargin),
+    query("ev_transitions", (s, dir) =>
+      Events.typeTransitions(table(s, dir, "events")),
+      """WITH e AS (SELECT event_type AS from_type,
+        |  lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type FROM events)
+        |SELECT from_type, to_type, count(*) AS n FROM e WHERE to_type IS NOT NULL
+        |GROUP BY from_type, to_type ORDER BY from_type, to_type""".stripMargin),
+    // stationary distribution of the type-transition chain: 3 unrolled
+    // power-iteration rounds over a TYPE-cardinality state (self-loops
+    // close terminal types so mass is conserved)
+    query("ev_markov_stationary", (s, dir) =>
+      Events.markovStationary(table(s, dir, "events")),
+      // same chain: row-normalized P + terminal self-loops, uniform start,
+      // 3 unrolled rounds, round(6) anchor; drained types coalesce to 0
+      """WITH e AS (SELECT event_type AS from_type,
+        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type FROM events),
+        |tr AS (SELECT from_type, to_type, count(*) AS n FROM e WHERE to_type IS NOT NULL GROUP BY 1, 2),
+        |oc AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS o FROM tr GROUP BY 1),
+        |ty AS (SELECT DISTINCT t FROM (SELECT from_type AS t FROM tr UNION SELECT to_type FROM tr)),
+        |p AS (SELECT from_type, to_type, CAST(n AS DOUBLE) / o AS p FROM tr JOIN oc USING (from_type)
+        |      UNION ALL SELECT t, t, 1.0 FROM ty WHERE t NOT IN (SELECT from_type FROM tr)),
+        |n0 AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM ty),
+        |pi0 AS (SELECT t, 1.0 / nn AS pi FROM ty CROSS JOIN n0),
+        |pi1 AS (SELECT to_type AS t, sum(pi * p) AS pi FROM p JOIN pi0 ON p.from_type = pi0.t GROUP BY 1),
+        |pi2 AS (SELECT to_type AS t, sum(pi * p) AS pi FROM p JOIN pi1 ON p.from_type = pi1.t GROUP BY 1),
+        |pi3 AS (SELECT to_type AS t, sum(pi * p) AS pi FROM p JOIN pi2 ON p.from_type = pi2.t GROUP BY 1)
+        |SELECT ty.t AS event_type, round(coalesce(pi3.pi, 0.0), 6) AS stationary
+        |FROM ty LEFT JOIN pi3 ON ty.t = pi3.t ORDER BY event_type""".stripMargin),
+    // SCD Type-2 dimension build from the CDC feed: no-op collapse ->
+    // version numbers -> [valid_from, valid_to) intervals, one exchange
+    // by user_id shared by all three window passes
+    query("ev_scd2", (s, dir) =>
+      Events.scdType2(table(s, dir, "events")),
+      // SCD-2 replay: same change feed, same lag-collapse of no-op updates,
+      // same row_number/lead interval build; floor(value/50.0) is one
+      // double division both engines evaluate on identical parquet doubles
+      """WITH c AS (SELECT user_id, ts, event_id,
+        |    CAST(floor(value / 50.0) AS BIGINT) AS tier
+        |  FROM events WHERE event_type = 'purchase'),
+        |d AS (SELECT *, lag(tier) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM c),
+        |k AS (SELECT user_id, ts, event_id, tier FROM d WHERE prev IS NULL OR tier <> prev),
+        |v AS (SELECT user_id, tier, ts,
+        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS INT) AS version,
+        |    lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
+        |  FROM k)
+        |SELECT user_id, version, tier,
+        |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+        |  strftime(nxt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
+        |  nxt IS NULL AS is_current
+        |FROM v ORDER BY user_id, version""".stripMargin),
+    query("ev_cohort_retention", (s, dir) =>
+      Events.cohortRetention(table(s, dir, "events")),
+      """WITH c AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day FROM events
+        |           WHERE event_type = 'signup' GROUP BY user_id),
+        |a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
+        |SELECT strftime(c.cohort_day, '%Y-%m-%d') AS cohort_day,
+        |       CAST(date_diff('day', c.cohort_day, a.day) AS BIGINT) AS day_offset,
+        |       count(DISTINCT a.user_id) AS n_users
+        |FROM a JOIN c ON a.user_id = c.user_id
+        |WHERE date_diff('day', c.cohort_day, a.day) >= 0
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin),
+    // pooled retention curve + exponential-decay OLS (lambda, half-life):
+    // offset-cardinality fit frame, decimal-exact sums
+    query("ev_retention_fit", (s, dir) =>
+      Events.retentionDecayFit(table(s, dir, "events")),
+      // decay fit: same pooled curve, ln on exact-division rates, decimal
+      // OLS sums, half-life from the UNROUNDED slope
+      """WITH c AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day FROM events
+        |           WHERE event_type = 'signup' GROUP BY user_id),
+        |n0 AS (SELECT count(*) AS n_total FROM c),
+        |a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+        |curve AS (SELECT CAST(date_diff('day', c.cohort_day, a.day) AS BIGINT) AS day_offset,
+        |    count(DISTINCT a.user_id) AS n_users
+        |  FROM a JOIN c ON a.user_id = c.user_id
+        |  WHERE date_diff('day', c.cohort_day, a.day) >= 0 GROUP BY 1),
+        |cr AS (SELECT day_offset, n_users,
+        |    CAST(n_users AS DOUBLE) / CAST(n_total AS DOUBLE) AS rate FROM curve, n0),
+        |xy AS (SELECT CAST(day_offset AS DOUBLE) AS x, ln(rate) AS y
+        |  FROM cr WHERE day_offset >= 1 AND rate > 0),
+        |s AS (SELECT count(*) AS n,
+        |    sum(CAST(x AS DECIMAL(28,18))) AS sx, sum(CAST(y AS DECIMAL(28,18))) AS sy,
+        |    sum(CAST(x*x AS DECIMAL(28,18))) AS sxx, sum(CAST(x*y AS DECIMAL(28,18))) AS sxy FROM xy),
+        |f AS (SELECT CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
+        |    CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
+        |    CAST(sxy AS DOUBLE) AS sxyd FROM s),
+        |g AS (SELECT CASE WHEN nd*sxxd - sxd*sxd = 0 THEN 0.0
+        |    ELSE (nd*sxyd - sxd*syd) / (nd*sxxd - sxd*sxd) END AS sl FROM f)
+        |SELECT day_offset, n_users, round(rate, 6) AS rate,
+        |  round(-sl, 6) AS decay_lambda,
+        |  round(CASE WHEN sl < 0.0 THEN -ln(2.0) / sl ELSE 0.0 END, 6) AS half_life_days
+        |FROM cr, g ORDER BY day_offset""".stripMargin),
+    // A/B readout: md5-contract arm assignment, purchase conversion,
+    // two-proportion z on exact counts; one user-keyed agg
+    query("ev_ab_test", (s, dir) =>
+      Events.abTestReport(table(s, dir, "events")),
+      // A/B readout: same md5 arm rule, z from the identical double tree
+      // (every operand explicitly CAST AS DOUBLE — a bare 1.0 is DECIMAL
+      // in DuckDB and decimal division would round differently)
+      """WITH u AS (SELECT user_id,
+        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
+        |  FROM events GROUP BY user_id),
+        |a AS (SELECT conv, CASE WHEN substring(md5(CAST(user_id AS VARCHAR) || ':0'), 1, 1) < '8'
+        |    THEN 'A' ELSE 'B' END AS arm FROM u),
+        |c AS (SELECT arm, count(*) AS n_users, CAST(sum(conv) AS BIGINT) AS n_converted
+        |  FROM a GROUP BY arm),
+        |t AS (SELECT CAST(sum(n_users) AS BIGINT) AS nt, CAST(sum(n_converted) AS BIGINT) AS ct FROM c),
+        |g AS (SELECT arm, n_users, n_converted,
+        |    CAST(n_converted AS DOUBLE) / CAST(n_users AS DOUBLE) AS rate,
+        |    CAST(ct AS DOUBLE) / CAST(nt AS DOUBLE) AS p_pool,
+        |    CAST(nt - n_users AS DOUBLE) AS n_other,
+        |    CAST(ct - n_converted AS DOUBLE) AS co,
+        |    CAST(n_users AS DOUBLE) AS nu
+        |  FROM c, t),
+        |h AS (SELECT *,
+        |    p_pool * (CAST(1 AS DOUBLE) - p_pool) *
+        |      (CAST(1 AS DOUBLE) / nu + CAST(1 AS DOUBLE) / n_other) AS se2
+        |  FROM g)
+        |SELECT arm, n_users, n_converted, round(rate, 6) AS rate,
+        |  round(CASE WHEN n_other > 0 AND se2 > 0
+        |    THEN (rate - co / n_other) / sqrt(se2) ELSE 0.0 END, 6) AS z_score
+        |FROM h ORDER BY arm""".stripMargin),
+    // CDC changelog apply: latest-wins per user with 'error' tombstones —
+    // the compacted-topic materialization; one user-keyed window pass
+    query("ev_cdc_apply", (s, dir) =>
+      Events.cdcApply(table(s, dir, "events")),
+      // latest-wins CDC apply with 'error' tombstones: one windowed replay
+      """WITH r AS (SELECT user_id, event_id, event_type, value, ts,
+        |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
+        |    count(*) OVER (PARTITION BY user_id) AS n
+        |  FROM events)
+        |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
+        |  CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS last_value,
+        |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS updated_at,
+        |  CAST(n AS BIGINT) AS n_changes
+        |FROM r WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin),
+    // calendar densification + LOCF: per-user daily purchase series over
+    // the full day spine, carry-group fill (no IGNORE NULLS dependence)
+    query("ev_gap_fill", (s, dir) =>
+      Events.gapFillDaily(table(s, dir, "events")),
+      // spine + carry-group LOCF replay: count-of-observed as group key,
+      // max within (user, group), decimal daily sums cast once at the edge
+      """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS day,
+        |    sum(CAST(value AS DECIMAL(18,2))) AS obs
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+        |span AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1),
+        |spine AS (SELECT user_id, CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM span),
+        |j AS (SELECT s.user_id, s.day, d.obs FROM spine s LEFT JOIN daily d USING (user_id, day)),
+        |g AS (SELECT *, count(obs) OVER (PARTITION BY user_id ORDER BY day) AS grp FROM j)
+        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
+        |  CAST(max(obs) OVER (PARTITION BY user_id, grp) AS DOUBLE) AS value,
+        |  obs IS NOT NULL AS observed
+        |FROM g ORDER BY user_id, day""".stripMargin),
+    // growth accounting: DAU / new / returning / cumulative per day —
+    // the final cumulative window runs over calendar-bounded rows
+    query("ev_growth_accounting", (s, dir) =>
+      Events.growthAccounting(table(s, dir, "events")),
+      // distinct (user, day) reduction, first-seen by min, calendar-bounded
+      // cumulative window
+      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+        |f AS (SELECT user_id, min(day) AS fd FROM d GROUP BY user_id),
+        |p AS (SELECT day, count(*) AS dau,
+        |    CAST(sum(CASE WHEN day = fd THEN 1 ELSE 0 END) AS BIGINT) AS new_users
+        |  FROM d JOIN f USING (user_id) GROUP BY day)
+        |SELECT strftime(day, '%Y-%m-%d') AS day, CAST(dau AS BIGINT) AS dau,
+        |  new_users, CAST(dau - new_users AS BIGINT) AS returning_users,
+        |  CAST(sum(new_users) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_users
+        |FROM p ORDER BY day""".stripMargin),
+    // grid-bucketed spatial radius self-join over the md5-derived integer
+    // point cloud: ONE exchange by cell, 9x neighborhood on one side only,
+    // each unordered pair produced exactly once — never all-pairs
+    query("ev_geo_pairs", (s, dir) =>
+      graft.spatial.Spatial.radiusPairs(
+        graft.spatial.Spatial.hashPoints(table(s, dir, "events"), "user_id"),
+        "user_id", radius = 48, cell = 64),
+      // grid spatial join replay: same md5-integer points, same 3x3 cell
+      // candidates, exact integer distances (no FP anywhere)
+      s"""WITH $geoGridCtes
+        |SELECT a.user_id AS id_a, b.user_id AS id_b,
+        |  CAST((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) AS BIGINT) AS dist2
+        |FROM n a JOIN c b ON a.ncx = b.cx AND a.ncy = b.cy AND a.user_id < b.user_id
+        |WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 2304
+        |ORDER BY id_a, id_b""".stripMargin),
+    // radius-bounded kNN from the same grid join: 3 nearest per point
+    query("ev_geo_knn", (s, dir) =>
+      graft.spatial.Spatial.gridKnn(
+        graft.spatial.Spatial.hashPoints(table(s, dir, "events"), "user_id"),
+        "user_id", k = 3, radius = 48, cell = 64),
+      s"""WITH $geoGridCtes,
+        |cand AS (SELECT a.user_id AS id, b.user_id AS neighbor_id,
+        |    (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) AS dist2
+        |  FROM n a JOIN c b ON a.ncx = b.cx AND a.ncy = b.cy AND a.user_id <> b.user_id
+        |  WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 2304),
+        |r AS (SELECT id, neighbor_id, dist2,
+        |    row_number() OVER (PARTITION BY id ORDER BY dist2, neighbor_id) AS rnk
+        |  FROM cand)
+        |SELECT id, neighbor_id, CAST(dist2 AS BIGINT) AS dist2, CAST(rnk AS INT) AS "rank"
+        |FROM r WHERE rnk <= 3 ORDER BY id, rnk""".stripMargin),
+    // exact grid DBSCAN over the same points: core/border/noise roles +
+    // min-id cluster labels, border ties pinned to the smallest cluster
+    query("ev_geo_dbscan", (s, dir) =>
+      graft.spatial.Spatial.gridDbscan(
+        graft.spatial.Spatial.hashPoints(table(s, dir, "events"), "user_id"),
+        "user_id", eps = 48, minPts = 3, cell = 64),
+      // same grid pairs (2304 = 48^2), neighbor counts, core test at
+      // minPts=3, recursive CC over core-core edges (min-id labels), then
+      // the pinned min-cluster border attachment
+      s"""WITH RECURSIVE $geoGridCtes,
+        |pr AS (SELECT a.user_id AS id_a, b.user_id AS id_b
+        |  FROM n a JOIN c b ON a.ncx = b.cx AND a.ncy = b.cy AND a.user_id < b.user_id
+        |  WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 2304),
+        |und AS (SELECT id_a AS id, id_b AS nb FROM pr
+        |        UNION ALL SELECT id_b, id_a FROM pr),
+        |nc AS (SELECT id, count(*) AS nn FROM und GROUP BY id),
+        |core AS (SELECT u.user_id AS id FROM u LEFT JOIN nc ON nc.id = u.user_id
+        |         WHERE COALESCE(nn, 0) + 1 >= 3),
+        |ce AS (SELECT id_a, id_b FROM pr
+        |       WHERE id_a IN (SELECT id FROM core) AND id_b IN (SELECT id FROM core)),
+        |edges AS (SELECT id_a AS src, id_b AS dst FROM ce
+        |          UNION SELECT id_b, id_a FROM ce),
+        |reach(src, dst) AS (SELECT src, dst FROM edges
+        |  UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+        |cl AS (SELECT src AS id, least(src, min(dst)) AS cluster_id
+        |       FROM reach GROUP BY src),
+        |corelab AS (SELECT core.id, CAST(COALESCE(cl.cluster_id, core.id) AS BIGINT) AS ccl
+        |            FROM core LEFT JOIN cl ON cl.id = core.id),
+        |ba AS (SELECT und.id, min(corelab.ccl) AS bcl
+        |       FROM und JOIN corelab ON corelab.id = und.nb GROUP BY und.id)
+        |SELECT u.user_id,
+        |  CASE WHEN corelab.id IS NOT NULL THEN 'core'
+        |       WHEN ba.bcl IS NOT NULL THEN 'border' ELSE 'noise' END AS role,
+        |  CASE WHEN corelab.id IS NOT NULL THEN corelab.ccl ELSE ba.bcl END AS cluster_id
+        |FROM u LEFT JOIN corelab ON corelab.id = u.user_id
+        |       LEFT JOIN ba ON ba.id = u.user_id
+        |ORDER BY u.user_id""".stripMargin),
+    // watermark dry-run: replay arrival order (event_id) per shard and
+    // count what a 10-min watermark would drop — the audit behind every
+    // streaming watermark choice; parallelism = shard count, state = one
+    // running max per shard (exactly the streaming engine's own state)
+    query("ev_watermark_late", (s, dir) =>
+      Events.watermarkLateAudit(table(s, dir, "events")),
+      // identical per-shard running-max replay in arrival (event_id) order
       """WITH b AS (SELECT event_id, user_id % 16 AS shard, epoch_us(ts) AS us FROM events),
         |m AS (SELECT shard, us,
         |    max(us) OVER (PARTITION BY shard ORDER BY event_id
@@ -2685,10 +1507,16 @@ object SparkEntry {
         |SELECT shard, count(*) AS n_events, CAST(sum(late) AS BIGINT) AS n_late,
         |  round(CAST(sum(late) AS DOUBLE) / count(*), 4) AS late_frac,
         |  CAST(max(late_us) AS BIGINT) AS max_late_us
-        |FROM f GROUP BY shard ORDER BY shard""".stripMargin,
-    // same (ts, event_id)-lexicographic "preceding" + lookback on both
-    // models; linear credit replays the identical round-then-DECIMAL-sum
-    "ev_attribution" ->
+        |FROM f GROUP BY shard ORDER BY shard""".stripMargin),
+    // multi-touch attribution: last-touch + linear credit per channel in
+    // one report — ONE user-keyed window pass for last-touch, one
+    // lookback-bounded user join for linear; per-(conversion, channel)
+    // credit rounds a single double expression then sums as DECIMAL so
+    // partition order can never move the totals
+    query("ev_attribution", (s, dir) =>
+      Events.attribution(table(s, dir, "events")),
+      // same (ts, event_id)-lexicographic "preceding" + lookback on both
+      // models; linear credit replays the identical round-then-DECIMAL-sum
       """WITH base AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
         |    CAST(value AS DECIMAL(18,2)) AS v
         |  FROM events WHERE event_type IN ('click','view','purchase')),
@@ -2727,18 +1555,22 @@ object SparkEntry {
         |  coalesce(l.value_last, 0.0) AS value_last,
         |  coalesce(n.value_linear, 0.0) AS value_linear
         |FROM lastagg l FULL OUTER JOIN linagg n ON l.channel = n.channel
-        |ORDER BY channel""".stripMargin,
-    "ev_rolling_value" ->
+        |ORDER BY channel""".stripMargin),
+    // time-RANGE window frame: trailing-hour per-user activity
+    query("ev_rolling_value", (s, dir) =>
+      Events.rollingUserValue(table(s, dir, "events")),
       """SELECT event_id, user_id,
         |  count(*) OVER w AS n_trailing,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_trailing
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    // independent long-form derivation (day x type grid, zero-filled) —
-    // deliberately NOT a pivot-then-unpivot mirror of the Spark plan
-    "ev_unpivot" ->
+        |ORDER BY event_id""".stripMargin),
+    // UNPIVOT: the pivot matrix melted back to long form, zeros included
+    query("ev_unpivot", (s, dir) =>
+      Events.unpivotTypeByDay(table(s, dir, "events")),
+      // independent long-form derivation (day x type grid, zero-filled) —
+      // deliberately NOT a pivot-then-unpivot mirror of the Spark plan
       """WITH days AS (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS day FROM events),
         |t AS (SELECT unnest(['click','error','purchase','signup','view']) AS event_type),
         |c AS (SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n
@@ -2746,12 +1578,104 @@ object SparkEntry {
         |SELECT d.day, t.event_type, CAST(coalesce(c.n, 0) AS BIGINT) AS n
         |FROM days d CROSS JOIN t
         |LEFT JOIN c ON c.day = d.day AND c.event_type = t.event_type
-        |ORDER BY d.day, t.event_type""".stripMargin,
+        |ORDER BY d.day, t.event_type""".stripMargin),
+    // FORWARD as-of: each signup gets the user's first purchase value
+    // at-or-after it (the "next event" lookup, mirror of ev_asof_signup),
+    // served by the custom plan node in its forward direction — the
+    // composition form is pinned equal in TemporalJoinsSpec
+    query("ev_asof_next", (s, dir) => {
+      val ev = table(s, dir, "events")
+      val signups = ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts").as("purchase_ts"), col("value"))
+      Relational.fmtTsCols(
+        TemporalJoins.asOfJoinExecForward(signups, purchases, "user_id", "ts",
+          "purchase_ts", "value", "next_purchase_value"),
+        Seq("ts"))
+        .orderBy("event_id")
+    },
+      // independent derivation: DuckDB's native forward ASOF (<=); safe here
+      // because (user_id, ts) purchase rows are unique in this corpus, so
+      // the duplicate-tie rule never engages
+      """WITH s AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'signup'),
+        |p AS (SELECT user_id, ts AS pts, value FROM events WHERE event_type = 'purchase')
+        |SELECT s.user_id, s.event_id, strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
+        |       p.value AS next_purchase_value
+        |FROM s ASOF LEFT JOIN p ON s.user_id = p.user_id AND s.ts <= p.pts
+        |ORDER BY s.event_id""".stripMargin),
+    // as-of join: each purchase gets the user's latest signup at-or-before it
+    query("ev_asof_signup", (s, dir) => {
+      val ev = table(s, dir, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val signups = ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("ts").as("signup_ts"))
+      Relational.fmtTsCols(
+        TemporalJoins.asOfJoin(purchases, signups, "user_id", "ts",
+          "signup_ts", "signup_ts", "last_signup"),
+        Seq("ts", "last_signup"))
+        .orderBy("event_id")
+    },
+      """WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
+        |s AS (SELECT user_id, ts AS sts FROM events WHERE event_type = 'signup')
+        |SELECT p.user_id, p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
+        |       strftime(s.sts, '%Y-%m-%d %H:%M:%S.%f') AS last_signup
+        |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.ts >= s.sts
+        |ORDER BY p.event_id""".stripMargin),
+    // the SAME as-of semantics through the custom plan node
+    // (AsOfJoinNode -> AsOfJoinExec sort-merge): the DuckDB ASOF JOIN
+    // oracle proves the physical operator end-to-end, and equality with
+    // ev_asof_signup's composition form follows from the shared oracle
+    query("ev_asof_exec", (s, dir) => {
+      val ev = table(s, dir, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val signups = ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("ts").as("signup_ts"))
+      Relational.fmtTsCols(
+        TemporalJoins.asOfJoinExec(purchases, signups, "user_id", "ts",
+          "signup_ts", "signup_ts", "last_signup"),
+        Seq("ts", "last_signup"))
+        .orderBy("event_id")
+    },
+      // identical oracle to ev_asof_signup: same semantics, different engine path
+      """WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
+        |s AS (SELECT user_id, ts AS sts FROM events WHERE event_type = 'signup')
+        |SELECT p.user_id, p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts,
+        |       strftime(s.sts, '%Y-%m-%d %H:%M:%S.%f') AS last_signup
+        |FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.ts >= s.sts
+        |ORDER BY p.event_id""".stripMargin),
+    // banded range join: same-user event pairs within 5 minutes
+    query("ev_range_pairs", (s, dir) => {
+      val ev = table(s, dir, "events")
+      val a = ev.select(col("user_id"), col("event_id").as("id_a"), col("ts").as("ts_a"))
+      val b = ev.select(col("user_id"), col("event_id").as("id_b"), col("ts").as("ts_b"))
+      TemporalJoins.bandedRangeJoin(a, b, "user_id", "ts_a", "ts_b", 300)
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b")
+        .orderBy("id_a", "id_b")
+    },
+      """SELECT a.event_id AS id_a, b.event_id AS id_b
+        |FROM events a JOIN events b
+        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
+        | AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000
+        |ORDER BY id_a, id_b""".stripMargin),
 
-    "dedup_exact" ->
+    // ---- dedup surface (north star: training-data pipeline) ----
+    query("dedup_exact", (s, dir) =>
+      Dedup.exactDuplicates(table(s, dir, "documents")),
       """SELECT md5(text) AS content_hash, min(doc_id) AS rep_doc_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin,
-    "dedup_incremental_exact" ->
+        |FROM documents GROUP BY md5(text) ORDER BY content_hash""".stripMargin),
+    // incremental ingestion: even-id docs play the stored corpus (hash
+    // store only — no text), odd-id docs the new batch
+    query("dedup_incremental_exact", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      Dedup.incrementalExactDedup(
+        docs.filter(col("doc_id") % 2 === 1),
+        docs.filter(col("doc_id") % 2 === 0)
+          .select(md5(col("text")).as("content_hash")))
+    },
       """WITH store AS (SELECT DISTINCT md5(text) AS content_hash FROM documents WHERE doc_id % 2 = 0),
         |b AS (SELECT doc_id, md5(text) AS content_hash FROM documents WHERE doc_id % 2 = 1),
         |f AS (SELECT content_hash, min(doc_id) AS first_id FROM b GROUP BY 1)
@@ -2760,14 +1684,40 @@ object SparkEntry {
         |       WHEN b.doc_id <> f.first_id THEN 'dup_batch'
         |       ELSE 'novel' END AS status
         |FROM b JOIN f USING (content_hash) LEFT JOIN store s USING (content_hash)
-        |ORDER BY doc_id""".stripMargin,
-    "dedup_edit_pairs" -> editDistOracleSql,
-    "dedup_jaccard_pairs" -> jaccardOracleSql(0.05),
-    // 3 unrolled PageRank rounds over the 0.05-Jaccard graph; constants
-    // cast to DOUBLE so DuckDB's decimal literals can't diverge from
-    // Spark's double arithmetic ((1 - 0.85) is exact in decimal, not in
-    // binary — the trees must match bit-for-bit before the final round)
-    "dedup_pagerank" -> {
+        |ORDER BY doc_id""".stripMargin),
+    // Bloom membership triage: the store compresses to a fixed-size bit
+    // set (distinct md5-derived positions — broadcastable at ANY store
+    // cardinality, the point of the structure), each batch doc probes its
+    // k positions, and the exact hash join runs alongside to label false
+    // positives. Same even/odd split as dedup_incremental_exact.
+    // The corpus has no verbatim twins (near-dups only), so the batch =
+    // odd-id docs PLUS every 50th doc replanted verbatim under a fresh id
+    // (%50==0 implies even, i.e. stored) — those replants are the true
+    // positives the triage must flag. Oracle replays the same replant.
+    query("dedup_bloom_incremental", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      val replants = docs.filter(col("doc_id") % 50 === 0)
+        .select((col("doc_id") + 800000000L).as("doc_id"), col("text"))
+      Dedup.bloomIncrementalDedup(
+        docs.filter(col("doc_id") % 2 === 1)
+          .select("doc_id", "text").unionByName(replants),
+        docs.filter(col("doc_id") % 2 === 0)
+          .select(md5(col("text")).as("content_hash")))
+    },
+      bloomOracleSql),
+    query("dedup_jaccard_pairs", (s, dir) =>
+      Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.05, maxShingleDf = 100),
+      jaccardOracleSql(0.05)),
+    // duplication-centrality: PageRank over the same near-dup graph —
+    // ranks template hubs that a flat cluster id can't
+    query("dedup_pagerank", (s, dir) =>
+      Dedup.similarityPageRank(table(s, dir, "documents"), 0.05,
+        maxShingleDf = 100),
+      // 3 unrolled PageRank rounds over the 0.05-Jaccard graph; constants
+      // cast to DOUBLE so DuckDB's decimal literals can't diverge from
+      // Spark's double arithmetic ((1 - 0.85) is exact in decimal, not in
+      // binary — the trees must match bit-for-bit before the final round)
+      {
       val rounds = (1 to 3).map { t =>
         val prev = s"p${t - 1}"
         s"""p$t AS (SELECT e.dst AS node,
@@ -2789,35 +1739,15 @@ object SparkEntry {
          |$rounds
          |SELECT node AS doc_id, round(pr, 6) AS pagerank
          |FROM p3 ORDER BY doc_id""".stripMargin
-    },
-    // 8 unrolled peels (monotone => idempotent past the fixed point, so
-    // the Spark loop's early-stop and the full unroll agree); final
-    // degree recomputed among survivors. Each round references the
-    // previous TWICE (both join sides), so the rounds are MATERIALIZED —
-    // DuckDB would otherwise re-inline the whole prefix per reference
-    // and the plan doubles per round (measured: 0.2 s vs minutes).
-    // 3 LPA rounds unrolled: per-round neighbor-label counts and the
-    // (count DESC, label ASC) argmax, from label=id over the same
-    // df-capped 0.5-Jaccard edge set
-    "dedup_communities" -> {
-      val rounds = (1 to 3).map { t =>
-        s"""f$t AS (SELECT e.src AS v, l.lab, count(*) AS c
-           |  FROM edges e JOIN l${t - 1} l ON e.dst = l.v GROUP BY 1, 2),
-           |l$t AS (SELECT v, lab FROM (SELECT v, lab,
-           |    row_number() OVER (PARTITION BY v ORDER BY c DESC, lab) AS rn
-           |  FROM f$t) WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $shingleCtes,
-         |pairs AS (SELECT doc_a, doc_b
-         |  FROM shared JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-         |  WHERE CAST(inter AS DOUBLE)/(sa.sz + sb.sz - inter) >= 0.5),
-         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |l0 AS (SELECT DISTINCT src AS v, src AS lab FROM edges),
-         |$rounds
-         |SELECT v AS doc_id, lab AS community FROM l3 ORDER BY doc_id""".stripMargin
-    },
-    "dedup_kcore" -> {
+    }),
+    // dense interior of the near-dup graph: iterative k-core peel (drop
+    // nodes with < 2 surviving neighbors until stable) — separates
+    // clique-like template farms from weak-tie stars that pairwise
+    // thresholds and PageRank both smear; per-round localCheckpoint,
+    // early-stop at the idempotent fixed point
+    query("dedup_kcore", (s, dir) =>
+      Dedup.kCore(table(s, dir, "documents"), 2, 0.5, maxShingleDf = 100),
+      {
       val peels = (1 to 8).map { t =>
         s"""a$t AS MATERIALIZED (SELECT e.src AS node FROM edges e
            |  JOIN a${t - 1} x ON e.src = x.node JOIN a${t - 1} y ON e.dst = y.node
@@ -2834,12 +1764,18 @@ object SparkEntry {
          |SELECT e.src AS doc_id, count(*) AS core_deg FROM edges e
          |JOIN a8 x ON e.src = x.node JOIN a8 y ON e.dst = y.node
          |GROUP BY e.src ORDER BY doc_id""".stripMargin
-    },
-    // degree-ordered triangle replay: orient each 0.05-Jaccard edge
-    // low-(deg,id) -> high, wedge-join oriented out-edges, close against
-    // the canonical pair set; coefficient = one double division of exact
-    // integers (identical IEEE tree), deg<2 -> NULL
-    "dedup_triangles" ->
+    }),
+    // graph-shape diagnostic over the same near-dup graph: per-doc
+    // triangle count + local clustering coefficient via degree-ordered
+    // wedges (each triangle materialized once at its lowest-rank vertex;
+    // out-degrees bounded O(sqrt(2m)), so hubs never explode deg^2)
+    query("dedup_triangles", (s, dir) =>
+      Dedup.triangleStats(table(s, dir, "documents"), 0.05,
+        maxShingleDf = 100),
+      // degree-ordered triangle replay: orient each 0.05-Jaccard edge
+      // low-(deg,id) -> high, wedge-join oriented out-edges, close against
+      // the canonical pair set; coefficient = one double division of exact
+      // integers (identical IEEE tree), deg<2 -> NULL
       s"""WITH $shingleCtes,
          |pairs AS (SELECT doc_a, doc_b
          |  FROM shared JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
@@ -2865,32 +1801,69 @@ object SparkEntry {
          |    round((CAST(2 AS DOUBLE) * COALESCE(pern.n_triangles, 0))
          |          / (deg.deg * (deg.deg - 1)), 4) END AS clustering
          |FROM deg LEFT JOIN pern USING (node)
-         |ORDER BY doc_id""".stripMargin,
-    // LSH candidates + exact verify: the oracle is the full exact-Jaccard
-    // computation at the same threshold/cap (see the query declaration for
-    // why LSH recall == 1 here).
-    "dedup_minhash_lsh_pairs" -> jaccardOracleSql(0.5),
-    "dedup_containment_pairs" -> containmentOracleSql,
-    "text_winnow_fingerprints" -> winnowFingerprintOracleSql,
-    "dedup_winnow_pairs" -> winnowPairsOracleSql,
-    // prefix filter is lossless => the oracle is the plain definition
-    // (rep-collapsed exact threshold Jaccard), no prefix logic at all
-    "dedup_prefix_jaccard" -> prefixJaccardOracleSql,
-    "mm_phash_pairs" -> phashPairsOracleSql,
-    "mm_phash_clusters" -> phashClustersOracleSql,
-    "text_cdc_chunks" -> cdcChunksOracleSql,
-    "dedup_cdc_shared" -> cdcSharedOracleSql,
-    "sketch_kmv_vocab" -> kmvVocabOracleSql,
-    "sketch_kmv_overlap" -> kmvOverlapOracleSql,
-    "sketch_heavy_hitters" -> heavyHittersOracleSql,
-    "dedup_line_boilerplate" -> lineDedupOracleSql,
-    "dedup_bloom_incremental" -> bloomOracleSql,
-    "dedup_clusters" ->
+         |ORDER BY doc_id""".stripMargin),
+    // Flagship 100 TB dedup: LSH band buckets generate candidates, exact
+    // Jaccard verifies. The bands are xxhash64 (not oracle-able) but the
+    // verified OUTPUT is plain Jaccard >= 0.5, which the oracle computes
+    // exactly. Band geometry (32 hashes / 16 bands): detection p = 0.99 at
+    // s = 0.5, ~1 from s >= 0.65 — the oracle equality holds on THIS
+    // corpus because its pair distribution is bimodal (planted dups at
+    // s >= 0.9, noise below 0.07; no pair sits in the p < 1 band), which
+    // DedupSpec pins. A corpus with borderline-s pairs would need wider
+    // banding or a rows-only declaration.
+    query("dedup_minhash_lsh_pairs", (s, dir) =>
+      Dedup.minhashLshPairs(table(s, dir, "documents"), 32, 16, 3, 0.5,
+        maxShingleDf = 100),
+      // LSH candidates + exact verify: the oracle is the full exact-Jaccard
+      // computation at the same threshold/cap (see the query declaration for
+      // why LSH recall == 1 here).
+      jaccardOracleSql(0.5)),
+    // density-aware communities over the same near-dup graph: 3 rounds
+    // of synchronous label propagation with a deterministic modal-label
+    // tie-break — weak bridges lose the vote that CC would follow
+    query("dedup_communities", (s, dir) =>
+      Dedup.communities(table(s, dir, "documents"), 0.5, maxShingleDf = 100),
+      // 8 unrolled peels (monotone => idempotent past the fixed point, so
+      // the Spark loop's early-stop and the full unroll agree); final
+      // degree recomputed among survivors. Each round references the
+      // previous TWICE (both join sides), so the rounds are MATERIALIZED —
+      // DuckDB would otherwise re-inline the whole prefix per reference
+      // and the plan doubles per round (measured: 0.2 s vs minutes).
+      // 3 LPA rounds unrolled: per-round neighbor-label counts and the
+      // (count DESC, label ASC) argmax, from label=id over the same
+      // df-capped 0.5-Jaccard edge set
+      {
+      val rounds = (1 to 3).map { t =>
+        s"""f$t AS (SELECT e.src AS v, l.lab, count(*) AS c
+           |  FROM edges e JOIN l${t - 1} l ON e.dst = l.v GROUP BY 1, 2),
+           |l$t AS (SELECT v, lab FROM (SELECT v, lab,
+           |    row_number() OVER (PARTITION BY v ORDER BY c DESC, lab) AS rn
+           |  FROM f$t) WHERE rn = 1)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH $shingleCtes,
+         |pairs AS (SELECT doc_a, doc_b
+         |  FROM shared JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
+         |  WHERE CAST(inter AS DOUBLE)/(sa.sz + sb.sz - inter) >= 0.5),
+         |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |l0 AS (SELECT DISTINCT src AS v, src AS lab FROM edges),
+         |$rounds
+         |SELECT v AS doc_id, lab AS community FROM l3 ORDER BY doc_id""".stripMargin
+    }),
+    // pairwise near-dups -> connected components -> keep/drop decision:
+    // the step that makes dedup actionable for a training corpus.
+    query("dedup_clusters", (s, dir) =>
+      Dedup.duplicateClusters(
+        Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.5, maxShingleDf = 100)),
       s"""WITH RECURSIVE $clusterCtes
-         |SELECT doc_id, cluster_id FROM clusters ORDER BY doc_id""".stripMargin,
-    // components + centrality over the SAME 0.5 graph; representative =
-    // rank-1 by (rounded pagerank DESC, doc_id) within each cluster
-    "dedup_cluster_reps" -> {
+         |SELECT doc_id, cluster_id FROM clusters ORDER BY doc_id""".stripMargin),
+    // the keep decision per near-dup group: highest-centrality member
+    query("dedup_cluster_reps", (s, dir) =>
+      Dedup.clusterRepresentatives(table(s, dir, "documents"), 0.5,
+        maxShingleDf = 100),
+      // components + centrality over the SAME 0.5 graph; representative =
+      // rank-1 by (rounded pagerank DESC, doc_id) within each cluster
+      {
       val rounds = (1 to 3).map { t =>
         val prev = s"p${t - 1}"
         s"""p$t AS (SELECT e.dst AS node,
@@ -2913,20 +1886,47 @@ object SparkEntry {
          |SELECT cluster_id, CAST(n_members AS BIGINT) AS n_members,
          |  doc_id AS rep_doc_id, pr AS rep_pagerank
          |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin
+    }),
+    query("dedup_keep_list", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      Dedup.keepList(docs, Dedup.duplicateClusters(
+        Dedup.jaccardPairs(docs, 3, 0.5, maxShingleDf = 100)))
     },
-    "dedup_keep_list" ->
       s"""WITH RECURSIVE $clusterCtes
          |SELECT doc_id FROM documents
          |WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE cluster_id != doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // mirrors the banded generator exactly: the np/nb CTEs replay the
-    // corpus-adaptive geometry search (smallest p >= 8 with 2^p * 32 >= n;
-    // bands scaled to keep the plane-bit budget) in pure integers, then
-    // per-band integer hyperplane sign buckets (plane index = band*p + jj),
-    // distinct candidates across bands, the same normalize-once + dot
-    // verify as the Spark plan. At the verify SF np = the pinned floor,
-    // so the replay is byte-identical to the fixed-width oracle.
-    "dedup_embedding_pairs" ->
+         |ORDER BY doc_id""".stripMargin),
+    // xxhash64-based => deterministic in-engine but not SQL-oracle-able;
+    // driver records rows-only, correctness is property-tested (DedupSpec).
+    // Signature serialized to one sortable STRING cell — the driver's
+    // pandas hash-compare cannot sort ARRAY cells (round-1 checker crash).
+    rowsOnly("dedup_minhash_sigs", (s, dir) =>
+      Dedup.minhashSignatures(table(s, dir, "documents"))
+        .select(col("doc_id"),
+          array_join(transform(col("signature"), _.cast("string")), "_")
+            .as("signature"))
+        .orderBy("doc_id")),
+    rowsOnly("dedup_simhash_sigs", (s, dir) =>
+      Dedup.simhashSignatures(table(s, dir, "documents")).orderBy("doc_id")),
+    // banded-Hamming SimHash pair search (rows-only like the sigs:
+    // xxhash64 bit votes aren't DuckDB-expressible; DedupSpec pins the
+    // planted-dup semantics).
+    rowsOnly("dedup_simhash_pairs", (s, dir) =>
+      Dedup.simhashPairs(table(s, dir, "documents"), 3)),
+    // Primary embedding near-dup: banded sign-bit LSH (4 bands x 8 planes)
+    // + exact-cosine verify. The brute all-pairs generator is spec-only
+    // (round-2 review: a BroadcastNestedLoopJoin over n^2/2 pairs was the
+    // one declared query that dies at 100x scale). The oracle mirrors the
+    // banding exactly, so recall < 1 cannot cause a mismatch.
+    query("dedup_embedding_pairs", (s, dir) =>
+      Dedup.embeddingNearDupPairsBanded(table(s, dir, "embeddings"), 0.4),
+      // mirrors the banded generator exactly: the np/nb CTEs replay the
+      // corpus-adaptive geometry search (smallest p >= 8 with 2^p * 32 >= n;
+      // bands scaled to keep the plane-bit budget) in pure integers, then
+      // per-band integer hyperplane sign buckets (plane index = band*p + jj),
+      // distinct candidates across bands, the same normalize-once + dot
+      // verify as the Spark plan. At the verify SF np = the pinned floor,
+      // so the replay is byte-identical to the fixed-width oracle.
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |np AS (SELECT min(p) AS p FROM generate_series(8, 30) t(p)
         |  WHERE (1::BIGINT << p) * ${graft.similarity.Similarity.LshTargetOccupancy} >= (SELECT count(*) FROM e0)),
@@ -2945,92 +1945,33 @@ object SparkEntry {
         |SELECT c.vec_a, c.vec_b, round(list_dot_product(ea.u, eb.u), 4) AS cosine
         |FROM cand c JOIN e ea ON ea.vec_id = c.vec_a JOIN e eb ON eb.vec_id = c.vec_b
         |WHERE list_dot_product(ea.u, eb.u) >= 0.4
-        |ORDER BY vec_a, vec_b""".stripMargin,
-
-    // same banded-bucket replay as dedup_embedding_pairs (here 8 bands x
-    // 6 planes — the contamination gate trades bucket width for recall),
-    // restricted to eval (vec_id % 17 = 0) x corpus candidates; per
-    // corpus vector the closest eval neighbor (cos DESC, eval_id
-    // tie-break) at cos >= 0.35
-    "dedup_embedding_contamination" ->
+        |ORDER BY vec_a, vec_b""".stripMargin),
+    query("dedup_embedding_lsh", (s, dir) =>
+      Dedup.embeddingNearDupPairsLsh(table(s, dir, "embeddings"), 0.4),
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |np AS (SELECT min(p) AS p FROM generate_series(6, 30) t(p)
+        |np AS (SELECT min(p) AS p FROM generate_series(8, 30) t(p)
         |  WHERE (1::BIGINT << p) * ${graft.similarity.Similarity.LshTargetOccupancy} >= (SELECT count(*) FROM e0)),
-        |nb AS (SELECT (8 * np.p + 5) // 6 AS b FROM np),
-        |bands AS (SELECT unnest(generate_series(0, nb.b - 1)) AS band FROM nb),
-        |bk AS (SELECT vec_id, band,
-        |  list_sum(list_transform(generate_series(0, np.p - 1), jj ->
+        |bk AS (SELECT vec_id, v,
+        |  list_sum(list_transform(generate_series(0, np.p - 1), j ->
         |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |      v[d] * CAST((('0x' || substring(md5(CAST(band*np.p + jj AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
-        |    THEN 1::BIGINT << jj ELSE 0::BIGINT END)) AS bucket
-        |  FROM e0 CROSS JOIN bands CROSS JOIN np),
-        |cand AS (SELECT DISTINCT c.vec_id AS vec_id, ev.vec_id AS eval_id
-        |  FROM bk ev JOIN bk c ON ev.band = c.band AND ev.bucket = c.bucket
-        |  WHERE ev.vec_id % 17 = 0 AND c.vec_id % 17 <> 0),
-        |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-        |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
-        |vf AS (SELECT cand.vec_id, cand.eval_id, list_dot_product(ec.u, ee.u) AS cos
-        |  FROM cand JOIN e ec ON ec.vec_id = cand.vec_id
-        |            JOIN e ee ON ee.vec_id = cand.eval_id
-        |  WHERE list_dot_product(ec.u, ee.u) >= 0.35),
-        |r AS (SELECT vec_id, eval_id, cos,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, eval_id) AS rn
-        |  FROM vf)
-        |SELECT vec_id, eval_id, round(cos, 4) AS cosine
-        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    // the keep-list CTEs + one tokenize scan, re-aggregated per source
-    "curate_dedup_impact" ->
-      s"""WITH RECURSIVE $clusterCtes,
-         |keep AS (SELECT doc_id FROM documents
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE cluster_id != doc_id)),
-         |per AS (SELECT d.doc_id, d.source,
-         |    len(regexp_extract_all(translate(d.text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS nt,
-         |    CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END AS kept
-         |  FROM documents d LEFT JOIN keep k ON d.doc_id = k.doc_id)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(kept) AS BIGINT) AS n_kept,
-         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN kept = 1 THEN nt ELSE 0 END) AS BIGINT) AS tokens_kept,
-         |  round(CASE WHEN sum(nt) = 0 THEN 0.0
-         |    ELSE CAST(sum(nt) - sum(CASE WHEN kept = 1 THEN nt ELSE 0 END) AS DOUBLE)
-         |         / sum(nt) END, 4) AS removed_token_frac
-         |FROM per GROUP BY source ORDER BY source""".stripMargin,
-    "curate_corpus_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS oh FROM documents WHERE doc_id % 3 <> 0),
-        |n AS (SELECT doc_id,
-        |        md5(CASE WHEN doc_id % 5 = 0 THEN text || ' amended' ELSE text END) AS nh
-        |      FROM documents WHERE doc_id % 7 <> 0)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        |  CASE WHEN o.oh IS NULL THEN 'added'
-        |       WHEN n.nh IS NULL THEN 'removed'
-        |       WHEN o.oh <> n.nh THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-        |ORDER BY 1""".stripMargin,
-    // staged exactly like Curation.curationTags: langid pass = any marker
-    // hit; quality = tokens >= 5 AND rounded dup-trigram-frac <= 0.2;
-    // exact reps among quality survivors; near-dup clusters (df-cap 100,
-    // jaccard >= 0.5, recursive closure) among exact survivors
-    // integer-exact bucket: floor(10*distinct/total) on BIGINTs, so the
-    // decile boundary (TTR exactly 0.3 -> bucket 3) cannot drift between
-    // engines; curve = one 10-row descending cumulative window
-    "curate_quality_curve" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |pd AS (SELECT CASE WHEN len(tk) = 0 THEN 0
-        |    ELSE least(CAST(floor(10.0 * len(list_distinct(tk)) / len(tk)) AS BIGINT), 9) END AS b,
-        |  CAST(len(tk) AS BIGINT) AS nt FROM t),
-        |bb AS (SELECT b, count(*) AS docs, CAST(sum(nt) AS BIGINT) AS toks FROM pd GROUP BY 1),
-        |g AS (SELECT k AS d, COALESCE(docs, 0) AS docs, COALESCE(toks, 0) AS toks
-        |  FROM generate_series(0, 9) s(k) LEFT JOIN bb ON bb.b = k),
-        |c AS (SELECT d, CAST(sum(docs) OVER w AS BIGINT) AS docs_kept,
-        |    CAST(sum(toks) OVER w AS BIGINT) AS tokens_kept,
-        |    CAST(sum(toks) OVER () AS BIGINT) AS tot
-        |  FROM g WINDOW w AS (ORDER BY d DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT round(d / 10.0, 1) AS threshold, docs_kept, tokens_kept,
-        |  round(CASE WHEN tot = 0 THEN 0.0 ELSE CAST(tokens_kept AS DOUBLE) / tot END, 4) AS token_share
-        |FROM c ORDER BY threshold""".stripMargin,
-    "curate_funnel" ->
+        |      v[d] * CAST((('0x' || substring(md5(CAST(j AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
+        |    THEN 1::BIGINT << j ELSE 0::BIGINT END)) AS bucket FROM e0 CROSS JOIN np),
+        |e1 AS (SELECT vec_id, bucket, v, sqrt(list_dot_product(v, v)) AS nrm FROM bk),
+        |e AS (SELECT vec_id, bucket, list_transform(v, x -> x/nrm) AS u FROM e1)
+        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+        |  round(list_dot_product(a.u, b.u), 4) AS cosine
+        |FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+        |WHERE list_dot_product(a.u, b.u) >= 0.4
+        |ORDER BY vec_a, vec_b""".stripMargin),
+    // blocked Levenshtein near-dup: record-linkage blocking bounds the
+    // self-join; distance on a fixed 64-char prefix bounds per-pair cost
+    query("dedup_edit_pairs", (s, dir) =>
+      Dedup.editDistancePairs(table(s, dir, "documents")),
+      editDistOracleSql),
+    // the curation capstone: langid -> quality/repetition -> exact dedup ->
+    // near-dup keep, reported as docs dropped per stage
+    query("curate_funnel", (s, dir) =>
+      graft.curate.Curation.curationFunnel(table(s, dir, "documents")),
       """WITH RECURSIVE t0 AS (SELECT doc_id, text, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |ls AS (SELECT doc_id,
         |  len(list_intersect(list_distinct(tk), ['der','die','das','und','ist'])) AS s_de,
@@ -3071,8 +2012,88 @@ object SparkEntry {
         |       WHEN b.doc_id IN (SELECT doc_id FROM clusters WHERE cluster_id != doc_id) THEN '4_dropped_near_dup'
         |       ELSE '5_kept' END AS stage
         |  FROM b LEFT JOIN ex USING (doc_id))
-        |SELECT stage, count(*) AS n FROM tag GROUP BY stage ORDER BY stage""".stripMargin,
-    "dedup_contamination" ->
+        |SELECT stage, count(*) AS n FROM tag GROUP BY stage ORDER BY stage""".stripMargin),
+    // docs/tokens surviving each candidate TTR quality bar — pick the bar
+    // by its token cost; integer-exact decile bucketing, 10-row curve
+    query("curate_quality_curve", (s, dir) =>
+      graft.curate.Curation.qualityRetentionCurve(table(s, dir, "documents")),
+      // staged exactly like Curation.curationTags: langid pass = any marker
+      // hit; quality = tokens >= 5 AND rounded dup-trigram-frac <= 0.2;
+      // exact reps among quality survivors; near-dup clusters (df-cap 100,
+      // jaccard >= 0.5, recursive closure) among exact survivors
+      // integer-exact bucket: floor(10*distinct/total) on BIGINTs, so the
+      // decile boundary (TTR exactly 0.3 -> bucket 3) cannot drift between
+      // engines; curve = one 10-row descending cumulative window
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |pd AS (SELECT CASE WHEN len(tk) = 0 THEN 0
+        |    ELSE least(CAST(floor(10.0 * len(list_distinct(tk)) / len(tk)) AS BIGINT), 9) END AS b,
+        |  CAST(len(tk) AS BIGINT) AS nt FROM t),
+        |bb AS (SELECT b, count(*) AS docs, CAST(sum(nt) AS BIGINT) AS toks FROM pd GROUP BY 1),
+        |g AS (SELECT k AS d, COALESCE(docs, 0) AS docs, COALESCE(toks, 0) AS toks
+        |  FROM generate_series(0, 9) s(k) LEFT JOIN bb ON bb.b = k),
+        |c AS (SELECT d, CAST(sum(docs) OVER w AS BIGINT) AS docs_kept,
+        |    CAST(sum(toks) OVER w AS BIGINT) AS tokens_kept,
+        |    CAST(sum(toks) OVER () AS BIGINT) AS tot
+        |  FROM g WINDOW w AS (ORDER BY d DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+        |SELECT round(d / 10.0, 1) AS threshold, docs_kept, tokens_kept,
+        |  round(CASE WHEN tot = 0 THEN 0.0 ELSE CAST(tokens_kept AS DOUBLE) / tot END, 4) AS token_share
+        |FROM c ORDER BY threshold""".stripMargin),
+    // per-source dedup accounting: docs/tokens kept vs removed by the
+    // near-dup keep-list (the provenance impact report published with
+    // every dedup run); one tokenize scan + one ids-only join
+    query("curate_dedup_impact", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      graft.curate.Curation.dedupImpact(docs,
+        Dedup.keepList(docs, Dedup.duplicateClusters(
+          Dedup.jaccardPairs(docs, 3, 0.5, maxShingleDf = 100))))
+    },
+      // the keep-list CTEs + one tokenize scan, re-aggregated per source
+      s"""WITH RECURSIVE $clusterCtes,
+         |keep AS (SELECT doc_id FROM documents
+         |  WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE cluster_id != doc_id)),
+         |per AS (SELECT d.doc_id, d.source,
+         |    len(regexp_extract_all(translate(d.text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS nt,
+         |    CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END AS kept
+         |  FROM documents d LEFT JOIN keep k ON d.doc_id = k.doc_id)
+         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(kept) AS BIGINT) AS n_kept,
+         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
+         |  CAST(sum(CASE WHEN kept = 1 THEN nt ELSE 0 END) AS BIGINT) AS tokens_kept,
+         |  round(CASE WHEN sum(nt) = 0 THEN 0.0
+         |    ELSE CAST(sum(nt) - sum(CASE WHEN kept = 1 THEN nt ELSE 0 END) AS DOUBLE)
+         |         / sum(nt) END, 4) AS removed_token_frac
+         |FROM per GROUP BY source ORDER BY source""".stripMargin),
+    // snapshot diff: old = ids not divisible by 3, new = ids not divisible
+    // by 7 with %5==0 texts amended — all four statuses appear (added:
+    // %3==0 ∧ %7≠0; removed: %7==0 ∧ %3≠0; changed: %5==0 in both)
+    query("curate_corpus_diff", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      graft.curate.Curation.corpusDiff(
+        docs.filter(col("doc_id") % 3 =!= 0),
+        docs.filter(col("doc_id") % 7 =!= 0)
+          .withColumn("text",
+            when(col("doc_id") % 5 === 0, concat(col("text"), lit(" amended")))
+              .otherwise(col("text"))))
+    },
+      """WITH o AS (SELECT doc_id, md5(text) AS oh FROM documents WHERE doc_id % 3 <> 0),
+        |n AS (SELECT doc_id,
+        |        md5(CASE WHEN doc_id % 5 = 0 THEN text || ' amended' ELSE text END) AS nh
+        |      FROM documents WHERE doc_id % 7 <> 0)
+        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+        |  CASE WHEN o.oh IS NULL THEN 'added'
+        |       WHEN n.nh IS NULL THEN 'removed'
+        |       WHEN o.oh <> n.nh THEN 'changed'
+        |       ELSE 'unchanged' END AS status
+        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
+        |ORDER BY 1""".stripMargin),
+    // benchmark decontamination: src0 plays the eval set, the rest of the
+    // corpus is scanned for shared trigrams
+    query("dedup_contamination", (s, dir) => {
+      val docs = table(s, dir, "documents")
+      Dedup.contaminationReport(
+        docs.filter(col("source") =!= "src0"),
+        docs.filter(col("source") === "src0"))
+    },
       """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |g AS (SELECT doc_id, source, CASE WHEN len(tk) >= 3 THEN list_distinct(list_transform(generate_series(1, len(tk)-2),
         |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) ELSE [] END AS shl FROM t),
@@ -3080,10 +2101,47 @@ object SparkEntry {
         |ev AS (SELECT DISTINCT shingle FROM sh WHERE source = 'src0')
         |SELECT doc_id, count(*) AS n_shared
         |FROM sh JOIN ev USING (shingle) WHERE source != 'src0'
-        |GROUP BY doc_id HAVING count(*) >= 2 ORDER BY doc_id""".stripMargin,
-    // 8-token windows, distinct per doc; df >= 2 marks a window shared
-    // with at least one other doc
-    "dedup_shared_ngrams" ->
+        |GROUP BY doc_id HAVING count(*) >= 2 ORDER BY doc_id""".stripMargin),
+    // the semantic complement: corpus vectors cosine-close to the held-out
+    // eval slice (vec_id % 17 == 0) via the banded-LSH candidate path
+    query("dedup_embedding_contamination", (s, dir) =>
+      Dedup.embeddingContamination(table(s, dir, "embeddings")),
+      // same banded-bucket replay as dedup_embedding_pairs (here 8 bands x
+      // 6 planes — the contamination gate trades bucket width for recall),
+      // restricted to eval (vec_id % 17 = 0) x corpus candidates; per
+      // corpus vector the closest eval neighbor (cos DESC, eval_id
+      // tie-break) at cos >= 0.35
+      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        |np AS (SELECT min(p) AS p FROM generate_series(6, 30) t(p)
+        |  WHERE (1::BIGINT << p) * ${graft.similarity.Similarity.LshTargetOccupancy} >= (SELECT count(*) FROM e0)),
+        |nb AS (SELECT (8 * np.p + 5) // 6 AS b FROM np),
+        |bands AS (SELECT unnest(generate_series(0, nb.b - 1)) AS band FROM nb),
+        |bk AS (SELECT vec_id, band,
+        |  list_sum(list_transform(generate_series(0, np.p - 1), jj ->
+        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
+        |      v[d] * CAST((('0x' || substring(md5(CAST(band*np.p + jj AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
+        |    THEN 1::BIGINT << jj ELSE 0::BIGINT END)) AS bucket
+        |  FROM e0 CROSS JOIN bands CROSS JOIN np),
+        |cand AS (SELECT DISTINCT c.vec_id AS vec_id, ev.vec_id AS eval_id
+        |  FROM bk ev JOIN bk c ON ev.band = c.band AND ev.bucket = c.bucket
+        |  WHERE ev.vec_id % 17 = 0 AND c.vec_id % 17 <> 0),
+        |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+        |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
+        |vf AS (SELECT cand.vec_id, cand.eval_id, list_dot_product(ec.u, ee.u) AS cos
+        |  FROM cand JOIN e ec ON ec.vec_id = cand.vec_id
+        |            JOIN e ee ON ee.vec_id = cand.eval_id
+        |  WHERE list_dot_product(ec.u, ee.u) >= 0.35),
+        |r AS (SELECT vec_id, eval_id, cos,
+        |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, eval_id) AS rn
+        |  FROM vf)
+        |SELECT vec_id, eval_id, round(cos, 4) AS cosine
+        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin),
+    // substring-level dedup report: per doc, the fraction of its 8-token
+    // windows that occur in any other doc ("how much of this doc is copy")
+    query("dedup_shared_ngrams", (s, dir) =>
+      Dedup.sharedNgramStats(table(s, dir, "documents"), 8),
+      // 8-token windows, distinct per doc; df >= 2 marks a window shared
+      // with at least one other doc
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |sh AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 8
         |    THEN list_distinct(list_transform(generate_series(1, len(tk)-7),
@@ -3097,24 +2155,34 @@ object SparkEntry {
         |  CAST(coalesce(nsw, 0) AS BIGINT) AS n_shared_windows,
         |  round(CASE WHEN coalesce(nw, 0) = 0 THEN 0.0
         |        ELSE CAST(nsw AS DOUBLE)/nw END, 4) AS shared_frac
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // seam replay: same md5-of-rejoined-window keys, same df cap on each
-    // side independently (a hot tail seam is dropped even if the matching
-    // head seam is cold, and vice versa)
-    "dedup_boundary_stitch" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |ok AS (SELECT doc_id, tk FROM t WHERE len(tk) >= 8),
-        |tl AS (SELECT doc_id AS left_doc, md5(array_to_string(list_slice(tk, len(tk)-7, len(tk)), ' ')) AS seam FROM ok),
-        |hd AS (SELECT doc_id AS right_doc, md5(array_to_string(list_slice(tk, 1, 8), ' ')) AS seam FROM ok),
-        |tlc AS (SELECT * FROM tl WHERE seam IN (SELECT seam FROM tl GROUP BY seam HAVING count(*) <= 8)),
-        |hdc AS (SELECT * FROM hd WHERE seam IN (SELECT seam FROM hd GROUP BY seam HAVING count(*) <= 8))
-        |SELECT left_doc, right_doc, tlc.seam AS seam
-        |FROM tlc JOIN hdc ON tlc.seam = hdc.seam AND left_doc <> right_doc
-        |ORDER BY left_doc, right_doc""".stripMargin,
-    // same positional-window replay: 1-based list slices -> 0-based pos,
-    // distinct-doc window df >= 2, then SQL gaps-and-islands (lag + running
-    // sum) merges [pos, pos+8) intervals exactly like the Spark window
-    "dedup_span_pairs" ->
+        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin),
+    // provenance-grain contamination: distinct-trigram Jaccard +
+    // containment between every SOURCE pair (per-shingle buckets bounded
+    // by the source count, output S^2-bounded at any corpus size)
+    query("dedup_source_overlap", (s, dir) =>
+      Dedup.sourceOverlapMatrix(table(s, dir, "documents")),
+      // distinct (source, shingle) reduction, then per-shingle source-pair
+      // counting (buckets bounded by the source count); zero-overlap pairs
+      // absent via inner join on both engines
+      """WITH t AS (SELECT source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |g AS (SELECT source, CASE WHEN len(tk) >= 3 THEN list_distinct(list_transform(generate_series(1, len(tk)-2),
+        |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) ELSE [] END AS shl FROM t),
+        |s AS (SELECT DISTINCT source, shingle FROM (SELECT source, unnest(shl) AS shingle FROM g)),
+        |sz AS (SELECT source, count(*) AS sz FROM s GROUP BY source),
+        |io AS (SELECT a.source AS source_a, b.source AS source_b, CAST(count(*) AS BIGINT) AS inter
+        |  FROM s a JOIN s b ON a.shingle = b.shingle AND a.source < b.source GROUP BY 1, 2)
+        |SELECT source_a, source_b, inter,
+        |  round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard,
+        |  round(CAST(inter AS DOUBLE) / least(sa.sz, sb.sz), 6) AS containment
+        |FROM io JOIN sz sa ON sa.source = source_a JOIN sz sb ON sb.source = source_b
+        |ORDER BY source_a, source_b""".stripMargin),
+    // the actual cut-list: maximal token spans covered by 8-token windows
+    // repeated verbatim in >= 2 distinct docs (round-5 verdict item #3)
+    query("dedup_span_pairs", (s, dir) =>
+      Dedup.duplicatedSpans(table(s, dir, "documents"), 8),
+      // same positional-window replay: 1-based list slices -> 0-based pos,
+      // distinct-doc window df >= 2, then SQL gaps-and-islands (lag + running
+      // sum) merges [pos, pos+8) intervals exactly like the Spark window
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |w AS (SELECT doc_id, p - 1 AS pos, array_to_string(list_slice(tk, p, p+7), ' ') AS win
         |      FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk)-7)) AS p
@@ -3133,12 +2201,36 @@ object SparkEntry {
         |  CAST(max(pos) + 8 AS BIGINT) AS span_end,
         |  CAST(max(pos) + 8 - min(pos) AS BIGINT) AS n_tokens
         |FROM g GROUP BY doc_id, island
-        |ORDER BY doc_id, span_start""".stripMargin,
-    // paragraph replay: 25-token blocks of the raw space-split (insertion
-    // + regex split == direct slicing since the corpus has no newlines),
-    // pkey = doc_id*1e6 + para_id, then the standard capped-Jaccard CTEs
-    // at paragraph grain, cross-doc filtered, re-aggregated per doc
-    "dedup_paragraph_frac" ->
+        |ORDER BY doc_id, span_start""".stripMargin),
+    // shard-boundary stitch: a's last-8 tokens == b's first-8 (ORDERED
+    // reconstruction signal near-dup/span ops don't carry); seam-keyed
+    // md5 join, df-capped on both sides
+    query("dedup_boundary_stitch", (s, dir) =>
+      Dedup.boundaryStitchPairs(table(s, dir, "documents")),
+      // seam replay: same md5-of-rejoined-window keys, same df cap on each
+      // side independently (a hot tail seam is dropped even if the matching
+      // head seam is cold, and vice versa)
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |ok AS (SELECT doc_id, tk FROM t WHERE len(tk) >= 8),
+        |tl AS (SELECT doc_id AS left_doc, md5(array_to_string(list_slice(tk, len(tk)-7, len(tk)), ' ')) AS seam FROM ok),
+        |hd AS (SELECT doc_id AS right_doc, md5(array_to_string(list_slice(tk, 1, 8), ' ')) AS seam FROM ok),
+        |tlc AS (SELECT * FROM tl WHERE seam IN (SELECT seam FROM tl GROUP BY seam HAVING count(*) <= 8)),
+        |hdc AS (SELECT * FROM hd WHERE seam IN (SELECT seam FROM hd GROUP BY seam HAVING count(*) <= 8))
+        |SELECT left_doc, right_doc, tlc.seam AS seam
+        |FROM tlc JOIN hdc ON tlc.seam = hdc.seam AND left_doc <> right_doc
+        |ORDER BY left_doc, right_doc""".stripMargin),
+    // paragraph-grain near-dup (round-5): blank-line paragraphs (the
+    // synthetic corpus gets breaks re-materialized every 25 tokens first,
+    // like the image corpus gets real headers), then the SAME df-capped
+    // Jaccard path at paragraph keys, reported as per-doc dup fraction
+    query("dedup_paragraph_frac", (s, dir) =>
+      Dedup.paragraphDupFraction(
+        Dedup.withSyntheticParagraphs(table(s, dir, "documents"), 25),
+        3, 0.5, 100),
+      // paragraph replay: 25-token blocks of the raw space-split (insertion
+      // + regex split == direct slicing since the corpus has no newlines),
+      // pkey = doc_id*1e6 + para_id, then the standard capped-Jaccard CTEs
+      // at paragraph grain, cross-doc filtered, re-aggregated per doc
       """WITH tk0 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |par0 AS (SELECT doc_id, p AS para_id,
         |           array_to_string(list_slice(w, CAST(p*25+1 AS INT), CAST(p*25+25 AS INT)), ' ') AS para
@@ -3168,8 +2260,85 @@ object SparkEntry {
         |  round(CASE WHEN coalesce(np.n_paras, 0) = 0 THEN 0.0
         |        ELSE CAST(coalesce(nd.n_dup, 0) AS DOUBLE)/np.n_paras END, 4) AS dup_frac
         |FROM documents d LEFT JOIN np USING (doc_id) LEFT JOIN nd USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "curate_dataset_card" ->
+        |ORDER BY d.doc_id""".stripMargin),
+    // asymmetric containment dedup: |A∩B|/min(|A|,|B|) — the metric that
+    // catches a doc EMBEDDED in another (quotes, excerpts, boilerplate
+    // wrappers) where the size mismatch dilutes Jaccard to ~0.5. The
+    // corpus gets deterministic first-half excerpt docs planted first
+    // (same fixture-assembly pattern as the paragraph/image queries)
+    // because verbatim twins alone cannot distinguish the two metrics;
+    // the emitted jaccard column shows the asymmetry per pair.
+    query("dedup_containment_pairs", (s, dir) =>
+      Dedup.containmentPairs(
+        Dedup.withSyntheticExcerpts(table(s, dir, "documents")),
+        3, 0.9, 100),
+      containmentOracleSql),
+    // exact line-level boilerplate removal (C4/CCNet line dedup): lines
+    // repeated verbatim in >= 3 docs drop; per-doc counts + cleaned-text
+    // hash. Header/footer chrome planted first (same fixture pattern as
+    // the excerpt/paragraph queries — the corpus has no repeated lines)
+    query("dedup_line_boilerplate", (s, dir) =>
+      Dedup.lineDedup(
+        Dedup.withSyntheticBoilerplate(table(s, dir, "documents"))),
+      lineDedupOracleSql),
+    // winnowed fingerprints (rolling-hash sketch, SIGMOD'03): the
+    // selected (pos, hash) per doc — the positional sketch a dedup
+    // pipeline stores instead of full shingle sets
+    query("text_winnow_fingerprints", (s, dir) =>
+      Dedup.winnowFingerprints(table(s, dir, "documents")),
+      winnowFingerprintOracleSql),
+    // near-dup pairs over the winnowed sketches — same df-capped bucket
+    // path as dedup_jaccard_pairs but on ~1/3 the rows with long keys
+    query("dedup_winnow_pairs", (s, dir) =>
+      Dedup.winnowPairs(table(s, dir, "documents")),
+      winnowPairsOracleSql),
+    // EXACT threshold-Jaccard pairs via prefix filtering (SSJoin/PPJoin):
+    // identical shingle sets collapse to a representative, then only the
+    // rarest-first sz-ceil(t*sz)+1 prefix of each set is ever bucketed —
+    // the lossless alternative to the df-cap, over the same excerpt
+    // fixture as containment (host-excerpt pairs straddle J = 0.5)
+    query("dedup_prefix_jaccard", (s, dir) =>
+      Dedup.prefixJaccardPairs(
+        Dedup.withSyntheticExcerpts(table(s, dir, "documents"))),
+      // prefix filter is lossless => the oracle is the plain definition
+      // (rep-collapsed exact threshold Jaccard), no prefix logic at all
+      prefixJaccardOracleSql),
+    // content-defined chunking (LBFS/rsync family): rolling-hash
+    // boundary mask => shift-robust chunk table, scan-shaped
+    query("text_cdc_chunks", (s, dir) =>
+      Dedup.cdcChunks(table(s, dir, "documents")),
+      cdcChunksOracleSql),
+    // shared CDC chunks across docs over the excerpt fixture: the
+    // embedded copy re-derives the SAME boundaries for shared content at
+    // a different offset, so chunks align and match by md5 — the
+    // storage-dedup primitive fixed-size blocks cannot deliver
+    query("dedup_cdc_shared", (s, dir) =>
+      Dedup.cdcSharedChunks(
+        Dedup.withSyntheticExcerpts(table(s, dir, "documents"))),
+      cdcSharedOracleSql),
+    // perceptual dHash near-dup over payload BYTES (8-band blocking +
+    // XOR verify): the planted one-byte-perturbed copies land at tiny
+    // Hamming distance while md5 content hashes flip completely; the
+    // oracle rebuilds every hash from hex bytes WITHOUT the banding, so
+    // the pruning is proven invisible
+    query("mm_phash_pairs", (s, dir) =>
+      Multimodal.phashPairs(Multimodal.fromDocuments(
+        Multimodal.withPerturbedCopies(table(s, dir, "documents")))),
+      phashPairsOracleSql),
+    // perceptual-dup CLUSTERS: the phash pair graph through the shared
+    // pointer-jumped connected components — the keep/drop unit for
+    // image-style payload dedup (each perturbed copy joins its original)
+    query("mm_phash_clusters", (s, dir) =>
+      Dedup.duplicateClusters(
+        Multimodal.phashPairs(Multimodal.fromDocuments(
+          Multimodal.withPerturbedCopies(table(s, dir, "documents"))))
+          .select(col("media_a").as("doc_a"), col("media_b").as("doc_b")))
+        .select(col("doc_id").as("media_id"), col("cluster_id"))
+        .orderBy("media_id"),
+      phashClustersOracleSql),
+    // the one-row dataset card: volume + provenance breadth + integrity
+    query("curate_dataset_card", (s, dir) =>
+      graft.curate.Curation.datasetCard(table(s, dir, "documents")),
       """SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'))) AS BIGINT) AS n_tokens,
         |  CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -3178,10 +2347,15 @@ object SparkEntry {
         |  CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique,
         |  round(CAST(count(*) - count(DISTINCT md5(text)) AS DOUBLE) / count(*), 6) AS dup_frac,
         |  round(CAST(sum(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'))) AS DOUBLE) / count(*), 6) AS mean_doc_tokens
-        |FROM documents""".stripMargin,
-    // each check re-spelled as a scalar FILTER aggregate; NOT-EXISTS and
-    // Spark's left_anti agree on null keys (never match -> orphan)
-    "curate_expectations" ->
+        |FROM documents""".stripMargin),
+    // Deequ-style contract check over the relational feed: completeness,
+    // ranges, accepted domains, key uniqueness, referential integrity —
+    // two conditional-aggregate scans + one anti join, unpivoted
+    query("curate_expectations", (s, dir) =>
+      graft.curate.Curation.expectationsReport(
+        table(s, dir, "lineitem"), table(s, dir, "orders")),
+      // each check re-spelled as a scalar FILTER aggregate; NOT-EXISTS and
+      // Spark's left_anti agree on null keys (never match -> orphan)
       """WITH li AS (SELECT count(*) AS n,
         |    count(*) FILTER (WHERE l_orderkey IS NULL) AS v_complete,
         |    count(*) FILTER (WHERE NOT (l_quantity BETWEEN 1 AND 50)) AS v_qty,
@@ -3211,25 +2385,11 @@ object SparkEntry {
         |SELECT "check", CAST(n_checked AS BIGINT) AS n_checked,
         |  CAST(n_violations AS BIGINT) AS n_violations,
         |  CASE WHEN n_violations = 0 THEN 'pass' ELSE 'fail' END AS status
-        |FROM rows_ ORDER BY "check"""".stripMargin,
-    // same integer-exact interpolation in HUGEINT (Spark side: exact
-    // DECIMAL(38,0) products) — numerators sum to the denominator by
-    // construction, so no double accumulation exists to drift
-    "curate_annealing_schedule" ->
-      """WITH t AS (SELECT source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |pd AS (SELECT source, CAST(len(tk) AS BIGINT) AS nt,
-        |    (len(tk) > 0 AND 2 * len(list_distinct(tk)) >= len(tk)) AS hiq FROM t),
-        |bs AS (SELECT source, CAST(sum(nt) AS HUGEINT) AS nat,
-        |    CAST(sum(CASE WHEN hiq THEN nt ELSE 0 END) AS HUGEINT) AS hi FROM pd GROUP BY 1),
-        |tot AS (SELECT CAST(sum(nat) AS HUGEINT) AS tt, CAST(sum(hi) AS HUGEINT) AS hh FROM bs)
-        |SELECT e AS epoch, source,
-        |  CASE WHEN tt = 0 THEN NULL
-        |       WHEN hh = 0 THEN round(CAST(nat AS DOUBLE) / CAST(tt AS DOUBLE), 6)
-        |       ELSE round(CAST((3 - e) * nat * hh + e * hi * tt AS DOUBLE)
-        |                  / CAST(3 * tt * hh AS DOUBLE), 6) END AS weight
-        |FROM bs CROSS JOIN tot CROSS JOIN generate_series(0, 3) g(e)
-        |ORDER BY epoch, source""".stripMargin,
-    "curate_source_mix" ->
+        |FROM rows_ ORDER BY "check"""".stripMargin),
+    // temperature-scaled domain mixing: per-source token share ->
+    // alpha-flattened sampling weight + resample factor
+    query("curate_source_mix", (s, dir) =>
+      graft.curate.Curation.sourceMixWeights(table(s, dir, "documents"), 0.5),
       """WITH per AS (SELECT source, count(*) AS n_docs,
         |    CAST(sum(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'))) AS BIGINT) AS n_tokens
         |  FROM documents GROUP BY source),
@@ -3242,30 +2402,35 @@ object SparkEntry {
         |SELECT source, n_docs, n_tokens, round(share, 6) AS token_share,
         |  round(w/wtot, 6) AS mix_weight,
         |  round(w/wtot/share, 6) AS resample_factor
-        |FROM sh CROSS JOIN wt ORDER BY source""".stripMargin,
-    // Hamilton apportionment replay: HUGEINT quota products, // floor
-    // (all values nonnegative, so floor == Spark's integral div), seats
-    // by (remainder desc, source)
-    "curate_apportion_budget" ->
-      """WITH per AS (SELECT source,
-        |    CAST(sum(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'))) AS HUGEINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |tot AS (SELECT CAST(sum(n_tokens) AS HUGEINT) AS tt FROM per),
-        |q AS (SELECT source, n_tokens, n_tokens * 10000 AS num FROM per),
-        |b AS (SELECT source, n_tokens,
-        |         CASE WHEN tt = 0 THEN 0 ELSE num // tt END AS base,
-        |         CASE WHEN tt = 0 THEN num ELSE num % tt END AS rem,
-        |         tt FROM q, tot),
-        |r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk,
-        |         sum(base) OVER () AS total_base FROM b)
-        |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(base + CASE WHEN tt = 0 THEN 0
-        |    WHEN rk <= 10000 - total_base THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r ORDER BY source""".stripMargin,
-    // same mix weights (round 6) as curate_source_mix; selection keeps a
-    // doc while the integer cumulative sum BEFORE it is under the source
-    // budget, in md5(doc_id:42) order
-    "curate_budget_sample" ->
+        |FROM sh CROSS JOIN wt ORDER BY source""".stripMargin),
+    // epoch-annealed mix schedule: natural share -> high-quality share
+    // across 4 epochs, integer-exact interpolation (weights sum to 1
+    // before the final double cast)
+    query("curate_annealing_schedule", (s, dir) =>
+      graft.curate.Curation.annealingSchedule(table(s, dir, "documents")),
+      // same integer-exact interpolation in HUGEINT (Spark side: exact
+      // DECIMAL(38,0) products) — numerators sum to the denominator by
+      // construction, so no double accumulation exists to drift
+      """WITH t AS (SELECT source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |pd AS (SELECT source, CAST(len(tk) AS BIGINT) AS nt,
+        |    (len(tk) > 0 AND 2 * len(list_distinct(tk)) >= len(tk)) AS hiq FROM t),
+        |bs AS (SELECT source, CAST(sum(nt) AS HUGEINT) AS nat,
+        |    CAST(sum(CASE WHEN hiq THEN nt ELSE 0 END) AS HUGEINT) AS hi FROM pd GROUP BY 1),
+        |tot AS (SELECT CAST(sum(nat) AS HUGEINT) AS tt, CAST(sum(hi) AS HUGEINT) AS hh FROM bs)
+        |SELECT e AS epoch, source,
+        |  CASE WHEN tt = 0 THEN NULL
+        |       WHEN hh = 0 THEN round(CAST(nat AS DOUBLE) / CAST(tt AS DOUBLE), 6)
+        |       ELSE round(CAST((3 - e) * nat * hh + e * hi * tt AS DOUBLE)
+        |                  / CAST(3 * tt * hh AS DOUBLE), 6) END AS weight
+        |FROM bs CROSS JOIN tot CROSS JOIN generate_series(0, 3) g(e)
+        |ORDER BY epoch, source""".stripMargin),
+    // the mixing EXECUTOR: fill each source's alpha-weighted share of a
+    // 20k-token budget in seeded-hash order
+    query("curate_budget_sample", (s, dir) =>
+      graft.curate.Curation.budgetSample(table(s, dir, "documents"), 20000L),
+      // same mix weights (round 6) as curate_source_mix; selection keeps a
+      // doc while the integer cumulative sum BEFORE it is under the source
+      // budget, in md5(doc_id:42) order
       """WITH toks AS (SELECT source, doc_id,
         |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens,
         |    md5(CAST(doc_id AS VARCHAR) || ':42') AS k
@@ -3281,11 +2446,60 @@ object SparkEntry {
         |      FROM toks t JOIN wx USING (source))
         |SELECT source, doc_id, n_tokens FROM o
         |WHERE CAST(cum_before AS DOUBLE) < mix * 20000.0
-        |ORDER BY source, doc_id""".stripMargin,
-    // same weight CTEs as curate_budget_sample; whole epochs = floor of
-    // the double target/source-token ratio, partial epoch by the same
-    // exact-cumsum-vs-double-threshold rule, budget 200000
-    "curate_epoch_plan" ->
+        |ORDER BY source, doc_id""".stripMargin),
+    // Hamilton largest-remainder apportionment: exact-integer quotas,
+    // shares sum to EXACTLY the budget by construction
+    query("curate_apportion_budget", (s, dir) =>
+      graft.curate.Curation.apportionBudget(table(s, dir, "documents")),
+      // Hamilton apportionment replay: HUGEINT quota products, // floor
+      // (all values nonnegative, so floor == Spark's integral div), seats
+      // by (remainder desc, source)
+      """WITH per AS (SELECT source,
+        |    CAST(sum(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'))) AS HUGEINT) AS n_tokens
+        |  FROM documents GROUP BY source),
+        |tot AS (SELECT CAST(sum(n_tokens) AS HUGEINT) AS tt FROM per),
+        |q AS (SELECT source, n_tokens, n_tokens * 10000 AS num FROM per),
+        |b AS (SELECT source, n_tokens,
+        |         CASE WHEN tt = 0 THEN 0 ELSE num // tt END AS base,
+        |         CASE WHEN tt = 0 THEN num ELSE num % tt END AS rem,
+        |         tt FROM q, tot),
+        |r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk,
+        |         sum(base) OVER () AS total_base FROM b)
+        |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
+        |  CAST(base + CASE WHEN tt = 0 THEN 0
+        |    WHEN rk <= 10000 - total_base THEN 1 ELSE 0 END AS BIGINT) AS alloc
+        |FROM r ORDER BY source""".stripMargin),
+    // DSIR importance weights (Xie'23): hashed-bigram log-likelihood
+    // ratio of target-slice vs raw-corpus feature distributions
+    query("curate_dsir_weights", (s, dir) =>
+      graft.curate.Curation.dsirWeights(table(s, dir, "documents"), "src0"),
+      // DSIR oracle: identical md5-prefix bucketing, identical add-one
+      // probability tree; round(4) absorbs ln's per-term ulp noise over the
+      // per-doc sum (values bounded by |lp| <= ln-ratio of the two tables).
+      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |occ AS (SELECT doc_id, source, ('0x' || substring(md5(bigram), 1, 6))::BIGINT % 1024 AS b
+        |  FROM (SELECT doc_id, source, unnest(CASE WHEN len(tk) >= 2
+        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
+        |    ELSE [] END) AS bigram FROM t)),
+        |raw AS (SELECT b, count(*) AS cr FROM occ GROUP BY b),
+        |tgt AS (SELECT b, count(*) AS ct FROM occ WHERE source = 'src0' GROUP BY b),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS nr,
+        |  CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS nt FROM occ),
+        |sc AS (SELECT doc_id,
+        |    ln((CAST(coalesce(ct, 0) AS DOUBLE) + 1.0) / (CAST(nt AS DOUBLE) + CAST(1024 AS DOUBLE))) -
+        |    ln((CAST(cr AS DOUBLE) + 1.0) / (CAST(nr AS DOUBLE) + CAST(1024 AS DOUBLE))) AS lp
+        |  FROM occ JOIN raw USING (b) LEFT JOIN tgt USING (b) CROSS JOIN tot),
+        |per AS (SELECT doc_id, count(*) AS nf, round(sum(lp), 4) AS log_ratio FROM sc GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(coalesce(nf, 0) AS BIGINT) AS n_feats, log_ratio
+        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin),
+    // the upsampling executor: per-doc repeat counts materializing the
+    // alpha-mix recipe at a 200k-token budget (> corpus => whole epochs
+    // + a seeded-hash partial epoch)
+    query("curate_epoch_plan", (s, dir) =>
+      graft.curate.Curation.epochPlan(table(s, dir, "documents"), 200000L),
+      // same weight CTEs as curate_budget_sample; whole epochs = floor of
+      // the double target/source-token ratio, partial epoch by the same
+      // exact-cumsum-vs-double-threshold rule, budget 200000
       """WITH toks AS (SELECT source, doc_id,
         |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens,
         |    md5(CAST(doc_id AS VARCHAR) || ':42') AS k
@@ -3305,31 +2519,15 @@ object SparkEntry {
         |      FROM toks t JOIN pl2 USING (source))
         |SELECT source, doc_id, n_tokens,
         |  CAST(ef + CASE WHEN CAST(cum_before AS DOUBLE) < frac_tokens THEN 1 ELSE 0 END AS BIGINT) AS n_repeats
-        |FROM o ORDER BY source, doc_id""".stripMargin,
-    // DSIR oracle: identical md5-prefix bucketing, identical add-one
-    // probability tree; round(4) absorbs ln's per-term ulp noise over the
-    // per-doc sum (values bounded by |lp| <= ln-ratio of the two tables).
-    "curate_dsir_weights" ->
-      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |occ AS (SELECT doc_id, source, ('0x' || substring(md5(bigram), 1, 6))::BIGINT % 1024 AS b
-        |  FROM (SELECT doc_id, source, unnest(CASE WHEN len(tk) >= 2
-        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
-        |    ELSE [] END) AS bigram FROM t)),
-        |raw AS (SELECT b, count(*) AS cr FROM occ GROUP BY b),
-        |tgt AS (SELECT b, count(*) AS ct FROM occ WHERE source = 'src0' GROUP BY b),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS nr,
-        |  CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS nt FROM occ),
-        |sc AS (SELECT doc_id,
-        |    ln((CAST(coalesce(ct, 0) AS DOUBLE) + 1.0) / (CAST(nt AS DOUBLE) + CAST(1024 AS DOUBLE))) -
-        |    ln((CAST(cr AS DOUBLE) + 1.0) / (CAST(nr AS DOUBLE) + CAST(1024 AS DOUBLE))) AS lp
-        |  FROM occ JOIN raw USING (b) LEFT JOIN tgt USING (b) CROSS JOIN tot),
-        |per AS (SELECT doc_id, count(*) AS nf, round(sum(lp), 4) AS log_ratio FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(nf, 0) AS BIGINT) AS n_feats, log_ratio
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // DoReMi mirror-ascent unrolled round-by-round: every weighted sum is
-    // an exact DECIMAL(28,18) accumulation of IEEE products and weights
-    // re-anchor at round(6) per round — the kmeansFit oracle discipline
-    "curate_doremi_weights" -> {
+        |FROM o ORDER BY source, doc_id""".stripMargin),
+    // DoReMi-style Group-DRO reweighting: 3 mirror-ascent rounds on
+    // per-source excess loss, starting from the token-share reference
+    query("curate_doremi_weights", (s, dir) =>
+      graft.curate.Curation.doremiWeights(table(s, dir, "documents")),
+      // DoReMi mirror-ascent unrolled round-by-round: every weighted sum is
+      // an exact DECIMAL(28,18) accumulation of IEEE products and weights
+      // re-anchor at round(6) per round — the kmeansFit oracle discipline
+      {
       val rounds = (1 to 3).map { t =>
         val prev = s"w${t - 1}"
         s"""b$t AS (SELECT round(CAST(sum(CAST(w * loss AS DECIMAL(28,18))) AS DOUBLE), 6) AS b FROM $prev),
@@ -3352,11 +2550,19 @@ object SparkEntry {
          |SELECT w3.source, w3.n_tokens, w3.loss, w0.w AS ref_weight,
          |  w3.w AS doremi_weight, round(w3.w / w0.w, 6) AS reweight_factor
          |FROM w3 JOIN w0 USING (source) ORDER BY w3.source""".stripMargin
-    },
-    // the dedup_clusters graph + the samp_hash_split assignment applied
-    // to the GROUP key (cluster min-id; singletons group as themselves) —
-    // every parameter derives from the same Sampling constants
-    "curate_split_safe" -> {
+    }),
+    // leakage-safe split: assignment at near-dup-CLUSTER granularity over
+    // the same 0.5-Jaccard graph as dedup_clusters, so no near-dup pair
+    // can straddle train/test (the failure mode of the plain per-doc
+    // samp_hash_split on an undeduplicated corpus)
+    query("curate_split_safe", (s, dir) =>
+      graft.curate.Curation.leakageSafeSplit(table(s, dir, "documents"),
+        Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.5,
+          maxShingleDf = 100)),
+      // the dedup_clusters graph + the samp_hash_split assignment applied
+      // to the GROUP key (cluster min-id; singletons group as themselves) —
+      // every parameter derives from the same Sampling constants
+      {
       import graft.sources.Sampling._
       val (trainEnd, valEnd) = splitThresholds(DefaultVal256, DefaultTest256)
       s"""WITH RECURSIVE $clusterCtes,
@@ -3367,10 +2573,17 @@ object SparkEntry {
          |SELECT doc_id, CAST(group_id AS BIGINT) AS group_id,
          |  CASE WHEN b < '$trainEnd' THEN 'train' WHEN b < '$valEnd' THEN 'val' ELSE 'test' END AS split
          |FROM k ORDER BY doc_id""".stripMargin
-    },
-    // the split CTEs + the dedup_shared_ngrams 8-token window spelling,
-    // joined across the boundary (fresh CTE names: clusterCtes owns t/sh)
-    "curate_split_contamination" -> {
+    }),
+    // post-split audit: verbatim 8-token windows that cross the
+    // train/eval boundary BELOW the cluster threshold (what the
+    // cluster-grain split cannot prevent, reported per eval doc)
+    query("curate_split_contamination", (s, dir) =>
+      graft.curate.Curation.splitContamination(table(s, dir, "documents"),
+        Dedup.jaccardPairs(table(s, dir, "documents"), 3, 0.5,
+          maxShingleDf = 100)),
+      // the split CTEs + the dedup_shared_ngrams 8-token window spelling,
+      // joined across the boundary (fresh CTE names: clusterCtes owns t/sh)
+      {
       import graft.sources.Sampling._
       val (trainEnd, valEnd) = splitThresholds(DefaultVal256, DefaultTest256)
       s"""WITH RECURSIVE $clusterCtes,
@@ -3396,32 +2609,19 @@ object SparkEntry {
          |  COALESCE(hits.nsw, 0) AS n_shared_windows
          |FROM sp LEFT JOIN wc USING (doc_id) LEFT JOIN hits USING (doc_id)
          |WHERE sp.split <> 'train' ORDER BY sp.doc_id""".stripMargin
-    },
-    "dedup_embedding_lsh" ->
-      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |np AS (SELECT min(p) AS p FROM generate_series(8, 30) t(p)
-        |  WHERE (1::BIGINT << p) * ${graft.similarity.Similarity.LshTargetOccupancy} >= (SELECT count(*) FROM e0)),
-        |bk AS (SELECT vec_id, v,
-        |  list_sum(list_transform(generate_series(0, np.p - 1), j ->
-        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |      v[d] * CAST((('0x' || substring(md5(CAST(j AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
-        |    THEN 1::BIGINT << j ELSE 0::BIGINT END)) AS bucket FROM e0 CROSS JOIN np),
-        |e1 AS (SELECT vec_id, bucket, v, sqrt(list_dot_product(v, v)) AS nrm FROM bk),
-        |e AS (SELECT vec_id, bucket, list_transform(v, x -> x/nrm) AS u FROM e1)
-        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  round(list_dot_product(a.u, b.u), 4) AS cosine
-        |FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |WHERE list_dot_product(a.u, b.u) >= 0.4
-        |ORDER BY vec_a, vec_b""".stripMargin,
+    }),
 
-    "sim_cosine_topk" ->
+    // ---- similarity search (north star) ----
+    query("sim_cosine_topk", (s, dir) =>
+      Similarity.cosineTopK(table(s, dir, "embeddings"), 0L, 10),
       """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
         |SELECT e.vec_id, e.label,
         |  round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
         |FROM e, q WHERE e.vec_id != 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-    "sim_ann_lsh" ->
+        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin),
+    query("sim_ann_lsh", (s, dir) =>
+      Similarity.annCosineLsh(table(s, dir, "embeddings"), 0L, 10),
       """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |b AS (SELECT vec_id, label, v,
         |  list_sum(list_transform(generate_series(0, 7), j ->
@@ -3432,30 +2632,14 @@ object SparkEntry {
         |SELECT b.vec_id, b.label,
         |  round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
         |FROM b, q WHERE b.bucket = q.qbucket AND b.vec_id != 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-    // same bucket/cosine CTEs, anchors = vec_id % 37, label-mismatch
-    // filter, per-anchor (cosine DESC, id) top-3
-    "sim_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |b AS (SELECT vec_id, label, v,
-        |  list_sum(list_transform(generate_series(0, 7), j ->
-        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |      v[d] * CAST((('0x' || substring(md5(CAST(j AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
-        |    THEN 1 << j ELSE 0 END)) AS bucket FROM e),
-        |a AS (SELECT vec_id AS anchor_id, label AS anchor_label, v AS av, bucket
-        |  FROM b WHERE vec_id % 37 = 0),
-        |cand AS (SELECT a.anchor_id, a.anchor_label, b.vec_id AS negative_id,
-        |    b.label AS negative_label,
-        |    round(list_dot_product(v, av)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(av, av))), 4) AS cosine
-        |  FROM b JOIN a USING (bucket) WHERE b.label <> a.anchor_label),
-        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY anchor_id
-        |    ORDER BY cosine DESC, negative_id) AS INT) AS "rank" FROM cand)
-        |SELECT anchor_id, anchor_label, negative_id, negative_label, cosine, "rank"
-        |FROM r WHERE "rank" <= 3 ORDER BY anchor_id, "rank"""".stripMargin,
-    // multi-probe: neighbors of the base bucket by flipping the 3 planes
-    // with the smallest |query·plane| margin (ties by plane index) —
-    // identical margin arithmetic, so both engines probe the same buckets
-    "sim_ann_multiprobe" ->
+        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin),
+    // multi-probe serving upgrade: base bucket + 3 lowest-|margin|
+    // single-bit flips, deterministic probe order on both engines
+    query("sim_ann_multiprobe", (s, dir) =>
+      Similarity.annCosineLshMultiProbe(table(s, dir, "embeddings"), 0L, 10),
+      // multi-probe: neighbors of the base bucket by flipping the 3 planes
+      // with the smallest |query·plane| margin (ties by plane index) —
+      // identical margin arithmetic, so both engines probe the same buckets
       """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |b AS (SELECT vec_id, label, v,
         |  list_sum(list_transform(generate_series(0, 7), j ->
@@ -3473,14 +2657,39 @@ object SparkEntry {
         |SELECT b.vec_id, b.label,
         |  round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
         |FROM b JOIN pb ON b.bucket = pb.bucket WHERE b.vec_id != 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-    "sim_norms_by_label" ->
+        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin),
+    query("sim_ann_ivf", (s, dir) =>
+      Similarity.annCosineIvf(table(s, dir, "embeddings"), 0L, 10),
+      """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+        |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+        |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
+        |c0 AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
+        |c AS (SELECT row_number() OVER (ORDER BY ck, vec_id) AS cell_id, u AS cu FROM c0),
+        |asg AS (SELECT vec_id, label, u, cell_id FROM (
+        |  SELECT e.vec_id, e.label, e.u, c.cell_id,
+        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
+        |  FROM e CROSS JOIN c) WHERE rn = 1),
+        |q AS (SELECT u AS qu FROM asg WHERE vec_id = 0),
+        |probe AS (SELECT cell_id FROM (
+        |  SELECT c.cell_id, row_number() OVER (ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
+        |  FROM q CROSS JOIN c) WHERE rn <= 4)
+        |SELECT a.vec_id, a.label, round(list_dot_product(a.u, q.qu), 4) AS cosine
+        |FROM asg a JOIN probe USING (cell_id) CROSS JOIN q
+        |WHERE a.vec_id != 0
+        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin),
+    query("sim_norms_by_label", (s, dir) =>
+      Similarity.normStatsByLabel(table(s, dir, "embeddings")),
       """WITH e AS (SELECT label, sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm FROM embeddings)
         |SELECT label, count(*) AS n, round(min(norm), 4) AS min_norm, round(max(norm), 4) AS max_norm
-        |FROM e GROUP BY label ORDER BY label""".stripMargin,
-    // the md5 {-1,0,+1} plane replay (jlCoef) + the same ascending-dim
-    // folds and sqrt(3/16) scale as the Spark expressions
-    "sim_jl_norms" ->
+        |FROM e GROUP BY label ORDER BY label""".stripMargin),
+    // sparse JL projection (Achlioptas density-1/3 {-1,0,+1} planes,
+    // md5-derived): corpus-wide norm-preservation gate (scan-shaped,
+    // zero shuffle) + pairwise distance distortion on a 64-vector
+    // deterministic sample (constant cost at any corpus size)
+    query("sim_jl_norms", (s, dir) =>
+      Similarity.jlNormReport(table(s, dir, "embeddings")),
+      // the md5 {-1,0,+1} plane replay (jlCoef) + the same ascending-dim
+      // folds and sqrt(3/16) scale as the Spark expressions
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |pr AS (SELECT vec_id, v, $jlProjExpr AS p FROM e0)
          |SELECT vec_id,
@@ -3489,8 +2698,9 @@ object SparkEntry {
          |  CASE WHEN sqrt(list_dot_product(v, v)) > 0
          |       THEN round(sqrt(3.0/16.0) * sqrt(list_dot_product(p, p))
          |                  / sqrt(list_dot_product(v, v)), 4) END AS ratio
-         |FROM pr ORDER BY vec_id""".stripMargin,
-    "sim_jl_distortion" ->
+         |FROM pr ORDER BY vec_id""".stripMargin),
+    query("sim_jl_distortion", (s, dir) =>
+      Similarity.jlDistortion(table(s, dir, "embeddings")),
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |smp AS (SELECT vec_id, v FROM e0
          |  ORDER BY md5(CAST(vec_id AS VARCHAR) || ':7'), vec_id LIMIT 64),
@@ -3506,11 +2716,15 @@ object SparkEntry {
          |  FROM pairs)
          |SELECT vec_a, vec_b, round(dorig, 4) AS d_orig, round(dproj, 4) AS d_proj,
          |  CASE WHEN dorig > 0 THEN round(dproj / dorig, 4) END AS ratio
-         |FROM d ORDER BY vec_a, vec_b""".stripMargin,
-    // five DECIMAL(28,18)-exact moment sums per (i,j) with i<=j (products
-    // double-multiplied BEFORE the decimal cast, mirroring Spark), then
-    // the identical (n*sxy - sx*sy)/(sqrt(...)*sqrt(...)) double tree
-    "sim_corr_matrix" ->
+         |FROM d ORDER BY vec_a, vec_b""".stripMargin),
+    // feature-redundancy diagnostic: Pearson corr over the first 8 dims —
+    // pair generation is in-row (no self-join), moment sums are
+    // DECIMAL(28,18)-exact, one fixed double tree after aggregation
+    query("sim_corr_matrix", (s, dir) =>
+      Similarity.dimCorrelationMatrix(table(s, dir, "embeddings")),
+      // five DECIMAL(28,18)-exact moment sums per (i,j) with i<=j (products
+      // double-multiplied BEFORE the decimal cast, mirroring Spark), then
+      // the identical (n*sxy - sx*sy)/(sqrt(...)*sqrt(...)) double tree
       """WITH p AS (
         |  SELECT r1.range AS i, r2.range AS j,
         |    CAST(embedding[CAST(r1.range + 1 AS INT)] AS DOUBLE) AS xi,
@@ -3532,14 +2746,17 @@ object SparkEntry {
         |       / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |          * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  END AS corr
-        |FROM a ORDER BY dim_i, dim_j""".stripMargin,
-    // same round-half-up quantize/dequantize spelling as the Spark plan;
-    // list_dot_product is the same left-to-right fold as graft_dot, so the
-    // per-vector mse is bit-identical before the rounded aggregate
-    // codebook = the same seeded-hash sample as the Spark side; total
-    // reconstruction error = sum of per-subspace best distances, summed
-    // in subspace order (list ORDER BY s) to match the sequential fold
-    "sim_pq_error" ->
+        |FROM a ORDER BY dim_i, dim_j""".stripMargin),
+    // int8 quantization fidelity: the 4x-storage-shrink safety report
+    // PQ sibling of the int8 report: 4-bit-per-subspace codebook encoding
+    query("sim_pq_error", (s, dir) =>
+      Similarity.pqErrorByLabel(table(s, dir, "embeddings")),
+      // same round-half-up quantize/dequantize spelling as the Spark plan;
+      // list_dot_product is the same left-to-right fold as graft_dot, so the
+      // per-vector mse is bit-identical before the rounded aggregate
+      // codebook = the same seeded-hash sample as the Spark side; total
+      // reconstruction error = sum of per-subspace best distances, summed
+      // in subspace order (list ORDER BY s) to match the sequential fold
       """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |cb0 AS (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM v ORDER BY ck, vec_id LIMIT 16),
         |cb AS (SELECT v AS cv FROM cb0),
@@ -3554,11 +2771,13 @@ object SparkEntry {
         |SELECT label, count(*) AS n_vecs,
         |  round(CAST(sum(CAST(mse AS DECIMAL(18,12))) AS DOUBLE) / count(*), 8) AS avg_mse,
         |  round(max(mse), 8) AS max_mse
-        |FROM pm GROUP BY label ORDER BY label""".stripMargin,
-    // unit-vector codebook, rank-1 argmin per (vec, subspace) with ties
-    // to the lowest code index, q-codeword partials summed in subspace
-    // order (list ORDER BY s) to match Spark's sequential fold
-    "sim_ann_pq" ->
+        |FROM pm GROUP BY label ORDER BY label""".stripMargin),
+    // PQ serving: top-k by query x reconstruction (asymmetric distance)
+    query("sim_ann_pq", (s, dir) =>
+      Similarity.annCosinePq(table(s, dir, "embeddings"), 0L, 10),
+      // unit-vector codebook, rank-1 argmin per (vec, subspace) with ties
+      // to the lowest code index, q-codeword partials summed in subspace
+      // order (list ORDER BY s) to match Spark's sequential fold
       """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
         |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
@@ -3582,8 +2801,9 @@ object SparkEntry {
         |sc AS (SELECT vec_id, label, list_sum(list(p ORDER BY s)) AS approx
         |       FROM part GROUP BY 1, 2)
         |SELECT vec_id, label, round(approx, 4) AS approx_cosine
-        |FROM sc ORDER BY round(approx, 4) DESC, vec_id LIMIT 10""".stripMargin,
-    "sim_quantize_error" ->
+        |FROM sc ORDER BY round(approx, 4) DESC, vec_id LIMIT 10""".stripMargin),
+    query("sim_quantize_error", (s, dir) =>
+      Similarity.quantizeErrorByLabel(table(s, dir, "embeddings")),
       """WITH v AS (SELECT label, embedding::DOUBLE[] AS e FROM embeddings),
         |m AS (SELECT label, e, list_max(list_transform(e, x -> abs(x))) AS ma FROM v),
         |q AS (SELECT label,
@@ -3596,10 +2816,14 @@ object SparkEntry {
         |SELECT label, count(*) AS n_vecs,
         |  round(CAST(sum(CAST(mse AS DECIMAL(18,12))) AS DOUBLE) / count(*), 8) AS avg_mse,
         |  round(max(mse), 8) AS max_mse
-        |FROM q GROUP BY label ORDER BY label""".stripMargin,
-    // same bucket expression as sim_ann_lsh; per-query rank over the
-    // ROUNDED cosine so cross-engine tie order is pinned
-    "sim_ann_multi" ->
+        |FROM q GROUP BY label ORDER BY label""".stripMargin),
+    // batch serving path: the whole query workload amortizes ONE
+    // bucket-equi-join (the vector analog of bm25_multi_stored)
+    query("sim_ann_multi", (s, dir) =>
+      Similarity.annCosineLshMany(table(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L, 3L), 5),
+      // same bucket expression as sim_ann_lsh; per-query rank over the
+      // ROUNDED cosine so cross-engine tie order is pinned
       """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |b AS (SELECT vec_id, label, v,
         |  list_sum(list_transform(generate_series(0, 7), j ->
@@ -3612,9 +2836,38 @@ object SparkEntry {
         |      FROM b JOIN q USING (bucket) WHERE b.vec_id != q.query_id),
         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn FROM s)
         |SELECT query_id, vec_id, label, cosine, CAST(rn AS INT) AS rn
-        |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    // brute top-10 and LSH top-10 per query, intersected: measured recall
-    "sim_recall_eval" ->
+        |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin),
+    // batch IVF serving: corpus assigned once, one cell-equi-join for the
+    // whole workload (the IVF sibling of sim_ann_multi)
+    query("sim_ann_ivf_multi", (s, dir) =>
+      Similarity.annCosineIvfMany(table(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L, 3L), 5),
+      """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+        |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+        |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
+        |c0 AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
+        |c AS (SELECT row_number() OVER (ORDER BY ck, vec_id) AS cell_id, u AS cu FROM c0),
+        |asg AS (SELECT vec_id, label, u, cell_id FROM (
+        |  SELECT e.vec_id, e.label, e.u, c.cell_id,
+        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
+        |  FROM e CROSS JOIN c) WHERE rn = 1),
+        |q AS (SELECT vec_id AS query_id, u AS qu FROM asg WHERE vec_id IN (0, 1, 2, 3)),
+        |probe AS (SELECT query_id, cell_id, qu FROM (
+        |  SELECT q.query_id, c.cell_id, q.qu,
+        |         row_number() OVER (PARTITION BY q.query_id ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
+        |  FROM q CROSS JOIN c) WHERE rn <= 4),
+        |s AS (SELECT p.query_id, a.vec_id, a.label, round(list_dot_product(a.u, p.qu), 4) AS cosine
+        |      FROM asg a JOIN probe p USING (cell_id)
+        |      WHERE a.vec_id != p.query_id),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn FROM s)
+        |SELECT query_id, vec_id, label, cosine, CAST(rn AS INT) AS rn
+        |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin),
+    // index-quality evaluation: measured recall@10 of the LSH index vs
+    // exact brute force, per query — recall is measured, never assumed
+    query("sim_recall_eval", (s, dir) =>
+      Similarity.annRecallAtK(table(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L, 3L), 10),
+      // brute top-10 and LSH top-10 per query, intersected: measured recall
       """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |b AS (SELECT vec_id, v,
         |  list_sum(list_transform(generate_series(0, 7), j ->
@@ -3638,10 +2891,73 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)/count(*), 4) AS recall
         |FROM br LEFT JOIN ap ON br.query_id = ap.query_id AND br.vec_id = ap.vec_id
-        |GROUP BY br.query_id ORDER BY br.query_id""".stripMargin,
-    // same centroid/assignment CTEs as sim_ann_ivf; new centroid head
-    // coordinates as per-cell means over unit vectors
-    "sim_kmeans_step" ->
+        |GROUP BY br.query_id ORDER BY br.query_id""".stripMargin),
+    // per-label centroid + pairwise centroid cosine: the embedding-level
+    // corpus-mix probe (decimal-exact sums, kmeansFit discipline)
+    query("sim_label_centroids", (s, dir) =>
+      Similarity.labelCentroidSimilarity(table(s, dir, "embeddings")),
+      // decimal-exact per-dim sums -> rounded centroid coords -> pair
+      // cosine; the VARCHAR hop is not needed because round(...,6) absorbs
+      // DuckDB's occasional 1-ulp wide-decimal->DOUBLE cast
+      """WITH e AS (SELECT label, embedding AS v FROM embeddings),
+        |x AS (SELECT label, d, CAST(v[d] AS DECIMAL(28,18)) AS x
+        |      FROM (SELECT label, v, unnest(generate_series(1, 64)) AS d FROM e)),
+        |s AS (SELECT label, d, sum(x) AS s FROM x GROUP BY label, d),
+        |n AS (SELECT label, count(*) AS n FROM e GROUP BY label),
+        |c AS (SELECT s.label, d, round(CAST(s / n AS DOUBLE), 6) AS c
+        |      FROM s JOIN n USING (label)),
+        |dt AS (SELECT a.label AS label_a, b.label AS label_b, sum(a.c * b.c) AS dot
+        |       FROM c a JOIN c b ON a.d = b.d AND a.label < b.label GROUP BY 1, 2),
+        |nrm AS (SELECT label, sum(c * c) AS n2 FROM c GROUP BY label)
+        |SELECT d.label_a, d.label_b, na.n AS n_a, nb.n AS n_b,
+        |  round(d.dot / sqrt(xa.n2 * xb.n2), 4) AS cosine
+        |FROM dt d JOIN nrm xa ON xa.label = d.label_a
+        |  JOIN nrm xb ON xb.label = d.label_b
+        |  JOIN n na ON na.label = d.label_a JOIN n nb ON nb.label = d.label_b
+        |ORDER BY label_a, label_b""".stripMargin),
+    // sparse-vector similarity through the postings index: top-k
+    // neighbors per doc by cosine over top-m TF-IDF keyword signatures
+    // (the embedding-free routing/triage form; bucket-bounded like dedup)
+    query("sim_sparse_topk", (s, dir) =>
+      graft.textstats.TextAnalysis.sparseCosineNeighbors(
+        table(s, dir, "documents")),
+      // replays the top-3 BIGRAM tf-idf signature, then the feature-bucket
+      // cosine: df-capped term join, dot over <= m rounded weights, norms
+      // over the full top-m vector, rank on the ROUNDED cosine
+      """WITH t0 AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |tok AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])) AS term
+        |        FROM t0 WHERE len(tk) >= 2),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
+        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+        |n AS (SELECT count(*) AS n FROM documents),
+        |s AS (SELECT tf.doc_id, tf.term,
+        |        round(tf * ln(CAST(n.n AS DOUBLE)/df), 4) AS tfidf
+        |      FROM tf JOIN dfq USING (term) CROSS JOIN n),
+        |r AS (SELECT doc_id, term, tfidf,
+        |        row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rn FROM s),
+        |feats AS (SELECT doc_id, term, tfidf FROM r WHERE rn <= 3),
+        |fdf AS (SELECT term FROM feats GROUP BY term HAVING count(*) <= 1000),
+        |f2 AS (SELECT feats.* FROM feats JOIN fdf USING (term)),
+        |dots AS (SELECT a.doc_id AS doc_id, b.doc_id AS neighbor_id,
+        |           sum(a.tfidf * b.tfidf) AS dot
+        |         FROM f2 a JOIN f2 b ON a.term = b.term AND a.doc_id != b.doc_id
+        |         GROUP BY 1, 2),
+        |norms AS (SELECT doc_id, sum(tfidf * tfidf) AS n2 FROM feats GROUP BY doc_id),
+        |c AS (SELECT d.doc_id, d.neighbor_id,
+        |        round(d.dot / sqrt(na.n2 * nb.n2), 4) AS cosine
+        |      FROM dots d JOIN norms na ON na.doc_id = d.doc_id
+        |        JOIN norms nb ON nb.doc_id = d.neighbor_id),
+        |rk AS (SELECT doc_id, neighbor_id, cosine,
+        |         row_number() OVER (PARTITION BY doc_id ORDER BY cosine DESC, neighbor_id) AS rn
+        |       FROM c WHERE cosine > 0)
+        |SELECT doc_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
+        |FROM rk WHERE rn <= 5 ORDER BY doc_id, rn""".stripMargin),
+    // one Lloyd's iteration over the IVF assignment: per-cell population +
+    // refined centroid head coordinates (the trained-quantizer primitive)
+    query("sim_kmeans_step", (s, dir) =>
+      Similarity.kmeansStep(table(s, dir, "embeddings")),
+      // same centroid/assignment CTEs as sim_ann_ivf; new centroid head
+      // coordinates as per-cell means over unit vectors
       """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
         |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
         |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
@@ -3654,12 +2970,18 @@ object SparkEntry {
         |SELECT CAST(cell_id AS INT) AS cell_id, count(*) AS n_vecs,
         |  round(avg(u[1]), 6) AS c0, round(avg(u[2]), 6) AS c1,
         |  round(avg(u[3]), 6) AS c2, round(avg(u[4]), 6) AS c3
-        |FROM asg GROUP BY cell_id ORDER BY cell_id""".stripMargin,
-    // Lloyd replay, 3 unrolled rounds: assignment argmax (same CTE as
-    // sim_kmeans_step), then per-dim DECIMAL(28,18)-exact sums re-unitized
-    // by the identical x/sqrt(dot) tree Spark uses; empty cells keep the
-    // previous centroid via the LEFT JOIN + COALESCE.
-    "sim_kmeans_fit" -> {
+        |FROM asg GROUP BY cell_id ORDER BY cell_id""".stripMargin),
+    // full Lloyd loop, 3 fixed rounds (the eps early-stop is spec
+    // territory — a fixed round count is what the SQL oracle can replay).
+    // Per-dim sums are DECIMAL(28,18)-exact on both sides, so the trained
+    // centroids are partition-layout-independent and bit-reproducible.
+    query("sim_kmeans_fit", (s, dir) =>
+      Similarity.kmeansFitReport(table(s, dir, "embeddings")),
+      // Lloyd replay, 3 unrolled rounds: assignment argmax (same CTE as
+      // sim_kmeans_step), then per-dim DECIMAL(28,18)-exact sums re-unitized
+      // by the identical x/sqrt(dot) tree Spark uses; empty cells keep the
+      // previous centroid via the LEFT JOIN + COALESCE.
+      {
       val rounds = kmeansRoundsSql
       s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
          |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
@@ -3672,11 +2994,156 @@ object SparkEntry {
          |  round(ct3.cu[3], 6) AS c2, round(ct3.cu[4], 6) AS c3
          |FROM ct3 LEFT JOIN (SELECT cell_id, count(*) AS n FROM a3 GROUP BY cell_id) n3 USING (cell_id)
          |ORDER BY cell_id""".stripMargin
-    },
-    // Power-iteration oracle: same exact v0 = 0.125, same decimal matvec
-    // sums, same sequential self-dot normalization (list_dot_product ≡
-    // graft_dot fold order), same per-round round(…,6) re-anchoring.
-    "sim_power_iteration" -> {
+    }),
+    // dedup-family member of the trained partition: within-cell cosine
+    // pairs — learned buckets instead of random hyperplanes
+    // SemDeDup-family prototype pruning: per trained cell, the keepK
+    // most-central vectors stay; assignment is the broadcast-fold argmax
+    query("sim_cell_prune", (s, dir) =>
+      Similarity.cellPrune(table(s, dir, "embeddings")),
+      // same unrolled 3-iteration kmeans as sim_kmeans_fit, plus a final
+      // assignment against the trained ct3 and a within-cell self-join
+      // the shared kmeans unroll + final assignment, centroid cosine from
+      // ct3, row_number per cell (cos DESC, vec_id) at keepK=20
+      {
+      val rounds = kmeansRoundsSql
+      s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+         |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
+         |c0s AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
+         |ct0 AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS cell_id, u AS cu FROM c0s),
+         |$rounds,
+         |a4 AS (SELECT vec_id, u, cell_id FROM (
+         |  SELECT e.vec_id, e.u, c.cell_id,
+         |         row_number() OVER (PARTITION BY e.vec_id
+         |           ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
+         |  FROM e CROSS JOIN ct3 c) WHERE rn = 1),
+         |ranked AS (SELECT a4.vec_id, a4.cell_id,
+         |    list_dot_product(a4.u, c.cu) AS cs,
+         |    row_number() OVER (PARTITION BY a4.cell_id
+         |      ORDER BY list_dot_product(a4.u, c.cu) DESC, a4.vec_id) AS rk
+         |  FROM a4 JOIN ct3 c USING (cell_id))
+         |SELECT vec_id, cell_id, round(cs, 4) AS centroid_cos,
+         |  CASE WHEN rk <= 20 THEN 'kept' ELSE 'pruned' END AS verdict
+         |FROM ranked ORDER BY vec_id""".stripMargin
+    }),
+    // banding-curve calibration: observed banded-LSH catch rate per
+    // cosine bucket vs the 1-(1-p^r)^b theory (evaluation op: the brute
+    // arm is ground truth, the annRecallAtK standing)
+    query("sim_lsh_calibration", (s, dir) =>
+      Similarity.lshCalibration(table(s, dir, "embeddings")),
+      // brute pairwise cosine (ground truth) vs the 4x8 banded buckets,
+      // both arms over the SAME 2048-vector seeded-md5 sample (constant
+      // cost at any corpus size — a pair's catch verdict depends only on
+      // its own two vectors); theory term =
+      // 1-(1-(1-acos(mid)/pi)^8)^4 at the bucket center
+      """WITH eall AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        |e0 AS (SELECT vec_id, v FROM (
+        |  SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR) || ':42') AS sk
+        |  FROM eall ORDER BY sk, vec_id LIMIT 2048)),
+        |bands AS (SELECT unnest(generate_series(0, 3)) AS band),
+        |bk AS (SELECT vec_id, band,
+        |  list_sum(list_transform(generate_series(0, 7), jj ->
+        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
+        |      v[d] * CAST((('0x' || substring(md5(CAST(band*8 + jj AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
+        |    THEN 1 << jj ELSE 0 END)) AS bucket
+        |  FROM e0 CROSS JOIN bands),
+        |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+        |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+        |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
+        |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, list_dot_product(a.u, b.u) AS cs
+        |  FROM e a JOIN e b ON a.vec_id < b.vec_id),
+        |g AS (SELECT CAST(floor(cs*10) AS INT) AS cos_bucket,
+        |    count(*) AS n_pairs,
+        |    sum(CASE WHEN cand.vec_a IS NOT NULL THEN 1 ELSE 0 END) AS n_caught
+        |  FROM p LEFT JOIN cand USING (vec_a, vec_b) GROUP BY 1)
+        |SELECT cos_bucket, CAST(n_pairs AS BIGINT) AS n_pairs,
+        |  CAST(n_caught AS BIGINT) AS n_caught,
+        |  round(CAST(n_caught AS DOUBLE)/n_pairs, 4) AS observed,
+        |  round(1.0 - power(1.0 - power(1.0 - acos(least(greatest((CAST(cos_bucket AS DOUBLE)+0.5)/10.0, -1.0), 1.0))/pi(), 8), 4), 4) AS theoretical
+        |FROM g ORDER BY cos_bucket""".stripMargin),
+    query("dedup_semantic_pairs", (s, dir) =>
+      Similarity.semanticDedupPairs(table(s, dir, "embeddings")),
+      {
+      val rounds = kmeansRoundsSql
+      s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+         |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+         |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
+         |c0s AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
+         |ct0 AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS cell_id, u AS cu FROM c0s),
+         |$rounds,
+         |a4 AS (SELECT vec_id, u, cell_id FROM (
+         |  SELECT e.vec_id, e.u, c.cell_id,
+         |         row_number() OVER (PARTITION BY e.vec_id
+         |           ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
+         |  FROM e CROSS JOIN ct3 c) WHERE rn = 1)
+         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+         |  round(list_dot_product(a.u, b.u), 4) AS cosine
+         |FROM a4 a JOIN a4 b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
+         |WHERE list_dot_product(a.u, b.u) >= 0.4
+         |ORDER BY vec_a, vec_b""".stripMargin
+    }),
+    // IVF-PQ composition (round-5): trained coarse cells + residual PQ,
+    // served by cell prune + asymmetric distance
+    query("sim_ann_ivfpq", (s, dir) =>
+      Similarity.annCosineIvfPq(table(s, dir, "embeddings"), 0L, 10),
+      // the full IVF-PQ replay: same unrolled kmeans (ct3), final
+      // assignment, residuals vs the assigned centroid, the seeded-md5
+      // residual codebook, probe rank over trained cells, per-(vec,subspace)
+      // argmin with (d2, code_id) tie-break, and qc + ordered list_sum —
+      // every stage of the composed index recomputed independently in SQL.
+      {
+      val rounds = kmeansRoundsSql
+      s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+         |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+         |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
+         |c0s AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
+         |ct0 AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS cell_id, u AS cu FROM c0s),
+         |$rounds,
+         |a4 AS (SELECT vec_id, label, u, cell_id FROM (
+         |  SELECT e.vec_id, e.label, e.u, c.cell_id,
+         |         row_number() OVER (PARTITION BY e.vec_id
+         |           ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
+         |  FROM e CROSS JOIN ct3 c) WHERE rn = 1),
+         |res AS (SELECT a4.vec_id, a4.label, a4.cell_id,
+         |          list_transform(generate_series(1, 64), i -> a4.u[i] - c.cu[i]) AS r
+         |        FROM a4 JOIN ct3 c USING (cell_id)),
+         |cb0 AS (SELECT vec_id, r, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM res ORDER BY ck, vec_id LIMIT 16),
+         |cb AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS code_id, r AS cr FROM cb0),
+         |q AS (SELECT u AS qu FROM e WHERE vec_id = 0),
+         |probe AS (SELECT cell_id, qc FROM (
+         |  SELECT c.cell_id, list_dot_product(q.qu, c.cu) AS qc,
+         |         row_number() OVER (ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
+         |  FROM q CROSS JOIN ct3 c) WHERE rn <= 4),
+         |cand AS (SELECT res.vec_id, res.label, res.r, probe.qc
+         |         FROM res JOIN probe USING (cell_id) WHERE res.vec_id != 0),
+         |d AS (SELECT t.vec_id, t.label, t.qc, g.s, cb.code_id, cb.cr,
+         |    list_dot_product(
+         |      list_transform(generate_series(1, 8), i -> t.r[g.s*8 + i] - cb.cr[g.s*8 + i]),
+         |      list_transform(generate_series(1, 8), i -> t.r[g.s*8 + i] - cb.cr[g.s*8 + i])) AS d2
+         |  FROM cand t CROSS JOIN generate_series(0, 7) g(s) CROSS JOIN cb),
+         |best AS (SELECT vec_id, label, qc, s, cr FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, code_id) AS rn FROM d)
+         |  WHERE rn = 1),
+         |part AS (SELECT b.vec_id, b.label, b.qc, b.s,
+         |    list_dot_product(
+         |      list_transform(generate_series(1, 8), i -> q.qu[b.s*8 + i]),
+         |      list_transform(generate_series(1, 8), i -> b.cr[b.s*8 + i])) AS p
+         |  FROM best b, q),
+         |sc AS (SELECT vec_id, label, max(qc) + list_sum(list(p ORDER BY s)) AS approx
+         |       FROM part GROUP BY vec_id, label)
+         |SELECT vec_id, label, round(approx, 4) AS approx_cosine
+         |FROM sc ORDER BY round(approx, 4) DESC, vec_id LIMIT 10""".stripMargin
+    }),
+    // top principal component by power iteration: mean-centered matvec
+    // rounds with decimal-exact sums; never materializes the covariance
+    query("sim_power_iteration", (s, dir) =>
+      Similarity.powerIterationPc(table(s, dir, "embeddings")),
+      // Power-iteration oracle: same exact v0 = 0.125, same decimal matvec
+      // sums, same sequential self-dot normalization (list_dot_product ≡
+      // graft_dot fold order), same per-round round(…,6) re-anchoring.
+      {
       val rounds = (1 to 3).map { t =>
         val prev = if (t == 1) "v0" else s"v${t - 1}"
         s"""s$t AS (SELECT vec_id, list_dot_product(x, vv) AS s FROM xc CROSS JOIN $prev),
@@ -3699,12 +3166,16 @@ object SparkEntry {
          |SELECT CAST(d AS INT) AS d, vv[d] AS loading, lambda
          |FROM v3 CROSS JOIN lam, generate_series(1, 64) g(d)
          |ORDER BY d""".stripMargin
-    },
-    // the sim_power_iteration chain verbatim for component 1, then the
-    // deflated second chain: each round's matvec has its v1 projection
-    // removed (v1 as the literal final rounded vector) before the round(6)
-    // unit re-anchor — replaying pcaTop2's driver arithmetic exactly
-    "sim_pca_top2" -> {
+    }),
+    // top-2 PCA: the same chain plus a Hotelling-deflated second chain —
+    // covariance never materialized, 2*iters+3 scans total
+    query("sim_pca_top2", (s, dir) =>
+      Similarity.pcaTop2(table(s, dir, "embeddings")),
+      // the sim_power_iteration chain verbatim for component 1, then the
+      // deflated second chain: each round's matvec has its v1 projection
+      // removed (v1 as the literal final rounded vector) before the round(6)
+      // unit re-anchor — replaying pcaTop2's driver arithmetic exactly
+      {
       val r1 = (1 to 3).map { t =>
         val prev = if (t == 1) "v0" else s"v${t - 1}"
         s"""s$t AS (SELECT vec_id, list_dot_product(x, vv) AS s FROM xc CROSS JOIN $prev),
@@ -3747,147 +3218,246 @@ object SparkEntry {
          |c2 AS (SELECT 2 AS component, CAST(d AS INT) AS d, vv[d] AS loading, lambda
          |  FROM u3 CROSS JOIN lam2, generate_series(1, 64) g(d))
          |SELECT * FROM c1 UNION ALL SELECT * FROM c2 ORDER BY component, d""".stripMargin
-    },
-    // same unrolled 3-iteration kmeans as sim_kmeans_fit, plus a final
-    // assignment against the trained ct3 and a within-cell self-join
-    // the shared kmeans unroll + final assignment, centroid cosine from
-    // ct3, row_number per cell (cos DESC, vec_id) at keepK=20
-    "sim_cell_prune" -> {
-      val rounds = kmeansRoundsSql
+    }),
+    // contrastive-training negatives: per anchor, the 3 most-similar
+    // DIFFERENTLY-labeled vectors from its LSH bucket — one bucket join
+    // for the whole anchor workload
+    query("sim_hard_negatives", (s, dir) =>
+      Similarity.hardNegatives(table(s, dir, "embeddings")),
+      // same bucket/cosine CTEs, anchors = vec_id % 37, label-mismatch
+      // filter, per-anchor (cosine DESC, id) top-3
+      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+        |b AS (SELECT vec_id, label, v,
+        |  list_sum(list_transform(generate_series(0, 7), j ->
+        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
+        |      v[d] * CAST((('0x' || substring(md5(CAST(j AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
+        |    THEN 1 << j ELSE 0 END)) AS bucket FROM e),
+        |a AS (SELECT vec_id AS anchor_id, label AS anchor_label, v AS av, bucket
+        |  FROM b WHERE vec_id % 37 = 0),
+        |cand AS (SELECT a.anchor_id, a.anchor_label, b.vec_id AS negative_id,
+        |    b.label AS negative_label,
+        |    round(list_dot_product(v, av)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(av, av))), 4) AS cosine
+        |  FROM b JOIN a USING (bucket) WHERE b.label <> a.anchor_label),
+        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY anchor_id
+        |    ORDER BY cosine DESC, negative_id) AS INT) AS "rank" FROM cand)
+        |SELECT anchor_id, anchor_label, negative_id, negative_label, cosine, "rank"
+        |FROM r WHERE "rank" <= 3 ORDER BY anchor_id, "rank"""".stripMargin),
+    // rank-aware index-quality eval: nDCG@10 of the IVF ranking vs the
+    // exact ranking, graded relevance from the exact arm itself
+    query("sim_ndcg_eval", (s, dir) =>
+      Similarity.ndcgEval(table(s, dir, "embeddings")),
+      // nDCG oracle: exact and IVF arms replayed, ranks over rounded
+      // cosines, the ln(x)/ln(2) discount spelled identically (native log2
+      // differs from the ln quotient by an ulp on powers of two).
+      """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+        |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
+        |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
+        |ex0 AS (SELECT e.vec_id,
+        |    round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
+        |  FROM e0 e, (SELECT v AS qv FROM e0 WHERE vec_id = 0) q WHERE e.vec_id != 0
+        |  ORDER BY cosine DESC, vec_id LIMIT 10),
+        |xr AS (SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id) AS rank_exact FROM ex0),
+        |c0 AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
+        |c AS (SELECT row_number() OVER (ORDER BY ck, vec_id) AS cell_id, u AS cu FROM c0),
+        |asg AS (SELECT vec_id, u, cell_id FROM (
+        |  SELECT e.vec_id, e.u, c.cell_id,
+        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
+        |  FROM e CROSS JOIN c) WHERE rn = 1),
+        |q AS (SELECT u AS qu FROM asg WHERE vec_id = 0),
+        |probe AS (SELECT cell_id FROM (
+        |  SELECT c.cell_id, row_number() OVER (ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
+        |  FROM q CROSS JOIN c) WHERE rn <= 4),
+        |ap AS (SELECT a.vec_id, round(list_dot_product(a.u, q.qu), 4) AS cosine
+        |  FROM asg a JOIN probe USING (cell_id) CROSS JOIN q
+        |  WHERE a.vec_id != 0
+        |  ORDER BY cosine DESC, vec_id LIMIT 10),
+        |ar AS (SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id) AS pos FROM ap),
+        |dc AS (SELECT sum(CAST(coalesce(11 - rank_exact, 0) AS DOUBLE) /
+        |    (ln(CAST(pos AS DOUBLE) + 1.0) / ln(CAST(2 AS DOUBLE)))) AS dcg
+        |  FROM ar LEFT JOIN xr USING (vec_id)),
+        |ic AS (SELECT sum(CAST(11 - rank_exact AS DOUBLE) /
+        |    (ln(CAST(rank_exact AS DOUBLE) + 1.0) / ln(CAST(2 AS DOUBLE)))) AS idcg FROM xr)
+        |SELECT 10 AS k, round(dcg, 4) AS dcg, round(idcg, 4) AS idcg,
+        |  round(dcg / idcg, 4) AS ndcg
+        |FROM dc CROSS JOIN ic""".stripMargin),
+    // MMR diversification: greedy λ·rel − μ·max-sim rerank of the top-20
+    // candidates (the RAG anti-near-duplicate serving pass)
+    query("sim_mmr_rerank", (s, dir) =>
+      Similarity.mmrRerank(table(s, dir, "embeddings")),
+      // MMR oracle: candidate arm replayed, then each greedy round
+      // unrolled — NOT-IN of prior picks, correlated max over the selected
+      // set's rounded pairwise cosines, same round(…,6) + vec_id argmax.
+      {
+      val lam = "CAST(0.7 AS DOUBLE)"
+      val div = "CAST(0.3 AS DOUBLE)"
+      val rounds = (2 to 5).map { t =>
+        val selList = (1 until t).map(i => s"SELECT vec_id FROM s$i")
+          .mkString(" UNION ALL ")
+        val selU = (1 until t)
+          .map(i => s"SELECT u FROM cand JOIN s$i USING (vec_id)")
+          .mkString(" UNION ALL ")
+        s"""p$t AS (SELECT c.vec_id, round($lam * c.rel - $div *
+           |    (SELECT max(round(list_dot_product(c.u, s.u), 4)) FROM ($selU) s), 6) AS mmr
+           |  FROM cand c WHERE c.vec_id NOT IN ($selList)),
+           |s$t AS (SELECT vec_id, mmr, $t AS pos FROM p$t ORDER BY mmr DESC, vec_id LIMIT 1)""".stripMargin
+      }.mkString(",\n")
+      val all = (1 to 5).map(i => s"SELECT * FROM s$i").mkString(" UNION ALL ")
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
          |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
-         |c0s AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
-         |ct0 AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS cell_id, u AS cu FROM c0s),
-         |$rounds,
-         |a4 AS (SELECT vec_id, u, cell_id FROM (
-         |  SELECT e.vec_id, e.u, c.cell_id,
-         |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
-         |  FROM e CROSS JOIN ct3 c) WHERE rn = 1),
-         |ranked AS (SELECT a4.vec_id, a4.cell_id,
-         |    list_dot_product(a4.u, c.cu) AS cs,
-         |    row_number() OVER (PARTITION BY a4.cell_id
-         |      ORDER BY list_dot_product(a4.u, c.cu) DESC, a4.vec_id) AS rk
-         |  FROM a4 JOIN ct3 c USING (cell_id))
-         |SELECT vec_id, cell_id, round(cs, 4) AS centroid_cos,
-         |  CASE WHEN rk <= 20 THEN 'kept' ELSE 'pruned' END AS verdict
-         |FROM ranked ORDER BY vec_id""".stripMargin
-    },
-    // brute pairwise cosine (ground truth) vs the 4x8 banded buckets,
-    // both arms over the SAME 2048-vector seeded-md5 sample (constant
-    // cost at any corpus size — a pair's catch verdict depends only on
-    // its own two vectors); theory term =
-    // 1-(1-(1-acos(mid)/pi)^8)^4 at the bucket center
-    "sim_lsh_calibration" ->
-      """WITH eall AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |e0 AS (SELECT vec_id, v FROM (
-        |  SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR) || ':42') AS sk
-        |  FROM eall ORDER BY sk, vec_id LIMIT 2048)),
-        |bands AS (SELECT unnest(generate_series(0, 3)) AS band),
-        |bk AS (SELECT vec_id, band,
-        |  list_sum(list_transform(generate_series(0, 7), jj ->
-        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |      v[d] * CAST((('0x' || substring(md5(CAST(band*8 + jj AS VARCHAR) || ':' || CAST(d-1 AS VARCHAR)), 1, 8))::BIGINT % 7) - 3 AS DOUBLE))) >= 0
-        |    THEN 1 << jj ELSE 0 END)) AS bucket
-        |  FROM e0 CROSS JOIN bands),
-        |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-        |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-        |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
-        |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, list_dot_product(a.u, b.u) AS cs
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id),
-        |g AS (SELECT CAST(floor(cs*10) AS INT) AS cos_bucket,
-        |    count(*) AS n_pairs,
-        |    sum(CASE WHEN cand.vec_a IS NOT NULL THEN 1 ELSE 0 END) AS n_caught
-        |  FROM p LEFT JOIN cand USING (vec_a, vec_b) GROUP BY 1)
-        |SELECT cos_bucket, CAST(n_pairs AS BIGINT) AS n_pairs,
-        |  CAST(n_caught AS BIGINT) AS n_caught,
-        |  round(CAST(n_caught AS DOUBLE)/n_pairs, 4) AS observed,
-        |  round(1.0 - power(1.0 - power(1.0 - acos(least(greatest((CAST(cos_bucket AS DOUBLE)+0.5)/10.0, -1.0), 1.0))/pi(), 8), 4), 4) AS theoretical
-        |FROM g ORDER BY cos_bucket""".stripMargin,
-    "dedup_semantic_pairs" -> {
-      val rounds = kmeansRoundsSql
-      s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |e1 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-         |e AS (SELECT vec_id, list_transform(v, x -> x/nrm) AS u FROM e1),
-         |c0s AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
-         |ct0 AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS cell_id, u AS cu FROM c0s),
-         |$rounds,
-         |a4 AS (SELECT vec_id, u, cell_id FROM (
-         |  SELECT e.vec_id, e.u, c.cell_id,
-         |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
-         |  FROM e CROSS JOIN ct3 c) WHERE rn = 1)
-         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |  round(list_dot_product(a.u, b.u), 4) AS cosine
-         |FROM a4 a JOIN a4 b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-         |WHERE list_dot_product(a.u, b.u) >= 0.4
-         |ORDER BY vec_a, vec_b""".stripMargin
-    },
-    // the full IVF-PQ replay: same unrolled kmeans (ct3), final
-    // assignment, residuals vs the assigned centroid, the seeded-md5
-    // residual codebook, probe rank over trained cells, per-(vec,subspace)
-    // argmin with (d2, code_id) tie-break, and qc + ordered list_sum —
-    // every stage of the composed index recomputed independently in SQL.
-    "sim_ann_ivfpq" -> {
-      val rounds = kmeansRoundsSql
-      s"""WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-         |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
-         |c0s AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
-         |ct0 AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS cell_id, u AS cu FROM c0s),
-         |$rounds,
-         |a4 AS (SELECT vec_id, label, u, cell_id FROM (
-         |  SELECT e.vec_id, e.label, e.u, c.cell_id,
-         |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
-         |  FROM e CROSS JOIN ct3 c) WHERE rn = 1),
-         |res AS (SELECT a4.vec_id, a4.label, a4.cell_id,
-         |          list_transform(generate_series(1, 64), i -> a4.u[i] - c.cu[i]) AS r
-         |        FROM a4 JOIN ct3 c USING (cell_id)),
-         |cb0 AS (SELECT vec_id, r, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM res ORDER BY ck, vec_id LIMIT 16),
-         |cb AS (SELECT CAST(row_number() OVER (ORDER BY ck, vec_id) AS INT) AS code_id, r AS cr FROM cb0),
-         |q AS (SELECT u AS qu FROM e WHERE vec_id = 0),
-         |probe AS (SELECT cell_id, qc FROM (
-         |  SELECT c.cell_id, list_dot_product(q.qu, c.cu) AS qc,
-         |         row_number() OVER (ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
-         |  FROM q CROSS JOIN ct3 c) WHERE rn <= 4),
-         |cand AS (SELECT res.vec_id, res.label, res.r, probe.qc
-         |         FROM res JOIN probe USING (cell_id) WHERE res.vec_id != 0),
-         |d AS (SELECT t.vec_id, t.label, t.qc, g.s, cb.code_id, cb.cr,
-         |    list_dot_product(
-         |      list_transform(generate_series(1, 8), i -> t.r[g.s*8 + i] - cb.cr[g.s*8 + i]),
-         |      list_transform(generate_series(1, 8), i -> t.r[g.s*8 + i] - cb.cr[g.s*8 + i])) AS d2
-         |  FROM cand t CROSS JOIN generate_series(0, 7) g(s) CROSS JOIN cb),
-         |best AS (SELECT vec_id, label, qc, s, cr FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, code_id) AS rn FROM d)
-         |  WHERE rn = 1),
-         |part AS (SELECT b.vec_id, b.label, b.qc, b.s,
-         |    list_dot_product(
-         |      list_transform(generate_series(1, 8), i -> q.qu[b.s*8 + i]),
-         |      list_transform(generate_series(1, 8), i -> b.cr[b.s*8 + i])) AS p
-         |  FROM best b, q),
-         |sc AS (SELECT vec_id, label, max(qc) + list_sum(list(p ORDER BY s)) AS approx
-         |       FROM part GROUP BY vec_id, label)
-         |SELECT vec_id, label, round(approx, 4) AS approx_cosine
-         |FROM sc ORDER BY round(approx, 4) DESC, vec_id LIMIT 10""".stripMargin
-    },
+         |ex AS (SELECT e0.vec_id,
+         |    round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS rel
+         |  FROM e0, (SELECT v AS qv FROM e0 WHERE vec_id = 0) q WHERE e0.vec_id != 0
+         |  ORDER BY rel DESC, vec_id LIMIT 20),
+         |cand AS (SELECT ex.vec_id, ex.rel, e.u FROM ex JOIN e USING (vec_id)),
+         |p1 AS (SELECT vec_id, round($lam * rel - $div * CAST(0 AS DOUBLE), 6) AS mmr FROM cand),
+         |s1 AS (SELECT vec_id, mmr, 1 AS pos FROM p1 ORDER BY mmr DESC, vec_id LIMIT 1),
+         |$rounds
+         |SELECT CAST(pos AS INT) AS pos, vec_id, mmr AS mmr_score
+         |FROM ($all) ORDER BY pos""".stripMargin
+    }),
+    // PSI drift monitor: norm-bucket population stability index between
+    // the baseline and current label slices (add-one smoothed)
+    query("sim_psi_drift", (s, dir) =>
+      Similarity.psiDrift(table(s, dir, "embeddings")),
+      // PSI oracle: same rounded-norm bucketing (round-6 BEFORE floor so a
+      // 1-ulp sqrt cannot flip a bin), same add-one probability tree.
+      """WITH e AS (SELECT label, round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS norm FROM embeddings),
+        |b AS (SELECT norm FROM e WHERE label <= 4),
+        |c AS (SELECT norm FROM e WHERE label > 4),
+        |bounds AS (SELECT min(norm) AS bmin, max(norm) AS bmax FROM b),
+        |nb AS (SELECT CASE WHEN bmax = bmin THEN 0
+        |    ELSE least(9, greatest(0, CAST(floor((norm - bmin) / (bmax - bmin) * CAST(10 AS DOUBLE)) AS INT))) END AS bucket,
+        |    count(*) AS n_base FROM b CROSS JOIN bounds GROUP BY 1),
+        |nc AS (SELECT CASE WHEN bmax = bmin THEN 0
+        |    ELSE least(9, greatest(0, CAST(floor((norm - bmin) / (bmax - bmin) * CAST(10 AS DOUBLE)) AS INT))) END AS bucket,
+        |    count(*) AS n_cur FROM c CROSS JOIN bounds GROUP BY 1),
+        |tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM b) AS tb,
+        |               (SELECT CAST(count(*) AS BIGINT) FROM c) AS tc),
+        |spine AS (SELECT unnest(generate_series(0, 9)) AS bucket),
+        |per AS (SELECT s.bucket,
+        |    CAST(coalesce(n_base, 0) AS BIGINT) AS n_base,
+        |    CAST(coalesce(n_cur, 0) AS BIGINT) AS n_cur,
+        |    (CAST(coalesce(n_base, 0) AS DOUBLE) + 1.0) / (CAST(tb AS DOUBLE) + CAST(10 AS DOUBLE)) AS pb,
+        |    (CAST(coalesce(n_cur, 0) AS DOUBLE) + 1.0) / (CAST(tc AS DOUBLE) + CAST(10 AS DOUBLE)) AS pc
+        |  FROM spine s LEFT JOIN nb USING (bucket) LEFT JOIN nc USING (bucket) CROSS JOIN tot),
+        |pt AS (SELECT bucket, n_base, n_cur, round((pb - pc) * ln(pb / pc), 6) AS psi_term FROM per),
+        |tt AS (SELECT round(sum(psi_term), 6) AS psi_total FROM pt)
+        |SELECT CAST(bucket AS INT) AS bucket, n_base, n_cur, psi_term, psi_total
+        |FROM pt CROSS JOIN tt ORDER BY bucket""".stripMargin),
+    // hybrid retrieval: reciprocal-rank fusion of the BM25 arm and the
+    // dense cosine arm (the RAG serving composition; fusion cost is
+    // bounded by 2*armK rows however large the corpus)
+    query("bm25_rrf_hybrid", (s, dir) =>
+      graft.rank.Hybrid.rrfSearch(s, table(s, dir, "documents"),
+        table(s, dir, "embeddings"), FlagshipQuery, 0L),
+      // RRF hybrid oracle: the bm25_search chain at armK=20 + the
+      // sim_cosine_topk chain at armK=20, each re-ranked over rounded
+      // scores, fused by 1/(60+rank) with NULL-absorbing coalesce.
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok WHERE term IN ('spark','join','window') GROUP BY doc_id, term),
+        |dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok WHERE term IN ('spark','join','window') GROUP BY term),
+        |dl AS (SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS dl FROM documents),
+        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
+        |scored AS (
+        |  SELECT tf.doc_id,
+        |         sum( ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf) ) AS score
+        |  FROM tf JOIN dfq USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
+        |  GROUP BY tf.doc_id),
+        |bm AS (SELECT doc_id, round(score, 4) AS doc_rank FROM scored
+        |       ORDER BY doc_rank DESC, doc_id LIMIT 20),
+        |bmr AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_rank DESC, doc_id) AS INT) AS bm25_rank FROM bm),
+        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+        |co AS (SELECT e.vec_id,
+        |         round(list_dot_product(v, qv)/(sqrt(list_dot_product(v, v))*sqrt(list_dot_product(qv, qv))), 4) AS cosine
+        |       FROM e, q WHERE e.vec_id != 0
+        |       ORDER BY cosine DESC, vec_id LIMIT 20),
+        |cor AS (SELECT vec_id AS doc_id, CAST(row_number() OVER (ORDER BY cosine DESC, vec_id) AS INT) AS ann_rank FROM co),
+        |fu AS (SELECT coalesce(bmr.doc_id, cor.doc_id) AS doc_id, bm25_rank, ann_rank,
+        |         round(coalesce(1.0/(60.0 + CAST(bm25_rank AS DOUBLE)), 0.0) +
+        |               coalesce(1.0/(60.0 + CAST(ann_rank AS DOUBLE)), 0.0), 6) AS rrf_score
+        |       FROM bmr FULL OUTER JOIN cor ON bmr.doc_id = cor.doc_id)
+        |SELECT doc_id, bm25_rank, ann_rank, rrf_score FROM fu
+        |ORDER BY rrf_score DESC, doc_id LIMIT 10""".stripMargin),
+    // RM3-style pseudo-relevance feedback: expansion vocabulary mined
+    // from the feedback top-10, re-ranked with weighted union query
+    query("bm25_expansion_terms", (s, dir) =>
+      BM25.expansionTerms(s, table(s, dir, "documents"), FlagshipQuery),
+      // PRF oracles: the bm25 chain ranks the feedback set; expansion terms
+      // by rounded tf-idf mass with term tie-break; the expanded ranking is
+      // the same bm25 tree times the broadcast weight (qw * (...) — the
+      // commuted product is bit-equal to Spark's (...) * qw).
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+        |tf0 AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
+        |dfall AS (SELECT term, count(*) AS df FROM tf0 GROUP BY term),
+        |dl AS (SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS dl FROM documents),
+        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
+        |scored AS (
+        |  SELECT t.doc_id,
+        |         sum( ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf) ) AS score
+        |  FROM tf0 t JOIN dfall USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
+        |  WHERE t.term IN ('spark','join','window')
+        |  GROUP BY t.doc_id),
+        |fb AS (SELECT doc_id FROM (SELECT doc_id, round(score, 4) AS doc_rank FROM scored
+        |       ORDER BY doc_rank DESC, doc_id LIMIT 10)),
+        |expw AS (SELECT t.term,
+        |    round(sum(CAST(tf AS DOUBLE) * ln(CAST(n AS DOUBLE)/df)), 6) AS expansion_weight
+        |  FROM tf0 t JOIN fb USING (doc_id) JOIN dfall USING (term) CROSS JOIN stats
+        |  WHERE t.term NOT IN ('spark','join','window')
+        |  GROUP BY t.term ORDER BY expansion_weight DESC, term LIMIT 5)
+        |SELECT term, expansion_weight FROM expw
+        |ORDER BY expansion_weight DESC, term""".stripMargin),
+    query("bm25_rm3_expanded", (s, dir) =>
+      BM25.searchExpanded(s, table(s, dir, "documents"), FlagshipQuery),
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+        |tf0 AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
+        |dfall AS (SELECT term, count(*) AS df FROM tf0 GROUP BY term),
+        |dl AS (SELECT doc_id, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS dl FROM documents),
+        |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
+        |scored AS (
+        |  SELECT t.doc_id,
+        |         sum( ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf) ) AS score
+        |  FROM tf0 t JOIN dfall USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
+        |  WHERE t.term IN ('spark','join','window')
+        |  GROUP BY t.doc_id),
+        |fb AS (SELECT doc_id FROM (SELECT doc_id, round(score, 4) AS doc_rank FROM scored
+        |       ORDER BY doc_rank DESC, doc_id LIMIT 10)),
+        |expw AS (SELECT t.term,
+        |    round(sum(CAST(tf AS DOUBLE) * ln(CAST(n AS DOUBLE)/df)), 6) AS w
+        |  FROM tf0 t JOIN fb USING (doc_id) JOIN dfall USING (term) CROSS JOIN stats
+        |  WHERE t.term NOT IN ('spark','join','window')
+        |  GROUP BY t.term ORDER BY w DESC, term LIMIT 5),
+        |wq AS (SELECT term, CAST(1 AS DOUBLE) AS qw
+        |       FROM (VALUES ('spark'),('join'),('window')) v(term)
+        |       UNION ALL SELECT term, CAST(0.5 AS DOUBLE) AS qw FROM expw),
+        |fs AS (SELECT t.doc_id,
+        |         sum( qw * (ln(CAST(n AS DOUBLE)/df) * (2.0*tf) / (1.0*(0.25 + 0.75*dl/avgdl) + tf)) ) AS score
+        |  FROM tf0 t JOIN wq USING(term) JOIN dfall USING(term) JOIN dl USING(doc_id) CROSS JOIN stats
+        |  GROUP BY t.doc_id)
+        |SELECT doc_id, round(score, 4) AS doc_rank FROM fs
+        |ORDER BY doc_rank DESC, doc_id LIMIT 10""".stripMargin),
 
-    "text_token_counts" ->
+    // ---- text analysis (north star) ----
+    query("text_token_counts", (s, dir) =>
+      TextAnalysis.tokenCounts(table(s, dir, "documents")),
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens,
         |  CASE WHEN len(trim(text)) = 0 THEN 0
         |       ELSE CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) END AS n_ws_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    query("text_quality", (s, dir) =>
+      TextAnalysis.qualityScores(table(s, dir, "documents")),
       """WITH t AS (SELECT doc_id, text, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents)
         |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, CAST(len(tk) AS BIGINT) AS n_tokens,
         |  round(CASE WHEN len(tk) = 0 THEN 0.0 ELSE list_sum(list_transform(tk, x -> CAST(length(x) AS DOUBLE)))/len(tk) END, 4) AS avg_token_len,
         |  round(CASE WHEN len(tk) = 0 THEN 0.0 ELSE CAST(len(list_distinct(tk)) AS DOUBLE)/len(tk) END, 4) AS type_token_ratio,
         |  round(CASE WHEN len(tk) = 0 THEN 0.0 ELSE CAST(len(list_intersect(list_distinct(tk), ['the','a','of','and','is'])) AS DOUBLE)/len(tk) END, 4) AS stopword_type_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "text_sentence_stats" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    // C4/Gopher sentence rules: [.!?]+ segments, blank-dropped — count,
+    // tokens per sentence, terminal-punctuation ending
+    query("text_sentence_stats", (s, dir) =>
+      TextAnalysis.sentenceStats(table(s, dir, "documents")),
       """WITH t AS (SELECT doc_id, text,
         |    len(list_filter(regexp_split_to_array(text, '[.!?]+'), s -> length(trim(s)) > 0)) AS ns,
         |    len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS nt
@@ -3895,10 +3465,13 @@ object SparkEntry {
         |SELECT doc_id, CAST(ns AS BIGINT) AS n_sentences,
         |  round(CASE WHEN ns = 0 THEN 0.0 ELSE CAST(nt AS DOUBLE) / ns END, 4) AS tokens_per_sentence,
         |  regexp_matches(text, '[.!?]\s*$') AS ends_terminal
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // same exact counts, same one fixed double tree (prior scaled to the
-    // corpus distribution), round(4) z, (z DESC, term) top-5 per source
-    "text_keyness" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    // Fightin' Words keyness: per-source log-odds vs rest-of-corpus with
+    // an informative Dirichlet prior, z-scored, top-5 per source
+    query("text_keyness", (s, dir) =>
+      TextAnalysis.sourceKeyness(table(s, dir, "documents")),
+      // same exact counts, same one fixed double tree (prior scaled to the
+      // corpus distribution), round(4) z, (z DESC, term) top-5 per source
       """WITH occ AS (SELECT source, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
         |st AS (SELECT source, term, count(*) AS ysw FROM occ GROUP BY 1, 2),
         |tot AS (SELECT term, CAST(sum(ysw) AS BIGINT) AS yw FROM st GROUP BY term),
@@ -3915,11 +3488,51 @@ object SparkEntry {
         |  FROM z0),
         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source ORDER BY z DESC, term) AS INT) AS rnk FROM zz)
         |SELECT source, term, CAST(ysw AS BIGINT) AS n_occ, z, rnk AS "rank"
-        |FROM r WHERE rnk <= 5 ORDER BY source, rnk""".stripMargin,
-    // per-language marker occurrence counts in alphabetical language
-    // order; dominant = first language at the max; entropy = the same
-    // fixed 4-term tree
-    "text_lang_mixture" -> {
+        |FROM r WHERE rnk <= 5 ORDER BY source, rnk""".stripMargin),
+    // TextRank keywords: weighted PageRank over the adjacent-token
+    // co-occurrence graph — graph-centrality keywordness, decimal-exact
+    // power rounds over the vocabulary-sized edge list
+    query("text_textrank", (s, dir) =>
+      TextAnalysis.textRankKeywords(table(s, dir, "documents")),
+      // TextRank oracle: 3 unrolled weighted-PageRank rounds (the
+      // dedup_pagerank pattern) with DECIMAL(28,18) neighbor sums — the
+      // order-independence recipe that makes the rank doubles bit-equal
+      // across engines, so the top-k cut cannot straddle an ulp
+      {
+      import graft.textstats.TextAnalysis.{DefaultTextRankDamping, DefaultTextRankTopK}
+      val d = DefaultTextRankDamping
+      val rounds = (1 to graft.textstats.TextAnalysis.DefaultTextRankIters).map { t =>
+        s"""p$t AS (SELECT e.dst AS node,
+           |    (CAST(1 AS DOUBLE) - CAST($d AS DOUBLE)) / nn.n
+           |      + CAST($d AS DOUBLE) *
+           |        CAST(sum(CAST((p.pr * e.w) / dg.wd AS DECIMAL(28,18))) AS DOUBLE) AS pr
+           |  FROM edges e JOIN p${t - 1} p ON p.node = e.src
+           |    JOIN wdeg dg ON dg.src = e.src, nn
+           |  GROUP BY e.dst, nn.n)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH tk0 AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+         |e0 AS (SELECT tk[i] AS t, tk[i+1] AS u
+         |  FROM (SELECT tk, unnest(generate_series(1, len(tk)-1)) AS i FROM tk0 WHERE len(tk) >= 2)
+         |  WHERE tk[i] <> tk[i+1]),
+         |eu AS (SELECT t AS src, u AS dst FROM e0 UNION ALL SELECT u, t FROM e0),
+         |edges AS (SELECT src, dst, count(*) AS w FROM eu GROUP BY 1, 2),
+         |wdeg AS (SELECT src, sum(w) AS wd FROM edges GROUP BY src),
+         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM wdeg),
+         |p0 AS (SELECT src AS node, CAST(1 AS DOUBLE) / nn.n AS pr FROM wdeg, nn),
+         |$rounds,
+         |rk AS (SELECT node, pr, row_number() OVER (ORDER BY pr DESC, node) AS rk
+         |  FROM p${graft.textstats.TextAnalysis.DefaultTextRankIters})
+         |SELECT node AS term, round(pr, 6) AS textrank, CAST(rk AS BIGINT) AS rk
+         |FROM rk WHERE rk <= $DefaultTextRankTopK ORDER BY rk""".stripMargin
+    }),
+    // code-switching detector: per-doc marker mass per language, dominant
+    // share, mixture entropy — one scan, fixed 4-language tree
+    query("text_lang_mixture", (s, dir) =>
+      TextAnalysis.langMixture(table(s, dir, "documents")),
+      // per-language marker occurrence counts in alphabetical language
+      // order; dominant = first language at the max; entropy = the same
+      // fixed 4-term tree
+      {
       val langs = graft.textstats.TextAnalysis.LangMarkers.toSeq.sortBy(_._1)
       val hitDefs = langs.map { case (l, ms) =>
         s"len(list_filter(tk, t -> t IN (${ms.map(m => s"'$m'").mkString(",")}))) AS h_$l"
@@ -3944,9 +3557,177 @@ object SparkEntry {
          |  round(CASE WHEN tot > 0 THEN CAST(top AS DOUBLE) / CAST(tot AS DOUBLE) ELSE 0.0 END, 4) AS top_share,
          |  round($ent, 4) AS mix_entropy
          |FROM k ORDER BY doc_id""".stripMargin
-    },
-    "text_quality_regression" -> qualityRegressionOracleSql,
-    "text_repetition" ->
+    }),
+    // closed-form least-squares probe: stopword count ~ a + b*tokens over
+    // the corpus, per-source deviation from the line (outlier-source
+    // detector). All floating math post-aggregation over exact long sums.
+    query("text_quality_regression", (s, dir) =>
+      TextAnalysis.qualityRegression(table(s, dir, "documents")),
+      qualityRegressionOracleSql),
+    // CCNet-style perplexity filter: LM trained on the reference source
+    // only, every doc scored with add-1 smoothing
+    query("text_cross_lm", (s, dir) =>
+      TextAnalysis.crossLmScores(table(s, dir, "documents"), "src0"),
+      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |occ AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 2
+        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
+        |    ELSE [] END) AS bigram FROM t),
+        |rt AS (SELECT tk FROM t WHERE source = 'src0'),
+        |v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS vs FROM (SELECT unnest(tk) AS w FROM rt)),
+        |rocc AS (SELECT unnest(CASE WHEN len(tk) >= 2
+        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
+        |    ELSE [] END) AS bigram FROM rt),
+        |bc AS (SELECT bigram, count(*) AS c2 FROM rocc GROUP BY bigram),
+        |bcw AS (SELECT bigram, c2, split_part(bigram, ' ', 1) AS w1 FROM bc),
+        |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM bcw GROUP BY w1),
+        |sc AS (SELECT doc_id,
+        |    ln(CAST(coalesce(c2, 0) AS DOUBLE) + 1.0)
+        |      - ln(CAST(coalesce(c1, 0) AS DOUBLE) + 1.0 * vs) AS lp,
+        |    CASE WHEN c2 IS NULL THEN 1 ELSE 0 END AS oov
+        |  FROM occ
+        |  LEFT JOIN bcw ON occ.bigram = bcw.bigram
+        |  LEFT JOIN c1 ON split_part(occ.bigram, ' ', 1) = c1.w1
+        |  CROSS JOIN v),
+        |per AS (SELECT doc_id, count(*) AS nb, CAST(sum(oov) AS BIGINT) AS n_oov,
+        |        round(avg(lp), 4) AS avg_logp FROM sc GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(coalesce(nb, 0) AS BIGINT) AS n_bigrams,
+        |  CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov, avg_logp
+        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin),
+    // trigram stupid-backoff scoring (Brants'07): the distributed-corpus
+    // LM — plain count ratios, alpha-damped backoff, add-one unigram floor
+    query("text_stupid_backoff", (s, dir) =>
+      TextAnalysis.stupidBackoffScores(table(s, dir, "documents"), "src0"),
+      // Stupid-backoff oracle: the same three-branch CASE over the same
+      // integer count tables; alpha literals forced to DOUBLE (DuckDB would
+      // otherwise fold 0.4*0.4 as exact DECIMAL and diverge from the
+      // engine's IEEE product); round(4) absorbs ln's 1-ulp noise.
+      s"""WITH $stupidBackoffCtes
+        |SELECT d.doc_id, CAST(coalesce(nt, 0) AS BIGINT) AS n_trigrams,
+        |  CAST(coalesce(nb, 0) AS BIGINT) AS n_bi_backoff,
+        |  CAST(coalesce(nu, 0) AS BIGINT) AS n_uni_backoff, avg_logp
+        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin),
+    // CCNet head/middle/tail (Wenzek'20): per-source perplexity-proxy
+    // terciles over the same LM scores; histogram-derived value cuts, no
+    // corpus-grain ranking window
+    query("text_perplexity_buckets", (s, dir) =>
+      TextAnalysis.perplexityBuckets(table(s, dir, "documents"), "src0"),
+      // CCNet head/middle/tail from the same LM chain; boundaries from the
+      // per-(source, score) histogram, value-threshold cut (ties -> head)
+      s"""WITH $stupidBackoffCtes,
+        |base AS (SELECT t.doc_id, t.source, CAST(len(tk) AS BIGINT) AS ntok, per.avg_logp
+        |  FROM t LEFT JOIN per ON t.doc_id = per.doc_id),
+        |h AS (SELECT source, avg_logp, count(*) AS hd FROM base WHERE avg_logp IS NOT NULL GROUP BY 1, 2),
+        |cm AS (SELECT source, avg_logp,
+        |    CAST(sum(hd) OVER (PARTITION BY source ORDER BY avg_logp DESC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+        |    CAST(sum(hd) OVER (PARTITION BY source) AS BIGINT) AS n FROM h),
+        |b AS (SELECT source,
+        |    max(CASE WHEN cum >= ceil(n / 3.0) THEN avg_logp END) AS s1,
+        |    max(CASE WHEN cum >= ceil(n * 2 / 3.0) THEN avg_logp END) AS s2
+        |  FROM cm GROUP BY source),
+        |a AS (SELECT base.source,
+        |    CASE WHEN avg_logp IS NULL THEN 'no_lm'
+        |         WHEN avg_logp >= s1 THEN 'head'
+        |         WHEN avg_logp >= s2 THEN 'middle' ELSE 'tail' END AS bucket,
+        |    ntok, avg_logp FROM base LEFT JOIN b ON base.source = b.source)
+        |SELECT source, bucket, count(*) AS n_docs, CAST(sum(ntok) AS BIGINT) AS n_tokens,
+        |  min(avg_logp) AS min_logp, max(avg_logp) AS max_logp
+        |FROM a GROUP BY 1, 2 ORDER BY source, bucket""".stripMargin),
+    // trained quality classifier: 4 full-batch GD rounds of logistic
+    // regression (decimal-exact gradient sums, one driver row per round)
+    query("text_quality_classifier", (s, dir) =>
+      TextAnalysis.logisticQualityScores(table(s, dir, "documents")),
+      // Logistic-GD oracle: the same iters/lr interpolated from the engine
+      // constants, each round unrolled CTE-by-CTE with the identical
+      // decimal-exact gradient sums and the identical round(…,12) update;
+      // the sigmoid literal 1.0 is exactly representable so DuckDB's
+      // decimal-literal parsing cannot diverge from the double tree.
+      (classifierScoredSql + "\nORDER BY doc_id")),
+    // multinomial NB domain classifier: micro-nat integer weights make
+    // every score a BIGINT sum — argmax exact in both engines
+    query("text_nb_classifier", (s, dir) =>
+      TextAnalysis.nbSourceClassifier(table(s, dir, "documents")),
+      nbOracleSql),
+    // ROC AUC by exact integer rank sums over the score histogram
+    query("text_classifier_auc", (s, dir) =>
+      TextAnalysis.classifierAuc(table(s, dir, "documents")),
+      // wraps the SAME classifier replay; ranks double to stay integral,
+      // the cumulative window runs over one-row-per-distinct-score so its
+      // frame is deterministic
+      s"""WITH sc AS ($classifierScoredSql),
+         |h AS (SELECT score, count(*) AS n,
+         |        count(*) FILTER (WHERE label = 1) AS np
+         |      FROM sc GROUP BY score),
+         |c AS (SELECT score, n, np,
+         |        COALESCE(sum(n) OVER (ORDER BY score
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+         |      FROM h),
+         |agg AS (SELECT CAST(sum(np * (2 * cb + n + 1)) AS BIGINT) AS sum_ranks2,
+         |          CAST(sum(np) AS BIGINT) AS n_pos,
+         |          CAST(sum(n - np) AS BIGINT) AS n_neg
+         |        FROM c)
+         |SELECT n_pos, n_neg, sum_ranks2,
+         |  CASE WHEN n_pos > 0 AND n_neg > 0
+         |    THEN round(CAST(sum_ranks2 - n_pos * (n_pos + 1) AS DOUBLE) /
+         |               (2.0 * n_pos * n_neg), 6) END AS auc
+         |FROM agg""".stripMargin),
+    // per-class error report over the same eval split
+    query("text_nb_confusion", (s, dir) =>
+      TextAnalysis.nbConfusionMatrix(table(s, dir, "documents")),
+      // wraps the SAME NB replay; the matrix is a |C|^2 aggregate over it
+      s"""WITH base AS ($nbOracleSql),
+         |cm AS (SELECT source, pred, count(*) AS n FROM base GROUP BY 1, 2),
+         |bt AS (SELECT source, sum(n) AS n_true FROM cm GROUP BY 1),
+         |bp AS (SELECT pred, sum(n) AS n_pred FROM cm GROUP BY 1)
+         |SELECT cm.source, cm.pred, CAST(cm.n AS BIGINT) AS n,
+         |  round(CAST(cm.n AS DOUBLE) / bt.n_true, 4) AS recall_share,
+         |  round(CAST(cm.n AS DOUBLE) / bp.n_pred, 4) AS precision_share
+         |FROM cm JOIN bt USING (source) JOIN bp USING (pred)
+         |ORDER BY cm.source, cm.pred""".stripMargin),
+    // concat-and-chunk pretraining sample layout: docs split across
+    // fixed-length chunks, exact integer spans
+    query("text_chunk_seqs", (s, dir) =>
+      TextAnalysis.chunkSequences(table(s, dir, "documents")),
+      """WITH t AS (SELECT lang AS shard, doc_id,
+        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n
+        |  FROM documents),
+        |nz AS (SELECT * FROM t WHERE n > 0),
+        |o AS (SELECT shard, doc_id, n,
+        |    sum(n) OVER (PARTITION BY shard ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n AS s
+        |  FROM nz),
+        |sp AS (SELECT shard, doc_id, s, s + n AS e FROM o),
+        |x AS (SELECT shard, doc_id, s, e,
+        |    unnest(generate_series(CAST(s // 512 AS BIGINT), CAST((e - 1) // 512 AS BIGINT))) AS chunk_id
+        |  FROM sp)
+        |SELECT shard, chunk_id, doc_id,
+        |  CAST(greatest(s, chunk_id * 512) - chunk_id * 512 AS BIGINT) AS start_in_chunk,
+        |  CAST(least(e, (chunk_id + 1) * 512) - greatest(s, chunk_id * 512) AS BIGINT) AS n_toks
+        |FROM x ORDER BY shard, chunk_id, doc_id""".stripMargin),
+    // per-source KS drift vs the rest of the corpus (pre-mixing check)
+    query("text_ks_drift", (s, dir) =>
+      TextAnalysis.ksLengthDrift(table(s, dir, "documents")),
+      // same integer-count derivation: dense source x support grid,
+      // cumulative sums, KS gap as double division of exact integers
+      """WITH t AS (SELECT source, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n FROM documents),
+        |per AS (SELECT source, n, count(*) AS c FROM t GROUP BY 1, 2),
+        |support AS (SELECT DISTINCT n FROM per),
+        |src AS (SELECT source, CAST(sum(c) AS BIGINT) AS src_total FROM per GROUP BY 1),
+        |gn AS (SELECT n, CAST(sum(c) AS BIGINT) AS g FROM per GROUP BY 1),
+        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS grand FROM per),
+        |grid AS (SELECT s.source, s.src_total, sup.n, coalesce(p.c, 0) AS c, gn.g, tot.grand
+        |  FROM src s CROSS JOIN support sup
+        |  LEFT JOIN per p ON p.source = s.source AND p.n = sup.n
+        |  JOIN gn ON gn.n = sup.n CROSS JOIN tot),
+        |cum AS (SELECT source, src_total, grand, n,
+        |    sum(c) OVER (PARTITION BY source ORDER BY n ROWS UNBOUNDED PRECEDING) AS cum_src,
+        |    sum(g) OVER (PARTITION BY source ORDER BY n ROWS UNBOUNDED PRECEDING) AS cum_all
+        |  FROM grid)
+        |SELECT source, max(src_total) AS n_docs,
+        |  round(max(abs(CAST(cum_src AS DOUBLE) / src_total
+        |    - CAST(cum_all - cum_src AS DOUBLE) / (grand - src_total))), 6) AS ks_stat
+        |FROM cum GROUP BY source ORDER BY source""".stripMargin),
+    query("text_repetition", (s, dir) =>
+      TextAnalysis.repetitionStats(table(s, dir, "documents")),
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |tri AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 3 THEN list_transform(generate_series(1, len(tk)-2),
         |          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) ELSE [] END) AS g FROM t),
@@ -3959,8 +3740,9 @@ object SparkEntry {
         |  round(coalesce(1.0 - CAST(n_tri_d AS DOUBLE)/n_tri, 0.0), 4) AS dup_trigram_frac,
         |  round(coalesce(CAST(max_big AS DOUBLE)/n_big, 0.0), 4) AS top_bigram_frac
         |FROM documents d LEFT JOIN ta USING (doc_id) LEFT JOIN ba USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "text_langid" ->
+        |ORDER BY doc_id""".stripMargin),
+    query("text_langid", (s, dir) =>
+      TextAnalysis.languageGuess(table(s, dir, "documents")),
       """WITH t AS (SELECT doc_id, list_distinct(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS tk FROM documents),
         |s AS (SELECT doc_id,
         |  len(list_intersect(tk, ['der','die','das','und','ist'])) AS s_de,
@@ -3971,19 +3753,65 @@ object SparkEntry {
         |SELECT doc_id, CASE WHEN best = 0 THEN 'und'
         |  WHEN s_de = best THEN 'de' WHEN s_en = best THEN 'en'
         |  WHEN s_es = best THEN 'es' ELSE 'fr' END AS lang_guess
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // coalesce: DuckDB's array_to_string([]) is NULL where Spark's
-    // array_join is '' — a zero-token doc must fingerprint md5('') in
-    // both engines (the edge-fixture `empty` corpus)
-    "text_fingerprint" ->
+        |FROM g ORDER BY doc_id""".stripMargin),
+    query("text_fingerprint", (s, dir) =>
+      TextAnalysis.fingerprints(table(s, dir, "documents")),
+      // coalesce: DuckDB's array_to_string([]) is NULL where Spark's
+      // array_join is '' — a zero-token doc must fingerprint md5('') in
+      // both engines (the edge-fixture `empty` corpus)
       """SELECT doc_id, md5(coalesce(array_to_string(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'), ' '), '')) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_top_terms" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    query("text_top_terms", (s, dir) =>
+      TextAnalysis.topTerms(table(s, dir, "documents"), 20),
       """WITH tok AS (SELECT unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents)
-        |SELECT term, count(*) AS n FROM tok GROUP BY term ORDER BY n DESC, term LIMIT 20""".stripMargin,
-    // rank tables replayed from the same length histogram; every ratio is
-    // an exact-integer division, gaps computed from UNROUNDED pcts
-    "text_percentile_calib" ->
+        |SELECT term, count(*) AS n FROM tok GROUP BY term ORDER BY n DESC, term LIMIT 20""".stripMargin),
+    query("text_bigrams", (s, dir) =>
+      TextAnalysis.topBigrams(table(s, dir, "documents"), 20),
+      """WITH t AS (SELECT regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |b AS (SELECT unnest(list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])) AS bigram
+        |      FROM t WHERE len(tk) >= 2)
+        |SELECT bigram, count(*) AS n FROM b GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin),
+    query("text_langid_confusion", (s, dir) =>
+      TextAnalysis.langGuessConfusion(table(s, dir, "documents")),
+      """WITH t AS (SELECT doc_id, list_distinct(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS tk FROM documents),
+        |s AS (SELECT doc_id,
+        |  len(list_intersect(tk, ['der','die','das','und','ist'])) AS s_de,
+        |  len(list_intersect(tk, ['the','a','of','and','is'])) AS s_en,
+        |  len(list_intersect(tk, ['el','la','los','que','es'])) AS s_es,
+        |  len(list_intersect(tk, ['le','la','les','et','est'])) AS s_fr FROM t),
+        |g0 AS (SELECT doc_id, greatest(s_de, s_en, s_es, s_fr) AS best, s_de, s_en, s_es, s_fr FROM s),
+        |g AS (SELECT doc_id, CASE WHEN best = 0 THEN 'und'
+        |  WHEN s_de = best THEN 'de' WHEN s_en = best THEN 'en'
+        |  WHEN s_es = best THEN 'es' ELSE 'fr' END AS lang_guess FROM g0)
+        |SELECT d.lang, g.lang_guess, count(*) AS n
+        |FROM g JOIN documents d USING (doc_id)
+        |GROUP BY d.lang, g.lang_guess ORDER BY d.lang, g.lang_guess""".stripMargin),
+    // corpus mix report: the per-(source, lang) table that sets domain
+    // mixing weights before training
+    // robust length outliers: median/MAD per source (means would be
+    // dragged by the outliers themselves); MAD=0 degrades to any-dev
+    query("text_mad_outliers", (s, dir) =>
+      TextAnalysis.madOutlierStats(table(s, dir, "documents")),
+      // both medians over DOUBLE-cast integer lengths (identical
+      // interpolation type); dev and 3*mad are exact IEEE on int-or-half
+      // values, so the outlier CASE can never disagree across engines
+      """WITH l AS (SELECT source,
+        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS DOUBLE) AS len
+        |  FROM documents),
+        |m AS (SELECT source, median(len) AS med FROM l GROUP BY source),
+        |d AS (SELECT l.source, abs(len - med) AS dev, med FROM l JOIN m USING (source)),
+        |md AS (SELECT source, median(dev) AS mad FROM d GROUP BY source)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n,
+        |  max(d.med) AS median_len, max(md.mad) AS mad,
+        |  CAST(sum(CASE WHEN (CASE WHEN md.mad > 0 THEN dev > 3.0 * md.mad
+        |                           ELSE dev > 0 END) THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+        |FROM d JOIN md USING (source) GROUP BY source ORDER BY source""".stripMargin),
+    // per-doc source-vs-global percentile gap, ranks from the aggregated
+    // length histogram (support-bounded windows, never a per-doc sort)
+    query("text_percentile_calib", (s, dir) =>
+      TextAnalysis.percentileCalibration(table(s, dir, "documents")),
+      // rank tables replayed from the same length histogram; every ratio is
+      // an exact-integer division, gaps computed from UNROUNDED pcts
       """WITH l AS (SELECT doc_id, source,
         |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS len
         |  FROM documents),
@@ -4006,24 +3834,23 @@ object SparkEntry {
         |      - CASE WHEN n_all > 1 THEN CAST(cum_all AS DOUBLE)/(n_all - 1) ELSE 0.0 END, 6) AS calibration_gap
         |FROM l JOIN sr ON sr.source = l.source AND sr.len = l.len
         |  JOIN ar ON ar.len = l.len
-        |ORDER BY doc_id""".stripMargin,
-    // length() = chars / strlen() = bytes on DuckDB; ratios are one
-    // double division of exact long sums on both engines
-    "text_utf8_stats" ->
-      """WITH c AS (SELECT lang,
-        |    CAST(length(text) AS BIGINT) AS chars,
-        |    CAST(strlen(text) AS BIGINT) AS bytes,
-        |    CAST(length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) AS BIGINT) AS ascii_chars
-        |  FROM documents)
-        |SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(chars) AS BIGINT) AS total_chars,
-        |  CAST(sum(bytes) AS BIGINT) AS total_bytes,
-        |  round(CAST(sum(bytes) AS DOUBLE) / CAST(sum(chars) AS BIGINT), 6) AS bytes_per_char,
-        |  round(CAST(sum(chars) - sum(ascii_chars) AS DOUBLE) / CAST(sum(chars) AS BIGINT), 6) AS non_ascii_share
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-    // position self-join |d| in [1, window] == the zip_with arms; slot
-    // table + hex8Int negative draw replayed with the same md5 strings
-    "text_skipgram_pairs" ->
+        |ORDER BY doc_id""".stripMargin),
+    // ingest-stage normalization: control chars -> space, whitespace
+    // collapse, trim; emitted as the cleaned hash + length delta
+    query("text_normalize", (s, dir) =>
+      TextAnalysis.normalizeText(table(s, dir, "documents")),
+      // same two regexp passes + trim; md5 compares the cleaned text
+      """SELECT doc_id,
+        |  md5(trim(regexp_replace(regexp_replace(text, '[\x00-\x1F\x7F]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_hash,
+        |  n_chars AS chars_before,
+        |  CAST(length(trim(regexp_replace(regexp_replace(text, '[\x00-\x1F\x7F]', ' ', 'g'), ' +', ' ', 'g'))) AS BIGINT) AS chars_after
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // embedding-training data prep: skip-gram pairs + hashSplit-style
+    // deterministic negatives (slot table in seeded-md5 vocab order)
+    query("text_skipgram_pairs", (s, dir) =>
+      TextAnalysis.skipgramPairs(table(s, dir, "documents")),
+      // position self-join |d| in [1, window] == the zip_with arms; slot
+      // table + hex8Int negative draw replayed with the same md5 strings
       """WITH tok AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |p AS (SELECT doc_id, unnest(tk) AS w, unnest(generate_series(1, len(tk))) AS pos FROM tok),
         |pos AS (SELECT a.w AS center, b.w AS context, CAST(count(*) AS BIGINT) AS n_cooc
@@ -4039,66 +3866,68 @@ object SparkEntry {
         |  FROM pos CROSS JOIN range(0, 2) r CROSS JOIN vc)
         |SELECT center, context, n_cooc, CAST(i AS INT) AS neg_idx, negative
         |FROM ex JOIN nt USING (slot)
-        |ORDER BY center, context, neg_idx""".stripMargin,
-    // same two regexp passes + trim; md5 compares the cleaned text
-    "text_normalize" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(regexp_replace(text, '[\x00-\x1F\x7F]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_hash,
-        |  n_chars AS chars_before,
-        |  CAST(length(trim(regexp_replace(regexp_replace(text, '[\x00-\x1F\x7F]', ' ', 'g'), ' +', ' ', 'g'))) AS BIGINT) AS chars_after
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // both medians over DOUBLE-cast integer lengths (identical
-    // interpolation type); dev and 3*mad are exact IEEE on int-or-half
-    // values, so the outlier CASE can never disagree across engines
-    "text_mad_outliers" ->
-      """WITH l AS (SELECT source,
-        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS DOUBLE) AS len
-        |  FROM documents),
-        |m AS (SELECT source, median(len) AS med FROM l GROUP BY source),
-        |d AS (SELECT l.source, abs(len - med) AS dev, med FROM l JOIN m USING (source)),
-        |md AS (SELECT source, median(dev) AS mad FROM d GROUP BY source)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |  max(d.med) AS median_len, max(md.mad) AS mad,
-        |  CAST(sum(CASE WHEN (CASE WHEN md.mad > 0 THEN dev > 3.0 * md.mad
-        |                           ELSE dev > 0 END) THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM d JOIN md USING (source) GROUP BY source ORDER BY source""".stripMargin,
-    // distinct (source, shingle) reduction, then per-shingle source-pair
-    // counting (buckets bounded by the source count); zero-overlap pairs
-    // absent via inner join on both engines
-    "dedup_source_overlap" ->
-      """WITH t AS (SELECT source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |g AS (SELECT source, CASE WHEN len(tk) >= 3 THEN list_distinct(list_transform(generate_series(1, len(tk)-2),
-        |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) ELSE [] END AS shl FROM t),
-        |s AS (SELECT DISTINCT source, shingle FROM (SELECT source, unnest(shl) AS shingle FROM g)),
-        |sz AS (SELECT source, count(*) AS sz FROM s GROUP BY source),
-        |io AS (SELECT a.source AS source_a, b.source AS source_b, CAST(count(*) AS BIGINT) AS inter
-        |  FROM s a JOIN s b ON a.shingle = b.shingle AND a.source < b.source GROUP BY 1, 2)
-        |SELECT source_a, source_b, inter,
-        |  round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard,
-        |  round(CAST(inter AS DOUBLE) / least(sa.sz, sb.sz), 6) AS containment
-        |FROM io JOIN sz sa ON sa.source = source_a JOIN sz sb ON sb.source = source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-    // mean_chars unrounded: exact-long sum / count is one identical
-    // double division in both engines
-    "text_source_stats" ->
+        |ORDER BY center, context, neg_idx""".stripMargin),
+    // tokenizer budgeting: bytes-per-char + non-ASCII share per language
+    query("text_utf8_stats", (s, dir) =>
+      TextAnalysis.utf8Stats(table(s, dir, "documents")),
+      // length() = chars / strlen() = bytes on DuckDB; ratios are one
+      // double division of exact long sums on both engines
+      """WITH c AS (SELECT lang,
+        |    CAST(length(text) AS BIGINT) AS chars,
+        |    CAST(strlen(text) AS BIGINT) AS bytes,
+        |    CAST(length(regexp_replace(text, '[^\x00-\x7F]', '', 'g')) AS BIGINT) AS ascii_chars
+        |  FROM documents)
+        |SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(chars) AS BIGINT) AS total_chars,
+        |  CAST(sum(bytes) AS BIGINT) AS total_bytes,
+        |  round(CAST(sum(bytes) AS DOUBLE) / CAST(sum(chars) AS BIGINT), 6) AS bytes_per_char,
+        |  round(CAST(sum(chars) - sum(ascii_chars) AS DOUBLE) / CAST(sum(chars) AS BIGINT), 6) AS non_ascii_share
+        |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
+    query("text_source_stats", (s, dir) =>
+      TextAnalysis.sourceStats(table(s, dir, "documents")),
+      // mean_chars unrounded: exact-long sum / count is one identical
+      // double division in both engines
       """SELECT source, lang, count(*) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
         |  CAST(sum(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+'))) AS BIGINT) AS total_tokens,
         |  CAST(sum(n_chars) AS DOUBLE) / count(*) AS mean_chars
-        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin,
-    "text_vocab_stats" ->
+        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin),
+    // vocabulary richness: hapax share / type-token ratio per source
+    query("text_vocab_stats", (s, dir) =>
+      TextAnalysis.vocabularyStats(table(s, dir, "documents")),
       """WITH tok AS (SELECT source, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
         |tc AS (SELECT source, term, count(*) AS n FROM tok GROUP BY 1, 2)
         |SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens, count(*) AS n_types,
         |  CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
         |  round(CAST(count(*) AS DOUBLE) / CAST(sum(n) AS BIGINT), 6) AS type_token_ratio,
         |  round(CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS hapax_share
-        |FROM tc GROUP BY source ORDER BY source""".stripMargin,
-    // Gopher rules: each flag replayed as the same exact-integer /
-    // regexp-count arithmetic; mean word length sums integer lengths
-    // (exact in double at any order), '#'/'...' counts via
-    // regexp_extract_all (non-overlapping, same as split-1)
-    "text_gopher_rules" ->
+        |FROM tc GROUP BY source ORDER BY source""".stripMargin),
+    // Flesch/FK readability per source: regexp-count scan, exact-long
+    // sums, two formula evaluations per source row
+    query("text_readability", (s, dir) =>
+      TextAnalysis.readability(table(s, dir, "documents")),
+      // readability: pure regexp counts -> exact long sums -> the two
+      // formulas evaluate once per source in the same association order
+      """WITH d AS (SELECT source,
+        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS w,
+        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+')) AS BIGINT) AS sy,
+        |    greatest(CAST(1 AS BIGINT), CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT)) AS se
+        |  FROM documents),
+        |a AS (SELECT source, count(*) AS n_docs, CAST(sum(w) AS BIGINT) AS words,
+        |    CAST(sum(sy) AS BIGINT) AS syllables, CAST(sum(se) AS BIGINT) AS sentences
+        |  FROM d WHERE w > 0 GROUP BY source)
+        |SELECT source, n_docs, words, syllables, sentences,
+        |  round(206.835 - 1.015 * (CAST(words AS DOUBLE) / CAST(sentences AS DOUBLE)) - 84.6 * (CAST(syllables AS DOUBLE) / CAST(words AS DOUBLE)), 4) AS flesch_ease,
+        |  round(0.39 * (CAST(words AS DOUBLE) / CAST(sentences AS DOUBLE)) + 11.8 * (CAST(syllables AS DOUBLE) / CAST(words AS DOUBLE)) - 15.59, 4) AS fk_grade
+        |FROM a ORDER BY source""".stripMargin),
+    // Gopher structural rules (Rae'21): per-source fail counts per rule
+    // + survivors — one codegen scan, (source, 7 longs) exchange
+    query("text_gopher_rules", (s, dir) =>
+      TextAnalysis.gopherRules(table(s, dir, "documents")),
+      // Gopher rules: each flag replayed as the same exact-integer /
+      // regexp-count arithmetic; mean word length sums integer lengths
+      // (exact in double at any order), '#'/'...' counts via
+      // regexp_extract_all (non-overlapping, same as split-1)
       """WITH t AS (SELECT source, text,
         |    regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |d AS (SELECT source, CAST(len(tk) AS BIGINT) AS w,
@@ -4127,26 +3956,15 @@ object SparkEntry {
         |  CAST(sum(f_sw) AS BIGINT) AS fail_stopwords,
         |  CAST(count(*) - sum(greatest(f_wc, f_ml, f_sr, f_bu, f_aw, f_sw)) AS BIGINT) AS n_keep,
         |  round(CAST(count(*) - sum(greatest(f_wc, f_ml, f_sr, f_bu, f_aw, f_sw)) AS DOUBLE) / count(*), 6) AS keep_rate
-        |FROM f GROUP BY source ORDER BY source""".stripMargin,
-    // readability: pure regexp counts -> exact long sums -> the two
-    // formulas evaluate once per source in the same association order
-    "text_readability" ->
-      """WITH d AS (SELECT source,
-        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS w,
-        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+')) AS BIGINT) AS sy,
-        |    greatest(CAST(1 AS BIGINT), CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT)) AS se
-        |  FROM documents),
-        |a AS (SELECT source, count(*) AS n_docs, CAST(sum(w) AS BIGINT) AS words,
-        |    CAST(sum(sy) AS BIGINT) AS syllables, CAST(sum(se) AS BIGINT) AS sentences
-        |  FROM d WHERE w > 0 GROUP BY source)
-        |SELECT source, n_docs, words, syllables, sentences,
-        |  round(206.835 - 1.015 * (CAST(words AS DOUBLE) / CAST(sentences AS DOUBLE)) - 84.6 * (CAST(syllables AS DOUBLE) / CAST(words AS DOUBLE)), 4) AS flesch_ease,
-        |  round(0.39 * (CAST(words AS DOUBLE) / CAST(sentences AS DOUBLE)) + 11.8 * (CAST(syllables AS DOUBLE) / CAST(words AS DOUBLE)) - 15.59, 4) AS fk_grade
-        |FROM a ORDER BY source""".stripMargin,
-    // Zipf fit: ln() on exact integers (the bm25 ln precedent), products
-    // as single IEEE multiplies, SUMS as DECIMAL(28,18) (order-free),
-    // one fixed double tree at the end — same discipline as the engine
-    "text_zipf_fit" ->
+        |FROM f GROUP BY source ORDER BY source""".stripMargin),
+    // Zipf rank-frequency OLS fit per source over the top-200 terms —
+    // decimal-exact sums over a sources x 200 frame (WindowGroupLimit
+    // bounds the rank sort)
+    query("text_zipf_fit", (s, dir) =>
+      TextAnalysis.zipfFit(table(s, dir, "documents")),
+      // Zipf fit: ln() on exact integers (the bm25 ln precedent), products
+      // as single IEEE multiplies, SUMS as DECIMAL(28,18) (order-free),
+      // one fixed double tree at the end — same discipline as the engine
       """WITH tok AS (SELECT source, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
         |tc AS (SELECT source, term, count(*) AS cnt FROM tok GROUP BY 1, 2),
         |rk AS (SELECT source, cnt, row_number() OVER (PARTITION BY source ORDER BY cnt DESC, term) AS r FROM tc),
@@ -4166,11 +3984,14 @@ object SparkEntry {
         |  round((syd - slope*sxd) / nd, 6) AS zipf_intercept,
         |  round(CASE WHEN syyd - syd*syd/nd = 0 THEN 0.0
         |    ELSE (slope*(sxyd - sxd*syd/nd)) / (syyd - syd*syd/nd) END, 6) AS r2
-        |FROM g ORDER BY source""".stripMargin,
-    // Heaps curve: checkpoint bounds are pure INTEGER arithmetic (// not
-    // /), cumulative counts via the bound range-join, beta over the 10
-    // checkpoint rows with decimal sums; heaps_k uses the UNROUNDED beta
-    "text_heaps_law" ->
+        |FROM g ORDER BY source""".stripMargin),
+    // Heaps'-law vocabulary-growth curve + beta fit at 10 arithmetic
+    // doc-id checkpoints — no global sort/window; bounds broadcast
+    query("text_heaps_law", (s, dir) =>
+      TextAnalysis.heapsLaw(table(s, dir, "documents")),
+      // Heaps curve: checkpoint bounds are pure INTEGER arithmetic (// not
+      // /), cumulative counts via the bound range-join, beta over the 10
+      // checkpoint rows with decimal sums; heaps_k uses the UNROUNDED beta
       """WITH b0 AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
         |ck AS (SELECT i AS ckpt, lo + (hi - lo) * i // 10 AS bound FROM b0, range(1, 11) t(i)),
         |dt AS (SELECT doc_id, len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS ntok FROM documents),
@@ -4194,432 +4015,25 @@ object SparkEntry {
         |SELECT ckpt, bound, n_docs, n_tokens, n_types,
         |  round(beta, 6) AS heaps_beta,
         |  round(exp((syd - beta*sxd) / nd), 6) AS heaps_k
-        |FROM curve, g ORDER BY ckpt""".stripMargin,
-
-    // decimal-exact per-dim sums -> rounded centroid coords -> pair
-    // cosine; the VARCHAR hop is not needed because round(...,6) absorbs
-    // DuckDB's occasional 1-ulp wide-decimal->DOUBLE cast
-    "sim_label_centroids" ->
-      """WITH e AS (SELECT label, embedding AS v FROM embeddings),
-        |x AS (SELECT label, d, CAST(v[d] AS DECIMAL(28,18)) AS x
-        |      FROM (SELECT label, v, unnest(generate_series(1, 64)) AS d FROM e)),
-        |s AS (SELECT label, d, sum(x) AS s FROM x GROUP BY label, d),
-        |n AS (SELECT label, count(*) AS n FROM e GROUP BY label),
-        |c AS (SELECT s.label, d, round(CAST(s / n AS DOUBLE), 6) AS c
-        |      FROM s JOIN n USING (label)),
-        |dt AS (SELECT a.label AS label_a, b.label AS label_b, sum(a.c * b.c) AS dot
-        |       FROM c a JOIN c b ON a.d = b.d AND a.label < b.label GROUP BY 1, 2),
-        |nrm AS (SELECT label, sum(c * c) AS n2 FROM c GROUP BY label)
-        |SELECT d.label_a, d.label_b, na.n AS n_a, nb.n AS n_b,
-        |  round(d.dot / sqrt(xa.n2 * xb.n2), 4) AS cosine
-        |FROM dt d JOIN nrm xa ON xa.label = d.label_a
-        |  JOIN nrm xb ON xb.label = d.label_b
-        |  JOIN n na ON na.label = d.label_a JOIN n nb ON nb.label = d.label_b
-        |ORDER BY label_a, label_b""".stripMargin,
-
-    // replays the top-3 BIGRAM tf-idf signature, then the feature-bucket
-    // cosine: df-capped term join, dot over <= m rounded weights, norms
-    // over the full top-m vector, rank on the ROUNDED cosine
-    "sim_sparse_topk" ->
-      """WITH t0 AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |tok AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])) AS term
-        |        FROM t0 WHERE len(tk) >= 2),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |s AS (SELECT tf.doc_id, tf.term,
-        |        round(tf * ln(CAST(n.n AS DOUBLE)/df), 4) AS tfidf
-        |      FROM tf JOIN dfq USING (term) CROSS JOIN n),
-        |r AS (SELECT doc_id, term, tfidf,
-        |        row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rn FROM s),
-        |feats AS (SELECT doc_id, term, tfidf FROM r WHERE rn <= 3),
-        |fdf AS (SELECT term FROM feats GROUP BY term HAVING count(*) <= 1000),
-        |f2 AS (SELECT feats.* FROM feats JOIN fdf USING (term)),
-        |dots AS (SELECT a.doc_id AS doc_id, b.doc_id AS neighbor_id,
-        |           sum(a.tfidf * b.tfidf) AS dot
-        |         FROM f2 a JOIN f2 b ON a.term = b.term AND a.doc_id != b.doc_id
-        |         GROUP BY 1, 2),
-        |norms AS (SELECT doc_id, sum(tfidf * tfidf) AS n2 FROM feats GROUP BY doc_id),
-        |c AS (SELECT d.doc_id, d.neighbor_id,
-        |        round(d.dot / sqrt(na.n2 * nb.n2), 4) AS cosine
-        |      FROM dots d JOIN norms na ON na.doc_id = d.doc_id
-        |        JOIN norms nb ON nb.doc_id = d.neighbor_id),
-        |rk AS (SELECT doc_id, neighbor_id, cosine,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |       FROM c WHERE cosine > 0)
-        |SELECT doc_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-        |FROM rk WHERE rn <= 5 ORDER BY doc_id, rn""".stripMargin,
-
-    "text_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |s AS (SELECT tf.doc_id, tf.term,
-        |        round(tf * ln(CAST(n.n AS DOUBLE)/df), 4) AS tfidf
-        |      FROM tf JOIN dfq USING (term) CROSS JOIN n),
-        |r AS (SELECT doc_id, term, tfidf,
-        |        row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rn FROM s)
-        |SELECT doc_id, term, tfidf, CAST(rn AS INT) AS rn
-        |FROM r WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin,
-    // MLE bigram LM self-trained on the corpus: p(w2|w1) = c2/c1 where c1
-    // sums c2 over bigrams with the same LEFT token (exact normalization);
-    // docs with < 2 tokens carry NULL score
-    "text_bigram_lm" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |occ AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 2
-        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
-        |    ELSE [] END) AS bigram FROM t),
-        |bc AS (SELECT bigram, count(*) AS c2 FROM occ GROUP BY bigram),
-        |bcw AS (SELECT bigram, c2, split_part(bigram, ' ', 1) AS w1 FROM bc),
-        |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM bcw GROUP BY w1),
-        |sc AS (SELECT doc_id, ln(CAST(c2 AS DOUBLE)) - ln(CAST(c1 AS DOUBLE)) AS lp
-        |       FROM occ JOIN bcw USING (bigram) JOIN c1 USING (w1)),
-        |per AS (SELECT doc_id, count(*) AS nb, round(avg(lp), 4) AS avg_logp FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(nb, 0) AS BIGINT) AS n_bigrams, avg_logp
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "text_cross_lm" ->
-      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |occ AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 2
-        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
-        |    ELSE [] END) AS bigram FROM t),
-        |rt AS (SELECT tk FROM t WHERE source = 'src0'),
-        |v AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS vs FROM (SELECT unnest(tk) AS w FROM rt)),
-        |rocc AS (SELECT unnest(CASE WHEN len(tk) >= 2
-        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
-        |    ELSE [] END) AS bigram FROM rt),
-        |bc AS (SELECT bigram, count(*) AS c2 FROM rocc GROUP BY bigram),
-        |bcw AS (SELECT bigram, c2, split_part(bigram, ' ', 1) AS w1 FROM bc),
-        |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM bcw GROUP BY w1),
-        |sc AS (SELECT doc_id,
-        |    ln(CAST(coalesce(c2, 0) AS DOUBLE) + 1.0)
-        |      - ln(CAST(coalesce(c1, 0) AS DOUBLE) + 1.0 * vs) AS lp,
-        |    CASE WHEN c2 IS NULL THEN 1 ELSE 0 END AS oov
-        |  FROM occ
-        |  LEFT JOIN bcw ON occ.bigram = bcw.bigram
-        |  LEFT JOIN c1 ON split_part(occ.bigram, ' ', 1) = c1.w1
-        |  CROSS JOIN v),
-        |per AS (SELECT doc_id, count(*) AS nb, CAST(sum(oov) AS BIGINT) AS n_oov,
-        |        round(avg(lp), 4) AS avg_logp FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(nb, 0) AS BIGINT) AS n_bigrams,
-        |  CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov, avg_logp
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // Stupid-backoff oracle: the same three-branch CASE over the same
-    // integer count tables; alpha literals forced to DOUBLE (DuckDB would
-    // otherwise fold 0.4*0.4 as exact DECIMAL and diverge from the
-    // engine's IEEE product); round(4) absorbs ln's 1-ulp noise.
-    "text_stupid_backoff" ->
-      s"""WITH $stupidBackoffCtes
-        |SELECT d.doc_id, CAST(coalesce(nt, 0) AS BIGINT) AS n_trigrams,
-        |  CAST(coalesce(nb, 0) AS BIGINT) AS n_bi_backoff,
-        |  CAST(coalesce(nu, 0) AS BIGINT) AS n_uni_backoff, avg_logp
-        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // CCNet head/middle/tail from the same LM chain; boundaries from the
-    // per-(source, score) histogram, value-threshold cut (ties -> head)
-    "text_perplexity_buckets" ->
-      s"""WITH $stupidBackoffCtes,
-        |base AS (SELECT t.doc_id, t.source, CAST(len(tk) AS BIGINT) AS ntok, per.avg_logp
-        |  FROM t LEFT JOIN per ON t.doc_id = per.doc_id),
-        |h AS (SELECT source, avg_logp, count(*) AS hd FROM base WHERE avg_logp IS NOT NULL GROUP BY 1, 2),
-        |cm AS (SELECT source, avg_logp,
-        |    CAST(sum(hd) OVER (PARTITION BY source ORDER BY avg_logp DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |    CAST(sum(hd) OVER (PARTITION BY source) AS BIGINT) AS n FROM h),
-        |b AS (SELECT source,
-        |    max(CASE WHEN cum >= ceil(n / 3.0) THEN avg_logp END) AS s1,
-        |    max(CASE WHEN cum >= ceil(n * 2 / 3.0) THEN avg_logp END) AS s2
-        |  FROM cm GROUP BY source),
-        |a AS (SELECT base.source,
-        |    CASE WHEN avg_logp IS NULL THEN 'no_lm'
-        |         WHEN avg_logp >= s1 THEN 'head'
-        |         WHEN avg_logp >= s2 THEN 'middle' ELSE 'tail' END AS bucket,
-        |    ntok, avg_logp FROM base LEFT JOIN b ON base.source = b.source)
-        |SELECT source, bucket, count(*) AS n_docs, CAST(sum(ntok) AS BIGINT) AS n_tokens,
-        |  min(avg_logp) AS min_logp, max(avg_logp) AS max_logp
-        |FROM a GROUP BY 1, 2 ORDER BY source, bucket""".stripMargin,
-    // Logistic-GD oracle: the same iters/lr interpolated from the engine
-    // constants, each round unrolled CTE-by-CTE with the identical
-    // decimal-exact gradient sums and the identical round(…,12) update;
-    // the sigmoid literal 1.0 is exactly representable so DuckDB's
-    // decimal-literal parsing cannot diverge from the double tree.
-    "text_quality_classifier" -> (classifierScoredSql + "\nORDER BY doc_id"),
-    "text_nb_classifier" -> nbOracleSql,
-    // wraps the SAME NB replay; the matrix is a |C|^2 aggregate over it
-    "text_nb_confusion" ->
-      s"""WITH base AS ($nbOracleSql),
-         |cm AS (SELECT source, pred, count(*) AS n FROM base GROUP BY 1, 2),
-         |bt AS (SELECT source, sum(n) AS n_true FROM cm GROUP BY 1),
-         |bp AS (SELECT pred, sum(n) AS n_pred FROM cm GROUP BY 1)
-         |SELECT cm.source, cm.pred, CAST(cm.n AS BIGINT) AS n,
-         |  round(CAST(cm.n AS DOUBLE) / bt.n_true, 4) AS recall_share,
-         |  round(CAST(cm.n AS DOUBLE) / bp.n_pred, 4) AS precision_share
-         |FROM cm JOIN bt USING (source) JOIN bp USING (pred)
-         |ORDER BY cm.source, cm.pred""".stripMargin,
-    // wraps the SAME classifier replay; ranks double to stay integral,
-    // the cumulative window runs over one-row-per-distinct-score so its
-    // frame is deterministic
-    "text_classifier_auc" ->
-      s"""WITH sc AS ($classifierScoredSql),
-         |h AS (SELECT score, count(*) AS n,
-         |        count(*) FILTER (WHERE label = 1) AS np
-         |      FROM sc GROUP BY score),
-         |c AS (SELECT score, n, np,
-         |        COALESCE(sum(n) OVER (ORDER BY score
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-         |      FROM h),
-         |agg AS (SELECT CAST(sum(np * (2 * cb + n + 1)) AS BIGINT) AS sum_ranks2,
-         |          CAST(sum(np) AS BIGINT) AS n_pos,
-         |          CAST(sum(n - np) AS BIGINT) AS n_neg
-         |        FROM c)
-         |SELECT n_pos, n_neg, sum_ranks2,
-         |  CASE WHEN n_pos > 0 AND n_neg > 0
-         |    THEN round(CAST(sum_ranks2 - n_pos * (n_pos + 1) AS DOUBLE) /
-         |               (2.0 * n_pos * n_neg), 6) END AS auc
-         |FROM agg""".stripMargin,
-    // the classifier chain verbatim as a subquery, then the reliability
-    // binning: DECIMAL(18,4) sums of the round(4) scores (order-
-    // independent), one division + round per reported column
-    "text_classifier_calibration" ->
-      s"""WITH scored AS (
-         |${classifierScoredSql}
-         |)
-         |SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-         |  round(CAST(sum(CAST(score AS DECIMAL(18,4))) AS DOUBLE)/count(*), 4) AS mean_score,
-         |  round(CAST(sum(label) AS DOUBLE)/count(*), 4) AS frac_positive,
-         |  round(abs(CAST(sum(CAST(score AS DECIMAL(18,4))) AS DOUBLE)/count(*)
-         |    - CAST(sum(label) AS DOUBLE)/count(*)), 4) AS gap
-         |FROM (SELECT least(CAST(floor(score*10) AS INT), 9) AS bin, score, label FROM scored)
-         |GROUP BY bin ORDER BY bin""".stripMargin,
-    "text_chunk_seqs" ->
-      """WITH t AS (SELECT lang AS shard, doc_id,
-        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n
-        |  FROM documents),
-        |nz AS (SELECT * FROM t WHERE n > 0),
-        |o AS (SELECT shard, doc_id, n,
-        |    sum(n) OVER (PARTITION BY shard ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n AS s
-        |  FROM nz),
-        |sp AS (SELECT shard, doc_id, s, s + n AS e FROM o),
-        |x AS (SELECT shard, doc_id, s, e,
-        |    unnest(generate_series(CAST(s // 512 AS BIGINT), CAST((e - 1) // 512 AS BIGINT))) AS chunk_id
-        |  FROM sp)
-        |SELECT shard, chunk_id, doc_id,
-        |  CAST(greatest(s, chunk_id * 512) - chunk_id * 512 AS BIGINT) AS start_in_chunk,
-        |  CAST(least(e, (chunk_id + 1) * 512) - greatest(s, chunk_id * 512) AS BIGINT) AS n_toks
-        |FROM x ORDER BY shard, chunk_id, doc_id""".stripMargin,
-    // same integer-count derivation: dense source x support grid,
-    // cumulative sums, KS gap as double division of exact integers
-    "text_ks_drift" ->
-      """WITH t AS (SELECT source, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n FROM documents),
-        |per AS (SELECT source, n, count(*) AS c FROM t GROUP BY 1, 2),
-        |support AS (SELECT DISTINCT n FROM per),
-        |src AS (SELECT source, CAST(sum(c) AS BIGINT) AS src_total FROM per GROUP BY 1),
-        |gn AS (SELECT n, CAST(sum(c) AS BIGINT) AS g FROM per GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS grand FROM per),
-        |grid AS (SELECT s.source, s.src_total, sup.n, coalesce(p.c, 0) AS c, gn.g, tot.grand
-        |  FROM src s CROSS JOIN support sup
-        |  LEFT JOIN per p ON p.source = s.source AND p.n = sup.n
-        |  JOIN gn ON gn.n = sup.n CROSS JOIN tot),
-        |cum AS (SELECT source, src_total, grand, n,
-        |    sum(c) OVER (PARTITION BY source ORDER BY n ROWS UNBOUNDED PRECEDING) AS cum_src,
-        |    sum(g) OVER (PARTITION BY source ORDER BY n ROWS UNBOUNDED PRECEDING) AS cum_all
-        |  FROM grid)
-        |SELECT source, max(src_total) AS n_docs,
-        |  round(max(abs(CAST(cum_src AS DOUBLE) / src_total
-        |    - CAST(cum_all - cum_src AS DOUBLE) / (grand - src_total))), 6) AS ks_stat
-        |FROM cum GROUP BY source ORDER BY source""".stripMargin,
-    "text_len_quantiles" ->
-      """WITH t AS (SELECT lang, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens FROM documents)
-        |SELECT lang, count(*) AS n_docs,
-        |  round(quantile_cont(n_tokens, 0.25), 4) AS p25,
-        |  round(quantile_cont(n_tokens, 0.5), 4) AS p50,
-        |  round(quantile_cont(n_tokens, 0.75), 4) AS p75
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-    "text_redact_pii" ->
-      """WITH r AS (SELECT doc_id, translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS lt,
-        |  regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+', '<EMAIL>', 'g') AS er FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(lt, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(er, '\+[0-9][0-9()\- ]+[0-9]')) AS BIGINT) AS n_phones,
-        |  md5(regexp_replace(er, '\+[0-9][0-9()\- ]+[0-9]', '<PHONE>', 'g')) AS redacted_hash
-        |FROM r ORDER BY doc_id""".stripMargin,
-    // same md5(:7) shuffle key, (n-1)//16 length bands, shard from the
-    // hex8Int contract % 4, row_number batches of 8
-    "text_batch_plan" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens,
-        |    md5(CAST(doc_id AS VARCHAR) || ':7') AS k
-        |  FROM documents),
-        |nz AS (SELECT doc_id, n_tokens, k,
-        |    CAST((n_tokens - 1) // 16 AS INT) AS bucket,
-        |    CAST(('0x' || substring(k, 1, 8))::BIGINT % 4 AS INT) AS shard
-        |  FROM t WHERE n_tokens > 0),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY bucket, shard ORDER BY k, doc_id) AS rn FROM nz),
-        |b AS (SELECT bucket, shard, CAST((rn - 1) // 8 AS BIGINT) AS batch_id, n_tokens FROM r)
-        |SELECT bucket, shard, batch_id, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(max(n_tokens) AS BIGINT) AS max_tokens,
-        |  round(1.0 - CAST(sum(n_tokens) AS DOUBLE)/CAST(count(*)*max(n_tokens) AS DOUBLE), 4) AS pad_frac
-        |FROM b GROUP BY 1, 2, 3 ORDER BY bucket, shard, batch_id""".stripMargin,
-    // three offset arms (the engine's zip_with slices) unioned, canonical
-    // (least, greatest) pairs, corpus totals as 1-row sides
-    "text_pmi_pairs" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |arm AS (SELECT least(p[1], p[2]) AS a, greatest(p[1], p[2]) AS b FROM (
-        |    SELECT unnest(list_transform(generate_series(1, len(tk)-o), i -> [tk[i], tk[i+o]])) AS p
-        |    FROM t, (SELECT unnest([1, 2, 3]) AS o) offs WHERE len(tk) > o)),
-        |pc AS (SELECT a, b, count(*) AS c_ab FROM arm GROUP BY 1, 2),
-        |tc AS (SELECT tt, count(*) AS c_t FROM (SELECT unnest(tk) AS tt FROM t) GROUP BY 1),
-        |tp AS (SELECT CAST(sum(c_ab) AS BIGINT) AS tot_pairs FROM pc),
-        |tn AS (SELECT CAST(sum(c_t) AS BIGINT) AS tot_toks FROM tc)
-        |SELECT a, b, CAST(c_ab AS BIGINT) AS c_ab,
-        |  round(ln((CAST(c_ab AS DOUBLE)/tot_pairs) /
-        |    ((CAST(ca.c_t AS DOUBLE)/tot_toks) * (CAST(cb.c_t AS DOUBLE)/tot_toks))), 4) AS pmi
-        |FROM pc JOIN tc ca ON ca.tt = pc.a JOIN tc cb ON cb.tt = pc.b
-        |  CROSS JOIN tp CROSS JOIN tn
-        |WHERE c_ab >= 5
-        |ORDER BY pmi DESC, a, b LIMIT 30""".stripMargin,
-    // C4 bad-words replay: same tokenize, same ['dup','slow','big'] list,
-    // membership via list_filter/list_intersect
-    "text_blocklist_filter" ->
-      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents)
-        |SELECT doc_id, source, CAST(len(tk) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(tk, x -> list_contains(['dup','slow','big'], x))) AS BIGINT) AS n_hits,
-        |  CAST(len(list_intersect(list_distinct(tk), ['dup','slow','big'])) AS BIGINT) AS n_blocked_terms,
-        |  CASE WHEN len(list_filter(tk, x -> list_contains(['dup','slow','big'], x))) > 0
-        |    THEN 'dropped' ELSE 'kept' END AS verdict
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // novelty vs src0: the dedup_contamination trigram CTEs, flipped to
-    // count the UNSEEN side; NULL novelty when a doc has no trigram
-    "text_ngram_novelty" ->
-      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |g AS (SELECT doc_id, source, CASE WHEN len(tk) >= 3 THEN list_distinct(list_transform(generate_series(1, len(tk)-2),
-        |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) ELSE [] END AS shl FROM t),
-        |sh AS (SELECT doc_id, source, unnest(shl) AS g1 FROM g),
-        |ref AS (SELECT DISTINCT g1 FROM sh WHERE source = 'src0'),
-        |per AS (SELECT doc_id, count(*) AS n_ngrams,
-        |        sum(CASE WHEN r.g1 IS NULL THEN 1 ELSE 0 END) AS n_novel
-        |      FROM sh LEFT JOIN ref r USING (g1) WHERE sh.source <> 'src0' GROUP BY doc_id)
-        |SELECT t.doc_id, t.source, CAST(coalesce(n_ngrams, 0) AS BIGINT) AS n_ngrams,
-        |  CAST(coalesce(n_novel, 0) AS BIGINT) AS n_novel,
-        |  CASE WHEN coalesce(n_ngrams, 0) > 0
-        |    THEN round(CAST(n_novel AS DOUBLE)/n_ngrams, 4) END AS novelty
-        |FROM t LEFT JOIN per USING (doc_id) WHERE t.source <> 'src0'
-        |ORDER BY doc_id""".stripMargin,
-    // same planted-card arithmetic (hash base, computed Luhn check,
-    // off-by-one invalid), then the same 16-digit extraction + checksum
-    "text_luhn_pii" ->
-      """WITH base AS (SELECT doc_id, text,
-        |    '4' || lpad(CAST((doc_id * 2654435761) % 100000000000000 AS VARCHAR), 14, '0') AS b
-        |  FROM documents),
-        |gen AS (SELECT doc_id, text, b,
-        |    list_sum(list_transform(generate_series(0, 14), j ->
-        |      CASE WHEN j % 2 = 0 THEN
-        |        CASE WHEN CAST(substring(b, 15-j, 1) AS INT)*2 > 9
-        |          THEN CAST(substring(b, 15-j, 1) AS INT)*2 - 9
-        |          ELSE CAST(substring(b, 15-j, 1) AS INT)*2 END
-        |      ELSE CAST(substring(b, 15-j, 1) AS INT) END)) AS s
-        |  FROM base),
-        |planted AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 9 = 0 THEN text || ' card ' || b || CAST((10 - s % 10) % 10 AS VARCHAR)
-        |         WHEN doc_id % 9 = 1 THEN text || ' card ' || b || CAST(((10 - s % 10) % 10 + 1) % 10 AS VARCHAR)
-        |         ELSE text END AS text
-        |  FROM gen),
-        |c AS (SELECT doc_id, unnest(regexp_extract_all(text, '[0-9]{16}')) AS cand FROM planted),
-        |v AS (SELECT doc_id,
-        |    CASE WHEN list_sum(list_transform(generate_series(0, 15), i ->
-        |      CASE WHEN i % 2 = 1 THEN
-        |        CASE WHEN CAST(substring(cand, 16-i, 1) AS INT)*2 > 9
-        |          THEN CAST(substring(cand, 16-i, 1) AS INT)*2 - 9
-        |          ELSE CAST(substring(cand, 16-i, 1) AS INT)*2 END
-        |      ELSE CAST(substring(cand, 16-i, 1) AS INT) END)) % 10 = 0 THEN 1 ELSE 0 END AS ok
-        |  FROM c)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates,
-        |  CAST(sum(ok) AS BIGINT) AS n_valid
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // T5 denoising-plan replay: the hex8Int md5 coin per (doc, pos, seed
-    // 17) at rate 15, then the same gaps-and-islands span merge
-    "text_span_corruption" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |p AS (SELECT doc_id, unnest(generate_series(0, len(tk)-1)) AS pos FROM t WHERE len(tk) > 0),
-        |m AS (SELECT doc_id, pos FROM p
-        |  WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR) || ':17'), 1, 8))::BIGINT % 100 < 15),
-        |isl AS (SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM m),
-        |sp AS (SELECT doc_id, grp, min(pos) AS start_pos, max(pos) AS end_pos,
-        |    count(*) AS span_len FROM isl GROUP BY 1, 2)
-        |SELECT doc_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_pos) AS BIGINT) AS span_id,
-        |  CAST(start_pos AS INT) AS start_pos, CAST(end_pos AS INT) AS end_pos,
-        |  CAST(span_len AS BIGINT) AS span_len
-        |FROM sp ORDER BY doc_id, span_id""".stripMargin,
-    // last chunk index floor((n-17)/48) for n>16 (a trailing chunk must add
-    // >=1 new token); n_chunk_tokens from the slice bounds
-    "text_chunks" ->
-      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |b AS (SELECT doc_id, tk,
-        |        CASE WHEN len(tk) <= 16 THEN 0 ELSE CAST(floor((len(tk)-17)/48.0) AS INT) END AS last_chunk
-        |      FROM t WHERE len(tk) > 0),
-        |c AS (SELECT doc_id, unnest(generate_series(0, last_chunk)) AS chunk_id, tk, len(tk) AS n FROM b)
-        |SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
-        |  CAST(least(64, n - chunk_id*48) AS BIGINT) AS n_chunk_tokens,
-        |  md5(array_to_string(list_slice(tk, chunk_id*48 + 1, chunk_id*48 + 64), ' ')) AS chunk_hash
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-    "text_pack_bins" ->
-      """WITH t AS (SELECT lang AS shard, doc_id,
-        |  CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens FROM documents),
-        |o AS (SELECT shard, doc_id, n_tokens,
-        |  CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS BIGINT) AS start_offset FROM t)
-        |SELECT shard, doc_id, n_tokens, start_offset,
-        |  CAST(floor(start_offset/2048.0) AS BIGINT) AS bin_id
-        |FROM o ORDER BY shard, doc_id""".stripMargin,
-    "sim_ann_ivf_multi" ->
-      """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-        |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
-        |c0 AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
-        |c AS (SELECT row_number() OVER (ORDER BY ck, vec_id) AS cell_id, u AS cu FROM c0),
-        |asg AS (SELECT vec_id, label, u, cell_id FROM (
-        |  SELECT e.vec_id, e.label, e.u, c.cell_id,
-        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
-        |  FROM e CROSS JOIN c) WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, u AS qu FROM asg WHERE vec_id IN (0, 1, 2, 3)),
-        |probe AS (SELECT query_id, cell_id, qu FROM (
-        |  SELECT q.query_id, c.cell_id, q.qu,
-        |         row_number() OVER (PARTITION BY q.query_id ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
-        |  FROM q CROSS JOIN c) WHERE rn <= 4),
-        |s AS (SELECT p.query_id, a.vec_id, a.label, round(list_dot_product(a.u, p.qu), 4) AS cosine
-        |      FROM asg a JOIN probe p USING (cell_id)
-        |      WHERE a.vec_id != p.query_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn FROM s)
-        |SELECT query_id, vec_id, label, cosine, CAST(rn AS INT) AS rn
-        |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    "sim_ann_ivf" ->
-      """WITH e0 AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |e1 AS (SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS nrm FROM e0),
-        |e AS (SELECT vec_id, label, list_transform(v, x -> x/nrm) AS u FROM e1),
-        |c0 AS (SELECT vec_id, u, md5(CAST(vec_id AS VARCHAR) || ':7') AS ck FROM e ORDER BY ck, vec_id LIMIT 16),
-        |c AS (SELECT row_number() OVER (ORDER BY ck, vec_id) AS cell_id, u AS cu FROM c0),
-        |asg AS (SELECT vec_id, label, u, cell_id FROM (
-        |  SELECT e.vec_id, e.label, e.u, c.cell_id,
-        |         row_number() OVER (PARTITION BY e.vec_id ORDER BY list_dot_product(e.u, c.cu) DESC, c.cell_id) AS rn
-        |  FROM e CROSS JOIN c) WHERE rn = 1),
-        |q AS (SELECT u AS qu FROM asg WHERE vec_id = 0),
-        |probe AS (SELECT cell_id FROM (
-        |  SELECT c.cell_id, row_number() OVER (ORDER BY list_dot_product(q.qu, c.cu) DESC, c.cell_id) AS rn
-        |  FROM q CROSS JOIN c) WHERE rn <= 4)
-        |SELECT a.vec_id, a.label, round(list_dot_product(a.u, q.qu), 4) AS cosine
-        |FROM asg a JOIN probe USING (cell_id) CROSS JOIN q
-        |WHERE a.vec_id != 0
-        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-    "text_bpe_tokens" ->
+        |FROM curve, g ORDER BY ckpt""".stripMargin),
+    query("text_bpe_tokens", (s, dir) =>
+      TextAnalysis.bpeTokenCounts(table(s, dir, "documents")),
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '''[a-z]+|[a-z]+|[0-9]+|[^a-z0-9\s'']+')) AS BIGINT) AS n_bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // replays the full BPE training trajectory: same wrapped-symbol form
-    // ('.h..e..y.'), same pair counting (zipped parallel unnests of the
-    // offset list slices), same (count DESC, lhs, rhs) tie-break, same
-    // single-replace() greedy merge — unrolled one CTE trio per round.
-    "text_bpe_merges" -> {
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // BPE merge TRAINING (round-5 verdict item #2): 8 rounds of
+    // highest-frequency-pair merging over the vocabulary, kmeansFit-style
+    // (one aggregate + one argmax row to the driver per round); the
+    // oracle unrolls the same 8 rounds CTE-by-CTE on the identical
+    // wrapped-symbol representation, so the whole training trajectory —
+    // counts, tie-breaks, greedy merge application — is replayed in SQL.
+    query("text_bpe_merges", (s, dir) =>
+      TextAnalysis.bpeTrainMerges(table(s, dir, "documents"), 8),
+      // replays the full BPE training trajectory: same wrapped-symbol form
+      // ('.h..e..y.'), same pair counting (zipped parallel unnests of the
+      // offset list slices), same (count DESC, lhs, rhs) tie-break, same
+      // single-replace() greedy merge — unrolled one CTE trio per round.
+      {
       val n = 8
       val rounds = (1 to n).map { r =>
         s"""p$r AS (
@@ -4648,54 +4062,16 @@ object SparkEntry {
          |  GROUP BY 1),
          |$rounds
          |SELECT * FROM ($sel) ORDER BY merge_round""".stripMargin
-    },
-    // the same 8-round unroll as text_bpe_merges, with a parallel
-    // per-TERM symbol chain (v0..v8) receiving each round's replace, then
-    // the per-doc rollup through the (doc_id, term, tf) frame
-    "text_bpe_encode" -> {
-      val n = 8
-      val rounds = (1 to n).map { r =>
-        s"""p$r AS (
-           |  SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS pair_count
-           |  FROM (SELECT freq,
-           |          unnest(els[1:len(els)-1]) AS lhs,
-           |          unnest(els[2:len(els)]) AS rhs
-           |        FROM (SELECT freq, string_split(substring(sym, 2, length(sym)-2), '..') AS els
-           |              FROM w${r - 1}))
-           |  GROUP BY 1, 2),
-           |m$r AS (
-           |  SELECT lhs, rhs, lhs || rhs AS merged, pair_count
-           |  FROM p$r ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-           |w$r AS (
-           |  SELECT replace(sym, '.' || lhs || '..' || rhs || '.', '.' || merged || '.') AS sym, freq
-           |  FROM w${r - 1}, m$r),
-           |v$r AS (
-           |  SELECT term, replace(sym, '.' || lhs || '..' || rhs || '.', '.' || merged || '.') AS sym
-           |  FROM v${r - 1}, m$r)"""
-      }.mkString(",\n")
-      s"""WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
-         |w0 AS (
-         |  SELECT '.' || array_to_string(list_transform(range(1, length(term)+1),
-         |           i -> substring(term, CAST(i AS INT), 1)), '..') || '.' AS sym,
-         |         CAST(count(*) AS BIGINT) AS freq
-         |  FROM tok GROUP BY 1),
-         |v0 AS (
-         |  SELECT DISTINCT term, '.' || array_to_string(list_transform(range(1, length(term)+1),
-         |           i -> substring(term, CAST(i AS INT), 1)), '..') || '.' AS sym
-         |  FROM tok),
-         |$rounds,
-         |enc AS (SELECT term, len(string_split(substring(sym, 2, length(sym)-2), '..')) AS n_sym FROM v$n),
-         |wc AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2)
-         |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_words,
-         |  CAST(sum(tf * n_sym) AS BIGINT) AS n_bpe_tokens,
-         |  round(CAST(sum(tf * n_sym) AS DOUBLE) / sum(tf), 4) AS compression
-         |FROM wc JOIN enc USING (term)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-
-    // the text_bpe_encode unroll with a per-prefix rollup: one curve row
-    // per v_k chain, totals over the same (term, tf) frame
-    "text_bpe_curve" -> {
+    }),
+    // the APPLY side of the trained tokenizer: encode the vocab with the
+    // 8 ranked merges (one chained-replace projection), roll up per-doc
+    // word/BPE-token counts + compression — the token-budget accounting
+    // tokenizer sizing: tokens-per-word under every merge-prefix k
+    query("text_bpe_curve", (s, dir) =>
+      TextAnalysis.bpeCompressionCurve(table(s, dir, "documents")),
+      // the text_bpe_encode unroll with a per-prefix rollup: one curve row
+      // per v_k chain, totals over the same (term, tf) frame
+      {
       val n = 8
       val rounds = (1 to n).map { r =>
         s"""p$r AS (
@@ -4735,49 +4111,338 @@ object SparkEntry {
          |$rounds,
          |wc AS (SELECT term, count(*) AS tf FROM tok GROUP BY 1)
          |SELECT * FROM ($sel) ORDER BY n_merges""".stripMargin
-    },
-    "text_bigrams" ->
-      """WITH t AS (SELECT regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
-        |b AS (SELECT unnest(list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])) AS bigram
-        |      FROM t WHERE len(tk) >= 2)
-        |SELECT bigram, count(*) AS n FROM b GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "text_langid_confusion" ->
-      """WITH t AS (SELECT doc_id, list_distinct(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS tk FROM documents),
-        |s AS (SELECT doc_id,
-        |  len(list_intersect(tk, ['der','die','das','und','ist'])) AS s_de,
-        |  len(list_intersect(tk, ['the','a','of','and','is'])) AS s_en,
-        |  len(list_intersect(tk, ['el','la','los','que','es'])) AS s_es,
-        |  len(list_intersect(tk, ['le','la','les','et','est'])) AS s_fr FROM t),
-        |g0 AS (SELECT doc_id, greatest(s_de, s_en, s_es, s_fr) AS best, s_de, s_en, s_es, s_fr FROM s),
-        |g AS (SELECT doc_id, CASE WHEN best = 0 THEN 'und'
-        |  WHEN s_de = best THEN 'de' WHEN s_en = best THEN 'en'
-        |  WHEN s_es = best THEN 'es' ELSE 'fr' END AS lang_guess FROM g0)
-        |SELECT d.lang, g.lang_guess, count(*) AS n
-        |FROM g JOIN documents d USING (doc_id)
-        |GROUP BY d.lang, g.lang_guess ORDER BY d.lang, g.lang_guess""".stripMargin,
+    }),
+    query("text_bpe_encode", (s, dir) =>
+      TextAnalysis.bpeEncode(table(s, dir, "documents"), 8),
+      // the same 8-round unroll as text_bpe_merges, with a parallel
+      // per-TERM symbol chain (v0..v8) receiving each round's replace, then
+      // the per-doc rollup through the (doc_id, term, tf) frame
+      {
+      val n = 8
+      val rounds = (1 to n).map { r =>
+        s"""p$r AS (
+           |  SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS pair_count
+           |  FROM (SELECT freq,
+           |          unnest(els[1:len(els)-1]) AS lhs,
+           |          unnest(els[2:len(els)]) AS rhs
+           |        FROM (SELECT freq, string_split(substring(sym, 2, length(sym)-2), '..') AS els
+           |              FROM w${r - 1}))
+           |  GROUP BY 1, 2),
+           |m$r AS (
+           |  SELECT lhs, rhs, lhs || rhs AS merged, pair_count
+           |  FROM p$r ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
+           |w$r AS (
+           |  SELECT replace(sym, '.' || lhs || '..' || rhs || '.', '.' || merged || '.') AS sym, freq
+           |  FROM w${r - 1}, m$r),
+           |v$r AS (
+           |  SELECT term, replace(sym, '.' || lhs || '..' || rhs || '.', '.' || merged || '.') AS sym
+           |  FROM v${r - 1}, m$r)"""
+      }.mkString(",\n")
+      s"""WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+         |w0 AS (
+         |  SELECT '.' || array_to_string(list_transform(range(1, length(term)+1),
+         |           i -> substring(term, CAST(i AS INT), 1)), '..') || '.' AS sym,
+         |         CAST(count(*) AS BIGINT) AS freq
+         |  FROM tok GROUP BY 1),
+         |v0 AS (
+         |  SELECT DISTINCT term, '.' || array_to_string(list_transform(range(1, length(term)+1),
+         |           i -> substring(term, CAST(i AS INT), 1)), '..') || '.' AS sym
+         |  FROM tok),
+         |$rounds,
+         |enc AS (SELECT term, len(string_split(substring(sym, 2, length(sym)-2), '..')) AS n_sym FROM v$n),
+         |wc AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2)
+         |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_words,
+         |  CAST(sum(tf * n_sym) AS BIGINT) AS n_bpe_tokens,
+         |  round(CAST(sum(tf * n_sym) AS DOUBLE) / sum(tf), 4) AS compression
+         |FROM wc JOIN enc USING (term)
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    }),
+    query("text_tfidf", (s, dir) =>
+      TextAnalysis.tfIdfTopTerms(table(s, dir, "documents"), 3),
+      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
+        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+        |n AS (SELECT count(*) AS n FROM documents),
+        |s AS (SELECT tf.doc_id, tf.term,
+        |        round(tf * ln(CAST(n.n AS DOUBLE)/df), 4) AS tfidf
+        |      FROM tf JOIN dfq USING (term) CROSS JOIN n),
+        |r AS (SELECT doc_id, term, tfidf,
+        |        row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rn FROM s)
+        |SELECT doc_id, term, tfidf, CAST(rn AS INT) AS rn
+        |FROM r WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin),
+    // corpus-trained bigram-LM fluency proxy: mean ln p(w2|w1) per doc
+    query("text_bigram_lm", (s, dir) =>
+      TextAnalysis.bigramLmScores(table(s, dir, "documents")),
+      // MLE bigram LM self-trained on the corpus: p(w2|w1) = c2/c1 where c1
+      // sums c2 over bigrams with the same LEFT token (exact normalization);
+      // docs with < 2 tokens carry NULL score
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |occ AS (SELECT doc_id, unnest(CASE WHEN len(tk) >= 2
+        |    THEN list_transform(generate_series(1, len(tk)-1), i -> tk[i] || ' ' || tk[i+1])
+        |    ELSE [] END) AS bigram FROM t),
+        |bc AS (SELECT bigram, count(*) AS c2 FROM occ GROUP BY bigram),
+        |bcw AS (SELECT bigram, c2, split_part(bigram, ' ', 1) AS w1 FROM bc),
+        |c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1 FROM bcw GROUP BY w1),
+        |sc AS (SELECT doc_id, ln(CAST(c2 AS DOUBLE)) - ln(CAST(c1 AS DOUBLE)) AS lp
+        |       FROM occ JOIN bcw USING (bigram) JOIN c1 USING (w1)),
+        |per AS (SELECT doc_id, count(*) AS nb, round(avg(lp), 4) AS avg_logp FROM sc GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(coalesce(nb, 0) AS BIGINT) AS n_bigrams, avg_logp
+        |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin),
+    query("text_len_quantiles", (s, dir) =>
+      TextAnalysis.lengthQuantilesByLang(table(s, dir, "documents")),
+      """WITH t AS (SELECT lang, CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens FROM documents)
+        |SELECT lang, count(*) AS n_docs,
+        |  round(quantile_cont(n_tokens, 0.25), 4) AS p25,
+        |  round(quantile_cont(n_tokens, 0.5), 4) AS p50,
+        |  round(quantile_cont(n_tokens, 0.75), 4) AS p75
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    query("text_redact_pii", (s, dir) =>
+      TextAnalysis.redactPii(table(s, dir, "documents")),
+      """WITH r AS (SELECT doc_id, translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS lt,
+        |  regexp_replace(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+', '<EMAIL>', 'g') AS er FROM documents)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(lt, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+')) AS BIGINT) AS n_emails,
+        |  CAST(len(regexp_extract_all(er, '\+[0-9][0-9()\- ]+[0-9]')) AS BIGINT) AS n_phones,
+        |  md5(regexp_replace(er, '\+[0-9][0-9()\- ]+[0-9]', '<PHONE>', 'g')) AS redacted_hash
+        |FROM r ORDER BY doc_id""".stripMargin),
+    // C4-style bad-words gate: per-doc blocked-term hits + drop verdict,
+    // blocklist as an array literal (codegen membership, zero joins)
+    query("text_blocklist_filter", (s, dir) =>
+      TextAnalysis.blocklistFilter(table(s, dir, "documents")),
+      // C4 bad-words replay: same tokenize, same ['dup','slow','big'] list,
+      // membership via list_filter/list_intersect
+      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents)
+        |SELECT doc_id, source, CAST(len(tk) AS BIGINT) AS n_tokens,
+        |  CAST(len(list_filter(tk, x -> list_contains(['dup','slow','big'], x))) AS BIGINT) AS n_hits,
+        |  CAST(len(list_intersect(list_distinct(tk), ['dup','slow','big'])) AS BIGINT) AS n_blocked_terms,
+        |  CASE WHEN len(list_filter(tk, x -> list_contains(['dup','slow','big'], x))) > 0
+        |    THEN 'dropped' ELSE 'kept' END AS verdict
+        |FROM t ORDER BY doc_id""".stripMargin),
+    // length-bucketed batch layout with per-batch padding waste; windows
+    // bounded per (bucket, shard), deterministic md5 shuffle
+    query("text_batch_plan", (s, dir) =>
+      TextAnalysis.batchPlan(table(s, dir, "documents")),
+      // same md5(:7) shuffle key, (n-1)//16 length bands, shard from the
+      // hex8Int contract % 4, row_number batches of 8
+      """WITH t AS (SELECT doc_id,
+        |    CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens,
+        |    md5(CAST(doc_id AS VARCHAR) || ':7') AS k
+        |  FROM documents),
+        |nz AS (SELECT doc_id, n_tokens, k,
+        |    CAST((n_tokens - 1) // 16 AS INT) AS bucket,
+        |    CAST(('0x' || substring(k, 1, 8))::BIGINT % 4 AS INT) AS shard
+        |  FROM t WHERE n_tokens > 0),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY bucket, shard ORDER BY k, doc_id) AS rn FROM nz),
+        |b AS (SELECT bucket, shard, CAST((rn - 1) // 8 AS BIGINT) AS batch_id, n_tokens FROM r)
+        |SELECT bucket, shard, batch_id, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(max(n_tokens) AS BIGINT) AS max_tokens,
+        |  round(1.0 - CAST(sum(n_tokens) AS DOUBLE)/CAST(count(*)*max(n_tokens) AS DOUBLE), 4) AS pad_frac
+        |FROM b GROUP BY 1, 2, 3 ORDER BY bucket, shard, batch_id""".stripMargin),
+    // windowed PMI collocations (Church-Hanks'90): top-30 pairs within
+    // 3 positions above a count floor
+    query("text_pmi_pairs", (s, dir) =>
+      TextAnalysis.pmiPairs(table(s, dir, "documents")),
+      // three offset arms (the engine's zip_with slices) unioned, canonical
+      // (least, greatest) pairs, corpus totals as 1-row sides
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |arm AS (SELECT least(p[1], p[2]) AS a, greatest(p[1], p[2]) AS b FROM (
+        |    SELECT unnest(list_transform(generate_series(1, len(tk)-o), i -> [tk[i], tk[i+o]])) AS p
+        |    FROM t, (SELECT unnest([1, 2, 3]) AS o) offs WHERE len(tk) > o)),
+        |pc AS (SELECT a, b, count(*) AS c_ab FROM arm GROUP BY 1, 2),
+        |tc AS (SELECT tt, count(*) AS c_t FROM (SELECT unnest(tk) AS tt FROM t) GROUP BY 1),
+        |tp AS (SELECT CAST(sum(c_ab) AS BIGINT) AS tot_pairs FROM pc),
+        |tn AS (SELECT CAST(sum(c_t) AS BIGINT) AS tot_toks FROM tc)
+        |SELECT a, b, CAST(c_ab AS BIGINT) AS c_ab,
+        |  round(ln((CAST(c_ab AS DOUBLE)/tot_pairs) /
+        |    ((CAST(ca.c_t AS DOUBLE)/tot_toks) * (CAST(cb.c_t AS DOUBLE)/tot_toks))), 4) AS pmi
+        |FROM pc JOIN tc ca ON ca.tt = pc.a JOIN tc cb ON cb.tt = pc.b
+        |  CROSS JOIN tp CROSS JOIN tn
+        |WHERE c_ab >= 5
+        |ORDER BY pmi DESC, a, b LIMIT 30""".stripMargin),
+    // reliability diagram for the trained logistic classifier: per score
+    // bin, mean predicted probability vs observed positive rate
+    query("text_classifier_calibration", (s, dir) =>
+      TextAnalysis.classifierCalibration(table(s, dir, "documents")),
+      // the classifier chain verbatim as a subquery, then the reliability
+      // binning: DECIMAL(18,4) sums of the round(4) scores (order-
+      // independent), one division + round per reported column
+      s"""WITH scored AS (
+         |${classifierScoredSql}
+         |)
+         |SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
+         |  round(CAST(sum(CAST(score AS DECIMAL(18,4))) AS DOUBLE)/count(*), 4) AS mean_score,
+         |  round(CAST(sum(label) AS DOUBLE)/count(*), 4) AS frac_positive,
+         |  round(abs(CAST(sum(CAST(score AS DECIMAL(18,4))) AS DOUBLE)/count(*)
+         |    - CAST(sum(label) AS DOUBLE)/count(*)), 4) AS gap
+         |FROM (SELECT least(CAST(floor(score*10) AS INT), 9) AS bin, score, label FROM scored)
+         |GROUP BY bin ORDER BY bin""".stripMargin),
+    // novelty vs the src0 reference slice: fraction of each doc's distinct
+    // trigrams unseen in the reference n-gram universe
+    query("text_ngram_novelty", (s, dir) =>
+      TextAnalysis.ngramNovelty(table(s, dir, "documents"), "src0", 3),
+      // novelty vs src0: the dedup_contamination trigram CTEs, flipped to
+      // count the UNSEEN side; NULL novelty when a doc has no trigram
+      """WITH t AS (SELECT doc_id, source, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |g AS (SELECT doc_id, source, CASE WHEN len(tk) >= 3 THEN list_distinct(list_transform(generate_series(1, len(tk)-2),
+        |        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) ELSE [] END AS shl FROM t),
+        |sh AS (SELECT doc_id, source, unnest(shl) AS g1 FROM g),
+        |ref AS (SELECT DISTINCT g1 FROM sh WHERE source = 'src0'),
+        |per AS (SELECT doc_id, count(*) AS n_ngrams,
+        |        sum(CASE WHEN r.g1 IS NULL THEN 1 ELSE 0 END) AS n_novel
+        |      FROM sh LEFT JOIN ref r USING (g1) WHERE sh.source <> 'src0' GROUP BY doc_id)
+        |SELECT t.doc_id, t.source, CAST(coalesce(n_ngrams, 0) AS BIGINT) AS n_ngrams,
+        |  CAST(coalesce(n_novel, 0) AS BIGINT) AS n_novel,
+        |  CASE WHEN coalesce(n_ngrams, 0) > 0
+        |    THEN round(CAST(n_novel AS DOUBLE)/n_ngrams, 4) END AS novelty
+        |FROM t LEFT JOIN per USING (doc_id) WHERE t.source <> 'src0'
+        |ORDER BY doc_id""".stripMargin),
+    // deterministic T5-style denoising plan: maximal masked-token spans
+    // from an md5 coin per (doc, pos) at 15%
+    query("text_span_corruption", (s, dir) =>
+      TextAnalysis.spanCorruptionPlan(table(s, dir, "documents"), 15, 17L),
+      // T5 denoising-plan replay: the hex8Int md5 coin per (doc, pos, seed
+      // 17) at rate 15, then the same gaps-and-islands span merge
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |p AS (SELECT doc_id, unnest(generate_series(0, len(tk)-1)) AS pos FROM t WHERE len(tk) > 0),
+        |m AS (SELECT doc_id, pos FROM p
+        |  WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR) || ':17'), 1, 8))::BIGINT % 100 < 15),
+        |isl AS (SELECT doc_id, pos,
+        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM m),
+        |sp AS (SELECT doc_id, grp, min(pos) AS start_pos, max(pos) AS end_pos,
+        |    count(*) AS span_len FROM isl GROUP BY 1, 2)
+        |SELECT doc_id,
+        |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_pos) AS BIGINT) AS span_id,
+        |  CAST(start_pos AS INT) AS start_pos, CAST(end_pos AS INT) AS end_pos,
+        |  CAST(span_len AS BIGINT) AS span_len
+        |FROM sp ORDER BY doc_id, span_id""".stripMargin),
+    // checksum-gated PII: 16-digit runs validated by Luhn (planted
+    // valid/invalid fixture — the corpus has no digit runs)
+    query("text_luhn_pii", (s, dir) =>
+      TextAnalysis.luhnCardScan(table(s, dir, "documents")),
+      // same planted-card arithmetic (hash base, computed Luhn check,
+      // off-by-one invalid), then the same 16-digit extraction + checksum
+      """WITH base AS (SELECT doc_id, text,
+        |    '4' || lpad(CAST((doc_id * 2654435761) % 100000000000000 AS VARCHAR), 14, '0') AS b
+        |  FROM documents),
+        |gen AS (SELECT doc_id, text, b,
+        |    list_sum(list_transform(generate_series(0, 14), j ->
+        |      CASE WHEN j % 2 = 0 THEN
+        |        CASE WHEN CAST(substring(b, 15-j, 1) AS INT)*2 > 9
+        |          THEN CAST(substring(b, 15-j, 1) AS INT)*2 - 9
+        |          ELSE CAST(substring(b, 15-j, 1) AS INT)*2 END
+        |      ELSE CAST(substring(b, 15-j, 1) AS INT) END)) AS s
+        |  FROM base),
+        |planted AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 9 = 0 THEN text || ' card ' || b || CAST((10 - s % 10) % 10 AS VARCHAR)
+        |         WHEN doc_id % 9 = 1 THEN text || ' card ' || b || CAST(((10 - s % 10) % 10 + 1) % 10 AS VARCHAR)
+        |         ELSE text END AS text
+        |  FROM gen),
+        |c AS (SELECT doc_id, unnest(regexp_extract_all(text, '[0-9]{16}')) AS cand FROM planted),
+        |v AS (SELECT doc_id,
+        |    CASE WHEN list_sum(list_transform(generate_series(0, 15), i ->
+        |      CASE WHEN i % 2 = 1 THEN
+        |        CASE WHEN CAST(substring(cand, 16-i, 1) AS INT)*2 > 9
+        |          THEN CAST(substring(cand, 16-i, 1) AS INT)*2 - 9
+        |          ELSE CAST(substring(cand, 16-i, 1) AS INT)*2 END
+        |      ELSE CAST(substring(cand, 16-i, 1) AS INT) END)) % 10 = 0 THEN 1 ELSE 0 END AS ok
+        |  FROM c)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates,
+        |  CAST(sum(ok) AS BIGINT) AS n_valid
+        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    query("text_chunks", (s, dir) =>
+      TextAnalysis.chunkDocuments(table(s, dir, "documents"), 64, 16),
+      // last chunk index floor((n-17)/48) for n>16 (a trailing chunk must add
+      // >=1 new token); n_chunk_tokens from the slice bounds
+      """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
+        |b AS (SELECT doc_id, tk,
+        |        CASE WHEN len(tk) <= 16 THEN 0 ELSE CAST(floor((len(tk)-17)/48.0) AS INT) END AS last_chunk
+        |      FROM t WHERE len(tk) > 0),
+        |c AS (SELECT doc_id, unnest(generate_series(0, last_chunk)) AS chunk_id, tk, len(tk) AS n FROM b)
+        |SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
+        |  CAST(least(64, n - chunk_id*48) AS BIGINT) AS n_chunk_tokens,
+        |  md5(array_to_string(list_slice(tk, chunk_id*48 + 1, chunk_id*48 + 64), ' ')) AS chunk_hash
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin),
+    query("text_pack_bins", (s, dir) =>
+      TextAnalysis.packIntoBins(table(s, dir, "documents"), 2048),
+      """WITH t AS (SELECT lang AS shard, doc_id,
+        |  CAST(len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS BIGINT) AS n_tokens FROM documents),
+        |o AS (SELECT shard, doc_id, n_tokens,
+        |  CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS BIGINT) AS start_offset FROM t)
+        |SELECT shard, doc_id, n_tokens, start_offset,
+        |  CAST(floor(start_offset/2048.0) AS BIGINT) AS bin_id
+        |FROM o ORDER BY shard, doc_id""".stripMargin),
+    // sketch values are Spark-deterministic but engine-specific => rows-only;
+    // SketchSpec bounds approx-vs-exact error.
+    rowsOnly("sketch_distinct_parts", (s, dir) =>
+      Sketches.distinctPartsPerFlag(table(s, dir, "lineitem"))),
+    rowsOnly("sketch_price_quantiles", (s, dir) =>
+      Sketches.priceQuantilesPerPriority(table(s, dir, "orders"))),
+    // count-min sketch with md5-derived hashes: the ONE sketch the oracle
+    // can verify bit-for-bit (pure integer arithmetic in both engines)
+    query("sketch_cms_topk", (s, dir) =>
+      Sketches.cmsTermCounts(table(s, dir, "documents")),
+      cmsOracleSql),
+    // sketch mergeability: union of per-shard HLL sketches answers the
+    // global distinct within bound — asserted as oracled booleans
+    query("sketch_hll_merge", (s, dir) =>
+      Sketches.hllMergeReport(table(s, dir, "lineitem")),
+      // the booleans are computed properties on the Spark side; the oracle
+      // asserts them as literals plus the exact distinct count
+      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_exact,
+        |  TRUE AS direct_within_5pct, TRUE AS merged_within_5pct
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // KMV bottom-k sketch: like CMS, md5-derived and therefore fully
+    // oracle-checkable — the one cardinality sketch DuckDB replays
+    // bit-for-bit (k smallest distinct hashes + one double division)
+    query("sketch_kmv_vocab", (s, dir) =>
+      Sketches.kmvVocabulary(table(s, dir, "documents")),
+      kmvVocabOracleSql),
+    // sketch SET ALGEBRA: pairwise source-vocabulary overlap estimated
+    // from the k-row sketches alone (union re-take + rho), with the
+    // exact intersection as the judged evaluation arm
+    query("sketch_kmv_overlap", (s, dir) =>
+      Sketches.kmvSourceOverlap(table(s, dir, "documents")),
+      kmvOverlapOracleSql),
+    // Misra-Gries bound-then-verify: the sub-linear heavy-hitters path
+    // whose exact-recount second pass makes the result EXACT, so the
+    // oracle is the plain HAVING definition with no MG logic (pruning
+    // invisible — the bm25_wand standing)
+    query("sketch_heavy_hitters", (s, dir) =>
+      Sketches.heavyHitterTerms(table(s, dir, "documents")),
+      heavyHittersOracleSql),
 
-    // ASCII corpus (verified): char positions == byte positions, so
-    // DuckDB's VARCHAR substr mirrors Spark's BINARY substring.
-    // BYTE-true replay: the payload is encode(text) — UTF-8 BYTES, not
-    // chars (unicode text has more bytes than chars; the edge-fixture
-    // `unicode` gate). DuckDB can't substring a BLOB, so every byte slice
-    // is a slice of hex(encode(text)) at 2 hex chars per byte — md5(text)
-    // already hashes the UTF-8 bytes, matching Spark's md5(binary).
-    "mm_meta" ->
+    // ---- multimodal binary-column plumbing (north star) ----
+    query("mm_meta", (s, dir) =>
+      Multimodal.metaExtract(Multimodal.fromDocuments(table(s, dir, "documents"))),
+      // ASCII corpus (verified): char positions == byte positions, so
+      // DuckDB's VARCHAR substr mirrors Spark's BINARY substring.
+      // BYTE-true replay: the payload is encode(text) — UTF-8 BYTES, not
+      // chars (unicode text has more bytes than chars; the edge-fixture
+      // `unicode` gate). DuckDB can't substring a BLOB, so every byte slice
+      // is a slice of hex(encode(text)) at 2 hex chars per byte — md5(text)
+      // already hashes the UTF-8 bytes, matching Spark's md5(binary).
       """WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS blen,
         |  hex(encode(text)) AS h, text FROM documents)
         |SELECT media_id, 'text' AS modality, CAST(blen AS BIGINT) AS n_bytes,
         |  md5(text) AS content_hash, substring(h, 1, 16) AS magic_prefix
-        |FROM m ORDER BY media_id""".stripMargin,
-    // even-stride byte sampling: position i reads byte floor(i*blen/32)+1
-    "mm_resize" ->
+        |FROM m ORDER BY media_id""".stripMargin),
+    query("mm_resize", (s, dir) =>
+      Multimodal.resizeStub(Multimodal.fromDocuments(table(s, dir, "documents")), 32),
+      // even-stride byte sampling: position i reads byte floor(i*blen/32)+1
       """WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS blen,
         |  hex(encode(text)) AS h FROM documents)
         |SELECT media_id, 'text' AS modality, CAST(blen AS BIGINT) AS n_bytes,
         |  array_to_string(list_transform(generate_series(0, 31),
         |    i -> substring(h, 2*CAST(floor(i*blen/32) AS INT) + 1, 2)), '') AS resized_hex
-        |FROM m ORDER BY media_id""".stripMargin,
-    "mm_frame_sample" ->
+        |FROM m ORDER BY media_id""".stripMargin),
+    // frame emitted as hex STRING (like mm_meta's magic_prefix): the
+    // driver's pandas compare cannot sort raw BINARY cells.
+    query("mm_frame_sample", (s, dir) =>
+      Multimodal.sampleFrames(Multimodal.fromDocuments(table(s, dir, "documents")), 16, 4)
+        .select(col("media_id"), col("frame_idx"),
+          hex(col("frame")).as("frame"), col("frame_bytes"))
+        .orderBy("media_id", "frame_idx"),
       """WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS blen,
         |  hex(encode(text)) AS h FROM documents),
         |f AS (SELECT media_id, blen, h,
@@ -4785,14 +4450,24 @@ object SparkEntry {
         |SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
         |  substring(h, frame_idx*128 + 1, 32) AS frame,
         |  CAST(length(substring(h, frame_idx*128 + 1, 32)) // 2 AS BIGINT) AS frame_bytes
-        |FROM f ORDER BY media_id, frame_idx""".stripMargin,
-    // independent byte-level replay: re-assemble the same image hex, cut
-    // it into per-position bytes (unnest over range), group to the exact
-    // 256-bucket histogram, and recompute entropy = -sum((c/n)*ln(c/n))
-    // and the nibble counts in SQL. width/height come from the corpus
-    // formulas — ground truth the Spark side must RECOVER from the bytes
-    // (decode inverts encode; the independent parse is mm_image_meta).
-    "mm_features" -> {
+        |FROM f ORDER BY media_id, frame_idx""".stripMargin),
+    // REAL features (the round-4 stub graduation): one codegen pass over
+    // the synthetic image corpus's actual bytes computes the 256-bucket
+    // byte histogram -> Shannon entropy + high-nibble counts h0..h15,
+    // while graft_image_dims parses width/height from the container
+    // header. The oracle re-assembles the identical hex, explodes it to
+    // bytes, and recomputes every count and the entropy sum in SQL — both
+    // engines derive the numbers from the same real payload bytes.
+    query("mm_features", (s, dir) =>
+      Multimodal.imageFeatures(
+        Multimodal.syntheticImageCorpus(table(s, dir, "documents"))),
+      // independent byte-level replay: re-assemble the same image hex, cut
+      // it into per-position bytes (unnest over range), group to the exact
+      // 256-bucket histogram, and recompute entropy = -sum((c/n)*ln(c/n))
+      // and the nibble counts in SQL. width/height come from the corpus
+      // formulas — ground truth the Spark side must RECOVER from the bytes
+      // (decode inverts encode; the independent parse is mm_image_meta).
+      {
       val hs = (0 until 16).map(i =>
         s"CAST(coalesce(sum(c) FILTER (WHERE b // 16 = $i), 0) AS BIGINT) AS h$i")
         .mkString(",\n|    ")
@@ -4836,12 +4511,20 @@ object SparkEntry {
          |  ${(0 until 16).map(i => s"h$i").mkString(", ")}
          |FROM stats JOIN tot USING (media_id) JOIN base USING (media_id)
          |ORDER BY media_id""".stripMargin
-    },
-    // independent byte-level parse: build the same hex, read PNG IHDR at
-    // fixed offsets, walk JPEG marker segments with a recursive CTE (byte
-    // b lives at hex chars 2b+1..2b+2; lengths/dims are big-endian ints
-    // via '0x…' casts). The walk's last row is the SOFn frame header.
-    "mm_image_meta" ->
+    }),
+    // REAL decode (no stub): header-valid PNG/JPEG binaries are assembled
+    // from doc fields with column ops, then the codegen graft_image_dims
+    // expression parses dimensions back out of the BYTES (PNG IHDR read;
+    // JPEG marker-segment walk past a per-row variable-length COM). The
+    // oracle re-assembles the same hex and parses it independently in SQL
+    // (recursive-CTE segment walk) — both engines decode actual bytes.
+    query("mm_image_meta", (s, dir) =>
+      Multimodal.imageMeta(
+        Multimodal.syntheticImageCorpus(table(s, dir, "documents"))),
+      // independent byte-level parse: build the same hex, read PNG IHDR at
+      // fixed offsets, walk JPEG marker segments with a recursive CTE (byte
+      // b lives at hex chars 2b+1..2b+2; lengths/dims are big-endian ints
+      // via '0x…' casts). The walk's last row is the SOFn frame header.
       """WITH RECURSIVE base AS (
         |  SELECT doc_id AS media_id, doc_id % 2 = 0 AS is_png,
         |         CAST(doc_id % 509 + 16 AS INT) AS w,
@@ -4897,13 +4580,22 @@ object SparkEntry {
         |    AND substring(hx, 25, 8) = '49484452')
         |SELECT media_id, format, width, height, bit_depth
         |FROM (SELECT * FROM png UNION ALL SELECT * FROM jpeg)
-        |ORDER BY media_id""".stripMargin,
-    // independent byte-level parse: re-assemble the same WAV hex, then a
-    // recursive-CTE RIFF chunk walk (advance = 8 + size + size%2 — the
-    // even-boundary pad rule) locates `fmt ` and `data`; all multi-byte
-    // fields are LITTLE-endian, read as positional byte sums. Durations
-    // are exact integer divisions on both engines.
-    "mm_audio_meta" -> {
+        |ORDER BY media_id""".stripMargin),
+    // REAL audio decode: header-valid WAV binaries (RIFF envelope, a
+    // variable-length LIST chunk with the odd-size pad rule, PCM fmt,
+    // data) assembled from doc fields, then the codegen graft_audio_meta
+    // expression walks the chunk list and recovers the PCM params +
+    // duration from the BYTES. The oracle re-assembles the same hex and
+    // walks it independently (recursive-CTE chunk walk, LE reads).
+    query("mm_audio_meta", (s, dir) =>
+      Multimodal.audioMeta(
+        Multimodal.syntheticAudioCorpus(table(s, dir, "documents"))),
+      // independent byte-level parse: re-assemble the same WAV hex, then a
+      // recursive-CTE RIFF chunk walk (advance = 8 + size + size%2 — the
+      // even-boundary pad rule) locates `fmt ` and `data`; all multi-byte
+      // fields are LITTLE-endian, read as positional byte sums. Durations
+      // are exact integer divisions on both engines.
+      {
       // LE u{16,32} read at byte offset `pos` of the hex string `hx`
       def le(pos: String, n: Int): String =
         (0 until n).map(i =>
@@ -4960,12 +4652,19 @@ object SparkEntry {
          |  CAST((data_size // blk) * 1000 // rate AS BIGINT) AS duration_ms
          |FROM fmtc JOIN datac USING (media_id)
          |ORDER BY media_id""".stripMargin
-    },
-    // independent byte-level parse: re-assemble the same MP4 hex, walk the
-    // top-level box list with a recursive CTE (64-bit largesize honored
-    // when size == 1), then walk moov's children for mvhd (v0/v1 field
-    // layouts) and the trak count. All reads are big-endian '0x' casts.
-    "mm_video_meta" -> {
+    }),
+    // REAL video decode: structure-valid MP4 binaries (ftyp, a free box
+    // that uses a 64-bit largesize on every 5th row, moov with mvhd v0/v1
+    // + 1..3 trak stubs), parsed back by the codegen graft_video_meta box
+    // walk. The oracle walks the same bytes with recursive CTEs.
+    query("mm_video_meta", (s, dir) =>
+      Multimodal.videoMeta(
+        Multimodal.syntheticVideoCorpus(table(s, dir, "documents"))),
+      // independent byte-level parse: re-assemble the same MP4 hex, walk the
+      // top-level box list with a recursive CTE (64-bit largesize honored
+      // when size == 1), then walk moov's children for mvhd (v0/v1 field
+      // layouts) and the trak count. All reads are big-endian '0x' casts.
+      {
       def be(pos: String, nBytes: Int): String =
         s"CAST('0x' || substring(hx, CAST(2*($pos) + 1 AS INT), ${2 * nBytes}) AS BIGINT)"
       s"""WITH RECURSIVE base AS (
@@ -5032,45 +4731,70 @@ object SparkEntry {
          |  CAST(duration * 1000 // timescale AS BIGINT) AS duration_ms, n_tracks
          |FROM mvhd JOIN trakc USING (media_id) JOIN brand USING (media_id)
          |ORDER BY media_id""".stripMargin
-    },
-    "samp_seeded" ->
+    }),
+
+    // ---- corpus sampling + stored-index serving (round-2 additions) ----
+    // S3 replacement: seeded deterministic sample — stable under partition
+    // layout (unlike df.sample) and engine-portable (md5 order).
+    query("samp_seeded", (s, dir) =>
+      Sampling.deterministicSample(table(s, dir, "documents"), "doc_id", 100, 42)
+        .select("doc_id", "sample_key"),
       """SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':42') AS sample_key
-        |FROM documents ORDER BY sample_key, doc_id LIMIT 100""".stripMargin,
-    "samp_stratified" ->
+        |FROM documents ORDER BY sample_key, doc_id LIMIT 100""".stripMargin),
+    // corpus balancing: 10 docs per language in seeded-hash order
+    query("samp_stratified", (s, dir) =>
+      Sampling.stratifiedSample(table(s, dir, "documents"), "lang", "doc_id", 10, 42)
+        .select(col("lang"), col("doc_id"), col("sample_rank"))
+        .orderBy("lang", "sample_rank"),
       """WITH k AS (SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR) || ':42') AS sk FROM documents),
         |r AS (SELECT lang, doc_id,
         |        CAST(row_number() OVER (PARTITION BY lang ORDER BY sk, doc_id) AS INT) AS sample_rank
         |      FROM k)
         |SELECT lang, doc_id, sample_rank FROM r WHERE sample_rank <= 10
-        |ORDER BY lang, sample_rank""".stripMargin,
-    "samp_balanced" ->
+        |ORDER BY lang, sample_rank""".stripMargin),
+    // class-parity rebalance: every language downsampled to the smallest
+    // language's count, seeded md5 order, floor = one broadcast row
+    query("samp_balanced", (s, dir) =>
+      Sampling.balancedSample(table(s, dir, "documents"), "lang", "doc_id", 17)
+        .select(col("lang"), col("doc_id"))
+        .orderBy("lang", "doc_id"),
       """WITH c AS (SELECT min(n) AS fl FROM (SELECT lang, count(*) AS n FROM documents GROUP BY lang)),
         |r AS (SELECT lang, doc_id,
         |        row_number() OVER (PARTITION BY lang
         |          ORDER BY md5(CAST(doc_id AS VARCHAR) || ':17'), doc_id) AS rn
         |      FROM documents)
         |SELECT lang, doc_id FROM r CROSS JOIN c WHERE rn <= fl
-        |ORDER BY lang, doc_id""".stripMargin,
-    "sketch_cms_topk" -> cmsOracleSql,
-    // the booleans are computed properties on the Spark side; the oracle
-    // asserts them as literals plus the exact distinct count
-    "sketch_hll_merge" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_exact,
-        |  TRUE AS direct_within_5pct, TRUE AS merged_within_5pct
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "samp_hash_split" -> hashSplitOracleSql,
-    // same A-ES ranking: u = (hex8(md5)+1)/2^32 exactly, ln-monotone key;
-    // only the selected set is compared (see the query declaration)
-    "samp_weighted" ->
+        |ORDER BY lang, doc_id""".stripMargin),
+    // leakage-safe deterministic train/val/test split: membership is a
+    // pure function of (doc_id, seed) — appends never reshuffle old docs
+    query("samp_hash_split", (s, dir) =>
+      Sampling.hashSplit(table(s, dir, "documents"), "doc_id")
+        .select("doc_id", "split").orderBy("doc_id"),
+      hashSplitOracleSql),
+    // importance sampling (A-ES): selection odds proportional to doc
+    // length; output is the selected SET (ordered by id), so key VALUES
+    // never enter the compare — only rank-boundary order does, where
+    // adjacent-key gaps (~1/n) dwarf ln()'s 1-ulp cross-engine noise
+    // (see the weightedSample scaladoc for the full argument)
+    query("samp_weighted", (s, dir) =>
+      Sampling.weightedSample(table(s, dir, "documents"), "doc_id", "n_chars", 50, 42)
+        .select("doc_id", "n_chars").orderBy("doc_id"),
+      // same A-ES ranking: u = (hex8(md5)+1)/2^32 exactly, ln-monotone key;
+      // only the selected set is compared (see the query declaration)
       """WITH k AS (SELECT doc_id, n_chars,
         |  ln((('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8))::BIGINT + 1.0) / 4294967296.0)
         |    / CAST(n_chars AS DOUBLE) AS aes_key
         |  FROM documents WHERE n_chars > 0),
         |s AS (SELECT doc_id, n_chars FROM k ORDER BY aes_key DESC, doc_id LIMIT 50)
-        |SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM s ORDER BY doc_id""".stripMargin,
-    // grouped A-Res: the same ln-monotone key ranked PER LANGUAGE; the
-    // declared set-compare (no key, no rank) is the samp_weighted argument
-    "samp_reservoir" ->
+        |SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM s ORDER BY doc_id""".stripMargin),
+    // per-group weighted reservoir (A-Res): 5 length-weighted docs per
+    // language — the set-compare discipline of samp_weighted, per group
+    query("samp_reservoir", (s, dir) =>
+      Sampling.groupedWeightedSample(table(s, dir, "documents"), "lang",
+          "doc_id", "n_chars", 5, 42)
+        .select("lang", "doc_id", "n_chars").orderBy("lang", "doc_id"),
+      // grouped A-Res: the same ln-monotone key ranked PER LANGUAGE; the
+      // declared set-compare (no key, no rank) is the samp_weighted argument
       """WITH k AS (SELECT lang, doc_id, n_chars,
         |  ln((('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8))::BIGINT + 1.0) / 4294967296.0)
         |    / CAST(n_chars AS DOUBLE) AS aes_key
@@ -5079,11 +4803,16 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY lang ORDER BY aes_key DESC, doc_id) AS rn
         |  FROM k)
         |SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS n_chars
-        |FROM r WHERE rn <= 5 ORDER BY lang, doc_id""".stripMargin,
-    // same md5-uniform draw through the same interpolated inverse-CDF
-    // ladder (Double.toString literals parse to the identical IEEE
-    // double in both engines); k*revenue stays decimal until the end
-    "samp_poisson_bootstrap" -> {
+        |FROM r WHERE rn <= 5 ORDER BY lang, doc_id""".stripMargin),
+    // Poisson bootstrap (the scalable bootstrap): md5-deterministic
+    // Poisson(1) replicate weights -> exactly replayable resampled
+    // aggregates; one scan, 3x fan-out, decimal-exact weighted sums
+    query("samp_poisson_bootstrap", (s, dir) =>
+      Sampling.poissonBootstrap(table(s, dir, "lineitem")),
+      // same md5-uniform draw through the same interpolated inverse-CDF
+      // ladder (Double.toString literals parse to the identical IEEE
+      // double in both engines); k*revenue stays decimal until the end
+      {
       import graft.sources.Sampling.PoissonCum
       val ladder = PoissonCum.zipWithIndex
         .map { case (c, i) => s"WHEN u < $c THEN ${i}::BIGINT" }
@@ -5099,13 +4828,28 @@ object SparkEntry {
         |SELECT l_returnflag, replica, CAST(sum(k) AS BIGINT) AS boot_rows,
         |  CAST(sum(k * rev) AS DOUBLE) AS boot_revenue
         |FROM k GROUP BY 1, 2 ORDER BY l_returnflag, replica""".stripMargin
-    },
-    "bm25_stored" -> bm25OracleSql("('spark','join','window')"),
-    "bm25_multi_stored" -> bm25MultiOracleSql,
-    // BM25 over the phrase terms (same CTEs as bm25OracleSql) left-joined
-    // to the phrase-occurrence replay (same chain as idx_phrase_stored);
-    // boost multiplies the UNROUNDED sum, then one final round(4)
-    "bm25_phrase_boost" ->
+    }),
+    // The serving path: build the bucketed parquet index, then search it
+    // with partition pruning to the query terms' buckets. The oracle
+    // recomputes the same statistics from raw text — stored-vs-recompute
+    // equality IS the correctness claim.
+    stored("bm25_stored", (s, idx) =>
+      BM25.searchStored(s, idx, FlagshipQuery),
+      bm25OracleSql("('spark','join','window')")),
+    // The batch serving path: one pruned postings scan amortized over the
+    // whole query workload. Same oracle as bm25_multi — stored ≡ recompute
+    // is again the correctness claim.
+    stored("bm25_multi_stored", (s, idx) =>
+      BM25.searchManyStored(s, idx,
+        Seq((1L, "spark join window"), (2L, "batch stream"))),
+      bm25MultiOracleSql),
+    // phrase-aware ranking: BM25 over the phrase's terms + exact-phrase
+    // boost from the positional table, both served from the same store
+    stored("bm25_phrase_boost", (s, idx) =>
+      BM25.searchStoredPhraseBoosted(s, idx, "row column sort"),
+      // BM25 over the phrase terms (same CTEs as bm25OracleSql) left-joined
+      // to the phrase-occurrence replay (same chain as idx_phrase_stored);
+      // boost multiplies the UNROUNDED sum, then one final round(4)
       """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+')) AS term FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok WHERE term IN ('row','column','sort') GROUP BY doc_id, term),
         |dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok WHERE term IN ('row','column','sort') GROUP BY term),
@@ -5128,8 +4872,43 @@ object SparkEntry {
         |  round(s.score * (1.0 + 0.5 * ln(1.0 + COALESCE(ph.n_occ, 0))), 4) AS doc_rank,
         |  CAST(COALESCE(ph.n_occ, 0) AS BIGINT) AS n_phrase
         |FROM scored s LEFT JOIN ph USING (doc_id)
-        |ORDER BY doc_rank DESC, doc_id LIMIT 10""".stripMargin,
-  )
+        |ORDER BY doc_rank DESC, doc_id LIMIT 10""".stripMargin),
+  ))
+
+  private def distinctNames(qs: Seq[Q]): Seq[Q] = {
+    val repeated = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(repeated.isEmpty, s"queries declared twice: ${repeated.mkString(", ")}")
+    qs
+  }
+
+  lazy val queries: Map[String, Plan] = registry.map(q => q.name -> q.plan).toMap
+
+  /** DuckDB-runnable oracle SQL, one per oracle-backed query, same column names. */
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Serve-only twins of the stored queries: byte-identical serving plans
+    * (same functions, same store path), minus the inline build. */
+  lazy val servedQueries: Map[String, Plan] =
+    registry.flatMap(q => q.served.map(q.name -> _)).toMap
+
+  /** One shared index build for Bench: the five stored queries each
+    * include a full `IndexStore.write` so the correctness gate proves
+    * stored ≡ recompute, but benchmarking that way rebuilds the same index
+    * five times and hides the serving latency the stored path exists to
+    * demonstrate. Bench times this once (reported as `idx_store_build`)
+    * and then times `servedQueries` serve-only. Verify keeps using
+    * `queries` — the inline build IS the correctness claim there. */
+  def buildIndexStore(s: SparkSession, dir: String): Unit =
+    IndexStore.write(table(s, dir, "documents"), indexPath(s, dir))
+
+  /** Per-(app, sfDir) temp index path — applicationId keeps concurrent
+    * harness runs on the same sfDir from clobbering each other's files. */
+  private def indexPath(s: SparkSession, dir: String): String =
+    java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"),
+      "graft_index_" + s.sparkContext.applicationId +
+        "_" + Integer.toHexString(dir.hashCode)).toString
 
   /** sketch_cms_topk oracle — the full CMS replay (same md5 hash family,
     * width, depth, top-k and min-fold), every parameter derived from the

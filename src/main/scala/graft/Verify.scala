@@ -32,15 +32,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // keys sorted: two dumps compare byte for byte with a plain `cmp`
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // The surface count, GENERATED — docs quote this line, never a
     // hand-maintained number (round-6 verdict: prose drifted to 277/272
     // while every artifact said 275/270).
     println(s"[verify] declared=${SparkEntry.queries.size}" +
-      s" oracle_backed=${SparkEntry.oracleSql.keySet
-        .intersect(SparkEntry.queries.keySet).size}")
+      s" oracle_backed=${SparkEntry.registry.count(_.oracle.isDefined)}")
     spark.stop()
   }
 }

@@ -5,6 +5,7 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.AtomicStore
 
 /** Persisted inverted index — the engine-native replacement for the
   * reference's four Cassandra tables (app/cassandra/schema.cql:5-32).
@@ -99,12 +100,12 @@ object IndexStore {
     * (key, partial) pairs; df/dl/corpus stats re-derive from the merged
     * tables, never from old text.
     *
-    * Write-then-swap at the index root: the merge READS the tables it
-    * replaces, so everything materializes into a sibling `.next` dir first,
-    * then two checked renames swap it live (single-writer posix-rename
-    * assumption, same as incrementalIndexWriter; a transactional table
-    * format replaces the swap on a real cluster). Crash between the
-    * renames leaves `<dir>.old` complete — rename it back to recover. */
+    * Write-then-swap at the index root (`AtomicStore`, same as
+    * incrementalIndexWriter): the merge READS the tables it replaces, so
+    * everything materializes into the sibling `.<name>.next` dir first,
+    * then two checked renames swap it live. Crash between the renames
+    * leaves the sibling `.<name>.old` complete — rename it back to
+    * `<name>` to recover. */
   def ingest(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
     // A re-ingested doc_id would SUM its stored tf with the new tf and
@@ -129,28 +130,14 @@ object IndexStore {
         Some(positional(spark, dir).drop("term_bucket")
           .unionByName(InvertedIndex.positionalPostings(newDocs)))
       else None
-    val cur = new java.io.File(dir)
-    val old = new java.io.File(s"$dir.old")
-    val tmp = new java.io.File(s"$dir.next")
+    val store = new java.io.File(dir).getAbsoluteFile
+    val p = AtomicStore.paths(store.getParent, store.getName)
+    if (p.tmp.exists()) AtomicStore.delete(p.tmp) // partial, from a crashed ingest
     // keep the STORE's bucketing, not the caller's default — re-bucketing
     // on ingest would strand the existing postings files
-    writeTables(mergedTf, mergedInfo, mergedPos, tmp.getPath,
+    writeTables(mergedTf, mergedInfo, mergedPos, p.tmp.getPath,
       storedBuckets(spark, dir))
-    def rename(from: java.io.File, to: java.io.File): Unit =
-      require(from.renameTo(to), s"IndexStore.ingest: rename $from -> $to failed")
-    if (old.exists()) delete(old)
-    rename(cur, old)
-    rename(tmp, cur)
-    delete(old)
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    // listFiles is null on I/O error or a concurrently-removed dir; a
-    // silently-failed delete would surface later as an inexplicable rename
-    // failure mid-swap — fail at the actual cause instead
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(delete)
-    if (f.exists() && !f.delete())
-      throw new java.io.IOException(s"IndexStore: failed to delete $f")
+    AtomicStore.promote(p, Some(p.cur), "IndexStore.ingest")
   }
 
   // Explicit read schemas: a ZERO-TOKEN corpus writes partitioned tables

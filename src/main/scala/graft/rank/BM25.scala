@@ -23,12 +23,15 @@ import graft.index.{IndexStore, InvertedIndex}
   */
 object BM25 {
 
+  /** The reference's `set(query.split())` (SURVEY T6): lowercase, split on
+    * whitespace, drop empties, dedup in first-seen order. */
+  private def queryTerms(query: String): Seq[String] =
+    query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+
   def search(spark: SparkSession, docs: DataFrame, query: String,
              k1: Double = 1.0, b: Double = 0.75, topK: Int = 10): DataFrame = {
     import spark.implicits._
-    // T6: whitespace split + dedup + lowercase of the query string.
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    val qTerms = terms.toSeq.toDF("term")
+    val qTerms = queryTerms(query).toDF("term")
 
     // ONE tokenize pass feeds tf; df and dl derive from tf by
     // re-aggregation (the corpus text scan is the scale-dominant cost —
@@ -60,8 +63,7 @@ object BM25 {
                       m: Int = 10, k1: Double = 1.0, b: Double = 0.75,
                       topK: Int = 10): DataFrame = {
     import spark.implicits._
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    val qTerms = terms.toSeq.toDF("term")
+    val qTerms = queryTerms(query).toDF("term")
     val tf = InvertedIndex.termFrequency(docs)
     val dfreq = InvertedIndex.docFrequencyFromTf(tf)
     val dl = InvertedIndex.docLengthFromTf(tf)
@@ -103,8 +105,7 @@ object BM25 {
                  k1: Double = 1.0, b: Double = 0.75,
                  topK: Int = 10): DataFrame = {
     import spark.implicits._
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    val qTerms = terms.toSeq.toDF("term")
+    val qTerms = queryTerms(query).toDF("term")
     val tfAll = InvertedIndex.termFrequency(docs)
     val tf = tfAll.join(broadcast(qTerms), Seq("term")).localCheckpoint(true)
     val qdf = InvertedIndex.docFrequencyFromTf(tf)
@@ -170,8 +171,7 @@ object BM25 {
                      k1: Double = 1.0, b: Double = 0.75,
                      topK: Int = 10): DataFrame = {
     import spark.implicits._
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    val qTerms = terms.toSeq.toDF("term")
+    val qTerms = queryTerms(query).toDF("term")
     val tfAll = InvertedIndex.termFrequency(docs)
     val tf = tfAll.join(broadcast(qTerms), Seq("term")).localCheckpoint(true)
     val qdf = InvertedIndex.docFrequencyFromTf(tf)
@@ -237,7 +237,7 @@ object BM25 {
   def searchStored(spark: SparkSession, indexDir: String, query: String,
                    k1: Double = 1.0, b: Double = 0.75,
                    topK: Int = 10): DataFrame = {
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+    val terms = queryTerms(query)
     val buckets = IndexStore.storedBuckets(spark, indexDir)
     val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
       .drop("term_bucket")
@@ -307,8 +307,7 @@ object BM25 {
                               k1: Double, b: Double)
       : (Seq[String], DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty)
-      .distinct.toSeq
+    val terms = queryTerms(query)
     val tf = InvertedIndex.termFrequency(docs).localCheckpoint(true)
     val dl = InvertedIndex.docLengthFromTf(tf)
     val stats = InvertedIndex.corpusInfo(docs)
@@ -453,7 +452,7 @@ object BM25 {
                        b: Double = 0.75, topK: Int = 10): DataFrame = {
     import spark.implicits._
     val qTerms = queries.flatMap { case (qid, q) =>
-      q.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.map((qid, _))
+      queryTerms(q).map((qid, _))
     }
     val terms = qTerms.map(_._2).distinct
     val buckets = IndexStore.storedBuckets(spark, indexDir)
@@ -504,14 +503,14 @@ object BM25 {
                      window: Int = 15, topK: Int = 10): DataFrame = {
     val top = search(spark, docs, query, topK = topK)
       .select("doc_id", "doc_rank")
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
+    val terms = queryTerms(query)
     val toks = docs.join(broadcast(top), Seq("doc_id"))
       .select(col("doc_id"), col("doc_rank"),
         graft.text.Tokenize.tokens(col("text")).as("tk"))
       .localCheckpoint(true) // feeds hits AND the final slice (k rows)
     val hits = toks
       .select(col("doc_id"), posexplode(col("tk")).as(Seq("p0", "term")))
-      .filter(col("term").isin(terms.toSeq: _*))
+      .filter(col("term").isin(terms: _*))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("term"))
     val wins = hits.as("a").join(hits.as("b"),
         col("a.doc_id") === col("b.doc_id") &&
@@ -544,8 +543,7 @@ object BM25 {
   def spellSuggest(spark: SparkSession, docs: DataFrame, query: String,
                    maxDist: Int = 2, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val terms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    val qt = terms.toSeq.toDF("query_term")
+    val qt = queryTerms(query).toDF("query_term")
     val vocab = InvertedIndex.docFrequency(docs)
     val cand = vocab.join(broadcast(qt),
         abs(length(col("term")) - length(col("query_term"))) <= maxDist)
@@ -580,8 +578,7 @@ object BM25 {
                    maxExpand: Int = 50, k1: Double = 1.0, b: Double = 0.75,
                    topK: Int = 10): DataFrame = {
     import spark.implicits._
-    val prefixes = query.toLowerCase.split("\\s+").filter(_.nonEmpty)
-      .distinct.toSeq.toDF("prefix")
+    val prefixes = queryTerms(query).toDF("prefix")
     val tf = InvertedIndex.termFrequency(docs)
     val dfreq = InvertedIndex.docFrequencyFromTf(tf)
     val dl = InvertedIndex.docLengthFromTf(tf)

@@ -1,13 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.types._
 
 /** Driver-contract invariants over the WHOLE declared surface — the
   * regression classes that broke rounds before they broke queries:
   * the correctness checker sorts result columns via pandas, so any
-  * ARRAY/BINARY/STRUCT/MAP cell crashes it (round-1 failure mode), and an
-  * oracle entry without a matching query (or vice versa where one is
-  * required) silently downgrades the gate. */
+  * ARRAY/BINARY/STRUCT/MAP cell crashes it (round-1 failure mode), and a
+  * query without an oracle silently downgrades the gate. */
 class ContractSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -26,9 +27,14 @@ class ContractSpec extends SparkSpec {
       s"non-scalar declared outputs crash the checker: ${offenders.mkString(", ")}")
   }
 
-  test("every oracle entry names a declared query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
+  test("each declared query is declared once") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct == names, s"repeated: ${names.diff(names.distinct)}")
+    // source pin: a second literal of a name is a parallel map growing back
+    val src = Files.readString(Paths.get("src/main/scala/graft/SparkEntry.scala"))
+    val repeated = names.filter(n => ("\"" + n + "\"").r.findAllIn(src).size != 1)
+    assert(repeated.isEmpty,
+      s"query names not spelled exactly once in SparkEntry.scala: $repeated")
   }
 
   test("rows-only queries (no oracle) are the documented hash-typed five") {

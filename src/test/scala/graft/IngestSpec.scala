@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.index.{IndexStore, InvertedIndex}
 import graft.rank.BM25
-import graft.sources.Sources
+import graft.sources.{AtomicStore, Sources}
 
 /** Single-file ingest (app/index.sh:21-41 conventions) folded into a stored
   * index must equal a full recompute that includes the new doc. */
@@ -77,5 +77,24 @@ class IngestSpec extends SparkSpec {
     val phr = Search.runPhrase(spark, dir, "window window")
       .as[(Long, Long)].collect().toMap
     assert(phr.get(999998L).contains(2L))
+  }
+
+  test("ingest clears the leftovers of an earlier crashed swap") {
+    val parent = Files.createTempDirectory("graft-ingest-stale")
+    val dir = parent.resolve("index").toString
+    IndexStore.write(table(spark, "/root/testdata/sf0.001", "documents"), dir)
+    // an earlier swap died after its second rename, before deleting `old`;
+    // another died mid-write, leaving a partial `tmp`
+    val p = AtomicStore.paths(parent.toString, "index")
+    Files.createDirectories(p.old.toPath.resolve("term_frequency_in_doc"))
+    Files.writeString(p.old.toPath.resolve("term_frequency_in_doc/part-0"), "x")
+    Files.createDirectories(p.tmp.toPath)
+    Files.writeString(p.tmp.toPath.resolve("partial"), "x")
+    IndexStore.ingest(Seq((900002L, "zzzgamma zzzdelta")).toDF("doc_id", "text"),
+      dir)
+    assert(parent.toFile.list().toSet == Set("index"))
+    assert(!new java.io.File(dir, "partial").exists())
+    assert(IndexStore.phraseMatchStored(spark, dir, "zzzgamma zzzdelta")
+      .as[(Long, Long)].collect().toSeq == Seq((900002L, 1L)))
   }
 }
