@@ -300,13 +300,21 @@ object Dedup {
     * exact integer counts either way. */
   val DefaultPrefixMinJaccard = 0.5
 
-  /** Candidate-pair bound under which the prefix-jaccard verify
-    * broadcasts its (candidate-doc-bounded) array table instead of
-    * shuffle-hash-joining it — the PHashBroadcastMaxMedia pattern: a
-    * corpus big enough to matter blows past the bound and never
-    * broadcasts. Empirical: 2M pairs ≈ tens of MB of arrays on this
-    * corpus family, far under the 8 GiB broadcast cap. */
-  val PrefixBroadcastMaxPairs = 2000000L
+  /** Byte bound under which the prefix-jaccard verify broadcasts its
+    * (candidate-doc-bounded) array table instead of shuffle-hash-joining
+    * it. The table's bytes scale with the candidate docs' LENGTH, not
+    * with the pair count, so the gate reads the bytes of the checkpointed
+    * arrays: 8 per shingle hash plus [[PrefixArrayRowBytes]] per rep. A
+    * corpus big enough to matter, or one of long documents, blows past
+    * the bound and never broadcasts. 64 MiB keeps the old gate's
+    * decision on this corpus family (2M candidate pairs ≈ tens of MB of
+    * arrays), far under the 8 GiB broadcast cap. */
+  val PrefixBroadcastMaxBytes = 64L << 20
+
+  /** Fixed UnsafeRow bytes of one (rep, hs) array row: null bitset, the
+    * rep long, the array's offset word, the array header and its
+    * (at least one word of) null bits. */
+  private val PrefixArrayRowBytes = 40L
 
   /** EXACT Jaccard >= t pairs via prefix filtering (SSJoin, Chaudhuri et
     * al. ICDE'06; PPJoin, Xiao et al. WWW'08) — same answer as an exact
@@ -366,14 +374,14 @@ object Dedup {
     * the unrestricted index self-join. */
   def prefixJaccardPairs(docs: DataFrame, n: Int = 3,
                          minJaccard: Double = DefaultPrefixMinJaccard): DataFrame =
-    prefixJaccardPairs(docs, n, minJaccard, PrefixBroadcastMaxPairs)
+    prefixJaccardPairs(docs, n, minJaccard, PrefixBroadcastMaxBytes)
 
-  /** Gate-forcing form (spec surface): `broadcastMaxPairs` 0 forces the
+  /** Gate-forcing form (spec surface): `broadcastMaxBytes` 0 forces the
     * shuffle_hash attach path a corpus-scale run takes; DedupSpec pins
     * both paths to identical output. */
   private[graft] def prefixJaccardPairs(docs: DataFrame, n: Int,
                                         minJaccard: Double,
-                                        broadcastMaxPairs: Long): DataFrame = {
+                                        broadcastMaxBytes: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = shingles(docs, n)
     val sig = sh.groupBy("doc_id")
@@ -442,10 +450,10 @@ object Dedup {
       .filter(col("__pm") +
         least(col("sza") - col("__pa"), col("szb") - col("__pb")) >=
         ceil((col("sza") + col("szb")) * lit(tt * (1 - 1e-12))))
-    // pair-cardinality frame with three consumers (the candidate-doc
-    // set, the broadcast gate's count, and the verify join) — eagerly
-    // checkpointed so the prefix self-join + pair aggregate run once
-    // (the minhash `candidates` checkpoint discipline)
+    // pair-cardinality frame with two consumers (the candidate-doc set
+    // and the verify join) — eagerly checkpointed so the prefix
+    // self-join + pair aggregate run once (the minhash `candidates`
+    // checkpoint discipline)
     val cp = candPairs.localCheckpoint(true)
     val candReps = cp
       .select(explode(array(col("ra"), col("rb"))).as("rep"))
@@ -473,14 +481,14 @@ object Dedup {
     // > pa in A and > pb in B.) array_intersect over distinct-element
     // tails is exact — same inter, same output as the self-join.
     //
-    // Attach strategy is COUNT-GATED like the phash broadcast
-    // (PHashBroadcastMaxMedia): below the pair bound the doc-bounded
-    // array table broadcasts and the pair stream never exchanges; above
-    // it (any real corpus at scale) both attaches are SHUFFLE_HASH —
-    // the array table is doc-cardinality and must never be broadcast
-    // blind, and the pair stream must not be sorted just to pick up an
-    // array. The gate reads one count off the already-checkpointed pair
-    // frame. DedupSpec pins both paths to identical output.
+    // Attach strategy is BYTE-GATED (PrefixBroadcastMaxBytes): below the
+    // bound the doc-bounded array table broadcasts and the pair stream
+    // never exchanges; above it (any real corpus at scale) both attaches
+    // are SHUFFLE_HASH — the array table is doc-cardinality and must
+    // never be broadcast blind, and the pair stream must not be sorted
+    // just to pick up an array. The gate is one aggregate over the
+    // already-checkpointed arrays (it replaces a count of the pairs).
+    // DedupSpec pins both paths to identical output.
     val arrays0 = ranked.join(candReps, Seq("rep"), "left_semi")
       .groupBy("rep")
       .agg(sort_array(collect_list(struct(col("rk"), col("shingle"))))
@@ -488,8 +496,11 @@ object Dedup {
       .select(col("rep"),
         expr("transform(__o, x -> x.shingle)").as("hs"))
       .localCheckpoint(true)
+    val sized = arrays0
+      .agg(coalesce(sum(size(col("hs"))), lit(0L)), count(lit(1))).head()
+    val arrayBytes = sized.getLong(0) * 8 + sized.getLong(1) * PrefixArrayRowBytes
     val arrays =
-      if (cp.count() <= broadcastMaxPairs) broadcast(arrays0)
+      if (arrayBytes <= broadcastMaxBytes) broadcast(arrays0)
       else arrays0.hint("shuffle_hash")
     val inter = cp
       .join(arrays.select(col("rep").as("ra"), col("hs").as("__hsa")),
@@ -1312,22 +1323,50 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** Edge-count cap of [[duplicateClusters]]'s driver branch. An edge is
+    * two longs, so the cap collects at most 200,000 x 16 B = 3.2 MB of
+    * edge data to the driver. */
+  val DriverEdgeCap = 200000
+
   /** Connected components over near-dup pairs: every doc in a duplicate
     * cluster gets the cluster's minimum doc_id as its cluster_id — the
     * step that turns pairwise similarity into an actionable keep/drop
-    * decision for a training corpus.
+    * decision for a training corpus. Output: one (doc_id, cluster_id) row
+    * per pair endpoint, sorted by doc_id. A pair with a null endpoint
+    * names no document and is dropped. Doc ids are longs.
     *
-    * Iterative min-label propagation ACCELERATED by pointer jumping (the
-    * Pregel/GraphX formulation plus the classic path-doubling step): each
-    * round every node takes the min of its own and its neighbors' labels,
-    * then re-labels through its own label's label (valid because labels
-    * are monotone: cluster_id <= doc_id from initialization on, so the
-    * lookup only ever lowers a label). Plain propagation needs O(cluster
+    * SIZE-ADAPTIVE, decided in one place. The (doc_a, doc_b) projection
+    * is persisted and collected with `limit(driverEdgeCap + 1)`:
+    *
+    * - At or under the cap (default [[DriverEdgeCap]], 3.2 MB of edges)
+    *   a driver union-find labels every endpoint with its component
+    *   minimum, and the result is a LocalRelation: no further job, no
+    *   lineage, no cache pin. This is the bounded-state step large-scale
+    *   CC algorithms take once a graph fits one machine (Kiveris et al.,
+    *   SoCC 2014), and it is the common case: near-dup graphs are a few
+    *   hundred edges, and grid DBSCAN's supernode graph is area-bounded.
+    * - Above the cap, the distributed loop below labels the graph,
+    *   reading the persisted pairs, so they are not computed twice.
+    *
+    * `driverEdgeCap = 0` forces the distributed branch; DedupSpec and
+    * SpatialSpec pin both branches to identical rows.
+    *
+    * Distributed branch: iterative min-label propagation ACCELERATED by
+    * pointer jumping (the Pregel/GraphX formulation plus the classic
+    * path-doubling step): each round every node takes the min of its own
+    * and its neighbors' labels, then re-labels through its own label's
+    * label (valid because labels are monotone: cluster_id <= doc_id from
+    * initialization on, so the lookup only ever lowers a label). Plain
+    * propagation needs O(cluster
     * diameter) rounds — fine for shallow near-dup clusters but fatal for
     * path-shaped graphs (a grid DBSCAN eps-graph has hop diameter in the
-    * hundreds); the two chained jumps per round (round 10) QUARTER
-    * every label-chain, so convergence is O(log diameter) regardless of
-    * shape with about half the eager rounds a single jump needed. The fixed point
+    * hundreds). The two chained jumps per round (round 10) shorten a
+    * label chain about threefold per round when ids increase along the
+    * graph's paths: a 2,000-node path numbered in path order converges
+    * in 8 rounds. They do not help when ids are scattered along a path,
+    * since a label then points at a node that is no nearer the minimum:
+    * the same path with shuffled ids needs 666 rounds in a driver replay
+    * of this loop, i.e. O(diameter). The fixed point
     * is unchanged: stability under neighbor-min forces equal labels
     * across every edge, i.e. the component minimum.
     *
@@ -1339,35 +1378,80 @@ object Dedup {
     * pressure (round-6 DBSCAN incident). With truncation every round
     * re-optimizes the same constant-size plan. Per-round checkpoint
     * blocks (tiny: two longs per node) are freed by the ContextCleaner
-    * as each round's reference is dropped. The per-round convergence
-    * check is a count of changed labels, not a data collect. The
-    * RETURNED frame
-    * is an EAGER localCheckpoint of the final labels: materialized and
-    * lineage-free, with every loop cache released before return — nothing
-    * stays pinned in the session cache manager, and the checkpoint blocks
-    * themselves are freed by the ContextCleaner when the frame is GC'd (no
-    * unpersist contract for the caller; round-2 review found no caller ever
-    * honored one). Cluster caveat: localCheckpoint truncates lineage, so on
-    * a real cluster a lost executor cannot recompute its blocks — swap in a
+    * as each round's reference is dropped. Each checkpoint also drops the
+    * plan-estimate statistics it inherits: a join's estimate is the
+    * product of its sides', and a round joins the previous labels into
+    * itself about six times, so inherited estimates grow ~6x in DIGITS
+    * per round — on a 2,000-node path one checkpoint past the first few
+    * rounds ran 25 CPU-minutes of BigInteger multiplication before it was
+    * stopped. The per-round convergence check is a count of changed
+    * labels, not a data collect.
+    *
+    * Both branches return a materialized, lineage-free frame with every
+    * cache they took released — nothing stays pinned in the session
+    * cache manager; the distributed branch's final localCheckpoint blocks
+    * are freed by the ContextCleaner when the frame is GC'd (no unpersist
+    * contract for the caller: callers never honored one). Cluster caveat: localCheckpoint truncates lineage, so on a
+    * real cluster a lost executor cannot recompute its blocks — swap in a
     * reliable `checkpoint()` (HDFS-backed) there; the algorithm is
-    * unchanged. Deterministic: min over an undirected edge set, independent
-    * of partition layout. Throws (releasing all caches) if maxIter rounds
-    * don't converge. */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    // materialize the (possibly expensive) pair pipeline ONCE before the
-    // two-direction union reads it twice — the eager count is a cache
-    // warm-up over the small pair set, not a data collect
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
-    p.count()
+    * unchanged. Deterministic: min over an undirected edge set,
+    * independent of partition layout. The distributed branch throws
+    * (releasing all caches) if maxIter rounds don't converge. */
+  def duplicateClusters(pairs: DataFrame, maxIter: Int = 25,
+                        driverEdgeCap: Int = DriverEdgeCap): DataFrame = {
+    val p = pairs.select(col("doc_a"), col("doc_b"))
+      .filter(col("doc_a").isNotNull && col("doc_b").isNotNull).persist()
+    try {
+      val head = p.limit(driverEdgeCap + 1).collect()
+      if (head.length <= driverEdgeCap)
+        driverClusters(pairs.sparkSession,
+          head.map(r => (r.getLong(0), r.getLong(1))))
+      else pointerJumpingClusters(p, maxIter)
+    } finally p.unpersist()
+  }
+
+  /** Union-find over a collected edge list, union by minimum root with
+    * path compression: every root is its set's minimum id. */
+  private def driverClusters(spark: org.apache.spark.sql.SparkSession,
+                             edges: Array[(Long, Long)]): DataFrame = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = edges.flatMap(e => Array(e._1, e._2)).distinct.sorted
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.createDataFrame(
+      java.util.Arrays.asList(nodes.map(n => Row(n, find(n))): _*),
+      StructType(Seq(StructField("doc_id", LongType, nullable = false),
+        StructField("cluster_id", LongType, nullable = false))))
+  }
+
+  /** Eager localCheckpoint without the inherited plan-estimate stats
+    * (see [[duplicateClusters]]). */
+  private def checkpoint(df: DataFrame): DataFrame =
+    org.apache.spark.sql.classic.GraftSqlBridge.withoutPlanStats(df.localCheckpoint(true))
+
+  /** The distributed branch of [[duplicateClusters]] over its persisted
+    * (doc_a, doc_b) frame `p`. */
+  private def pointerJumpingClusters(p: DataFrame, maxIter: Int): DataFrame = {
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct().persist()
     try {
       // round 0 fused into initialization: label = min(self, direct
       // neighbors) from one aggregation over the edge list
-      var labels = edges.groupBy("src")
+      var labels = checkpoint(edges.groupBy("src")
         .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
-        .withColumnRenamed("src", "doc_id").localCheckpoint(true)
+        .withColumnRenamed("src", "doc_id"))
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
@@ -1380,15 +1464,14 @@ object Dedup {
         val neighborMin = edges
           .join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
           .groupBy(col("src").as("doc_id")).agg(min("cluster_id").as("__nmin"))
-        val stepped = labels.withColumnRenamed("cluster_id", "__prev")
+        // materialized once: the jumps below read it on FOUR sides of
+        // self-joins, and checkpointing beats recomputing the edge-join
+        // aggregate that many times per round
+        val stepped = checkpoint(labels.withColumnRenamed("cluster_id", "__prev")
           .join(neighborMin, Seq("doc_id"), "left")
           .select(col("doc_id"), col("__prev"),
             least(col("__prev"), coalesce(col("__nmin"), col("__prev")))
-              .as("__mid"))
-          // materialized once: the jumps below read it on FOUR sides of
-          // self-joins, and checkpointing beats recomputing the
-          // edge-join aggregate that many times per round
-          .localCheckpoint(true)
+              .as("__mid")))
         // Round-10 (verdict item 6; guide §5): TWO pointer jumps per
         // checkpointed round instead of one. Each jump is a node-grain
         // self-lookup — far cheaper than the edge-join pass — and both
@@ -1409,15 +1492,14 @@ object Dedup {
           .select(col("doc_id"), col("__prev"),
             least(col("__mid"), coalesce(col("__jump"), col("__mid")))
               .as("__j1"))
-        val next = once
+        val next = checkpoint(once
           .join(lut.withColumnRenamed("__k", "__j1")
             .withColumnRenamed("__v", "__jump2"), Seq("__j1"), "left")
           .select(col("doc_id"),
             least(col("__j1"), coalesce(col("__jump2"), col("__j1")))
               .as("cluster_id"),
             (least(col("__j1"), coalesce(col("__jump2"), col("__j1")))
-              < col("__prev")).as("__changed"))
-          .localCheckpoint(true)
+              < col("__prev")).as("__changed")))
         converged = next.filter(col("__changed")).count() == 0
         labels.unpersist()
         labels = next
@@ -1434,7 +1516,6 @@ object Dedup {
       out
     } finally {
       edges.unpersist()
-      p.unpersist()
     }
   }
 

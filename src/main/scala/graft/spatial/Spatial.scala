@@ -128,7 +128,8 @@ object Spatial {
     * frame against the core label table. No stage touches more than the
     * eps-pair set, and only the contraction joins touch even that. */
   def gridDbscan(points: DataFrame, idCol: String, eps: Int, minPts: Int,
-                 cell: Int, driverEdgeCap: Int = 200000): DataFrame = {
+                 cell: Int,
+                 driverEdgeCap: Int = graft.dedup.Dedup.DriverEdgeCap): DataFrame = {
     val pairs = radiusPairs(points, idCol, eps, cell)
       .select("id_a", "id_b").localCheckpoint(true)
     val und = pairs.select(col("id_a").as("id"), col("id_b").as("nb"))
@@ -166,38 +167,14 @@ object Spatial {
       .select(col("__sa").as("doc_a"), col("__sb").as("doc_b")).distinct()
     // The supernode graph is AREA-bounded by construction — at most
     // (grid/side)^2 nodes (~1k at the 1024x1024 default) no matter how
-    // many points the table holds — so the component merge is a
-    // driver-side union-find over the collected edge set: the same
-    // bounded-state discipline as collecting kmeans centroids per round,
-    // and the standard single-node cell-merge step of grid DBSCAN. The
-    // distributed label iteration stays as the fallback if a custom grid
-    // geometry ever blows past the cap (driverEdgeCap; both branches are
-    // pinned equivalent in SpatialSpec by forcing the cap to 0).
-    val superLabels: DataFrame = {
-      val cap = driverEdgeCap
-      val edgeRows = ccPairs.limit(cap + 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (edgeRows.length <= cap) {
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        edgeRows.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val nodes = edgeRows.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-        val ss = points.sparkSession
-        import ss.implicits._
-        broadcast(nodes.toSeq.map(n => (n, find(n)))
-          .toDF("__super", "cluster_id"))
-      } else graft.dedup.Dedup.duplicateClusters(ccPairs)
-        .withColumnRenamed("doc_id", "__super")
-    }
+    // many points the table holds — so duplicateClusters takes its driver
+    // union-find branch (the standard single-node cell-merge step of grid
+    // DBSCAN); its distributed branch takes over if a custom grid
+    // geometry ever blows past driverEdgeCap (SpatialSpec pins both
+    // branches equal by forcing the cap to 0).
+    val superLabels = graft.dedup.Dedup.duplicateClusters(ccPairs,
+        driverEdgeCap = driverEdgeCap)
+      .withColumnRenamed("doc_id", "__super")
     // isolated supernodes (a subcell clique with no outside edge) label as
     // their own singleton — which IS the min core id of that clique
     val coreLabels = superOf

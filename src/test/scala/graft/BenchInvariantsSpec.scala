@@ -40,25 +40,16 @@ class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       shuffles.flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value)).sum)
   }
 
-  // (query, allowed exchange count(s), record ceiling ~2x measured sf0.01)
-  private implicit def exactPin(n: Int): Range = n to n
-  private val pins: Seq[(String, Range, Long)] = Seq(
+  // (query, exchange count, record ceiling ~2x measured sf0.01)
+  private val pins: Seq[(String, Int, Long)] = Seq(
     // pre-agg + orders join + suppkey agg; window reuses the join exchange
     ("rel_sole_late_supplier", 3, 240000L),
-    // funnel tail over checkpointed verdicts: the near-dup verdict join
-    // (one exchange pair feeding an AQE-converted broadcast) + group +
-    // sort. Round-6 re-pin: checkpointed frames now inherit PLAN-estimate
-    // stats (the per-round localCheckpoint that fixed the CC plan
-    // blow-up), so the tiny side no longer broadcasts statically — AQE
-    // converts at runtime from the MEASURED size, which is the contract
-    // that stays safe when a verdict table is genuinely large.
-    // Round-10 re-pin to a RANGE: whether a runtime-converted broadcast
-    // leaves 3 or 4 ShuffleExchange nodes in the executed plan depends
-    // on which query stages had already materialized when AQE converted
-    // — a benign race observed flaking across full-suite JVMs (438/439
-    // twice this round, passing in isolation every time). The record
-    // ceiling still guards the volume regression this pin exists for.
-    ("curate_funnel", 3 to 4, 100L),
+    // funnel tail over checkpointed verdicts: group + sort. The near-dup
+    // drop-list is duplicateClusters' driver-side LocalRelation, whose
+    // exact size broadcasts it statically, so no verdict join exchanges
+    // and no AQE runtime conversion (whose timing made the count 3 or 4)
+    // is left to race.
+    ("curate_funnel", 2, 100L),
     // ONE partial+final aggregate + 4-row sort — the round-3 scare
     ("rel_case_agg", 2, 50L),
     // round-6 re-pin: the exact arms are now distinct-then-count
@@ -72,9 +63,9 @@ class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ("dedup_clusters", 0, 0L),
     // pruned postings serve: stats join + top-k, one exchange
     ("bm25_stored", 1, 3000L),
-    // round-6 re-pin (same cause as curate_funnel): docs + drop-list
-    // exchange pair, anti-join AQE-converted to broadcast at runtime
-    ("dedup_keep_list", 3, 2000L),
+    // the drop-list is a LocalRelation (as in curate_funnel): the
+    // anti-join broadcasts it statically; one exchange feeds the sort
+    ("dedup_keep_list", 1, 2000L),
     ("rel_bucketed_join", 2, 200L),
     ("samp_stratified", 2, 250L),
     ("text_bigram_lm", 5, 6000L),
@@ -98,13 +89,11 @@ class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   )
 
   pins.foreach { case (name, nShuffles, maxRecords) =>
-    val label = if (nShuffles.size == 1) s"${nShuffles.head}"
-      else s"${nShuffles.head}-${nShuffles.last}"
-    test(s"$name: $label exchanges, <= $maxRecords shuffled records") {
+    test(s"$name: $nShuffles exchanges, <= $maxRecords shuffled records") {
       assume(new java.io.File(dir).isDirectory, s"testdata absent at $dir")
       val (n, recs) = profile(name)
-      assert(nShuffles.contains(n),
-        s"$name now plans $n exchanges (pinned $label) — plan regressed")
+      assert(n == nShuffles,
+        s"$name now plans $n exchanges (pinned $nShuffles) — plan regressed")
       assert(recs <= maxRecords,
         s"$name shuffled $recs records (ceiling $maxRecords) — volume regressed")
     }

@@ -1,9 +1,24 @@
 package graft
 
 import graft.dedup.Dedup
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** duplicateClusters' rows at the default cap (the driver union-find)
+    * and at driverEdgeCap = 0 (the distributed loop). */
+  private def bothBranches(pairs: DataFrame): (Seq[Row], Seq[Row]) =
+    (Dedup.duplicateClusters(pairs).collect().toSeq,
+      Dedup.duplicateClusters(pairs, driverEdgeCap = 0).collect().toSeq)
+
+  // a 2,000-node path numbered in path order: the distributed loop needs
+  // 8 rounds, enough for each checkpoint's inherited size estimate to
+  // have stalled the loop had it been kept
+  private def pathEdges: Seq[(Long, Long)] = (1L until 2000L).map(i => (i, i + 1))
 
   // docs 1/2: near-dups (one token changed); 3: exact dup of 1; 4: unrelated
   private def corpus = Seq(
@@ -173,11 +188,82 @@ class DedupSpec extends SparkSpec {
     assume(spark.sharedState.cacheManager.isEmpty,
       "another suite left a persisted frame; cannot attribute cache state")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val keep = Dedup.keepList(docs, Dedup.duplicateClusters(
-      Dedup.jaccardPairs(docs, 3, 0.5, maxShingleDf = 100)))
-    assert(keep.count() > 0)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "duplicateClusters pinned a frame in the session cache manager")
+    // both branches: the driver union-find and (cap 0) the distributed loop
+    for (cap <- Seq(Dedup.DriverEdgeCap, 0)) {
+      val keep = Dedup.keepList(docs, Dedup.duplicateClusters(
+        Dedup.jaccardPairs(docs, 3, 0.5, maxShingleDf = 100),
+        driverEdgeCap = cap))
+      assert(keep.count() > 0)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"duplicateClusters (cap $cap) pinned a frame in the session cache manager")
+    }
+  }
+
+  test("driver union-find and distributed loop label every graph identically") {
+    val fixtures = Seq(
+      "chain and 7-9" -> Seq((1L, 2L), (2L, 3L), (7L, 9L)),
+      "bridged triangles" -> Seq((1L, 2L), (1L, 3L), (2L, 3L),
+        (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L)),
+      "2,000-node path" -> pathEdges)
+    for ((name, edges) <- fixtures) {
+      val (driver, distributed) = bothBranches(edges.toDF("doc_a", "doc_b"))
+      assert(driver == distributed, name)
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      assert(driver.map(_.getLong(0)) == nodes, name)
+    }
+    val path = bothBranches(pathEdges.toDF("doc_a", "doc_b"))._1
+    assert(path.forall(_.getLong(1) == 1L))
+  }
+
+  test("maxIter bounds only the distributed loop, which still throws") {
+    val pairs = pathEdges.toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.duplicateClusters(pairs, maxIter = 2, driverEdgeCap = 0)
+    }
+    assert(e.getMessage.contains("not converged after 2 rounds"))
+    // under the cap the union-find needs no rounds
+    assert(Dedup.duplicateClusters(pairs, maxIter = 2).count() == 2000L)
+  }
+
+  test("both branches drop pairs with a null endpoint") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(5L)),
+      (None, None), (Some(3L), Some(4L))).toDF("doc_a", "doc_b")
+    val (driver, distributed) = bothBranches(pairs)
+    assert(driver == distributed)
+    assert(driver.map(r => r.getLong(0) -> r.getLong(1)) ==
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+  }
+
+  test("under the cap, clustering a materialized pair frame runs <= 2 jobs") {
+    // the benchmark's shape: the pairs are persisted and counted first,
+    // so every job in the call is the clustering's own
+    val pairs = Dedup.jaccardPairs(corpus, 3, 0.5, maxShingleDf = 100).persist()
+    val sc = spark.sparkContext
+    val group = "graft-cluster-jobs"
+    val jobIds = scala.collection.mutable.Set.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group)) jobIds.synchronized {
+          jobIds += e.jobId
+        }
+    }
+    try {
+      assert(pairs.count() > 0)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "duplicateClusters job pin")
+      val clusters = try Dedup.duplicateClusters(pairs) finally sc.clearJobGroup()
+      GraftListenerBus.drain(sc)
+      val ran = jobIds.synchronized(jobIds.toSet)
+      assert(ran.size <= 2, s"duplicateClusters ran ${ran.size} jobs $ran")
+      // the labels are driver-side rows: no lineage, no cache pin
+      assert(clusters.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(clusters.count() > 0)
+    } finally {
+      sc.removeSparkListener(listener)
+      pairs.unpersist()
+    }
   }
 
   test("capped path bounds per-bucket candidate fan-out at df <= cap") {
@@ -686,9 +772,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("prefix jaccard: broadcast and shuffle_hash verify paths agree") {
-    // broadcastMaxPairs 0 forces the shuffle_hash attach path the
+    // broadcastMaxBytes 0 forces the shuffle_hash attach path the
     // corpus-scale gate takes; output must be identical to the default
-    // (broadcast) path — the PHashBroadcastMaxMedia discipline
+    // (broadcast) path
     val rows = Seq(
       1L -> "the quick brown fox jumps over the lazy dog again and again today",
       2L -> "the quick brown fox jumps over the lazy cat again and again today",
@@ -699,7 +785,7 @@ class DedupSpec extends SparkSpec {
     val df = rows.toDF("doc_id", "text")
     val bcast = Dedup.prefixJaccardPairs(df, 3, 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val shuffled = Dedup.prefixJaccardPairs(df, 3, 0.5, broadcastMaxPairs = 0L)
+    val shuffled = Dedup.prefixJaccardPairs(df, 3, 0.5, broadcastMaxBytes = 0L)
       .as[(Long, Long, Double)].collect().toSet
     assert(bcast == shuffled)
     assert(bcast.nonEmpty)

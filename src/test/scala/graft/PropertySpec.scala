@@ -93,6 +93,10 @@ class PropertySpec extends SparkSpec {
         labels.foreach { case (d, c) => assert(c <= d) }
         // endpoints of every edge share a label (connectivity respected)
         edges.foreach { case (a, b) => assert(labels(a) == labels(b)) }
+        // the distributed loop (cap 0) labels exactly as the driver
+        // union-find does
+        assert(graft.dedup.Dedup.duplicateClusters(pairs, driverEdgeCap = 0)
+          .as[(Long, Long)].collect().toMap == labels)
         pairs.sparkSession.catalog.clearCache()
       }
     }
