@@ -100,7 +100,7 @@ object Bench extends AdaptiveSparkPlanHelper {
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // One shared index build, timed as its own row: the five stored
     // queries then report SERVE-ONLY latency instead of each paying a
-    // full 5-table rebuild (round-3 verdict finding #2). Skipped when a
+    // full index rebuild (round-3 verdict finding #2). Skipped when a
     // name filter selects no stored query. Reported as "build_sec"
     // OUTSIDE the query total — it is a build cost, not a query.
     val served = SparkEntry.servedQueries

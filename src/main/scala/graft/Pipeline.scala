@@ -14,8 +14,8 @@ import graft.sources.{DocFileSink, Sampling, Sources}
   * Stages map 1:1:
   *  - prepare (app/prepare_data.py:16-26): deterministic seeded sample of
   *    the corpus + one `{id}_{title}.txt` file per doc;
-  *  - index (app/index.sh:53-73): build + persist the four index tables,
-  *    term-hash-bucketed for partition-pruned serving;
+  *  - index (app/index.sh:53-73): build + persist the IndexStore tables,
+  *    postings term-hash-bucketed for partition-pruned serving;
   *  - search (app/search.sh -> app/query.py): BM25 top-10 served from the
   *    stored index.
   */
@@ -25,8 +25,8 @@ object Pipeline {
   def run(spark: SparkSession, docs: DataFrame, workDir: String,
           query: String, sampleN: Int = 1000, seed: Long = 0L): DataFrame = {
     // persist the sample across the eager stages: the seeded TakeOrdered is
-    // a full corpus scan, and file sink + index build would otherwise
-    // re-run it four times (file sink, tf build, doc_info, corpus_info).
+    // a full corpus scan, and the file sink and the index build would
+    // otherwise each re-run it.
     // Released before returning — the search frame reads the STORED index,
     // not this lineage.
     val sampled = Sampling.deterministicSample(docs, "doc_id", sampleN, seed)

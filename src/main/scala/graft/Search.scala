@@ -15,7 +15,7 @@ object Search {
     BM25.searchStored(spark, indexDir, query, topK = topK)
 
   /** Exact-phrase mode: consecutive-position match served from the stored
-    * positional table (graft.index.IndexStore.phraseMatchStored). */
+    * postings' positions (graft.index.IndexStore.phraseMatchStored). */
   def runPhrase(spark: SparkSession, indexDir: String, phrase: String): DataFrame =
     graft.index.IndexStore.phraseMatchStored(spark, indexDir, phrase)
 

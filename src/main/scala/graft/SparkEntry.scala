@@ -127,12 +127,12 @@ object SparkEntry {
         |  CAST(min(abs(a.pos - b.pos)) AS BIGINT) AS min_distance
         |FROM a JOIN b ON b.doc_id = a.doc_id AND abs(a.pos - b.pos) <= 8
         |GROUP BY 1 ORDER BY 1""".stripMargin),
-    // phrase search SERVED from the stored positional table — each term
-    // reads only its hash bucket; stored ≡ recompute is the claim
+    // phrase search SERVED from the positions of the stored postings —
+    // each term reads only its hash bucket; stored ≡ recompute is the claim
     stored("idx_phrase_stored", (s, idx) =>
       IndexStore.phraseMatchStored(s, idx, "row column sort"),
       // stored ≡ recompute: the oracle recomputes from raw text, the query
-      // serves from the bucketed positional table
+      // serves from the bucketed postings' positions
       """WITH t AS (SELECT doc_id, regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9_'']+') AS tk FROM documents),
         |p AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS pos, unnest(tk) AS term FROM t)
         |SELECT p0.doc_id AS doc_id, count(*) AS n_occurrences
@@ -4844,7 +4844,7 @@ object SparkEntry {
         Seq((1L, "spark join window"), (2L, "batch stream"))),
       bm25MultiOracleSql),
     // phrase-aware ranking: BM25 over the phrase's terms + exact-phrase
-    // boost from the positional table, both served from the same store
+    // boost from the postings' positions, both served from the same store
     stored("bm25_phrase_boost", (s, idx) =>
       BM25.searchStoredPhraseBoosted(s, idx, "row column sort"),
       // BM25 over the phrase terms (same CTEs as bm25OracleSql) left-joined

@@ -1,146 +1,147 @@
 package graft.index
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.AtomicStore
+import graft.text.Tokenize
 
 /** Persisted inverted index — the engine-native replacement for the
-  * reference's four Cassandra tables (app/cassandra/schema.cql:5-32).
+  * reference's four Cassandra tables (app/cassandra/schema.cql:5-32):
+  * `postings`, one row per (term, doc) with its tf, the doc's length and
+  * the term's positions (the positional index of Manning, Raghavan &
+  * Schütze, IIR §2.4); `doc_info`, every doc's length; `corpus_info`.
+  * df is not stored: it is |{docs: tf > 0}|, which a request counts over
+  * the posting rows it reads anyway.
   *
   * The reference makes term lookups single-partition reads by keying
-  * Cassandra on (term, corpus_name) (SURVEY.md §4 row 1). Here the postings
-  * and vocabulary tables are partitioned by a term-hash bucket, and the
-  * serving reader opens ONLY the k `term_bucket=<b>` directories a k-term
-  * query hashes to — the point read Cassandra token routing did. Reading
-  * the table root and relying on Catalyst partition pruning is not
-  * enough: a partitioned read first lists EVERY partition directory, and
-  * above spark.sql.sources.parallelPartitionDiscovery.threshold (32) that
-  * listing is itself a distributed job, paid per table per request. At
-  * 100 TB the difference between opening 4/64 buckets and the full table
-  * IS the query latency.
+  * Cassandra on (term, corpus_name) (SURVEY.md §4 row 1). Here `postings`
+  * is partitioned by a term-hash bucket, and the serving reader opens
+  * ONLY the k `term_bucket=<b>` directories a k-term query hashes to —
+  * the point read Cassandra token routing did. Reading the table root and
+  * relying on Catalyst partition pruning is not enough: a partitioned read
+  * first lists EVERY partition directory, and above
+  * spark.sql.sources.parallelPartitionDiscovery.threshold (32) that
+  * listing is itself a distributed job, paid per request. At 100 TB the
+  * difference between opening 4/64 buckets and the full table IS the
+  * query latency.
   */
 object IndexStore {
 
   val DefaultBuckets = 64
 
-  def termBucket(term: org.apache.spark.sql.Column, buckets: Int) =
-    pmod(xxhash64(term), lit(buckets.toLong))
+  /** The table layout `write` records in index_meta. Layout 1 (no
+    * `layout` column) had separate df and positional tables. */
+  private val Layout = 2
 
-  /** Build and persist all five index tables (the reference's four plus
-    * positional postings for phrase/proximity queries). Idempotent full
-    * recompute (the S8/A8 design decision: recompute beats
-    * read-modify-write). */
-  def write(docs: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit =
-    writeTables(InvertedIndex.termFrequency(docs), InvertedIndex.docInfo(docs),
-      Some(InvertedIndex.positionalPostings(docs)), dir, buckets)
+  /** Build and persist the index from ONE tokenize pass: (doc_id, tokens,
+    * doc_length) is persisted once and both `postings` and `doc_info`
+    * derive from it. Idempotent full recompute (the S8/A8 design decision:
+    * recompute beats read-modify-write). */
+  def write(docs: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit = {
+    val toks = tokenized(docs).persist()
+    try writeTables(postingsOf(toks, buckets), toks.select("doc_id", "doc_length"),
+      dir, buckets)
+    finally toks.unpersist()
+  }
 
-  /** The stat tables from a (tf, doc_info) pair plus optional positional
-    * postings — shared by the full build (stats from a corpus scan) and
-    * the incremental merge (stats from stored tables + a delta; positional
-    * absent when merging into a store written before the table existed). */
-  private def writeTables(tfIn: DataFrame, info: DataFrame,
-                          posOpt: Option[DataFrame], dir: String,
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Tokenize.tokens(col("text")).as("tokens"))
+      .withColumn("doc_length", size(col("tokens")).cast("long"))
+
+  /** One posting per (term, doc) with its sorted 0-based positions. The
+    * token rows are hash-partitioned on the bucket BEFORE the aggregate,
+    * so that one exchange both groups the postings and hands each write
+    * task whole buckets (O(1) files per bucket directory instead of one
+    * per task). */
+  private def postingsOf(toks: DataFrame, buckets: Int): DataFrame =
+    toks.select(col("doc_id"), col("doc_length"),
+        posexplode(col("tokens")).as(Seq("pos", "term")))
+      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
+      .repartition(col("term_bucket"))
+      .groupBy("term_bucket", "term", "doc_id", "doc_length")
+      .agg(count(lit(1)).as("term_frequency"),
+        array_sort(collect_list(col("pos"))).as("positions"))
+
+  /** Write the tables, index_meta LAST. Both `write` and `ingest`'s
+    * sibling build run in a directory that may hold an earlier store, so
+    * the meta is deleted first: a build that dies part-way leaves no meta,
+    * and the serving readers refuse a store without one. */
+  private def writeTables(post: DataFrame, info: DataFrame, dir: String,
                           buckets: Int): Unit = {
+    val conf = post.sparkSession.sparkContext.hadoopConfiguration
+    val meta = new Path(s"$dir/index_meta")
+    meta.getFileSystem(conf).delete(meta, true)
+    post.select(postingsSchema.fieldNames.map(col): _*)
+      .write.mode("overwrite").partitionBy("term_bucket")
+      .parquet(s"$dir/postings")
+    info.write.mode("overwrite").parquet(s"$dir/doc_info")
+    // the ONE corpus-stats formula, shared with the recompute path — if
+    // the stored and recomputed aggregations ever drifted, searchStored
+    // and search would silently disagree
+    InvertedIndex.corpusInfoFromDocInfo(info)
+      .write.mode("overwrite").parquet(s"$dir/corpus_info")
     // the bucket count is INDEX metadata, not caller knowledge: a reader
     // pruning with the wrong modulus silently treats ~ (1 - 1/buckets) of
-    // terms as OOV (confidently wrong results, no error). Written inside
-    // writeTables so the ingest swap carries it too.
-    val spark = tfIn.sparkSession
-    import spark.implicits._
-    Seq(buckets).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/index_meta")
-    // persist tf across the two writes: the tokenize+explode+aggregate (or
-    // merge) lineage is the scale-dominant cost and would otherwise run twice
-    val tf = tfIn.persist()
-    try {
-      // repartition on the bucket column before partitionBy: each task then
-      // holds whole buckets, so every bucket directory gets O(1) files
-      // instead of one per task — at 100 TB the difference between
-      // buckets×tasks small files and buckets compact ones.
-      tf.withColumn("term_bucket", termBucket(col("term"), buckets))
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$dir/term_frequency_in_doc")
-      InvertedIndex.docFrequencyFromTf(tf)
-        .withColumn("term_bucket", termBucket(col("term"), buckets))
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$dir/doc_frequency_of_term")
-    } finally tf.unpersist()
-    // positional postings share the term-hash bucketing, so a k-term
-    // phrase prunes to <= k buckets exactly like the BM25 serving path
-    posOpt.foreach { pos =>
-      pos.withColumn("term_bucket", termBucket(col("term"), buckets))
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$dir/positional_postings")
-    }
-    // persist doc_info across its two consumers: in the full-build path its
-    // lineage is a complete corpus tokenize scan, and the corpus-stats agg
-    // would otherwise re-run it
-    val inf = info.persist()
-    try {
-      inf.write.mode("overwrite").parquet(s"$dir/doc_info")
-      // the ONE corpus-stats formula, shared with the recompute path — if
-      // the stored and recomputed aggregations ever drifted, searchStored
-      // and search would silently disagree
-      InvertedIndex.corpusInfoFromDocInfo(inf)
-        .write.mode("overwrite").parquet(s"$dir/corpus_info")
-    } finally inf.unpersist()
+    // terms as OOV (confidently wrong results, no error). One row,
+    // written on the driver like storedBuckets reads it: no Spark job.
+    val schema = MessageTypeParser.parseMessageType(
+      "message index_meta { required int32 buckets; required int32 layout; }")
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(meta, "part-00000.parquet"), conf)).withType(schema).withConf(conf).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("buckets", buckets).append("layout", Layout))
+    finally writer.close()
   }
 
   /** Merge a small delta corpus into a stored index WITHOUT re-tokenizing
-    * the stored corpus (A8/S8; the batch twin of the streaming
-    * incrementalIndexWriter, and the landing point for
+    * the stored corpus (A8/S8; the landing point for
     * Sources.ingestLocalFile's one-file flow — app/index.sh:21-41). The
-    * stored tf is already aggregated, so the merge shuffles only
-    * (key, partial) pairs; df/dl/corpus stats re-derive from the merged
-    * tables, never from old text.
+    * guard below refuses doc_ids already indexed, so every (term, doc)
+    * posting of the delta is new: the merged postings and doc_info are
+    * plain unions, and corpus stats re-derive from the merged doc_info,
+    * never from old text.
     *
     * Write-then-swap at the index root (`AtomicStore`, same as
-    * incrementalIndexWriter): the merge READS the tables it replaces, so
-    * everything materializes into the sibling `.<name>.next` dir first,
-    * then two checked renames swap it live. Crash between the renames
-    * leaves the sibling `.<name>.old` complete — rename it back to
+    * Streaming.incrementalIndexWriter): the merge READS the tables it
+    * replaces, so everything materializes into the sibling `.<name>.next`
+    * dir first, then two checked renames swap it live. Crash between the
+    * renames leaves the sibling `.<name>.old` complete — rename it back to
     * `<name>` to recover. */
   def ingest(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    // A re-ingested doc_id would SUM its stored tf with the new tf and
-    // duplicate its doc_info row — stats silently corrupt (a full recompute
-    // would be right). Fail loudly instead: one broadcast-semi-join count
-    // against the (small) delta before any write.
+    // keep the STORE's bucketing, not the caller's default — re-bucketing
+    // on ingest would strand the existing postings files. Read first, so
+    // a store of an older layout fails before any job.
+    val buckets = storedBuckets(spark, dir)
+    // A re-ingested doc_id would duplicate its postings and doc_info row —
+    // stats silently corrupt (a full recompute would be right). Fail
+    // loudly instead: one broadcast-semi-join count against the (small)
+    // delta before any write.
     val dup = docInfo(spark, dir)
       .join(broadcast(newDocs.select("doc_id")), Seq("doc_id"), "left_semi")
       .count()
     require(dup == 0,
       s"IndexStore.ingest: $dup doc_id(s) already indexed at $dir — " +
         "re-indexing a changed doc needs a full recompute (write), not ingest")
-    val mergedTf = InvertedIndex.mergeTermFrequency(
-      postings(spark, dir).drop("term_bucket"), newDocs)
-    val mergedInfo = docInfo(spark, dir)
-      .unionByName(InvertedIndex.docInfo(newDocs))
-    // doc_ids are guaranteed new (guard above), so the positional merge is
-    // a pure union; a store written before the table existed stays without
-    // it (phraseMatchStored fails loudly there; re-`write` to add it)
-    val mergedPos =
-      if (new java.io.File(s"$dir/positional_postings").exists())
-        Some(positional(spark, dir).drop("term_bucket")
-          .unionByName(InvertedIndex.positionalPostings(newDocs)))
-      else None
+    val delta = tokenized(newDocs)
     val store = new java.io.File(dir).getAbsoluteFile
     val p = AtomicStore.paths(store.getParent, store.getName)
     if (p.tmp.exists()) AtomicStore.delete(p.tmp) // partial, from a crashed ingest
-    // keep the STORE's bucketing, not the caller's default — re-bucketing
-    // on ingest would strand the existing postings files
-    writeTables(mergedTf, mergedInfo, mergedPos, p.tmp.getPath,
-      storedBuckets(spark, dir))
+    writeTables(
+      postings(spark, dir).unionByName(postingsOf(delta, buckets))
+        .repartition(col("term_bucket")),
+      docInfo(spark, dir).unionByName(delta.select("doc_id", "doc_length")),
+      p.tmp.getPath, buckets)
     AtomicStore.promote(p, Some(p.cur), "IndexStore.ingest")
   }
 
-  // Explicit read schemas: a ZERO-TOKEN corpus writes partitioned tables
+  // Explicit read schemas: a ZERO-TOKEN corpus writes a partitioned table
   // with no part files at all (partitionBy of an empty frame), and a
   // schema-inferring read would throw UNABLE_TO_INFER_SCHEMA — an empty
   // index must serve empty results with the schema intact (the S9
@@ -148,15 +149,10 @@ object IndexStore {
   // matching what writeTables emits bit-for-bit.
   import org.apache.spark.sql.types._
   private val postingsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("term", StringType),
-    StructField("term_frequency", LongType),
+    StructField("term", StringType), StructField("doc_id", LongType),
+    StructField("term_frequency", LongType), StructField("doc_length", LongType),
+    StructField("positions", ArrayType(IntegerType)),
     StructField("term_bucket", LongType)))
-  private val vocabularySchema = StructType(Seq(
-    StructField("term", StringType), StructField("doc_frequency", LongType),
-    StructField("term_bucket", LongType)))
-  private val positionalSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("pos", IntegerType),
-    StructField("term", StringType), StructField("term_bucket", LongType)))
   private val docInfoSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("doc_length", LongType)))
   private val corpusInfoSchema = StructType(Seq(
@@ -164,13 +160,7 @@ object IndexStore {
     StructField("avg_doc_length", DoubleType)))
 
   def postings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(postingsSchema).parquet(s"$dir/term_frequency_in_doc")
-
-  def vocabulary(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(vocabularySchema).parquet(s"$dir/doc_frequency_of_term")
-
-  def positional(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(positionalSchema).parquet(s"$dir/positional_postings")
+    spark.read.schema(postingsSchema).parquet(s"$dir/postings")
 
   def docInfo(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(docInfoSchema).parquet(s"$dir/doc_info")
@@ -178,14 +168,17 @@ object IndexStore {
   def corpusInfo(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(corpusInfoSchema).parquet(s"$dir/corpus_info")
 
-  /** The bucket count a store was written with (index_meta). Eagerly read:
-    * it becomes the bucket-directory list of the serving reads. Read on the
-    * driver straight from the 1-row part file — a `spark.read` here would
-    * be a Spark job per call on the request path. */
+  /** The bucket count a store was written with (index_meta), once the
+    * store is known complete and of the current layout. Eagerly read on
+    * the driver straight from the 1-row part file — a `spark.read` here
+    * would be a Spark job per call on the request path. */
   def storedBuckets(spark: SparkSession, dir: String): Int = {
     val meta = new Path(s"$dir/index_meta")
     val conf = spark.sparkContext.hadoopConfiguration
-    val parts = meta.getFileSystem(conf).listStatus(meta).map(_.getPath)
+    val fs = meta.getFileSystem(conf)
+    val rewrite = "re-`write` the store (IndexStore.write) to serve it"
+    require(fs.exists(meta), s"IndexStore: no $meta (no store, or its build died); $rewrite")
+    val parts = fs.listStatus(meta).map(_.getPath)
       .filter(_.getName.startsWith("part-"))
     require(parts.length == 1,
       s"IndexStore: $meta holds ${parts.length} part files, expected exactly 1")
@@ -194,63 +187,68 @@ object IndexStore {
     try {
       val row = reader.read()
       require(row != null, s"IndexStore: ${parts.head} holds no bucket count")
+      val layout =
+        if (row.getType.containsField("layout")) row.getInteger("layout", 0) else 1
+      require(layout == Layout,
+        s"IndexStore: $dir has index layout $layout, this reader serves layout $Layout; $rewrite")
       row.getInteger("buckets", 0)
     } finally reader.close()
   }
 
   /** Postings for a set of terms, read from only their hash buckets (the
-    * per-term point-read of app/query.py:64-73, minus the driver loop).
-    * The modulus comes from the store's own metadata — a caller-supplied
-    * count could silently mis-prune. */
+    * per-term point-read of app/query.py:64-73, minus the driver loop):
+    * the four BM25 columns (term, doc_id, term_frequency, doc_length), so
+    * Parquet column pruning never reads `positions`. The modulus comes
+    * from the store's own metadata — a caller-supplied count could
+    * silently mis-prune. */
   def postingsForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame =
     postingsForTerms(spark, dir, terms, storedBuckets(spark, dir))
 
   /** As above with the store's bucket count already read, so a request
-    * touching several tables reads index_meta once. */
+    * that reads the postings more than once reads index_meta once. */
   def postingsForTerms(spark: SparkSession, dir: String, terms: Seq[String],
                        buckets: Int): DataFrame =
-    bucketRead(spark, s"$dir/term_frequency_in_doc", postingsSchema, terms, buckets)
+    bucketRead(spark, dir, terms, buckets)
+      .select("term", "doc_id", "term_frequency", "doc_length")
 
-  def vocabularyForTerms(spark: SparkSession, dir: String, terms: Seq[String],
-                         buckets: Int): DataFrame =
-    bucketRead(spark, s"$dir/doc_frequency_of_term", vocabularySchema, terms, buckets)
+  /** (doc_id, pos) of one term's occurrences: its postings' positions,
+    * exploded after the term's bucket read. */
+  private def positionsOf(spark: SparkSession, dir: String,
+                          buckets: Int)(term: String): DataFrame =
+    bucketRead(spark, dir, Seq(term), buckets)
+      .select(col("doc_id"), explode(col("positions")).as("pos"))
 
-  /** Phrase search served from the stored positional table: each term of
-    * the adjacency chain reads ONLY its hash bucket, so a k-term phrase
-    * touches <= k of `buckets` directories of the positional table — never
-    * the corpus, never the full table. Results ≡ InvertedIndex.phraseMatch
-    * on the indexed docs. */
+  /** Phrase search served from the stored postings: each term of the
+    * adjacency chain reads ONLY its hash bucket, so a k-term phrase
+    * touches <= k of `buckets` directories — never the corpus, never the
+    * full table. Results ≡ InvertedIndex.phraseMatch on the indexed docs. */
   def phraseMatchStored(spark: SparkSession, dir: String, phrase: String): DataFrame =
     phraseMatchStored(spark, dir, phrase, storedBuckets(spark, dir))
 
   def phraseMatchStored(spark: SparkSession, dir: String, phrase: String,
                         buckets: Int): DataFrame =
     InvertedIndex.phraseFromPostings(InvertedIndex.phraseTerms(phrase),
-      t => bucketRead(spark, s"$dir/positional_postings", positionalSchema,
-        Seq(t), buckets))
+      positionsOf(spark, dir, buckets))
 
-  /** Proximity search served from the stored positional table — both
-    * sides of the banded join read only their term's hash bucket. */
+  /** Proximity search served from the stored postings — both sides of the
+    * banded join read only their term's hash bucket. */
   def proximityMatchStored(spark: SparkSession, dir: String, termA: String,
-                           termB: String, window: Int = 8): DataFrame = {
-    val buckets = storedBuckets(spark, dir)
+                           termB: String, window: Int = 8): DataFrame =
     InvertedIndex.proximityFromPostings(termA, termB, window,
-      t => bucketRead(spark, s"$dir/positional_postings", positionalSchema,
-        Seq(t), buckets))
-  }
+      positionsOf(spark, dir, storedBuckets(spark, dir)))
 
-  /** The one serving-path table reader: opens only the `term_bucket=<b>`
-    * directories the terms hash to and that exist (a zero-token store, or
-    * an OOV term's empty bucket, has none), so the read lists k
-    * directories on the driver instead of every bucket in a listing job.
-    * The bucket and term predicates stay on the frame, so the scan still
-    * carries term_bucket PartitionFilters and only the terms' rows
-    * survive. No bucket directory: an empty frame with the table's schema
-    * intact (the S9 standing). A missing TABLE fails loudly — a store
-    * written before the positional table existed must be re-`write`n,
-    * never served as empty. */
-  private def bucketRead(spark: SparkSession, table: String, schema: StructType,
-                         terms: Seq[String], buckets: Int): DataFrame = {
+  /** The one serving-path postings reader: opens only the
+    * `term_bucket=<b>` directories the terms hash to and that exist (a
+    * zero-token store, or an OOV term's empty bucket, has none), so the
+    * read lists k directories on the driver instead of every bucket in a
+    * listing job. The bucket and term predicates stay on the frame, so
+    * the scan still carries term_bucket PartitionFilters and only the
+    * terms' rows survive. No bucket directory: an empty frame with the
+    * table's schema intact (the S9 standing). A missing TABLE fails
+    * loudly — never served as empty. */
+  private def bucketRead(spark: SparkSession, dir: String, terms: Seq[String],
+                         buckets: Int): DataFrame = {
+    val table = s"$dir/postings"
     val bucketIds = terms.map(t => bucketOf(t, buckets)).distinct
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -258,8 +256,8 @@ object IndexStore {
     val dirs = bucketIds.map(b => new Path(root, s"term_bucket=$b"))
       .filter(fs.exists).map(_.toString)
     val df =
-      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-      else spark.read.schema(schema).option("basePath", table).parquet(dirs: _*)
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), postingsSchema)
+      else spark.read.schema(postingsSchema).option("basePath", table).parquet(dirs: _*)
     df.filter(col("term_bucket").isin(bucketIds: _*) &&
       col("term").isin(terms: _*))
   }
@@ -269,7 +267,7 @@ object IndexStore {
     * partition-pruning literals. */
   def bucketOf(term: String, buckets: Int = DefaultBuckets): Long = {
     // XxHash64 over a UTF8String with Spark's default seed 42L — the same
-    // expression termBucket uses, evaluated locally.
+    // expression postingsOf buckets with, evaluated locally.
     val h = org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
       org.apache.spark.sql.catalyst.expressions.Literal(term)), 42L)
       .eval(null).asInstanceOf[Long]

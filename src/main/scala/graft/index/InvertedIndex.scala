@@ -49,8 +49,8 @@ object InvertedIndex {
   }
 
   /** Positional postings: (doc_id, pos, term), one row per occurrence,
-    * pos 0-based in token order — the index layout phrase and proximity
-    * queries need beyond the reference's bag-of-words tables. */
+    * pos 0-based in token order — the recompute path's input to phrase,
+    * proximity and snippet queries (IndexStore stores them per posting). */
   def positionalPostings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       posexplode(Tokenize.tokens(col("text"))).as(Seq("pos", "term")))
@@ -61,7 +61,7 @@ object InvertedIndex {
     * every join is an equi-join on the SAME (doc_id, start-pos) key —
     * one partitioning serves the whole chain, and each side is pre-filtered
     * to a single term's postings (the selective part of the plan). Served
-    * from `IndexStore`-style term-bucketed postings, each side becomes a
+    * from `IndexStore`'s term-bucketed postings, each side becomes a
     * partition-pruned lookup rather than a corpus scan. */
   def phraseMatch(docs: DataFrame, phrase: String): DataFrame = {
     val p = positionalPostings(docs)
@@ -122,8 +122,8 @@ object InvertedIndex {
     * token positions: one side explodes to 3 adjacent bands, so every
     * qualifying pair matches in EXACTLY one band (dup-free) and the join
     * never degenerates to per-doc position cross products. Like
-    * phraseMatch, each side is one term's postings; a stored positional
-    * table serves them as pruned bucket lookups. */
+    * phraseMatch, each side is one term's postings; the stored postings
+    * serve them as pruned bucket lookups. */
   def proximityMatch(docs: DataFrame, termA: String, termB: String,
                      window: Int = 8): DataFrame = {
     val p = positionalPostings(docs)
@@ -157,7 +157,7 @@ object InvertedIndex {
       .orderBy("doc_id")
   }
 
-  /** doc_frequency_of_term (schema.cql:5-10; MR1 mapper1.py:20-23 +
+  /** Document frequency (schema.cql:5-10; MR1 mapper1.py:20-23 +
     * reducer1.py:33-43): number of docs containing each term. */
   def docFrequency(docs: DataFrame): DataFrame =
     Tokenize.distinctTerms(docs)

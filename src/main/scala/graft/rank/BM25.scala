@@ -45,7 +45,7 @@ object BM25 {
     // loops); the term predicate pushes below the df aggregation.
     val qtf = tf.join(broadcast(qTerms), Seq("term"))
     val qdf = dfreq.join(broadcast(qTerms), Seq("term"))
-    rank(qtf, qdf, dl, stats, k1, b, topK)
+    top(scoreAll(qtf, qdf, dl, stats, k1, b), topK)
   }
 
   /** BM25 served from champion lists only (round 5): per query term, at
@@ -72,7 +72,7 @@ object BM25 {
         tf.join(broadcast(qTerms), Seq("term")), m)
       .select("term", "doc_id", "term_frequency")
     val qdf = dfreq.join(broadcast(qTerms), Seq("term"))
-    rank(qtf, qdf, dl, stats, k1, b, topK)
+    top(scoreAll(qtf, qdf, dl, stats, k1, b), topK)
   }
 
   /** EXACT top-k with WAND/MaxScore-style candidate pruning (Broder'03 /
@@ -140,7 +140,8 @@ object BM25 {
       .filter(col("__cap_sum") >= lit(theta - 1e-3))
       .select("doc_id")
     // phase-2: exact scoring on the pruned doc set only
-    rank(tf.join(cand, Seq("doc_id"), "leftsemi"), qdf, dl, stats, k1, b, topK)
+    top(scoreAll(tf.join(cand, Seq("doc_id"), "leftsemi"), qdf, dl, stats, k1, b),
+      topK)
   }
 
   /** EXACT top-k with BLOCK-MAX WAND pruning (Ding-Suel'11, re-expressed
@@ -188,7 +189,8 @@ object BM25 {
       if (champTop.length < topK) Double.NegativeInfinity
       else champTop.last.getAs[Double]("score")
     val cand = blockMaxCandidates(tf, qdf, stats, k1, b, theta)
-    rank(tf.join(cand, Seq("doc_id"), "leftsemi"), qdf, dl, stats, k1, b, topK)
+    top(scoreAll(tf.join(cand, Seq("doc_id"), "leftsemi"), qdf, dl, stats, k1, b),
+      topK)
   }
 
   /** Per-(term, block) score caps from the block-local max tf — exposed
@@ -231,25 +233,23 @@ object BM25 {
   }
 
   /** BM25 search served from a persisted IndexStore — no recompute; the
-    * postings and vocabulary reads open only the query terms' hash-bucket
-    * directories (the Cassandra-token-routing equivalent). The bucket
-    * modulus comes from the store's own metadata, read once per request. */
+    * postings read opens only the query terms' hash-bucket directories
+    * (the Cassandra-token-routing equivalent) and carries doc_length, so
+    * the only other read is the 1-row corpus stats. The bucket modulus
+    * comes from the store's own metadata, read once per request. */
   def searchStored(spark: SparkSession, indexDir: String, query: String,
                    k1: Double = 1.0, b: Double = 0.75,
-                   topK: Int = 10): DataFrame = {
-    val terms = queryTerms(query)
-    val buckets = IndexStore.storedBuckets(spark, indexDir)
-    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
-      .drop("term_bucket")
-    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms, buckets)
-      .drop("term_bucket")
-    rank(qtf, qdf, IndexStore.docInfo(spark, indexDir),
-      IndexStore.corpusInfo(spark, indexDir), k1, b, topK)
-  }
+                   topK: Int = 10): DataFrame =
+    top(scorePostings(
+      withDocFrequency(IndexStore.postingsForTerms(spark, indexDir, queryTerms(query))),
+      IndexStore.corpusInfo(spark, indexDir), k1, b), topK)
 
-  /** Shared scoring tail: J1 (vocab) + J2 (doc stats) + A7 (scalar score)
-    * + A6 (per-doc sum) + O1 (top-k). Empty-on-OOV (S9) falls out
-    * naturally: zero surviving postings => zero rows, schema intact. */
+  /** Stored postings with doc_frequency attached, counted per term over the
+    * rows the request reads anyway (df == |{docs: tf > 0}|). A window, not
+    * an aggregate joined back: the postings are scanned once. */
+  private def withDocFrequency(postings: DataFrame): DataFrame =
+    postings.withColumn("doc_frequency", count(lit(1)).over(Window.partitionBy("term")))
+
   /** The scalar A7 score (app/query.py:131-135) over the joined columns
     * (term_frequency, doc_frequency, doc_length, doc_n, avg_doc_length) —
     * the single source of the formula for both search forms. */
@@ -260,23 +260,31 @@ object BM25 {
         lit(b) * col("doc_length") / col("avg_doc_length")) +
         col("term_frequency"))
 
-  /** Per-doc UNROUNDED BM25 sums — the shared scoring core; rank() and
+  /** Per-doc UNROUNDED BM25 sums over postings that already carry
+    * doc_frequency and doc_length — the shared scoring core; top() and
     * the phrase-boosted form round only their FINAL score (a boost over a
     * pre-rounded sum would compound rounding error). */
-  private def scoreAll(qtf: DataFrame, qdf: DataFrame, dl: DataFrame,
-                       stats: DataFrame, k1: Double, b: Double): DataFrame =
-    qtf
-      .join(broadcast(qdf), Seq("term"))                  // J1
-      .join(dl, Seq("doc_id"))                            // J2
+  private def scorePostings(postings: DataFrame, stats: DataFrame,
+                            k1: Double, b: Double): DataFrame =
+    postings
       .crossJoin(broadcast(stats))                        // N, avgdl as 1-row side
       .withColumn("bm25", bm25Score(k1, b))
       .groupBy("doc_id")
       .agg(sum("bm25").as("score"))
 
-  private def rank(qtf: DataFrame, qdf: DataFrame, dl: DataFrame,
-                   stats: DataFrame, k1: Double, b: Double, topK: Int): DataFrame =
-    scoreAll(qtf, qdf, dl, stats, k1, b)
-      .select(col("doc_id"), round(col("score"), 4).as("doc_rank"))
+  /** The recompute forms' scoring: J1 (vocab) + J2 (doc stats) joins,
+    * then the shared core. Empty-on-OOV (S9) falls out naturally: zero
+    * surviving postings => zero rows, schema intact. */
+  private def scoreAll(qtf: DataFrame, qdf: DataFrame, dl: DataFrame,
+                       stats: DataFrame, k1: Double, b: Double): DataFrame =
+    scorePostings(qtf
+      .join(broadcast(qdf), Seq("term"))                  // J1
+      .join(dl, Seq("doc_id")),                           // J2
+      stats, k1, b)
+
+  /** O1: rounded top-k of per-doc scores. */
+  private def top(scores: DataFrame, topK: Int): DataFrame =
+    scores.select(col("doc_id"), round(col("score"), 4).as("doc_rank"))
       .orderBy(desc("doc_rank"), asc("doc_id"))
       .limit(topK)
 
@@ -312,9 +320,8 @@ object BM25 {
     val dl = InvertedIndex.docLengthFromTf(tf)
     val stats = InvertedIndex.corpusInfo(docs)
     val qTerms = terms.toDF("term")
-    val fb = rank(tf.join(broadcast(qTerms), Seq("term")),
-      dfForTermSet(tf, qTerms), dl, stats, k1, b,
-      feedbackK).select("doc_id")
+    val fb = top(scoreAll(tf.join(broadcast(qTerms), Seq("term")),
+      dfForTermSet(tf, qTerms), dl, stats, k1, b), feedbackK).select("doc_id")
     // The candidate vocabulary lives in feedbackK docs — a constant-size
     // frame. Checkpointed so the feedback ranking is paid once, then df
     // for exactly these terms derives from tf and broadcasts back in.
@@ -384,12 +391,12 @@ object BM25 {
   /** Phrase-aware ranking from ONE stored index: bag-of-words BM25 over
     * the phrase's terms, boosted for documents containing the EXACT
     * phrase — `score * (1 + boost * ln(1 + phrase_occurrences))`. The
-    * natural composition now that the stat tables and the positional
-    * table live in the same 5-table store: the BM25 side prunes the
-    * postings buckets, the phrase side prunes the positional buckets, and
-    * one left join marries them — phrase hits rank above their
-    * bag-of-words ties, docs without the phrase keep their base score
-    * (ln(1+0) = 0). Boost applies BEFORE top-k: an exact-phrase doc
+    * natural composition now that tf and positions live in the same
+    * postings rows: the BM25 side reads the terms' buckets without the
+    * positions column, the phrase side explodes the positions of the same
+    * buckets, and one left join marries them — phrase hits rank above
+    * their bag-of-words ties, docs without the phrase keep their base
+    * score (ln(1+0) = 0). Boost applies BEFORE top-k: an exact-phrase doc
     * outside the bag-of-words top-k can still surface. */
   def searchStoredPhraseBoosted(spark: SparkSession, indexDir: String,
                                 phrase: String, k1: Double = 1.0,
@@ -397,11 +404,8 @@ object BM25 {
                                 boost: Double = 0.5): DataFrame = {
     val terms = InvertedIndex.phraseTerms(phrase).distinct
     val buckets = IndexStore.storedBuckets(spark, indexDir)
-    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
-      .drop("term_bucket")
-    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms, buckets)
-      .drop("term_bucket")
-    val scores = scoreAll(qtf, qdf, IndexStore.docInfo(spark, indexDir),
+    val scores = scorePostings(
+      withDocFrequency(IndexStore.postingsForTerms(spark, indexDir, terms, buckets)),
       IndexStore.corpusInfo(spark, indexDir), k1, b)
     val phr = IndexStore.phraseMatchStored(spark, indexDir, phrase, buckets)
     scores.join(phr, Seq("doc_id"), "left")
@@ -441,9 +445,9 @@ object BM25 {
   }
 
   /** Batch search served from a persisted IndexStore — the query-workload
-    * serving path: the whole workload's term set picks the postings and
-    * vocabulary bucket directories to open (one pruned scan amortized
-    * over ALL queries), and scoring is the same one-plan
+    * serving path: the whole workload's term set picks the postings
+    * bucket directories to open (one pruned scan amortized over ALL
+    * queries), and scoring is the same one-plan
     * windowed top-k as searchMany. Queries are driver-known pairs
     * (query_id, query) — they must be, for the bucket list to land in the
     * plan as pruning literals. */
@@ -454,16 +458,11 @@ object BM25 {
     val qTerms = queries.flatMap { case (qid, q) =>
       queryTerms(q).map((qid, _))
     }
-    val terms = qTerms.map(_._2).distinct
-    val buckets = IndexStore.storedBuckets(spark, indexDir)
-    val qtf = IndexStore.postingsForTerms(spark, indexDir, terms, buckets)
-      .drop("term_bucket")
-    val qdf = IndexStore.vocabularyForTerms(spark, indexDir, terms, buckets)
-      .drop("term_bucket")
-    val scored = qtf
+    // df counts over the workload's distinct terms, BEFORE the query join
+    // repeats a posting once per query holding its term
+    val scored = withDocFrequency(
+        IndexStore.postingsForTerms(spark, indexDir, qTerms.map(_._2).distinct))
       .join(broadcast(qTerms.toDF("query_id", "term")), Seq("term"))
-      .join(broadcast(qdf), Seq("term"))
-      .join(IndexStore.docInfo(spark, indexDir), Seq("doc_id"))
       .crossJoin(broadcast(IndexStore.corpusInfo(spark, indexDir)))
       .withColumn("bm25", bm25Score(k1, b))
     rankMany(scored, topK)
@@ -592,6 +591,6 @@ object BM25 {
       .select("term").distinct()
     val qtf = tf.join(broadcast(qTerms), Seq("term"))
     val qdf = dfreq.join(broadcast(qTerms), Seq("term"))
-    rank(qtf, qdf, dl, stats, k1, b, topK)
+    top(scoreAll(qtf, qdf, dl, stats, k1, b), topK)
   }
 }

@@ -38,8 +38,9 @@ object ServeBench {
 
     // Request mix from the store itself: top-16 df terms, paired into
     // two-term queries — guaranteed in-vocabulary at any scale factor.
-    val topTerms = graft.index.IndexStore.vocabulary(spark, idx)
-      .orderBy(org.apache.spark.sql.functions.col("doc_frequency").desc,
+    val topTerms = graft.index.IndexStore.postings(spark, idx)
+      .groupBy("term").count()
+      .orderBy(org.apache.spark.sql.functions.col("count").desc,
         org.apache.spark.sql.functions.col("term"))
       .limit(16).select("term").collect().map(_.getString(0)).toSeq
     val termQueries: Seq[String] =

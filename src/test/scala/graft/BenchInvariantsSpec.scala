@@ -61,8 +61,10 @@ class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ("sketch_distinct_parts", 6, 15000L),
     // cluster table is checkpointed: serving it re-runs NOTHING
     ("dedup_clusters", 0, 0L),
-    // pruned postings serve: stats join + top-k, one exchange
-    ("bm25_stored", 1, 3000L),
+    // pruned postings serve: df counted per term over the postings read
+    // (one exchange on term), then the per-doc score sum (one on doc_id);
+    // doc_length rides in the posting, so no doc_info join
+    ("bm25_stored", 2, 3000L),
     // the drop-list is a LocalRelation (as in curate_funnel): the
     // anti-join broadcasts it statically; one exchange feeds the sort
     ("dedup_keep_list", 1, 2000L),

@@ -7,21 +7,29 @@ import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, raise_error}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  /** (table, bucket directories opened) of every stored-table scan in the
-    * plan, AQE stages and subqueries included. */
+  /** (table, directories opened) of every postings or doc_info scan in
+    * the plan, AQE stages and subqueries included: a postings scan opens
+    * `term_bucket=` directories, a doc_info scan its table root. */
   private def storeScans(q: DataFrame): Seq[(String, Set[String])] =
     collectWithSubqueries(q.queryExecution.executedPlan) {
       case s: FileSourceScanExec =>
         val roots = s.relation.location.rootPaths
-        (roots.map(_.getParent.getName).distinct.mkString(","),
-          roots.map(_.getName).toSet)
-    }.filter { case (t, _) => Set("term_frequency_in_doc",
-      "doc_frequency_of_term", "positional_postings").contains(t) }
+        if (roots.forall(_.getName.startsWith("term_bucket=")))
+          (roots.map(_.getParent.getName).distinct.mkString(","),
+            roots.map(_.getName).toSet)
+        else (roots.map(_.getName).distinct.mkString(","), Set.empty[String])
+    }.filter { case (t, _) => Set("postings", "doc_info").contains(t) }
+
+  /** Leaf scans of the postings table, as plan strings. */
+  private def postingScans(q: DataFrame): Seq[String] =
+    q.queryExecution.executedPlan.collectLeaves().map(_.toString)
+      .filter(_.contains("/postings/"))
 
   private lazy val dir = {
     val d = Files.createTempDirectory("graft-index").toString
@@ -48,11 +56,9 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .collect().toSeq
     assert(stored.nonEmpty && stored == fresh)
     // serving plan invariant: the batch path prunes postings scans too
-    val scans = BM25.searchManyStored(spark, dir, qs)
-      .queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val postingScans = scans.filter(_.contains("term_frequency_in_doc"))
-    assert(postingScans.nonEmpty)
-    postingScans.foreach { s =>
+    val scans = postingScans(BM25.searchManyStored(spark, dir, qs))
+    assert(scans.nonEmpty)
+    scans.foreach { s =>
       assert(s.contains("PartitionFilters") && s.contains("term_bucket"),
         s"batch postings scan not pruned:\n$s")
     }
@@ -65,9 +71,10 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"no partition pruning in:\n$plan")
     assert(df.select("term").distinct().collect().map(_.getString(0)).toSet
       == Set("spark"))
-    // every stored-table scan of the serving surface opens exactly its
-    // terms' bucket directories — never the table root, which would list
-    // all 16 buckets
+    // every postings scan of the serving surface opens exactly its terms'
+    // bucket directories — never the table root, which would list all 16
+    // buckets — and no serving plan scans doc_info: doc_length comes with
+    // the posting
     def dirs(terms: String*) =
       terms.map(t => s"term_bucket=${IndexStore.bucketOf(t, 16)}").toSet
     val bag = dirs("spark", "join", "window")
@@ -81,22 +88,18 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           s"$table scan opened $opened, expected one of ${allowed(table)}")
       }
     }
-    pin(df, Map("term_frequency_in_doc" -> Set(dirs("spark"))))
+    pin(df, Map("postings" -> Set(dirs("spark"))))
     pin(BM25.searchStored(spark, dir, "spark join window"),
-      Map("term_frequency_in_doc" -> Set(bag),
-        "doc_frequency_of_term" -> Set(bag)))
+      Map("postings" -> Set(bag)))
     pin(BM25.searchManyStored(spark, dir,
         Seq((1L, "spark join"), (2L, "window"))),
-      Map("term_frequency_in_doc" -> Set(bag),
-        "doc_frequency_of_term" -> Set(bag)))
+      Map("postings" -> Set(bag)))
     pin(BM25.searchStoredPhraseBoosted(spark, dir, "the value"),
-      Map("term_frequency_in_doc" -> Set(dirs("the", "value")),
-        "doc_frequency_of_term" -> Set(dirs("the", "value")),
-        "positional_postings" -> phrase))
+      Map("postings" -> (phrase + dirs("the", "value"))))
     pin(IndexStore.phraseMatchStored(spark, dir, "the value"),
-      Map("positional_postings" -> phrase))
+      Map("postings" -> phrase))
     pin(IndexStore.proximityMatchStored(spark, dir, "the", "value", 8),
-      Map("positional_postings" -> phrase))
+      Map("postings" -> phrase))
   }
 
   test("building stored queries launches no job; serving runs no wide job") {
@@ -109,7 +112,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       (0 until 10).map(j => s"w${(i * 7 + j * 13) % 500}").mkString(" ")))
       .toDF("doc_id", "text")
     IndexStore.write(docs, d)
-    assert(new java.io.File(s"$d/term_frequency_in_doc").list()
+    assert(new java.io.File(s"$d/postings").list()
       .count(_.startsWith("term_bucket=")) > 32)
     val sc = spark.sparkContext
     val group = "graft-serving-jobs"
@@ -164,7 +167,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // the 3-doc store fills at most 11 of 64 buckets; the OOV term's
       // bucket directory must really be absent for this case to bite
       val oov = Iterator.from(0).map(i => s"zzzoov$i").find(t =>
-        !new java.io.File(s"$d/term_frequency_in_doc/term_bucket=" +
+        !new java.io.File(s"$d/postings/term_bucket=" +
           IndexStore.bucketOf(t)).exists()).get
       def same(stored: DataFrame, fresh: DataFrame): Unit = {
         assert(stored.schema.map(f => (f.name, f.dataType)) ==
@@ -189,22 +192,39 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the declared bm25_stored query's serving plan: the scan itself must
     // carry term_bucket PartitionFilters (Cassandra-token-routing parity),
     // not filter after reading all buckets
-    val q = BM25.searchStored(spark, dir, "spark join window")
-    val scans = q.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val postingScans = scans.filter(_.contains("term_frequency_in_doc"))
-    assert(postingScans.nonEmpty)
-    postingScans.foreach { s =>
+    val scans = postingScans(BM25.searchStored(spark, dir, "spark join window"))
+    assert(scans.nonEmpty)
+    scans.foreach { s =>
       assert(s.contains("PartitionFilters") && s.contains("term_bucket"),
         s"postings scan not pruned:\n$s")
     }
   }
 
   test("stored tables round-trip the index contracts") {
+    import org.apache.spark.sql.functions._
     val docs = table(spark, "/root/testdata/sf0.001", "documents")
     assert(IndexStore.docInfo(spark, dir).count() == docs.count())
     assert(IndexStore.corpusInfo(spark, dir).count() == 1)
-    val vocabSize = IndexStore.vocabulary(spark, dir).count()
-    assert(vocabSize == graft.index.InvertedIndex.docFrequency(docs).count())
+    // the one postings table carries tf, positions and doc length; df is
+    // its row count per term — each equal to the recompute table
+    val post = IndexStore.postings(spark, dir)
+    def same(a: DataFrame, b: DataFrame): Unit = {
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+    same(post.select("doc_id", "term", "term_frequency"),
+      InvertedIndex.termFrequency(docs))
+    same(post.groupBy("term").agg(count(lit(1)).as("doc_frequency")),
+      InvertedIndex.docFrequency(docs))
+    same(post.select(col("doc_id"), explode(col("positions")).as("pos"),
+        col("term")), InvertedIndex.positionalPostings(docs))
+    same(post.select("doc_id", "doc_length").distinct(),
+      InvertedIndex.docInfo(docs).join(post.select("doc_id").distinct(),
+        Seq("doc_id"), "left_semi"))
+    // positions are stored sorted; the BM25 reader never selects them
+    assert(post.filter(col("positions") =!= array_sort(col("positions")))
+      .isEmpty)
+    assert(IndexStore.postingsForTerms(spark, dir, Seq("spark")).columns.toSeq ==
+      Seq("term", "doc_id", "term_frequency", "doc_length"))
   }
 
   test("stored phrase search equals recompute and prunes per-term buckets") {
@@ -213,13 +233,12 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val fresh = graft.index.InvertedIndex.phraseMatch(docs, "the value")
       .collect().toSeq
     assert(fresh.nonEmpty && stored.collect().toSeq == fresh)
-    // every positional scan in the chain must carry bucket pruning
-    val scans = stored.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val posScans = scans.filter(_.contains("positional_postings"))
+    // every postings scan in the chain must carry bucket pruning
+    val posScans = postingScans(stored)
     assert(posScans.nonEmpty)
     posScans.foreach { s =>
       assert(s.contains("PartitionFilters") && s.contains("term_bucket"),
-        s"positional scan not pruned:\n$s")
+        s"postings scan not pruned:\n$s")
     }
   }
 
@@ -230,17 +249,16 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .collect().toSeq
     assert(fresh.nonEmpty && stored.collect().toSeq == fresh)
     // AQE may fold one side under a reused exchange, so pin that every
-    // SURVIVING positional leaf carries bucket pruning (same pattern as
+    // SURVIVING postings leaf carries bucket pruning (same pattern as
     // the phrase pin)
-    val scans = stored.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val posScans = scans.filter(_.contains("positional_postings"))
+    val posScans = postingScans(stored)
     assert(posScans.nonEmpty)
     posScans.foreach(s => assert(
       s.contains("PartitionFilters") && s.contains("term_bucket"),
-      s"positional scan not pruned:\n$s"))
+      s"postings scan not pruned:\n$s"))
   }
 
-  test("ingest carries the positional table: new-doc phrases become servable") {
+  test("ingest carries positions: new-doc phrases become servable") {
     import spark.implicits._
     val d = Files.createTempDirectory("graft-index-pp").toString
     val docs = table(spark, "/root/testdata/sf0.001", "documents")
@@ -254,6 +272,68 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // pre-existing phrases still served after the swap
     assert(IndexStore.phraseMatchStored(spark, d, "the value").count() ==
       graft.index.InvertedIndex.phraseMatch(docs, "the value").count())
+  }
+
+  test("the index build runs <= 6 jobs from one tokenize pass") {
+    // the docs are persisted and counted first, so every job in the call
+    // is the build's own: the tokens' cache, the postings exchange and
+    // write, doc_info, corpus_info's exchange and write (index_meta is
+    // written on the driver)
+    import spark.implicits._
+    val docs = (0 until 400).map(i => (i.toLong, s"w${i % 7} w${i % 13} w${i % 31} w$i"))
+      .toDF("doc_id", "text").repartition(4).persist()
+    val sc = spark.sparkContext
+    val group = "graft-build-jobs"
+    val jobIds = scala.collection.mutable.Set.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group)) jobIds.synchronized {
+          jobIds += e.jobId
+        }
+    }
+    try {
+      assert(docs.count() > 0)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "IndexStore.write job pin")
+      try IndexStore.write(docs, Files.createTempDirectory("graft-index-jobs").toString)
+      finally sc.clearJobGroup()
+      GraftListenerBus.drain(sc)
+      val ran = jobIds.synchronized(jobIds.toSet)
+      assert(ran.nonEmpty && ran.size <= 6, s"IndexStore.write ran ${ran.size} jobs $ran")
+    } finally {
+      sc.removeSparkListener(listener)
+      docs.unpersist()
+    }
+  }
+
+  test("a store of an older layout, or with no index_meta, fails loudly") {
+    import spark.implicits._
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    val d = Files.createTempDirectory("graft-index-layout").toString
+    IndexStore.write(docs, d)
+    def refused(body: => Any): String =
+      intercept[IllegalArgumentException](body).getMessage
+    // the five-table store's index_meta held only the bucket count
+    Seq(IndexStore.DefaultBuckets).toDF("buckets").coalesce(1)
+      .write.mode("overwrite").parquet(s"$d/index_meta")
+    Seq(refused(BM25.searchStored(spark, d, "beta")),
+      refused(IndexStore.phraseMatchStored(spark, d, "alpha beta")),
+      refused(IndexStore.ingest(Seq((3L, "delta")).toDF("doc_id", "text"), d)))
+      .foreach { m =>
+        assert(m.contains("index layout 1") && m.contains("re-`write` the store"), m)
+      }
+    // a build that dies part-way has deleted index_meta and never wrote it
+    // back: the half-written store is refused, not served empty
+    val failing = spark.range(1).select(col("id").as("doc_id"),
+      raise_error(lit("planted build failure")).cast("string").as("text"))
+    intercept[Exception](IndexStore.write(failing, d))
+    assert(!new java.io.File(s"$d/index_meta").exists())
+    val m = refused(BM25.searchStored(spark, d, "beta"))
+    assert(m.contains("index_meta") && m.contains("re-`write` the store"), m)
+    // re-writing in place makes it servable again
+    IndexStore.write(docs, d)
+    assert(BM25.searchStored(spark, d, "beta").count() == 2)
   }
 
   test("OOV query against the stored index is empty with intact schema") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{IndexStore, InvertedIndex}
 import graft.rank.BM25
@@ -34,7 +35,8 @@ class IngestSpec extends SparkSpec {
     // stored tf after ingest == tf of the full corpus incl. the new doc
     val full = docs.select("doc_id", "text")
       .unionByName(newDoc.select("doc_id", "text"))
-    val storedTf = IndexStore.postings(spark, dir).drop("term_bucket")
+    val storedTf = IndexStore.postings(spark, dir)
+      .select("doc_id", "term", "term_frequency")
       .orderBy("doc_id", "term")
       .as[(Long, String, Long)].collect().toSeq
     val fullTf = InvertedIndex.termFrequency(full)
@@ -79,6 +81,32 @@ class IngestSpec extends SparkSpec {
     assert(phr.get(999998L).contains(2L))
   }
 
+  test("ingest leaves the tables a fresh write over the union would") {
+    val docs = (0 until 300).map(i => (i.toLong, s"spark w${i % 11} join w${i % 17} w$i"))
+      .toDF("doc_id", "text")
+    val delta = Seq((900011L, "spark join window spark"),
+      (900012L, "a brand new zzzterm"), (900013L, "")).toDF("doc_id", "text")
+    val root = Files.createTempDirectory("graft-ingest-union")
+    val ingested = root.resolve("ingested").toString
+    val fresh = root.resolve("fresh").toString
+    IndexStore.write(docs, ingested)
+    IndexStore.ingest(delta, ingested)
+    IndexStore.write(docs.unionByName(delta), fresh)
+    def rows(read: (SparkSession, String) => DataFrame, dir: String, keys: String*) =
+      read(spark, dir).orderBy(keys.map(col): _*).collect().toSeq
+    assert(rows(IndexStore.postings, ingested, "term", "doc_id") ==
+      rows(IndexStore.postings, fresh, "term", "doc_id"))
+    assert(rows(IndexStore.docInfo, ingested, "doc_id") ==
+      rows(IndexStore.docInfo, fresh, "doc_id"))
+    assert(rows(IndexStore.corpusInfo, ingested) ==
+      rows(IndexStore.corpusInfo, fresh))
+    // the same bucket directories, each still holding one part file
+    val buckets = (d: String) => new java.io.File(s"$d/postings").listFiles()
+      .filter(_.isDirectory).map(b => b.getName -> b.list().count(_.endsWith(".parquet")))
+      .toMap
+    assert(buckets(ingested) == buckets(fresh) && buckets(fresh).values.forall(_ == 1))
+  }
+
   test("ingest clears the leftovers of an earlier crashed swap") {
     val parent = Files.createTempDirectory("graft-ingest-stale")
     val dir = parent.resolve("index").toString
@@ -86,8 +114,8 @@ class IngestSpec extends SparkSpec {
     // an earlier swap died after its second rename, before deleting `old`;
     // another died mid-write, leaving a partial `tmp`
     val p = AtomicStore.paths(parent.toString, "index")
-    Files.createDirectories(p.old.toPath.resolve("term_frequency_in_doc"))
-    Files.writeString(p.old.toPath.resolve("term_frequency_in_doc/part-0"), "x")
+    Files.createDirectories(p.old.toPath.resolve("postings"))
+    Files.writeString(p.old.toPath.resolve("postings/part-0"), "x")
     Files.createDirectories(p.tmp.toPath)
     Files.writeString(p.tmp.toPath.resolve("partial"), "x")
     IndexStore.ingest(Seq((900002L, "zzzgamma zzzdelta")).toDF("doc_id", "text"),

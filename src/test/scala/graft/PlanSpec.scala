@@ -1,11 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
+import graft.index.InvertedIndex
+import graft.rank.BM25
+
 /** Physical-plan invariants — the 100 TB design assertions (SURVEY.md §7.4
   * "100 TB design notes"). These lock in what .explain review established:
   * pushdown reaches the scan, small sides broadcast, top-k never global-sorts,
   * nothing falls back to a cartesian product.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -148,5 +155,42 @@ class PlanSpec extends SparkSpec {
     // partkey window over reduced rows, suppkey distinct — a fourth would
     // mean raw lineitems started crossing a second time
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 3, p)
+  }
+
+  test("windowed top-m limits each key partially before its exchange") {
+    // skew safety of the per-key top-m: a hot key's rows are cut to m in
+    // every map task, so the exchange on the window key carries <= m rows
+    // per (task, key). A planner change that drops the partial limit
+    // would ship a stopword's whole posting list to one task.
+    val docs = table(spark, dir, "documents")
+    val frames = Seq(
+      "spellSuggest" -> BM25.spellSuggest(spark, docs, "spark joinn"),
+      "searchPrefix" -> BM25.searchPrefix(spark, docs, "sp jo"),
+      "championListsFromTf" ->
+        InvertedIndex.championListsFromTf(InvertedIndex.termFrequency(docs), 10))
+    frames.foreach { case (name, df) =>
+      assert(df.collect().nonEmpty, name)
+      val plan = df.queryExecution.executedPlan
+      val finals = collect(plan) {
+        case w: WindowGroupLimitExec if w.mode == Final => w }
+      assert(finals.size == 1, s"$name: final limits $finals\n$plan")
+      val limit = finals.head
+      // the nearest exchange below the final limit hashes the window key,
+      // and below it sits the partial limit on the same key
+      val ex = find(limit.child)(_.isInstanceOf[ShuffleExchangeLike])
+        .map(_.asInstanceOf[ShuffleExchangeLike])
+      assert(ex.exists(_.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.map(_.canonicalized) ==
+            limit.partitionSpec.map(_.canonicalized)
+        case _ => false
+      }), s"$name: no hash exchange on the window key below the final limit\n$plan")
+      assert(find(ex.get.child) {
+        case w: WindowGroupLimitExec => w.mode == Partial &&
+          w.partitionSpec.map(_.canonicalized) ==
+            limit.partitionSpec.map(_.canonicalized)
+        case _ => false
+      }.nonEmpty, s"$name: no partial limit below the exchange\n$plan")
+    }
   }
 }

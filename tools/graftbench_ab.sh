@@ -1,0 +1,94 @@
+#!/usr/bin/env bash
+# Paired A/B runs of graftbench: a base revision against the working tree.
+#
+#   tools/graftbench_ab.sh <base-rev> <workload> <pairs> [seed] [workdir]
+#
+# Exports <base-rev> with `git archive` into <workdir>/base and the working
+# tree (tracked and untracked, .gitignore'd files left out) into
+# <workdir>/head, then runs
+#   python3 graftbench/run.py --workload W --seed S --seconds 15 --trace 0
+# in both trees, pair by pair, alternating which side goes first (pair 1:
+# base first). Each tree builds its own jar on its first run. Prints each
+# pair's setup_s and op_p50_ms with the run's check status, then per metric
+# the medians, the base's interquartile range and how many pairs the head
+# won (lower is better for both metrics). Every run's last output line (the
+# run.py JSON) is kept in <workdir>/runs.jsonl.
+#
+# Defaults: seed 1, workdir ${TMPDIR:-/tmp}/graftbench_ab. The script only
+# calls graftbench; it changes nothing in either tree's graftbench/.
+set -euo pipefail
+
+if [ $# -lt 3 ]; then
+  echo "usage: $0 <base-rev> <workload> <pairs> [seed] [workdir]" >&2
+  exit 2
+fi
+base_rev=$1 workload=$2 pairs=$3 seed=${4:-1}
+work=${5:-${TMPDIR:-/tmp}/graftbench_ab}
+repo=$(git rev-parse --show-toplevel)
+base_sha=$(git -C "$repo" rev-parse --verify "$base_rev^{commit}")
+
+rm -rf "$work/base" "$work/head"
+mkdir -p "$work/base" "$work/head"
+git -C "$repo" archive "$base_sha" | tar -x -C "$work/base"
+(cd "$repo" && git ls-files -z --cached --others --exclude-standard \
+  | tar --null --ignore-failed-read -T - -cf - 2>/dev/null) | tar -x -C "$work/head"
+: > "$work/runs.jsonl"
+echo "base $base_rev ($base_sha) vs working tree; workload $workload, seed $seed, $pairs pairs"
+
+run() { # <side> <pair>: one run.py pass; appends {side, pair, result} to runs.jsonl
+  local out
+  out=$(cd "$work/$1" && python3 graftbench/run.py --workload "$workload" \
+    --seed "$seed" --seconds 15 --trace 0 2>"$work/$1.stderr" | tail -n 1) || true
+  python3 - "$1" "$2" "$out" >>"$work/runs.jsonl" <<'PY'
+import json, sys
+side, pair, line = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+try:
+    res = json.loads(line)
+except ValueError:
+    res = {"correct": False, "failed": None, "metrics": {}, "error": line[-300:]}
+print(json.dumps({"side": side, "pair": pair, "result": res}))
+PY
+}
+
+for ((i = 1; i <= pairs; i++)); do
+  if ((i % 2)); then order="base head"; else order="head base"; fi
+  for side in $order; do run "$side" "$i"; done
+  python3 - "$work/runs.jsonl" "$i" <<'PY'
+import json, sys
+rows = [json.loads(l) for l in open(sys.argv[1])]
+pair = int(sys.argv[2])
+cells = []
+for side in ("base", "head"):
+    r = next(x["result"] for x in rows if x["pair"] == pair and x["side"] == side)
+    m = r.get("metrics", {})
+    val = lambda k: m.get(k, {}).get("value", float("nan"))
+    ok = "ok" if r.get("correct") and r.get("failed") == 0 else "FAILED"
+    cells.append(f"{side} setup_s {val('setup_s'):8.3f} op_p50_ms {val('op_p50_ms'):9.1f} {ok}")
+print(f"pair {pair:2d}: " + " | ".join(cells), flush=True)
+PY
+done
+
+python3 - "$work/runs.jsonl" <<'PY'
+import json, statistics, sys
+rows = [json.loads(l) for l in open(sys.argv[1])]
+def vals(side, k):
+    return {x["pair"]: x["result"].get("metrics", {}).get(k, {}).get("value")
+            for x in rows if x["side"] == side}
+bad = [f"{x['side']}#{x['pair']}" for x in rows
+       if not (x["result"].get("correct") and x["result"].get("failed") == 0)]
+print("runs with a failed check or operation: " + (", ".join(bad) or "none"))
+for k in ("setup_s", "op_p50_ms"):
+    b, h = vals("base", k), vals("head", k)
+    both = sorted(p for p in b if p in h and b[p] is not None and h[p] is not None)
+    if not both:
+        print(f"{k}: no complete pair")
+        continue
+    bs, hs = [b[p] for p in both], [h[p] for p in both]
+    mb, mh = statistics.median(bs), statistics.median(hs)
+    q1, _, q3 = statistics.quantiles(bs, n=4, method="inclusive") if len(bs) > 1 else (bs[0],) * 3
+    wins = sum(1 for p in both if h[p] < b[p])
+    print(f"{k}: median base {mb:.3f} head {mh:.3f} ({(mh - mb) / mb * 100:+.1f}%); "
+          f"base quartiles {q1:.3f}-{q3:.3f} (IQR {q3 - q1:.3f}); "
+          f"head won {wins}/{len(both)} pairs; |median diff| {abs(mh - mb):.3f} "
+          f"{'>' if abs(mh - mb) > q3 - q1 else '<='} base IQR")
+PY
