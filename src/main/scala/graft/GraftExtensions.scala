@@ -8,10 +8,10 @@ import graft.functions.FunctionTable
 /** Library packaging for graft's SQL surface: sessions built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) get every `graft_*` kernel of
-  * `FunctionTable` by name in SQL, the banded range-join rewrite and the
-  * as-of join planner strategy — the idiomatic way to ship Catalyst
-  * extensions with a Spark library. DataFrame code needs none of it for
-  * the kernels: their Column helpers build the expressions directly.
+  * `FunctionTable` by name in SQL and the as-of join planner strategy —
+  * the idiomatic way to ship Catalyst extensions with a Spark library.
+  * DataFrame code needs none of it for the kernels: their Column helpers
+  * build the expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -19,8 +19,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(getClass.getName, name), builder))
     }
-    // optimizer rewrite: |a-b| <= tol inequality joins -> banded equi-joins
-    ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)
     // planner strategy: AsOfJoinNode -> AsOfJoinExec (sort-merge as-of)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

@@ -15,9 +15,12 @@ import graft.text.Tokenize
   * reference's four Cassandra tables (app/cassandra/schema.cql:5-32):
   * `postings`, one row per (term, doc) with its tf, the doc's length and
   * the term's positions (the positional index of Manning, Raghavan &
-  * Schütze, IIR §2.4); `doc_info`, every doc's length; `corpus_info`.
-  * df is not stored: it is |{docs: tf > 0}|, which a request counts over
-  * the posting rows it reads anyway.
+  * Schütze, IIR §2.4); `doc_info`, every doc's length; and `index_meta`,
+  * the store's one record of scalar values: the bucket count, the layout
+  * and the corpus stats (schema.cql's `corpus_info` row: doc_n,
+  * total_doc_length, plus avg_doc_length), which the driver reads without
+  * a job. df is not stored: it is |{docs: tf > 0}|, which a request
+  * counts over the posting rows it reads anyway.
   *
   * The reference makes term lookups single-partition reads by keying
   * Cassandra on (term, corpus_name) (SURVEY.md §4 row 1). Here `postings`
@@ -36,13 +39,21 @@ object IndexStore {
   val DefaultBuckets = 64
 
   /** The table layout `write` records in index_meta. Layout 1 (no
-    * `layout` column) had separate df and positional tables. */
-  private val Layout = 2
+    * `layout` column) had separate df and positional tables; layout 2 kept
+    * the corpus stats in a `corpus_info` table. */
+  private val Layout = 3
+
+  /** index_meta's one record. The length stats are None for a zero-row
+    * store (sum and avg over no rows are null). */
+  final case class IndexMeta(buckets: Int, docN: Long,
+                             totalDocLength: Option[Long],
+                             avgDocLength: Option[Double])
 
   /** Build and persist the index from ONE tokenize pass: (doc_id, tokens,
     * doc_length) is persisted once and both `postings` and `doc_info`
     * derive from it. Idempotent full recompute (the S8/A8 design decision:
-    * recompute beats read-modify-write). */
+    * recompute beats read-modify-write). `dir` is the store's own: the
+    * write replaces everything in it. */
   def write(docs: DataFrame, dir: String, buckets: Int = DefaultBuckets): Unit = {
     val toks = tokenized(docs).persist()
     try writeTables(postingsOf(toks, buckets), toks.select("doc_id", "doc_length"),
@@ -69,14 +80,15 @@ object IndexStore {
         array_sort(collect_list(col("pos"))).as("positions"))
 
   /** Write the tables, index_meta LAST. Both `write` and `ingest`'s
-    * sibling build run in a directory that may hold an earlier store, so
-    * the meta is deleted first: a build that dies part-way leaves no meta,
-    * and the serving readers refuse a store without one. */
+    * sibling build run in a directory that may hold an earlier store, of
+    * this or an older layout: the whole directory is cleared first, so no
+    * table of an earlier layout survives, and a build that dies part-way
+    * leaves no meta, which the serving readers refuse. */
   private def writeTables(post: DataFrame, info: DataFrame, dir: String,
                           buckets: Int): Unit = {
     val conf = post.sparkSession.sparkContext.hadoopConfiguration
-    val meta = new Path(s"$dir/index_meta")
-    meta.getFileSystem(conf).delete(meta, true)
+    val root = new Path(dir)
+    root.getFileSystem(conf).delete(root, true)
     post.select(postingsSchema.fieldNames.map(col): _*)
       .write.mode("overwrite").partitionBy("term_bucket")
       .parquet(s"$dir/postings")
@@ -84,19 +96,24 @@ object IndexStore {
     // the ONE corpus-stats formula, shared with the recompute path — if
     // the stored and recomputed aggregations ever drifted, searchStored
     // and search would silently disagree
-    InvertedIndex.corpusInfoFromDocInfo(info)
-      .write.mode("overwrite").parquet(s"$dir/corpus_info")
+    val stats = InvertedIndex.corpusInfoFromDocInfo(info).head()
     // the bucket count is INDEX metadata, not caller knowledge: a reader
     // pruning with the wrong modulus silently treats ~ (1 - 1/buckets) of
     // terms as OOV (confidently wrong results, no error). One row,
-    // written on the driver like storedBuckets reads it: no Spark job.
+    // written on the driver like indexMeta reads it: no Spark job.
     val schema = MessageTypeParser.parseMessageType(
-      "message index_meta { required int32 buckets; required int32 layout; }")
+      "message index_meta { required int32 buckets; required int32 layout; " +
+        "required int64 doc_n; optional int64 total_doc_length; " +
+        "optional double avg_doc_length; }")
+    val row = new SimpleGroupFactory(schema).newGroup()
+      .append("buckets", buckets).append("layout", Layout)
+      .append("doc_n", stats.getLong(0))
+    if (!stats.isNullAt(1)) row.append("total_doc_length", stats.getLong(1))
+    if (!stats.isNullAt(2)) row.append("avg_doc_length", stats.getDouble(2))
     val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
-      new Path(meta, "part-00000.parquet"), conf)).withType(schema).withConf(conf).build()
-    try writer.write(new SimpleGroupFactory(schema).newGroup()
-      .append("buckets", buckets).append("layout", Layout))
-    finally writer.close()
+      new Path(s"$dir/index_meta/part-00000.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    try writer.write(row) finally writer.close()
   }
 
   /** Merge a small delta corpus into a stored index WITHOUT re-tokenizing
@@ -104,8 +121,8 @@ object IndexStore {
     * Sources.ingestLocalFile's one-file flow — app/index.sh:21-41). The
     * guard below refuses doc_ids already indexed, so every (term, doc)
     * posting of the delta is new: the merged postings and doc_info are
-    * plain unions, and corpus stats re-derive from the merged doc_info,
-    * never from old text.
+    * plain unions, and the corpus stats in index_meta re-derive from the
+    * merged doc_info, never from old text.
     *
     * Write-then-swap at the index root (`AtomicStore`, same as
     * Streaming.incrementalIndexWriter): the merge READS the tables it
@@ -132,7 +149,6 @@ object IndexStore {
     val delta = tokenized(newDocs)
     val store = new java.io.File(dir).getAbsoluteFile
     val p = AtomicStore.paths(store.getParent, store.getName)
-    if (p.tmp.exists()) AtomicStore.delete(p.tmp) // partial, from a crashed ingest
     writeTables(
       postings(spark, dir).unionByName(postingsOf(delta, buckets))
         .repartition(col("term_bucket")),
@@ -165,14 +181,23 @@ object IndexStore {
   def docInfo(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(docInfoSchema).parquet(s"$dir/doc_info")
 
-  def corpusInfo(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(corpusInfoSchema).parquet(s"$dir/corpus_info")
+  /** The corpus stats as a 1-row local frame, from index_meta (no job). */
+  def corpusInfo(spark: SparkSession, dir: String): DataFrame = {
+    val m = indexMeta(spark, dir)
+    spark.createDataFrame(java.util.List.of(Row(m.docN,
+      m.totalDocLength.getOrElse(null), m.avgDocLength.getOrElse(null))),
+      corpusInfoSchema)
+  }
 
-  /** The bucket count a store was written with (index_meta), once the
-    * store is known complete and of the current layout. Eagerly read on
-    * the driver straight from the 1-row part file — a `spark.read` here
-    * would be a Spark job per call on the request path. */
-  def storedBuckets(spark: SparkSession, dir: String): Int = {
+  /** The bucket count a store was written with. */
+  def storedBuckets(spark: SparkSession, dir: String): Int =
+    indexMeta(spark, dir).buckets
+
+  /** index_meta's record, once the store is known complete and of the
+    * current layout. Eagerly read on the driver straight from the 1-row
+    * part file — a `spark.read` here would be a Spark job per call on the
+    * request path. */
+  def indexMeta(spark: SparkSession, dir: String): IndexMeta = {
     val meta = new Path(s"$dir/index_meta")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = meta.getFileSystem(conf)
@@ -186,12 +211,15 @@ object IndexStore {
       .withConf(conf).build()
     try {
       val row = reader.read()
-      require(row != null, s"IndexStore: ${parts.head} holds no bucket count")
+      require(row != null, s"IndexStore: ${parts.head} holds no record")
       val layout =
         if (row.getType.containsField("layout")) row.getInteger("layout", 0) else 1
       require(layout == Layout,
         s"IndexStore: $dir has index layout $layout, this reader serves layout $Layout; $rewrite")
-      row.getInteger("buckets", 0)
+      def has(field: String) = row.getFieldRepetitionCount(field) > 0
+      IndexMeta(row.getInteger("buckets", 0), row.getLong("doc_n", 0),
+        Option.when(has("total_doc_length"))(row.getLong("total_doc_length", 0)),
+        Option.when(has("avg_doc_length"))(row.getDouble("avg_doc_length", 0)))
     } finally reader.close()
   }
 
@@ -202,13 +230,13 @@ object IndexStore {
     * from the store's own metadata — a caller-supplied count could
     * silently mis-prune. */
   def postingsForTerms(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame =
-    postingsForTerms(spark, dir, terms, storedBuckets(spark, dir))
+    postingsForTerms(spark, dir, terms, indexMeta(spark, dir))
 
-  /** As above with the store's bucket count already read, so a request
-    * that reads the postings more than once reads index_meta once. */
+  /** As above with the store's record already read, so a request that
+    * reads the postings and the corpus stats reads index_meta once. */
   def postingsForTerms(spark: SparkSession, dir: String, terms: Seq[String],
-                       buckets: Int): DataFrame =
-    bucketRead(spark, dir, terms, buckets)
+                       meta: IndexMeta): DataFrame =
+    bucketRead(spark, dir, terms, meta.buckets)
       .select("term", "doc_id", "term_frequency", "doc_length")
 
   /** (doc_id, pos) of one term's occurrences: its postings' positions,
@@ -223,12 +251,12 @@ object IndexStore {
     * touches <= k of `buckets` directories — never the corpus, never the
     * full table. Results ≡ InvertedIndex.phraseMatch on the indexed docs. */
   def phraseMatchStored(spark: SparkSession, dir: String, phrase: String): DataFrame =
-    phraseMatchStored(spark, dir, phrase, storedBuckets(spark, dir))
+    phraseMatchStored(spark, dir, phrase, indexMeta(spark, dir))
 
   def phraseMatchStored(spark: SparkSession, dir: String, phrase: String,
-                        buckets: Int): DataFrame =
+                        meta: IndexMeta): DataFrame =
     InvertedIndex.phraseFromPostings(InvertedIndex.phraseTerms(phrase),
-      positionsOf(spark, dir, buckets))
+      positionsOf(spark, dir, meta.buckets))
 
   /** Proximity search served from the stored postings — both sides of the
     * banded join read only their term's hash bucket. */

@@ -118,10 +118,10 @@ object InvertedIndex {
   /** Proximity match: docs where two DISTINCT terms co-occur within
     * `window` token positions (either order), with pair count and closest
     * distance. Candidates come from a banded equi-join keyed
-    * (doc_id, pos/window band) — the BandedRangeJoinRule trick applied to
-    * token positions: one side explodes to 3 adjacent bands, so every
-    * qualifying pair matches in EXACTLY one band (dup-free) and the join
-    * never degenerates to per-doc position cross products. Like
+    * (doc_id, pos/window band) — TemporalJoins.bandedRangeJoin's trick
+    * applied to token positions: one side explodes to 3 adjacent bands, so
+    * every qualifying pair matches in EXACTLY one band (dup-free) and the
+    * join never degenerates to per-doc position cross products. Like
     * phraseMatch, each side is one term's postings; the stored postings
     * serve them as pruned bucket lookups. */
   def proximityMatch(docs: DataFrame, termA: String, termB: String,
@@ -222,7 +222,7 @@ object InvertedIndex {
 
   /** The corpus-stats aggregation over an existing doc_info table — the
     * single source of the formula for both the recompute path (above) and
-    * IndexStore's persisted table (which searchStored reads back). */
+    * the stats IndexStore records in index_meta. */
   def corpusInfoFromDocInfo(info: DataFrame): DataFrame =
     info.agg(
       count(lit(1)).as("doc_n"),

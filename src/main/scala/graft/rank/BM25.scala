@@ -235,20 +235,28 @@ object BM25 {
   /** BM25 search served from a persisted IndexStore — no recompute; the
     * postings read opens only the query terms' hash-bucket directories
     * (the Cassandra-token-routing equivalent) and carries doc_length, so
-    * the only other read is the 1-row corpus stats. The bucket modulus
-    * comes from the store's own metadata, read once per request. */
+    * it is the request's only scan. The bucket modulus and the corpus
+    * stats come from the store's index_meta, read once per request on the
+    * driver. */
   def searchStored(spark: SparkSession, indexDir: String, query: String,
                    k1: Double = 1.0, b: Double = 0.75,
-                   topK: Int = 10): DataFrame =
-    top(scorePostings(
-      withDocFrequency(IndexStore.postingsForTerms(spark, indexDir, queryTerms(query))),
-      IndexStore.corpusInfo(spark, indexDir), k1, b), topK)
+                   topK: Int = 10): DataFrame = {
+    val meta = IndexStore.indexMeta(spark, indexDir)
+    top(scorePostings(storedPostings(spark, indexDir, queryTerms(query), meta),
+      k1, b), topK)
+  }
 
-  /** Stored postings with doc_frequency attached, counted per term over the
-    * rows the request reads anyway (df == |{docs: tf > 0}|). A window, not
-    * an aggregate joined back: the postings are scanned once. */
-  private def withDocFrequency(postings: DataFrame): DataFrame =
-    postings.withColumn("doc_frequency", count(lit(1)).over(Window.partitionBy("term")))
+  /** The terms' stored postings with every column bm25Score reads:
+    * doc_frequency counted per term over the rows the request reads anyway
+    * (df == |{docs: tf > 0}|; a window, not an aggregate joined back, so
+    * the postings are scanned once), and doc_n and avg_doc_length as
+    * literals from index_meta. */
+  private def storedPostings(spark: SparkSession, indexDir: String,
+                             terms: Seq[String], meta: IndexStore.IndexMeta): DataFrame =
+    IndexStore.postingsForTerms(spark, indexDir, terms, meta)
+      .withColumn("doc_frequency", count(lit(1)).over(Window.partitionBy("term")))
+      .withColumn("doc_n", lit(meta.docN))
+      .withColumn("avg_doc_length", typedLit(meta.avgDocLength))
 
   /** The scalar A7 score (app/query.py:131-135) over the joined columns
     * (term_frequency, doc_frequency, doc_length, doc_n, avg_doc_length) —
@@ -260,27 +268,26 @@ object BM25 {
         lit(b) * col("doc_length") / col("avg_doc_length")) +
         col("term_frequency"))
 
-  /** Per-doc UNROUNDED BM25 sums over postings that already carry
-    * doc_frequency and doc_length — the shared scoring core; top() and
-    * the phrase-boosted form round only their FINAL score (a boost over a
+  /** Per-doc UNROUNDED BM25 sums over postings that already carry every
+    * column bm25Score reads — the shared scoring core; top() and the
+    * phrase-boosted form round only their FINAL score (a boost over a
     * pre-rounded sum would compound rounding error). */
-  private def scorePostings(postings: DataFrame, stats: DataFrame,
-                            k1: Double, b: Double): DataFrame =
+  private def scorePostings(postings: DataFrame, k1: Double, b: Double): DataFrame =
     postings
-      .crossJoin(broadcast(stats))                        // N, avgdl as 1-row side
       .withColumn("bm25", bm25Score(k1, b))
       .groupBy("doc_id")
       .agg(sum("bm25").as("score"))
 
-  /** The recompute forms' scoring: J1 (vocab) + J2 (doc stats) joins,
-    * then the shared core. Empty-on-OOV (S9) falls out naturally: zero
-    * surviving postings => zero rows, schema intact. */
+  /** The recompute forms' scoring: J1 (vocab) + J2 (doc stats) joins and
+    * the 1-row corpus stats, then the shared core. Empty-on-OOV (S9) falls
+    * out naturally: zero surviving postings => zero rows, schema intact. */
   private def scoreAll(qtf: DataFrame, qdf: DataFrame, dl: DataFrame,
                        stats: DataFrame, k1: Double, b: Double): DataFrame =
     scorePostings(qtf
       .join(broadcast(qdf), Seq("term"))                  // J1
-      .join(dl, Seq("doc_id")),                           // J2
-      stats, k1, b)
+      .join(dl, Seq("doc_id"))                            // J2
+      .crossJoin(broadcast(stats)),                       // N, avgdl as 1-row side
+      k1, b)
 
   /** O1: rounded top-k of per-doc scores. */
   private def top(scores: DataFrame, topK: Int): DataFrame =
@@ -403,11 +410,9 @@ object BM25 {
                                 b: Double = 0.75, topK: Int = 10,
                                 boost: Double = 0.5): DataFrame = {
     val terms = InvertedIndex.phraseTerms(phrase).distinct
-    val buckets = IndexStore.storedBuckets(spark, indexDir)
-    val scores = scorePostings(
-      withDocFrequency(IndexStore.postingsForTerms(spark, indexDir, terms, buckets)),
-      IndexStore.corpusInfo(spark, indexDir), k1, b)
-    val phr = IndexStore.phraseMatchStored(spark, indexDir, phrase, buckets)
+    val meta = IndexStore.indexMeta(spark, indexDir)
+    val scores = scorePostings(storedPostings(spark, indexDir, terms, meta), k1, b)
+    val phr = IndexStore.phraseMatchStored(spark, indexDir, phrase, meta)
     scores.join(phr, Seq("doc_id"), "left")
       .withColumn("n_phrase", coalesce(col("n_occurrences"), lit(0L)))
       .select(col("doc_id"),
@@ -460,10 +465,9 @@ object BM25 {
     }
     // df counts over the workload's distinct terms, BEFORE the query join
     // repeats a posting once per query holding its term
-    val scored = withDocFrequency(
-        IndexStore.postingsForTerms(spark, indexDir, qTerms.map(_._2).distinct))
+    val scored = storedPostings(spark, indexDir, qTerms.map(_._2).distinct,
+        IndexStore.indexMeta(spark, indexDir))
       .join(broadcast(qTerms.toDF("query_id", "term")), Seq("term"))
-      .crossJoin(broadcast(IndexStore.corpusInfo(spark, indexDir)))
       .withColumn("bm25", bm25Score(k1, b))
     rankMany(scored, topK)
   }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  /** (table, directories opened) of every postings or doc_info scan in
-    * the plan, AQE stages and subqueries included: a postings scan opens
-    * `term_bucket=` directories, a doc_info scan its table root. */
+  /** (table, directories opened) of every file scan in the plan, AQE
+    * stages and subqueries included: a postings scan opens `term_bucket=`
+    * directories, any other scan its table root. */
   private def storeScans(q: DataFrame): Seq[(String, Set[String])] =
     collectWithSubqueries(q.queryExecution.executedPlan) {
       case s: FileSourceScanExec =>
@@ -24,7 +24,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           (roots.map(_.getParent.getName).distinct.mkString(","),
             roots.map(_.getName).toSet)
         else (roots.map(_.getName).distinct.mkString(","), Set.empty[String])
-    }.filter { case (t, _) => Set("postings", "doc_info").contains(t) }
+    }
 
   /** Leaf scans of the postings table, as plan strings. */
   private def postingScans(q: DataFrame): Seq[String] =
@@ -73,8 +73,8 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       == Set("spark"))
     // every postings scan of the serving surface opens exactly its terms'
     // bucket directories — never the table root, which would list all 16
-    // buckets — and no serving plan scans doc_info: doc_length comes with
-    // the posting
+    // buckets — and no serving plan scans any other table: doc_length
+    // comes with the posting, the corpus stats with index_meta
     def dirs(terms: String*) =
       terms.map(t => s"term_bucket=${IndexStore.bucketOf(t, 16)}").toSet
     val bag = dirs("spark", "join", "window")
@@ -185,6 +185,11 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         InvertedIndex.proximityMatch(docs, "the", "fox", 8))
       same(IndexStore.proximityMatchStored(spark, d, "the", oov, 8),
         InvertedIndex.proximityMatch(docs, "the", oov, 8))
+      same(BM25.searchManyStored(spark, d, Seq((1L, "quick fox"), (2L, oov))),
+        BM25.searchMany(spark, docs, Seq((1L, "quick fox"), (2L, oov))
+          .toDF("query_id", "query")))
+      // the zero-row store records null length stats, as the recompute does
+      same(IndexStore.corpusInfo(spark, d), InvertedIndex.corpusInfo(docs))
     }
   }
 
@@ -204,7 +209,8 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     import org.apache.spark.sql.functions._
     val docs = table(spark, "/root/testdata/sf0.001", "documents")
     assert(IndexStore.docInfo(spark, dir).count() == docs.count())
-    assert(IndexStore.corpusInfo(spark, dir).count() == 1)
+    assert(IndexStore.corpusInfo(spark, dir).collect().toSeq ==
+      InvertedIndex.corpusInfo(docs).collect().toSeq)
     // the one postings table carries tf, positions and doc length; df is
     // its row count per term — each equal to the recompute table
     val post = IndexStore.postings(spark, dir)
@@ -277,7 +283,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("the index build runs <= 6 jobs from one tokenize pass") {
     // the docs are persisted and counted first, so every job in the call
     // is the build's own: the tokens' cache, the postings exchange and
-    // write, doc_info, corpus_info's exchange and write (index_meta is
+    // write, doc_info, and the corpus stats' collect (index_meta is
     // written on the driver)
     import spark.implicits._
     val docs = (0 until 400).map(i => (i.toLong, s"w${i % 7} w${i % 13} w${i % 31} w$i"))
@@ -314,15 +320,20 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     IndexStore.write(docs, d)
     def refused(body: => Any): String =
       intercept[IllegalArgumentException](body).getMessage
-    // the five-table store's index_meta held only the bucket count
-    Seq(IndexStore.DefaultBuckets).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$d/index_meta")
-    Seq(refused(BM25.searchStored(spark, d, "beta")),
-      refused(IndexStore.phraseMatchStored(spark, d, "alpha beta")),
-      refused(IndexStore.ingest(Seq((3L, "delta")).toDF("doc_id", "text"), d)))
-      .foreach { m =>
-        assert(m.contains("index layout 1") && m.contains("re-`write` the store"), m)
-      }
+    // the five-table store's index_meta held only the bucket count; the
+    // layout-2 store's also its layout, with the stats in corpus_info
+    for ((meta, layout) <- Seq(
+        Seq(IndexStore.DefaultBuckets).toDF("buckets") -> 1,
+        Seq((IndexStore.DefaultBuckets, 2)).toDF("buckets", "layout") -> 2)) {
+      meta.coalesce(1).write.mode("overwrite").parquet(s"$d/index_meta")
+      Seq(refused(BM25.searchStored(spark, d, "beta")),
+        refused(IndexStore.phraseMatchStored(spark, d, "alpha beta")),
+        refused(IndexStore.ingest(Seq((3L, "delta")).toDF("doc_id", "text"), d)))
+        .foreach { m =>
+          assert(m.contains(s"index layout $layout") &&
+            m.contains("re-`write` the store"), m)
+        }
+    }
     // a build that dies part-way has deleted index_meta and never wrote it
     // back: the half-written store is refused, not served empty
     val failing = spark.range(1).select(col("id").as("doc_id"),
@@ -334,6 +345,25 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // re-writing in place makes it servable again
     IndexStore.write(docs, d)
     assert(BM25.searchStored(spark, d, "beta").count() == 2)
+  }
+
+  test("write replaces every table of an earlier layout") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-index-relayout").toString
+    // the tables of the layout-1 and layout-2 stores
+    Seq("term_frequency_in_doc", "doc_frequency_of_term", "positional_postings",
+      "corpus_info").foreach { t =>
+      Files.createDirectories(java.nio.file.Paths.get(d, t))
+      Files.writeString(java.nio.file.Paths.get(d, t, "part-00000.parquet"), "x")
+    }
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    IndexStore.write(docs, d)
+    val tables = Set("doc_info", "index_meta", "postings")
+    assert(new java.io.File(d).list().toSet == tables)
+    IndexStore.ingest(Seq((3L, "gamma delta")).toDF("doc_id", "text"), d)
+    assert(new java.io.File(d).list().toSet == tables)
+    assert(IndexStore.indexMeta(spark, d) ==
+      IndexStore.IndexMeta(IndexStore.DefaultBuckets, 3L, Some(6L), Some(2.0)))
   }
 
   test("OOV query against the stored index is empty with intact schema") {

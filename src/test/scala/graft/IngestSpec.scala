@@ -100,6 +100,7 @@ class IngestSpec extends SparkSpec {
       rows(IndexStore.docInfo, fresh, "doc_id"))
     assert(rows(IndexStore.corpusInfo, ingested) ==
       rows(IndexStore.corpusInfo, fresh))
+    assert(IndexStore.indexMeta(spark, ingested) == IndexStore.indexMeta(spark, fresh))
     // the same bucket directories, each still holding one part file
     val buckets = (d: String) => new java.io.File(s"$d/postings").listFiles()
       .filter(_.isDirectory).map(b => b.getName -> b.list().count(_.endsWith(".parquet")))

@@ -9,9 +9,10 @@
 #   python3 graftbench/run.py --workload W --seed S --seconds 15 --trace 0
 # in both trees, pair by pair, alternating which side goes first (pair 1:
 # base first). Each tree builds its own jar on its first run. Prints each
-# pair's setup_s and op_p50_ms with the run's check status, then per metric
-# the medians, the base's interquartile range and how many pairs the head
-# won (lower is better for both metrics). Every run's last output line (the
+# pair's setup_s and op_p50_ms with the run's check status, then each side's
+# failed and attempted operations summed over its runs, and per metric the
+# medians, the base's interquartile range and how many pairs the head won
+# (lower is better for both metrics). Every run's last output line (the
 # run.py JSON) is kept in <workdir>/runs.jsonl.
 #
 # Defaults: seed 1, workdir ${TMPDIR:-/tmp}/graftbench_ab. The script only
@@ -77,6 +78,11 @@ def vals(side, k):
 bad = [f"{x['side']}#{x['pair']}" for x in rows
        if not (x["result"].get("correct") and x["result"].get("failed") == 0)]
 print("runs with a failed check or operation: " + (", ".join(bad) or "none"))
+for side in ("base", "head"):
+    res = [x["result"] for x in rows if x["side"] == side]
+    failed = sum(r.get("failed") or 0 for r in res)
+    attempted = sum(r.get("attempted") or 0 for r in res)
+    print(f"{side}: {failed} of {attempted} operations failed over {len(res)} runs")
 for k in ("setup_s", "op_p50_ms"):
     b, h = vals("base", k), vals("head", k)
     both = sorted(p for p in b if p in h and b[p] is not None and h[p] is not None)
