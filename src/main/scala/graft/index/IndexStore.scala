@@ -1,11 +1,16 @@
 package graft.index
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.AtomicStore
@@ -33,6 +38,12 @@ import graft.text.Tokenize
   * listing is itself a distributed job, paid per request. At 100 TB the
   * difference between opening 4/64 buckets and the full table IS the
   * query latency.
+  *
+  * A request whose k bucket files are small is not a Spark job at all:
+  * `postingsOnDriver` reads them on the driver with parquet-hadoop's
+  * reader, as `indexMeta` reads the meta, when their lengths sum to at
+  * most [[DriverReadMaxBytes]]; `BM25.searchStored` then scores the rows
+  * on the driver. Above the cap the request is the pruned Spark scan.
   */
 object IndexStore {
 
@@ -189,6 +200,72 @@ object IndexStore {
       corpusInfoSchema)
   }
 
+  /** The byte cap of a driver-side postings read: the summed lengths of
+    * the part files in a request's `term_bucket=` directories. Sized by
+    * measurement on a 4-core box, local[4] (CHANGES.md), with a query term
+    * in every doc: at 7.9 MB of bucket files a driver-served search took a
+    * median 383 ms against the Spark plan's 468 ms and allocated about
+    * 390 MB of short-lived objects on the driver; at 16 MB it took 752 ms
+    * against 506 ms. */
+  val DriverReadMaxBytes: Long = 8L << 20
+
+  /** The four BM25 columns of the terms' postings, read on the driver
+    * from their bucket files with a term filter pushed into the reader,
+    * or None when those files hold more than `maxBytes` (the caller then
+    * plans the Spark scan). The decision is made from a driver listing of
+    * the k directories, before anything is planned; no Spark job runs. */
+  private[graft] def postingsOnDriver(spark: SparkSession, dir: String, terms: Seq[String],
+                       meta: IndexMeta, maxBytes: Long): Option[Seq[Row]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = bucketFiles(spark, dir, terms, meta.buckets)
+    if (files.map(_.getLen).sum > maxBytes) None
+    else Some(files.flatMap { f =>
+      val reader = ParquetReader.builder(BM25Columns, f.getPath).withConf(conf)
+        .withFilter(FilterCompat.get(FilterApi.in[Binary, Operators.BinaryColumn](
+          FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava)))
+        .build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => Row(g.getString("term", 0), g.getLong("doc_id", 0),
+          g.getLong("term_frequency", 0), g.getLong("doc_length", 0))).toVector
+      finally reader.close()
+    })
+  }
+
+  /** Reads the four BM25 columns with the repetition the file declares
+    * for each (a read schema written by hand must match it: Spark writes
+    * `term_frequency` as required). */
+  private object BM25Columns extends GroupReadSupport {
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      val file = context.getFileSchema
+      val cols = Set("term", "doc_id", "term_frequency", "doc_length")
+      new ReadSupport.ReadContext(new MessageType(file.getName,
+        file.getFields.asScala.filter(f => cols(f.getName)).asJava))
+    }
+  }
+
+  /** The part files of the terms' bucket directories. Names starting
+    * with `.` or `_` (checksums, commit markers) are not data. */
+  private def bucketFiles(spark: SparkSession, dir: String, terms: Seq[String],
+                          buckets: Int): Seq[FileStatus] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    bucketDirs(spark, dir, terms, buckets)._2.flatMap(fs.listStatus(_))
+      .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+        !f.getPath.getName.startsWith("_"))
+  }
+
+  /** The terms' bucket ids, and those of their `term_bucket=<b>`
+    * directories that exist (a zero-token store, or an OOV term's empty
+    * bucket, has none). A missing postings TABLE fails loudly — never
+    * served as empty. */
+  private def bucketDirs(spark: SparkSession, dir: String, terms: Seq[String],
+                         buckets: Int): (Seq[Long], Seq[Path]) = {
+    val ids = terms.map(t => bucketOf(t, buckets)).distinct
+    val root = new Path(s"$dir/postings")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(root), s"IndexStore: no table at $root")
+    (ids, ids.map(b => new Path(root, s"term_bucket=$b")).filter(fs.exists))
+  }
+
   /** The bucket count a store was written with. */
   def storedBuckets(spark: SparkSession, dir: String): Int =
     indexMeta(spark, dir).buckets
@@ -265,27 +342,20 @@ object IndexStore {
     InvertedIndex.proximityFromPostings(termA, termB, window,
       positionsOf(spark, dir, storedBuckets(spark, dir)))
 
-  /** The one serving-path postings reader: opens only the
-    * `term_bucket=<b>` directories the terms hash to and that exist (a
-    * zero-token store, or an OOV term's empty bucket, has none), so the
-    * read lists k directories on the driver instead of every bucket in a
-    * listing job. The bucket and term predicates stay on the frame, so
-    * the scan still carries term_bucket PartitionFilters and only the
+  /** The one Spark serving-path postings reader: opens only the
+    * `term_bucket=<b>` directories the terms hash to and that exist, so
+    * the read lists k directories on the driver instead of every bucket
+    * in a listing job. The bucket and term predicates stay on the frame,
+    * so the scan still carries term_bucket PartitionFilters and only the
     * terms' rows survive. No bucket directory: an empty frame with the
-    * table's schema intact (the S9 standing). A missing TABLE fails
-    * loudly — never served as empty. */
+    * table's schema intact (the S9 standing). */
   private def bucketRead(spark: SparkSession, dir: String, terms: Seq[String],
                          buckets: Int): DataFrame = {
-    val table = s"$dir/postings"
-    val bucketIds = terms.map(t => bucketOf(t, buckets)).distinct
-    val root = new Path(table)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"IndexStore: no table at $table")
-    val dirs = bucketIds.map(b => new Path(root, s"term_bucket=$b"))
-      .filter(fs.exists).map(_.toString)
+    val (bucketIds, dirs) = bucketDirs(spark, dir, terms, buckets)
     val df =
       if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), postingsSchema)
-      else spark.read.schema(postingsSchema).option("basePath", table).parquet(dirs: _*)
+      else spark.read.schema(postingsSchema).option("basePath", s"$dir/postings")
+        .parquet(dirs.map(_.toString): _*)
     df.filter(col("term_bucket").isin(bucketIds: _*) &&
       col("term").isin(terms: _*))
   }

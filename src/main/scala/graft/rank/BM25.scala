@@ -1,14 +1,22 @@
 package graft.rank
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BindReferences
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import graft.index.{IndexStore, InvertedIndex}
 
 /** Okapi BM25 ranking (app/query.py:130-143) as ONE declarative plan — no
-  * driver-side collect loops (the reference does O(terms + docs) sequential
-  * Cassandra round-trips, app/query.py:58-103; here those are two broadcast
-  * joins).
+  * driver-side loop per term or doc (the reference does O(terms + docs)
+  * sequential Cassandra round-trips, app/query.py:58-103; here those are
+  * two broadcast joins). One bounded exception: a stored request whose
+  * bucket files sum to at most `IndexStore.DriverReadMaxBytes` reads and
+  * scores its postings on the driver in one pass, with no Spark job
+  * (`searchStored`).
   *
   * Formula parity (app/query.py:131-135): raw IDF `ln(N/df)` (no +0.5
   * smoothing, no max(0,.)), k1=1.0, b=0.75, score summed per doc, top-k
@@ -232,18 +240,67 @@ object BM25 {
       .select("doc_id")
   }
 
-  /** BM25 search served from a persisted IndexStore — no recompute; the
-    * postings read opens only the query terms' hash-bucket directories
-    * (the Cassandra-token-routing equivalent) and carries doc_length, so
-    * it is the request's only scan. The bucket modulus and the corpus
-    * stats come from the store's index_meta, read once per request on the
-    * driver. */
+  /** BM25 search served from a persisted IndexStore — no recompute. The
+    * bucket modulus and the corpus stats come from the store's
+    * index_meta, read once per request on the driver, and only the query
+    * terms' hash-bucket directories are opened (the
+    * Cassandra-token-routing equivalent).
+    *
+    * When those directories' part files sum to at most
+    * `driverReadMaxBytes` (default [[IndexStore.DriverReadMaxBytes]]),
+    * the request runs no Spark job: the rows are read on the driver
+    * (`IndexStore.postingsOnDriver`) and scored there by [[topOnDriver]],
+    * and the answer is a LocalRelation. Above the cap, the postings read
+    * is a pruned Spark scan and the scoring a plan (df window, per-doc
+    * sum, top-k). Both branches return the same rows. */
   def searchStored(spark: SparkSession, indexDir: String, query: String,
-                   k1: Double = 1.0, b: Double = 0.75,
-                   topK: Int = 10): DataFrame = {
+                   k1: Double = 1.0, b: Double = 0.75, topK: Int = 10,
+                   driverReadMaxBytes: Long = IndexStore.DriverReadMaxBytes): DataFrame = {
     val meta = IndexStore.indexMeta(spark, indexDir)
-    top(scorePostings(storedPostings(spark, indexDir, queryTerms(query), meta),
-      k1, b), topK)
+    val terms = queryTerms(query)
+    IndexStore.postingsOnDriver(spark, indexDir, terms, meta, driverReadMaxBytes) match {
+      case Some(rows) => topOnDriver(spark, rows, meta, k1, b, topK)
+      case None =>
+        top(scorePostings(storedPostings(spark, indexDir, terms, meta), k1, b), topK)
+    }
+  }
+
+  /** The rounded top-k of driver-held (term, doc_id, term_frequency,
+    * doc_length) postings, as a LocalRelation. df is counted per term over
+    * the rows, as the Spark plan's window counts it; each posting is
+    * scored, and each per-doc sum rounded, by evaluating the plan's own
+    * Catalyst expressions (`bm25Score`, `roundedRank`) on the driver: one
+    * formula, no job. */
+  private def topOnDriver(spark: SparkSession, postings: Seq[Row],
+                          meta: IndexStore.IndexMeta, k1: Double, b: Double,
+                          topK: Int): DataFrame = {
+    val df = postings.groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
+    val score = evaluator(spark, bm25Score(k1, b), "term_frequency" -> LongType,
+      "doc_length" -> LongType, "doc_frequency" -> LongType, "doc_n" -> LongType,
+      "avg_doc_length" -> DoubleType)
+    val avg = meta.avgDocLength.map(Double.box).orNull
+    val sums = postings.groupMapReduce(_.getLong(1))(r => score(InternalRow(
+      r.getLong(2), r.getLong(3), df(r.getString(0)), meta.docN, avg))
+      .asInstanceOf[Double])(_ + _)
+    val rank = evaluator(spark, roundedRank, "score" -> DoubleType)
+    val rows = sums.toSeq.map { case (d, s) => Row(d, rank(InternalRow(s))) }
+      .sortBy(r => (-r.getDouble(1), r.getLong(0)))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(topK)
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", LongType), StructField("doc_rank", DoubleType))))
+  }
+
+  /** A Column as a driver-side function of rows with the given fields:
+    * Catalyst resolves it over an empty relation of those fields, and the
+    * resolved expression is bound to the row's ordinals and interpreted. */
+  private def evaluator(spark: SparkSession, c: Column,
+                        fields: (String, DataType)*): InternalRow => Any = {
+    val schema = StructType(fields.map { case (n, t) => StructField(n, t) })
+    spark.createDataFrame(java.util.List.of[Row](), schema).select(c)
+      .queryExecution.analyzed match {
+      case Project(Seq(e), child) => BindReferences.bindReference(e, child.output).eval
+    }
   }
 
   /** The terms' stored postings with every column bm25Score reads:
@@ -291,9 +348,12 @@ object BM25 {
 
   /** O1: rounded top-k of per-doc scores. */
   private def top(scores: DataFrame, topK: Int): DataFrame =
-    scores.select(col("doc_id"), round(col("score"), 4).as("doc_rank"))
+    scores.select(col("doc_id"), roundedRank.as("doc_rank"))
       .orderBy(desc("doc_rank"), asc("doc_id"))
       .limit(topK)
+
+  /** A per-doc score rounded to 4 decimals (HALF_UP). */
+  private def roundedRank: Column = round(col("score"), 4)
 
   /** Shared frames for pseudo-relevance feedback: the corpus stat tables,
     * the feedback top-`feedbackK` of the ORIGINAL query, and the top-

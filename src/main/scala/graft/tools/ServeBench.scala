@@ -16,7 +16,8 @@ import org.apache.spark.sql.DataFrame
   * 2..reps give warm p50/p95/p99. Each request executes to a noop sink
   * (full plan runs, rows discarded executor-side — the Bench contract).
   *
-  * Output: one JSON line, also persisted to /root/repo/SERVE_BENCH.json:
+  * Output: one JSON line on stdout, and also written to the file named by
+  * the optional first argument (`runMain graft.tools.ServeBench out.json`):
   * {"metric":"serve","build_sec":…,"reps":N,
   *  "ops":{name:{"cold_sec":…,"p50":…,"p95":…,"p99":…}}}
   * With reps ~40 the p99 is the warm max — honest at this sample size;
@@ -96,9 +97,8 @@ object ServeBench {
     val line = s"""{"metric":"serve","build_sec":${fmt(buildSec)},""" +
       s""""reps":$reps,"sf":"$sfDir","ops":$opsJson}"""
     println(line)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/SERVE_BENCH.json"), line + "\n")
-    catch { case _: Throwable => () }
+    args.headOption.foreach(out =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n"))
     spark.stop()
   }
 }

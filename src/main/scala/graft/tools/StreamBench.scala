@@ -18,7 +18,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * key-sorted feed would understate lookups). Throughput counts the
   * full pipeline: planning, state reads/writes, and the memory sink.
   *
-  * Output: one JSON line, persisted to /root/repo/STREAM_BENCH.json:
+  * Output: one JSON line on stdout, and also written to the file named by
+  * the optional first argument (`runMain graft.tools.StreamBench out.json`):
   * {"metric":"stream","events":N,"keys":K,"batches":B,
   *  "ops":{name:{"sec":…,"events_per_sec":…,"out_rows":…,
   *               "state_rows":…,"state_bytes":…}}} */
@@ -151,9 +152,8 @@ object StreamBench {
     val line = s"""{"metric":"stream","events":$nEvents,"keys":$nKeys,""" +
       s""""batches":$nBatches,"ops":$opsJson}"""
     println(line)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/STREAM_BENCH.json"), line + "\n")
-    catch { case _: Throwable => () }
+    args.headOption.foreach(out =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n"))
     spark.stop()
   }
 }

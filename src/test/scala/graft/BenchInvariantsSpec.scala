@@ -18,8 +18,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   *
   * Queries whose fn builds a store inline (bm25_stored) pin their SERVE
   * plan — the build writes are separate jobs invisible to the final
-  * frame's metrics, and the serve side is what partition pruning must
-  * keep cheap. dedup_clusters pins ZERO shuffles: its final frame is the
+  * frame's metrics. bm25_stored and dedup_clusters pin ZERO shuffles: the
+  * first is answered on the driver, the second's final frame is the
   * eagerly-checkpointed cluster table, so serving it must not re-run the
   * iteration. */
 class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -61,10 +61,10 @@ class BenchInvariantsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ("sketch_distinct_parts", 6, 15000L),
     // cluster table is checkpointed: serving it re-runs NOTHING
     ("dedup_clusters", 0, 0L),
-    // pruned postings serve: df counted per term over the postings read
-    // (one exchange on term), then the per-doc score sum (one on doc_id);
-    // doc_length rides in the posting, so no doc_info join
-    ("bm25_stored", 2, 3000L),
+    // the serve reads its terms' few KB of bucket files on the driver,
+    // under IndexStore.DriverReadMaxBytes, and answers with a
+    // LocalRelation: nothing is planned, so nothing shuffles
+    ("bm25_stored", 0, 0L),
     // the drop-list is a LocalRelation (as in curate_funnel): the
     // anti-join broadcasts it statically; one exchange feeds the sort
     ("dedup_keep_list", 1, 2000L),

@@ -47,9 +47,12 @@ class GoldenSearchSpec extends SparkSpec {
     val docs = table(spark, "/root/testdata/sf0.01", "documents")
     val recompute = BM25.search(spark, docs, "spark join window")
       .as[(Long, Double)].collect().toSeq
-    val stored = BM25.searchStored(spark, indexDir, "spark join window")
-      .as[(Long, Double)].collect().toSeq
-    assert(recompute == stored)
+    // the driver read (default cap) and the Spark plan (cap 0)
+    for (cap <- Seq(IndexStore.DriverReadMaxBytes, 0L)) {
+      val stored = BM25.searchStored(spark, indexDir, "spark join window",
+        driverReadMaxBytes = cap).as[(Long, Double)].collect().toSeq
+      assert(recompute == stored, s"cap $cap")
+    }
   }
 
   test("phrase boost lifts exact-phrase docs above their bag-of-words ties") {

@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, raise_error}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
@@ -40,10 +41,10 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("stored-index search equals recompute search") {
     val docs = table(spark, "/root/testdata/sf0.001", "documents")
-    val fresh = BM25.search(spark, docs, "spark join window").collect().toSeq
-    val stored = BM25.searchStored(spark, dir, "spark join window")
-      .collect().toSeq
-    assert(stored == fresh)
+    // GoldenSearchSpec's queries, and OOV terms alone and mixed in, at
+    // both branches
+    bothBranches(dir, docs, Seq("spark join window", "football game", "the value",
+      "zzzznotaword", "spark zzzznotaword", "Spark  SPARK join"))
   }
 
   test("stored batch search equals the recompute batch search") {
@@ -89,7 +90,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
     }
     pin(df, Map("postings" -> Set(dirs("spark"))))
-    pin(BM25.searchStored(spark, dir, "spark join window"),
+    pin(BM25.searchStored(spark, dir, "spark join window", driverReadMaxBytes = 0),
       Map("postings" -> Set(bag)))
     pin(BM25.searchManyStored(spark, dir,
         Seq((1L, "spark join"), (2L, "window"))),
@@ -102,7 +103,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Map("postings" -> phrase))
   }
 
-  test("building stored queries launches no job; serving runs no wide job") {
+  test("building stored queries launches no job; serving `searchStored` runs no job") {
     import spark.implicits._
     // the default 64 buckets, all of them filled (the sf0.001 corpus has
     // too few distinct terms): above the parallel partition-discovery
@@ -145,11 +146,15 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         IndexStore.phraseMatchStored(spark, d, "w0 w13"),
         IndexStore.proximityMatchStored(spark, d, "w0", "w26", 8))
       assert(jobs().isEmpty, s"building stored queries ran jobs ${jobs()}")
-      frames.head.collect()
+      // under the byte cap the request reads and scores on the driver
+      assert(frames.head.collect().nonEmpty)
+      assert(jobs().isEmpty, s"searchStored ran jobs (id -> tasks) ${jobs()}")
+      // the Spark plan (cap 0) runs no wide job
+      BM25.searchStored(spark, d, "w1 w2 w3", driverReadMaxBytes = 0).collect()
       val run = jobs()
       val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
       assert(run.nonEmpty && run.values.forall(_ <= cap),
-        s"searchStored ran jobs (id -> tasks) $run, cap $cap tasks")
+        s"searchStored at cap 0 ran jobs (id -> tasks) $run, cap $cap tasks")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -174,9 +179,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           fresh.schema.map(f => (f.name, f.dataType)), name)
         assert(stored.collect().toSeq == fresh.collect().toSeq, name)
       }
-      same(BM25.searchStored(spark, d, s"quick fox $oov"),
-        BM25.search(spark, docs, s"quick fox $oov"))
-      same(BM25.searchStored(spark, d, oov), BM25.search(spark, docs, oov))
+      bothBranches(d, docs, Seq("quick fox", s"quick fox $oov", oov, "the"))
       same(IndexStore.phraseMatchStored(spark, d, "quick brown fox"),
         InvertedIndex.phraseMatch(docs, "quick brown fox"))
       same(IndexStore.phraseMatchStored(spark, d, s"brown $oov"),
@@ -193,11 +196,99 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  private def bucketDirs(d: String): Seq[java.io.File] =
+    new java.io.File(s"$d/postings").listFiles().toSeq
+      .filter(_.getName.startsWith("term_bucket="))
+
+  /** searchStored at both branches — the driver read under the default
+    * cap, the Spark plan at cap 0 — equals the recompute search row for
+    * row and column for column, the two branches' schemas are equal, and
+    * the default one is a LocalRelation. */
+  private def bothBranches(d: String, docs: DataFrame, queries: Seq[String],
+                           topK: Int = 10): Unit = queries.foreach { q =>
+    val fresh = BM25.search(spark, docs, q, topK = topK)
+    val want = fresh.collect().toSeq
+    // a request that touches no bucket file (OOV terms only, a zero-row
+    // store) has nothing to read: at any cap it is answered on the driver
+    val buckets = IndexStore.storedBuckets(spark, d)
+    val reads = q.toLowerCase.split("\\s+").filter(_.nonEmpty).exists(t =>
+      new java.io.File(s"$d/postings/term_bucket=${IndexStore.bucketOf(t, buckets)}")
+        .exists())
+    val got = Seq(0L, IndexStore.DriverReadMaxBytes).map { cap =>
+      val g = BM25.searchStored(spark, d, q, topK = topK, driverReadMaxBytes = cap)
+      assert(g.queryExecution.analyzed.isInstanceOf[LocalRelation] == (cap > 0 || !reads),
+        s"'$q' at cap $cap planned\n${g.queryExecution.analyzed}")
+      // doc_id's nullability is the input's: the stored postings' is true
+      assert(g.schema.map(f => (f.name, f.dataType)) ==
+        fresh.schema.map(f => (f.name, f.dataType)), s"'$q' at cap $cap")
+      assert(g.collect().toSeq == want, s"'$q' at cap $cap")
+      g.schema
+    }
+    assert(got.distinct.size == 1, s"'$q': the branches' schemas differ: $got")
+  }
+
+  test("searchStored's driver read and its Spark plan break rounded-score ties alike") {
+    import spark.implicits._
+    // twelve docs with one token multiset, cut inside the tie group by
+    // topK, so doc_id decides who is kept
+    val ties = ((1L to 12L).map(i => (i * 7 % 13, "alpha beta gamma filler")) ++
+      Seq((20L, "alpha alpha beta"), (21L, "gamma delta"), (22L, "beta alpha filler gamma")))
+      .toDF("doc_id", "text")
+    val t = Files.createTempDirectory("graft-index-ties").toString
+    IndexStore.write(ties, t)
+    bothBranches(t, ties, Seq("alpha beta gamma", "filler", "alpha delta"), topK = 10)
+    bothBranches(t, ties, Seq("alpha beta gamma"), topK = 3)
+  }
+
+  test("searchStored serves an ingested store with several part files per bucket") {
+    import spark.implicits._
+    val docs = (0 until 120).map(i => (i.toLong,
+      (0 until 8).map(j => s"w${(i * 5 + j * 11) % 90}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val delta = Seq((500L, "w1 w2 w3 zzznew"), (501L, "w5 w5 w5 zzznew"))
+      .toDF("doc_id", "text")
+    val d = Files.createTempDirectory("graft-index-parts").toString
+    // a small file roll-over makes each bucket several part files
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    try {
+      IndexStore.write(docs, d, buckets = 8)
+      IndexStore.ingest(delta, d)
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    val parts = bucketDirs(d).map(_.list().count(_.startsWith("part-")))
+    assert(parts.nonEmpty && parts.forall(_ > 1), parts.toSeq)
+    bothBranches(d, docs.unionByName(delta), Seq("w1 w2 w3", "zzznew w5", "w44"))
+  }
+
+  test("the driver read opens exactly the query terms' bucket files") {
+    import spark.implicits._
+    val docs = (0 until 200).map(i => (i.toLong,
+      (0 until 6).map(j => s"v${(i * 3 + j * 17) % 150}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val d = Files.createTempDirectory("graft-index-opens").toString
+    IndexStore.write(docs, d, buckets = 16)
+    val q = "v1 v2 v40"
+    val want = BM25.search(spark, docs, q).collect().toSeq
+    val touched = q.split(" ").map(t => s"term_bucket=${IndexStore.bucketOf(t, 16)}").toSet
+    val buckets = bucketDirs(d)
+    assert(buckets.length > touched.size)
+    def corrupt(bucket: java.io.File): Unit =
+      bucket.listFiles().filter(_.getName.startsWith("part-"))
+        .foreach(f => Files.writeString(f.toPath, "not a parquet file"))
+    // a file of any other bucket would now fail the read; the right
+    // answer needs every touched bucket's rows
+    buckets.filterNot(b => touched(b.getName)).foreach(corrupt)
+    assert(BM25.searchStored(spark, d, q).collect().toSeq == want)
+    // and the touched files are read on each request, not remembered
+    corrupt(buckets.find(b => touched(b.getName)).get)
+    intercept[Exception](BM25.searchStored(spark, d, q).collect())
+  }
+
   test("searchStored's whole plan partition-prunes the postings scan") {
     // the declared bm25_stored query's serving plan: the scan itself must
     // carry term_bucket PartitionFilters (Cassandra-token-routing parity),
     // not filter after reading all buckets
-    val scans = postingScans(BM25.searchStored(spark, dir, "spark join window"))
+    val scans = postingScans(
+      BM25.searchStored(spark, dir, "spark join window", driverReadMaxBytes = 0))
     assert(scans.nonEmpty)
     scans.foreach { s =>
       assert(s.contains("PartitionFilters") && s.contains("term_bucket"),
@@ -327,6 +418,7 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         Seq((IndexStore.DefaultBuckets, 2)).toDF("buckets", "layout") -> 2)) {
       meta.coalesce(1).write.mode("overwrite").parquet(s"$d/index_meta")
       Seq(refused(BM25.searchStored(spark, d, "beta")),
+        refused(BM25.searchStored(spark, d, "beta", driverReadMaxBytes = 0)),
         refused(IndexStore.phraseMatchStored(spark, d, "alpha beta")),
         refused(IndexStore.ingest(Seq((3L, "delta")).toDF("doc_id", "text"), d)))
         .foreach { m =>

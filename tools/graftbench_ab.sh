@@ -12,8 +12,11 @@
 # pair's setup_s and op_p50_ms with the run's check status, then each side's
 # failed and attempted operations summed over its runs, and per metric the
 # medians, the base's interquartile range and how many pairs the head won
-# (lower is better for both metrics). Every run's last output line (the
-# run.py JSON) is kept in <workdir>/runs.jsonl.
+# (lower is better for both metrics), and per request kind (search,
+# phrase) each side's median operation time over the operations of all its
+# runs, so the kind a p50 change comes from shows. Every run's last output
+# line (the run.py JSON) is kept in <workdir>/runs.jsonl, and its full
+# artifact (run.py --out) in <workdir>/<side>-<pair>.json.
 #
 # Defaults: seed 1, workdir ${TMPDIR:-/tmp}/graftbench_ab. The script only
 # calls graftbench; it changes nothing in either tree's graftbench/.
@@ -28,18 +31,22 @@ work=${5:-${TMPDIR:-/tmp}/graftbench_ab}
 repo=$(git rev-parse --show-toplevel)
 base_sha=$(git -C "$repo" rev-parse --verify "$base_rev^{commit}")
 
+mkdir -p "$work"
+work=$(cd "$work" && pwd)
 rm -rf "$work/base" "$work/head"
 mkdir -p "$work/base" "$work/head"
 git -C "$repo" archive "$base_sha" | tar -x -C "$work/base"
 (cd "$repo" && git ls-files -z --cached --others --exclude-standard \
   | tar --null --ignore-failed-read -T - -cf - 2>/dev/null) | tar -x -C "$work/head"
 : > "$work/runs.jsonl"
+rm -f "$work"/base-*.json "$work"/head-*.json
 echo "base $base_rev ($base_sha) vs working tree; workload $workload, seed $seed, $pairs pairs"
 
 run() { # <side> <pair>: one run.py pass; appends {side, pair, result} to runs.jsonl
   local out
   out=$(cd "$work/$1" && python3 graftbench/run.py --workload "$workload" \
-    --seed "$seed" --seconds 15 --trace 0 2>"$work/$1.stderr" | tail -n 1) || true
+    --seed "$seed" --seconds 15 --trace 0 --out "$work/$1-$2.json" \
+    2>"$work/$1.stderr" | tail -n 1) || true
   python3 - "$1" "$2" "$out" >>"$work/runs.jsonl" <<'PY'
 import json, sys
 side, pair, line = sys.argv[1], int(sys.argv[2]), sys.argv[3]
@@ -69,8 +76,8 @@ print(f"pair {pair:2d}: " + " | ".join(cells), flush=True)
 PY
 done
 
-python3 - "$work/runs.jsonl" <<'PY'
-import json, statistics, sys
+python3 - "$work/runs.jsonl" "$work" <<'PY'
+import glob, json, os, statistics, sys
 rows = [json.loads(l) for l in open(sys.argv[1])]
 def vals(side, k):
     return {x["pair"]: x["result"].get("metrics", {}).get(k, {}).get("value")
@@ -97,4 +104,23 @@ for k in ("setup_s", "op_p50_ms"):
           f"base quartiles {q1:.3f}-{q3:.3f} (IQR {q3 - q1:.3f}); "
           f"head won {wins}/{len(both)} pairs; |median diff| {abs(mh - mb):.3f} "
           f"{'>' if abs(mh - mb) > q3 - q1 else '<='} base IQR")
+# per request kind, from the artifacts' measured operations (ok ones only)
+kinds = {}
+for side in ("base", "head"):
+    for path in sorted(glob.glob(os.path.join(sys.argv[2], f"{side}-*.json"))):
+        try:
+            passes = json.load(open(path))["passes"]
+        except (OSError, ValueError, KeyError):
+            continue
+        for p in passes:
+            for o in p.get("ops", []):
+                if o.get("ok") and "kind" in o:
+                    kinds.setdefault(o["kind"], {}).setdefault(side, []).append(o["ms"])
+for kind in sorted(kinds):
+    cells = []
+    for side in ("base", "head"):
+        ms = kinds[kind].get(side, [])
+        cells.append(f"{side} {statistics.median(ms):9.1f} ms ({len(ms)} ops)" if ms
+                     else f"{side} no ops")
+    print(f"op ms by kind, {kind}: " + " | ".join(cells))
 PY
