@@ -15,7 +15,9 @@ object Search {
     BM25.searchStored(spark, indexDir, query, topK = topK)
 
   /** Exact-phrase mode: consecutive-position match served from the stored
-    * postings' positions (graft.index.IndexStore.phraseMatchStored). */
+    * postings' positions (graft.index.IndexStore.phraseMatchStored): on
+    * the driver, with no Spark job, when the chain terms' bucket files sum
+    * to at most `IndexStore.DriverReadMaxBytes`. */
   def runPhrase(spark: SparkSession, indexDir: String, phrase: String): DataFrame =
     graft.index.IndexStore.phraseMatchStored(spark, indexDir, phrase)
 

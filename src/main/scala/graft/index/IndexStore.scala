@@ -2,13 +2,15 @@ package graft.index
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -42,8 +44,11 @@ import graft.text.Tokenize
   * A request whose k bucket files are small is not a Spark job at all:
   * `postingsOnDriver` reads them on the driver with parquet-hadoop's
   * reader, as `indexMeta` reads the meta, when their lengths sum to at
-  * most [[DriverReadMaxBytes]]; `BM25.searchStored` then scores the rows
-  * on the driver. Above the cap the request is the pruned Spark scan.
+  * most [[DriverReadMaxBytes]]. `BM25.searchStored` then scores the rows
+  * on the driver, and `phraseMatchStored` and `proximityMatchStored` match
+  * their positions there. Above the cap the request is the pruned Spark
+  * scan. Every driver-side open goes through `openParquet`, which reuses
+  * the session's Hadoop configuration.
   */
 object IndexStore {
 
@@ -206,41 +211,76 @@ object IndexStore {
     * in every doc: at 7.9 MB of bucket files a driver-served search took a
     * median 383 ms against the Spark plan's 468 ms and allocated about
     * 390 MB of short-lived objects on the driver; at 16 MB it took 752 ms
-    * against 506 ms. */
+    * against 506 ms. Phrase and proximity requests also decode
+    * `positions`; with both terms in every doc, ten times each, at 8.0 MB
+    * a driver-served phrase took a median 670 ms against the Spark plan's
+    * 1,302 ms, and a proximity request 749 ms against 2,008 ms. */
   val DriverReadMaxBytes: Long = 8L << 20
 
-  /** The four BM25 columns of the terms' postings, read on the driver
-    * from their bucket files with a term filter pushed into the reader,
-    * or None when those files hold more than `maxBytes` (the caller then
-    * plans the Spark scan). The decision is made from a driver listing of
-    * the k directories, before anything is planned; no Spark job runs. */
+  /** The BM25 columns of a driver read; `positions` is never decoded. */
+  private[graft] val BM25Columns = Seq("term", "doc_id", "term_frequency", "doc_length")
+
+  /** The columns a driver-side phrase or proximity check reads. */
+  private val PositionColumns = Seq("term", "doc_id", "positions")
+
+  /** The given columns of the terms' postings, read on the driver from
+    * their bucket files with a term filter pushed into the reader, or None
+    * when those files hold more than `maxBytes` (the caller then plans the
+    * Spark scan). The decision is made from a driver listing of the k
+    * directories, before anything is planned; no Spark job runs. Each Row
+    * holds the columns in the order asked: `term` a String, `positions` an
+    * Array[Int], the others Longs. */
   private[graft] def postingsOnDriver(spark: SparkSession, dir: String, terms: Seq[String],
-                       meta: IndexMeta, maxBytes: Long): Option[Seq[Row]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+                                      meta: IndexMeta, maxBytes: Long,
+                                      columns: Seq[String]): Option[Seq[Row]] = {
     val files = bucketFiles(spark, dir, terms, meta.buckets)
     if (files.map(_.getLen).sum > maxBytes) None
-    else Some(files.flatMap { f =>
-      val reader = ParquetReader.builder(BM25Columns, f.getPath).withConf(conf)
-        .withFilter(FilterCompat.get(FilterApi.in[Binary, Operators.BinaryColumn](
-          FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava)))
-        .build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null)
-        .map(g => Row(g.getString("term", 0), g.getLong("doc_id", 0),
-          g.getLong("term_frequency", 0), g.getLong("doc_length", 0))).toVector
-      finally reader.close()
-    })
+    else {
+      val filter = FilterCompat.get(FilterApi.in[Binary, Operators.BinaryColumn](
+        FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava))
+      Some(files.flatMap { f =>
+        val reader = openParquet(spark, f.getPath, new Projection(columns), filter)
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => Row.fromSeq(columns.map(decode(g, _)))).toVector
+        finally reader.close()
+      })
+    }
   }
 
-  /** Reads the four BM25 columns with the repetition the file declares
-    * for each (a read schema written by hand must match it: Spark writes
+  private def decode(g: Group, column: String): Any = column match {
+    case "term" => g.getString(column, 0)
+    case "positions" =>
+      // a LIST group: one repeated group of one element per position
+      val list = g.getGroup(column, 0)
+      Array.tabulate(list.getFieldRepetitionCount(0))(i => list.getGroup(0, i).getInteger(0, 0))
+    case _ => g.getLong(column, 0)
+  }
+
+  /** Reads the named columns with the repetition the file declares for
+    * each (a read schema written by hand must match it: Spark writes
     * `term_frequency` as required). */
-  private object BM25Columns extends GroupReadSupport {
+  private final class Projection(columns: Seq[String]) extends GroupReadSupport {
     override def init(context: InitContext): ReadSupport.ReadContext = {
       val file = context.getFileSchema
-      val cols = Set("term", "doc_id", "term_frequency", "doc_length")
       new ReadSupport.ReadContext(new MessageType(file.getName,
-        file.getFields.asScala.filter(f => cols(f.getName)).asJava))
+        file.getFields.asScala.filter(f => columns.contains(f.getName)).asJava))
     }
+  }
+
+  /** The one way graft opens a parquet file on the driver. The reader
+    * takes the session's Hadoop configuration as its own: the Path-based
+    * `ParquetReader.builder(...).withConf(conf)` first builds a fresh
+    * default `Configuration` and reads it, which parses Hadoop's
+    * `*-default.xml` files out of the jars, about 20 ms per open on a
+    * 4-core box — more than the read of a small bucket file itself.
+    * IndexStoreSpec's guard keeps every other open out of `src/main`. */
+  private def openParquet(spark: SparkSession, file: Path, support: ReadSupport[Group],
+                          filter: FilterCompat.Filter): ParquetReader[Group] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf),
+        new HadoopParquetConfiguration(conf)) {
+      override def getReadSupport: ReadSupport[Group] = support
+    }.withFilter(filter).build()
   }
 
   /** The part files of the terms' bucket directories. Names starting
@@ -284,8 +324,7 @@ object IndexStore {
       .filter(_.getName.startsWith("part-"))
     require(parts.length == 1,
       s"IndexStore: $meta holds ${parts.length} part files, expected exactly 1")
-    val reader = ParquetReader.builder(new GroupReadSupport(), parts.head)
-      .withConf(conf).build()
+    val reader = openParquet(spark, parts.head, new GroupReadSupport(), FilterCompat.NOOP)
     try {
       val row = reader.read()
       require(row != null, s"IndexStore: ${parts.head} holds no record")
@@ -323,24 +362,71 @@ object IndexStore {
     bucketRead(spark, dir, Seq(term), buckets)
       .select(col("doc_id"), explode(col("positions")).as("pos"))
 
-  /** Phrase search served from the stored postings: each term of the
-    * adjacency chain reads ONLY its hash bucket, so a k-term phrase
-    * touches <= k of `buckets` directories — never the corpus, never the
-    * full table. Results ≡ InvertedIndex.phraseMatch on the indexed docs. */
-  def phraseMatchStored(spark: SparkSession, dir: String, phrase: String): DataFrame =
-    phraseMatchStored(spark, dir, phrase, indexMeta(spark, dir))
-
+  /** Phrase search served from the stored postings: the adjacency chain
+    * reads ONLY its terms' hash buckets, so a k-term phrase touches <= k of
+    * `buckets` directories — never the corpus, never the full table.
+    * Results ≡ InvertedIndex.phraseMatch on the indexed docs.
+    *
+    * When those directories' part files sum to at most
+    * `driverReadMaxBytes`, the request runs no Spark job: the chain terms'
+    * positions are read on the driver (`postingsOnDriver`), the chain is
+    * matched there (`InvertedIndex.phraseOnDriver`), and the answer is a
+    * LocalRelation. Above the cap, the chain is the Spark plan. */
   def phraseMatchStored(spark: SparkSession, dir: String, phrase: String,
-                        meta: IndexMeta): DataFrame =
-    InvertedIndex.phraseFromPostings(InvertedIndex.phraseTerms(phrase),
-      positionsOf(spark, dir, meta.buckets))
+                        driverReadMaxBytes: Long = DriverReadMaxBytes): DataFrame = {
+    val terms = InvertedIndex.phraseTerms(phrase)
+    val meta = indexMeta(spark, dir)
+    positionsServed(spark, dir, terms.distinct, meta, driverReadMaxBytes, PhraseSchema)(
+      InvertedIndex.phraseOnDriver(terms, _))(phraseScan(spark, dir, terms, meta))
+  }
 
-  /** Proximity search served from the stored postings — both sides of the
-    * banded join read only their term's hash bucket. */
+  /** The phrase chain as a Spark plan over the terms' bucket reads. */
+  private[graft] def phraseScan(spark: SparkSession, dir: String, terms: Seq[String],
+                                meta: IndexMeta): DataFrame =
+    InvertedIndex.phraseFromPostings(terms, positionsOf(spark, dir, meta.buckets))
+
+  /** Proximity search served from the stored postings — both sides read
+    * only their term's hash bucket: on the driver at or under
+    * `driverReadMaxBytes` (`InvertedIndex.proximityOnDriver`, a
+    * LocalRelation), above it as the banded Spark join. */
   def proximityMatchStored(spark: SparkSession, dir: String, termA: String,
-                           termB: String, window: Int = 8): DataFrame =
-    InvertedIndex.proximityFromPostings(termA, termB, window,
-      positionsOf(spark, dir, storedBuckets(spark, dir)))
+                           termB: String, window: Int = 8,
+                           driverReadMaxBytes: Long = DriverReadMaxBytes): DataFrame = {
+    val (a, b) = InvertedIndex.proximityTerms(termA, termB, window)
+    val meta = indexMeta(spark, dir)
+    positionsServed(spark, dir, Seq(a, b), meta, driverReadMaxBytes, ProximitySchema)(
+      occ => InvertedIndex.proximityOnDriver(occ(a), occ(b), window))(
+      InvertedIndex.proximityFromPostings(a, b, window, positionsOf(spark, dir, meta.buckets)))
+  }
+
+  // the Spark branches' output schemas: doc_id keeps the stored column's
+  // nullability, a count is never null, and a min aggregate always may be
+  private val PhraseSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("n_occurrences", LongType, nullable = false)))
+  private val ProximitySchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("n_pairs", LongType, nullable = false),
+    StructField("min_distance", LongType)))
+
+  /** A positional request: `onDriver`'s rows over the terms' positions as
+    * a LocalRelation when their bucket files fit `maxBytes`, else `scan`. */
+  private def positionsServed(spark: SparkSession, dir: String, terms: Seq[String],
+                              meta: IndexMeta, maxBytes: Long, schema: StructType)(
+      onDriver: Map[String, Map[Long, Array[Int]]] => Seq[Row])(
+      scan: => DataFrame): DataFrame =
+    postingsOnDriver(spark, dir, terms, meta, maxBytes, PositionColumns) match {
+      case Some(rows) => spark.createDataFrame(onDriver(positionsByTerm(rows)).asJava, schema)
+      case None => scan
+    }
+
+  /** term -> doc_id -> the term's sorted positions in that doc (stored
+    * sorted), from (term, doc_id, positions) rows; a term read no row of
+    * maps every doc to nothing. Two rows of one (term, doc) — which
+    * `ingest`'s guard keeps out of a store — would both count, as the
+    * Spark join counts both. */
+  private def positionsByTerm(rows: Seq[Row]): Map[String, Map[Long, Array[Int]]] =
+    rows.groupBy(_.getString(0)).map { case (t, rs) =>
+      t -> rs.groupMapReduce(_.getLong(1))(_.getAs[Array[Int]](2))((x, y) => (x ++ y).sorted)
+    }.withDefaultValue(Map.empty)
 
   /** The one Spark serving-path postings reader: opens only the
     * `term_bucket=<b>` directories the terms hash to and that exist, so

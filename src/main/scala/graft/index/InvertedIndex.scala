@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.text.Tokenize
 
@@ -92,6 +92,23 @@ object InvertedIndex {
       .groupBy("doc_id").agg(count(lit(1)).as("n_occurrences"))
       .orderBy("doc_id")
 
+  /** `phraseFromPostings` over driver-held positions: `occ(term)(doc)` is
+    * the term's sorted positions in a doc, duplicates kept. A start s of
+    * term 0 counts the product of the multiplicities of s + i in term i's
+    * positions — the rows the join chain makes for it — and a doc is kept
+    * when its count is positive. (doc_id, n_occurrences) rows by doc_id. */
+  private[graft] def phraseOnDriver(terms: Seq[String],
+                                    occ: String => Map[Long, Array[Int]]): Seq[Row] = {
+    val chain = terms.map(occ)
+    chain.head.keys.toSeq.sorted.flatMap { d =>
+      val lists = chain.map(_.getOrElse(d, Array.emptyIntArray))
+      val n = lists.head.iterator.map { s =>
+        lists.indices.tail.iterator.map(i => countOf(lists(i), s.toLong + i)).product
+      }.sum
+      Option.when(n > 0)(Row(d, n))
+    }
+  }
+
   /** Search-result snippets: for each matching doc, the token window
     * around its FIRST phrase occurrence (`context` tokens each side).
     * The phrase chain produces starts; one min-aggregate picks the first;
@@ -136,10 +153,7 @@ object InvertedIndex {
   private[graft] def proximityFromPostings(termA: String, termB: String,
                                            window: Int,
                                            forTerm: String => DataFrame): DataFrame = {
-    require(window >= 1, "window must be positive")
-    val ta = termA.toLowerCase
-    val tb = termB.toLowerCase
-    require(ta != tb, "proximity of a term with itself is not supported")
+    val (ta, tb) = proximityTerms(termA, termB, window)
     val a = forTerm(ta)
       .select(col("doc_id"), col("pos").as("__pa"))
       .withColumn("__band", floor(col("__pa") / window))
@@ -156,6 +170,56 @@ object InvertedIndex {
         min(abs(col("__pa") - col("__pb"))).cast("long").as("min_distance"))
       .orderBy("doc_id")
   }
+
+  /** The two terms of a proximity request, lowercased, once the request
+    * is known valid. */
+  private[graft] def proximityTerms(termA: String, termB: String,
+                                    window: Int): (String, String) = {
+    require(window >= 1, "window must be positive")
+    val ta = termA.toLowerCase
+    val tb = termB.toLowerCase
+    require(ta != tb, "proximity of a term with itself is not supported")
+    (ta, tb)
+  }
+
+  /** `proximityFromPostings` over driver-held positions (each doc's sorted
+    * positions of the two terms, duplicates kept): every (pa, pb) pair of
+    * a doc with |pa - pb| <= window, which the banded join finds in
+    * exactly one band, counted by binary search over b's positions, and
+    * the closest of them. (doc_id, n_pairs, min_distance) rows by doc_id. */
+  private[graft] def proximityOnDriver(a: Map[Long, Array[Int]], b: Map[Long, Array[Int]],
+                                       window: Int): Seq[Row] =
+    a.keys.filter(b.contains).toSeq.sorted.flatMap { d =>
+      val pb = b(d)
+      var pairs = 0L
+      var closest = Long.MaxValue
+      a(d).foreach { pa =>
+        val lo = lowerBound(pb, pa.toLong - window)
+        val hi = lowerBound(pb, pa.toLong + window + 1)
+        pairs += hi - lo
+        // the nearest b positions to pa: the first at or after it, and
+        // the one before that (lo <= at <= hi)
+        val at = lowerBound(pb, pa.toLong)
+        if (at < hi) closest = math.min(closest, pb(at).toLong - pa)
+        if (at > lo) closest = math.min(closest, pa.toLong - pb(at - 1))
+      }
+      Option.when(pairs > 0)(Row(d, pairs, closest))
+    }
+
+  /** The first index of a sorted array whose value is >= x. */
+  private def lowerBound(sorted: Array[Int], x: Long): Int = {
+    var lo = 0
+    var hi = sorted.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sorted(mid) < x) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** How many times x occurs in a sorted array. */
+  private def countOf(sorted: Array[Int], x: Long): Long =
+    lowerBound(sorted, x + 1) - lowerBound(sorted, x)
 
   /** Document frequency (schema.cql:5-10; MR1 mapper1.py:20-23 +
     * reducer1.py:33-43): number of docs containing each term. */

@@ -258,7 +258,8 @@ object BM25 {
                    driverReadMaxBytes: Long = IndexStore.DriverReadMaxBytes): DataFrame = {
     val meta = IndexStore.indexMeta(spark, indexDir)
     val terms = queryTerms(query)
-    IndexStore.postingsOnDriver(spark, indexDir, terms, meta, driverReadMaxBytes) match {
+    IndexStore.postingsOnDriver(spark, indexDir, terms, meta, driverReadMaxBytes,
+        IndexStore.BM25Columns) match {
       case Some(rows) => topOnDriver(spark, rows, meta, k1, b, topK)
       case None =>
         top(scorePostings(storedPostings(spark, indexDir, terms, meta), k1, b), topK)
@@ -469,10 +470,10 @@ object BM25 {
                                 phrase: String, k1: Double = 1.0,
                                 b: Double = 0.75, topK: Int = 10,
                                 boost: Double = 0.5): DataFrame = {
-    val terms = InvertedIndex.phraseTerms(phrase).distinct
+    val chain = InvertedIndex.phraseTerms(phrase)
     val meta = IndexStore.indexMeta(spark, indexDir)
-    val scores = scorePostings(storedPostings(spark, indexDir, terms, meta), k1, b)
-    val phr = IndexStore.phraseMatchStored(spark, indexDir, phrase, meta)
+    val scores = scorePostings(storedPostings(spark, indexDir, chain.distinct, meta), k1, b)
+    val phr = IndexStore.phraseScan(spark, indexDir, chain, meta)
     scores.join(phr, Seq("doc_id"), "left")
       .withColumn("n_phrase", coalesce(col("n_occurrences"), lit(0L)))
       .select(col("doc_id"),

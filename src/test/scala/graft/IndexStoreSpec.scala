@@ -8,11 +8,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, raise_error}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class IndexStoreSpec extends StoredBranches with AdaptiveSparkPlanHelper {
 
   /** (table, directories opened) of every file scan in the plan, AQE
     * stages and subqueries included: a postings scan opens `term_bucket=`
@@ -45,6 +44,8 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // both branches
     bothBranches(dir, docs, Seq("spark join window", "football game", "the value",
       "zzzznotaword", "spark zzzznotaword", "Spark  SPARK join"))
+    phraseBranches(dir, docs, "the value", "Spark join", "the the")
+    proximityBranches(dir, docs, ("the", "value", 8), ("Spark", "join", 3))
   }
 
   test("stored batch search equals the recompute batch search") {
@@ -97,9 +98,10 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Map("postings" -> Set(bag)))
     pin(BM25.searchStoredPhraseBoosted(spark, dir, "the value"),
       Map("postings" -> (phrase + dirs("the", "value"))))
-    pin(IndexStore.phraseMatchStored(spark, dir, "the value"),
+    pin(IndexStore.phraseMatchStored(spark, dir, "the value", driverReadMaxBytes = 0),
       Map("postings" -> phrase))
-    pin(IndexStore.proximityMatchStored(spark, dir, "the", "value", 8),
+    pin(IndexStore.proximityMatchStored(spark, dir, "the", "value", 8,
+        driverReadMaxBytes = 0),
       Map("postings" -> phrase))
   }
 
@@ -146,9 +148,13 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         IndexStore.phraseMatchStored(spark, d, "w0 w13"),
         IndexStore.proximityMatchStored(spark, d, "w0", "w26", 8))
       assert(jobs().isEmpty, s"building stored queries ran jobs ${jobs()}")
-      // under the byte cap the request reads and scores on the driver
-      assert(frames.head.collect().nonEmpty)
-      assert(jobs().isEmpty, s"searchStored ran jobs (id -> tasks) ${jobs()}")
+      // under the byte cap a search, a phrase and a proximity request read
+      // and answer on the driver
+      Seq("search" -> frames(0), "phrase" -> frames(3), "proximity" -> frames(4))
+        .foreach { case (kind, f) =>
+          assert(f.collect().nonEmpty, s"the $kind is empty")
+          assert(jobs().isEmpty, s"the $kind ran jobs (id -> tasks) ${jobs()}")
+        }
       // the Spark plan (cap 0) runs no wide job
       BM25.searchStored(spark, d, "w1 w2 w3", driverReadMaxBytes = 0).collect()
       val run = jobs()
@@ -180,14 +186,10 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(stored.collect().toSeq == fresh.collect().toSeq, name)
       }
       bothBranches(d, docs, Seq("quick fox", s"quick fox $oov", oov, "the"))
-      same(IndexStore.phraseMatchStored(spark, d, "quick brown fox"),
-        InvertedIndex.phraseMatch(docs, "quick brown fox"))
-      same(IndexStore.phraseMatchStored(spark, d, s"brown $oov"),
-        InvertedIndex.phraseMatch(docs, s"brown $oov"))
-      same(IndexStore.proximityMatchStored(spark, d, "the", "fox", 8),
-        InvertedIndex.proximityMatch(docs, "the", "fox", 8))
-      same(IndexStore.proximityMatchStored(spark, d, "the", oov, 8),
-        InvertedIndex.proximityMatch(docs, "the", oov, 8))
+      // an OOV term ends, splits and is the whole chain
+      phraseBranches(d, docs, "quick brown fox", s"brown $oov", s"quick $oov brown",
+        oov)
+      proximityBranches(d, docs, ("the", "fox", 8), ("the", oov, 8), (oov, "quick", 8))
       same(BM25.searchManyStored(spark, d, Seq((1L, "quick fox"), (2L, oov))),
         BM25.searchMany(spark, docs, Seq((1L, "quick fox"), (2L, oov))
           .toDF("query_id", "query")))
@@ -199,33 +201,6 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def bucketDirs(d: String): Seq[java.io.File] =
     new java.io.File(s"$d/postings").listFiles().toSeq
       .filter(_.getName.startsWith("term_bucket="))
-
-  /** searchStored at both branches — the driver read under the default
-    * cap, the Spark plan at cap 0 — equals the recompute search row for
-    * row and column for column, the two branches' schemas are equal, and
-    * the default one is a LocalRelation. */
-  private def bothBranches(d: String, docs: DataFrame, queries: Seq[String],
-                           topK: Int = 10): Unit = queries.foreach { q =>
-    val fresh = BM25.search(spark, docs, q, topK = topK)
-    val want = fresh.collect().toSeq
-    // a request that touches no bucket file (OOV terms only, a zero-row
-    // store) has nothing to read: at any cap it is answered on the driver
-    val buckets = IndexStore.storedBuckets(spark, d)
-    val reads = q.toLowerCase.split("\\s+").filter(_.nonEmpty).exists(t =>
-      new java.io.File(s"$d/postings/term_bucket=${IndexStore.bucketOf(t, buckets)}")
-        .exists())
-    val got = Seq(0L, IndexStore.DriverReadMaxBytes).map { cap =>
-      val g = BM25.searchStored(spark, d, q, topK = topK, driverReadMaxBytes = cap)
-      assert(g.queryExecution.analyzed.isInstanceOf[LocalRelation] == (cap > 0 || !reads),
-        s"'$q' at cap $cap planned\n${g.queryExecution.analyzed}")
-      // doc_id's nullability is the input's: the stored postings' is true
-      assert(g.schema.map(f => (f.name, f.dataType)) ==
-        fresh.schema.map(f => (f.name, f.dataType)), s"'$q' at cap $cap")
-      assert(g.collect().toSeq == want, s"'$q' at cap $cap")
-      g.schema
-    }
-    assert(got.distinct.size == 1, s"'$q': the branches' schemas differ: $got")
-  }
 
   test("searchStored's driver read and its Spark plan break rounded-score ties alike") {
     import spark.implicits._
@@ -256,7 +231,37 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     val parts = bucketDirs(d).map(_.list().count(_.startsWith("part-")))
     assert(parts.nonEmpty && parts.forall(_ > 1), parts.toSeq)
-    bothBranches(d, docs.unionByName(delta), Seq("w1 w2 w3", "zzznew w5", "w44"))
+    val all = docs.unionByName(delta)
+    bothBranches(d, all, Seq("w1 w2 w3", "zzznew w5", "w44"))
+    phraseBranches(d, all, "w1 w2 w3", "w5 w5", "w0 w11 w22", "w3 zzznew")
+    proximityBranches(d, all, ("w5", "zzznew", 1), ("w0", "w33", 3), ("w22", "w0", 8))
+  }
+
+  test("phrase and proximity serve repeated terms, shared buckets and the window edge") {
+    import spark.implicits._
+    val docs = Seq((1L, "the the the cat sat on the mat"),
+      (2L, "alpha x x beta"), (3L, "beta x x alpha the the"),
+      (4L, "alpha x x x beta gamma delta gamma delta delta"),
+      (5L, "alpha beta alpha y")).toDF("doc_id", "text")
+    val d = Files.createTempDirectory("graft-index-chain").toString
+    IndexStore.write(docs, d, buckets = 4)
+    // a bigram of two terms that hash to one bucket file
+    val (s1, s2) = docs.as[(Long, String)].collect().toSeq
+      .flatMap(_._2.split(" ").sliding(2).map(w => (w(0), w(1))))
+      .find { case (a, b) => a != b && IndexStore.bucketOf(a, 4) == IndexStore.bucketOf(b, 4) }
+      .get
+    assert(!IndexStore.phraseMatchStored(spark, d, s"$s1 $s2").isEmpty)
+    phraseBranches(d, docs, "the the", "the the the", "delta delta", "gamma delta",
+      s"$s1 $s2", s"$s2 $s1", s"$s1 $s2 $s1")
+    // alpha and beta sit exactly 3 apart in doc 2 (alpha first) and doc 3
+    // (beta first), 4 apart in doc 4, and 1 apart twice in doc 5
+    proximityBranches(d, docs, ("alpha", "beta", 3), ("beta", "alpha", 3),
+      ("alpha", "beta", 2), ("alpha", "beta", 4), ("the", "mat", 8), (s1, s2, 2))
+    assert(IndexStore.proximityMatchStored(spark, d, "alpha", "beta", 3)
+      .as[(Long, Long, Long)].collect().toSeq ==
+      Seq((2L, 1L, 3L), (3L, 1L, 3L), (5L, 2L, 1L)))
+    assert(IndexStore.phraseMatchStored(spark, d, "the the")
+      .as[(Long, Long)].collect().toSeq == Seq((1L, 2L), (3L, 1L)))
   }
 
   test("the driver read opens exactly the query terms' bucket files") {
@@ -326,7 +331,8 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("stored phrase search equals recompute and prunes per-term buckets") {
     val docs = table(spark, "/root/testdata/sf0.001", "documents")
-    val stored = IndexStore.phraseMatchStored(spark, dir, "the value")
+    // the Spark plan: the driver read plans no scan
+    val stored = IndexStore.phraseMatchStored(spark, dir, "the value", driverReadMaxBytes = 0)
     val fresh = graft.index.InvertedIndex.phraseMatch(docs, "the value")
       .collect().toSeq
     assert(fresh.nonEmpty && stored.collect().toSeq == fresh)
@@ -341,7 +347,8 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("stored proximity equals recompute and prunes both term buckets") {
     val docs = table(spark, "/root/testdata/sf0.001", "documents")
-    val stored = IndexStore.proximityMatchStored(spark, dir, "the", "value", 8)
+    val stored = IndexStore.proximityMatchStored(spark, dir, "the", "value", 8,
+      driverReadMaxBytes = 0)
     val fresh = graft.index.InvertedIndex.proximityMatch(docs, "the", "value", 8)
       .collect().toSeq
     assert(fresh.nonEmpty && stored.collect().toSeq == fresh)
@@ -420,6 +427,8 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Seq(refused(BM25.searchStored(spark, d, "beta")),
         refused(BM25.searchStored(spark, d, "beta", driverReadMaxBytes = 0)),
         refused(IndexStore.phraseMatchStored(spark, d, "alpha beta")),
+        refused(IndexStore.phraseMatchStored(spark, d, "alpha beta", driverReadMaxBytes = 0)),
+        refused(IndexStore.proximityMatchStored(spark, d, "alpha", "beta")),
         refused(IndexStore.ingest(Seq((3L, "delta")).toDF("doc_id", "text"), d)))
         .foreach { m =>
           assert(m.contains(s"index layout $layout") &&
@@ -456,6 +465,26 @@ class IndexStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(new java.io.File(d).list().toSet == tables)
     assert(IndexStore.indexMeta(spark, d) ==
       IndexStore.IndexMeta(IndexStore.DefaultBuckets, 3L, Some(6L), Some(2.0)))
+  }
+
+  test("src/main opens parquet files on the driver only through IndexStore's one reader") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    // code only: a comment may name the calls it warns against
+    val code = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", ""))
+      .toSeq
+    def filesWith(pattern: String): Seq[String] = code.flatMap { case (f, src) =>
+      Seq.fill(pattern.r.findAllIn(src).size)(f)
+    }
+    val why = "each parquet open outside IndexStore.openParquet builds a fresh default " +
+      "Hadoop Configuration and re-parses Hadoop's *-default.xml files, ~20 ms per open"
+    assert(filesWith("ParquetReader\\.builder\\(").isEmpty, why)
+    assert(filesWith("ParquetFileReader\\.open\\(").isEmpty, why)
+    assert(filesWith("new\\s+[A-Za-z]*ParquetReader\\b") == Seq("graft/index/IndexStore.scala"),
+      why)
   }
 
   test("OOV query against the stored index is empty with intact schema") {

@@ -10,7 +10,7 @@ import graft.sources.{AtomicStore, Sources}
 
 /** Single-file ingest (app/index.sh:21-41 conventions) folded into a stored
   * index must equal a full recompute that includes the new doc. */
-class IngestSpec extends SparkSpec {
+class IngestSpec extends StoredBranches {
   import spark.implicits._
 
   test("ingestLocalFile applies the reference's filename/flattening rules") {
@@ -79,6 +79,9 @@ class IngestSpec extends SparkSpec {
     val phr = Search.runPhrase(spark, dir, "window window")
       .as[(Long, Long)].collect().toMap
     assert(phr.get(999998L).contains(2L))
+    // and both serving branches agree with the recompute over the merged corpus
+    phraseBranches(dir, full2, "window window", "spark join", "window table")
+    proximityBranches(dir, full2, ("window", "join", 3))
   }
 
   test("ingest leaves the tables a fresh write over the union would") {
