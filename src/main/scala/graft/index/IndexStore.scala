@@ -1,18 +1,19 @@
 package graft.index
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.conf.HadoopParquetConfiguration
-import org.apache.parquet.example.data.Group
+import org.apache.parquet.{HadoopReadOptions, VersionParser}
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.impl.ColumnReaderImpl
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.parquet.io.api.{Binary, PrimitiveConverter}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.AtomicStore
@@ -42,9 +43,9 @@ import graft.text.Tokenize
   * query latency.
   *
   * A request whose k bucket files are small is not a Spark job at all:
-  * `postingsOnDriver` reads them on the driver with parquet-hadoop's
-  * reader, as `indexMeta` reads the meta, when their lengths sum to at
-  * most [[DriverReadMaxBytes]]. `BM25.searchStored` then scores the rows
+  * `postingsOnDriver` reads them on the driver column by column with
+  * parquet-hadoop's file reader, as `indexMeta` reads the meta, when their
+  * lengths sum to at most [[DriverReadMaxBytes]]. `BM25.searchStored` then scores the rows
   * on the driver, and `phraseMatchStored` and `proximityMatchStored` match
   * their positions there. Above the cap the request is the pruned Spark
   * scan. Every driver-side open goes through `openParquet`, which reuses
@@ -207,14 +208,14 @@ object IndexStore {
 
   /** The byte cap of a driver-side postings read: the summed lengths of
     * the part files in a request's `term_bucket=` directories. Sized by
-    * measurement on a 4-core box, local[4] (CHANGES.md), with a query term
-    * in every doc: at 7.9 MB of bucket files a driver-served search took a
-    * median 383 ms against the Spark plan's 468 ms and allocated about
-    * 390 MB of short-lived objects on the driver; at 16 MB it took 752 ms
-    * against 506 ms. Phrase and proximity requests also decode
-    * `positions`; with both terms in every doc, ten times each, at 8.0 MB
-    * a driver-served phrase took a median 670 ms against the Spark plan's
-    * 1,302 ms, and a proximity request 749 ms against 2,008 ms. */
+    * measurement on a 4-core box, local[4] (CHANGES.md), on a one-bucket
+    * store in which every doc holds the query term `common` and the phrase
+    * `pa pb` ten times, median of 7 warm requests a branch: with the
+    * column-wise read a driver-served search took 222 ms against the Spark
+    * plan's 284 ms at 8.5 MB of bucket files, and 546 ms against 376 ms at
+    * 12.9 MB. A phrase also reads `positions`, and stayed faster on the
+    * driver up to 17.4 MB (1,118 ms against 1,687 ms); the search
+    * crossover sets the one cap. */
   val DriverReadMaxBytes: Long = 8L << 20
 
   /** The BM25 columns of a driver read; `positions` is never decoded. */
@@ -223,64 +224,161 @@ object IndexStore {
   /** The columns a driver-side phrase or proximity check reads. */
   private val PositionColumns = Seq("term", "doc_id", "positions")
 
+  /** The postings of a driver read, column by column: posting i is
+    * (term(i), docId(i), termFrequency(i), docLength(i), positions(i)),
+    * in file order. A column the read did not ask for is empty. */
+  private[graft] final class DriverPostings(val term: Array[String], val docId: Array[Long],
+                                            val termFrequency: Array[Long],
+                                            val docLength: Array[Long],
+                                            val positions: Array[Array[Int]])
+
   /** The given columns of the terms' postings, read on the driver from
-    * their bucket files with a term filter pushed into the reader, or None
-    * when those files hold more than `maxBytes` (the caller then plans the
-    * Spark scan). The decision is made from a driver listing of the k
-    * directories, before anything is planned; no Spark job runs. Each Row
-    * holds the columns in the order asked: `term` a String, `positions` an
-    * Array[Int], the others Longs. */
+    * their bucket files, or None when those files hold more than
+    * `maxBytes` (the caller then plans the Spark scan). The decision is
+    * made from a driver listing of the k directories, before anything is
+    * planned; no Spark job runs.
+    *
+    * The read is column by column. Row groups whose statistics or
+    * dictionary hold none of the terms are dropped by the open's filter;
+    * in each kept row group the `term` column is read in full (a bucket's
+    * postings are not sorted by term), and every other column is read at
+    * the matching rows only, its other values skipped and the chunk left
+    * unread past the last match. */
   private[graft] def postingsOnDriver(spark: SparkSession, dir: String, terms: Seq[String],
                                       meta: IndexMeta, maxBytes: Long,
-                                      columns: Seq[String]): Option[Seq[Row]] = {
+                                      columns: Seq[String]): Option[DriverPostings] = {
     val files = bucketFiles(spark, dir, terms, meta.buckets)
     if (files.map(_.getLen).sum > maxBytes) None
     else {
+      val wanted = terms.map(t => Binary.fromString(t) -> t).toMap
       val filter = FilterCompat.get(FilterApi.in[Binary, Operators.BinaryColumn](
-        FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava))
-      Some(files.flatMap { f =>
-        val reader = openParquet(spark, f.getPath, new Projection(columns), filter)
-        try Iterator.continually(reader.read()).takeWhile(_ != null)
-          .map(g => Row.fromSeq(columns.map(decode(g, _)))).toVector
-        finally reader.close()
-      })
+        FilterApi.binaryColumn("term"), wanted.keySet.asJava))
+      val term = Array.newBuilder[String]
+      val longs = columns.filter(c => c != "term" && c != "positions")
+        .map(_ -> Array.newBuilder[Long]).toMap
+      val positions = Array.newBuilder[Array[Int]]
+      files.foreach { f =>
+        val reader = openParquet(spark, f, filter)
+        try rowGroups(reader, columns).foreach { case (n, column) =>
+          val (rows, matched) = matchingRows(column("term"), n, wanted)
+          if (rows.nonEmpty) {
+            term ++= matched
+            longs.foreach { case (c, out) => out ++= longsAt(column(c), rows) }
+            if (columns.contains("positions")) positions ++= intListsAt(column("positions"), rows)
+          }
+        } finally reader.close()
+      }
+      def longColumn(c: String) = longs.get(c).fold(Array.emptyLongArray)(_.result())
+      Some(new DriverPostings(term.result(), longColumn("doc_id"),
+        longColumn("term_frequency"), longColumn("doc_length"), positions.result()))
     }
   }
 
-  private def decode(g: Group, column: String): Any = column match {
-    case "term" => g.getString(column, 0)
-    case "positions" =>
-      // a LIST group: one repeated group of one element per position
-      val list = g.getGroup(column, 0)
-      Array.tabulate(list.getFieldRepetitionCount(0))(i => list.getGroup(0, i).getInteger(0, 0))
-    case _ => g.getLong(column, 0)
-  }
-
-  /** Reads the named columns with the repetition the file declares for
-    * each (a read schema written by hand must match it: Spark writes
-    * `term_frequency` as required). */
-  private final class Projection(columns: Seq[String]) extends GroupReadSupport {
-    override def init(context: InitContext): ReadSupport.ReadContext = {
-      val file = context.getFileSchema
-      new ReadSupport.ReadContext(new MessageType(file.getName,
-        file.getFields.asScala.filter(f => columns.contains(f.getName)).asJava))
+  /** The row groups of an open file that its filter kept, each as its row
+    * count and a reader factory over the given top-level columns (all of
+    * them when empty): only those columns' chunks are read from the file. */
+  private def rowGroups(reader: ParquetFileReader,
+                        columns: Seq[String]): Iterator[(Long, String => ColumnReader)] = {
+    val schema = reader.getFileMetaData.getSchema
+    if (columns.nonEmpty) reader.setRequestedSchema(
+      schema.getColumns.asScala.filter(d => columns.contains(d.getPath()(0))).asJava)
+    // the writer's version only matters to files with corrupt delta-encoded
+    // strings (PARQUET-246); an unparsable one reads them the safe way
+    val writer = Try(VersionParser.parse(reader.getFileMetaData.getCreatedBy)).getOrElse(null)
+    Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).map { pages =>
+      pages.getRowCount -> { (name: String) =>
+        val d = schema.getColumns.asScala.find(_.getPath()(0) == name).getOrElse(
+          throw new IllegalStateException(s"IndexStore: ${reader.getFile} has no column $name"))
+        new ColumnReaderImpl(d, pages.getPageReader(d), Unconverted, writer)
+      }
     }
   }
 
-  /** The one way graft opens a parquet file on the driver. The reader
-    * takes the session's Hadoop configuration as its own: the Path-based
-    * `ParquetReader.builder(...).withConf(conf)` first builds a fresh
-    * default `Configuration` and reads it, which parses Hadoop's
-    * `*-default.xml` files out of the jars, about 20 ms per open on a
-    * 4-core box — more than the read of a small bucket file itself.
-    * IndexStoreSpec's guard keeps every other open out of `src/main`. */
-  private def openParquet(spark: SparkSession, file: Path, support: ReadSupport[Group],
-                          filter: FilterCompat.Filter): ParquetReader[Group] = {
+  /** Values are taken with the reader's typed getters, never through a
+    * record converter. */
+  private object Unconverted extends PrimitiveConverter
+
+  /** The ascending rows of a flat string column's `n`-row row group that
+    * hold one of `wanted`'s keys, with the term each holds. */
+  private def matchingRows(r: ColumnReader, n: Long,
+                           wanted: Map[Binary, String]): (Array[Int], Array[String]) = {
+    val rows = Array.newBuilder[Int]
+    val terms = Array.newBuilder[String]
+    val defined = r.getDescriptor.getMaxDefinitionLevel
+    var row = 0
+    while (row < n) {
+      if (r.getCurrentDefinitionLevel == defined) wanted.get(r.getBinary).foreach { t =>
+        rows += row
+        terms += t
+      }
+      r.consume()
+      row += 1
+    }
+    (rows.result(), terms.result())
+  }
+
+  /** A flat INT64 column's values at the ascending `rows` of its row
+    * group; the other rows' values are skipped. */
+  private def longsAt(r: ColumnReader, rows: Array[Int]): Array[Long] = {
+    val out = new Array[Long](rows.length)
+    val defined = r.getDescriptor.getMaxDefinitionLevel
+    var row = 0
+    var i = 0
+    while (i < rows.length) {
+      if (row == rows(i)) {
+        if (r.getCurrentDefinitionLevel != defined) throw new IllegalStateException(
+          s"IndexStore: a null ${r.getDescriptor.getPath.mkString(".")} in a posting")
+        out(i) = r.getLong
+        i += 1
+      } else if (r.getCurrentDefinitionLevel == defined) r.skip()
+      r.consume()
+      row += 1
+    }
+    out
+  }
+
+  /** A repeated INT32 column's lists at the ascending `rows` of its row
+    * group: a row's values run up to the next repetition level 0, and the
+    * other rows' values are skipped. A null or empty list is empty. */
+  private def intListsAt(r: ColumnReader, rows: Array[Int]): Array[Array[Int]] = {
+    val out = new Array[Array[Int]](rows.length)
+    val defined = r.getDescriptor.getMaxDefinitionLevel
+    val list = Array.newBuilder[Int]
+    var row = 0
+    var i = 0
+    while (i < rows.length) {
+      val keep = row == rows(i)
+      while ({
+        if (r.getCurrentDefinitionLevel == defined) {
+          if (keep) list += r.getInteger else r.skip()
+        }
+        r.consume()
+        r.getCurrentRepetitionLevel > 0
+      }) ()
+      if (keep) {
+        out(i) = list.result()
+        list.clear()
+        i += 1
+      }
+      row += 1
+    }
+    out
+  }
+
+  /** The one way graft opens a parquet file on the driver: a file reader
+    * over the session's Hadoop configuration, whose row groups `filter`
+    * prunes by their statistics and dictionaries. Opened from the listed
+    * status, so the open costs no second `getFileStatus`; the Path-based
+    * reader builders first build a fresh default `Configuration` and read
+    * it, which parses Hadoop's `*-default.xml` files out of the jars, about
+    * 20 ms per open on a 4-core box — more than the read of a small bucket
+    * file itself. IndexStoreSpec's guard keeps every other open out of
+    * `src/main`. */
+  private def openParquet(spark: SparkSession, file: FileStatus,
+                          filter: FilterCompat.Filter): ParquetFileReader = {
     val conf = spark.sparkContext.hadoopConfiguration
-    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf),
-        new HadoopParquetConfiguration(conf)) {
-      override def getReadSupport: ReadSupport[Group] = support
-    }.withFilter(filter).build()
+    new ParquetFileReader(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf).withRecordFilter(filter).build())
   }
 
   /** The part files of the terms' bucket directories. Names starting
@@ -320,22 +418,26 @@ object IndexStore {
     val fs = meta.getFileSystem(conf)
     val rewrite = "re-`write` the store (IndexStore.write) to serve it"
     require(fs.exists(meta), s"IndexStore: no $meta (no store, or its build died); $rewrite")
-    val parts = fs.listStatus(meta).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
+    val parts = fs.listStatus(meta).filter(_.getPath.getName.startsWith("part-"))
     require(parts.length == 1,
       s"IndexStore: $meta holds ${parts.length} part files, expected exactly 1")
-    val reader = openParquet(spark, parts.head, new GroupReadSupport(), FilterCompat.NOOP)
+    val reader = openParquet(spark, parts.head, FilterCompat.NOOP)
     try {
-      val row = reader.read()
-      require(row != null, s"IndexStore: ${parts.head} holds no record")
-      val layout =
-        if (row.getType.containsField("layout")) row.getInteger("layout", 0) else 1
+      val groups = rowGroups(reader, Nil).filter(_._1 > 0)
+      require(groups.hasNext, s"IndexStore: ${parts.head.getPath} holds no record")
+      val column = groups.next()._2
+      val fields = reader.getFileMetaData.getSchema
+      // the first record's value of a flat column; None when it is null
+      // or the file has no such column
+      def field[A](name: String)(get: ColumnReader => A): Option[A] =
+        Option.when(fields.containsField(name))(column(name)).collect {
+          case r if r.getCurrentDefinitionLevel == r.getDescriptor.getMaxDefinitionLevel => get(r)
+        }
+      val layout = field("layout")(_.getInteger).getOrElse(1)
       require(layout == Layout,
         s"IndexStore: $dir has index layout $layout, this reader serves layout $Layout; $rewrite")
-      def has(field: String) = row.getFieldRepetitionCount(field) > 0
-      IndexMeta(row.getInteger("buckets", 0), row.getLong("doc_n", 0),
-        Option.when(has("total_doc_length"))(row.getLong("total_doc_length", 0)),
-        Option.when(has("avg_doc_length"))(row.getDouble("avg_doc_length", 0)))
+      IndexMeta(field("buckets")(_.getInteger).get, field("doc_n")(_.getLong).get,
+        field("total_doc_length")(_.getLong), field("avg_doc_length")(_.getDouble))
     } finally reader.close()
   }
 
@@ -414,18 +516,18 @@ object IndexStore {
       onDriver: Map[String, Map[Long, Array[Int]]] => Seq[Row])(
       scan: => DataFrame): DataFrame =
     postingsOnDriver(spark, dir, terms, meta, maxBytes, PositionColumns) match {
-      case Some(rows) => spark.createDataFrame(onDriver(positionsByTerm(rows)).asJava, schema)
+      case Some(p) => spark.createDataFrame(onDriver(positionsByTerm(p)).asJava, schema)
       case None => scan
     }
 
   /** term -> doc_id -> the term's sorted positions in that doc (stored
-    * sorted), from (term, doc_id, positions) rows; a term read no row of
-    * maps every doc to nothing. Two rows of one (term, doc) — which
+    * sorted), from a read of (term, doc_id, positions); a term read no row
+    * of maps every doc to nothing. Two postings of one (term, doc) — which
     * `ingest`'s guard keeps out of a store — would both count, as the
     * Spark join counts both. */
-  private def positionsByTerm(rows: Seq[Row]): Map[String, Map[Long, Array[Int]]] =
-    rows.groupBy(_.getString(0)).map { case (t, rs) =>
-      t -> rs.groupMapReduce(_.getLong(1))(_.getAs[Array[Int]](2))((x, y) => (x ++ y).sorted)
+  private def positionsByTerm(p: DriverPostings): Map[String, Map[Long, Array[Int]]] =
+    p.term.indices.groupBy(p.term(_)).map { case (t, is) =>
+      t -> is.groupMapReduce(p.docId(_))(p.positions(_))((x, y) => (x ++ y).sorted)
     }.withDefaultValue(Map.empty)
 
   /** The one Spark serving-path postings reader: opens only the

@@ -260,36 +260,63 @@ object BM25 {
     val terms = queryTerms(query)
     IndexStore.postingsOnDriver(spark, indexDir, terms, meta, driverReadMaxBytes,
         IndexStore.BM25Columns) match {
-      case Some(rows) => topOnDriver(spark, rows, meta, k1, b, topK)
+      case Some(postings) => topOnDriver(spark, postings, meta, k1, b, topK)
       case None =>
         top(scorePostings(storedPostings(spark, indexDir, terms, meta), k1, b), topK)
     }
   }
 
-  /** The rounded top-k of driver-held (term, doc_id, term_frequency,
+  /** The rounded top-k of driver-read (term, doc_id, term_frequency,
     * doc_length) postings, as a LocalRelation. df is counted per term over
-    * the rows, as the Spark plan's window counts it; each posting is
-    * scored, and each per-doc sum rounded, by evaluating the plan's own
-    * Catalyst expressions (`bm25Score`, `roundedRank`) on the driver: one
+    * the postings, as the Spark plan's window counts it; each posting is
+    * scored, and each per-doc sum rounded, by the plan's own Catalyst
+    * expressions (`bm25Score`, `roundedRank`) bound on the driver: one
     * formula, no job. */
-  private def topOnDriver(spark: SparkSession, postings: Seq[Row],
+  private def topOnDriver(spark: SparkSession, postings: IndexStore.DriverPostings,
                           meta: IndexStore.IndexMeta, k1: Double, b: Double,
                           topK: Int): DataFrame = {
-    val df = postings.groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
-    val score = evaluator(spark, bm25Score(k1, b), "term_frequency" -> LongType,
-      "doc_length" -> LongType, "doc_frequency" -> LongType, "doc_n" -> LongType,
-      "avg_doc_length" -> DoubleType)
+    val scorer = driverScorer(spark)
+    val df = postings.term.groupMapReduce(identity)(_ => 1L)(_ + _)
     val avg = meta.avgDocLength.map(Double.box).orNull
-    val sums = postings.groupMapReduce(_.getLong(1))(r => score(InternalRow(
-      r.getLong(2), r.getLong(3), df(r.getString(0)), meta.docN, avg))
-      .asInstanceOf[Double])(_ + _)
-    val rank = evaluator(spark, roundedRank, "score" -> DoubleType)
-    val rows = sums.toSeq.map { case (d, s) => Row(d, rank(InternalRow(s))) }
-      .sortBy(r => (-r.getDouble(1), r.getLong(0)))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-      .take(topK)
+    val sums = scala.collection.mutable.LongMap.empty[Double]
+    postings.term.indices.foreach { i =>
+      val s = scorer.score(InternalRow(postings.termFrequency(i), postings.docLength(i),
+        df(postings.term(i)), meta.docN, avg, k1, b)).asInstanceOf[Double]
+      val d = postings.docId(i)
+      sums(d) = sums.get(d).fold(s)(_ + s)
+    }
+    // doc_rank descending, then doc_id: compared in place, since a key
+    // tuple per comparison would allocate O(docs log docs) objects
+    val byRank: Ordering[Row] = (x, y) => {
+      val c = java.lang.Double.compare(y.getDouble(1), x.getDouble(1))
+      if (c != 0) c else java.lang.Long.compare(x.getLong(0), y.getLong(0))
+    }
+    val rows = sums.toSeq.map { case (d, s) => Row(d, scorer.rank(InternalRow(s))) }
+      .sorted(byRank).take(topK)
     spark.createDataFrame(rows.asJava, StructType(Seq(
       StructField("doc_id", LongType), StructField("doc_rank", DoubleType))))
+  }
+
+  /** `bm25Score` and `roundedRank` as driver-side functions of rows. The
+    * scorer's row carries `k1` and `b`, so one binding serves every
+    * request: Catalyst analyses the two expressions once per JVM, not
+    * once per request, and nothing is kept per parameter pair. */
+  private final class DriverScorer(spark: SparkSession) {
+    val score: InternalRow => Any = evaluator(spark, bm25Score(col("k1"), col("b")),
+      "term_frequency" -> LongType, "doc_length" -> LongType, "doc_frequency" -> LongType,
+      "doc_n" -> LongType, "avg_doc_length" -> DoubleType, "k1" -> DoubleType,
+      "b" -> DoubleType)
+    val rank: InternalRow => Any = evaluator(spark, roundedRank, "score" -> DoubleType)
+  }
+
+  private var boundScorer: Option[DriverScorer] = None
+
+  private def driverScorer(spark: SparkSession): DriverScorer = synchronized {
+    boundScorer.getOrElse {
+      val s = new DriverScorer(spark)
+      boundScorer = Some(s)
+      s
+    }
   }
 
   /** A Column as a driver-side function of rows with the given fields:
@@ -318,13 +345,17 @@ object BM25 {
 
   /** The scalar A7 score (app/query.py:131-135) over the joined columns
     * (term_frequency, doc_frequency, doc_length, doc_n, avg_doc_length) —
-    * the single source of the formula for both search forms. */
-  private def bm25Score(k1: Double, b: Double) =
+    * the single source of the formula for every search form. The Spark
+    * plans pass `k1` and `b` as literals, which Catalyst folds; the driver
+    * scorer passes them as row fields. */
+  private def bm25Score(k1: Column, b: Column): Column =
     log(col("doc_n").cast("double") / col("doc_frequency")) *
-      (lit(k1 + 1) * col("term_frequency")) /
-      (lit(k1) * (lit(1 - b) +
-        lit(b) * col("doc_length") / col("avg_doc_length")) +
+      ((k1 + 1) * col("term_frequency")) /
+      (k1 * ((lit(1) - b) +
+        b * col("doc_length") / col("avg_doc_length")) +
         col("term_frequency"))
+
+  private def bm25Score(k1: Double, b: Double): Column = bm25Score(lit(k1), lit(b))
 
   /** Per-doc UNROUNDED BM25 sums over postings that already carry every
     * column bm25Score reads — the shared scoring core; top() and the

@@ -264,6 +264,89 @@ class IndexStoreSpec extends StoredBranches with AdaptiveSparkPlanHelper {
       .as[(Long, Long)].collect().toSeq == Seq((1L, 2L), (3L, 1L)))
   }
 
+  test("the driver read serves bucket files of several row groups, several pages and no dictionary") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import spark.implicits._
+    // 300 docs of 12 tokens: "the" twice in a row every fifth position
+    val docs = (0 until 300).map(i => (i.toLong,
+      (0 until 12).map(j => if ((i + j) % 5 < 2) "the" else s"w${(i * 7 + j * 3) % 60}")
+        .mkString(" "))).toDF("doc_id", "text")
+    val conf = spark.sparkContext.hadoopConfiguration
+    /** (row groups, pages of each column chunk, whether a chunk is
+      * dictionary-encoded) of every bucket part file of a store. */
+    def layout(d: String): Seq[(Int, Seq[Int], Boolean)] =
+      bucketDirs(d).flatMap(_.listFiles().filter(_.getName.startsWith("part-"))).map { f =>
+        val r = new ParquetFileReader(HadoopInputFile.fromPath(new Path(f.toString), conf),
+          org.apache.parquet.HadoopReadOptions.builder(conf).build())
+        try {
+          val chunks = r.getRowGroups.asScala.toSeq.flatMap(_.getColumns.asScala)
+          (r.getRowGroups.size, chunks.map(c => r.readOffsetIndex(c).getPageCount),
+            chunks.exists(_.hasDictionaryPage))
+        } finally r.close()
+      }
+    // each store is written under the session's parquet writer settings
+    for ((settings, holds) <- Seq[(Map[String, String], Seq[(Int, Seq[Int], Boolean)] => Boolean)](
+        Map("parquet.block.size" -> "1024") -> (_.exists(_._1 > 2)),
+        Map("parquet.page.row.count.limit" -> "7") -> (_.exists(_._2.exists(_ > 2))),
+        Map("parquet.enable.dictionary" -> "false") -> (_.forall(!_._3)))) {
+      val d = Files.createTempDirectory("graft-index-layout-").toString
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try IndexStore.write(docs, d, buckets = 4)
+      finally settings.keys.foreach(spark.conf.unset)
+      assert(holds(layout(d)), s"$settings: ${layout(d)}")
+      bothBranches(d, docs, Seq("w6 w9 w12", "the w21", "W3  w3 w59"))
+      phraseBranches(d, docs, "w6 w9", "the the w6", "the the", "w9 w12 the the")
+      proximityBranches(d, docs, ("the", "w9", 3), ("w6", "w12", 2), ("w21", "w3", 8))
+    }
+  }
+
+  test("the driver scorer serves interleaved (k1, b) pairs and concurrent requests") {
+    import spark.implicits._
+    // docs of varied length, so that b weighs in
+    val docs = (0 until 200).map(i => (i.toLong,
+      (0 until 4 + i % 9).map(j => s"w${(i * 5 + j * 11) % 70}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val d = Files.createTempDirectory("graft-index-scorer").toString
+    IndexStore.write(docs, d, buckets = 8)
+    val q = "w1 w12 w40"
+    val terms = q.split(" ").toSeq
+    // each pair against the recompute with the same parameters, in an
+    // order that returns to earlier pairs
+    for ((k1, b) <- Seq((1.0, 0.75), (1.2, 0.3), (0.5, 1.0), (1.0, 0.75), (2.0, 0.0),
+        (1.2, 0.3))) {
+      checkBranches(d, terms, s"'$q' k1=$k1 b=$b",
+        BM25.search(spark, docs, q, k1 = k1, b = b))(cap =>
+        BM25.searchStored(spark, d, q, k1 = k1, b = b, driverReadMaxBytes = cap))
+    }
+    // four threads at once against one store get the sequential answers
+    val requests = for {
+      query <- Seq(q, "w5 w5 w66", "zzzznotaword")
+      (k1, b) <- Seq((1.0, 0.75), (1.5, 0.5))
+    } yield (query, k1, b)
+    def answer(r: (String, Double, Double)) =
+      BM25.searchStored(spark, d, r._1, k1 = r._2, b = r._3).collect().toSeq
+    val want = requests.map(answer)
+    assert(want.exists(_.nonEmpty))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = (0 until 4).map { t =>
+        pool.submit[Unit] { () =>
+          start.await()
+          // each thread walks the requests from its own offset, three times
+          (0 until 3 * requests.size).map(i => (i + t) % requests.size).foreach { i =>
+            assert(answer(requests(i)) == want(i), s"thread $t: ${requests(i)}")
+          }
+        }
+      }
+      start.countDown()
+      runs.foreach(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+  }
+
   test("the driver read opens exactly the query terms' bucket files") {
     import spark.implicits._
     val docs = (0 until 200).map(i => (i.toLong,
@@ -481,10 +564,14 @@ class IndexStoreSpec extends StoredBranches with AdaptiveSparkPlanHelper {
     }
     val why = "each parquet open outside IndexStore.openParquet builds a fresh default " +
       "Hadoop Configuration and re-parses Hadoop's *-default.xml files, ~20 ms per open"
-    assert(filesWith("ParquetReader\\.builder\\(").isEmpty, why)
+    // no record reader at all: a driver read goes column by column
+    assert(filesWith("\\b[A-Za-z]*Parquet(Record)?Reader\\b").isEmpty,
+      "a record reader assembles every row of a file; read its columns instead")
     assert(filesWith("ParquetFileReader\\.open\\(").isEmpty, why)
-    assert(filesWith("new\\s+[A-Za-z]*ParquetReader\\b") == Seq("graft/index/IndexStore.scala"),
-      why)
+    assert(filesWith("new\\s+ParquetFileReader\\b") == Seq("graft/index/IndexStore.scala"), why)
+    val store = code.collectFirst { case ("graft/index/IndexStore.scala", src) => src }.get
+    assert("(?s)def openParquet\\b[^=]*=\\s*\\{[^}]*new\\s+ParquetFileReader\\b".r
+      .findFirstIn(store).isDefined, "the one construction is IndexStore.openParquet's")
   }
 
   test("OOV query against the stored index is empty with intact schema") {

@@ -13,8 +13,10 @@
 # failed and attempted operations summed over its runs, and per metric the
 # medians, the base's interquartile range and how many pairs the head won
 # (lower is better for both metrics), and per request kind (search,
-# phrase) each side's median operation time over the operations of all its
-# runs, so the kind a p50 change comes from shows. Every run's last output
+# phrase) and per loop position (op-0, op-1, ...) each side's median
+# operation time over the operations of all its runs, so the kind a p50
+# change comes from shows, and whether it moves the JVM's cold first
+# requests or every request. Every run's last output
 # line (the run.py JSON) is kept in <workdir>/runs.jsonl, and its full
 # artifact (run.py --out) in <workdir>/<side>-<pair>.json.
 #
@@ -77,7 +79,7 @@ PY
 done
 
 python3 - "$work/runs.jsonl" "$work" <<'PY'
-import glob, json, os, statistics, sys
+import glob, json, os, re, statistics, sys
 rows = [json.loads(l) for l in open(sys.argv[1])]
 def vals(side, k):
     return {x["pair"]: x["result"].get("metrics", {}).get(k, {}).get("value")
@@ -104,8 +106,10 @@ for k in ("setup_s", "op_p50_ms"):
           f"base quartiles {q1:.3f}-{q3:.3f} (IQR {q3 - q1:.3f}); "
           f"head won {wins}/{len(both)} pairs; |median diff| {abs(mh - mb):.3f} "
           f"{'>' if abs(mh - mb) > q3 - q1 else '<='} base IQR")
-# per request kind, from the artifacts' measured operations (ok ones only)
-kinds = {}
+# per request kind and per loop position (op-0, op-1, ...), from the
+# artifacts' measured operations (ok ones only); serve runs no warm-up, so
+# the first positions are the JVM's cold requests
+kinds, positions = {}, {}
 for side in ("base", "head"):
     for path in sorted(glob.glob(os.path.join(sys.argv[2], f"{side}-*.json"))):
         try:
@@ -114,13 +118,22 @@ for side in ("base", "head"):
             continue
         for p in passes:
             for o in p.get("ops", []):
-                if o.get("ok") and "kind" in o:
+                if not o.get("ok"):
+                    continue
+                if "kind" in o:
                     kinds.setdefault(o["kind"], {}).setdefault(side, []).append(o["ms"])
-for kind in sorted(kinds):
-    cells = []
+                at = re.match(r"op-(\d+)#", o.get("id", ""))
+                if at:
+                    positions.setdefault(int(at.group(1)), {}).setdefault(side, []).append(o["ms"])
+def cells(by_side):
+    out = []
     for side in ("base", "head"):
-        ms = kinds[kind].get(side, [])
-        cells.append(f"{side} {statistics.median(ms):9.1f} ms ({len(ms)} ops)" if ms
-                     else f"{side} no ops")
-    print(f"op ms by kind, {kind}: " + " | ".join(cells))
+        ms = by_side.get(side, [])
+        out.append(f"{side} {statistics.median(ms):9.1f} ms ({len(ms)} ops)" if ms
+                   else f"{side} no ops")
+    return " | ".join(out)
+for kind in sorted(kinds):
+    print(f"op ms by kind, {kind}: " + cells(kinds[kind]))
+for i in sorted(positions):
+    print(f"op ms by loop position, op-{i}: " + cells(positions[i]))
 PY
