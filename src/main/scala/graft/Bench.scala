@@ -18,7 +18,7 @@ object Bench extends AdaptiveSparkPlanHelper {
     // normalized instead of argued. calib_1t = a single-thread CPU loop
     // (integer xorshift, fixed iteration count); calib_32t = a fixed
     // spark.range aggregate across all local cores.
-    val calib1t: Double = {
+    def calib1t(): Double = {
       val t0 = System.nanoTime()
       var x = 0x9E3779B97F4A7C15L; var i = 0
       while (i < 400000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
@@ -33,6 +33,7 @@ object Bench extends AdaptiveSparkPlanHelper {
         .selectExpr("bit_xor(hash(id))").collect()
       (System.nanoTime() - t0) / 1e9
     }
+    val calib1tStart = calib1t()
     val calib32tStart = calib32t()
     // Prior per-query medians for the outlier re-run pass (round-8
     // verdict item 1): the committed snapshot at the SAME sf — the scale
@@ -155,13 +156,7 @@ object Bench extends AdaptiveSparkPlanHelper {
     // end-of-run calibration: proves the box was healthy (or not) at
     // bench END, not just start — a stall mid-run shows as healthy
     // calibration on both ends plus a timestamp gap in t0
-    val calib1tEnd: Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L; var i = 0
-      while (i < 400000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      if (x == 42L) println("")
-      (System.nanoTime() - t0) / 1e9
-    }
+    val calib1tEnd = calib1t()
     val calib32tEnd = calib32t()
     // millisecond precision keeps the JSON line short enough to survive
     // output-tail truncation (full-precision doubles tripled its size in
@@ -194,7 +189,7 @@ object Bench extends AdaptiveSparkPlanHelper {
     val failures = results.size - ok.size
     val total = ok.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failures":$failures,"build_sec":${fmt(buildSec)},"calib_1t_sec":${fmt(calib1t)},"calib_32t_sec":${fmt(calib32tStart)},"calib_1t_end_sec":${fmt(calib1tEnd)},"calib_32t_end_sec":${fmt(calib32tEnd)},"bench_epoch":$benchEpoch,"reruns":$rr,"queries":$qs,"sf":"$sfDir","t0":$t0s,"plan_metrics":$pm}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failures":$failures,"build_sec":${fmt(buildSec)},"calib_1t_sec":${fmt(calib1tStart)},"calib_32t_sec":${fmt(calib32tStart)},"calib_1t_end_sec":${fmt(calib1tEnd)},"calib_32t_end_sec":${fmt(calib32tEnd)},"bench_epoch":$benchEpoch,"reruns":$rr,"queries":$qs,"sf":"$sfDir","t0":$t0s,"plan_metrics":$pm}"""
     println(line)
     // belt-and-braces: persist the same line where truncation can't eat it
     // (full runs only — a filtered run must not clobber the snapshot)

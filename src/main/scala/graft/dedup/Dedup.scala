@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.Tokenize
+import graft.Fixpoint
 import graft.similarity.Similarity
 
 /** Deduplication for training-data pipelines: exact, n-gram Jaccard,
@@ -1370,33 +1371,21 @@ object Dedup {
     * is unchanged: stability under neighbor-min forces equal labels
     * across every edge, i.e. the component minimum.
     *
-    * Each round's labels are EAGERLY localCheckpoint-ed, which truncates
-    * lineage: the round plan references the previous labels twice (once
-    * under the neighbor aggregate, once in the update join), so without
-    * truncation the logical plan DOUBLES per round — a >20-round run
-    * OOMed the driver on plan bookkeeping alone, long before any data
-    * pressure (round-6 DBSCAN incident). With truncation every round
-    * re-optimizes the same constant-size plan. Per-round checkpoint
-    * blocks (tiny: two longs per node) are freed by the ContextCleaner
-    * as each round's reference is dropped. Each checkpoint also drops the
-    * plan-estimate statistics it inherits: a join's estimate is the
-    * product of its sides', and a round joins the previous labels into
-    * itself about six times, so inherited estimates grow ~6x in DIGITS
-    * per round — on a 2,000-node path one checkpoint past the first few
-    * rounds ran 25 CPU-minutes of BigInteger multiplication before it was
-    * stopped. The per-round convergence check is a count of changed
-    * labels, not a data collect.
+    * The loop is a [[graft.Fixpoint.untilConverged]] loop: each round's
+    * labels are checkpointed (their plan references the previous labels
+    * twice, under the neighbor aggregate and in the update join, so
+    * without truncation the logical plan DOUBLES per round: a >20-round
+    * run OOMed the driver on plan bookkeeping alone), and the per-round
+    * convergence check is a count of changed labels, not a data collect.
     *
     * Both branches return a materialized, lineage-free frame with every
     * cache they took released — nothing stays pinned in the session
     * cache manager; the distributed branch's final localCheckpoint blocks
     * are freed by the ContextCleaner when the frame is GC'd (no unpersist
-    * contract for the caller: callers never honored one). Cluster caveat: localCheckpoint truncates lineage, so on a
-    * real cluster a lost executor cannot recompute its blocks — swap in a
-    * reliable `checkpoint()` (HDFS-backed) there; the algorithm is
-    * unchanged. Deterministic: min over an undirected edge set,
-    * independent of partition layout. The distributed branch throws
-    * (releasing all caches) if maxIter rounds don't converge. */
+    * contract for the caller: callers never honored one). Deterministic:
+    * min over an undirected edge set, independent of partition layout.
+    * The distributed branch throws (releasing all caches) if maxIter
+    * rounds don't converge. */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 25,
                         driverEdgeCap: Int = DriverEdgeCap): DataFrame = {
     val p = pairs.select(col("doc_a"), col("doc_b"))
@@ -1435,26 +1424,24 @@ object Dedup {
         StructField("cluster_id", LongType, nullable = false))))
   }
 
-  /** Eager localCheckpoint without the inherited plan-estimate stats
-    * (see [[duplicateClusters]]). */
-  private def checkpoint(df: DataFrame): DataFrame =
-    org.apache.spark.sql.classic.GraftSqlBridge.withoutPlanStats(df.localCheckpoint(true))
+  /** Both orientations of every (doc_a, doc_b) pair, as (src, dst)
+    * rows: the undirected edge list of the near-dup graph. Duplicate
+    * pairs stay duplicated; callers that want a set take `distinct()`. */
+  private def undirectedEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
 
   /** The distributed branch of [[duplicateClusters]] over its persisted
     * (doc_a, doc_b) frame `p`. */
   private def pointerJumpingClusters(p: DataFrame, maxIter: Int): DataFrame = {
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().persist()
+    val edges = undirectedEdges(p).distinct().persist()
     try {
       // round 0 fused into initialization: label = min(self, direct
       // neighbors) from one aggregation over the edge list
-      var labels = checkpoint(edges.groupBy("src")
+      val init = Fixpoint.checkpoint(edges.groupBy("src")
         .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
         .withColumnRenamed("src", "doc_id"))
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
+      val labels = Fixpoint.untilConverged("duplicateClusters", init, maxIter) { labels =>
         // neighbor minima + label update + changed flag in ONE pass,
         // then the pointer jump: re-label every node through the label
         // of its own just-updated label. `stepped` is keyed by doc_id
@@ -1467,7 +1454,7 @@ object Dedup {
         // materialized once: the jumps below read it on FOUR sides of
         // self-joins, and checkpointing beats recomputing the edge-join
         // aggregate that many times per round
-        val stepped = checkpoint(labels.withColumnRenamed("cluster_id", "__prev")
+        val stepped = Fixpoint.checkpoint(labels.withColumnRenamed("cluster_id", "__prev")
           .join(neighborMin, Seq("doc_id"), "left")
           .select(col("doc_id"), col("__prev"),
             least(col("__prev"), coalesce(col("__nmin"), col("__prev")))
@@ -1492,7 +1479,7 @@ object Dedup {
           .select(col("doc_id"), col("__prev"),
             least(col("__mid"), coalesce(col("__jump"), col("__mid")))
               .as("__j1"))
-        val next = checkpoint(once
+        val next = Fixpoint.checkpoint(once
           .join(lut.withColumnRenamed("__k", "__j1")
             .withColumnRenamed("__v", "__jump2"), Seq("__j1"), "left")
           .select(col("doc_id"),
@@ -1500,20 +1487,10 @@ object Dedup {
               .as("cluster_id"),
             (least(col("__j1"), coalesce(col("__jump2"), col("__j1")))
               < col("__prev")).as("__changed")))
-        converged = next.filter(col("__changed")).count() == 0
-        labels.unpersist()
-        labels = next
-        i += 1
+        (next, next.filter(col("__changed")).count() == 0)
       }
-      if (!converged) {
-        labels.unpersist()
-        throw new IllegalArgumentException(
-          s"duplicateClusters: not converged after $maxIter rounds")
-      }
-      val out = labels.select("doc_id", "cluster_id").orderBy("doc_id")
+      labels.select("doc_id", "cluster_id").orderBy("doc_id")
         .localCheckpoint(true)
-      labels.unpersist()
-      out
     } finally {
       edges.unpersist()
     }
@@ -1612,11 +1589,11 @@ object Dedup {
     * pipeline uses to pick cluster representatives or spot template hubs
     * that connected components (one flat cluster id) can't rank.
     *
-    * Same iterative discipline as duplicateClusters/kmeansFit: the
-    * (expensive) pair generation and the degree table are checkpointed
-    * ONCE, each round is one edges⋈rank join + keyed aggregate re-using
-    * the same dst partitioning, and rounds are cut loose with eager
-    * localCheckpoint so no lineage or cache pin outlives the call. The
+    * The (expensive) pair generation and the degree table are
+    * checkpointed ONCE, and each round is one edges⋈rank join + keyed
+    * aggregate re-using the same dst partitioning; the rounds are a
+    * [[graft.Fixpoint.iterate]] loop, so the default 3 rounds are one
+    * lazy plan with no per-round job. The
     * node count is a 1-row scalar fetch (the writeZOrdered exception),
     * never a data collect. Every node of the undirected graph has
     * degree >= 1, so there is no dangling-mass term. Ranks are doubles;
@@ -1633,10 +1610,7 @@ object Dedup {
     * both the component labels and the centrality. */
   def pageRankFromPairs(pairs: DataFrame, iters: Int = 3,
                         damping: Double = 0.85): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
-      .localCheckpoint(true)
+    val edges = undirectedEdges(pairs).localCheckpoint(true)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val nNodes = deg.count().toDouble
@@ -1645,10 +1619,9 @@ object Dedup {
     if (nNodes == 0)
       return deg.select(col("src").as("doc_id"),
         round(lit(0.0), 6).as("pagerank"))
-    var pr = deg.select(col("src").as("node"), (lit(1.0) / nNodes).as("pr"))
-    var i = 0
-    while (i < iters) {
-      pr = edges
+    val init = deg.select(col("src").as("node"), (lit(1.0) / nNodes).as("pr"))
+    val pr = Fixpoint.iterate(init, iters) { pr =>
+      edges
         .join(pr.withColumnRenamed("node", "src"), Seq("src"))
         .join(deg, Seq("src"))
         .groupBy(col("dst"))
@@ -1656,8 +1629,6 @@ object Dedup {
         .select(col("dst").as("node"),
           ((lit(1.0) - lit(damping)) / nNodes +
             lit(damping) * col("__m")).as("pr"))
-        .localCheckpoint(true)
-      i += 1
     }
     pr.select(col("node").as("doc_id"), round(col("pr"), 6).as("pagerank"))
       .orderBy("doc_id")
@@ -1672,8 +1643,9 @@ object Dedup {
     * their within-core degree.
     *
     * Peeling is monotone (the active set only shrinks), so the fixed
-    * point is idempotent: the loop early-stops when a round removes
-    * nothing, while the oracle unrolls all `rounds` — extra unrolled
+    * point is idempotent: the loop ([[graft.Fixpoint.untilSettled]])
+    * stops in the round that removes nothing, while the oracle unrolls
+    * all `rounds` — extra unrolled
     * rounds are identity, so the two agree whenever the loop converges,
     * and when it does NOT converge in `rounds` both sides have executed
     * exactly the same `rounds` peels. (A path graph peels one node per
@@ -1682,34 +1654,23 @@ object Dedup {
     *
     * Scale notes (100 TB): each round is one (active-filtered) degree
     * aggregate — two hash semi-joins of an ids-only frame against the
-    * once-materialized edge list, exchange keyed by node id; per-round
-    * localCheckpoint keeps lineage flat (the kmeansFit discipline). No
+    * once-materialized edge list, exchange keyed by node id. No
     * driver-side data beyond the per-round convergence count. */
   def kCoreFromPairs(pairs: DataFrame, k: Int = 2, rounds: Int = 8): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
-      .localCheckpoint(true)
+    val edges = undirectedEdges(pairs).localCheckpoint(true)
     def degrees(active: DataFrame): DataFrame = edges
       .join(active.select(col("node").as("src")), Seq("src"))
       .join(active.select(col("node").as("dst")), Seq("dst"))
       .groupBy("src").agg(count(lit(1)).as("deg"))
-    var active = edges.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
-    var nActive = active.count()
-    var i = 0
-    var stable = false
-    while (i < rounds && !stable) {
-      val next = degrees(active).filter(col("deg") >= k)
-        .select(col("src").as("node"))
-        .localCheckpoint(true)
+    val all = Fixpoint.checkpoint(edges.select(col("src").as("node")).distinct())
+    // state: the surviving nodes and their count
+    val (core, _) = Fixpoint.untilSettled((all, all.count()), rounds) { case (active, nActive) =>
+      val next = Fixpoint.checkpoint(degrees(active).filter(col("deg") >= k)
+        .select(col("src").as("node")))
       val n = next.count()
-      stable = n == nActive
-      active = next
-      nActive = n
-      i += 1
+      ((next, n), n == nActive)
     }
-    degrees(active)
+    degrees(core)
       .select(col("src").as("doc_id"), col("deg").as("core_deg"))
       .orderBy("doc_id")
   }
@@ -1736,38 +1697,23 @@ object Dedup {
     * aggregates partial-aggregate map-side and never sort, where the
     * window sorted every (node, label) partition per round; work is
     * O(|E|) per round with no all-pairs step anywhere (edges come from
-    * the df-capped pair lineage). At the default depth the whole
-    * propagation stays ONE lazy plan over the checkpointed edge frame:
-    * no per-round eager checkpoint jobs (the flat-lineage discipline
-    * duplicateClusters needs for its unbounded convergence loop buys
-    * nothing for a depth-3 chain, and at 10x the per-round driver
-    * round-trips were most of the wall). `rounds` is a public parameter,
-    * though, so deep callers are guarded: every [[LpaCheckpointEvery]]
-    * rounds the label frame is eagerly localCheckpoint'ed, truncating
-    * lineage so analysis/optimization cost stays bounded per block of
-    * rounds instead of growing with the whole chain. The label frame is
+    * the df-capped pair lineage). The rounds are a
+    * [[graft.Fixpoint.iterate]] loop over the checkpointed edge frame:
+    * the default depth 3 is one lazy plan with no per-round eager
+    * checkpoint jobs (at 10x the per-round driver round-trips were most
+    * of the wall), and deeper callers get a checkpoint every
+    * [[graft.Fixpoint.CheckpointEvery]] rounds. The label frame is
     * NOT broadcast by hint — one row per node, unbounded at corpus
     * scale; AQE may still choose to at small n. */
-  /** Rounds per lazy-plan block in [[lpaCommunities]]: within a block the
-    * propagation is one Catalyst plan (3 nodes/round); at each block
-    * boundary the label frame is localCheckpoint'ed. 8 keeps the default
-    * depth-3 call checkpoint-free while capping plan depth at ~24 nodes
-    * for arbitrarily deep callers. */
-  val LpaCheckpointEvery = 8
-
   def lpaCommunities(pairs: DataFrame, rounds: Int = 3): DataFrame = {
-    val p = pairs.select(col("doc_a"), col("doc_b"))
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().localCheckpoint(true)
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+    val edges = undirectedEdges(pairs).distinct().localCheckpoint(true)
+    val init = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
-    var t = 0
-    while (t < rounds) {
-      // modal neighbor label; deterministic tie-break = highest count,
-      // then LOWEST label, as one lexicographic struct max (-label makes
-      // "lowest label" the max; labels are nonnegative doc ids)
-      labels = edges
+    // modal neighbor label; deterministic tie-break = highest count, then
+    // LOWEST label, as one lexicographic struct max (-label makes "lowest
+    // label" the max; labels are nonnegative doc ids)
+    val labels = Fixpoint.iterate(init, rounds) { labels =>
+      edges
         .join(labels.select(col("doc_id").as("dst"), col("label").as("__nl")),
           Seq("dst"))
         .groupBy(col("src"), col("__nl"))
@@ -1775,13 +1721,6 @@ object Dedup {
         .groupBy(col("src").as("doc_id"))
         .agg(max(struct(col("__c"), (-col("__nl")).as("__neg"))).as("__m"))
         .select(col("doc_id"), (-col("__m.__neg")).as("label"))
-      t += 1
-      // lineage guard for deep callers: the default depth-3 chain stays
-      // one lazy plan (no job here), but past each block boundary the
-      // label frame is materialized so plan depth — and with it
-      // analysis/optimization cost — is bounded per block, not per call
-      if (t % LpaCheckpointEvery == 0 && t < rounds)
-        labels = labels.localCheckpoint(true)
     }
     labels.select(col("doc_id"), col("label").as("community"))
       .orderBy("doc_id")

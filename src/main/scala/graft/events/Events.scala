@@ -270,6 +270,8 @@ object Events {
     * uniform vector — the pageRankFromPairs discipline (double sums per
     * round, one round(6) anchor at the end, oracle = the same rounds
     * unrolled CTE-by-CTE). Types whose mass has fully drained report 0.
+    * The rounds are a [[graft.Fixpoint.iterate]] loop: one lazy plan,
+    * checkpointed every [[graft.Fixpoint.CheckpointEvery]] rounds.
     *
     * Scale notes (100 TB): the chain state is TYPE-cardinality (tens of
     * rows) — every join after the one transition-counting pass is over
@@ -297,14 +299,11 @@ object Events {
     if (n == 0)
       return types.select(col("t").as("event_type"),
         round(lit(0.0), 6).as("stationary"))
-    var pi = types.select(col("t").as("event_type"), (lit(1.0) / n).as("pi"))
-    var i = 0
-    while (i < iters) {
-      pi = p.join(pi.withColumnRenamed("event_type", "from_type"),
-          Seq("from_type"))
+    val init = types.select(col("t").as("event_type"), (lit(1.0) / n).as("pi"))
+    val pi = graft.Fixpoint.iterate(init, iters) { pi =>
+      p.join(pi.withColumnRenamed("event_type", "from_type"), Seq("from_type"))
         .groupBy(col("to_type").as("event_type"))
         .agg(sum(col("pi") * col("p")).as("pi"))
-      i += 1
     }
     types.join(pi.withColumnRenamed("event_type", "t"), Seq("t"), "left")
       .select(col("t").as("event_type"),

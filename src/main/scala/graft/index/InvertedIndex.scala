@@ -101,10 +101,19 @@ object InvertedIndex {
                                     occ: String => Map[Long, Array[Int]]): Seq[Row] = {
     val chain = terms.map(occ)
     chain.head.keys.toSeq.sorted.flatMap { d =>
-      val lists = chain.map(_.getOrElse(d, Array.emptyIntArray))
-      val n = lists.head.iterator.map { s =>
-        lists.indices.tail.iterator.map(i => countOf(lists(i), s.toLong + i)).product
-      }.sum
+      val lists = chain.map(_.getOrElse(d, Array.emptyIntArray)).toArray
+      var n = 0L
+      var j = 0
+      while (j < lists(0).length) {
+        var product = 1L
+        var i = 1
+        while (i < lists.length && product != 0) {
+          product *= countOf(lists(i), lists(0)(j).toLong + i)
+          i += 1
+        }
+        n += product
+        j += 1
+      }
       Option.when(n > 0)(Row(d, n))
     }
   }

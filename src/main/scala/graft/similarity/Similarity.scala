@@ -447,12 +447,12 @@ object Similarity {
     *
     * Scale shape: each round is one broadcast-fold corpus scan (ivfAssign,
     * zero shuffle) plus one partial+final aggregate whose exchange carries
-    * nCells × dims decimal partials. The tiny per-round centroid frame is
-    * eagerly localCheckpoint'ed, truncating lineage the same way
-    * Dedup.duplicateClusters does — without it, round t's plan would
-    * re-derive rounds 1..t-1 and the optimizer would choke by round ~5.
-    * The eps test reads a 1-row aggregate per round (driver-side by
-    * nature: it is the loop condition, not a data path). */
+    * nCells × dims decimal partials. The rounds are a
+    * [[graft.Fixpoint.untilSettled]] loop: the tiny per-round centroid
+    * frames are checkpointed every round (without it, round t's plan
+    * would re-derive rounds 1..t-1 and the optimizer would choke by
+    * round ~5), and the eps test reads a 1-row aggregate per round
+    * (driver-side by nature: it is the loop condition, not a data path). */
   def kmeansFit(embeddings: DataFrame, nCells: Int = 16, iters: Int = 3,
                 seed: Long = 7L, dims: Int = 64,
                 eps: Double = 0.0): DataFrame =
@@ -479,11 +479,14 @@ object Similarity {
                                        eps: Double = 0.0): DataFrame = {
     require(iters >= 1 && nCells >= 1)
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 18)
-    var cells = ivfCells(e, nCells, seed).localCheckpoint(true)
-    var perCell: DataFrame = null
-    var it = 0
-    var moved = Double.MaxValue
-    while (it < iters && moved > eps) {
+    // state: (cell_id, cu[, n_vecs]) per cell, re-packed every round
+    // into the one-row centroid array ivfAssign broadcasts
+    val seeded = ivfCells(e, nCells, seed).select(explode(col("cells")).as("c"))
+      .select(col("c.cell_id").as("cell_id"), col("c.cu").as("cu"))
+    graft.Fixpoint.untilSettled(seeded, iters) { fit =>
+      val cells = graft.Fixpoint.checkpoint(fit
+        .agg(array_sort(collect_list(struct(col("cell_id"), col("cu"))))
+          .as("cells")))
       val assigned = ivfAssign(e, cells)
       val sumCols = (1 to dims).map(d =>
         sum(element_at(col("u"), d).cast(dec)).as(s"__s$d"))
@@ -494,23 +497,14 @@ object Similarity {
         VectorFunctions.unit(mArr).as("new_cu"), col("n_vecs"))
       val prev = cells.select(explode(col("cells")).as("c"))
         .select(col("c.cell_id").as("cell_id"), col("c.cu").as("prev_cu"))
-      val merged = prev.join(upd, Seq("cell_id"), "left")
+      val merged = graft.Fixpoint.checkpoint(prev.join(upd, Seq("cell_id"), "left")
         .select(col("cell_id"),
           coalesce(col("new_cu"), col("prev_cu")).as("cu"),
           col("prev_cu"),
-          coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
-        .localCheckpoint(true)
-      moved = merged
-        .agg(max(lit(1.0) - dot(col("cu"), col("prev_cu"))).as("m"))
-        .head().getDouble(0)
-      perCell = merged.drop("prev_cu")
-      cells = merged
-        .agg(array_sort(collect_list(struct(col("cell_id"), col("cu"))))
-          .as("cells"))
-        .localCheckpoint(true)
-      it += 1
+          coalesce(col("n_vecs"), lit(0L)).as("n_vecs")))
+      val moved = merged.agg(max(lit(1.0) - dot(col("cu"), col("prev_cu")))).head().getDouble(0)
+      (merged.drop("prev_cu"), moved <= eps)
     }
-    perCell
   }
 
   /** Oracle-shaped fit report: per-cell population of the final

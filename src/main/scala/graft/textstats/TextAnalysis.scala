@@ -634,9 +634,10 @@ object TextAnalysis {
     * vocabulary-sized table (distinct words + frequencies, never the
     * corpus), each round is one distributed pair-count aggregate, exactly
     * ONE row (the argmax pair) comes back to the driver, and the merged
-    * vocabulary is localCheckpoint'ed so lineage stays flat across
-    * rounds. At 100 TB the corpus is scanned ONCE (the word count);
-    * every subsequent round touches only the vocabulary, which is
+    * vocabulary is checkpointed every round, a
+    * [[graft.Fixpoint.untilSettled]] loop that stops early once no word
+    * has two symbols left. At 100 TB the corpus is scanned ONCE (the
+    * word count); every subsequent round touches only the vocabulary, which is
     * millions of rows at web scale — a broadcast-sized frame.
     *
     * Words are carried in the classic wrapped-symbol string form — each
@@ -661,11 +662,10 @@ object TextAnalysis {
           "transform(sequence(1, length(term)), i -> substring(term, i, 1))"),
           ".."),
         lit(".")).as("sym"), col("freq"))
-    var cur = words.localCheckpoint(true)
-    val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= nMerges && !exhausted) {
+    // state: the vocabulary and the merges so far
+    val init = (graft.Fixpoint.checkpoint(words),
+      Vector.empty[(Long, String, String, String, Long)])
+    val (_, merges) = graft.Fixpoint.untilSettled(init, nMerges) { case (cur, merges) =>
       // adjacent symbol pairs of the wrapped form, weighted by word freq;
       // guard the size<2 case (Spark's sequence counts DOWN on (1,0))
       val top = cur
@@ -680,20 +680,19 @@ object TextAnalysis {
         .agg(sum("freq").as("pair_count"))
         .orderBy(desc("pair_count"), asc("lhs"), asc("rhs"))
         .limit(1).collect()
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) ((cur, merges), true)
       else {
         val (l, rr, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r.toLong, l, rr, l + rr, cnt))
         // lit()s, not SQL literals: symbols may contain apostrophes
-        cur = cur.withColumn("sym",
+        val merged = cur.withColumn("sym",
           call_function("replace", col("sym"),
             lit(s".$l..$rr."), lit(s".$l$rr.")))
-          .localCheckpoint(true)
-        r += 1
+        ((graft.Fixpoint.checkpoint(merged),
+          merges :+ ((merges.size + 1L, l, rr, l + rr, cnt))), false)
       }
     }
     import spark.implicits._
-    merges.result()
+    merges
       .toDF("merge_round", "lhs", "rhs", "merged", "pair_count")
       .orderBy("merge_round")
   }
@@ -1725,7 +1724,9 @@ object TextAnalysis {
     * Scale notes (100 TB): the corpus-sized work is ONE tokenize scan
     * into adjacent pairs (map-side combined into the vocabulary-sized
     * edge list); every subsequent round is a vocabulary-keyed join —
-    * corpus row count never appears again. The final top-k window is
+    * corpus row count never appears again. The rounds are a
+    * [[graft.Fixpoint.iterate]] loop: the default 3 are one lazy plan
+    * with no per-round job. The final top-k window is
     * unpartitioned BY DESIGN over the vocabulary-sized rank frame
     * (WindowGroupLimit keeps k rows per partition ahead of the single
     * merge). */
@@ -1751,10 +1752,9 @@ object TextAnalysis {
     if (nNodes == 0)
       return wdeg.select(col("src").as("term"),
         round(lit(0.0), 6).as("textrank"), lit(0L).as("rk"))
-    var pr = wdeg.select(col("src").as("node"), (lit(1.0) / nNodes).as("pr"))
-    var i = 0
-    while (i < iters) {
-      pr = edges
+    val init = wdeg.select(col("src").as("node"), (lit(1.0) / nNodes).as("pr"))
+    val pr = graft.Fixpoint.iterate(init, iters) { pr =>
+      edges
         .join(pr.withColumnRenamed("node", "src"), Seq("src"))
         .join(wdeg, Seq("src"))
         .groupBy(col("dst"))
@@ -1763,8 +1763,6 @@ object TextAnalysis {
         .select(col("dst").as("node"),
           ((lit(1.0) - lit(damping)) / nNodes +
             lit(damping) * col("__m").cast("double")).as("pr"))
-        .localCheckpoint(true)
-      i += 1
     }
     val byRank = Window.orderBy(col("pr").desc, col("node"))
     pr.withColumn("rk", row_number().over(byRank).cast("long"))

@@ -1,8 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.textstats.TextAnalysis
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
@@ -239,31 +238,16 @@ class DedupSpec extends SparkSpec {
     // the benchmark's shape: the pairs are persisted and counted first,
     // so every job in the call is the clustering's own
     val pairs = Dedup.jaccardPairs(corpus, 3, 0.5, maxShingleDf = 100).persist()
-    val sc = spark.sparkContext
-    val group = "graft-cluster-jobs"
-    val jobIds = scala.collection.mutable.Set.empty[Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group)) jobIds.synchronized {
-          jobIds += e.jobId
-        }
-    }
     try {
       assert(pairs.count() > 0)
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "duplicateClusters job pin")
-      val clusters = try Dedup.duplicateClusters(pairs) finally sc.clearJobGroup()
-      GraftListenerBus.drain(sc)
-      val ran = jobIds.synchronized(jobIds.toSet)
+      val (clusters, jobs) =
+        jobsIn("graft-cluster-jobs")(Dedup.duplicateClusters(pairs))
+      val ran = jobs.keySet
       assert(ran.size <= 2, s"duplicateClusters ran ${ran.size} jobs $ran")
       // the labels are driver-side rows: no lineage, no cache pin
       assert(clusters.queryExecution.logical.isInstanceOf[LocalRelation])
       assert(clusters.count() > 0)
-    } finally {
-      sc.removeSparkListener(listener)
-      pairs.unpersist()
-    }
+    } finally pairs.unpersist()
   }
 
   test("capped path bounds per-bucket candidate fan-out at df <= cap") {
@@ -716,13 +700,88 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(re == lpa)
     // deep-rounds lineage guard (round-9 ADVICE): a call crossing the
-    // LpaCheckpointEvery block boundary must propagate identically —
+    // Fixpoint.CheckpointEvery block boundary must propagate identically —
     // the checkpoint truncates lineage, never the label state. This
-    // graph converges by round 3, so rounds=LpaCheckpointEvery+1 (which
+    // graph converges by round 3, so rounds=CheckpointEvery+1 (which
     // checkpoints once mid-loop) must equal the round-3 fixpoint.
-    val deep = Dedup.lpaCommunities(pairs, rounds = Dedup.LpaCheckpointEvery + 1)
+    val deep = Dedup.lpaCommunities(pairs, rounds = Fixpoint.CheckpointEvery + 1)
       .as[(Long, Long)].collect().toMap
     assert(deep == lpa)
+    // a 30-node path keeps relabeling for dozens of rounds, so a block
+    // boundary that dropped or repeated a round would change its labels
+    val path = (1L until 30L).map(i => (i, i + 1))
+    val every = Fixpoint.CheckpointEvery
+    for (r <- Seq(every, every + 1, 2 * every + 1)) {
+      assert(lpaReplay(path, r) != lpaReplay(path, r - 1) &&
+        lpaReplay(path, r) != lpaReplay(path, r + 1), s"round $r: replay settled")
+      assert(Dedup.lpaCommunities(path.toDF("doc_a", "doc_b"), rounds = r)
+        .as[(Long, Long)].collect().toMap == lpaReplay(path, r), s"rounds = $r")
+    }
+  }
+
+  // driver replays of the fixed-round updates, for the block-boundary cases
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** lpaCommunities' update rule: every node takes its neighbors' modal
+    * label, highest count then lowest label, over the distinct edges. */
+  private def lpaReplay(pairs: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+    val init = edges.map(_._1).distinct.map(n => n -> n).toMap
+    (1 to rounds).foldLeft(init) { (label, _) =>
+      edges.groupBy(_._1).map { case (src, out) =>
+        src -> out.groupBy(e => label(e._2)).toSeq
+          .maxBy { case (l, es) => (es.size, -l) }._1
+      }
+    }
+  }
+
+  /** pageRankFromPairs' update rule over both orientations of every pair,
+    * duplicates kept, as (doc_id, round(pr, 6)) by doc_id. */
+  private def pageRankReplay(pairs: Seq[(Long, Long)], rounds: Int,
+                             d: Double = 0.85): Seq[(Long, Double)] = {
+    val edges = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+    val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
+    val n = deg.size.toDouble
+    val pr = (1 to rounds).foldLeft(deg.map { case (k, _) => k -> 1.0 / n }) {
+      (pr, _) => edges.groupBy(_._2).map { case (dst, in) =>
+        dst -> ((1.0 - d) / n + d * in.map { case (src, _) => pr(src) / deg(src) }.sum)
+      }
+    }
+    pr.toSeq.sorted.map { case (k, v) => k -> round6(v) }
+  }
+
+  test("PageRank past a checkpoint boundary equals the driver replay at round(6)") {
+    // a star 1-{2..5} with a doubled spoke, then a path 5-6-7-8: the
+    // graph is bipartite, so the ranks still swing at round 9
+    val pairs = Seq((1L, 2L), (1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L),
+      (5L, 6L), (6L, 7L), (7L, 8L))
+    val r = Fixpoint.CheckpointEvery + 1
+    assert(pageRankReplay(pairs, r) != pageRankReplay(pairs, r - 1) &&
+      pageRankReplay(pairs, r) != pageRankReplay(pairs, r + 1))
+    val got = Dedup.pageRankFromPairs(pairs.toDF("doc_a", "doc_b"), iters = r)
+      .as[(Long, Double)].collect().toSeq
+    assert(got == pageRankReplay(pairs, r))
+  }
+
+  test("PageRank and TextRank run their default-depth rounds as one lazy plan: no per-round job") {
+    // building at the default depth launches exactly the jobs of building
+    // at depth 0 (the edge and degree checkpoints and the node count):
+    // the rounds themselves run only when the result is collected
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("doc_a", "doc_b")
+    val docs = (1 to 8).map(i => (i.toLong, s"leaf$i core leaf${i % 8 + 1}"))
+      .toDF("doc_id", "text")
+    // both operators default to 3 rounds
+    val builds = Seq[(String, Int => DataFrame)](
+      "pageRankFromPairs" -> (i => Dedup.pageRankFromPairs(pairs, iters = i)),
+      "textRankKeywords" -> (i => TextAnalysis.textRankKeywords(docs, iters = i)))
+    for ((name, build) <- builds) {
+      val (_, none) = jobsIn(s"$name-depth-0")(build(0))
+      val (out, default) = jobsIn(s"$name-default-depth")(build(3))
+      assert(none.nonEmpty && default.size == none.size,
+        s"$name: ${default.size} jobs at the default depth, ${none.size} at depth 0")
+      assert(out.collect().nonEmpty, name)
+    }
   }
 
   // brute-force reference for the prefix-filter parity tests: rep-collapse

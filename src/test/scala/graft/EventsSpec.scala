@@ -95,6 +95,34 @@ class EventsSpec extends SparkSpec {
     assert(rows == Seq(("A", 0.0), ("B", 0.5), ("C", 0.5)))
   }
 
+  test("markovStationary past a checkpoint boundary equals the driver replay at round(6)") {
+    // one user walking the cycle A B C nine times, then D and back to A:
+    // an almost periodic chain, so the mass still rotates at round 9
+    val walk = "ABC" * 9 + "DA"
+    val ev = walk.zipWithIndex.map { case (t, i) =>
+      (1L, new Timestamp(1704103200000L + i * 60000L), t.toString, i.toLong)
+    }.toDF("user_id", "ts", "event_type", "event_id")
+    // the update rule on the driver: row-normalized transition counts,
+    // terminal-only types self-loop, power rounds from the uniform vector
+    def replay(rounds: Int): Seq[(String, Double)] = {
+      val moves = walk.map(_.toString).sliding(2).map(s => s(0) -> s(1)).toSeq
+      val types = walk.map(_.toString).distinct.sorted
+      val out = moves.groupBy(_._1).map { case (f, ms) => f -> ms.size.toDouble }
+      val p = moves.groupBy(identity).map { case ((f, t), ms) => (f, t) -> ms.size / out(f) } ++
+        types.filterNot(out.contains).map(t => (t, t) -> 1.0)
+      val pi = (1 to rounds).foldLeft(types.map(_ -> 1.0 / types.size).toMap) { (pi, _) =>
+        p.toSeq.groupBy(_._1._2).map { case (t, in) =>
+          t -> in.map { case ((f, _), pr) => pi.getOrElse(f, 0.0) * pr }.sum }
+      }
+      types.map(t => t -> BigDecimal(pi.getOrElse(t, 0.0))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    val r = graft.Fixpoint.CheckpointEvery + 1
+    assert(replay(r) != replay(r - 1) && replay(r) != replay(r + 1))
+    assert(Events.markovStationary(ev, iters = r).as[(String, Double)]
+      .collect().toSeq == replay(r))
+  }
+
   test("cohort retention counts only at-or-after-signup activity") {
     val ev = Seq(
       (1L, ts("2024-01-01 10:00:00"), "signup"),

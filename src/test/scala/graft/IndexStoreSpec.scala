@@ -3,9 +3,6 @@ package graft
 import java.nio.file.Files
 import graft.index.{IndexStore, InvertedIndex}
 import graft.rank.BM25
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, raise_error}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -117,54 +114,29 @@ class IndexStoreSpec extends StoredBranches with AdaptiveSparkPlanHelper {
     IndexStore.write(docs, d)
     assert(new java.io.File(s"$d/postings").list()
       .count(_.startsWith("term_bucket=")) > 32)
-    val sc = spark.sparkContext
-    val group = "graft-serving-jobs"
-    // job id -> tasks launched, for the jobs of this test's job group
-    val jobTasks = scala.collection.mutable.Map.empty[Int, Int]
-    val stageJob = scala.collection.mutable.Map.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group)) jobTasks.synchronized {
-          jobTasks(e.jobId) = 0
-          e.stageIds.foreach(stageJob(_) = e.jobId)
-        }
-      override def onTaskStart(e: SparkListenerTaskStart): Unit =
-        jobTasks.synchronized {
-          stageJob.get(e.stageId).foreach(j => jobTasks(j) += 1)
-        }
-    }
-    def jobs(): Map[Int, Int] = {
-      GraftListenerBus.drain(sc)
-      jobTasks.synchronized(jobTasks.toMap)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "serving-path job pin")
-    try {
-      val frames = Seq(
-        BM25.searchStored(spark, d, "w1 w2 w3"),
-        BM25.searchManyStored(spark, d, Seq((1L, "w1 w2"), (2L, "w3"))),
-        BM25.searchStoredPhraseBoosted(spark, d, "w0 w13"),
-        IndexStore.phraseMatchStored(spark, d, "w0 w13"),
-        IndexStore.proximityMatchStored(spark, d, "w0", "w26", 8))
-      assert(jobs().isEmpty, s"building stored queries ran jobs ${jobs()}")
-      // under the byte cap a search, a phrase and a proximity request read
-      // and answer on the driver
-      Seq("search" -> frames(0), "phrase" -> frames(3), "proximity" -> frames(4))
-        .foreach { case (kind, f) =>
-          assert(f.collect().nonEmpty, s"the $kind is empty")
-          assert(jobs().isEmpty, s"the $kind ran jobs (id -> tasks) ${jobs()}")
-        }
-      // the Spark plan (cap 0) runs no wide job
-      BM25.searchStored(spark, d, "w1 w2 w3", driverReadMaxBytes = 0).collect()
-      val run = jobs()
-      val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      assert(run.nonEmpty && run.values.forall(_ <= cap),
-        s"searchStored at cap 0 ran jobs (id -> tasks) $run, cap $cap tasks")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    def jobs[T](body: => T): (T, Map[Int, Int]) =
+      jobsIn("graft-serving-jobs")(body)
+    val (frames, built) = jobs(Seq(
+      BM25.searchStored(spark, d, "w1 w2 w3"),
+      BM25.searchManyStored(spark, d, Seq((1L, "w1 w2"), (2L, "w3"))),
+      BM25.searchStoredPhraseBoosted(spark, d, "w0 w13"),
+      IndexStore.phraseMatchStored(spark, d, "w0 w13"),
+      IndexStore.proximityMatchStored(spark, d, "w0", "w26", 8)))
+    assert(built.isEmpty, s"building stored queries ran jobs $built")
+    // under the byte cap a search, a phrase and a proximity request read
+    // and answer on the driver
+    Seq("search" -> frames(0), "phrase" -> frames(3), "proximity" -> frames(4))
+      .foreach { case (kind, f) =>
+        val (rows, ran) = jobs(f.collect())
+        assert(rows.nonEmpty, s"the $kind is empty")
+        assert(ran.isEmpty, s"the $kind ran jobs (id -> tasks) $ran")
+      }
+    // the Spark plan (cap 0) runs no wide job
+    val (_, run) = jobs(
+      BM25.searchStored(spark, d, "w1 w2 w3", driverReadMaxBytes = 0).collect())
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(run.nonEmpty && run.values.forall(_ <= cap),
+      s"searchStored at cap 0 ran jobs (id -> tasks) $run, cap $cap tasks")
   }
 
   test("stores with missing bucket directories serve the recompute answer") {
@@ -469,29 +441,12 @@ class IndexStoreSpec extends StoredBranches with AdaptiveSparkPlanHelper {
     import spark.implicits._
     val docs = (0 until 400).map(i => (i.toLong, s"w${i % 7} w${i % 13} w${i % 31} w$i"))
       .toDF("doc_id", "text").repartition(4).persist()
-    val sc = spark.sparkContext
-    val group = "graft-build-jobs"
-    val jobIds = scala.collection.mutable.Set.empty[Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group)) jobIds.synchronized {
-          jobIds += e.jobId
-        }
-    }
     try {
       assert(docs.count() > 0)
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "IndexStore.write job pin")
-      try IndexStore.write(docs, Files.createTempDirectory("graft-index-jobs").toString)
-      finally sc.clearJobGroup()
-      GraftListenerBus.drain(sc)
-      val ran = jobIds.synchronized(jobIds.toSet)
+      val ran = jobsIn("graft-build-jobs")(IndexStore.write(docs,
+        Files.createTempDirectory("graft-index-jobs").toString))._2.keySet
       assert(ran.nonEmpty && ran.size <= 6, s"IndexStore.write ran ${ran.size} jobs $ran")
-    } finally {
-      sc.removeSparkListener(listener)
-      docs.unpersist()
-    }
+    } finally docs.unpersist()
   }
 
   test("a store of an older layout, or with no index_meta, fails loudly") {

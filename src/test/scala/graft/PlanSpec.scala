@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
 import graft.index.InvertedIndex
 import graft.rank.BM25
@@ -206,5 +209,32 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         case _ => false
       }.nonEmpty, s"$name: no partial limit below the exchange\n$plan")
     }
+  }
+
+  test("sim_sparse_topk computes its pair aggregate once: the mirror reuses its exchange") {
+    // dots = half ∪ mirror(half): the mirrored branch must read the
+    // pair aggregate's shuffle, not explode and shuffle the pairs again
+    val df = SparkEntry.queries("sim_sparse_topk")(spark, dir)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    // the pair aggregate's exchange: fed by a partial sum over the four
+    // pair keys (doc_id, neighbor_id, na, nb)
+    def pairKeyed(s: ShuffleExchangeLike): Boolean = (s.child match {
+      case w: WholeStageCodegenExec => w.child
+      case c => c
+    }) match {
+      case a: HashAggregateExec => a.groupingExpressions.size == 4 &&
+        a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Sum])
+      case _ => false
+    }
+    val pairShuffles = collect(plan) { case s: ShuffleExchangeLike if pairKeyed(s) => s }
+    assert(pairShuffles.size == 1, s"pair-aggregate exchanges ${pairShuffles.size}\n$plan")
+    val reused = collect(plan) {
+      case r: ReusedExchangeExec if (r.child match {
+        case s: ShuffleExchangeLike => pairKeyed(s)
+        case _ => false
+      }) => r
+    }
+    assert(reused.size == 1, s"the mirror does not reuse the pair exchange\n$plan")
   }
 }
