@@ -20,80 +20,94 @@ import graft.textstats.TextAnalysis
   * one groupBy over a single tagged frame — no per-stage recounting of the
   * corpus, and "kept" is by construction the complement of the drops.
   *
-  * Scale notes (100 TB): stages 1-2 are scan-shaped (the three stat frames
-  * join on doc_id); stage 3 is one hash aggregate; stage 4 runs the
-  * df-capped single-exchange Jaccard pipeline ONLY over docs that survived
-  * 1-3 (typically a large reduction before the most expensive stage). */
+  * Scale notes (100 TB): stages 1-2 and the content hash are one fused
+  * scan ([[verdicts]]); stage 3 is one hash aggregate over the narrow
+  * verdicts; stage 4 runs the df-capped single-exchange Jaccard pipeline
+  * ONLY over docs that survived 1-3 (typically a large reduction before
+  * the most expensive stage). Full curation ([[curationTags]]) and
+  * `IncrementalCuration` both run [[verdicts]] and [[tags]]. */
 object Curation {
 
   val Stages: Seq[String] = Seq("1_dropped_langid", "2_dropped_quality",
     "3_dropped_exact_dup", "4_dropped_near_dup", "5_kept")
 
   /** Per-doc verdict: (doc_id, stage) where stage is the first filter the
-    * doc failed, or "5_kept".
+    * doc failed, or "5_kept": [[tags]] over the checkpointed [[verdicts]],
+    * with the near-dup stage shingling the exact representatives' text.
     *
-    * The three stat pipelines behind stages 1-2 each cost a corpus
-    * tokenize scan, and EVERY later stage consumes their verdicts — left
-    * as lazy lineage they would recompute behind the exact-dedup build,
-    * the Jaccard feed, and the final tag projection (observed 3x cost at
-    * bench scale). The verdict frame is 3 narrow columns per doc, so it
-    * gets one eager localCheckpoint: stats compute once, nothing stays in
-    * the session cache manager, and text is re-read from the (cheap,
-    * column-pruned) source scan only where a stage genuinely needs it. */
+    * The verdict scan tokenizes the whole corpus, and EVERY later stage
+    * consumes its verdicts — left as lazy lineage it would recompute
+    * behind the exact-dedup build, the Jaccard feed, and the final tag
+    * projection (observed 3x cost at bench scale). The verdict frame is 4
+    * narrow columns per doc, so it gets one eager localCheckpoint: stats
+    * compute once, nothing stays in the session cache manager, and text
+    * is re-read from the (cheap, column-pruned) source scan only for the
+    * shingles of the exact representatives. */
   def curationTags(docs: DataFrame, minTokens: Long = 5,
                    maxDupTrigramFrac: Double = 0.2, n: Int = 3,
                    minJaccard: Double = 0.5,
-                   maxShingleDf: Int = 100): DataFrame = {
-    // language, token count AND the duplicate-trigram fraction are all
-    // scalar per-row stats: ONE fused corpus scan, no join (round-3
-    // continuation; round-9 folds the trigram fraction in-row — the
-    // fraction is 1 - |distinct trigrams|/|trigrams|, i.e. two array
-    // sizes over the codegen shingle expression, so the funnel no longer
-    // pays repetitionStats' explode + countDistinct exchange for a
-    // per-row quantity. Same integers, same double division, same
-    // round(4) as repetitionStats — the oracle is unchanged.)
+                   maxShingleDf: Int = 100): DataFrame =
+    tags(verdicts(docs, minTokens, maxDupTrigramFrac).localCheckpoint(true),
+      ids => Dedup.shingles(docs.join(ids, Seq("doc_id"), "left_semi"), n),
+      minJaccard, maxShingleDf)
+
+  /** Stages 1-2 and the content hash, from ONE fused corpus scan:
+    * (doc_id, content_hash, pass_lang, pass_quality). Language, token
+    * count, the duplicate-trigram fraction and md5 are all scalar per-row
+    * stats, so no stat pipeline joins back on doc_id. The trigram
+    * fraction is 1 - |distinct trigrams|/|trigrams|, i.e. two array sizes
+    * over the codegen shingle expression: the same integers, double
+    * division and round(4) as `TextAnalysis.repetitionStats`, without its
+    * explode. Pure per-doc functions of the text, so
+    * `IncrementalCuration` memoizes them per content hash. */
+  private[curate] def verdicts(docs: DataFrame, minTokens: Long,
+                               maxDupTrigramFrac: Double): DataFrame = {
     val tri3 = graft.functions.TextFunctions.shingles(
       graft.text.Tokenize.tokens(col("text")), 3)
     val dtf = when(size(tri3) === 0, lit(0.0))
       .otherwise(round(lit(1.0) -
         size(array_distinct(tri3)).cast("double") / size(tri3), 4))
-    val stats = TextAnalysis.withLangGuess(docs)
-      .select(col("doc_id"), (col("lang_guess") =!= "und").as("__pl"),
+    TextAnalysis.withLangGuess(docs)
+      .select(col("doc_id"), md5(col("text")).as("content_hash"),
+        (col("lang_guess") =!= "und").as("pass_lang"),
         size(graft.text.Tokenize.tokens(col("text"))).cast("long").as("__nt"),
         dtf.as("__dtf"))
-      .withColumn("__pq", col("__pl") && col("__nt") >= minTokens &&
-        col("__dtf") <= maxDupTrigramFrac)
-      .select(col("doc_id"), col("__pl"), col("__pq"))
-      .localCheckpoint(true)
-    val q = docs.select(col("doc_id"), col("text"))
-      .join(stats.filter(col("__pq")).select("doc_id"), Seq("doc_id"), "left_semi")
-    // exact-dup representatives among quality survivors; the rep frame
-    // is narrow and has two consumers (the Jaccard feed and the final
-    // tag join) — checkpoint so it computes once. Round-10 skew fix
-    // (guide §2.5; round-9 verdict item 2): round 9's per-md5 window min
-    // put every copy of a mass-duplicated body on ONE task (a window has
-    // no partial aggregation). The representative SET is all the
-    // aggregate ever produces, so keep only it: groupBy(__h).min(doc_id)
-    // partial-aggregates map-side (a hot md5 collapses to one row per
-    // map task before the shuffle), and every attach downstream is keyed
-    // by doc_id — unique, skew-free by construction. Docs absent from
-    // `exact` are non-representatives: the final tag join is already a
-    // left join + coalesce(false), so no per-doc boolean frame is needed.
-    val exact = q.select(col("doc_id"), md5(col("text")).as("__h"))
-      .groupBy("__h").agg(min("doc_id").as("doc_id"))
+      .select(col("doc_id"), col("content_hash"), col("pass_lang"),
+        (col("pass_lang") && col("__nt") >= minTokens &&
+          col("__dtf") <= maxDupTrigramFrac).as("pass_quality"))
+  }
+
+  /** Stages 3-4 and the tag: (doc_id, stage) for every verdict row.
+    * `shinglesOf(ids)` gives the (doc_id, shingle) rows of the exact
+    * representatives `ids` (doc_id), from text or from a shingle store.
+    *
+    * Exact dedup keeps the min-doc_id representative per content hash
+    * among quality survivors. The election keeps only the representative
+    * SET: groupBy(content_hash).min(doc_id) partial-aggregates map-side
+    * (a mass-duplicated body collapses to one row per map task before
+    * the shuffle, where a per-hash window would put every copy on one
+    * task), and every attach downstream is keyed by doc_id, unique and
+    * skew-free. Docs absent from `exact` are non-representatives through
+    * the left join + coalesce(false). The representative frame has two
+    * consumers (the Jaccard feed and the tag join), so it is checkpointed
+    * once. */
+  private[curate] def tags(verdicts: DataFrame,
+                           shinglesOf: DataFrame => DataFrame,
+                           minJaccard: Double, maxShingleDf: Int): DataFrame = {
+    val exact = verdicts.filter(col("pass_quality"))
+      .groupBy("content_hash").agg(min("doc_id").as("doc_id"))
       .select(col("doc_id"), lit(true).as("__pe"))
       .localCheckpoint(true)
-    val s3docs = q.join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
-    val dropNear = Dedup.duplicateClusters(
-        Dedup.jaccardPairs(s3docs, n, minJaccard, maxShingleDf))
+    val dropNear = Dedup.duplicateClusters(Dedup.jaccardPairsFromShingles(
+        shinglesOf(exact.select("doc_id")), minJaccard, maxShingleDf))
       .filter(col("cluster_id") =!= col("doc_id"))
       .select(col("doc_id"), lit(true).as("__dn"))
-    stats
+    verdicts
       .join(exact, Seq("doc_id"), "left")
       .join(dropNear, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        when(!col("__pl"), Stages(0))
-          .when(!col("__pq"), Stages(1))
+        when(!col("pass_lang"), Stages(0))
+          .when(!col("pass_quality"), Stages(1))
           .when(!coalesce(col("__pe"), lit(false)), Stages(2))
           .when(coalesce(col("__dn"), lit(false)), Stages(3))
           .otherwise(Stages(4)).as("stage"))
@@ -108,17 +122,6 @@ object Curation {
       .groupBy("stage").agg(count(lit(1)).as("n"))
       .orderBy("stage")
 
-  /** Temperature-scaled domain mixing weights (the UnifiedQA / multilingual
-    *-LM "alpha sampling" recipe): per source, token share p_s and mixing
-    * weight w_s ∝ p_s^alpha normalized over sources. alpha < 1 flattens
-    * the mix toward uniform (upsampling small domains), alpha = 1 keeps
-    * natural proportions. `resample_factor` = w_s / p_s is the per-source
-    * duplication/subsampling rate a pipeline applies to hit the target mix.
-    *
-    * Scale notes (100 TB): one tokenize scan + a partial+final agg to one
-    * row per source; the two normalizing totals are single-row broadcasts.
-    * pow/round noise is 1 ulp on ~0.1-magnitude values — invisible at
-    * round(6). */
   /** The one alpha-mix formula, shared by the report (sourceMixWeights)
     * and the executor (budgetSample) so the two can never disagree on the
     * mix (round-3 review: they carried hand-copied pipelines). Input:
@@ -214,6 +217,17 @@ object Curation {
       .orderBy("check")
   }
 
+  /** Temperature-scaled domain mixing weights (the UnifiedQA / multilingual
+    *-LM "alpha sampling" recipe): per source, token share p_s and mixing
+    * weight w_s ∝ p_s^alpha normalized over sources. alpha < 1 flattens
+    * the mix toward uniform (upsampling small domains), alpha = 1 keeps
+    * natural proportions. `resample_factor` = w_s / p_s is the per-source
+    * duplication/subsampling rate a pipeline applies to hit the target mix.
+    *
+    * Scale notes (100 TB): one tokenize scan + a partial+final agg to one
+    * row per source; the two normalizing totals are single-row broadcasts.
+    * pow/round noise is 1 ulp on ~0.1-magnitude values — invisible at
+    * round(6). */
   def sourceMixWeights(docs: DataFrame, alpha: Double = 0.5): DataFrame = {
     val per = docs
       .select(col("source"),
@@ -475,25 +489,6 @@ object Curation {
         .filter(col("stage") === Stages(4)).select("doc_id"),
       Seq("doc_id"), "left_semi")
 
-  /** DSIR importance weights (Xie et al., NeurIPS'23 "Data Selection for
-    * Language Models via Importance Resampling"): every document scored by
-    * how much more likely its HASHED-BIGRAM features are under the target
-    * slice's distribution than under the raw corpus's —
-    *
-    *   w(doc) = Σ_occ [ ln p_target(b) − ln p_raw(b) ],
-    *   p(b) = (c(b)+1) / (N+B)   (add-one over B hash buckets)
-    *
-    * where b = first-6-hex-of-md5(bigram) mod B, the paper's
-    * hashed-n-gram feature map (collisions are part of the estimator, not
-    * an error). High-weight docs are the ones importance resampling keeps
-    * to match the target domain. The target here is a source slice — the
-    * curated/trusted corpus a pipeline reweights toward.
-    *
-    * Scale notes (100 TB): both feature distributions are B-row tables
-    * regardless of corpus size — broadcast by construction; the
-    * occurrence frame hash-joins them without moving, then one exchange
-    * keys by doc for the sum. The `crossLmScores` shape with a
-    * fixed-size model instead of a vocabulary-sized one. */
   /** DoReMi-style domain reweighting (arXiv:2305.10429, data-only
     * analogue): multiplicative-weights ascent on per-domain EXCESS LOSS.
     * One corpus scan computes each source's proxy loss (here:
@@ -571,6 +566,25 @@ object Curation {
       .orderBy("source")
   }
 
+  /** DSIR importance weights (Xie et al., NeurIPS'23 "Data Selection for
+    * Language Models via Importance Resampling"): every document scored by
+    * how much more likely its HASHED-BIGRAM features are under the target
+    * slice's distribution than under the raw corpus's —
+    *
+    *   w(doc) = Σ_occ [ ln p_target(b) − ln p_raw(b) ],
+    *   p(b) = (c(b)+1) / (N+B)   (add-one over B hash buckets)
+    *
+    * where b = first-6-hex-of-md5(bigram) mod B, the paper's
+    * hashed-n-gram feature map (collisions are part of the estimator, not
+    * an error). High-weight docs are the ones importance resampling keeps
+    * to match the target domain. The target here is a source slice — the
+    * curated/trusted corpus a pipeline reweights toward.
+    *
+    * Scale notes (100 TB): both feature distributions are B-row tables
+    * regardless of corpus size — broadcast by construction; the
+    * occurrence frame hash-joins them without moving, then one exchange
+    * keys by doc for the sum. The `crossLmScores` shape with a
+    * fixed-size model instead of a vocabulary-sized one. */
   def dsirWeights(docs: DataFrame, targetSource: String,
                   buckets: Int = 1024): DataFrame = {
     val tf = graft.functions.TextFunctions

@@ -4,34 +4,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.sources.AtomicStore
-import graft.textstats.TextAnalysis
 
-/** Incremental curation — "a new corpus snapshot arrives, reprocess only
-  * the delta" (round-3 verdict item #6), the incremental sibling of
-  * `Pipeline.run` composing the pieces that already exist: the snapshot
-  * diff (Curation.corpusDiff's hash compare) routes only added/changed
-  * docs through the per-document text stages, and the dedup elections
-  * replay over persisted NARROW state, never over stored text.
+/** Incremental curation: a new corpus snapshot arrives, and only the
+  * delta is reprocessed. The snapshot diff (Curation.corpusDiff's hash
+  * compare) routes only added/changed docs through the per-document text
+  * stages; the dedup elections replay over persisted NARROW state, never
+  * over stored text. Both halves are Curation's own: `Curation.verdicts`
+  * scores the delta, `Curation.tags` runs the exact election, the
+  * near-dup clusters and the stage tags over the stored state, so
+  * incremental and full curation share one implementation of every stage.
   *
   * State (two tables, swapped atomically per update):
   *   - `verdicts` (doc_id, content_hash, pass_lang, pass_quality) for
-  *     every doc of the current snapshot — the memoized stage-1/2 flags
-  *     (pure per-doc functions, so a doc whose text is unchanged can
-  *     never change verdict);
-  *   - `shingles` (doc_id, shingle) for quality-passing docs — what the
+  *     every doc of the current snapshot: `Curation.verdicts` rows, pure
+  *     per-doc functions of the text, so a doc whose text is unchanged
+  *     can never change verdict;
+  *   - `shingles` (doc_id, shingle) for quality-passing docs: what the
   *     near-dup stage needs, so stored TEXT is never re-tokenized.
   *
   * Work per update at 100 TB: the text-proportional stages (langid,
-  * token/repetition stats, hashing, shingling) run over the DELTA only —
-  * the expensive part of full re-curation. The dedup elections (hash →
-  * min-id representative; df-capped Jaccard pairs + connected components)
-  * re-run over the narrow state frames: they are global by NATURE — a
-  * removed representative resurrects its duplicates, a new low-id doc
-  * evicts a stored one, a df crossing the cap changes the candidate set —
-  * and replaying them over hash/shingle frames (no text) is exactly what
-  * full curation's stages 3-4 cost AFTER its text scans are paid.
+  * token/repetition stats, hashing, shingling) run over the DELTA only,
+  * the expensive part of full re-curation. The dedup elections re-run
+  * over the narrow state frames: they are global by NATURE (a removed
+  * representative resurrects its duplicates, a new low-id doc evicts a
+  * stored one, a df crossing the cap changes the candidate set), and
+  * replaying them over hash/shingle frames costs what full curation's
+  * stages 3-4 cost AFTER its text scan is paid.
   * IncrementalCurationSpec proves update() ≡ full curationTags on the
-  * mutated snapshot — same keep-set, including eviction and resurrection.
+  * mutated snapshot: same keep-set, including eviction and resurrection.
   *
   * For append-only triage where estimate-based screening suffices,
   * `Dedup.incrementalExactDedup` + `Dedup.lshCandidatesAgainstStore`
@@ -46,51 +46,23 @@ object IncrementalCuration {
 
   private val StateName = "curation_state"
 
-  /** Stage-1/2 verdicts + content hash for a set of docs — the SAME
-    * fused-scan stats curationTags computes (one scalar pass + the
-    * repetition stats join), so memoized and fresh verdicts can never
-    * disagree. */
-  private def docVerdicts(docs: DataFrame, p: Params): DataFrame = {
-    val scalar = TextAnalysis.withLangGuess(docs)
-      .select(col("doc_id"), md5(col("text")).as("content_hash"),
-        (col("lang_guess") =!= "und").as("pass_lang"),
-        size(graft.text.Tokenize.tokens(col("text"))).cast("long").as("__nt"))
-    val rep = TextAnalysis.repetitionStats(docs)
-      .select(col("doc_id"), col("dup_trigram_frac").as("__dtf"))
-    scalar.join(rep, Seq("doc_id"))
-      .select(col("doc_id"), col("content_hash"), col("pass_lang"),
-        (col("pass_lang") && col("__nt") >= p.minTokens &&
-          col("__dtf") <= p.maxDupTrigramFrac).as("pass_quality"))
+  /** Verdicts of `docs` and the shingles of their quality survivors. */
+  private def scored(docs: DataFrame, p: Params): (DataFrame, DataFrame) = {
+    val verdicts = Curation.verdicts(docs, p.minTokens, p.maxDupTrigramFrac)
+    val sh = Dedup.shingles(
+      docs.join(verdicts.filter(col("pass_quality")).select("doc_id"),
+        Seq("doc_id"), "left_semi"), p.n)
+    (verdicts, sh)
   }
 
-  /** The dedup elections + tag assembly over state frames — stage 3/4 of
-    * curationTags, verbatim semantics, with shingles from the store. */
-  private def tagsFromState(verdicts: DataFrame, shingleStore: DataFrame,
-                            p: Params): DataFrame = {
-    val q = verdicts.filter(col("pass_quality"))
-    // representative-set spelling (round 10, matching curationTags): the
-    // content-hash aggregate partial-aggregates map-side, and the attach
-    // below is keyed by doc_id — unique, skew-free; docs absent from
-    // `exact` are non-representatives via the left join + coalesce(false)
-    val exact = q.groupBy("content_hash").agg(min("doc_id").as("doc_id"))
-      .select(col("doc_id"), lit(true).as("__pe"))
-      .localCheckpoint(true)
-    val s3ids = exact.select("doc_id")
-    val pairs = Dedup.jaccardPairsFromShingles(
-      shingleStore.join(s3ids, Seq("doc_id"), "left_semi"),
+  /** Tags of the live state's snapshot, ordered by doc_id. */
+  private def liveTags(spark: SparkSession, stateDir: String,
+                       p: Params): DataFrame = {
+    val live = AtomicStore.live(statePaths(stateDir)).get
+    val shingleStore = spark.read.parquet(s"$live/shingles")
+    Curation.tags(spark.read.parquet(s"$live/verdicts"),
+      ids => shingleStore.join(ids, Seq("doc_id"), "left_semi"),
       p.minJaccard, p.maxShingleDf)
-    val dropNear = Dedup.duplicateClusters(pairs)
-      .filter(col("cluster_id") =!= col("doc_id"))
-      .select(col("doc_id"), lit(true).as("__dn"))
-    verdicts
-      .join(exact, Seq("doc_id"), "left")
-      .join(dropNear, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(!col("pass_lang"), Curation.Stages(0))
-          .when(!col("pass_quality"), Curation.Stages(1))
-          .when(!coalesce(col("__pe"), lit(false)), Curation.Stages(2))
-          .when(coalesce(col("__dn"), lit(false)), Curation.Stages(3))
-          .otherwise(Curation.Stages(4)).as("stage"))
       .orderBy("doc_id")
   }
 
@@ -111,14 +83,9 @@ object IncrementalCuration {
     * per-doc tags (same shape as Curation.curationTags). */
   def initialize(spark: SparkSession, docs: DataFrame, stateDir: String,
                  p: Params = Params()): DataFrame = {
-    val verdicts = docVerdicts(docs, p)
-    val sh = Dedup.shingles(
-      docs.join(verdicts.filter(col("pass_quality")).select("doc_id"),
-        Seq("doc_id"), "left_semi"), p.n)
+    val (verdicts, sh) = scored(docs, p)
     writeState(verdicts, sh, stateDir, AtomicStore.live(statePaths(stateDir)))
-    val live = AtomicStore.live(statePaths(stateDir)).get
-    tagsFromState(spark.read.parquet(s"$live/verdicts"),
-      spark.read.parquet(s"$live/shingles"), p)
+    liveTags(spark, stateDir, p)
   }
 
   /** Incremental pass: diff the new snapshot against the stored one by
@@ -146,19 +113,14 @@ object IncrementalCuration {
     val deltaIds = joined
       .filter(col("__nh").isNotNull && (col("__oh").isNull || col("__oh") =!= col("__nh")))
       .select("doc_id").localCheckpoint(true)
-    val deltaDocs = newDocs.join(deltaIds, Seq("doc_id"), "left_semi")
-    val deltaVerdicts = docVerdicts(deltaDocs, p)
-    val deltaSh = Dedup.shingles(
-      deltaDocs.join(deltaVerdicts.filter(col("pass_quality")).select("doc_id"),
-        Seq("doc_id"), "left_semi"), p.n)
+    val (deltaVerdicts, deltaSh) =
+      scored(newDocs.join(deltaIds, Seq("doc_id"), "left_semi"), p)
     val newVerdicts = stored.join(deadIds, Seq("doc_id"), "left_anti")
       .unionByName(deltaVerdicts)
     val newSh = storedSh.join(deadIds, Seq("doc_id"), "left_anti")
       .unionByName(deltaSh)
     writeState(newVerdicts, newSh, stateDir, liveOpt)
-    val nowLive = AtomicStore.live(paths).get
-    tagsFromState(spark.read.parquet(s"$nowLive/verdicts"),
-      spark.read.parquet(s"$nowLive/shingles"), p)
+    liveTags(spark, stateDir, p)
   }
 
   /** CLI: <stateDir> <sfDir> — initialize on first run, update after;

@@ -158,20 +158,19 @@ object Dedup {
 
   /** Near-dup pairs by exact n-gram Jaccard >= threshold.
     *
-    * Capped path (maxShingleDf > 0, the default): ONE aggregation by
-    * shingle builds posting buckets (`collect_list(doc_id)`), the df-cap
-    * drops oversized buckets (it is what makes collect_list safe — bucket
+    * ONE aggregation by shingle builds posting buckets
+    * (`collect_list(doc_id)`), the df-cap (`maxShingleDf >= 1`) drops
+    * oversized buckets (it is what makes collect_list safe — bucket
     * memory is bounded by the cap), and candidate pairs explode locally
     * per bucket — no self-join, no second shuffle of the shingle index.
     * Set sizes for the Jaccard denominator re-derive from the SAME
     * exchange (ReuseExchange), so the whole query scans + tokenizes the
     * corpus once. Jaccard is over the capped shingle universe,
     * consistently in intersection and sizes (and in the SQL oracle).
-    *
-    * Uncapped path (maxShingleDf <= 0): the round-1 inverted-index
-    * self-join — with no bound on bucket size, exploding a bucket's df^2
-    * pairs through collect_list would risk executor memory on a hot
-    * shingle, so the join form (which streams the fan-out) is kept.
+    * Callers who want exact Jaccard over every shingle, with no df cap,
+    * use [[prefixJaccardPairs]]: its prefix filter keeps hot shingles out
+    * of the candidate join without dropping them from the scores (pairs
+    * come at representative grain, see there).
     *
     * No .cache(): shared subplans are deduplicated by exchange reuse
     * within the single job, and an operator-internal cache would pin
@@ -188,9 +187,7 @@ object Dedup {
     * here). */
   def jaccardPairsFromShingles(sh0: DataFrame, minJaccard: Double = 0.05,
                                maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
-    if (maxShingleDf <= 0) {
-      return scoreJaccard(sh0, sharedShingleCounts(sh0), minJaccard)
-    }
+    require(maxShingleDf >= 1, s"maxShingleDf must be >= 1, got $maxShingleDf")
     cappedPairStats(sh0, maxShingleDf)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
@@ -525,45 +522,6 @@ object Dedup {
       .orderBy("rep_a", "rep_b")
   }
 
-  /** Self-join the shingle index on identical (un-projected) sides so both
-    * shuffle exchanges canonicalize equal and ReuseExchange computes the
-    * tokenize+explode lineage once — projecting doc_a/doc_b BEFORE the join
-    * made the sides differ and doubled the dominant scan. */
-  private def sharedShingleCounts(sh: DataFrame): DataFrame = {
-    val a = sh.alias("a")
-    val b = sh.alias("b")
-    a.join(b, col("a.shingle") === col("b.shingle") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-  }
-
-  /** Attach set sizes to intersection counts and threshold on Jaccard.
-    *
-    * The sizes side carries a SHUFFLE_HASH hint: Catalyst's size
-    * estimate for the aggregated PAIR frame runs ~80x under its real
-    * bytes (the round-9 PlanProbe caught a statically planned 805 MB /
-    * 10.6M-row broadcast of `inter` at the 10x gate — two orders over
-    * the 10 MB threshold, and the build+storage pressure was most of
-    * dedup_paragraph_frac's in-bench spill), so the strategy must not
-    * hang on that estimate. Building on sizes is the 100 TB-safe shape
-    * either way: sizes is doc-cardinality (bounded per partition after
-    * its exchange), pairs stream through unsorted — no pair-side
-    * broadcast, no pair-side sort at any corpus size. */
-  private def scoreJaccard(sh: DataFrame, inter: DataFrame,
-                           minJaccard: Double): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      .hint("shuffle_hash")
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), Seq("doc_b"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
-  }
-
   /** MinHash signature per doc: sig[i] = min over shingles of
     * xxhash64(i, shingle). Deterministic but engine-specific (xxhash64), so
     * checked by property tests rather than the SQL oracle. */
@@ -594,15 +552,14 @@ object Dedup {
                       n: Int = 3, minJaccard: Double = 0.5,
                       maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // one shingle lineage feeds the signatures AND the exact verify; the
-    // capped form re-derives from a single exchange-by-shingle (same
-    // one-corpus-scan shape as jaccardPairs)
-    val sh =
-      if (maxShingleDf <= 0) shingles(docs, n)
-      else shingles(docs, n)
-        .groupBy("shingle").agg(collect_list(col("doc_id")).as("ds"))
-        .filter(size(col("ds")) <= maxShingleDf)
-        .select(col("shingle"), explode(col("ds")).as("doc_id"))
+    require(maxShingleDf >= 1, s"maxShingleDf must be >= 1, got $maxShingleDf")
+    // one shingle lineage feeds the signatures AND the exact verify,
+    // re-derived from a single exchange-by-shingle (same one-corpus-scan
+    // shape as jaccardPairs)
+    val sh = shingles(docs, n)
+      .groupBy("shingle").agg(collect_list(col("doc_id")).as("ds"))
+      .filter(size(col("ds")) <= maxShingleDf)
+      .select(col("shingle"), explode(col("ds")).as("doc_id"))
     val sig = minhashFromShingles(sh, numHashes)
     val banded = bandHashes(sig, numHashes, bands)
     // NOT checkpointed (round-10: the round-9 advice to checkpoint this
@@ -625,7 +582,7 @@ object Dedup {
     // PAIR against both full posting lists — the wide fan-out exchange
     // (pairs x set size rows, carrying shingle strings) the batch-A
     // jaccard rework removed — and then attached sizes with two more
-    // pair-grain joins (scoreJaccard). Now the postings of CANDIDATE
+    // pair-grain joins. Now the postings of CANDIDATE
     // DOCS only (semi-join by doc_id) rebuild sized buckets, pair
     // intersections explode locally per bucket carrying (sza, szb)
     // — bucket width still bounded by the df cap — and the LSH
@@ -635,15 +592,7 @@ object Dedup {
     // output is IDENTICAL to the old spelling at any input; identical
     // subtrees keep ReuseExchange sharing one shingle lineage. The
     // bucket rebuild is only safe because the df cap bounds bucket
-    // width — the uncapped form keeps the streaming join verify.
-    if (maxShingleDf <= 0) {
-      val inter = candidates
-        .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-        .join(sh.select(col("doc_id").as("doc_b"), col("shingle")),
-          Seq("doc_b", "shingle"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-      return scoreJaccard(sh, inter, minJaccard)
-    }
+    // width.
     val candDocs = candidates
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()

@@ -634,7 +634,8 @@ object TextAnalysis {
     * vocabulary-sized table (distinct words + frequencies, never the
     * corpus), each round is one distributed pair-count aggregate, exactly
     * ONE row (the argmax pair) comes back to the driver, and the merged
-    * vocabulary is checkpointed every round, a
+    * vocabulary is checkpointed every round but the one making the
+    * `nMerges`-th merge (no round reads that vocabulary), a
     * [[graft.Fixpoint.untilSettled]] loop that stops early once no word
     * has two symbols left. At 100 TB the corpus is scanned ONCE (the
     * word count); every subsequent round touches only the vocabulary, which is
@@ -687,8 +688,9 @@ object TextAnalysis {
         val merged = cur.withColumn("sym",
           call_function("replace", col("sym"),
             lit(s".$l..$rr."), lit(s".$l$rr.")))
-        ((graft.Fixpoint.checkpoint(merged),
-          merges :+ ((merges.size + 1L, l, rr, l + rr, cnt))), false)
+        val next =
+          if (merges.size + 1 < nMerges) graft.Fixpoint.checkpoint(merged) else merged
+        ((next, merges :+ ((merges.size + 1L, l, rr, l + rr, cnt))), false)
       }
     }
     import spark.implicits._

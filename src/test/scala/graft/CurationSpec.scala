@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 class CurationSpec extends SparkSpec {
   import spark.implicits._
 
-  test("each curation stage drops exactly its planted doc") {
-    val docs = Seq(
+  private def planted = Seq(
       // no marker tokens at all -> langid drop
       (1L, "zz yy xx ww vv uu"),
       // markers but only 3 tokens -> quality drop (min 5)
@@ -24,6 +23,9 @@ class CurationSpec extends SparkSpec {
       // clean unrelated doc -> kept
       (7L, "a completely different clean document about sparkling windows"),
     ).toDF("doc_id", "text")
+
+  test("each curation stage drops exactly its planted doc") {
+    val docs = planted
     val tags = Curation.curationTags(docs, minTokens = 5,
         maxDupTrigramFrac = 0.2, minJaccard = 0.3)
       .as[(Long, String)].collect().toMap
@@ -38,6 +40,14 @@ class CurationSpec extends SparkSpec {
     val keptIds = Curation.curatedDocs(docs, 5, 0.2, minJaccard = 0.3)
       .select("doc_id").as[Long].collect().toSet
     assert(keptIds == Set(4L, 7L))
+  }
+
+  test("the funnel over the planted docs runs at most 16 jobs") {
+    // the exact election reads the checkpointed verdicts, not the text
+    val (rows, jobs) = jobsIn("graft-funnel-jobs")(
+      Curation.curationFunnel(planted, minJaccard = 0.3).collect())
+    assert(rows.map(_.getLong(1)).sum == 7L)
+    assert(jobs.size <= 16, s"${jobs.size} jobs: $jobs")
   }
 
   test("corpus diff classifies added, removed, changed, unchanged") {

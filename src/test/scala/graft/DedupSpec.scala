@@ -131,8 +131,11 @@ class DedupSpec extends SparkSpec {
       (13L, "copyright all rights reserved delta final filler four"),
     ).toDF("doc_id", "text")
     val docs = corpus.unionByName(boiler)
-    // Uncapped: the shared shingles generate cross-boilerplate candidates.
-    val uncapped = Dedup.jaccardPairs(docs, 3, 0.01, maxShingleDf = 0)
+    // Uncapped: no shingle's df exceeds the doc count, so a cap at the
+    // doc count drops nothing, and the shared shingles generate
+    // cross-boilerplate candidates.
+    val uncapped = Dedup.jaccardPairs(docs, 3, 0.01,
+      maxShingleDf = docs.count().toInt)
       .as[(Long, Long, Double)].collect()
     assert(uncapped.exists(p => p._1 >= 10L && p._2 >= 10L))
     // Capped at df<=3: "copyright all rights" (df=4) is dropped, so the

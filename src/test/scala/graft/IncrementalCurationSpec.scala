@@ -68,6 +68,33 @@ class IncrementalCurationSpec extends SparkSpec {
     assert(inc(9L) == "3_dropped_exact_dup")  // evicted by 8
   }
 
+  // rows at the edges of the stage-1/2 verdict: no trigram at all, no
+  // token at all, a single trigram repeated, and no language marker in a
+  // long-enough doc
+  private val edges = Seq(
+    (20L, "the end"),
+    (21L, ""),
+    (22L, "the the the the the the"),
+    (23L, "lorem ipsum dolor sit amet consectetur adipiscing elit"),
+  )
+
+  test("initialize and update ≡ full re-curation on verdict edge rows") {
+    val docs = (v0 ++ edges).toDF("doc_id", "text")
+    val full = fullTags(docs)
+    assert(edges.map(e => full(e._1)) == Seq("2_dropped_quality",
+      "1_dropped_langid", "2_dropped_quality", "1_dropped_langid"))
+    val initDir = Files.createTempDirectory("inc-cur-d").toString
+    val init = IncrementalCuration.initialize(spark, docs, initDir, P)
+      .as[(Long, String)].collect().toMap
+    assert(init == full, s"initialize $init vs full $full")
+    // the same rows arriving as a delta over stored state
+    val updDir = Files.createTempDirectory("inc-cur-e").toString
+    IncrementalCuration.initialize(spark, v0.toDF("doc_id", "text"), updDir, P)
+    val upd = IncrementalCuration.update(spark, docs, updDir, P)
+      .as[(Long, String)].collect().toMap
+    assert(upd == full, s"update $upd vs full $full")
+  }
+
   test("update is idempotent: replaying the same snapshot changes nothing") {
     val dir = Files.createTempDirectory("inc-cur-c").toString
     val docs = v0.toDF("doc_id", "text")

@@ -240,6 +240,19 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "e", "s", "es", 4L)))
   }
 
+  test("bpeTrainMerges checkpoints no vocabulary after its last merge") {
+    val docs = Seq(
+      (1L, "low low low low low"), (2L, "lower lower"),
+      (3L, "newest newest newest"), (4L, "widest"))
+      .toDF("doc_id", "text")
+    // three merges in 13 jobs: the vocabulary after the last merge,
+    // which no round reads, is not checkpointed
+    val (out, jobs) = jobsIn("graft-bpe-jobs")(
+      TextAnalysis.bpeTrainMerges(docs, nMerges = 3).collect())
+    assert(out.length == 3)
+    assert(jobs.size == 13, s"${jobs.size} jobs: $jobs")
+  }
+
   test("bpeTrainMerges applies merges greedily non-overlapping (aaaa)") {
     // "aaaa": r1 pair (a,a) counted 3 times but ONE merge pass yields
     // [aa, aa] (leftmost non-overlap), so r2 merges (aa,aa) with count 1
